@@ -173,7 +173,7 @@ def gen_sql(rng, s, out):
     files = [os.path.join(t, x) for x in os.listdir(t)]
     return {"input_bytes": file_bytes(*files), "tables": len(files),
             "rows": no + nl + nc + npart + ns + ne + 30,
-            "instances": len(stream),
+            "instances": len(stream), "cycle": len(SQL_CYCLE),
             "repeats": sum(1 for x in stream if x["repeat"])}
 
 
@@ -258,12 +258,14 @@ FROM tpch.orders WHERE o_custkey % {m} = {r} GROUP BY o_orderpriority""",
 # for join6:...:save), so every seed runs the same mix and the same
 # write share; the seed draws each statement's parameters. At three
 # fixed positions in ten, the statement repeats the text of an earlier
-# statement of the same template. The first cycle is the session's
-# warm-up and is not timed.
+# statement of the same template. The first WARMUP_CYCLES cycles are the
+# session's warm-up and are not timed: the first cycle runs cold, and the
+# second lets the JIT catch up, so the timed cycles run at a steady pace.
 SQL_CYCLE = ["join6", "distinct_on", "save", "qualify", "vars", "join6", "cte_window",
              "federation", "save", "builtins", "join6", "distinct_on", "qualify", "save",
              "vars", "cte_window", "federation", "builtins"]
 REPEAT_SLOTS = {3, 6, 9}
+WARMUP_CYCLES = 2
 
 
 def sql_stream(rng, s):
@@ -272,7 +274,7 @@ def sql_stream(rng, s):
         name = SQL_CYCLE[i % len(SQL_CYCLE)]
         if i % 10 in REPEAT_SLOTS and name in seen:
             prev = seen[name][int(rng.integers(0, len(seen[name])))]
-            out.append(dict(prev, id=i, repeat=True, warmup=i < len(SQL_CYCLE)))
+            out.append(dict(prev, id=i, repeat=True, warmup=i < WARMUP_CYCLES * len(SQL_CYCLE)))
             continue
         graft_sql, duck_sql, mk = SQL_TEMPLATES[name]
         p = mk(rng)
@@ -281,7 +283,7 @@ def sql_stream(rng, s):
         fmt = {k: v for k, v in p.items() if not k.startswith("$")}
         vars_ = {k[1:]: v for k, v in p.items() if k.startswith("$")}
         out.append({"id": i, "template": name, "repeat": False,
-                    "warmup": i < len(SQL_CYCLE),
+                    "warmup": i < WARMUP_CYCLES * len(SQL_CYCLE),
                     "sql": graft_sql.format(**fmt),
                     "duck_sql": (duck_sql or graft_sql).format(**fmt),
                     "vars": vars_, "write": name == "save", "text_id": i})

@@ -1,6 +1,6 @@
 """graft benchmark: one command, two workloads.
 
-    python3 graftbench/run.py --workload sql_interactive --seed 1 --seconds 10 --trace 0
+    python3 graftbench/run.py --workload sql_interactive --seed 1 --seconds 24 --trace 0
 
 Run from the repository root. The first run builds graft and the
 benchmark's JVM program from source (sbt, a few minutes) and caches the
@@ -52,7 +52,6 @@ def source_hash():
     h = hashlib.sha256()
     files = sorted(glob.glob(os.path.join(ROOT, "src/main/**/*"), recursive=True) +
                    glob.glob(os.path.join(HERE, "src/**/*"), recursive=True) +
-                   glob.glob(os.path.join(HERE, "*.py")) +
                    [os.path.join(ROOT, "build.sbt"), os.path.join(HERE, "build.sbt"),
                     os.path.join(HERE, "project/build.properties")])
     for f in files:
@@ -64,12 +63,7 @@ def source_hash():
 
 
 def build():
-    """Compile graft and the benchmark into jars; return the runtime classpath.
-
-    A build also makes one class-data-sharing archive per workload, from
-    a small run of it, so that later runs start their JVM from mapped,
-    pre-parsed classes: the JVM and Spark session start in about half
-    the time, which is most of what a run spends before its first op."""
+    """Compile graft and the benchmark into jars; return the runtime classpath."""
     stamp = os.path.join(HERE, "target", "bench-build.json")
     digest = source_hash()
     if os.path.exists(stamp):
@@ -96,22 +90,10 @@ def build():
         sys.stderr.write(p.stdout[-4000:] + p.stderr[-4000:])
         die("build failed")
     cp = lines[-1].strip()
-    for w in WORKLOADS:
-        archive = cds_archive(w)
-        if os.path.exists(archive):
-            os.remove(archive)
-        a = argparse.Namespace(workload=w, seed=0, seconds=1.0, trace=1, setups=1)
-        with run_dir(f"cds-{w}") as (inputs, work):
-            gen.generate(w, 0, inputs, "small")
-            run_jvm(cp, a, inputs, work, [f"-XX:ArchiveClassesAtExit={archive}"])
     os.makedirs(os.path.dirname(stamp), exist_ok=True)
     with open(stamp, "w") as f:
         json.dump({"hash": digest, "classpath": cp}, f)
     return cp
-
-
-def cds_archive(workload):
-    return os.path.join(HERE, "target", f"cds-{workload}.jsa")
 
 
 @contextlib.contextmanager
@@ -128,12 +110,12 @@ def run_dir(name):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def run_jvm(cp, a, inputs, work, jvm_opts=()):
+def run_jvm(cp, a, inputs, work):
     """Run one workload in a fresh JVM; return its result file's contents."""
     os.makedirs(os.path.join(work, "tmp"))
     out = os.path.join(work, "result.json")
     spans = os.path.join(ROOT, ".bench_run", f"trace-{a.workload}.jsonl")
-    cmd = ["java", *jvm_opts, "-Xms3g", "-Xmx3g", "-XX:ReservedCodeCacheSize=512m", "-XX:-UsePerfData",
+    cmd = ["java", "-Xms3g", "-Xmx3g", "-XX:ReservedCodeCacheSize=512m", "-XX:-UsePerfData",
            *ADD_OPENS,
            "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
            f"-Dspark.local.dir={work}/spark-local",
@@ -142,8 +124,7 @@ def run_jvm(cp, a, inputs, work, jvm_opts=()):
            f"-Djava.io.tmpdir={work}/tmp",
            "-cp", cp, "graftbench.Main",
            "--workload", a.workload, "--seconds", str(a.seconds), "--trace", str(a.trace),
-           "--inputs", inputs, "--work", work, "--out", out, "--spans", spans,
-           "--setups", str(a.setups)]
+           "--inputs", inputs, "--work", work, "--out", out, "--spans", spans]
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(os.cpu_count() or 1))
     log = os.path.join(work, "jvm.log")
     with open(log, "w") as lf:
@@ -260,8 +241,6 @@ def main():
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--size", default="full", choices=list(gen.SIZES),
                     help="input size; `small` is for the smoke check")
-    ap.add_argument("--setups", type=int, default=3,
-                    help="rounds of the repeatable set-up; setup_s takes their median")
     a = ap.parse_args()
 
     spec = load_spec()
@@ -269,13 +248,11 @@ def main():
         die("graft's sources (src/main/scala/graft) are not in this checkout")
     cp = build()
 
-    archive = cds_archive(a.workload)
-    jvm_opts = [f"-XX:SharedArchiveFile={archive}"] if os.path.exists(archive) else []
     with run_dir(f"{a.workload}-{a.seed}") as (inputs, work):
         t0 = time.perf_counter()
         info = gen.generate(a.workload, a.seed, inputs, a.size)
         gen_s = time.perf_counter() - t0
-        res = run_jvm(cp, a, inputs, work, jvm_opts)
+        res = run_jvm(cp, a, inputs, work)
         failed, attempted = res["failed"], res["attempted"]
         checks = {}
         if a.workload == "sql_interactive":

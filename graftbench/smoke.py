@@ -52,7 +52,8 @@ def main():
                                 f"failed={result['failed']} report={report['report']}")
             if result["attempted"] < 1:
                 problems.append(f"{where}: attempted={result['attempted']}")
-            hashes += report["report"].get("result_hashes", [])
+            if "result_hash" in report["report"]:
+                hashes.append(report["report"]["result_hash"])
         if len(set(hashes)) > 1:
             problems.append(f"{w['name']}: same seed, different outputs {hashes}")
         print(f"smoke: {w['name']} checked", flush=True)

@@ -11,11 +11,11 @@ import graft.operators.{Dedup, Graph, Sampling, Similarity, TextAnalysis}
 import graft.streaming.Corpus
 
 /** The LLM data-pipeline batch job: generated corpus in, committed
-  * training-set store out. One op is one pass of the whole chain. Each
+  * training-set store out. A run is one pass of the whole chain. Each
   * stage's output is persisted and counted before the next stage starts,
   * as a batch job that keeps its stage outputs does, so every stage has
-  * its own time and row count. The pass drops its own stage outputs at
-  * the end; blocks graft's operators keep are left to the session. */
+  * its own time and row count. The pass drops its own stage outputs after
+  * the checks; blocks graft's operators keep are left to the session. */
 final class CorpusBatch(spark: SparkSession, in: String, work: String) extends Workload {
   import CorpusBatch.Pass
 
@@ -74,59 +74,37 @@ final class CorpusBatch(spark: SparkSession, in: String, work: String) extends W
       ids, "left_semi"))
     val s7 = stage("sample")(s6.join(
       Sampling.tokenBudget(s6, "doc_id", "text", budget).select("doc_id"), ids, "left_semi"))
-    val t0 = System.nanoTime()
-    trace.span("operators.write")(
-      s7.select("doc_id", "text").write.mode("overwrite").parquet(store))
-    val writeMs = (System.nanoTime() - t0) / 1e6
+    val writeMs = Trace.ms(trace.span("operators.write")(
+      s7.select("doc_id", "text").write.mode("overwrite").parquet(store)))
     rows("write") = rows("sample")
     Pass(rows.toMap, writeMs, frames.toSeq, s1, pairs, s5, store)
   }
 
+  /** Exactly one pass, whatever `seconds` says: a second pass would run
+    * warm and change what the pass time means. */
   def run(seconds: Double, trace: Trace): Outcome = {
-    val ops = mutable.ArrayBuffer.empty[OpRecord]
-    val writes = mutable.ArrayBuffer.empty[Double]
-    val rowsOut = mutable.ArrayBuffer.empty[Map[String, Long]]
-    val confirm = mutable.ArrayBuffer.empty[Double]
-    val hashes = mutable.LinkedHashSet.empty[String]
-    var failed = 0L
-    var recall = 1.0
-    var storeBytes = 0.0
-    var n = 0
-    while (n == 0 || ops.map(_.wallMs).sum < seconds * 1e3) {
-      val store = s"$work/store/pass-$n"
-      val (p, rec) = trace.op("pass")(pass(spark.read.parquet(docsPath), store, trace))
-      ops += rec
-      writes += p.writeMs
-      // outside the timed pass: checks, the candidate count and the store size
-      if (rec.traced) {
-        rowsOut += p.rows
+    val store = s"$work/store"
+    val (p, rec) = trace.op("pass")(pass(spark.read.parquet(docsPath), store, trace))
+    // outside the timed pass: the candidate count, the checks and the store size
+    val confirm =
+      if (!rec.traced) 0.0
+      else {
         val cand = Dedup.minhashPairs(p.dedup, "doc_id", "text", threshold = 0.0).count()
-        confirm += (if (cand > 0) p.rows("minhash_pairs").toDouble / cand else 0.0)
+        if (cand > 0) p.rows("minhash_pairs").toDouble / cand else 0.0
       }
-      val (ok, r, hash) = check(p)
-      if (!ok) failed += 1
-      recall = math.min(recall, r)
-      hashes += hash
-      storeBytes = Files.bytes(store)
-      p.release()
-      Files.delete(store)
-      n += 1
-    }
-    if (hashes.size != 1) failed += 1
-    val walls = ops.map(_.wallMs)
-    val traced = ops.filter(_.traced)
-    def stageMs(s: String) = Stats.median(traced.map(_.layer.getOrElse(s"span.operators.$s", 0.0)))
+    val (ok, recall, hash) = check(p)
+    val storeBytes = CorpusBatch.bytes(new java.io.File(store))
+    p.release()
     val layers = stages.flatMap { s =>
-      Seq(s"operators.${s}_s" -> stageMs(s) / 1e3,
-        s"operators.$s.rows_out" -> Stats.median(rowsOut.map(_.getOrElse(s, 0L).toDouble).toSeq))
+      Seq(s"operators.${s}_s" -> rec.layer.getOrElse(s"span.operators.$s", 0.0) / 1e3,
+        s"operators.$s.rows_out" -> (if (rec.traced) p.rows(s).toDouble else 0.0))
     }.toMap ++ Map(
-      "operators.minhash.confirm_ratio" -> Stats.median(confirm.toSeq),
+      "operators.minhash.confirm_ratio" -> confirm,
       "store.bytes_per_input_byte" -> storeBytes / inputBytes)
-    Outcome(ops.toSeq, Set("pass"), writes.toSeq, nDocs * ops.length / (walls.sum / 1e3),
-      attempted = ops.length + 1, failed = failed, layers = layers,
-      report = Map("passes" -> ops.length, "pipeline_s" -> Stats.median(walls.toSeq) / 1e3,
-        "near_dup_recall" -> recall, "result_hashes" -> hashes.toSeq,
-        "store_bytes_per_input_byte" -> storeBytes / inputBytes))
+    Outcome(Seq(rec), Set("pass"), Seq(p.writeMs), nDocs / (rec.wallMs / 1e3),
+      attempted = 1, failed = if (ok) 0 else 1, layers = layers,
+      report = Map("pipeline_s" -> rec.wallMs / 1e3, "near_dup_recall" -> recall,
+        "result_hash" -> hash, "store_bytes_per_input_byte" -> storeBytes / inputBytes))
   }
 
   /** (all checks hold, planted near-duplicate recall, hash of the output ids) */
@@ -149,6 +127,10 @@ final class CorpusBatch(spark: SparkSession, in: String, work: String) extends W
 }
 
 object CorpusBatch {
+  /** Bytes of every file under `f`. */
+  private def bytes(f: java.io.File): Double =
+    if (f.isDirectory) Option(f.listFiles).toSeq.flatten.map(bytes).sum else f.length.toDouble
+
   /** One pass: its stage row counts and write time, the stage outputs it
     * persisted, and the frames and store the checks read. */
   private final case class Pass(rows: Map[String, Long], writeMs: Double,

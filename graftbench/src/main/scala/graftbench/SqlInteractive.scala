@@ -22,6 +22,8 @@ final class SqlInteractive(spark: SparkSession, in: String, work: String) extend
       Stmt(n.get("sql").asText, Json.scalars(n.get("vars")), n.get("write").asBoolean,
         n.get("text_id").asLong, n.get("warmup").asBoolean)
     }.toIndexedSeq
+  /** Statements in one cycle of the template order. */
+  private val cycle = Json.read(s"$in/inputs.json").get("cycle").asInt
   private val engine = new Engine(spark)
   private val tables = s"$in/tables"
 
@@ -37,12 +39,18 @@ final class SqlInteractive(spark: SparkSession, in: String, work: String) extend
 
   def prepare(round: Int): Unit = register(s"$work/saved-setup-$round")
 
-  /** Run the stream's warm-up statements: one cycle of every template. */
+  /** Run the stream's warm-up statements: its first cycles of the template order. */
   def warmUp(): Unit =
     stream.takeWhile(_.warmup).foreach(s => engine.query(s.sql, s.vars).collect())
 
+  /** The timed statements: whole cycles of the stream's template order
+    * after the warm-up, one per [[SqlInteractive.CycleSeconds]] of
+    * `seconds`, so every run times the same number and mix. */
   def run(seconds: Double, trace: Trace): Outcome = {
     register(s"$work/saved")
+    val warm = stream.count(_.warmup)
+    val n = math.max(1, math.round(seconds / SqlInteractive.CycleSeconds).toInt) * cycle
+    require(stream.length >= warm + n, s"the stream holds ${stream.length} statements, $n timed")
     // first results go to a file as they come, so the session's retained
     // memory at the end does not include them; a repeat is compared with
     // the hash of its text's first result
@@ -53,15 +61,16 @@ final class SqlInteractive(spark: SparkSession, in: String, work: String) extend
     val ops = mutable.ArrayBuffer.empty[OpRecord]
     var failed, rowsOut = 0L
     val t0 = System.nanoTime()
-    var i = stream.count(_.warmup)
-    while (System.nanoTime() - t0 < seconds * 1e9 && i < stream.length) {
-      val s = stream(i)
-      i += 1
-      val (rows, rec) = trace.op(if (s.write) "save" else "select") {
-        trace.probe("engine.rewrite")(Dialect.rewrite(s.sql))
+    stream.slice(warm, warm + n).foreach { s =>
+      // the dialect rewrite, timed on its own outside the op: Engine.query
+      // runs it again inside
+      val rewriteMs = if (trace.enabled) Trace.ms(Dialect.rewrite(s.sql)) else 0.0
+      val (rows, rec0) = trace.op(if (s.write) "save" else "select") {
         val df = trace.span("engine.query")(engine.query(s.sql, s.vars))
         trace.span("exec.collect")(df.collect())
       }
+      val rec = if (rec0.traced) rec0.copy(layer = rec0.layer + ("rewrite_ms" -> rewriteMs))
+        else rec0
       ops += rec
       executed += s.textId
       if (rec.traced) rowsOut += rows.length
@@ -98,6 +107,10 @@ final class SqlInteractive(spark: SparkSession, in: String, work: String) extend
 }
 
 object SqlInteractive {
+  /** About how long one warm cycle of the template order takes on a
+    * 4-core host; it only converts `seconds` into a number of cycles. */
+  val CycleSeconds = 8.0
+
   private final case class Stmt(sql: String, vars: Map[String, Any], write: Boolean,
                                 textId: Long, warmup: Boolean)
 }

@@ -61,6 +61,15 @@ final class Counters {
   }
 }
 
+object Trace {
+  /** Wall time of `body`, in ms. */
+  def ms(body: => Any): Double = {
+    val t0 = System.nanoTime()
+    body
+    (System.nanoTime() - t0) / 1e6
+  }
+}
+
 /** One span: a call into a layer, made from the benchmark's code. */
 final case class Span(name: String, op: Long, parent: Int, start: Long,
                       var end: Long = 0L, var counts: Map[String, Long] = Map.empty)
@@ -153,11 +162,6 @@ final class Trace(spark: SparkSession, val enabled: Boolean) {
       val i = push(name)
       try body finally pop(i, before)
     }
-
-  /** A span around a call made only in traced ops: times a layer that
-    * the op also calls internally, such as the dialect rewrite inside
-    * `Engine.query`. */
-  def probe[T](name: String)(body: => T): Unit = if (tracing) span(name)(body)
 
   private def push(name: String): Int = {
     spans += Span(name, opId, stack.headOption.getOrElse(-1), System.nanoTime())
