@@ -259,13 +259,14 @@ FROM tpch.orders WHERE o_custkey % {m} = {r} GROUP BY o_orderpriority""",
 # write share; the seed draws each statement's parameters. At three
 # fixed positions in ten, the statement repeats the text of an earlier
 # statement of the same template. The first WARMUP_CYCLES cycles are the
-# session's warm-up and are not timed: the first cycle runs cold, and the
-# second lets the JIT catch up, so the timed cycles run at a steady pace.
+# session's warm-up and are not timed: the first cycle runs cold. The run
+# time goes to the timed cycles instead of more warm-up, because the host's
+# speed drifts over seconds and a longer timed window averages more of it.
 SQL_CYCLE = ["join6", "distinct_on", "save", "qualify", "vars", "join6", "cte_window",
              "federation", "save", "builtins", "join6", "distinct_on", "qualify", "save",
              "vars", "cte_window", "federation", "builtins"]
 REPEAT_SLOTS = {3, 6, 9}
-WARMUP_CYCLES = 2
+WARMUP_CYCLES = 1
 
 
 def sql_stream(rng, s):

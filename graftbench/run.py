@@ -1,6 +1,6 @@
 """graft benchmark: one command, two workloads.
 
-    python3 graftbench/run.py --workload sql_interactive --seed 1 --seconds 24 --trace 0
+    python3 graftbench/run.py --workload sql_interactive --seed 1 --seconds 30 --trace 0
 
 Run from the repository root. The first run builds graft and the
 benchmark's JVM program from source (sbt, a few minutes) and caches the

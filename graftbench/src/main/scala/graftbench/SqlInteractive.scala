@@ -39,7 +39,7 @@ final class SqlInteractive(spark: SparkSession, in: String, work: String) extend
 
   def prepare(round: Int): Unit = register(s"$work/saved-setup-$round")
 
-  /** Run the stream's warm-up statements: its first cycles of the template order. */
+  /** Run the stream's warm-up statements: its first cycle of the template order. */
   def warmUp(): Unit =
     stream.takeWhile(_.warmup).foreach(s => engine.query(s.sql, s.vars).collect())
 
@@ -109,7 +109,7 @@ final class SqlInteractive(spark: SparkSession, in: String, work: String) extend
 object SqlInteractive {
   /** About how long one warm cycle of the template order takes on a
     * 4-core host; it only converts `seconds` into a number of cycles. */
-  val CycleSeconds = 8.0
+  val CycleSeconds = 6.0
 
   private final case class Stmt(sql: String, vars: Map[String, Any], write: Boolean,
                                 textId: Long, warmup: Boolean)
