@@ -21,6 +21,10 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    // a failed key must FAIL the tool (the ExplainDump precedent), but
+    // only after every other key's result and oracle_sql.json are
+    // written, so one failure never hides the rest of the sweep
+    var failures = 0
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
       .foreach { case (name, fn) =>
@@ -28,6 +32,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failures += 1
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -46,5 +51,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failures > 0) {
+      System.err.println(s"[verify] $failures key(s) failed")
+      sys.exit(1)
+    }
   }
 }

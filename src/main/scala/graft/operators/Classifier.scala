@@ -99,37 +99,38 @@ object Classifier {
     // gives both: the cache fill runs under AQE, and (with the default
     // canChangeCachedPlanOutputPartitioning=false) its outputPartitioning
     // stays HashPartitioning(__tid) for every consumer. feats is fully
-    // consumed inside this call, so it is unpersisted before returning —
-    // no cache entry outlives the train. Read once per iteration —
-    // never re-tokenize.
+    // consumed inside this call, so it is unpersisted on every exit path
+    // (a failed guard or epoch included) — no cache entry outlives the
+    // train. Read once per iteration — never re-tokenize.
     val feats = featsPlan.repartition(col("__tid")).persist()
-    val n = feats.select(col("__tid")).distinct().count()
-    require(n > 0, "lrTrain: empty training set")
-    var w = Array.empty[(Int, Double)] // all-zero weights, sparsely
-    var i = 0
-    while (i < iters) {
-      val wDf = weightsToDf(pos.sparkSession, w)
-      val p = logitOf(feats.select(col("__tid"), col("bucket"), col("tf")),
-          wDf, "__tid")
-        .select(col("__tid"), sigmoidQ(col("z")).as("__p"))
-      // grad_f = Σ_docs tf·(y − p) / N ; update w += lr·grad (rounded
-      // to the 1e-6 grid — the iteration-boundary contract)
-      val grad = feats.join(p, "__tid")
-        .groupBy(col("bucket"))
-        .agg((sum((col("tf") * (col("__y") - col("__p")))
-          .cast(DecimalType(20, 10))).cast("double") / n).as("g"))
-      val gMap = grad.collect() // ≤ buckets rows — the KB-scale boundary
-        .map(r => r.getInt(0) -> r.getDouble(1)).toMap
-      val keys = (w.map(_._1).toSet ++ gMap.keySet).toArray.sorted
-      val wMap = w.toMap
-      w = keys.map { b =>
-        b -> BigDecimal(wMap.getOrElse(b, 0.0) + lr * gMap.getOrElse(b, 0.0))
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    try {
+      val n = feats.select(col("__tid")).distinct().count()
+      require(n > 0, "lrTrain: empty training set")
+      var w = Array.empty[(Int, Double)] // all-zero weights, sparsely
+      var i = 0
+      while (i < iters) {
+        val wDf = weightsToDf(pos.sparkSession, w)
+        val p = logitOf(feats.select(col("__tid"), col("bucket"), col("tf")),
+            wDf, "__tid")
+          .select(col("__tid"), sigmoidQ(col("z")).as("__p"))
+        // grad_f = Σ_docs tf·(y − p) / N ; update w += lr·grad (rounded
+        // to the 1e-6 grid — the iteration-boundary contract)
+        val grad = feats.join(p, "__tid")
+          .groupBy(col("bucket"))
+          .agg((sum((col("tf") * (col("__y") - col("__p")))
+            .cast(DecimalType(20, 10))).cast("double") / n).as("g"))
+        val gMap = grad.collect() // ≤ buckets rows — the KB-scale boundary
+          .map(r => r.getInt(0) -> r.getDouble(1)).toMap
+        val keys = (w.map(_._1).toSet ++ gMap.keySet).toArray.sorted
+        val wMap = w.toMap
+        w = keys.map { b =>
+          b -> BigDecimal(wMap.getOrElse(b, 0.0) + lr * gMap.getOrElse(b, 0.0))
+            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+        }
+        i += 1
       }
-      i += 1
-    }
-    feats.unpersist()
-    w
+      w
+    } finally feats.unpersist()
   }
 
   /** Weight vector ⇄ plain DataFrame (bucket, w) — the classifier's

@@ -274,17 +274,10 @@ object EngineQueries {
       val e = new Engine(s)
       // the stored-index serve from SQL: index built + persisted in
       // Scala (the write side), postings/doclens views, the lazy TVF
-      val out = "target/gate_sink/bm25_index_sql"
+      val out = Stores.dir("bm25_index_sql")
       import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents").select(col("doc_id"), col("text"))
-      // one index pass feeds BOTH sinks, written concurrently (guide
-      // §2.6 — the llm_bm25_stored shape)
-      val ix = graft.operators.Reuse.Local(
-        graft.operators.TextAnalysis.bm25Index(docs, "doc_id", "text"))
-      graft.operators.Par.jobs(Seq(ix),
-        () => ix.write.mode("overwrite").parquet(s"$out/postings"),
-        () => graft.operators.TextAnalysis.bm25DocLens(ix, "doc_id")
-          .write.mode("overwrite").parquet(s"$out/doclens"))
+      Stores.bm25(out, Seq(Stores.bm25Index(docs)))
       s.read.parquet(s"$out/postings").createOrReplaceTempView("bm25_postings")
       s.read.parquet(s"$out/doclens").createOrReplaceTempView("bm25_doclens")
       e.query("""SELECT doc_id, bm25
@@ -296,16 +289,10 @@ object EngineQueries {
       val e = new Engine(s)
       // batch retrieval from SQL: index persisted in Scala, queries a
       // VALUES view, the deferred join TVF
-      val out = "target/gate_sink/bm25_index_join_sql"
+      val out = Stores.dir("bm25_index_join_sql")
       import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents").select(col("doc_id"), col("text"))
-      // one index pass, two overlapped sinks (the llm_bm25_stored shape)
-      val ix = graft.operators.Reuse.Local(
-        graft.operators.TextAnalysis.bm25Index(docs, "doc_id", "text"))
-      graft.operators.Par.jobs(Seq(ix),
-        () => ix.write.mode("overwrite").parquet(s"$out/postings"),
-        () => graft.operators.TextAnalysis.bm25DocLens(ix, "doc_id")
-          .write.mode("overwrite").parquet(s"$out/doclens"))
+      Stores.bm25(out, Seq(Stores.bm25Index(docs)))
       s.read.parquet(s"$out/postings").createOrReplaceTempView("bm25j_postings")
       s.read.parquet(s"$out/doclens").createOrReplaceTempView("bm25j_doclens")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW bm25j_queries AS
@@ -325,34 +312,14 @@ object EngineQueries {
       // B's postings + doclens parquet-appended (the write side stays
       // Scala — SQL serves), the union served through the stored TVF;
       // same oracle as llm_bm25, so a lost append hash-mismatches
-      val out = "target/gate_sink/bm25_index_append_sql"
-      import org.apache.spark.sql.functions.{broadcast, col, max}
+      val out = Stores.dir("bm25_index_append_sql")
+      import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val a = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") <= col("m") - 100)
-        .select(col("doc_id"), col("text"))
-      val b = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 100)
-        .select(col("doc_id"), col("text"))
-      val ia = graft.operators.Reuse.Local(
-        graft.operators.TextAnalysis.bm25Index(a, "doc_id", "text"))
-      val ib = graft.operators.Reuse.Local(
-        graft.operators.TextAnalysis.bm25Index(b, "doc_id", "text"))
-      // overlap the two per-path lifecycle chains (guide §2.6;
-      // overwrite→append order preserved WITHIN each path)
-      graft.operators.Par.jobs(Seq(ia, ib),
-        () => {
-          ia.write.mode("overwrite").parquet(s"$out/postings")
-          ib.write.mode("append").parquet(s"$out/postings")
-        },
-        () => {
-          graft.operators.TextAnalysis.bm25DocLens(ia, "doc_id")
-            .write.mode("overwrite").parquet(s"$out/doclens")
-          graft.operators.TextAnalysis.bm25DocLens(ib, "doc_id")
-            .write.mode("append").parquet(s"$out/doclens")
-        })
+      val gen = Stores.split(docs, "doc_id")
+      val a = gen.older(100).select(col("doc_id"), col("text"))
+      val b = gen.newer(100).select(col("doc_id"), col("text"))
+      Stores.bm25(out, Seq(a, b).map(Stores.bm25Index))
       s.read.parquet(s"$out/postings")
         .createOrReplaceTempView("bm25a_postings")
       s.read.parquet(s"$out/doclens")
@@ -368,17 +335,11 @@ object EngineQueries {
       // the tombstone an anti-predicate view over BOTH store tables
       // (the e_sql_ann_delete pattern), the stored-serve TVF unchanged
       // — df/N/avgdl recompute from the purged views
-      val out = "target/gate_sink/bm25_index_delete_sql"
+      val out = Stores.dir("bm25_index_delete_sql")
       import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val ix = graft.operators.Reuse.Local(
-        graft.operators.TextAnalysis.bm25Index(docs, "doc_id", "text"))
-      // two independent sinks off the shared checkpoint — overlap (§2.6)
-      graft.operators.Par.jobs(Seq(ix),
-        () => ix.write.mode("overwrite").parquet(s"$out/postings"),
-        () => graft.operators.TextAnalysis.bm25DocLens(ix, "doc_id")
-          .write.mode("overwrite").parquet(s"$out/doclens"))
+      Stores.bm25(out, Seq(Stores.bm25Index(docs)))
       s.read.parquet(s"$out/postings")
         .createOrReplaceTempView("bm25d_postings_raw")
       s.read.parquet(s"$out/doclens")
@@ -418,17 +379,11 @@ object EngineQueries {
       // side), the lexical leg ranked by the join TVF itself (it emits
       // rank), the semantic leg a window over the knn TVF, the fusion
       // TVF cutting per query
-      val out = "target/gate_sink/hybrid_join_sql"
+      val out = Stores.dir("hybrid_join_sql")
       import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val ix = graft.operators.Reuse.Local(
-        graft.operators.TextAnalysis.bm25Index(docs, "doc_id", "text"))
-      // two independent sinks off the shared checkpoint — overlap (§2.6)
-      graft.operators.Par.jobs(Seq(ix),
-        () => ix.write.mode("overwrite").parquet(s"$out/postings"),
-        () => graft.operators.TextAnalysis.bm25DocLens(ix, "doc_id")
-          .write.mode("overwrite").parquet(s"$out/doclens"))
+      Stores.bm25(out, Seq(Stores.bm25Index(docs)))
       s.read.parquet(s"$out/postings")
         .createOrReplaceTempView("hybridj_postings")
       s.read.parquet(s"$out/doclens")
@@ -466,7 +421,7 @@ object EngineQueries {
       // the surviving view (the write side stays Scala — SQL serves) →
       // lexical leg via the stored join TVF, semantic leg a window over
       // the knn TVF on the surviving embeddings, fused per query
-      val out = "target/gate_sink/pipeline11_sql"
+      val out = Stores.dir("pipeline11_sql")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW p11_crawl AS
                  SELECT doc_id, text FROM documents
                  UNION ALL
@@ -494,11 +449,7 @@ object EngineQueries {
       // variant truncates the same diamond at first execution instead
       val ix = graft.operators.Reuse.LocalDeferred(
         graft.operators.TextAnalysis.bm25Index(ded, "doc_id", "text"))
-      // two independent sinks off the shared checkpoint — overlap (§2.6)
-      graft.operators.Par.jobs(Seq(ix),
-        () => ix.write.mode("overwrite").parquet(s"$out/postings"),
-        () => graft.operators.TextAnalysis.bm25DocLens(ix, "doc_id")
-          .write.mode("overwrite").parquet(s"$out/doclens"))
+      Stores.bm25(out, Seq(ix))
       s.read.parquet(s"$out/postings")
         .createOrReplaceTempView("p11_postings")
       s.read.parquet(s"$out/doclens")
@@ -744,16 +695,13 @@ object EngineQueries {
     "e_sql_minhash_probe" -> ((s, d) => {
       Tables.registerAll(s, d)
       val e = new Engine(s)
-      val out = "target/gate_sink/minhash_index_sql"
+      val out = Stores.dir("minhash_index_sql")
       val docs = Tables.load(s, d, "documents")
         .select(org.apache.spark.sql.functions.col("doc_id"),
           org.apache.spark.sql.functions.col("text"))
       val idx = graft.operators.Dedup.minhashIndex(docs, "doc_id", "text",
         k = 16, nBands = 4)
-      // two independent sinks off the shared sketch — overlap (§2.6)
-      graft.operators.Par.jobs(Seq(idx.sets),
-        () => idx.bands.write.mode("overwrite").parquet(s"$out/bands"),
-        () => idx.sets.write.mode("overwrite").parquet(s"$out/sets"))
+      Stores.minhash(idx, out)
       s.read.parquet(s"$out/bands").createOrReplaceTempView("graft_idx_bands")
       s.read.parquet(s"$out/sets").createOrReplaceTempView("graft_idx_sets")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_probe_new AS
@@ -859,18 +807,13 @@ object EngineQueries {
     "e_sql_decontam_roundtrip" -> ((s, d) => {
       Tables.registerAll(s, d)
       val e = new Engine(s)
-      val out = "target/gate_sink/decontam_index_sql"
-      import org.apache.spark.sql.functions.{broadcast, col, max}
+      val out = Stores.dir("decontam_index_sql")
+      import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val ev = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 100).select(col("doc_id"), col("text"))
-      val idx = graft.operators.Dedup.decontamIndex(ev, "doc_id", "text",
-        n = 13, expectedItems = 1L << 16, numBits = 1L << 20)
-      // two independent sinks off the shared index — overlap (§2.6)
-      graft.operators.Par.jobs(
-        () => idx.sketch.write.mode("overwrite").parquet(s"$out/sketch"),
-        () => idx.hashes.write.mode("overwrite").parquet(s"$out/hashes"))
+      val gen = Stores.split(docs, "doc_id")
+      val ev = gen.newer(100).select(col("doc_id"), col("text"))
+      val idx = Stores.decontamIndex(ev)
+      Stores.decontam(idx, out)
       s.read.parquet(s"$out/sketch").createOrReplaceTempView("graft_dc_sketch")
       s.read.parquet(s"$out/hashes").createOrReplaceTempView("graft_dc_hashes")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_corpus_v AS
@@ -979,14 +922,11 @@ object EngineQueries {
       // stored-model KN scoring from SQL: the five count tables trained
       // and written in Scala (the write side), read back as views, the
       // whole corpus scored through the lazy TVF
-      val out = "target/gate_sink/kn_model_sql"
+      val out = Stores.dir("kn_model_sql")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
       val model = graft.operators.TextAnalysis.trigramKnTrain(
         docs.filter($"doc_id" % 2 === 0), "doc_id", "text")
-      // independent-sink writes off shared checkpointed frames — run
-      // concurrently (guide §2.6); the cheap view registrations follow
-      graft.operators.Par.jobs(Seq(model("types")), model.toSeq.map { case (k, v) => () =>
-        v.write.mode("overwrite").parquet(s"$out/$k") }: _*)
+      Stores.knModel(model, out)
       model.keys.foreach { k =>
         s.read.parquet(s"$out/$k").createOrReplaceTempView(s"knm_$k")
       }
@@ -1002,19 +942,17 @@ object EngineQueries {
       // Scala (the write side — the merge law is trigramKnAppend's),
       // the merged store read back as views and the whole corpus
       // scored through the unchanged lazy TVF
-      val out = "target/gate_sink/kn_model_append_sql"
+      val out = Stores.dir("kn_model_append_sql")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
       val mA = graft.operators.TextAnalysis.trigramKnTrain(
         docs.filter($"doc_id" % 4 === 0), "doc_id", "text")
-      // concurrent independent-sink writes per generation (guide §2.6);
-      // v2 depends on v1 via the read-back, so the batches stay ordered
-      graft.operators.Par.jobs(Seq(mA("types")), mA.toSeq.map { case (k, v) => () =>
-        v.write.mode("overwrite").parquet(s"$out/v1/$k") }: _*)
-      val stored = mA.keys.map(k => k -> s.read.parquet(s"$out/v1/$k")).toMap
+      // v2 is merged from v1's read-back, so the two stores are written
+      // one after the other
+      Stores.knModel(mA, s"$out/v1")
+      val stored = Stores.readKnModel(s, mA, s"$out/v1")
       val merged = graft.operators.TextAnalysis.trigramKnAppend(stored,
         docs.filter($"doc_id" % 4 === 2), "doc_id", "text")
-      graft.operators.Par.jobs(Seq(merged("types")), merged.toSeq.map { case (k, v) => () =>
-        v.write.mode("overwrite").parquet(s"$out/v2/$k") }: _*)
+      Stores.knModel(merged, s"$out/v2")
       merged.keys.foreach { k =>
         s.read.parquet(s"$out/v2/$k").createOrReplaceTempView(s"knma_$k")
       }
@@ -1030,12 +968,9 @@ object EngineQueries {
       val e = new Engine(s)
       // train in Scala (the write side), store, serve from the view
       // through the deferred TVF — the stored-artifact twin convention
-      val out = "target/gate_sink/unigram_pieces_sql"
-      graft.operators.TextAnalysis.unigramTokTrain(
-          Tables.load(s, d, "documents").select(col("doc_id"), col("text")),
-          "doc_id", "text", vocabSize = 48, nRounds = 2,
-          maxPieceLen = 4, seedSize = 64)
-        .write.mode("overwrite").parquet(out)
+      val out = Stores.dir("unigram_pieces_sql")
+      Stores.unigramPieces(
+        Tables.load(s, d, "documents").select(col("doc_id"), col("text")), out)
       s.read.parquet(out).createOrReplaceTempView("unig_pieces")
       e.query("""SELECT * FROM graft_unigram_tokenize('documents',
                    'doc_id', 'text', 'unig_pieces')""")
@@ -1125,21 +1060,12 @@ object EngineQueries {
     "e_sql_ann_stored" -> ((s, d) => {
       Tables.registerAll(s, d)
       val e = new Engine(s)
-      val out = "target/gate_sink/ann_index_sql"
+      val out = Stores.dir("ann_index_sql")
       val emb = Tables.load(s, d, "embeddings")
-      val sim = graft.operators.Similarity
-      val cents = sim.collectCentroids(emb, "vec_id", "embedding", 8)
-      val cbs = sim.pqCodebooks(emb, "vec_id", "embedding",
-        m = 4, subDim = 16, nCodes = 8)
-      // three independent sinks (cents/cbs already driver-side) —
-      // overlap them (guide §2.6)
-      graft.operators.Par.jobs(
-        () => sim.centroidsToDf(s, cents)
-          .write.mode("overwrite").parquet(s"$out/cells"),
-        () => sim.codebooksToDf(s, cbs)
-          .write.mode("overwrite").parquet(s"$out/codebooks"),
-        () => sim.ivfPqEncode(emb, "vec_id", "embedding", cents, cbs, 16)
-          .write.mode("overwrite").parquet(s"$out/codes"))
+      val cents = Stores.seedCells(emb)
+      val cbs = Stores.codebooks(emb)
+      Stores.ivfPq(s, cents, cbs, out,
+        Stores.ivfPqCodes(emb, cents, cbs))
       s.read.parquet(s"$out/cells").createOrReplaceTempView("graft_ann_cells")
       s.read.parquet(s"$out/codebooks").createOrReplaceTempView("graft_ann_cbs")
       s.read.parquet(s"$out/codes").createOrReplaceTempView("graft_ann_codes")
@@ -1219,10 +1145,9 @@ object EngineQueries {
       val e = new Engine(s)
       // the SQ store served from SQL: codes written Scala-side (the
       // write side), read back into a view, probed via the TVF
-      val out = "target/gate_sink/sq_codes_sql"
+      val out = Stores.dir("sq_codes_sql")
       val emb = Tables.load(s, d, "embeddings")
-      graft.operators.Similarity.sqEncode(emb, "vec_id", "embedding")
-        .write.mode("overwrite").parquet(out)
+      Stores.sq(out, emb)
       s.read.parquet(out).createOrReplaceTempView("graft_sq_codes")
       e.query("""SELECT vec_id, sq_score
                  FROM graft_ann_sq_stored('graft_sq_codes', 'embeddings',
@@ -1234,18 +1159,13 @@ object EngineQueries {
       // SQ index maintenance from SQL: per-row encode means the delta
       // IS the append — gen A written, gen B parquet-appended (Scala,
       // the write side), the read-back union served via the TVF
-      val out = "target/gate_sink/sq_codes_append_sql"
-      import org.apache.spark.sql.functions.{broadcast, col, max}
+      val out = Stores.dir("sq_codes_append_sql")
+      import org.apache.spark.sql.functions.col
       val emb = Tables.load(s, d, "embeddings")
-      val m = emb.agg(max(col("vec_id")).as("m"))
-      val a = emb.crossJoin(broadcast(m)).filter(col("vec_id") <= col("m") - 100)
-        .select(col("vec_id"), col("embedding"))
-      val b = emb.crossJoin(broadcast(m)).filter(col("vec_id") > col("m") - 100)
-        .select(col("vec_id"), col("embedding"))
-      graft.operators.Similarity.sqEncode(a, "vec_id", "embedding")
-        .write.mode("overwrite").parquet(out)
-      graft.operators.Similarity.sqEncode(b, "vec_id", "embedding")
-        .write.mode("append").parquet(out)
+      val gen = Stores.split(emb, "vec_id")
+      val a = gen.older(100).select(col("vec_id"), col("embedding"))
+      val b = gen.newer(100).select(col("vec_id"), col("embedding"))
+      Stores.sq(out, a, b)
       s.read.parquet(out).createOrReplaceTempView("graft_sq_codes_apnd")
       e.query("""SELECT vec_id, sq_score
                  FROM graft_ann_sq_stored('graft_sq_codes_apnd', 'embeddings',
@@ -1257,16 +1177,10 @@ object EngineQueries {
       // the IVF×SQ store from SQL: cell-partitioned codes + the cells
       // table written Scala-side, served via the TVF with the
       // driver-literal probe-cell filter (static partition pruning)
-      val out = "target/gate_sink/ivf_sq_codes_sql"
+      val out = Stores.dir("ivf_sq_codes_sql")
       val emb = Tables.load(s, d, "embeddings")
-      val sim = graft.operators.Similarity
-      val cents = sim.collectCentroids(emb, "vec_id", "embedding", 8)
-      // two independent sinks — overlap them (guide §2.6)
-      graft.operators.Par.jobs(
-        () => sim.centroidsToDf(s, cents)
-          .write.mode("overwrite").parquet(s"$out/cells"),
-        () => sim.ivfSqEncode(emb, "vec_id", "embedding", cents)
-          .write.mode("overwrite").partitionBy("cell").parquet(s"$out/codes"))
+      val cents = Stores.seedCells(emb)
+      Stores.ivfSq(s, cents, out, emb)
       s.read.parquet(s"$out/cells").createOrReplaceTempView("graft_ivfsq_cells")
       s.read.parquet(s"$out/codes").createOrReplaceTempView("graft_ivfsq_codes")
       e.query("""SELECT vec_id, sq_score
@@ -1281,17 +1195,11 @@ object EngineQueries {
       // the purge is a plain anti-predicate VIEW over the read-back
       // (the e_sql_ann_delete pattern) — clones of purged images admit
       // again, survivors' clones still bounce, via the unchanged TVF
-      val out = "target/gate_sink/image_dhash_delete_sql"
-      import org.apache.spark.sql.functions.{broadcast, col, length, max}
+      val out = Stores.dir("image_dhash_delete_sql")
+      import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 300 && length(col("text")) >= 400)
-        .select(col("doc_id"), col("text"))
-      graft.operators.Multimodal.dHash(
-          graft.operators.Multimodal.asMedia(slice, "doc_id", "text"))
-        .write.mode("overwrite").parquet(out)
+      Stores.dHash(out, Stores.media(docs).slice)
       s.read.parquet(out).createOrReplaceTempView("image_hashes_del")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW image_hashes_purged AS
                  SELECT * FROM image_hashes_del WHERE doc_id % 5 <> 1""")
@@ -1382,13 +1290,11 @@ object EngineQueries {
       // graft_image_dups WITHIN the batch view (higher id of every
       // pair drops), survivors probe the read-back dHash store via
       // graft_image_probe — admitBatchMedia's semantics, statement form
-      val out = "target/gate_sink/selfdedup_media_sql"
+      val out = Stores.dir("selfdedup_media_sql")
       import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      graft.operators.Multimodal.dHash(
-          graft.operators.Multimodal.asMedia(docs, "doc_id", "text"))
-        .write.mode("overwrite").parquet(out)
+      Stores.dHash(out, docs)
       s.read.parquet(out).createOrReplaceTempView("sddm_hashes")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW sddm_batch AS
                  WITH m AS (SELECT max(doc_id) AS mx FROM documents),
@@ -1420,15 +1326,12 @@ object EngineQueries {
       // SQL: graft_minhash_pairs WITHIN the batch view (higher id of
       // every pair drops), survivors probe the read-back index via
       // graft_minhash_probe — the admitBatch semantics, statement form
-      val out = "target/gate_sink/selfdedup_sql"
+      val out = Stores.dir("selfdedup_sql")
       import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
       val idx = graft.operators.Dedup.minhashIndex(docs, "doc_id", "text")
-      // two independent sinks off the shared sketch — overlap (§2.6)
-      graft.operators.Par.jobs(Seq(idx.sets),
-        () => idx.bands.write.mode("overwrite").parquet(s"$out/bands"),
-        () => idx.sets.write.mode("overwrite").parquet(s"$out/sets"))
+      Stores.minhash(idx, out)
       s.read.parquet(s"$out/bands").createOrReplaceTempView("sdd_bands")
       s.read.parquet(s"$out/sets").createOrReplaceTempView("sdd_sets")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW sdd_batch AS
@@ -1474,19 +1377,15 @@ object EngineQueries {
       // then the four-group incoming fixture, gopher keep,
       // decontamination, minhash probe, and dHash probe ALL composed as
       // engine SQL over the graft_* TVFs
-      val out = "target/gate_sink/pipeline9_sql"
+      val out = Stores.dir("pipeline9_sql")
       import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
       val idx = graft.operators.Dedup.minhashIndex(docs, "doc_id", "text")
       // three independent store sinks — overlap (guide §2.6)
       graft.operators.Par.jobs(
-        () => graft.operators.Par.jobs(Seq(idx.sets),
-          () => idx.bands.write.mode("overwrite").parquet(s"$out/mh/bands"),
-          () => idx.sets.write.mode("overwrite").parquet(s"$out/mh/sets")),
-        () => graft.operators.Multimodal.dHash(
-            graft.operators.Multimodal.asMedia(docs, "doc_id", "text"))
-          .write.mode("overwrite").parquet(s"$out/dh"))
+        () => Stores.minhash(idx, s"$out/mh"),
+        () => Stores.dHash(s"$out/dh", docs))
       s.read.parquet(s"$out/mh/bands").createOrReplaceTempView("p9_mh_bands")
       s.read.parquet(s"$out/mh/sets").createOrReplaceTempView("p9_mh_sets")
       s.read.parquet(s"$out/dh").createOrReplaceTempView("p9_dh")
@@ -1599,17 +1498,11 @@ object EngineQueries {
       val e = new Engine(s)
       // incremental audio admission from SQL: fingerprint store written
       // in Scala (the write side), edited-clone probe via the TVF
-      val out = "target/gate_sink/audio_fp_store_sql"
-      import org.apache.spark.sql.functions.{broadcast, col, length, max}
+      val out = Stores.dir("audio_fp_store_sql")
+      import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 300 && length(col("text")) >= 400)
-        .select(col("doc_id"), col("text"))
-      graft.operators.Multimodal.audioFp(
-          graft.operators.Multimodal.asMedia(slice, "doc_id", "text"))
-        .write.mode("overwrite").parquet(out)
+      Stores.audioFp(out, Stores.media(docs).slice)
       s.read.parquet(out).createOrReplaceTempView("audio_fps")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW audio_probe AS
                  WITH m AS (SELECT max(doc_id) AS mx FROM documents),
@@ -1629,25 +1522,11 @@ object EngineQueries {
       // audio-store append from SQL: two generations written in Scala
       // (the llm_audio_append fixture — the append IS the 8-byte
       // delta), the read-back union probed via the unchanged TVF
-      val out = "target/gate_sink/audio_fp_append_sql"
-      import org.apache.spark.sql.functions.{broadcast, col, length, max}
+      val out = Stores.dir("audio_fp_append_sql")
+      import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 300 && length(col("text")) >= 400)
-        .select(col("doc_id"), col("text"))
-      val genA = slice.crossJoin(broadcast(m))
-        .filter(col("doc_id") <= col("m") - 150)
-        .select(col("doc_id"), col("text"))
-      val genB = slice.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 150)
-        .select(col("doc_id"), col("text"))
-      val mm = graft.operators.Multimodal
-      mm.audioFp(mm.asMedia(genA, "doc_id", "text"))
-        .write.mode("overwrite").parquet(out)
-      mm.audioFp(mm.asMedia(genB, "doc_id", "text"))
-        .write.mode("append").parquet(out)
+      Stores.audioFp(out, Stores.media(docs).gens: _*)
       s.read.parquet(out).createOrReplaceTempView("audio_fps_app")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW audio_probe_app AS
                  WITH m AS (SELECT max(doc_id) AS mx FROM documents),
@@ -1668,17 +1547,11 @@ object EngineQueries {
       // table, so the purge is a plain anti-predicate VIEW over the
       // read-back (the e_sql_image_delete pattern) — clones of purged
       // tracks admit again, survivors' clones still bounce
-      val out = "target/gate_sink/audio_fp_delete_sql"
-      import org.apache.spark.sql.functions.{broadcast, col, length, max}
+      val out = Stores.dir("audio_fp_delete_sql")
+      import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 300 && length(col("text")) >= 400)
-        .select(col("doc_id"), col("text"))
-      graft.operators.Multimodal.audioFp(
-          graft.operators.Multimodal.asMedia(slice, "doc_id", "text"))
-        .write.mode("overwrite").parquet(out)
+      Stores.audioFp(out, Stores.media(docs).slice)
       s.read.parquet(out).createOrReplaceTempView("audio_fps_del")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW audio_fps_purged AS
                  SELECT * FROM audio_fps_del WHERE doc_id % 5 <> 1""")
@@ -1701,25 +1574,11 @@ object EngineQueries {
       // closed: two generations written in Scala (the llm_audio_compact
       // fixture), doc-id tombstones purged via graft_store_compact, the
       // edited-clone shard probed against the compacted view
-      val out = "target/gate_sink/audio_fp_compact_sql"
-      import org.apache.spark.sql.functions.{broadcast, col, length, max}
+      val out = Stores.dir("audio_fp_compact_sql")
+      import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 300 && length(col("text")) >= 400)
-        .select(col("doc_id"), col("text"))
-      val genA = slice.crossJoin(broadcast(m))
-        .filter(col("doc_id") <= col("m") - 150)
-        .select(col("doc_id"), col("text"))
-      val genB = slice.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 150)
-        .select(col("doc_id"), col("text"))
-      val mm = graft.operators.Multimodal
-      mm.audioFp(mm.asMedia(genA, "doc_id", "text"))
-        .write.mode("overwrite").parquet(s"$out/store")
-      mm.audioFp(mm.asMedia(genB, "doc_id", "text"))
-        .write.mode("append").parquet(s"$out/store")
+      Stores.audioFp(s"$out/store", Stores.media(docs).gens: _*)
       s.read.parquet(s"$out/store").createOrReplaceTempView("audcmp_store")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW audcmp_tomb AS
                  SELECT doc_id FROM audcmp_store WHERE doc_id % 5 = 1""")
@@ -1775,17 +1634,11 @@ object EngineQueries {
       val e = new Engine(s)
       // incremental video admission from SQL: frame store written in
       // Scala (the write side), edited-clone probe via the TVF
-      val out = "target/gate_sink/video_frames_store_sql"
-      import org.apache.spark.sql.functions.{broadcast, col, length, max}
+      val out = Stores.dir("video_frames_store_sql")
+      import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 300 && length(col("text")) >= 400)
-        .select(col("doc_id"), col("text"))
-      graft.operators.Multimodal.videoFrames(
-          graft.operators.Multimodal.asMedia(slice, "doc_id", "text"))
-        .write.mode("overwrite").parquet(out)
+      Stores.videoFrames(out, Stores.media(docs).slice)
       s.read.parquet(out).createOrReplaceTempView("video_frames_v")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW video_probe AS
                  WITH m AS (SELECT max(doc_id) AS mx FROM documents),
@@ -1805,25 +1658,11 @@ object EngineQueries {
       // video-store append from SQL: two generations written in Scala
       // (the frame delta IS videoFrames over the new media), the
       // read-back union probed via the unchanged TVF
-      val out = "target/gate_sink/video_frames_append_sql"
-      import org.apache.spark.sql.functions.{broadcast, col, length, max}
+      val out = Stores.dir("video_frames_append_sql")
+      import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 300 && length(col("text")) >= 400)
-        .select(col("doc_id"), col("text"))
-      val genA = slice.crossJoin(broadcast(m))
-        .filter(col("doc_id") <= col("m") - 150)
-        .select(col("doc_id"), col("text"))
-      val genB = slice.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 150)
-        .select(col("doc_id"), col("text"))
-      val mm = graft.operators.Multimodal
-      mm.videoFrames(mm.asMedia(genA, "doc_id", "text"))
-        .write.mode("overwrite").parquet(out)
-      mm.videoFrames(mm.asMedia(genB, "doc_id", "text"))
-        .write.mode("append").parquet(out)
+      Stores.videoFrames(out, Stores.media(docs).gens: _*)
       s.read.parquet(out).createOrReplaceTempView("video_frames_app")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW video_probe_app AS
                  WITH m AS (SELECT max(doc_id) AS mx FROM documents),
@@ -1843,17 +1682,11 @@ object EngineQueries {
       // video takedown from SQL: the frame store is a plain table, so
       // the purge is an anti-predicate VIEW over the read-back — all of
       // a tombstoned video's frame rows drop together on doc_id
-      val out = "target/gate_sink/video_frames_delete_sql"
-      import org.apache.spark.sql.functions.{broadcast, col, length, max}
+      val out = Stores.dir("video_frames_delete_sql")
+      import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 300 && length(col("text")) >= 400)
-        .select(col("doc_id"), col("text"))
-      graft.operators.Multimodal.videoFrames(
-          graft.operators.Multimodal.asMedia(slice, "doc_id", "text"))
-        .write.mode("overwrite").parquet(out)
+      Stores.videoFrames(out, Stores.media(docs).slice)
       s.read.parquet(out).createOrReplaceTempView("video_frames_del")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW video_frames_purged AS
                  SELECT * FROM video_frames_del WHERE doc_id % 5 <> 1""")
@@ -1875,25 +1708,11 @@ object EngineQueries {
       // video-store compaction from SQL — tombstones purged via
       // graft_store_compact, the clone shard probed against the
       // compacted view through the unchanged TVF
-      val out = "target/gate_sink/video_frames_compact_sql"
-      import org.apache.spark.sql.functions.{broadcast, col, length, max}
+      val out = Stores.dir("video_frames_compact_sql")
+      import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 300 && length(col("text")) >= 400)
-        .select(col("doc_id"), col("text"))
-      val genA = slice.crossJoin(broadcast(m))
-        .filter(col("doc_id") <= col("m") - 150)
-        .select(col("doc_id"), col("text"))
-      val genB = slice.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 150)
-        .select(col("doc_id"), col("text"))
-      val mm = graft.operators.Multimodal
-      mm.videoFrames(mm.asMedia(genA, "doc_id", "text"))
-        .write.mode("overwrite").parquet(s"$out/store")
-      mm.videoFrames(mm.asMedia(genB, "doc_id", "text"))
-        .write.mode("append").parquet(s"$out/store")
+      Stores.videoFrames(s"$out/store", Stores.media(docs).gens: _*)
       s.read.parquet(s"$out/store").createOrReplaceTempView("vidcmp_store")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW vidcmp_tomb AS
                  SELECT DISTINCT doc_id FROM vidcmp_store WHERE doc_id % 5 = 1""")
@@ -1917,7 +1736,7 @@ object EngineQueries {
       val e = new Engine(s)
       // store side written in Scala (the write side), read back as a
       // view; probe media fixture + TVF probe from SQL
-      val out = "target/gate_sink/image_dhash_store_sql"
+      val out = Stores.dir("image_dhash_store_sql")
       val docs = Tables.load(s, d, "documents")
         .select(org.apache.spark.sql.functions.col("doc_id"),
           org.apache.spark.sql.functions.col("text"))
@@ -1927,9 +1746,7 @@ object EngineQueries {
         org.apache.spark.sql.functions.col("doc_id") > mx - 300 &&
           org.apache.spark.sql.functions.length(
             org.apache.spark.sql.functions.col("text")) >= 400)
-      graft.operators.Multimodal.dHash(
-          graft.operators.Multimodal.asMedia(slice, "doc_id", "text"))
-        .write.mode("overwrite").parquet(out)
+      Stores.dHash(out, slice)
       s.read.parquet(out).createOrReplaceTempView("image_hashes")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW image_probe AS
                  WITH m AS (SELECT max(doc_id) AS mx FROM documents),
@@ -1950,26 +1767,11 @@ object EngineQueries {
       // recipe as llm_image_append (generation A written, generation
       // B's 8-byte delta parquet-appended in Scala, the write side),
       // the read-back union probed via the TVF from SQL
-      val out = "target/gate_sink/image_dhash_append_sql"
-      import org.apache.spark.sql.functions.{broadcast, col, length, max}
+      val out = Stores.dir("image_dhash_append_sql")
+      import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 300 && length(col("text")) >= 400)
-        .select(col("doc_id"), col("text"))
-      val genA = slice.crossJoin(broadcast(m))
-        .filter(col("doc_id") <= col("m") - 150)
-        .select(col("doc_id"), col("text"))
-      val genB = slice.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 150)
-        .select(col("doc_id"), col("text"))
-      graft.operators.Multimodal.dHash(
-          graft.operators.Multimodal.asMedia(genA, "doc_id", "text"))
-        .write.mode("overwrite").parquet(out)
-      graft.operators.Multimodal.dHash(
-          graft.operators.Multimodal.asMedia(genB, "doc_id", "text"))
-        .write.mode("append").parquet(out)
+      Stores.dHash(out, Stores.media(docs).gens: _*)
       s.read.parquet(out).createOrReplaceTempView("image_hashes_apnd")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW image_probe_apnd AS
                  WITH m AS (SELECT max(doc_id) AS mx FROM documents),
@@ -2016,19 +1818,12 @@ object EngineQueries {
       // written/appended in Scala (the write side), the probe a plain
       // SQL anti-predicate over the graft_fingerprint scalar — clones
       // of EITHER generation bounce, novel suffixes pass
-      val out = "target/gate_sink/fingerprint_store_append_sql"
-      import org.apache.spark.sql.functions.{broadcast, col, max}
+      val out = Stores.dir("fingerprint_store_append_sql")
+      import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      docs.crossJoin(broadcast(m)).filter(col("doc_id") <= col("m") - 150)
-        .select(graft.operators.TextAnalysis.fingerprint(col("text")).as("fp"))
-        .distinct()
-        .write.mode("overwrite").parquet(out)
-      docs.crossJoin(broadcast(m)).filter(col("doc_id") > col("m") - 150)
-        .select(graft.operators.TextAnalysis.fingerprint(col("text")).as("fp"))
-        .distinct()
-        .write.mode("append").parquet(out)
+      val gen = Stores.split(docs, "doc_id")
+      Stores.fingerprints(out, gen.older(150), gen.newer(150))
       s.read.parquet(out).createOrReplaceTempView("graft_fp_store_sql")
       // LEFT ANTI, not NOT IN: the null-aware NOT IN form plans a
       // BroadcastNestedLoopJoin (fingerprints are never null here, so
@@ -2050,14 +1845,13 @@ object EngineQueries {
       // takedown on the dedup index from SQL: the stored frames purge
       // via plain anti-predicate views, the unchanged probe TVF serves
       // them — clones of purged docs admit, survivors' clones bounce
-      val out = "target/gate_sink/minhash_index_delete_sql"
+      val out = Stores.dir("minhash_index_delete_sql")
       val docs = Tables.load(s, d, "documents")
         .select(org.apache.spark.sql.functions.col("doc_id"),
           org.apache.spark.sql.functions.col("text"))
       val idx = graft.operators.Dedup.minhashIndex(docs, "doc_id", "text",
         k = 16, nBands = 4)
-      idx.bands.write.mode("overwrite").parquet(s"$out/bands")
-      idx.sets.write.mode("overwrite").parquet(s"$out/sets")
+      Stores.minhash(idx, out)
       s.read.parquet(s"$out/bands").createOrReplaceTempView("del_mh_bands")
       s.read.parquet(s"$out/sets").createOrReplaceTempView("del_mh_sets")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW del_mh_bands_p AS
@@ -2078,21 +1872,12 @@ object EngineQueries {
       // takedown from SQL: the stores are plain tables, so the purge is
       // a plain anti-predicate VIEW over the codes read-back — no new
       // machinery, the TVF serves the purged view unchanged
-      val out = "target/gate_sink/ann_index_delete_sql"
+      val out = Stores.dir("ann_index_delete_sql")
       val emb = Tables.load(s, d, "embeddings")
-      val sim = graft.operators.Similarity
-      val cents = sim.collectCentroids(emb, "vec_id", "embedding", 8)
-      val cbs = sim.pqCodebooks(emb, "vec_id", "embedding",
-        m = 4, subDim = 16, nCodes = 8)
-      // three independent sinks (cents/cbs already driver-side) —
-      // overlap them (guide §2.6)
-      graft.operators.Par.jobs(
-        () => sim.centroidsToDf(s, cents)
-          .write.mode("overwrite").parquet(s"$out/cells"),
-        () => sim.codebooksToDf(s, cbs)
-          .write.mode("overwrite").parquet(s"$out/codebooks"),
-        () => sim.ivfPqEncode(emb, "vec_id", "embedding", cents, cbs, 16)
-          .write.mode("overwrite").parquet(s"$out/codes"))
+      val cents = Stores.seedCells(emb)
+      val cbs = Stores.codebooks(emb)
+      Stores.ivfPq(s, cents, cbs, out,
+        Stores.ivfPqCodes(emb, cents, cbs))
       s.read.parquet(s"$out/cells").createOrReplaceTempView("del_ann_cells")
       s.read.parquet(s"$out/codebooks").createOrReplaceTempView("del_ann_cbs")
       s.read.parquet(s"$out/codes").createOrReplaceTempView("del_ann_codes")
@@ -2105,7 +1890,6 @@ object EngineQueries {
     }),
     "e_sql_ann_compact" -> ((s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.functions.{broadcast, max}
       Tables.registerAll(s, d)
       val e = new Engine(s)
       // physical compaction from SQL: store prep in Scala (the
@@ -2113,31 +1897,15 @@ object EngineQueries {
       // graft_store_compact (deferred rewrite) → unchanged stored
       // serving over the compacted view. Same fixture as
       // llm_ann_index_compact ⇒ the delete oracle gates it
-      val out = "target/gate_sink/ann_index_compact_sql"
+      val out = Stores.dir("ann_index_compact_sql")
       val emb = Tables.load(s, d, "embeddings")
-      val sim = graft.operators.Similarity
-      val cents = sim.collectCentroids(emb, "vec_id", "embedding", 8)
-      val cbs = sim.pqCodebooks(emb, "vec_id", "embedding",
-        m = 4, subDim = 16, nCodes = 8)
-      val mx = emb.agg(max($"vec_id").as("m"))
-      val a = emb.crossJoin(broadcast(mx)).filter($"vec_id" <= $"m" - 100)
-        .select($"vec_id", $"embedding")
-      val b = emb.crossJoin(broadcast(mx)).filter($"vec_id" > $"m" - 100)
-        .select($"vec_id", $"embedding")
-      // cells, codebooks and the codes chain are three independent
-      // sinks (cents/cbs are already driver-side) — overlap them
-      // (guide §2.6; overwrite→append order preserved within codes)
-      graft.operators.Par.jobs(
-        () => sim.centroidsToDf(s, cents)
-          .write.mode("overwrite").parquet(s"$out/cells"),
-        () => sim.codebooksToDf(s, cbs)
-          .write.mode("overwrite").parquet(s"$out/codebooks"),
-        () => {
-          sim.ivfPqEncode(a, "vec_id", "embedding", cents, cbs, 16)
-            .write.mode("overwrite").partitionBy("cell").parquet(s"$out/codes")
-          sim.ivfPqEncode(b, "vec_id", "embedding", cents, cbs, 16)
-            .write.mode("append").partitionBy("cell").parquet(s"$out/codes")
-        })
+      val cents = Stores.seedCells(emb)
+      val cbs = Stores.codebooks(emb)
+      val gen = Stores.split(emb, "vec_id")
+      val a = gen.older(100).select($"vec_id", $"embedding")
+      val b = gen.newer(100).select($"vec_id", $"embedding")
+      Stores.ivfPqByCell(s, cents, cbs, out,
+        Stores.ivfPqCodes(a, cents, cbs), Stores.ivfPqCodes(b, cents, cbs))
       s.read.parquet(s"$out/cells").createOrReplaceTempView("cmp_ann_cells")
       s.read.parquet(s"$out/codebooks").createOrReplaceTempView("cmp_ann_cbs")
       s.read.parquet(s"$out/codes").createOrReplaceTempView("cmp_ann_codes")
@@ -2203,17 +1971,9 @@ object EngineQueries {
       val e = new Engine(s)
       // bucket-partitioned stored serving from SQL: store prep in
       // Scala (the e_sql_ann convention), the pruned TVF on top
-      val out = "target/gate_sink/bm25_index_pruned_sql"
+      val out = Stores.dir("bm25_index_pruned_sql")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val ta = graft.operators.TextAnalysis
-      val ix = graft.operators.Reuse.Local(
-        ta.bm25IndexPartitioned(docs, "doc_id", "text", nBuckets = 8))
-      // two independent sinks off the shared checkpoint — overlap (§2.6)
-      graft.operators.Par.jobs(Seq(ix),
-        () => ix.write.mode("overwrite").partitionBy("tbucket")
-          .parquet(s"$out/postings"),
-        () => ta.bm25DocLens(ix, "doc_id")
-          .write.mode("overwrite").parquet(s"$out/doclens"))
+      Stores.bm25ByBucket(out, Seq(Stores.bm25BucketIndex(docs)))
       s.read.parquet(s"$out/postings").createOrReplaceTempView("bm25p_post")
       s.read.parquet(s"$out/doclens").createOrReplaceTempView("bm25p_dl")
       e.query("""SELECT doc_id, bm25
@@ -2265,7 +2025,6 @@ object EngineQueries {
     }),
     "e_sql_bm25_compact" -> ((s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.functions.{broadcast, max}
       Tables.registerAll(s, d)
       val e = new Engine(s)
       // BM25 store compaction from SQL — the e_sql_ann_compact
@@ -2274,28 +2033,12 @@ object EngineQueries {
       // graft_store_compact rewrites (postings + doclens — the generic
       // TVF serves any id-keyed store) → unchanged stored serving over
       // the compacted views. Same fixture ⇒ the delete oracle gates it
-      val out = "target/gate_sink/bm25_index_compact_sql"
+      val out = Stores.dir("bm25_index_compact_sql")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val ta = graft.operators.TextAnalysis
-      val m = docs.agg(max($"doc_id").as("m"))
-      val a = docs.crossJoin(broadcast(m)).filter($"doc_id" <= $"m" - 100)
-        .select($"doc_id", $"text")
-      val b = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 100)
-        .select($"doc_id", $"text")
-      val ia = graft.operators.Reuse.Local(ta.bm25Index(a, "doc_id", "text"))
-      val ib = graft.operators.Reuse.Local(ta.bm25Index(b, "doc_id", "text"))
-      // overlap the two per-path lifecycle chains (guide §2.6)
-      graft.operators.Par.jobs(Seq(ia, ib),
-        () => {
-          ia.write.mode("overwrite").parquet(s"$out/postings")
-          ib.write.mode("append").parquet(s"$out/postings")
-        },
-        () => {
-          ta.bm25DocLens(ia, "doc_id")
-            .write.mode("overwrite").parquet(s"$out/doclens")
-          ta.bm25DocLens(ib, "doc_id")
-            .write.mode("append").parquet(s"$out/doclens")
-        })
+      val gen = Stores.split(docs, "doc_id")
+      val a = gen.older(100).select($"doc_id", $"text")
+      val b = gen.newer(100).select($"doc_id", $"text")
+      Stores.bm25(out, Seq(a, b).map(Stores.bm25Index))
       s.read.parquet(s"$out/postings").createOrReplaceTempView("bm25c_post")
       s.read.parquet(s"$out/doclens").createOrReplaceTempView("bm25c_dl")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW bm25c_tomb AS
@@ -2312,7 +2055,6 @@ object EngineQueries {
     }),
     "e_sql_bm25_selective_compact" -> ((s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.functions.{broadcast, max}
       Tables.registerAll(s, d)
       val e = new Engine(s)
       // partition-SELECTIVE compaction from SQL: the bucket-partitioned
@@ -2320,32 +2062,12 @@ object EngineQueries {
       // fixture) rewritten IN PLACE by the selective TVF — only
       // tombstone-bearing tbucket partitions rewrite — then the pruned
       // serve over the compacted store; the delete oracle gates it
-      val out = "target/gate_sink/bm25_selective_compact_sql"
+      val out = Stores.dir("bm25_selective_compact_sql")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val ta = graft.operators.TextAnalysis
-      val m = docs.agg(max($"doc_id").as("m"))
-      val a = docs.crossJoin(broadcast(m)).filter($"doc_id" <= $"m" - 100)
-        .select($"doc_id", $"text")
-      val b = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 100)
-        .select($"doc_id", $"text")
-      val ia = graft.operators.Reuse.Local(
-        ta.bm25IndexPartitioned(a, "doc_id", "text", nBuckets = 8))
-      val ib = graft.operators.Reuse.Local(
-        ta.bm25IndexPartitioned(b, "doc_id", "text", nBuckets = 8))
-      // overlap the two per-path lifecycle chains (guide §2.6)
-      graft.operators.Par.jobs(Seq(ia, ib),
-        () => {
-          ia.write.mode("overwrite").partitionBy("tbucket")
-            .parquet(s"$out/postings")
-          ib.write.mode("append").partitionBy("tbucket")
-            .parquet(s"$out/postings")
-        },
-        () => {
-          ta.bm25DocLens(ia, "doc_id")
-            .write.mode("overwrite").parquet(s"$out/doclens")
-          ta.bm25DocLens(ib, "doc_id")
-            .write.mode("append").parquet(s"$out/doclens")
-        })
+      val gen = Stores.split(docs, "doc_id")
+      val a = gen.older(100).select($"doc_id", $"text")
+      val b = gen.newer(100).select($"doc_id", $"text")
+      Stores.bm25ByBucket(out, Seq(a, b).map(Stores.bm25BucketIndex))
       s.read.parquet(s"$out/postings").createOrReplaceTempView("bm25sc_post")
       s.read.parquet(s"$out/doclens").createOrReplaceTempView("bm25sc_dl")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW bm25sc_tomb AS
@@ -2363,35 +2085,19 @@ object EngineQueries {
     }),
     "e_sql_ann_selective_compact" -> ((s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.functions.{broadcast, max}
       Tables.registerAll(s, d)
       val e = new Engine(s)
       // selective compaction on the cell-partitioned codes store from
       // SQL (the e_sql_ann_compact fixture, in-place selective rewrite)
-      val out = "target/gate_sink/ann_selective_compact_sql"
+      val out = Stores.dir("ann_selective_compact_sql")
       val emb = Tables.load(s, d, "embeddings")
-      val sim = graft.operators.Similarity
-      val cents = sim.collectCentroids(emb, "vec_id", "embedding", 8)
-      val cbs = sim.pqCodebooks(emb, "vec_id", "embedding",
-        m = 4, subDim = 16, nCodes = 8)
-      val mx = emb.agg(max($"vec_id").as("m"))
-      val a = emb.crossJoin(broadcast(mx)).filter($"vec_id" <= $"m" - 100)
-        .select($"vec_id", $"embedding")
-      val b = emb.crossJoin(broadcast(mx)).filter($"vec_id" > $"m" - 100)
-        .select($"vec_id", $"embedding")
-      // three independent sinks — overlap (guide §2.6; the codes chain
-      // keeps its overwrite→append order)
-      graft.operators.Par.jobs(
-        () => sim.centroidsToDf(s, cents)
-          .write.mode("overwrite").parquet(s"$out/cells"),
-        () => sim.codebooksToDf(s, cbs)
-          .write.mode("overwrite").parquet(s"$out/codebooks"),
-        () => {
-          sim.ivfPqEncode(a, "vec_id", "embedding", cents, cbs, 16)
-            .write.mode("overwrite").partitionBy("cell").parquet(s"$out/codes")
-          sim.ivfPqEncode(b, "vec_id", "embedding", cents, cbs, 16)
-            .write.mode("append").partitionBy("cell").parquet(s"$out/codes")
-        })
+      val cents = Stores.seedCells(emb)
+      val cbs = Stores.codebooks(emb)
+      val gen = Stores.split(emb, "vec_id")
+      val a = gen.older(100).select($"vec_id", $"embedding")
+      val b = gen.newer(100).select($"vec_id", $"embedding")
+      Stores.ivfPqByCell(s, cents, cbs, out,
+        Stores.ivfPqCodes(a, cents, cbs), Stores.ivfPqCodes(b, cents, cbs))
       s.read.parquet(s"$out/cells").createOrReplaceTempView("selann_cells")
       s.read.parquet(s"$out/codebooks").createOrReplaceTempView("selann_cbs")
       s.read.parquet(s"$out/codes").createOrReplaceTempView("selann_codes")
@@ -2415,19 +2121,12 @@ object EngineQueries {
       // fps as a graft_fingerprint view, graft_store_compact rewrite,
       // then the admission probe over the compacted view — clones of
       // PURGED docs admit again, survivors' clones still bounce
-      val out = "target/gate_sink/fingerprint_store_compact_sql"
-      import org.apache.spark.sql.functions.{broadcast, col, max}
+      val out = Stores.dir("fingerprint_store_compact_sql")
+      import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      docs.crossJoin(broadcast(m)).filter(col("doc_id") <= col("m") - 150)
-        .select(graft.operators.TextAnalysis.fingerprint(col("text")).as("fp"))
-        .distinct()
-        .write.mode("overwrite").parquet(s"$out/store")
-      docs.crossJoin(broadcast(m)).filter(col("doc_id") > col("m") - 150)
-        .select(graft.operators.TextAnalysis.fingerprint(col("text")).as("fp"))
-        .distinct()
-        .write.mode("append").parquet(s"$out/store")
+      val gen = Stores.split(docs, "doc_id")
+      Stores.fingerprints(s"$out/store", gen.older(150), gen.newer(150))
       s.read.parquet(s"$out/store").createOrReplaceTempView("fpcmp_store")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW fpcmp_tomb AS
                  SELECT DISTINCT graft_fingerprint(text) AS fp
@@ -2454,25 +2153,11 @@ object EngineQueries {
       // llm_image_compact fixture), doc-id tombstones purged via
       // graft_store_compact, the edited-clone shard probed against the
       // compacted view through the unchanged TVF
-      val out = "target/gate_sink/image_dhash_compact_sql"
-      import org.apache.spark.sql.functions.{broadcast, col, length, max}
+      val out = Stores.dir("image_dhash_compact_sql")
+      import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 300 && length(col("text")) >= 400)
-        .select(col("doc_id"), col("text"))
-      val genA = slice.crossJoin(broadcast(m))
-        .filter(col("doc_id") <= col("m") - 150)
-        .select(col("doc_id"), col("text"))
-      val genB = slice.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 150)
-        .select(col("doc_id"), col("text"))
-      val mm = graft.operators.Multimodal
-      mm.dHash(mm.asMedia(genA, "doc_id", "text"))
-        .write.mode("overwrite").parquet(s"$out/store")
-      mm.dHash(mm.asMedia(genB, "doc_id", "text"))
-        .write.mode("append").parquet(s"$out/store")
+      Stores.dHash(s"$out/store", Stores.media(docs).gens: _*)
       s.read.parquet(s"$out/store").createOrReplaceTempView("imgcmp_store")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW imgcmp_tomb AS
                  SELECT doc_id FROM imgcmp_store WHERE doc_id % 5 = 1""")
@@ -2516,21 +2201,12 @@ object EngineQueries {
     "e_sql_knn_join_stored" -> ((s, d) => {
       Tables.registerAll(s, d)
       val e = new Engine(s)
-      val out = "target/gate_sink/knn_stored_sql"
+      val out = Stores.dir("knn_stored_sql")
       val emb = Tables.load(s, d, "embeddings")
-      val sim = graft.operators.Similarity
-      val cents = sim.collectCentroids(emb, "vec_id", "embedding", 8)
-      val cbs = sim.pqCodebooks(emb, "vec_id", "embedding",
-        m = 4, subDim = 16, nCodes = 8)
-      // three independent sinks (cents/cbs already driver-side) —
-      // overlap them (guide §2.6)
-      graft.operators.Par.jobs(
-        () => sim.centroidsToDf(s, cents)
-          .write.mode("overwrite").parquet(s"$out/cells"),
-        () => sim.codebooksToDf(s, cbs)
-          .write.mode("overwrite").parquet(s"$out/codebooks"),
-        () => sim.ivfPqEncode(emb, "vec_id", "embedding", cents, cbs, 16)
-          .write.mode("overwrite").parquet(s"$out/codes"))
+      val cents = Stores.seedCells(emb)
+      val cbs = Stores.codebooks(emb)
+      Stores.ivfPq(s, cents, cbs, out,
+        Stores.ivfPqCodes(emb, cents, cbs))
       s.read.parquet(s"$out/cells").createOrReplaceTempView("graft_knn_cells")
       s.read.parquet(s"$out/codebooks").createOrReplaceTempView("graft_knn_cbs")
       s.read.parquet(s"$out/codes").createOrReplaceTempView("graft_knn_codes")
@@ -2554,19 +2230,16 @@ object EngineQueries {
     "e_sql_minhash_append" -> ((s, d) => {
       Tables.registerAll(s, d)
       val e = new Engine(s)
-      val out = "target/gate_sink/minhash_index_append_sql"
-      import org.apache.spark.sql.functions.{broadcast, col, max}
+      val out = Stores.dir("minhash_index_append_sql")
+      import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val a = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") <= col("m") - 150).select(col("doc_id"), col("text"))
-      val b = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 150).select(col("doc_id"), col("text"))
+      val gen = Stores.split(docs, "doc_id")
+      val a = gen.older(150).select(col("doc_id"), col("text"))
+      val b = gen.newer(150).select(col("doc_id"), col("text"))
       val idxA = graft.operators.Dedup.minhashIndex(a, "doc_id", "text",
         k = 16, nBands = 4)
-      idxA.bands.write.mode("overwrite").parquet(s"$out/bands")
-      idxA.sets.write.mode("overwrite").parquet(s"$out/sets")
+      Stores.minhash(idxA, out)
       val delta = graft.operators.Dedup.minhashIndex(b, "doc_id", "text",
         k = 16, nBands = 4)
       delta.bands.write.mode("append").parquet(s"$out/bands")
@@ -2585,21 +2258,12 @@ object EngineQueries {
     "e_sql_knn_join_rerank" -> ((s, d) => {
       Tables.registerAll(s, d)
       val e = new Engine(s)
-      val out = "target/gate_sink/knn_rerank_sql"
+      val out = Stores.dir("knn_rerank_sql")
       val emb = Tables.load(s, d, "embeddings")
-      val sim = graft.operators.Similarity
-      val cents = sim.collectCentroids(emb, "vec_id", "embedding", 8)
-      val cbs = sim.pqCodebooks(emb, "vec_id", "embedding",
-        m = 4, subDim = 16, nCodes = 8)
-      // three independent sinks (cents/cbs already driver-side) —
-      // overlap them (guide §2.6)
-      graft.operators.Par.jobs(
-        () => sim.centroidsToDf(s, cents)
-          .write.mode("overwrite").parquet(s"$out/cells"),
-        () => sim.codebooksToDf(s, cbs)
-          .write.mode("overwrite").parquet(s"$out/codebooks"),
-        () => sim.ivfPqEncode(emb, "vec_id", "embedding", cents, cbs, 16)
-          .write.mode("overwrite").parquet(s"$out/codes"))
+      val cents = Stores.seedCells(emb)
+      val cbs = Stores.codebooks(emb)
+      Stores.ivfPq(s, cents, cbs, out,
+        Stores.ivfPqCodes(emb, cents, cbs))
       s.read.parquet(s"$out/cells").createOrReplaceTempView("graft_rr_cells")
       s.read.parquet(s"$out/codebooks").createOrReplaceTempView("graft_rr_cbs")
       s.read.parquet(s"$out/codes").createOrReplaceTempView("graft_rr_codes")
@@ -2618,30 +2282,18 @@ object EngineQueries {
     "e_sql_ann_append" -> ((s, d) => {
       Tables.registerAll(s, d)
       val e = new Engine(s)
-      val out = "target/gate_sink/ann_index_append_sql"
-      import org.apache.spark.sql.functions.{broadcast, col, max}
+      val out = Stores.dir("ann_index_append_sql")
+      import org.apache.spark.sql.functions.col
       val emb = Tables.load(s, d, "embeddings")
-      val sim = graft.operators.Similarity
-      val m = emb.agg(max(col("vec_id")).as("m"))
-      val a = emb.crossJoin(broadcast(m)).filter(col("vec_id") <= col("m") - 100)
-        .select(col("vec_id"), col("embedding"))
-      val b = emb.crossJoin(broadcast(m)).filter(col("vec_id") > col("m") - 100)
-        .select(col("vec_id"), col("embedding"))
-      val cents = sim.collectCentroids(a, "vec_id", "embedding", 8)
-      val cbs = sim.pqCodebooks(a, "vec_id", "embedding",
-        m = 4, subDim = 16, nCodes = 8)
-      // three independent corpus-build sinks — overlap them (§2.6);
-      // the maintenance append below reads them back, so it follows
-      graft.operators.Par.jobs(
-        () => sim.centroidsToDf(s, cents)
-          .write.mode("overwrite").parquet(s"$out/cells"),
-        () => sim.codebooksToDf(s, cbs)
-          .write.mode("overwrite").parquet(s"$out/codebooks"),
-        () => sim.ivfPqEncode(a, "vec_id", "embedding", cents, cbs, 16)
-          .write.mode("overwrite").parquet(s"$out/codes"))
-      val cents2 = sim.centroidsFromDf(s.read.parquet(s"$out/cells"))
-      val cbs2 = sim.codebooksFromDf(s.read.parquet(s"$out/codebooks"))
-      sim.ivfPqEncode(b, "vec_id", "embedding", cents2, cbs2, 16)
+      val gen = Stores.split(emb, "vec_id")
+      val a = gen.older(100).select(col("vec_id"), col("embedding"))
+      val b = gen.newer(100).select(col("vec_id"), col("embedding"))
+      val cents = Stores.seedCells(a)
+      val cbs = Stores.codebooks(a)
+      Stores.ivfPq(s, cents, cbs, out,
+        Stores.ivfPqCodes(a, cents, cbs))
+      val (cents2, cbs2) = Stores.readIvfPq(s, out)
+      Stores.ivfPqCodes(b, cents2, cbs2)
         .write.mode("append").parquet(s"$out/codes")
       s.read.parquet(s"$out/cells").createOrReplaceTempView("graft_apnd_cells")
       s.read.parquet(s"$out/codebooks").createOrReplaceTempView("graft_apnd_cbs")
@@ -2658,20 +2310,12 @@ object EngineQueries {
     "e_sql_ann_partition_prune" -> ((s, d) => {
       Tables.registerAll(s, d)
       val e = new Engine(s)
-      val out = "target/gate_sink/ann_index_part_sql"
+      val out = Stores.dir("ann_index_part_sql")
       val emb = Tables.load(s, d, "embeddings")
-      val sim = graft.operators.Similarity
-      val cents = sim.collectCentroids(emb, "vec_id", "embedding", 8)
-      val cbs = sim.pqCodebooks(emb, "vec_id", "embedding",
-        m = 4, subDim = 16, nCodes = 8)
-      // three independent sinks — overlap them (guide §2.6)
-      graft.operators.Par.jobs(
-        () => sim.centroidsToDf(s, cents)
-          .write.mode("overwrite").parquet(s"$out/cells"),
-        () => sim.codebooksToDf(s, cbs)
-          .write.mode("overwrite").parquet(s"$out/codebooks"),
-        () => sim.ivfPqEncode(emb, "vec_id", "embedding", cents, cbs, 16)
-          .write.mode("overwrite").partitionBy("cell").parquet(s"$out/codes"))
+      val cents = Stores.seedCells(emb)
+      val cbs = Stores.codebooks(emb)
+      Stores.ivfPqByCell(s, cents, cbs, out,
+        Stores.ivfPqCodes(emb, cents, cbs))
       s.read.parquet(s"$out/cells").createOrReplaceTempView("graft_part_cells")
       s.read.parquet(s"$out/codebooks").createOrReplaceTempView("graft_part_cbs")
       s.read.parquet(s"$out/codes").createOrReplaceTempView("graft_part_codes")
@@ -2686,21 +2330,13 @@ object EngineQueries {
     "e_sql_knn_join_pruned" -> ((s, d) => {
       Tables.registerAll(s, d)
       val e = new Engine(s)
-      val out = "target/gate_sink/knn_stored_part_sql"
+      val out = Stores.dir("knn_stored_part_sql")
       import org.apache.spark.sql.functions.col
       val emb = Tables.load(s, d, "embeddings")
-      val sim = graft.operators.Similarity
-      val cents = sim.collectCentroids(emb, "vec_id", "embedding", 8)
-      val cbs = sim.pqCodebooks(emb, "vec_id", "embedding",
-        m = 4, subDim = 16, nCodes = 8)
-      // three independent sinks — overlap them (guide §2.6)
-      graft.operators.Par.jobs(
-        () => sim.centroidsToDf(s, cents)
-          .write.mode("overwrite").parquet(s"$out/cells"),
-        () => sim.codebooksToDf(s, cbs)
-          .write.mode("overwrite").parquet(s"$out/codebooks"),
-        () => sim.ivfPqEncode(emb, "vec_id", "embedding", cents, cbs, 16)
-          .write.mode("overwrite").partitionBy("cell").parquet(s"$out/codes"))
+      val cents = Stores.seedCells(emb)
+      val cbs = Stores.codebooks(emb)
+      Stores.ivfPqByCell(s, cents, cbs, out,
+        Stores.ivfPqCodes(emb, cents, cbs))
       emb.filter(col("vec_id") < 10).select(col("vec_id"), col("embedding"))
         .createOrReplaceTempView("graft_knnp_queries")
       s.read.parquet(s"$out/cells").createOrReplaceTempView("graft_knnp_cells")
@@ -2719,16 +2355,14 @@ object EngineQueries {
     "e_sql_ann_residual_stored" -> ((s, d) => {
       Tables.registerAll(s, d)
       val e = new Engine(s)
-      val out = "target/gate_sink/ann_residual_store_sql"
+      val out = Stores.dir("ann_residual_store_sql")
       val emb = Tables.load(s, d, "embeddings")
       val sim = graft.operators.Similarity
-      val cents = sim.collectCentroids(emb, "vec_id", "embedding", 8)
+      val cents = Stores.seedCells(emb)
       val cbs = sim.pqCodebooksResidual(emb, "vec_id", "embedding", cents,
         m = 4, subDim = 16, nCodes = 8)
-      sim.centroidsToDf(s, cents).write.mode("overwrite").parquet(s"$out/cells")
-      sim.codebooksToDf(s, cbs).write.mode("overwrite").parquet(s"$out/codebooks")
-      sim.ivfPqEncodeResidual(emb, "vec_id", "embedding", cents, cbs, 16)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$out/codes")
+      Stores.ivfPqByCell(s, cents, cbs, out,
+        sim.ivfPqEncodeResidual(emb, "vec_id", "embedding", cents, cbs, 16))
       s.read.parquet(s"$out/cells").createOrReplaceTempView("graft_res_cells")
       s.read.parquet(s"$out/codebooks").createOrReplaceTempView("graft_res_cbs")
       s.read.parquet(s"$out/codes").createOrReplaceTempView("graft_res_codes")
@@ -2799,16 +2433,10 @@ object EngineQueries {
     "e_sql_lr_score_stored" -> ((s, d) => {
       Tables.registerAll(s, d)
       val e = new Engine(s)
-      val out = "target/gate_sink/quality_lr_sql"
-      import org.apache.spark.sql.functions.{col, upper}
+      val out = Stores.dir("quality_lr_sql")
+      import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents").select(col("doc_id"), col("text"))
-      val pos = docs.filter(col("doc_id") % 2 === 0)
-      val neg = docs.filter(col("doc_id") % 2 === 1)
-        .select(col("doc_id"), upper(col("text")).as("text"))
-      val w = graft.operators.Classifier.lrTrain(pos, neg, "doc_id", "text",
-        buckets = 64, iters = 2, lr = 0.5)
-      graft.operators.Classifier.weightsToDf(s, w)
-        .write.mode("overwrite").parquet(out)
+      Stores.lrWeights(s, docs, out)
       s.read.parquet(out).createOrReplaceTempView("graft_lr_weights")
       e.query("""SELECT * FROM graft_lr_score('graft_lr_weights', 'documents',
                                               'doc_id', 'text', 64)""")
@@ -2819,16 +2447,10 @@ object EngineQueries {
     "e_sql_lr_eval" -> ((s, d) => {
       Tables.registerAll(s, d)
       val e = new Engine(s)
-      val out = "target/gate_sink/quality_lr_eval_sql"
-      import org.apache.spark.sql.functions.{col, upper}
+      val out = Stores.dir("quality_lr_eval_sql")
+      import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents").select(col("doc_id"), col("text"))
-      val pos = docs.filter(col("doc_id") % 2 === 0)
-      val neg = docs.filter(col("doc_id") % 2 === 1)
-        .select(col("doc_id"), upper(col("text")).as("text"))
-      val w = graft.operators.Classifier.lrTrain(pos, neg, "doc_id", "text",
-        buckets = 64, iters = 2, lr = 0.5)
-      graft.operators.Classifier.weightsToDf(s, w)
-        .write.mode("overwrite").parquet(out)
+      Stores.lrWeights(s, docs, out)
       s.read.parquet(out).createOrReplaceTempView("graft_lr_eval_w")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_lre_pos AS
                  SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0""")
@@ -2843,17 +2465,11 @@ object EngineQueries {
       val e = new Engine(s)
       // the reliability table from SQL: weights trained + stored in
       // Scala (the write side), labeled views, the calibration TVF
-      val out = "target/gate_sink/quality_lr_calibration_sql"
-      import org.apache.spark.sql.functions.{col, upper}
+      val out = Stores.dir("quality_lr_calibration_sql")
+      import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val pos = docs.filter(col("doc_id") % 2 === 0)
-      val neg = docs.filter(col("doc_id") % 2 === 1)
-        .select(col("doc_id"), upper(col("text")).as("text"))
-      val w = graft.operators.Classifier.lrTrain(pos, neg, "doc_id",
-        "text", buckets = 64, iters = 2, lr = 0.5)
-      graft.operators.Classifier.weightsToDf(s, w)
-        .write.mode("overwrite").parquet(out)
+      Stores.lrWeights(s, docs, out)
       s.read.parquet(out).createOrReplaceTempView("graft_lrc_w")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_lrc_pos AS
                  SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0""")
@@ -3076,7 +2692,7 @@ object EngineQueries {
       // side — the stored-artifact twin convention), the whole prep
       // chain — strip, normalize, gopher, dedup, PACK — in pure TVF
       // composition
-      val out = "target/gate_sink/pipeline14_warc_sql"
+      val out = Stores.dir("pipeline14_warc_sql")
       import org.apache.spark.sql.functions.{col, concat, lit}
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))

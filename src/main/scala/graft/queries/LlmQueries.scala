@@ -480,9 +480,8 @@ object LlmQueries {
   private def nearDupTail(s: SparkSession, d: String, n: Int): DataFrame = {
     import s.implicits._
     val docs = Tables.load(s, d, "documents")
-    val m = docs.agg(max($"doc_id").as("m"))
-    docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - n)
-      .select($"doc_id", $"text")
+    val gen = Stores.split(docs, "doc_id")
+    gen.newer(n).select($"doc_id", $"text")
   }
 
   /** DuckDB CTEs `t` (tail-slice tokens) and `g` (distinct trigrams) —
@@ -576,12 +575,8 @@ object LlmQueries {
       // to a comma string for the engine-portable compare, the
       // llm_multimodal_frames array convention; the cast to
       // array<string> is a native Cast, no per-element lambda)
-      val out = "target/gate_sink/bpe_merges_chunk"
-      s.createDataFrame(Seq(
-          (0, "t", "h"), (1, "th", "e"), (2, "i", "n"), (3, "a", "n"),
-          (4, "an", "d"), (5, "e", "r"), (6, "o", "n"), (7, "r", "e")))
-        .toDF("rank", "left", "right")
-        .write.mode("overwrite").parquet(out)
+      val out = Stores.dir("bpe_merges_chunk")
+      Stores.bpeMerges(s, out)
       TextAnalysis.chunkBpe(Tables.load(s, d, "documents"), "doc_id",
           "text", s.read.parquet(out), chunkTokens = 64, overlap = 16)
         .select($"doc_id", $"start_tok", $"n_tokens",
@@ -688,11 +683,9 @@ object LlmQueries {
       // (where the planted near-dup tail lives, so overlaps exist),
       // corpus = everything else; flag any shared 13-gram
       val docs = Tables.load(s, d, "documents")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val ev = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 100)
-        .select($"doc_id", $"text")
-      val corpus = docs.crossJoin(broadcast(m)).filter($"doc_id" <= $"m" - 100)
-        .select($"doc_id", $"text")
+      val gen = Stores.split(docs, "doc_id")
+      val ev = gen.newer(100).select($"doc_id", $"text")
+      val corpus = gen.older(100).select($"doc_id", $"text")
       Dedup.decontaminate(corpus, ev, "doc_id", "text", n = 13)
     }),
     "llm_decontaminate_bloom" -> ((s, d) => {
@@ -700,11 +693,9 @@ object LlmQueries {
       // the huge-eval-set scale path: bloom prefilter + exact confirm
       // join — same fixture, same oracle, IDENTICAL output by contract
       val docs = Tables.load(s, d, "documents")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val ev = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 100)
-        .select($"doc_id", $"text")
-      val corpus = docs.crossJoin(broadcast(m)).filter($"doc_id" <= $"m" - 100)
-        .select($"doc_id", $"text")
+      val gen = Stores.split(docs, "doc_id")
+      val ev = gen.newer(100).select($"doc_id", $"text")
+      val corpus = gen.older(100).select($"doc_id", $"text")
       // sketch sized to the ~100-doc eval set (the 8 MB production
       // default would only bloat this plan's inlined literal)
       Dedup.decontaminateBloom(corpus, ev, "doc_id", "text", n = 13,
@@ -717,21 +708,14 @@ object LlmQueries {
       // parquet, reconstruct from the files, probe the corpus — same
       // fixture and oracle as llm_decontaminate_bloom, so any drift
       // through the storage round-trip hash-mismatches
-      val out = "target/gate_sink/decontam_index"
+      val out = Stores.dir("decontam_index")
       val docs = Tables.load(s, d, "documents")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val ev = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 100)
-        .select($"doc_id", $"text")
-      val corpus = docs.crossJoin(broadcast(m)).filter($"doc_id" <= $"m" - 100)
-        .select($"doc_id", $"text")
-      val idx = Dedup.decontamIndex(ev, "doc_id", "text", n = 13,
-        expectedItems = 1L << 16, numBits = 1L << 20)
-      // two independent sinks off the shared index — overlap (§2.6)
-      graft.operators.Par.jobs(
-        () => idx.sketch.write.mode("overwrite").parquet(s"$out/sketch"),
-        () => idx.hashes.write.mode("overwrite").parquet(s"$out/hashes"))
-      val stored = Dedup.DecontamIndex(
-        s.read.parquet(s"$out/sketch"), s.read.parquet(s"$out/hashes"))
+      val gen = Stores.split(docs, "doc_id")
+      val ev = gen.newer(100).select($"doc_id", $"text")
+      val corpus = gen.older(100).select($"doc_id", $"text")
+      val idx = Stores.decontamIndex(ev)
+      Stores.decontam(idx, out)
+      val stored = Stores.readDecontam(s, out)
       Dedup.decontaminateStored(corpus, stored, "doc_id", "text")
     }),
     "llm_contamination" -> ((s, d) => {
@@ -742,11 +726,9 @@ object LlmQueries {
       // flagged at 20% — the PaLM/GPT-4-style threshold that separates
       // quoting one benchmark question from verbatim inclusion
       val docs = Tables.load(s, d, "documents")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val ev = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 100)
-        .select($"doc_id", $"text")
-      val corpus = docs.crossJoin(broadcast(m)).filter($"doc_id" <= $"m" - 100)
-        .select($"doc_id", $"text")
+      val gen = Stores.split(docs, "doc_id")
+      val ev = gen.newer(100).select($"doc_id", $"text")
+      val corpus = gen.older(100).select($"doc_id", $"text")
       Dedup.contaminationFraction(corpus, ev, "doc_id", "text",
         n = 13, minFrac = 0.2)
     }),
@@ -764,12 +746,8 @@ object LlmQueries {
       // counter, so n_toks is the trained tokenizer's count while the
       // hash order / hierarchy / boundary-doc contract are unchanged.
       // Oracle composes the recursive apply CTE into the budget window
-      val out = "target/gate_sink/bpe_merges_budget"
-      s.createDataFrame(Seq(
-          (0, "t", "h"), (1, "th", "e"), (2, "i", "n"), (3, "a", "n"),
-          (4, "an", "d"), (5, "e", "r"), (6, "o", "n"), (7, "r", "e")))
-        .toDF("rank", "left", "right")
-        .write.mode("overwrite").parquet(out)
+      val out = Stores.dir("bpe_merges_budget")
+      Stores.bpeMerges(s, out)
       graft.operators.Sampling.tokenBudget(
         Tables.load(s, d, "documents"), "doc_id", "text",
         budget = 10000L, numBuckets = 64,
@@ -805,12 +783,8 @@ object LlmQueries {
       // trained tokenizer's stream while the hierarchical prefix sum,
       // id order, and straddle convention are unchanged. Oracle
       // composes the recursive apply CTE into the pack window
-      val out = "target/gate_sink/bpe_merges_pack"
-      s.createDataFrame(Seq(
-          (0, "t", "h"), (1, "th", "e"), (2, "i", "n"), (3, "a", "n"),
-          (4, "an", "d"), (5, "e", "r"), (6, "o", "n"), (7, "r", "e")))
-        .toDF("rank", "left", "right")
-        .write.mode("overwrite").parquet(out)
+      val out = Stores.dir("bpe_merges_pack")
+      Stores.bpeMerges(s, out)
       TextAnalysis.packOffsets(Tables.load(s, d, "documents"),
         "doc_id", "text", seqLen = 512, docsPerBucket = 64,
         tokenCounter = TextAnalysis.bpeCounter(s.read.parquet(out)))
@@ -839,10 +813,9 @@ object LlmQueries {
       // last 300 ids — where the generator plants near-dup clusters —
       // so the query exercises real pairs at every scale factor
       val docs = Tables.load(s, d, "documents")
-      val m = docs.agg(max($"doc_id").as("m"))
+      val gen = Stores.split(docs, "doc_id")
       Dedup.ngramJaccardPairs(
-        docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 300)
-          .select($"doc_id", $"text"),
+        gen.newer(300).select($"doc_id", $"text"),
         "doc_id", "text", n = 3, threshold = 0.3)
     }),
     "llm_simhash" -> ((s, d) => {
@@ -901,8 +874,7 @@ object LlmQueries {
       // scoring is a codes-only projection + TakeOrdered
       val emb = Tables.load(s, d, "embeddings")
       Similarity.pqTopK(emb, "vec_id", "embedding",
-        Similarity.pqCodebooks(emb, "vec_id", "embedding",
-          m = 4, subDim = 16, nCodes = 8),
+        Stores.codebooks(emb),
         subDim = 16, queryId = 0, k = 10)
     }),
     "llm_ann_ivf_pq" -> ((s, d) => {
@@ -911,8 +883,7 @@ object LlmQueries {
       val emb = Tables.load(s, d, "embeddings")
       Similarity.ivfPqTopK(emb, "vec_id", "embedding",
         Similarity.collectCentroids(emb, "vec_id", "embedding", nCells = 8),
-        Similarity.pqCodebooks(emb, "vec_id", "embedding",
-          m = 4, subDim = 16, nCodes = 8),
+        Stores.codebooks(emb),
         subDim = 16, queryId = 0, k = 10, probes = 2)
     }),
     "llm_ann_ivf_pq_residual" -> ((s, d) => {
@@ -923,7 +894,7 @@ object LlmQueries {
       // budget as llm_ann_ivf_pq — LlmOpsSpec pins recall ≥ the
       // no-residual variant
       val emb = Tables.load(s, d, "embeddings")
-      val cents = Similarity.collectCentroids(emb, "vec_id", "embedding", 8)
+      val cents = Stores.seedCells(emb)
       Similarity.ivfPqTopKResidual(emb, "vec_id", "embedding", cents,
         Similarity.pqCodebooksResidual(emb, "vec_id", "embedding", cents,
           m = 4, subDim = 16, nCodes = 8),
@@ -935,13 +906,13 @@ object LlmQueries {
       // takedown all apply unchanged); identical output to the
       // in-memory residual path — same oracle, so artifact drift
       // hash-mismatches
-      val out = "target/gate_sink/ann_residual_store"
+      val out = Stores.dir("ann_residual_store")
       val emb = Tables.load(s, d, "embeddings")
-      val cents = Similarity.collectCentroids(emb, "vec_id", "embedding", 8)
+      val cents = Stores.seedCells(emb)
       val cbs = Similarity.pqCodebooksResidual(emb, "vec_id", "embedding",
         cents, m = 4, subDim = 16, nCodes = 8)
-      Similarity.ivfPqEncodeResidual(emb, "vec_id", "embedding", cents, cbs, 16)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$out/codes")
+      Stores.putByCell(s"$out/codes",
+        Similarity.ivfPqEncodeResidual(emb, "vec_id", "embedding", cents, cbs, 16))
       Similarity.ivfPqTopKResidualStored(s.read.parquet(s"$out/codes"),
         "vec_id", cents, cbs, subDim = 16,
         Similarity.queryVecOf(emb, "vec_id", "embedding", 0),
@@ -955,22 +926,13 @@ object LlmQueries {
       // oracle), so any artifact drift hash-mismatches. After the one
       // encode pass the vectors are never read again; the query vector
       // arrives explicitly (the serving coordinator holds it)
-      val out = "target/gate_sink/ann_index"
+      val out = Stores.dir("ann_index")
       val emb = Tables.load(s, d, "embeddings")
-      val cents = Similarity.collectCentroids(emb, "vec_id", "embedding", 8)
-      val cbs = Similarity.pqCodebooks(emb, "vec_id", "embedding",
-        m = 4, subDim = 16, nCodes = 8)
-      // three independent sinks (cents/cbs already driver-side) —
-      // overlap them (guide §2.6)
-      graft.operators.Par.jobs(
-        () => Similarity.centroidsToDf(s, cents)
-          .write.mode("overwrite").parquet(s"$out/cells"),
-        () => Similarity.codebooksToDf(s, cbs)
-          .write.mode("overwrite").parquet(s"$out/codebooks"),
-        () => Similarity.ivfPqEncode(emb, "vec_id", "embedding", cents, cbs, 16)
-          .write.mode("overwrite").parquet(s"$out/codes"))
-      val cents2 = Similarity.centroidsFromDf(s.read.parquet(s"$out/cells"))
-      val cbs2 = Similarity.codebooksFromDf(s.read.parquet(s"$out/codebooks"))
+      val cents = Stores.seedCells(emb)
+      val cbs = Stores.codebooks(emb)
+      Stores.ivfPq(s, cents, cbs, out,
+        Stores.ivfPqCodes(emb, cents, cbs))
+      val (cents2, cbs2) = Stores.readIvfPq(s, out)
       Similarity.ivfPqTopKStored(s.read.parquet(s"$out/codes"), "vec_id",
         cents2, cbs2, subDim = 16,
         Similarity.queryVecOf(emb, "vec_id", "embedding", 0),
@@ -985,13 +947,11 @@ object LlmQueries {
       // Same artifacts and parameters as llm_ann_index_roundtrip ⇒ the
       // same llm_ann_ivf_pq oracle — a pruning bug that drops or adds
       // cells hash-mismatches
-      val out = "target/gate_sink/ann_index_part"
+      val out = Stores.dir("ann_index_part")
       val emb = Tables.load(s, d, "embeddings")
-      val cents = Similarity.collectCentroids(emb, "vec_id", "embedding", 8)
-      val cbs = Similarity.pqCodebooks(emb, "vec_id", "embedding",
-        m = 4, subDim = 16, nCodes = 8)
-      Similarity.ivfPqEncode(emb, "vec_id", "embedding", cents, cbs, 16)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$out/codes")
+      val cents = Stores.seedCells(emb)
+      val cbs = Stores.codebooks(emb)
+      Stores.putByCell(s"$out/codes", Stores.ivfPqCodes(emb, cents, cbs))
       Similarity.ivfPqTopKStored(s.read.parquet(s"$out/codes"), "vec_id",
         cents, cbs, subDim = 16,
         Similarity.queryVecOf(emb, "vec_id", "embedding", 0),
@@ -1009,10 +969,9 @@ object LlmQueries {
       // the SQ path THROUGH STORAGE: int8-valued codes + one double
       // scale per vector written to parquet, read back, served — same
       // oracle as the in-memory form, so storage drift hash-mismatches
-      val out = "target/gate_sink/sq_codes"
+      val out = Stores.dir("sq_codes")
       val emb = Tables.load(s, d, "embeddings")
-      Similarity.sqEncode(emb, "vec_id", "embedding")
-        .write.mode("overwrite").parquet(out)
+      Stores.sq(out, emb)
       Similarity.sqTopKStored(s.read.parquet(out), "vec_id",
         Similarity.queryVecOf(emb, "vec_id", "embedding", 0),
         k = 10, excludeId = Some(0L))
@@ -1023,7 +982,7 @@ object LlmQueries {
       // stored path
       val emb = Tables.load(s, d, "embeddings")
       Similarity.ivfSqTopK(emb, "vec_id", "embedding",
-        Similarity.collectCentroids(emb, "vec_id", "embedding", 8),
+        Stores.seedCells(emb),
         queryId = 0, k = 10, probes = 2)
     }),
     "llm_ann_ivf_sq_stored" -> ((s, d) => {
@@ -1031,11 +990,10 @@ object LlmQueries {
       // serving probes with the driver-literal cell filter — static
       // partition pruning (PlanSpec pins PartitionFilters); same oracle
       // as the in-memory form
-      val out = "target/gate_sink/ivf_sq_codes"
+      val out = Stores.dir("ivf_sq_codes")
       val emb = Tables.load(s, d, "embeddings")
-      val cents = Similarity.collectCentroids(emb, "vec_id", "embedding", 8)
-      Similarity.ivfSqEncode(emb, "vec_id", "embedding", cents)
-        .write.mode("overwrite").partitionBy("cell").parquet(out)
+      val cents = Stores.seedCells(emb)
+      Stores.ivfSqCodes(out, emb, cents)
       Similarity.ivfSqTopKStored(s.read.parquet(out), "vec_id", cents,
         Similarity.queryVecOf(emb, "vec_id", "embedding", 0),
         k = 10, probes = 2, excludeId = Some(0L))
@@ -1046,17 +1004,12 @@ object LlmQueries {
       // append (the fp/dHash symmetry, no artifacts to drift) — gen A
       // written, gen B's codes parquet-appended, the union served; same
       // oracle as llm_ann_sq, so a lost append hash-mismatches
-      val out = "target/gate_sink/sq_codes_append"
+      val out = Stores.dir("sq_codes_append")
       val emb = Tables.load(s, d, "embeddings")
-      val m = emb.agg(max($"vec_id").as("m"))
-      val a = emb.crossJoin(broadcast(m)).filter($"vec_id" <= $"m" - 100)
-        .select($"vec_id", $"embedding")
-      val b = emb.crossJoin(broadcast(m)).filter($"vec_id" > $"m" - 100)
-        .select($"vec_id", $"embedding")
-      Similarity.sqEncode(a, "vec_id", "embedding")
-        .write.mode("overwrite").parquet(out)
-      Similarity.sqEncode(b, "vec_id", "embedding")
-        .write.mode("append").parquet(out)
+      val gen = Stores.split(emb, "vec_id")
+      val a = gen.older(100).select($"vec_id", $"embedding")
+      val b = gen.newer(100).select($"vec_id", $"embedding")
+      Stores.sq(out, a, b)
       Similarity.sqTopKStored(s.read.parquet(out), "vec_id",
         Similarity.queryVecOf(emb, "vec_id", "embedding", 0),
         k = 10, excludeId = Some(0L))
@@ -1066,12 +1019,10 @@ object LlmQueries {
       // parquet, read it back, score with the query LUTs — the vectors
       // are never touched after the encode (same oracle as llm_ann_pq,
       // so storage drift hash-mismatches)
-      val out = "target/gate_sink/pq_codes"
+      val out = Stores.dir("pq_codes")
       val emb = Tables.load(s, d, "embeddings")
-      val cb = Similarity.pqCodebooks(emb, "vec_id", "embedding",
-        m = 4, subDim = 16, nCodes = 8)
-      Similarity.pqEncode(emb, "vec_id", "embedding", cb, subDim = 16)
-        .write.mode("overwrite").parquet(out)
+      val cb = Stores.codebooks(emb)
+      Stores.put(out, Similarity.pqEncode(emb, "vec_id", "embedding", cb, subDim = 16))
       Similarity.pqTopKStored(s.read.parquet(out), "vec_id", cb,
         subDim = 16,
         Similarity.queryVecOf(emb, "vec_id", "embedding", 0),
@@ -1142,18 +1093,9 @@ object LlmQueries {
       // sidecar written once (index once, query forever — serving
       // never re-tokenizes the corpus), read back, served. Same oracle
       // as llm_bm25, so storage drift hash-mismatches
-      val out = "target/gate_sink/bm25_index"
+      val out = Stores.dir("bm25_index")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      // one tokenize+count pass feeds BOTH sinks (the llm_bm25_append
-      // reuse recipe), and the two independent writes overlap
-      // (guide §2.6) instead of the doclens write re-reading the
-      // just-written postings
-      val ix = graft.operators.Reuse.Local(
-        TextAnalysis.bm25Index(docs, "doc_id", "text"))
-      graft.operators.Par.jobs(Seq(ix),
-        () => ix.write.mode("overwrite").parquet(s"$out/postings"),
-        () => TextAnalysis.bm25DocLens(ix, "doc_id")
-          .write.mode("overwrite").parquet(s"$out/doclens"))
+      Stores.bm25(out, Seq(Stores.bm25Index(docs)))
       TextAnalysis.bm25TopKStored(s.read.parquet(s"$out/postings"),
         s.read.parquet(s"$out/doclens"), "doc_id",
         queryTerms = Seq("hash", "join", "vector"), k = 25)
@@ -1165,15 +1107,9 @@ object LlmQueries {
       // matches nothing (absent from the output, not zero-scored);
       // the batch's distinct terms become a driver-literal pushed In
       // on the postings scan (the probe-cell-union recipe)
-      val out = "target/gate_sink/bm25_index_join"
+      val out = Stores.dir("bm25_index_join")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      // one index pass, two overlapped sinks (the llm_bm25_stored shape)
-      val ix = graft.operators.Reuse.Local(
-        TextAnalysis.bm25Index(docs, "doc_id", "text"))
-      graft.operators.Par.jobs(Seq(ix),
-        () => ix.write.mode("overwrite").parquet(s"$out/postings"),
-        () => TextAnalysis.bm25DocLens(ix, "doc_id")
-          .write.mode("overwrite").parquet(s"$out/doclens"))
+      Stores.bm25(out, Seq(Stores.bm25Index(docs)))
       val queries = Seq((1, "hash join"), (2, "vector scan slow"),
         (3, "zzzunknown")).toDF("query_id", "qtext")
       TextAnalysis.bm25Join(s.read.parquet(s"$out/postings"),
@@ -1188,34 +1124,12 @@ object LlmQueries {
       // global statistic goes stale): generation A written, generation
       // B's postings + doc lengths parquet-appended, the union served;
       // same oracle as llm_bm25 — a lost append hash-mismatches
-      val out = "target/gate_sink/bm25_index_append"
+      val out = Stores.dir("bm25_index_append")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val a = docs.crossJoin(broadcast(m)).filter($"doc_id" <= $"m" - 100)
-        .select($"doc_id", $"text")
-      val b = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 100)
-        .select($"doc_id", $"text")
-      // each generation's index feeds BOTH the postings write and the
-      // doclens derivation — one tokenize+count pass, not two (the
-      // Dedup.minhashPairs reuse recipe)
-      val ia = graft.operators.Reuse.Local(
-        TextAnalysis.bm25Index(a, "doc_id", "text"))
-      val ib = graft.operators.Reuse.Local(
-        TextAnalysis.bm25Index(b, "doc_id", "text"))
-      // the postings path and the doclens path are independent chains
-      // (overwrite→append order preserved WITHIN each path) — overlap
-      // them (guide §2.6); both read the shared checkpointed ia/ib
-      graft.operators.Par.jobs(Seq(ia, ib),
-        () => {
-          ia.write.mode("overwrite").parquet(s"$out/postings")
-          ib.write.mode("append").parquet(s"$out/postings")
-        },
-        () => {
-          TextAnalysis.bm25DocLens(ia, "doc_id")
-            .write.mode("overwrite").parquet(s"$out/doclens")
-          TextAnalysis.bm25DocLens(ib, "doc_id")
-            .write.mode("append").parquet(s"$out/doclens")
-        })
+      val gen = Stores.split(docs, "doc_id")
+      val a = gen.older(100).select($"doc_id", $"text")
+      val b = gen.newer(100).select($"doc_id", $"text")
+      Stores.bm25(out, Seq(a, b).map(Stores.bm25Index))
       TextAnalysis.bm25TopKStored(s.read.parquet(s"$out/postings"),
         s.read.parquet(s"$out/doclens"), "doc_id",
         queryTerms = Seq("hash", "join", "vector"), k = 25)
@@ -1226,11 +1140,9 @@ object LlmQueries {
       // the last 100 docs, new = the last 100 — the contamination
       // split): smoothed unigram KL both directions, one report row
       val docs = Tables.load(s, d, "documents")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val a = docs.crossJoin(broadcast(m)).filter($"doc_id" <= $"m" - 100)
-        .select($"doc_id", $"text")
-      val b = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 100)
-        .select($"doc_id", $"text")
+      val gen = Stores.split(docs, "doc_id")
+      val a = gen.older(100).select($"doc_id", $"text")
+      val b = gen.newer(100).select($"doc_id", $"text")
       TextAnalysis.unigramKlReport(a, b, "text")
     }),
     "llm_bm25" -> ((s, d) =>
@@ -1250,15 +1162,9 @@ object LlmQueries {
       // docs stop influencing every score component (df, N, avgdl), not
       // just the result list. Oracle: the llm_bm25 algebra over the
       // remaining corpus.
-      val out = "target/gate_sink/bm25_index_delete"
+      val out = Stores.dir("bm25_index_delete")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val ix = graft.operators.Reuse.Local(
-        TextAnalysis.bm25Index(docs, "doc_id", "text"))
-      // two independent sinks off the shared checkpoint — overlap (§2.6)
-      graft.operators.Par.jobs(Seq(ix),
-        () => ix.write.mode("overwrite").parquet(s"$out/postings"),
-        () => TextAnalysis.bm25DocLens(ix, "doc_id")
-          .write.mode("overwrite").parquet(s"$out/doclens"))
+      Stores.bm25(out, Seq(Stores.bm25Index(docs)))
       val tomb = docs.select($"doc_id").filter($"doc_id" % 7 === 0)
       TextAnalysis.bm25TopKStored(
         Dedup.storePurge(s.read.parquet(s"$out/postings"), "doc_id", tomb),
@@ -1276,37 +1182,21 @@ object LlmQueries {
       // over the full corpus). A compact that loses a posting,
       // resurrects a tombstoned doc, or drops a doc-length row
       // hash-mismatches.
-      val out = "target/gate_sink/bm25_index_compact"
+      val out = Stores.dir("bm25_index_compact")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val a = docs.crossJoin(broadcast(m)).filter($"doc_id" <= $"m" - 100)
-        .select($"doc_id", $"text")
-      val b = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 100)
-        .select($"doc_id", $"text")
-      val ia = graft.operators.Reuse.Local(
-        TextAnalysis.bm25Index(a, "doc_id", "text"))
-      val ib = graft.operators.Reuse.Local(
-        TextAnalysis.bm25Index(b, "doc_id", "text"))
+      val gen = Stores.split(docs, "doc_id")
+      val a = gen.older(100).select($"doc_id", $"text")
+      val b = gen.newer(100).select($"doc_id", $"text")
       val tomb = docs.select($"doc_id").filter($"doc_id" % 7 === 0)
-      // postings and doclens are independent lifecycle chains (write →
-      // append → compact, order preserved WITHIN each path) — overlap
-      // the two chains end-to-end (guide §2.6)
+      // each path compacts right after its own appends land
       val compacted = new Array[org.apache.spark.sql.DataFrame](2)
-      graft.operators.Par.jobs(Seq(ia, ib),
-        () => {
-          ia.write.mode("overwrite").parquet(s"$out/postings")
-          ib.write.mode("append").parquet(s"$out/postings")
+      Stores.bm25(out, Seq(a, b).map(Stores.bm25Index),
+        postingsThen = () =>
           compacted(0) = Dedup.storeCompact(s.read.parquet(s"$out/postings"),
-            "doc_id", Some(tomb), s"$out/postings_v2")
-        },
-        () => {
-          TextAnalysis.bm25DocLens(ia, "doc_id")
-            .write.mode("overwrite").parquet(s"$out/doclens")
-          TextAnalysis.bm25DocLens(ib, "doc_id")
-            .write.mode("append").parquet(s"$out/doclens")
+            "doc_id", Some(tomb), s"$out/postings_v2"),
+        doclensThen = () =>
           compacted(1) = Dedup.storeCompact(s.read.parquet(s"$out/doclens"),
-            "doc_id", Some(tomb), s"$out/doclens_v2")
-        })
+            "doc_id", Some(tomb), s"$out/doclens_v2"))
       TextAnalysis.bm25TopKStored(compacted(0), compacted(1), "doc_id",
         queryTerms = Seq("hash", "join", "vector"), k = 25)
     }),
@@ -1319,17 +1209,9 @@ object LlmQueries {
       // DRIVER (pure function, zero data read) => STATIC partition
       // pruning on the postings scan. Identical answer to the
       // unpartitioned serve by construction — same oracle.
-      val out = "target/gate_sink/bm25_index_pruned"
+      val out = Stores.dir("bm25_index_pruned")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val ix = graft.operators.Reuse.Local(
-        TextAnalysis.bm25IndexPartitioned(docs, "doc_id", "text",
-          nBuckets = 8))
-      // two independent sinks off the shared checkpoint — overlap (§2.6)
-      graft.operators.Par.jobs(Seq(ix),
-        () => ix.write.mode("overwrite").partitionBy("tbucket")
-          .parquet(s"$out/postings"),
-        () => TextAnalysis.bm25DocLens(ix, "doc_id")
-          .write.mode("overwrite").parquet(s"$out/doclens"))
+      Stores.bm25ByBucket(out, Seq(Stores.bm25BucketIndex(docs)))
       TextAnalysis.bm25TopKStoredPruned(
         s.read.parquet(s"$out/postings"), s.read.parquet(s"$out/doclens"),
         "doc_id", queryTerms = Seq("hash", "join", "vector"),
@@ -1343,39 +1225,22 @@ object LlmQueries {
       // layout survives the rewrite (PlanSpec pins PartitionFilters on
       // the compacted store), and the pruned serve over it equals the
       // llm_bm25_delete answer (same tombstones over the full corpus).
-      val out = "target/gate_sink/bm25_pruned_compact"
+      val out = Stores.dir("bm25_pruned_compact")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val a = docs.crossJoin(broadcast(m)).filter($"doc_id" <= $"m" - 100)
-        .select($"doc_id", $"text")
-      val b = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 100)
-        .select($"doc_id", $"text")
-      val ia = graft.operators.Reuse.Local(
-        TextAnalysis.bm25IndexPartitioned(a, "doc_id", "text", nBuckets = 8))
-      val ib = graft.operators.Reuse.Local(
-        TextAnalysis.bm25IndexPartitioned(b, "doc_id", "text", nBuckets = 8))
+      val gen = Stores.split(docs, "doc_id")
+      val a = gen.older(100).select($"doc_id", $"text")
+      val b = gen.newer(100).select($"doc_id", $"text")
       val tomb = docs.select($"doc_id").filter($"doc_id" % 7 === 0)
-      // overlap the two per-path lifecycle chains (guide §2.6; order
-      // preserved WITHIN each path)
+      // each path compacts right after its own appends land
       val compacted = new Array[org.apache.spark.sql.DataFrame](2)
-      graft.operators.Par.jobs(Seq(ia, ib),
-        () => {
-          ia.write.mode("overwrite").partitionBy("tbucket")
-            .parquet(s"$out/postings")
-          ib.write.mode("append").partitionBy("tbucket")
-            .parquet(s"$out/postings")
+      Stores.bm25ByBucket(out, Seq(a, b).map(Stores.bm25BucketIndex),
+        postingsThen = () =>
           compacted(0) = Dedup.storeCompact(s.read.parquet(s"$out/postings"),
             "doc_id", Some(tomb), s"$out/postings_v2",
-            partitionCols = Seq("tbucket"))
-        },
-        () => {
-          TextAnalysis.bm25DocLens(ia, "doc_id")
-            .write.mode("overwrite").parquet(s"$out/doclens")
-          TextAnalysis.bm25DocLens(ib, "doc_id")
-            .write.mode("append").parquet(s"$out/doclens")
+            partitionCols = Seq("tbucket")),
+        doclensThen = () =>
           compacted(1) = Dedup.storeCompact(s.read.parquet(s"$out/doclens"),
-            "doc_id", Some(tomb), s"$out/doclens_v2")
-        })
+            "doc_id", Some(tomb), s"$out/doclens_v2"))
       TextAnalysis.bm25TopKStoredPruned(compacted(0), compacted(1), "doc_id",
         queryTerms = Seq("hash", "join", "vector"), nBuckets = 8, k = 25)
     }),
@@ -1390,38 +1255,21 @@ object LlmQueries {
       // llm_bm25_delete answer (same oracle). Doc-lengths stay a flat
       // store: full storeCompact is correct there (every doc row is a
       // candidate, there is no partition to spare).
-      val out = "target/gate_sink/bm25_selective_compact"
+      val out = Stores.dir("bm25_selective_compact")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val a = docs.crossJoin(broadcast(m)).filter($"doc_id" <= $"m" - 100)
-        .select($"doc_id", $"text")
-      val b = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 100)
-        .select($"doc_id", $"text")
-      val ia = graft.operators.Reuse.Local(
-        TextAnalysis.bm25IndexPartitioned(a, "doc_id", "text", nBuckets = 8))
-      val ib = graft.operators.Reuse.Local(
-        TextAnalysis.bm25IndexPartitioned(b, "doc_id", "text", nBuckets = 8))
+      val gen = Stores.split(docs, "doc_id")
+      val a = gen.older(100).select($"doc_id", $"text")
+      val b = gen.newer(100).select($"doc_id", $"text")
       val tomb = docs.select($"doc_id").filter($"doc_id" % 7 === 0)
-      // overlap the two per-path lifecycle chains (guide §2.6; the
-      // selective compaction stays strictly after ITS store's appends)
+      // each path compacts right after its own appends land
       val compacted = new Array[org.apache.spark.sql.DataFrame](2)
-      graft.operators.Par.jobs(Seq(ia, ib),
-        () => {
-          ia.write.mode("overwrite").partitionBy("tbucket")
-            .parquet(s"$out/postings")
-          ib.write.mode("append").partitionBy("tbucket")
-            .parquet(s"$out/postings")
+      Stores.bm25ByBucket(out, Seq(a, b).map(Stores.bm25BucketIndex),
+        postingsThen = () =>
           compacted(0) = Dedup.storeCompactSelective(s, s"$out/postings",
-            "doc_id", tomb, Seq("tbucket"), s"$out/postings_staging")
-        },
-        () => {
-          TextAnalysis.bm25DocLens(ia, "doc_id")
-            .write.mode("overwrite").parquet(s"$out/doclens")
-          TextAnalysis.bm25DocLens(ib, "doc_id")
-            .write.mode("append").parquet(s"$out/doclens")
+            "doc_id", tomb, Seq("tbucket"), s"$out/postings_staging"),
+        doclensThen = () =>
           compacted(1) = Dedup.storeCompact(s.read.parquet(s"$out/doclens"),
-            "doc_id", Some(tomb), s"$out/doclens_v2")
-        })
+            "doc_id", Some(tomb), s"$out/doclens_v2"))
       TextAnalysis.bm25TopKStoredPruned(compacted(0), compacted(1), "doc_id",
         queryTerms = Seq("hash", "join", "vector"), nBuckets = 8, k = 25)
     }),
@@ -1552,17 +1400,12 @@ object LlmQueries {
       // point, and adds the last 100 — the report must count each class
       // exactly (added 100 / removed 51 / changed 50 / unchanged rest)
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val a = docs.crossJoin(broadcast(m)).filter($"doc_id" <= $"m" - 100)
-        .select($"doc_id", $"text")
-      val b = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > 50 && $"doc_id" <= $"m" - 150)
-        .select($"doc_id", $"text")
-        .unionAll(docs.crossJoin(broadcast(m))
-          .filter($"doc_id" > $"m" - 150 && $"doc_id" <= $"m" - 100)
+      val gen = Stores.split(docs, "doc_id")
+      val a = gen.older(100).select($"doc_id", $"text")
+      val b = gen.where($"doc_id" > 50 && gen.atMost(150)).select($"doc_id", $"text")
+        .unionAll(gen.where(gen.above(150) && gen.atMost(100))
           .select($"doc_id", concat($"text", lit(" rev2")).as("text")))
-        .unionAll(docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 100)
-          .select($"doc_id", $"text"))
+        .unionAll(gen.newer(100).select($"doc_id", $"text"))
       TextAnalysis.crawlDelta(a, b, "doc_id", "text")
     }),
     "llm_bm25_prf" -> ((s, d) =>
@@ -1667,7 +1510,7 @@ object LlmQueries {
       // interplay — a rejected or duplicate doc must be invisible to
       // retrieval, and the index's df/N/avgdl must reflect the
       // rejections.
-      val out = "target/gate_sink/pipeline11"
+      val out = Stores.dir("pipeline11")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
       val crawl = docs.unionAll(
         docs.select(($"doc_id" + 500000).as("doc_id"), $"text"))
@@ -1682,13 +1525,7 @@ object LlmQueries {
       val deduped = graft.operators.Reuse.Local(
         fp.join(winners, Seq("fp", "doc_id"), "left_semi")
           .select($"doc_id", $"text"))
-      val ix = graft.operators.Reuse.Local(
-        TextAnalysis.bm25Index(deduped, "doc_id", "text"))
-      // two independent sinks off the shared checkpoint — overlap (§2.6)
-      graft.operators.Par.jobs(Seq(ix),
-        () => ix.write.mode("overwrite").parquet(s"$out/postings"),
-        () => TextAnalysis.bm25DocLens(ix, "doc_id")
-          .write.mode("overwrite").parquet(s"$out/doclens"))
+      Stores.bm25(out, Seq(Stores.bm25Index(deduped)))
       val queries = Seq((1L, "hash join"), (2L, "vector scan slow"),
         (3L, "zzzunknown")).toDF("query_id", "qtext")
       val bmRanked = TextAnalysis.bm25Join(
@@ -1774,11 +1611,10 @@ object LlmQueries {
       // a queryable frame. Wall-clock => rows-only gate by design
       // (the s3_metrics convention).
       import org.apache.spark.sql.expressions.Window
-      val out = "target/gate_sink/serving_latency"
+      val out = Stores.dir("serving_latency")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
       val emb = Tables.load(s, d, "embeddings")
-      val ix = graft.operators.Reuse.Local(
-        TextAnalysis.bm25Index(docs, "doc_id", "text"))
+      val ix = Stores.bm25Index(docs)
       // three independent store sinks — overlap the SETUP (§2.6); the
       // timed serve loop below is untouched. The sqEncode sink and the
       // query-vector fetch share nothing with `ix`, so they run OUTSIDE
@@ -1789,16 +1625,13 @@ object LlmQueries {
       val qvecRef = new java.util.concurrent.atomic.AtomicReference[
         IndexedSeq[Double]]()
       graft.operators.Par.jobs(
-        () => graft.operators.Par.jobs(Seq(ix),
-          () => ix.write.mode("overwrite").parquet(s"$out/postings"),
-          () => TextAnalysis.bm25DocLens(ix, "doc_id")
-            .write.mode("overwrite").parquet(s"$out/doclens")),
-        () => Similarity.sqEncode(emb, "vec_id", "embedding")
-          .write.mode("overwrite").parquet(s"$out/sq"),
+        () => Stores.bm25(out, Seq(ix)),
+        () => Stores.sq(s"$out/sq", emb),
         () => qvecRef.set(emb.filter($"vec_id" === 0L)
           .select($"embedding".cast("array<double>")).head().getSeq[Double](0)
           .toIndexedSeq))
-      val qvec = qvecRef.get()
+      val qvec = Option(qvecRef.get()).getOrElse(sys.error(
+        "llm_serving_latency: no query vector for vec_id 0 in embeddings"))
       def bmServe() = TextAnalysis.bm25TopKStored(
         s.read.parquet(s"$out/postings"), s.read.parquet(s"$out/doclens"),
         "doc_id", queryTerms = Seq("hash", "join", "vector"), k = 10)
@@ -1826,21 +1659,14 @@ object LlmQueries {
       // with deltas vs the first. Wall-clock values => rows-only (the
       // llm_serving_latency convention); the delta arithmetic itself is
       // deterministic and spec-pinned on planted report frames.
-      val out = "target/gate_sink/latency_trend"
+      val out = Stores.dir("latency_trend")
       val fs = new org.apache.hadoop.fs.Path(out).getFileSystem(
         s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(s"$out/store"), true)
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 200).select($"doc_id", $"text")
-      val ix = graft.operators.Reuse.Local(
-        TextAnalysis.bm25Index(slice, "doc_id", "text"))
-      // two independent sinks off the shared checkpoint — overlap (§2.6)
-      graft.operators.Par.jobs(Seq(ix),
-        () => ix.write.mode("overwrite").parquet(s"$out/postings"),
-        () => TextAnalysis.bm25DocLens(ix, "doc_id")
-          .write.mode("overwrite").parquet(s"$out/doclens"))
+      val gen = Stores.split(docs, "doc_id")
+      val slice = gen.newer(200).select($"doc_id", $"text")
+      Stores.bm25(out, Seq(Stores.bm25Index(slice)))
       def bmServe() = TextAnalysis.bm25TopKStored(
         s.read.parquet(s"$out/postings"), s.read.parquet(s"$out/doclens"),
         "doc_id", queryTerms = Seq("hash", "join"), k = 5)
@@ -1927,9 +1753,8 @@ object LlmQueries {
       // clusters are planted): banded simhash must surface the planted
       // hamming-0 pairs plus any genuine near-dups
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val recent = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 300)
-        .select(($"doc_id" + 1000000).as("doc_id"), $"text")
+      val gen = Stores.split(docs, "doc_id")
+      val recent = gen.newer(300).select(($"doc_id" + 1000000).as("doc_id"), $"text")
       Dedup.simhashPairs(docs.unionAll(recent), "doc_id", "text",
         hashBits = 60, nBands = 4, maxHamming = 3)
     }),
@@ -1938,9 +1763,8 @@ object LlmQueries {
       // 120-bit (2-word) sketch over a bounded corpus + exact clones:
       // the multi-word widening for corpora past simhashPairs' ceiling
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val recent = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 300)
-        .select($"doc_id", $"text")
+      val gen = Stores.split(docs, "doc_id")
+      val recent = gen.newer(300).select($"doc_id", $"text")
       val corpus = recent.unionAll(
         recent.select(($"doc_id" + 1000000).as("doc_id"), $"text"))
       Dedup.simhashPairsWide(corpus, "doc_id", "text",
@@ -1995,12 +1819,8 @@ object LlmQueries {
       // (llm_exact_dedup / llm_token_budget_bpe / llm_chunk_bpe); the
       // composition pins their interplay — the first pipeline whose
       // accounting AND output are both in learned tokens
-      val out = "target/gate_sink/bpe_merges_p10"
-      s.createDataFrame(Seq(
-          (0, "t", "h"), (1, "th", "e"), (2, "i", "n"), (3, "a", "n"),
-          (4, "an", "d"), (5, "e", "r"), (6, "o", "n"), (7, "r", "e")))
-        .toDF("rank", "left", "right")
-        .write.mode("overwrite").parquet(out)
+      val out = Stores.dir("bpe_merges_p10")
+      Stores.bpeMerges(s, out)
       val merges = s.read.parquet(out)
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
       val corpus = docs.unionAll(
@@ -2033,12 +1853,8 @@ object LlmQueries {
       // ranks that exercise merge-on-merged-symbol), STORED to parquet,
       // read back, and applied as one compiled per-row expression —
       // train once, count every ingestion run
-      val out = "target/gate_sink/bpe_merges"
-      s.createDataFrame(Seq(
-          (0, "t", "h"), (1, "th", "e"), (2, "i", "n"), (3, "a", "n"),
-          (4, "an", "d"), (5, "e", "r"), (6, "o", "n"), (7, "r", "e")))
-        .toDF("rank", "left", "right")
-        .write.mode("overwrite").parquet(out)
+      val out = Stores.dir("bpe_merges")
+      Stores.bpeMerges(s, out)
       TextAnalysis.bpeCount(
         Tables.load(s, d, "documents").select($"doc_id", $"text"),
         "doc_id", "text", s.read.parquet(out))
@@ -2053,12 +1869,8 @@ object LlmQueries {
       // oracle replays the recursive-CTE apply and emits the symbols
       // with the same id CASE; count(*) per doc == llm_bpe_count's
       // bpe_cnt by shared-loop construction (spec-pinned)
-      val out = "target/gate_sink/bpe_merges_tok"
-      s.createDataFrame(Seq(
-          (0, "t", "h"), (1, "th", "e"), (2, "i", "n"), (3, "a", "n"),
-          (4, "an", "d"), (5, "e", "r"), (6, "o", "n"), (7, "r", "e")))
-        .toDF("rank", "left", "right")
-        .write.mode("overwrite").parquet(out)
+      val out = Stores.dir("bpe_merges_tok")
+      Stores.bpeMerges(s, out)
       TextAnalysis.bpeTokenize(
         Tables.load(s, d, "documents").select($"doc_id", $"text"),
         "doc_id", "text", s.read.parquet(out))
@@ -2069,12 +1881,8 @@ object LlmQueries {
       // stored merge table — the id-space utilization check before a
       // training run. Oracle composes the tokenize CTE into the
       // llm_vocab report shape
-      val out = "target/gate_sink/bpe_merges_vocab"
-      s.createDataFrame(Seq(
-          (0, "t", "h"), (1, "th", "e"), (2, "i", "n"), (3, "a", "n"),
-          (4, "an", "d"), (5, "e", "r"), (6, "o", "n"), (7, "r", "e")))
-        .toDF("rank", "left", "right")
-        .write.mode("overwrite").parquet(out)
+      val out = Stores.dir("bpe_merges_vocab")
+      Stores.bpeMerges(s, out)
       TextAnalysis.bpeVocabReport(Tables.load(s, d, "documents"),
         "doc_id", "text", s.read.parquet(out), topK = 50)
     }),
@@ -2109,12 +1917,8 @@ object LlmQueries {
       // the serving half: train -> STORE -> tokenize the corpus under
       // the read-back piece table (Viterbi segmentation per word via
       // the compiled per-row expression, vocabulary inlined)
-      val out = "target/gate_sink/unigram_pieces"
-      TextAnalysis.unigramTokTrain(
-          Tables.load(s, d, "documents").select($"doc_id", $"text"),
-          "doc_id", "text", vocabSize = 48, nRounds = 2,
-          maxPieceLen = 4, seedSize = 64)
-        .write.mode("overwrite").parquet(out)
+      val out = Stores.dir("unigram_pieces")
+      Stores.unigramPieces(Tables.load(s, d, "documents").select($"doc_id", $"text"), out)
       TextAnalysis.unigramTokenize(
         Tables.load(s, d, "documents").select($"doc_id", $"text"),
         "doc_id", "text", s.read.parquet(out))
@@ -2151,10 +1955,9 @@ object LlmQueries {
       // learned tokenizer — the llm_bpe_count surface with the VALUES
       // fixture replaced by the corpus-trained table. Oracle composes
       // the unrolled train rounds with the recursive apply replay
-      val out = "target/gate_sink/bpe_merges_trained"
+      val out = Stores.dir("bpe_merges_trained")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      TextAnalysis.bpeTrain(docs, "doc_id", "text", nMerges = 8)
-        .write.mode("overwrite").parquet(out)
+      Stores.put(out, TextAnalysis.bpeTrain(docs, "doc_id", "text", nMerges = 8))
       TextAnalysis.bpeCount(docs, "doc_id", "text", s.read.parquet(out))
     }),
     "llm_image_dups" -> ((s, d) => {
@@ -2169,15 +1972,9 @@ object LlmQueries {
       // replays the full hex→slice-md5→gradient→hamming chain and
       // brute-forces ALL pairs (banded recall is exact below nBands)
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && length($"text") >= 400)
-        .select($"doc_id", $"text")
-      val edited = slice.select(($"doc_id" + 3000000).as("doc_id"),
-        concat(substring($"text", 1, 10), lit("QQQQ"),
-          expr("substring(text, 15)")).as("text"))
+      val media = Stores.media(docs)
       Multimodal.imageNearDups(
-        Multimodal.asMedia(slice.unionAll(edited), "doc_id", "text"),
+        Multimodal.asMedia(media.slice.unionAll(media.edited), "doc_id", "text"),
         maxHamming = 3, nBands = 4)
     }),
     "llm_audio_fp" -> ((s, d) => {
@@ -2189,11 +1986,8 @@ object LlmQueries {
       // double difference. Pure zero-shuffle projection; the oracle
       // replays the full hex -> slice-energy -> double-difference chain
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && length($"text") >= 400)
-        .select($"doc_id", $"text")
-      Multimodal.audioFp(Multimodal.asMedia(slice, "doc_id", "text"))
+      val media = Stores.media(docs)
+      Multimodal.audioFp(Multimodal.asMedia(media.slice, "doc_id", "text"))
     }),
     "llm_audio_dups" -> ((s, d) => {
       import s.implicits._
@@ -2203,15 +1997,9 @@ object LlmQueries {
       // banded audio-fingerprint pairing; banded recall is exact below
       // nBands, so the oracle brute-forces ALL pairs
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && length($"text") >= 400)
-        .select($"doc_id", $"text")
-      val edited = slice.select(($"doc_id" + 3000000).as("doc_id"),
-        concat(substring($"text", 1, 10), lit("QQQQ"),
-          expr("substring(text, 15)")).as("text"))
+      val media = Stores.media(docs)
       Multimodal.audioNearDups(
-        Multimodal.asMedia(slice.unionAll(edited), "doc_id", "text"),
+        Multimodal.asMedia(media.slice.unionAll(media.edited), "doc_id", "text"),
         maxHamming = 3, nBands = 4)
     }),
     "llm_audio_probe" -> ((s, d) => {
@@ -2220,19 +2008,12 @@ object LlmQueries {
       // STORED (8 bytes a row, payloads never touched again), the
       // edited-clone shard probed against the read-back frame — the
       // llm_image_incr discipline on the audio modality
-      val out = "target/gate_sink/audio_fp_store"
+      val out = Stores.dir("audio_fp_store")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && length($"text") >= 400)
-        .select($"doc_id", $"text")
-      Multimodal.audioFp(Multimodal.asMedia(slice, "doc_id", "text"))
-        .write.mode("overwrite").parquet(out)
-      val edited = slice.select(($"doc_id" + 3000000).as("doc_id"),
-        concat(substring($"text", 1, 10), lit("QQQQ"),
-          expr("substring(text, 15)")).as("text"))
+      val media = Stores.media(docs)
+      Stores.audioFp(out, media.slice)
       Multimodal.audioNearDupsBetween(
-          Multimodal.asMedia(edited, "doc_id", "text"),
+          Multimodal.asMedia(media.edited, "doc_id", "text"),
           s.read.parquet(out), maxHamming = 3, nBands = 4)
         .dropDuplicates("id_new", "id_corpus")
     }),
@@ -2245,25 +2026,12 @@ object LlmQueries {
       // delta) — and clones of EITHER generation must hit the read-back
       // union. Same oracle as llm_audio_probe (the full-slice store),
       // so a lost append under-reports pairs and hash-mismatches
-      val out = "target/gate_sink/audio_fp_append"
+      val out = Stores.dir("audio_fp_append")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && length($"text") >= 400)
-        .select($"doc_id", $"text")
-      val genA = slice.crossJoin(broadcast(m)).filter($"doc_id" <= $"m" - 150)
-        .select($"doc_id", $"text")
-      val genB = slice.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 150)
-        .select($"doc_id", $"text")
-      Multimodal.audioFp(Multimodal.asMedia(genA, "doc_id", "text"))
-        .write.mode("overwrite").parquet(out)
-      Multimodal.audioFp(Multimodal.asMedia(genB, "doc_id", "text"))
-        .write.mode("append").parquet(out)
-      val edited = slice.select(($"doc_id" + 3000000).as("doc_id"),
-        concat(substring($"text", 1, 10), lit("QQQQ"),
-          expr("substring(text, 15)")).as("text"))
+      val media = Stores.media(docs)
+      Stores.audioFp(out, media.gens: _*)
       Multimodal.audioNearDupsBetween(
-          Multimodal.asMedia(edited, "doc_id", "text"),
+          Multimodal.asMedia(media.edited, "doc_id", "text"),
           s.read.parquet(out), maxHamming = 3, nBands = 4)
         .dropDuplicates("id_new", "id_corpus")
     }),
@@ -2275,22 +2043,15 @@ object LlmQueries {
       // rebuild, payloads never re-read — and the edited-clone shard
       // probed against the purged store: clones of purged tracks ADMIT
       // again, survivors' clones still bounce
-      val out = "target/gate_sink/audio_fp_delete"
+      val out = Stores.dir("audio_fp_delete")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && length($"text") >= 400)
-        .select($"doc_id", $"text")
-      Multimodal.audioFp(Multimodal.asMedia(slice, "doc_id", "text"))
-        .write.mode("overwrite").parquet(out)
-      val tomb = slice.filter($"doc_id" % 5 === 1).select($"doc_id")
+      val media = Stores.media(docs)
+      Stores.audioFp(out, media.slice)
+      val tomb = media.slice.filter($"doc_id" % 5 === 1).select($"doc_id")
       val purged = graft.operators.Dedup.storePurge(
         s.read.parquet(out), "doc_id", tomb)
-      val edited = slice.select(($"doc_id" + 3000000).as("doc_id"),
-        concat(substring($"text", 1, 10), lit("QQQQ"),
-          expr("substring(text, 15)")).as("text"))
       Multimodal.audioNearDupsBetween(
-          Multimodal.asMedia(edited, "doc_id", "text"),
+          Multimodal.asMedia(media.edited, "doc_id", "text"),
           purged, maxHamming = 3, nBands = 4)
         .dropDuplicates("id_new", "id_corpus")
     }),
@@ -2303,28 +2064,15 @@ object LlmQueries {
       // compacted store. Same fixture algebra as llm_audio_delete =>
       // its oracle gates this: a compact that loses an 8-byte row or
       // resurrects a purged track hash-mismatches.
-      val out = "target/gate_sink/audio_fp_compact"
+      val out = Stores.dir("audio_fp_compact")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && length($"text") >= 400)
-        .select($"doc_id", $"text")
-      val genA = slice.crossJoin(broadcast(m)).filter($"doc_id" <= $"m" - 150)
-        .select($"doc_id", $"text")
-      val genB = slice.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 150)
-        .select($"doc_id", $"text")
-      Multimodal.audioFp(Multimodal.asMedia(genA, "doc_id", "text"))
-        .write.mode("overwrite").parquet(s"$out/store")
-      Multimodal.audioFp(Multimodal.asMedia(genB, "doc_id", "text"))
-        .write.mode("append").parquet(s"$out/store")
-      val tomb = slice.filter($"doc_id" % 5 === 1).select($"doc_id")
+      val media = Stores.media(docs)
+      Stores.audioFp(s"$out/store", media.gens: _*)
+      val tomb = media.slice.filter($"doc_id" % 5 === 1).select($"doc_id")
       val compacted = graft.operators.Dedup.storeCompact(
         s.read.parquet(s"$out/store"), "doc_id", Some(tomb), s"$out/store_v2")
-      val edited = slice.select(($"doc_id" + 3000000).as("doc_id"),
-        concat(substring($"text", 1, 10), lit("QQQQ"),
-          expr("substring(text, 15)")).as("text"))
       Multimodal.audioNearDupsBetween(
-          Multimodal.asMedia(edited, "doc_id", "text"),
+          Multimodal.asMedia(media.edited, "doc_id", "text"),
           compacted, maxHamming = 3, nBands = 4)
         .dropDuplicates("id_new", "id_corpus")
     }),
@@ -2335,11 +2083,8 @@ object LlmQueries {
       // frame — the 8-bytes-per-frame index a video store persists;
       // oracle replays per-frame hashes over aligned hex slices
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && length($"text") >= 400)
-        .select($"doc_id", $"text")
-      Multimodal.videoFrames(Multimodal.asMedia(slice, "doc_id", "text"))
+      val media = Stores.media(docs)
+      Multimodal.videoFrames(Multimodal.asMedia(media.slice, "doc_id", "text"))
     }),
     "llm_video_dups" -> ((s, d) => {
       import s.implicits._
@@ -2350,15 +2095,9 @@ object LlmQueries {
       // all-pairs frame-aligned hamming count (recall exact below
       // nBands per frame).
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && length($"text") >= 400)
-        .select($"doc_id", $"text")
-      val edited = slice.select(($"doc_id" + 3000000).as("doc_id"),
-        concat(substring($"text", 1, 10), lit("QQQQ"),
-          expr("substring(text, 15)")).as("text"))
+      val media = Stores.media(docs)
       Multimodal.videoNearDups(
-        Multimodal.asMedia(slice.unionAll(edited), "doc_id", "text"),
+        Multimodal.asMedia(media.slice.unionAll(media.edited), "doc_id", "text"),
         maxHamming = 3, nBands = 4, minFrames = 3)
     }),
     "llm_video_probe" -> ((s, d) => {
@@ -2368,19 +2107,12 @@ object LlmQueries {
       // edited-clone shard probed against the read-back store — the
       // llm_audio_probe discipline with the temporal matched-frame
       // count as the admission criterion
-      val out = "target/gate_sink/video_frames_store"
+      val out = Stores.dir("video_frames_store")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && length($"text") >= 400)
-        .select($"doc_id", $"text")
-      Multimodal.videoFrames(Multimodal.asMedia(slice, "doc_id", "text"))
-        .write.mode("overwrite").parquet(out)
-      val edited = slice.select(($"doc_id" + 3000000).as("doc_id"),
-        concat(substring($"text", 1, 10), lit("QQQQ"),
-          expr("substring(text, 15)")).as("text"))
+      val media = Stores.media(docs)
+      Stores.videoFrames(out, media.slice)
       Multimodal.videoNearDupsBetween(
-        Multimodal.asMedia(edited, "doc_id", "text"),
+        Multimodal.asMedia(media.edited, "doc_id", "text"),
         s.read.parquet(out), maxHamming = 3, nBands = 4, minFrames = 3)
     }),
     "llm_video_append" -> ((s, d) => {
@@ -2389,25 +2121,12 @@ object LlmQueries {
       // generations (videoFrames over the new media IS the delta) —
       // clones of EITHER generation must hit the read-back union; the
       // llm_video_probe oracle (full-slice store) gates a lost append
-      val out = "target/gate_sink/video_frames_append"
+      val out = Stores.dir("video_frames_append")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && length($"text") >= 400)
-        .select($"doc_id", $"text")
-      val genA = slice.crossJoin(broadcast(m)).filter($"doc_id" <= $"m" - 150)
-        .select($"doc_id", $"text")
-      val genB = slice.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 150)
-        .select($"doc_id", $"text")
-      Multimodal.videoFrames(Multimodal.asMedia(genA, "doc_id", "text"))
-        .write.mode("overwrite").parquet(out)
-      Multimodal.videoFrames(Multimodal.asMedia(genB, "doc_id", "text"))
-        .write.mode("append").parquet(out)
-      val edited = slice.select(($"doc_id" + 3000000).as("doc_id"),
-        concat(substring($"text", 1, 10), lit("QQQQ"),
-          expr("substring(text, 15)")).as("text"))
+      val media = Stores.media(docs)
+      Stores.videoFrames(out, media.gens: _*)
       Multimodal.videoNearDupsBetween(
-        Multimodal.asMedia(edited, "doc_id", "text"),
+        Multimodal.asMedia(media.edited, "doc_id", "text"),
         s.read.parquet(out), maxHamming = 3, nBands = 4, minFrames = 3)
     }),
     "llm_video_delete" -> ((s, d) => {
@@ -2416,22 +2135,15 @@ object LlmQueries {
       // READ (anti-join on doc_id — ALL of a video's frame rows go
       // together), clones of purged videos ADMIT again, survivors'
       // clones still bounce
-      val out = "target/gate_sink/video_frames_delete"
+      val out = Stores.dir("video_frames_delete")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && length($"text") >= 400)
-        .select($"doc_id", $"text")
-      Multimodal.videoFrames(Multimodal.asMedia(slice, "doc_id", "text"))
-        .write.mode("overwrite").parquet(out)
-      val tomb = slice.filter($"doc_id" % 5 === 1).select($"doc_id")
+      val media = Stores.media(docs)
+      Stores.videoFrames(out, media.slice)
+      val tomb = media.slice.filter($"doc_id" % 5 === 1).select($"doc_id")
       val purged = graft.operators.Dedup.storePurge(
         s.read.parquet(out), "doc_id", tomb)
-      val edited = slice.select(($"doc_id" + 3000000).as("doc_id"),
-        concat(substring($"text", 1, 10), lit("QQQQ"),
-          expr("substring(text, 15)")).as("text"))
       Multimodal.videoNearDupsBetween(
-        Multimodal.asMedia(edited, "doc_id", "text"),
+        Multimodal.asMedia(media.edited, "doc_id", "text"),
         purged, maxHamming = 3, nBands = 4, minFrames = 3)
     }),
     "llm_video_compact" -> ((s, d) => {
@@ -2440,28 +2152,15 @@ object LlmQueries {
       // generations, the tombstones purged from the FILES via
       // storeCompact, deltas consolidated, the clone shard probed
       // against the compacted store (the llm_video_delete oracle)
-      val out = "target/gate_sink/video_frames_compact"
+      val out = Stores.dir("video_frames_compact")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && length($"text") >= 400)
-        .select($"doc_id", $"text")
-      val genA = slice.crossJoin(broadcast(m)).filter($"doc_id" <= $"m" - 150)
-        .select($"doc_id", $"text")
-      val genB = slice.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 150)
-        .select($"doc_id", $"text")
-      Multimodal.videoFrames(Multimodal.asMedia(genA, "doc_id", "text"))
-        .write.mode("overwrite").parquet(s"$out/store")
-      Multimodal.videoFrames(Multimodal.asMedia(genB, "doc_id", "text"))
-        .write.mode("append").parquet(s"$out/store")
-      val tomb = slice.filter($"doc_id" % 5 === 1).select($"doc_id")
+      val media = Stores.media(docs)
+      Stores.videoFrames(s"$out/store", media.gens: _*)
+      val tomb = media.slice.filter($"doc_id" % 5 === 1).select($"doc_id")
       val compacted = graft.operators.Dedup.storeCompact(
         s.read.parquet(s"$out/store"), "doc_id", Some(tomb), s"$out/store_v2")
-      val edited = slice.select(($"doc_id" + 3000000).as("doc_id"),
-        concat(substring($"text", 1, 10), lit("QQQQ"),
-          expr("substring(text, 15)")).as("text"))
       Multimodal.videoNearDupsBetween(
-        Multimodal.asMedia(edited, "doc_id", "text"),
+        Multimodal.asMedia(media.edited, "doc_id", "text"),
         compacted, maxHamming = 3, nBands = 4, minFrames = 3)
     }),
     "llm_image_dups_capped" -> ((s, d) => {
@@ -2476,17 +2175,11 @@ object LlmQueries {
       // banding + bucket-count filter replayed: a pair survives iff it
       // shares at least one UNCAPPED band
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && length($"text") >= 400)
-        .select($"doc_id", $"text")
-      val edited = slice.select(($"doc_id" + 3000000).as("doc_id"),
-        concat(substring($"text", 1, 10), lit("QQQQ"),
-          expr("substring(text, 15)")).as("text"))
+      val media = Stores.media(docs)
       val flood = s.range(40).select(($"id" + 9000000).as("doc_id"),
         lit("~" * 450).as("text"))
       Multimodal.imageNearDups(
-        Multimodal.asMedia(slice.unionAll(edited).unionAll(flood),
+        Multimodal.asMedia(media.slice.unionAll(media.edited).unionAll(flood),
           "doc_id", "text"),
         maxHamming = 3, nBands = 4, maxBucketSize = Some(8))
     }),
@@ -2497,19 +2190,12 @@ object LlmQueries {
       // edited-clone shard probed per row against the read-back store;
       // every clone must hit its original (the llm_image_dups fixture
       // split into its store/probe halves)
-      val out = "target/gate_sink/image_dhash_store"
+      val out = Stores.dir("image_dhash_store")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && length($"text") >= 400)
-        .select($"doc_id", $"text")
-      Multimodal.dHash(Multimodal.asMedia(slice, "doc_id", "text"))
-        .write.mode("overwrite").parquet(out)
-      val edited = slice.select(($"doc_id" + 3000000).as("doc_id"),
-        concat(substring($"text", 1, 10), lit("QQQQ"),
-          expr("substring(text, 15)")).as("text"))
+      val media = Stores.media(docs)
+      Stores.dHash(out, media.slice)
       Multimodal.imageNearDupsBetween(
-          Multimodal.asMedia(edited, "doc_id", "text"),
+          Multimodal.asMedia(media.edited, "doc_id", "text"),
           s.read.parquet(out), maxHamming = 3, nBands = 4)
         .dropDuplicates("id_new", "id_corpus")
     }),
@@ -2521,25 +2207,12 @@ object LlmQueries {
       // the delta) — and clones of EITHER generation must hit the
       // read-back union. Same oracle as llm_image_incr (the full-slice
       // store), so a lost append under-reports pairs and hash-mismatches
-      val out = "target/gate_sink/image_dhash_append"
+      val out = Stores.dir("image_dhash_append")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && length($"text") >= 400)
-        .select($"doc_id", $"text")
-      val genA = slice.crossJoin(broadcast(m)).filter($"doc_id" <= $"m" - 150)
-        .select($"doc_id", $"text")
-      val genB = slice.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 150)
-        .select($"doc_id", $"text")
-      Multimodal.dHash(Multimodal.asMedia(genA, "doc_id", "text"))
-        .write.mode("overwrite").parquet(out)
-      Multimodal.dHash(Multimodal.asMedia(genB, "doc_id", "text"))
-        .write.mode("append").parquet(out)
-      val edited = slice.select(($"doc_id" + 3000000).as("doc_id"),
-        concat(substring($"text", 1, 10), lit("QQQQ"),
-          expr("substring(text, 15)")).as("text"))
+      val media = Stores.media(docs)
+      Stores.dHash(out, media.gens: _*)
       Multimodal.imageNearDupsBetween(
-          Multimodal.asMedia(edited, "doc_id", "text"),
+          Multimodal.asMedia(media.edited, "doc_id", "text"),
           s.read.parquet(out), maxHamming = 3, nBands = 4)
         .dropDuplicates("id_new", "id_corpus")
     }),
@@ -2552,22 +2225,15 @@ object LlmQueries {
       // against the purged store: clones of purged images ADMIT again
       // (their originals are forgotten), survivors' clones still bounce.
       // Oracle = the incremental probe over the remaining corpus only
-      val out = "target/gate_sink/image_dhash_delete"
+      val out = Stores.dir("image_dhash_delete")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && length($"text") >= 400)
-        .select($"doc_id", $"text")
-      Multimodal.dHash(Multimodal.asMedia(slice, "doc_id", "text"))
-        .write.mode("overwrite").parquet(out)
-      val tomb = slice.filter($"doc_id" % 5 === 1).select($"doc_id")
+      val media = Stores.media(docs)
+      Stores.dHash(out, media.slice)
+      val tomb = media.slice.filter($"doc_id" % 5 === 1).select($"doc_id")
       val purged = graft.operators.Dedup.storePurge(
         s.read.parquet(out), "doc_id", tomb)
-      val edited = slice.select(($"doc_id" + 3000000).as("doc_id"),
-        concat(substring($"text", 1, 10), lit("QQQQ"),
-          expr("substring(text, 15)")).as("text"))
       Multimodal.imageNearDupsBetween(
-          Multimodal.asMedia(edited, "doc_id", "text"),
+          Multimodal.asMedia(media.edited, "doc_id", "text"),
           purged, maxHamming = 3, nBands = 4)
         .dropDuplicates("id_new", "id_corpus")
     }),
@@ -2581,28 +2247,15 @@ object LlmQueries {
       // Same fixture algebra as llm_image_delete => its oracle gates
       // this: a compact that loses an 8-byte row or resurrects a
       // purged original hash-mismatches.
-      val out = "target/gate_sink/image_dhash_compact"
+      val out = Stores.dir("image_dhash_compact")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && length($"text") >= 400)
-        .select($"doc_id", $"text")
-      val genA = slice.crossJoin(broadcast(m)).filter($"doc_id" <= $"m" - 150)
-        .select($"doc_id", $"text")
-      val genB = slice.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 150)
-        .select($"doc_id", $"text")
-      Multimodal.dHash(Multimodal.asMedia(genA, "doc_id", "text"))
-        .write.mode("overwrite").parquet(s"$out/store")
-      Multimodal.dHash(Multimodal.asMedia(genB, "doc_id", "text"))
-        .write.mode("append").parquet(s"$out/store")
-      val tomb = slice.filter($"doc_id" % 5 === 1).select($"doc_id")
+      val media = Stores.media(docs)
+      Stores.dHash(s"$out/store", media.gens: _*)
+      val tomb = media.slice.filter($"doc_id" % 5 === 1).select($"doc_id")
       val compacted = graft.operators.Dedup.storeCompact(
         s.read.parquet(s"$out/store"), "doc_id", Some(tomb), s"$out/store_v2")
-      val edited = slice.select(($"doc_id" + 3000000).as("doc_id"),
-        concat(substring($"text", 1, 10), lit("QQQQ"),
-          expr("substring(text, 15)")).as("text"))
       Multimodal.imageNearDupsBetween(
-          Multimodal.asMedia(edited, "doc_id", "text"),
+          Multimodal.asMedia(media.edited, "doc_id", "text"),
           compacted, maxHamming = 3, nBands = 4)
         .dropDuplicates("id_new", "id_corpus")
     }),
@@ -2616,20 +2269,17 @@ object LlmQueries {
       // cluster, the canonical keep-one-per-cluster input for media
       // dedup
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && length($"text") >= 400)
-        .select($"doc_id", $"text")
-      val e1 = slice.select(($"doc_id" + 3000000).as("doc_id"),
+      val media = Stores.media(docs)
+      val e1 = media.slice.select(($"doc_id" + 3000000).as("doc_id"),
         concat(substring($"text", 1, 10), lit("QQQQ"),
           expr("substring(text, 15)")).as("text"))
-      val e2 = slice.select(($"doc_id" + 6000000).as("doc_id"),
+      val e2 = media.slice.select(($"doc_id" + 6000000).as("doc_id"),
         concat(substring($"text", 1, 29), lit("ZZZZ"),
           expr("substring(text, 34)")).as("text"))
-      val media = Multimodal.asMedia(
-        slice.unionAll(e1).unionAll(e2), "doc_id", "text")
+      val payloads = Multimodal.asMedia(
+        media.slice.unionAll(e1).unionAll(e2), "doc_id", "text")
       graft.operators.Graph.connectedComponentsStar(
-          Multimodal.imageNearDups(media, maxHamming = 3, nBands = 4),
+          Multimodal.imageNearDups(payloads, maxHamming = 3, nBands = 4),
           "id_a", "id_b")
         .select($"node".as("doc_id"), $"component".as("cluster"))
     }),
@@ -2642,18 +2292,13 @@ object LlmQueries {
       // the survivors. The composition a media-corpus build runs before
       // handing payloads to the actual scaler fleet
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && length($"text") >= 400)
-        .select($"doc_id", $"text")
-      val edited = slice.select(($"doc_id" + 3000000).as("doc_id"),
-        concat(substring($"text", 1, 10), lit("QQQQ"),
-          expr("substring(text, 15)")).as("text"))
-      val media = Multimodal.asMedia(slice.unionAll(edited), "doc_id", "text")
-      val dupIds = Multimodal.imageNearDups(media, maxHamming = 3, nBands = 4)
+      val media = Stores.media(docs)
+      val payloads = Multimodal.asMedia(
+        media.slice.unionAll(media.edited), "doc_id", "text")
+      val dupIds = Multimodal.imageNearDups(payloads, maxHamming = 3, nBands = 4)
         .select($"id_b".as("doc_id")).distinct()
       Multimodal.resizePlan(Multimodal.decode(
-        media.join(dupIds, Seq("doc_id"), "left_anti")))
+        payloads.join(dupIds, Seq("doc_id"), "left_anti")))
     }),
     "llm_admission_selfdedup" -> ((s, d) => {
       import s.implicits._
@@ -2666,10 +2311,8 @@ object LlmQueries {
       // survivors: corpus clones bounce at the store, each novel admits
       // exactly once (its in-batch clone dropped at the keep-first)
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val a = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && $"doc_id" <= $"m" - 200)
-        .select($"doc_id", $"text")
+      val gen = Stores.split(docs, "doc_id")
+      val a = gen.where(gen.above(300) && gen.atMost(200)).select($"doc_id", $"text")
       val novel = a.select($"doc_id".as("aid"), $"text".as("atext"))
         .join(docs.select($"doc_id".as("bid"), $"text".as("btext")),
           $"aid" - 120 === $"bid")
@@ -2694,14 +2337,11 @@ object LlmQueries {
       // pairs, higher id drops), THEN probes the stored frame: corpus
       // payload clones bounce at the store, each novel payload admits
       // exactly once (its in-batch twin dropped at the keep-first)
-      val out = "target/gate_sink/selfdedup_media"
+      val out = Stores.dir("selfdedup_media")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val a = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && $"doc_id" <= $"m" - 200)
-        .select($"doc_id", $"text")
-      Multimodal.dHash(Multimodal.asMedia(docs, "doc_id", "text"))
-        .write.mode("overwrite").parquet(out)
+      val gen = Stores.split(docs, "doc_id")
+      val a = gen.where(gen.above(300) && gen.atMost(200)).select($"doc_id", $"text")
+      Stores.dHash(out, docs)
       val batch = a.select(($"doc_id" + 3000000).as("doc_id"),
           $"text".as("pay"))
         .unionAll(a.select(($"doc_id" + 4000000).as("doc_id"),
@@ -2724,12 +2364,10 @@ object LlmQueries {
       // combination: text-clone+media-clone (both bounce),
       // text-novel+media-clone (media bounces), text-clone+media-novel
       // (text bounces), both-novel (ADMITTED)
-      val out = "target/gate_sink/pipeline9"
+      val out = Stores.dir("pipeline9")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val a = docs.crossJoin(broadcast(m))
-        .filter($"doc_id" > $"m" - 300 && $"doc_id" <= $"m" - 200)
-        .select($"doc_id", $"text")
+      val gen = Stores.split(docs, "doc_id")
+      val a = gen.where(gen.above(300) && gen.atMost(200)).select($"doc_id", $"text")
       val novel = a.select($"doc_id".as("aid"), $"text".as("atext"))
         .join(docs.select($"doc_id".as("bid"), $"text".as("btext")),
           $"aid" - 120 === $"bid")
@@ -2754,13 +2392,9 @@ object LlmQueries {
       val idx = Dedup.minhashIndex(docs, "doc_id", "text")
       // three independent store sinks — overlap (guide §2.6)
       graft.operators.Par.jobs(
-        () => graft.operators.Par.jobs(Seq(idx.sets),
-          () => idx.bands.write.mode("overwrite").parquet(s"$out/mh/bands"),
-          () => idx.sets.write.mode("overwrite").parquet(s"$out/mh/sets")),
-        () => Multimodal.dHash(Multimodal.asMedia(docs, "doc_id", "text"))
-          .write.mode("overwrite").parquet(s"$out/dh"))
-      val ev = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 100)
-        .select($"doc_id", $"text")
+        () => Stores.minhash(idx, s"$out/mh"),
+        () => Stores.dHash(s"$out/dh", docs))
+      val ev = gen.newer(100).select($"doc_id", $"text")
       // TEXT path (quality filter and decontamination anti-join both
       // preserve the payload column — the row stays whole)
       val quality = incoming.filter(TextAnalysis.gopherKeep($"text",
@@ -2771,8 +2405,7 @@ object LlmQueries {
           quality, ev, "doc_id", "text", n = 13))
       val mhHits = graft.streaming.Corpus.admitProbe(
           clean.select($"doc_id", $"text"),
-          Dedup.MinhashIndex(s.read.parquet(s"$out/mh/bands"),
-            s.read.parquet(s"$out/mh/sets")), "doc_id", "text")
+          Stores.readMinhash(s, s"$out/mh"), "doc_id", "text")
         .select($"id_new".as("doc_id")).distinct()
       val textOk = clean.join(broadcast(mhHits), Seq("doc_id"), "left_anti")
       // MEDIA path: per-row dHash probe of the payload column
@@ -2815,9 +2448,8 @@ object LlmQueries {
       // under new ids must pair with its corpus originals (jaccard 1.0)
       // plus any genuine near-dups — and with NOTHING within a side
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val incoming = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 300)
-        .select(($"doc_id" + 3000000).as("doc_id"), $"text")
+      val gen = Stores.split(docs, "doc_id")
+      val incoming = gen.newer(300).select(($"doc_id" + 3000000).as("doc_id"), $"text")
       Dedup.minhashPairsBetween(incoming, docs, "doc_id", "text",
         k = 16, nBands = 4, threshold = 0.5)
     }),
@@ -2829,12 +2461,11 @@ object LlmQueries {
       // mixes clones of corpus docs (must all bounce) with suffixed
       // variants (must all pass); the store is (fp) parquet — 16 bytes
       // a row, the cheapest index a corpus can keep
-      val out = "target/gate_sink/fingerprint_store"
+      val out = Stores.dir("fingerprint_store")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      docs.select(TextAnalysis.fingerprint($"text").as("fp")).distinct()
-        .write.mode("overwrite").parquet(out)
-      val m = docs.agg(max($"doc_id").as("m"))
-      val tail = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 300)
+      Stores.fingerprints(out, docs)
+      val gen = Stores.split(docs, "doc_id")
+      val tail = gen.newer(300)
       val incoming = tail.select(($"doc_id" + 3000000).as("doc_id"), $"text")
         .unionAll(tail.select(($"doc_id" + 4000000).as("doc_id"),
           concat($"text", lit(" novel suffix")).as("text")))
@@ -2849,18 +2480,13 @@ object LlmQueries {
       // parquet, reconstruct the index from the files, probe the
       // incoming shard against it — same oracle as llm_minhash_incr, so
       // any drift through the storage round-trip hash-mismatches
-      val out = "target/gate_sink/minhash_index"
+      val out = Stores.dir("minhash_index")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val incoming = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 300)
-        .select(($"doc_id" + 3000000).as("doc_id"), $"text")
+      val gen = Stores.split(docs, "doc_id")
+      val incoming = gen.newer(300).select(($"doc_id" + 3000000).as("doc_id"), $"text")
       val idx = Dedup.minhashIndex(docs, "doc_id", "text", k = 16, nBands = 4)
-      // two independent sinks off the shared sketch — overlap (§2.6)
-      graft.operators.Par.jobs(Seq(idx.sets),
-        () => idx.bands.write.mode("overwrite").parquet(s"$out/bands"),
-        () => idx.sets.write.mode("overwrite").parquet(s"$out/sets"))
-      val stored = Dedup.MinhashIndex(
-        s.read.parquet(s"$out/bands"), s.read.parquet(s"$out/sets"))
+      Stores.minhash(idx, out)
+      val stored = Stores.readMinhash(s, out)
       Dedup.minhashProbe(incoming, stored, "doc_id", "text",
         k = 16, nBands = 4, threshold = 0.5)
     }),
@@ -2872,23 +2498,16 @@ object LlmQueries {
       // re-ingested tail-300 slice probes the appended index. Oracle =
       // the full-corpus probe (llm_minhash_incr), so a lost or drifted
       // append under-reports pairs and hash-mismatches
-      val out = "target/gate_sink/minhash_index_append"
+      val out = Stores.dir("minhash_index_append")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val a = docs.crossJoin(broadcast(m)).filter($"doc_id" <= $"m" - 150)
-        .select($"doc_id", $"text")
-      val b = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 150)
-        .select($"doc_id", $"text")
-      val incoming = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 300)
-        .select(($"doc_id" + 3000000).as("doc_id"), $"text")
+      val gen = Stores.split(docs, "doc_id")
+      val a = gen.older(150).select($"doc_id", $"text")
+      val b = gen.newer(150).select($"doc_id", $"text")
+      val incoming = gen.newer(300).select(($"doc_id" + 3000000).as("doc_id"), $"text")
       val idxA = Dedup.minhashIndex(a, "doc_id", "text", k = 16, nBands = 4)
-      // two independent sinks off the shared sketch — overlap (§2.6)
-      graft.operators.Par.jobs(Seq(idxA.sets),
-        () => idxA.bands.write.mode("overwrite").parquet(s"$out/bands"),
-        () => idxA.sets.write.mode("overwrite").parquet(s"$out/sets"))
+      Stores.minhash(idxA, out)
       val appended = Dedup.minhashIndexAppend(
-        Dedup.MinhashIndex(
-          s.read.parquet(s"$out/bands"), s.read.parquet(s"$out/sets")),
+        Stores.readMinhash(s, out),
         b, "doc_id", "text", k = 16, nBands = 4)
       Dedup.minhashProbe(incoming, appended, "doc_id", "text",
         k = 16, nBands = 4, threshold = 0.5)
@@ -2902,16 +2521,12 @@ object LlmQueries {
       // docs now ADMIT (their originals are forgotten), clones of
       // remaining docs still bounce. Oracle = the incremental probe
       // over the remaining corpus only
-      val out = "target/gate_sink/minhash_index_delete"
+      val out = Stores.dir("minhash_index_delete")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val incoming = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 300)
-        .select(($"doc_id" + 3000000).as("doc_id"), $"text")
+      val gen = Stores.split(docs, "doc_id")
+      val incoming = gen.newer(300).select(($"doc_id" + 3000000).as("doc_id"), $"text")
       val idx = Dedup.minhashIndex(docs, "doc_id", "text", k = 16, nBands = 4)
-      // two independent sinks off the shared sketch — overlap (§2.6)
-      graft.operators.Par.jobs(Seq(idx.sets),
-        () => idx.bands.write.mode("overwrite").parquet(s"$out/bands"),
-        () => idx.sets.write.mode("overwrite").parquet(s"$out/sets"))
+      Stores.minhash(idx, out)
       val tomb = docs.filter($"doc_id" % 7 === 2).select($"doc_id")
       val purged = Dedup.MinhashIndex(
         Dedup.storePurge(s.read.parquet(s"$out/bands"), "doc_id", tomb),
@@ -2927,13 +2542,11 @@ object LlmQueries {
       // data) vanish from results with no retraining; serving the
       // purged codes equals serving a fresh encode of the remaining
       // corpus bit-for-bit (per-row encode — spec-pinned)
-      val out = "target/gate_sink/ann_index_delete"
+      val out = Stores.dir("ann_index_delete")
       val emb = Tables.load(s, d, "embeddings")
-      val cents = Similarity.collectCentroids(emb, "vec_id", "embedding", 8)
-      val cbs = Similarity.pqCodebooks(emb, "vec_id", "embedding",
-        m = 4, subDim = 16, nCodes = 8)
-      Similarity.ivfPqEncode(emb, "vec_id", "embedding", cents, cbs, 16)
-        .write.mode("overwrite").parquet(s"$out/codes")
+      val cents = Stores.seedCells(emb)
+      val cbs = Stores.codebooks(emb)
+      Stores.put(s"$out/codes", Stores.ivfPqCodes(emb, cents, cbs))
       val tomb = emb.filter($"vec_id" % 10 === 3).select($"vec_id")
       Similarity.ivfPqTopKStored(
         Dedup.storePurge(s.read.parquet(s"$out/codes"), "vec_id", tomb),
@@ -2953,22 +2566,17 @@ object LlmQueries {
       // llm_ann_index_delete, so the SAME oracle gates both (a compact
       // that loses a row, resurrects a tombstone, or breaks the cell
       // layout hash-mismatches)
-      val out = "target/gate_sink/ann_index_compact"
+      val out = Stores.dir("ann_index_compact")
       val emb = Tables.load(s, d, "embeddings")
-      val m = emb.agg(max($"vec_id").as("m"))
-      val a = emb.crossJoin(broadcast(m)).filter($"vec_id" <= $"m" - 100)
-        .select($"vec_id", $"embedding")
-      val b = emb.crossJoin(broadcast(m)).filter($"vec_id" > $"m" - 100)
-        .select($"vec_id", $"embedding")
-      val cents = Similarity.collectCentroids(emb, "vec_id", "embedding", 8)
-      val cbs = Similarity.pqCodebooks(emb, "vec_id", "embedding",
-        m = 4, subDim = 16, nCodes = 8)
+      val gen = Stores.split(emb, "vec_id")
+      val a = gen.older(100).select($"vec_id", $"embedding")
+      val b = gen.newer(100).select($"vec_id", $"embedding")
+      val cents = Stores.seedCells(emb)
+      val cbs = Stores.codebooks(emb)
       // generation A written, generation B appended (one more file set
       // per cell — the state a production index is in before compaction)
-      Similarity.ivfPqEncode(a, "vec_id", "embedding", cents, cbs, 16)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$out/codes")
-      Similarity.ivfPqEncode(b, "vec_id", "embedding", cents, cbs, 16)
-        .write.mode("append").partitionBy("cell").parquet(s"$out/codes")
+      Stores.putByCell(s"$out/codes",
+        Stores.ivfPqCodes(a, cents, cbs), Stores.ivfPqCodes(b, cents, cbs))
       val tomb = emb.filter($"vec_id" % 10 === 3).select($"vec_id")
       val compacted = Dedup.storeCompact(s.read.parquet(s"$out/codes"),
         "vec_id", Some(tomb), s"$out/codes_v2", partitionCols = Seq("cell"))
@@ -2986,20 +2594,15 @@ object LlmQueries {
       // byte-identical (LlmOpsSpec pins the file statuses) — and
       // serving the selectively-compacted store must equal the
       // llm_ann_index_delete answer (same oracle)
-      val out = "target/gate_sink/ann_selective_compact"
+      val out = Stores.dir("ann_selective_compact")
       val emb = Tables.load(s, d, "embeddings")
-      val m = emb.agg(max($"vec_id").as("m"))
-      val a = emb.crossJoin(broadcast(m)).filter($"vec_id" <= $"m" - 100)
-        .select($"vec_id", $"embedding")
-      val b = emb.crossJoin(broadcast(m)).filter($"vec_id" > $"m" - 100)
-        .select($"vec_id", $"embedding")
-      val cents = Similarity.collectCentroids(emb, "vec_id", "embedding", 8)
-      val cbs = Similarity.pqCodebooks(emb, "vec_id", "embedding",
-        m = 4, subDim = 16, nCodes = 8)
-      Similarity.ivfPqEncode(a, "vec_id", "embedding", cents, cbs, 16)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$out/codes")
-      Similarity.ivfPqEncode(b, "vec_id", "embedding", cents, cbs, 16)
-        .write.mode("append").partitionBy("cell").parquet(s"$out/codes")
+      val gen = Stores.split(emb, "vec_id")
+      val a = gen.older(100).select($"vec_id", $"embedding")
+      val b = gen.newer(100).select($"vec_id", $"embedding")
+      val cents = Stores.seedCells(emb)
+      val cbs = Stores.codebooks(emb)
+      Stores.putByCell(s"$out/codes",
+        Stores.ivfPqCodes(a, cents, cbs), Stores.ivfPqCodes(b, cents, cbs))
       val tomb = emb.filter($"vec_id" % 10 === 3).select($"vec_id")
       val compacted = Dedup.storeCompactSelective(s, s"$out/codes",
         "vec_id", tomb, Seq("cell"), s"$out/codes_staging")
@@ -3014,16 +2617,11 @@ object LlmQueries {
       // admitted shard's fingerprints landed as a parquet APPEND, and
       // the mixed clone/novel incoming shard probed against the
       // read-back union — clones of EITHER generation must bounce
-      val out = "target/gate_sink/fingerprint_store_append"
+      val out = Stores.dir("fingerprint_store_append")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      docs.crossJoin(broadcast(m)).filter($"doc_id" <= $"m" - 150)
-        .select(TextAnalysis.fingerprint($"text").as("fp")).distinct()
-        .write.mode("overwrite").parquet(out)
-      docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 150)
-        .select(TextAnalysis.fingerprint($"text").as("fp")).distinct()
-        .write.mode("append").parquet(out)
-      val tail = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 300)
+      val gen = Stores.split(docs, "doc_id")
+      Stores.fingerprints(out, gen.older(150), gen.newer(150))
+      val tail = gen.newer(300)
       val incoming = tail.select(($"doc_id" + 3000000).as("doc_id"), $"text")
         .unionAll(tail.select(($"doc_id" + 4000000).as("doc_id"),
           concat($"text", lit(" novel suffix")).as("text")))
@@ -3041,20 +2639,15 @@ object LlmQueries {
       // the compacted store: clones of forgotten docs ADMIT again,
       // clones of surviving docs still bounce. A compact that loses an
       // fp row or resurrects a tombstone hash-mismatches.
-      val out = "target/gate_sink/fingerprint_store_compact"
+      val out = Stores.dir("fingerprint_store_compact")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      docs.crossJoin(broadcast(m)).filter($"doc_id" <= $"m" - 150)
-        .select(TextAnalysis.fingerprint($"text").as("fp")).distinct()
-        .write.mode("overwrite").parquet(s"$out/store")
-      docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 150)
-        .select(TextAnalysis.fingerprint($"text").as("fp")).distinct()
-        .write.mode("append").parquet(s"$out/store")
+      val gen = Stores.split(docs, "doc_id")
+      Stores.fingerprints(s"$out/store", gen.older(150), gen.newer(150))
       val tomb = docs.filter($"doc_id" % 7 === 0)
         .select(TextAnalysis.fingerprint($"text").as("fp")).distinct()
       val compacted = graft.operators.Dedup.storeCompact(
         s.read.parquet(s"$out/store"), "fp", Some(tomb), s"$out/store_v2")
-      val tail = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 300)
+      val tail = gen.newer(300)
       val incoming = tail.select(($"doc_id" + 3000000).as("doc_id"), $"text")
         .unionAll(tail.select(($"doc_id" + 4000000).as("doc_id"),
           concat($"text", lit(" novel suffix")).as("text")))
@@ -3172,17 +2765,13 @@ object LlmQueries {
       // docs hit unseen trigrams/contexts, exercising every back-off
       // branch; n_unseen is the drift signal. The oracle replays
       // train-on-half + branchy scoring from the parquet inputs.
-      val out = "target/gate_sink/kn_model"
+      val out = Stores.dir("kn_model")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
       val model = TextAnalysis.trigramKnTrain(
         docs.filter($"doc_id" % 2 === 0), "doc_id", "text")
-      // the six model tables are independent sinks off two shared
-      // localCheckpointed frames — write them CONCURRENTLY (guide §2.6:
-      // overlap independent jobs; Par scaladoc has the safety argument)
-      graft.operators.Par.jobs(Seq(model("types")), model.toSeq.map { case (k, v) => () =>
-        v.write.mode("overwrite").parquet(s"$out/$k") }: _*)
+      Stores.knModel(model, out)
       TextAnalysis.trigramKnScoreStored(docs, "doc_id", "text",
-        model.keys.map(k => k -> s.read.parquet(s"$out/$k")).toMap)
+        Stores.readKnModel(s, model, out))
     }),
     "llm_trigram_kn_append" -> ((s, d) => {
       import s.implicits._
@@ -3196,23 +2785,19 @@ object LlmQueries {
       // (train-on-evens + score-all replay) gates the merge law
       // append(train(A), B) == train(A ∪ B) end-to-end: any drifted
       // count shifts a back-off branch and hash-mismatches.
-      val out = "target/gate_sink/kn_model_append"
+      val out = Stores.dir("kn_model_append")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
       val mA = TextAnalysis.trigramKnTrain(
         docs.filter($"doc_id" % 4 === 0), "doc_id", "text")
-      // both generations' six-table stores are independent-sink writes
-      // off shared checkpointed frames — each generation's batch runs
-      // CONCURRENTLY (guide §2.6; v2 depends on v1 via the read-back,
-      // so the two batches themselves stay sequenced)
-      graft.operators.Par.jobs(Seq(mA("types")), mA.toSeq.map { case (k, v) => () =>
-        v.write.mode("overwrite").parquet(s"$out/v1/$k") }: _*)
-      val stored = mA.keys.map(k => k -> s.read.parquet(s"$out/v1/$k")).toMap
+      // v2 is merged from v1's read-back, so the two stores are written
+      // one after the other
+      Stores.knModel(mA, s"$out/v1")
+      val stored = Stores.readKnModel(s, mA, s"$out/v1")
       val merged = TextAnalysis.trigramKnAppend(stored,
         docs.filter($"doc_id" % 4 === 2), "doc_id", "text")
-      graft.operators.Par.jobs(Seq(merged("types")), merged.toSeq.map { case (k, v) => () =>
-        v.write.mode("overwrite").parquet(s"$out/v2/$k") }: _*)
+      Stores.knModel(merged, s"$out/v2")
       TextAnalysis.trigramKnScoreStored(docs, "doc_id", "text",
-        merged.keys.map(k => k -> s.read.parquet(s"$out/v2/$k")).toMap)
+        Stores.readKnModel(s, merged, s"$out/v2"))
     }),
     "llm_script" -> ((s, d) => {
       import s.implicits._
@@ -3278,7 +2863,7 @@ object LlmQueries {
       // leg must be an exact round-trip, so one mis-framed, dropped,
       // or duplicated record shifts text → dedup → pack offsets and
       // hash-mismatches.
-      val out = "target/gate_sink/pipeline14_warc"
+      val out = Stores.dir("pipeline14_warc")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
       val base = docs.unionAll(
         docs.select(($"doc_id" + 700000).as("doc_id"), $"text"))
@@ -3396,7 +2981,7 @@ object LlmQueries {
       // a cell EQUI-join — each corpus row scored only against the
       // queries probing its cell
       val emb = Tables.load(s, d, "embeddings").select($"vec_id", $"embedding")
-      val cents = Similarity.collectCentroids(emb, "vec_id", "embedding", 8)
+      val cents = Stores.seedCells(emb)
       Similarity.ivfKnnJoin(emb.filter($"vec_id" < 10), emb,
         "vec_id", "vec_id", "embedding", "embedding", cents,
         k = 5, probes = 2, excludeSelf = true)
@@ -3411,7 +2996,7 @@ object LlmQueries {
       val emb = Tables.load(s, d, "embeddings").select($"vec_id", $"embedding")
       Similarity.annRecallReport(emb.filter($"vec_id" < 10), emb,
         "vec_id", "vec_id", "embedding", "embedding",
-        Similarity.collectCentroids(emb, "vec_id", "embedding", 8),
+        Stores.seedCells(emb),
         k = 5, probes = 2)
     }),
     "llm_knn_join_stored" -> ((s, d) => {
@@ -3421,26 +3006,17 @@ object LlmQueries {
       // as plain parquet, read back, and the ten-query batch served via
       // probe-cell equi-join + per-query in-plan ADC LUTs; the corpus
       // vectors are never read after the encode
-      val out = "target/gate_sink/knn_stored"
+      val out = Stores.dir("knn_stored")
       val emb = Tables.load(s, d, "embeddings")
-      val cents = Similarity.collectCentroids(emb, "vec_id", "embedding", 8)
-      val cbs = Similarity.pqCodebooks(emb, "vec_id", "embedding",
-        m = 4, subDim = 16, nCodes = 8)
-      // three independent sinks (cents/cbs already driver-side) —
-      // overlap them (guide §2.6)
-      graft.operators.Par.jobs(
-        () => Similarity.centroidsToDf(s, cents)
-          .write.mode("overwrite").parquet(s"$out/cells"),
-        () => Similarity.codebooksToDf(s, cbs)
-          .write.mode("overwrite").parquet(s"$out/codebooks"),
-        () => Similarity.ivfPqEncode(emb, "vec_id", "embedding", cents, cbs, 16)
-          .write.mode("overwrite").parquet(s"$out/codes"))
+      val cents = Stores.seedCells(emb)
+      val cbs = Stores.codebooks(emb)
+      Stores.ivfPq(s, cents, cbs, out,
+        Stores.ivfPqCodes(emb, cents, cbs))
+      val (cents2, cbs2) = Stores.readIvfPq(s, out)
       Similarity.ivfPqKnnJoinStored(
         emb.filter($"vec_id" < 10).select($"vec_id", $"embedding"),
         s.read.parquet(s"$out/codes"), "vec_id", "vec_id", "embedding",
-        Similarity.centroidsFromDf(s.read.parquet(s"$out/cells")),
-        Similarity.codebooksFromDf(s.read.parquet(s"$out/codebooks")),
-        subDim = 16, k = 5, probes = 2, excludeSelf = true)
+        cents2, cbs2, subDim = 16, k = 5, probes = 2, excludeSelf = true)
     }),
     "llm_knn_join_pruned" -> ((s, d) => {
       import s.implicits._
@@ -3450,13 +3026,11 @@ object LlmQueries {
       // pruning for the whole batch; output identical to
       // llm_knn_join_stored (same oracle), PlanSpec pins the
       // PartitionFilters
-      val out = "target/gate_sink/knn_stored_part"
+      val out = Stores.dir("knn_stored_part")
       val emb = Tables.load(s, d, "embeddings")
-      val cents = Similarity.collectCentroids(emb, "vec_id", "embedding", 8)
-      val cbs = Similarity.pqCodebooks(emb, "vec_id", "embedding",
-        m = 4, subDim = 16, nCodes = 8)
-      Similarity.ivfPqEncode(emb, "vec_id", "embedding", cents, cbs, 16)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$out/codes")
+      val cents = Stores.seedCells(emb)
+      val cbs = Stores.codebooks(emb)
+      Stores.putByCell(s"$out/codes", Stores.ivfPqCodes(emb, cents, cbs))
       Similarity.ivfPqKnnJoinStoredPruned(
         emb.filter($"vec_id" < 10).select($"vec_id", $"embedding"),
         s.read.parquet(s"$out/codes"), "vec_id", "vec_id", "embedding",
@@ -3468,13 +3042,11 @@ object LlmQueries {
       // each query's top-15, exact cosine re-ranks only those — the
       // vector table is consulted solely through the broadcast
       // candidate-pair join
-      val out = "target/gate_sink/knn_rerank"
+      val out = Stores.dir("knn_rerank")
       val emb = Tables.load(s, d, "embeddings")
-      val cents = Similarity.collectCentroids(emb, "vec_id", "embedding", 8)
-      val cbs = Similarity.pqCodebooks(emb, "vec_id", "embedding",
-        m = 4, subDim = 16, nCodes = 8)
-      Similarity.ivfPqEncode(emb, "vec_id", "embedding", cents, cbs, 16)
-        .write.mode("overwrite").parquet(s"$out/codes")
+      val cents = Stores.seedCells(emb)
+      val cbs = Stores.codebooks(emb)
+      Stores.put(s"$out/codes", Stores.ivfPqCodes(emb, cents, cbs))
       Similarity.ivfPqKnnJoinStoredRerank(
         emb.filter($"vec_id" < 10).select($"vec_id", $"embedding"),
         s.read.parquet(s"$out/codes"), emb,
@@ -3492,30 +3064,19 @@ object LlmQueries {
       // fresh full-corpus build — encode is per-row, so the oracle is
       // the llm_ann_ivf_pq family (A holds the lowest ids, hence the
       // same seed cells/codebooks as the full corpus)
-      val out = "target/gate_sink/ann_index_append"
+      val out = Stores.dir("ann_index_append")
       val emb = Tables.load(s, d, "embeddings")
-      val m = emb.agg(max($"vec_id").as("m"))
-      val a = emb.crossJoin(broadcast(m)).filter($"vec_id" <= $"m" - 100)
-        .select($"vec_id", $"embedding")
-      val b = emb.crossJoin(broadcast(m)).filter($"vec_id" > $"m" - 100)
-        .select($"vec_id", $"embedding")
-      val cents = Similarity.collectCentroids(a, "vec_id", "embedding", 8)
-      val cbs = Similarity.pqCodebooks(a, "vec_id", "embedding",
-        m = 4, subDim = 16, nCodes = 8)
-      // three independent sinks (cents/cbs already driver-side) —
-      // overlap the corpus-build writes (guide §2.6)
-      graft.operators.Par.jobs(
-        () => Similarity.centroidsToDf(s, cents)
-          .write.mode("overwrite").parquet(s"$out/cells"),
-        () => Similarity.codebooksToDf(s, cbs)
-          .write.mode("overwrite").parquet(s"$out/codebooks"),
-        () => Similarity.ivfPqEncode(a, "vec_id", "embedding", cents, cbs, 16)
-          .write.mode("overwrite").parquet(s"$out/codes"))
+      val gen = Stores.split(emb, "vec_id")
+      val a = gen.older(100).select($"vec_id", $"embedding")
+      val b = gen.newer(100).select($"vec_id", $"embedding")
+      val cents = Stores.seedCells(a)
+      val cbs = Stores.codebooks(a)
+      Stores.ivfPq(s, cents, cbs, out,
+        Stores.ivfPqCodes(a, cents, cbs))
       // the maintenance run: read back the artifacts, encode ONLY the
       // new generation, append
-      val cents2 = Similarity.centroidsFromDf(s.read.parquet(s"$out/cells"))
-      val cbs2 = Similarity.codebooksFromDf(s.read.parquet(s"$out/codebooks"))
-      Similarity.ivfPqEncode(b, "vec_id", "embedding", cents2, cbs2, 16)
+      val (cents2, cbs2) = Stores.readIvfPq(s, out)
+      Stores.ivfPqCodes(b, cents2, cbs2)
         .write.mode("append").parquet(s"$out/codes")
       Similarity.ivfPqTopKStored(s.read.parquet(s"$out/codes"), "vec_id",
         cents2, cbs2, subDim = 16,
@@ -3567,15 +3128,9 @@ object LlmQueries {
       // hashed features a learnable signal), persist the weight frame,
       // score the corpus from the READ-BACK weights — train once,
       // store, serve every ingestion run
-      val out = "target/gate_sink/quality_lr"
+      val out = Stores.dir("quality_lr")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val pos = docs.filter($"doc_id" % 2 === 0)
-      val neg = docs.filter($"doc_id" % 2 === 1)
-        .select($"doc_id", upper($"text").as("text"))
-      val w = graft.operators.Classifier.lrTrain(pos, neg, "doc_id", "text",
-        buckets = 64, iters = 2, lr = 0.5)
-      graft.operators.Classifier.weightsToDf(s, w)
-        .write.mode("overwrite").parquet(out)
+      Stores.lrWeights(s, docs, out)
       graft.operators.Classifier.lrScore(docs, "doc_id", "text",
         s.read.parquet(out), buckets = 64)
     }),
@@ -3587,15 +3142,9 @@ object LlmQueries {
       // fixture (resubstitution — the fixture trains on all labels;
       // the report's algebra is what the gate pins). Oracle extends
       // the llm_quality_classifier replay with the threshold panel
-      val out = "target/gate_sink/quality_lr_eval"
+      val out = Stores.dir("quality_lr_eval")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val pos = docs.filter($"doc_id" % 2 === 0)
-      val neg = docs.filter($"doc_id" % 2 === 1)
-        .select($"doc_id", upper($"text").as("text"))
-      val w = graft.operators.Classifier.lrTrain(pos, neg, "doc_id", "text",
-        buckets = 64, iters = 2, lr = 0.5)
-      graft.operators.Classifier.weightsToDf(s, w)
-        .write.mode("overwrite").parquet(out)
+      val (pos, neg) = Stores.lrWeights(s, docs, out)
       graft.operators.Classifier.lrEvalReport(pos, neg, "doc_id", "text",
         s.read.parquet(out), buckets = 64)
     }),
@@ -3606,15 +3155,9 @@ object LlmQueries {
       // into 10 equal-width bins, mean_score vs frac_pos per bin —
       // what decides whether the score is usable as a sampling WEIGHT,
       // not just a threshold
-      val out = "target/gate_sink/quality_lr_calibration"
+      val out = Stores.dir("quality_lr_calibration")
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val pos = docs.filter($"doc_id" % 2 === 0)
-      val neg = docs.filter($"doc_id" % 2 === 1)
-        .select($"doc_id", upper($"text").as("text"))
-      val w = graft.operators.Classifier.lrTrain(pos, neg, "doc_id",
-        "text", buckets = 64, iters = 2, lr = 0.5)
-      graft.operators.Classifier.weightsToDf(s, w)
-        .write.mode("overwrite").parquet(out)
+      val (pos, neg) = Stores.lrWeights(s, docs, out)
       graft.operators.Classifier.lrCalibrationReport(pos, neg, "doc_id",
         "text", s.read.parquet(out), buckets = 64, nBins = 10)
     }),
@@ -3643,8 +3186,7 @@ object LlmQueries {
       val emb = Tables.load(s, d, "embeddings")
       Similarity.ivfPqTopKRerank(emb, "vec_id", "embedding",
         Similarity.collectCentroids(emb, "vec_id", "embedding", nCells = 8),
-        Similarity.pqCodebooks(emb, "vec_id", "embedding",
-          m = 4, subDim = 16, nCodes = 8),
+        Stores.codebooks(emb),
         subDim = 16, queryId = 0, k = 10, probes = 2, candC = 20)
     }),
     "llm_embed_outliers" -> ((s, d) => {
@@ -3654,7 +3196,7 @@ object LlmQueries {
       // the curation pass that drops encoder failures / mislabeled
       // vectors without emptying diffuse-but-healthy cells
       val emb = Tables.load(s, d, "embeddings").select($"vec_id", $"embedding")
-      val cents = Similarity.collectCentroids(emb, "vec_id", "embedding", 8)
+      val cents = Stores.seedCells(emb)
       Similarity.embeddingOutliers(emb, "vec_id", "embedding", cents, q = 0.25)
     }),
     "llm_shards" -> ((s, d) => {
@@ -3674,9 +3216,8 @@ object LlmQueries {
       // localize them (start/length per side) plus any genuine
       // in-corpus overlaps ≥ w+k-1 = 11 tokens
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val clones = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 100)
-        .select(($"doc_id" + 3000000).as("doc_id"), $"text")
+      val gen = Stores.split(docs, "doc_id")
+      val clones = gen.newer(100).select(($"doc_id" + 3000000).as("doc_id"), $"text")
       TextAnalysis.sharedSpanExtents(docs.unionAll(clones),
         "doc_id", "text", k = 8, w = 4)
     }),
@@ -3686,9 +3227,8 @@ object LlmQueries {
       // tail-100 clones must come back fully cut (n_removed = n_tokens,
       // clean_text = ''), their originals untouched by keep-first
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val m = docs.agg(max($"doc_id").as("m"))
-      val clones = docs.crossJoin(broadcast(m)).filter($"doc_id" > $"m" - 100)
-        .select(($"doc_id" + 3000000).as("doc_id"), $"text")
+      val gen = Stores.split(docs, "doc_id")
+      val clones = gen.newer(100).select(($"doc_id" + 3000000).as("doc_id"), $"text")
       TextAnalysis.dedupExactSubstrings(docs.unionAll(clones),
         "doc_id", "text", k = 8, w = 4)
     }),
@@ -3705,7 +3245,7 @@ object LlmQueries {
       // n_inversions counts order_key decreases along that order — the
       // oracle pins it to 0, so a lost or misordered write
       // hash-mismatches
-      val out = "target/gate_sink/documents_sharded"
+      val out = Stores.dir("documents_sharded")
       graft.operators.Sampling.assignShards(
           Tables.load(s, d, "documents").select($"doc_id", $"text"),
           $"text", numShards = 8, salt = "shard:")

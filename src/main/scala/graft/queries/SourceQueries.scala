@@ -72,7 +72,7 @@ object SourceQueries {
       // read the files back and aggregate; the oracle aggregates the
       // source table directly, so any write/read corruption (lost rows,
       // partition-column mangling, type drift) hash-mismatches
-      val out = "target/gate_sink/documents_by_lang"
+      val out = Stores.dir("documents_by_lang")
       graft.Tables.load(s, d, "documents")
         .write.mode("overwrite").partitionBy("lang").parquet(out)
       s.read.parquet(out)
@@ -89,7 +89,7 @@ object SourceQueries {
       // exercises record-boundary resynchronization, not just parsing.
       // Header fields AND a payload checksum are oracle-compared, so a
       // duplicated, dropped, or mis-framed record hash-mismatches.
-      val out = "target/gate_sink/warc_fixture"
+      val out = Stores.dir("warc_fixture")
       val docs = graft.Tables.load(s, d, "documents")
         .select($"doc_id",
           concat(lit("http://graft.local/doc/"), $"doc_id").as("uri"),
@@ -110,7 +110,7 @@ object SourceQueries {
       // must resynchronize to gzip member boundaries (raw magic scan
       // + inflate-validate), not just inflate from offset 0. Oracle
       // identical to s9_warc: headers + payload checksum.
-      val out = "target/gate_sink/warc_gz_fixture"
+      val out = Stores.dir("warc_gz_fixture")
       val docs = graft.Tables.load(s, d, "documents")
         .select($"doc_id",
           concat(lit("http://graft.local/doc/"), $"doc_id").as("uri"),
@@ -129,7 +129,7 @@ object SourceQueries {
       // reader path, aggregate INCLUDING a text checksum — JSON string
       // escaping round-trips or the hash mismatches the parquet-sourced
       // oracle
-      val out = "target/gate_sink/documents_jsonl"
+      val out = Stores.dir("documents_jsonl")
       graft.Tables.load(s, d, "documents")
         .select($"doc_id", $"lang", $"text")
         .write.mode("overwrite").json(out)

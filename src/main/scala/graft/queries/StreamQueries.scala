@@ -42,8 +42,8 @@ object StreamQueries {
       // (same split, permutations, threshold as llm_minhash_incr, whose
       // oracle this reuses)
       val docs = Tables.load(s, d, "documents").select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val incoming = docs.crossJoin(broadcast(m)).filter(col("doc_id") > col("m") - 300)
+      val gen = Stores.split(docs, "doc_id")
+      val incoming = gen.newer(300)
         .select((col("doc_id") + 3000000).as("doc_id"), col("text"))
       val idx = graft.operators.Dedup.minhashIndex(docs, "doc_id", "text")
       graft.streaming.Corpus.admitProbe(incoming, idx, "doc_id", "text")
@@ -57,14 +57,13 @@ object StreamQueries {
       // the static corpus index. Admitted = incoming docs surviving all
       // three — every stage stateless/stream-static by construction
       val docs = Tables.load(s, d, "documents").select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
+      val gen = Stores.split(docs, "doc_id")
       // incoming mixes CLONES of corpus docs (near-dup probe rejects
       // them) with NOVEL docs built by concatenating three distant
       // corpus docs (pairwise jaccard vs any one original ~ 1/3 < 0.5
       // -> admitted unless quality/decontamination drops them); all
       // component docs sit below the eval slice
-      val a = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 300 && col("doc_id") <= col("m") - 200)
+      val a = gen.where(gen.above(300) && gen.atMost(200))
       val clones = a.select((col("doc_id") + 3000000).as("doc_id"), col("text"))
       val novel = a.select(col("doc_id").as("aid"), col("text").as("atext"))
         .join(docs.select(col("doc_id").as("bid"), col("text").as("btext")),
@@ -74,8 +73,7 @@ object StreamQueries {
         .select((col("aid") + 4000000).as("doc_id"),
           concat_ws(" ", col("atext"), col("btext"), col("ctext")).as("text"))
       val incoming = clones.unionAll(novel)
-      val ev = docs.crossJoin(broadcast(m)).filter(col("doc_id") > col("m") - 100)
-        .select(col("doc_id"), col("text"))
+      val ev = gen.newer(100).select(col("doc_id"), col("text"))
       val quality = incoming.filter(graft.operators.TextAnalysis.gopherKeep(
         col("text"), minTokens = 10, maxTokens = 100000,
         minMeanWordLen = 2.0, maxMeanWordLen = 10.0,
@@ -97,15 +95,9 @@ object StreamQueries {
       // under the stored model" step. Same oracle as
       // llm_quality_classifier (the batch scorer's algebra), so the
       // two scoring surfaces are pinned equal on this corpus
-      val out = "target/gate_sink/quality_lr_stream"
+      val out = Stores.dir("quality_lr_stream")
       val docs = Tables.load(s, d, "documents").select(col("doc_id"), col("text"))
-      val pos = docs.filter(col("doc_id") % 2 === 0)
-      val neg = docs.filter(col("doc_id") % 2 === 1)
-        .select(col("doc_id"), upper(col("text")).as("text"))
-      val w = graft.operators.Classifier.lrTrain(pos, neg, "doc_id", "text",
-        buckets = 64, iters = 2, lr = 0.5)
-      graft.operators.Classifier.weightsToDf(s, w)
-        .write.mode("overwrite").parquet(out)
+      Stores.lrWeights(s, docs, out)
       graft.streaming.Corpus.scoreQualityStream(docs, "doc_id", "text",
         graft.operators.Classifier.weightsFromDf(s.read.parquet(out)),
         buckets = 64)
@@ -117,11 +109,10 @@ object StreamQueries {
       // admission with zero recomputation of the eval suite or the
       // corpus sketches. Same fixture and oracle as st_admission, so
       // any drift through storage hash-mismatches
-      val out = "target/gate_sink/admission_stores"
+      val out = Stores.dir("admission_stores")
       val docs = Tables.load(s, d, "documents").select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val a = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 300 && col("doc_id") <= col("m") - 200)
+      val gen = Stores.split(docs, "doc_id")
+      val a = gen.where(gen.above(300) && gen.atMost(200))
       val clones = a.select((col("doc_id") + 3000000).as("doc_id"), col("text"))
       val novel = a.select(col("doc_id").as("aid"), col("text").as("atext"))
         .join(docs.select(col("doc_id").as("bid"), col("text").as("btext")),
@@ -131,26 +122,17 @@ object StreamQueries {
         .select((col("aid") + 4000000).as("doc_id"),
           concat_ws(" ", col("atext"), col("btext"), col("ctext")).as("text"))
       val incoming = clones.unionAll(novel)
-      val ev = docs.crossJoin(broadcast(m)).filter(col("doc_id") > col("m") - 100)
-        .select(col("doc_id"), col("text"))
+      val ev = gen.newer(100).select(col("doc_id"), col("text"))
       // write both stores once (the index-build run), read them back
-      val dcIdx = graft.operators.Dedup.decontamIndex(ev, "doc_id", "text",
-        n = 13, expectedItems = 1L << 16, numBits = 1L << 20)
+      val dcIdx = Stores.decontamIndex(ev)
       val mhIdx = graft.operators.Dedup.minhashIndex(docs, "doc_id", "text")
       // four independent store sinks (two per index, each pair off one
       // checkpointed sketch frame) — overlap them (guide §2.6)
       graft.operators.Par.jobs(
-        () => dcIdx.sketch.write.mode("overwrite").parquet(s"$out/decontam/sketch"),
-        () => dcIdx.hashes.write.mode("overwrite").parquet(s"$out/decontam/hashes"),
-        () => graft.operators.Par.jobs(Seq(mhIdx.sets),
-          () => mhIdx.bands.write.mode("overwrite").parquet(s"$out/minhash/bands"),
-          () => mhIdx.sets.write.mode("overwrite").parquet(s"$out/minhash/sets")))
-      val dcStored = graft.operators.Dedup.DecontamIndex(
-        s.read.parquet(s"$out/decontam/sketch"),
-        s.read.parquet(s"$out/decontam/hashes"))
-      val mhStored = graft.operators.Dedup.MinhashIndex(
-        s.read.parquet(s"$out/minhash/bands"),
-        s.read.parquet(s"$out/minhash/sets"))
+        () => Stores.decontam(dcIdx, s"$out/decontam"),
+        () => Stores.minhash(mhIdx, s"$out/minhash"))
+      val dcStored = Stores.readDecontam(s, s"$out/decontam")
+      val mhStored = Stores.readMinhash(s, s"$out/minhash")
       val quality = incoming.filter(graft.operators.TextAnalysis.gopherKeep(
         col("text"), minTokens = 10, maxTokens = 100000,
         minMeanWordLen = 2.0, maxMeanWordLen = 10.0,
@@ -182,11 +164,10 @@ object StreamQueries {
       // fixture, same oracle) — a LOST append admits batch-2 rows and
       // hash-mismatches; a WRONG append changes batch-1 admission and
       // mismatches too
-      val out = "target/gate_sink/admission_append"
+      val out = Stores.dir("admission_append")
       val docs = Tables.load(s, d, "documents").select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val a = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 300 && col("doc_id") <= col("m") - 200)
+      val gen = Stores.split(docs, "doc_id")
+      val a = gen.where(gen.above(300) && gen.atMost(200))
       val clones = a.select((col("doc_id") + 3000000).as("doc_id"), col("text"))
       val novel = a.select(col("doc_id").as("aid"), col("text").as("atext"))
         .join(docs.select(col("doc_id").as("bid"), col("text").as("btext")),
@@ -196,18 +177,14 @@ object StreamQueries {
         .select((col("aid") + 4000000).as("doc_id"),
           concat_ws(" ", col("atext"), col("btext"), col("ctext")).as("text"))
       val batch1 = clones.unionAll(novel)
-      val ev = docs.crossJoin(broadcast(m)).filter(col("doc_id") > col("m") - 100)
-        .select(col("doc_id"), col("text"))
+      val ev = gen.newer(100).select(col("doc_id"), col("text"))
       // the stores, written once at corpus-build time: a fingerprint
       // store (exact stage) and the minhash band/sketch index
       val mh = Dedup.minhashIndex(docs, "doc_id", "text")
       // three independent store sinks — overlap them (guide §2.6)
       graft.operators.Par.jobs(
-        () => docs.select(TextAnalysis.fingerprint(col("text")).as("fp"))
-          .distinct().write.mode("overwrite").parquet(s"$out/fp"),
-        () => graft.operators.Par.jobs(Seq(mh.sets),
-          () => mh.bands.write.mode("overwrite").parquet(s"$out/mh/bands"),
-          () => mh.sets.write.mode("overwrite").parquet(s"$out/mh/sets")))
+        () => Stores.fingerprints(s"$out/fp", docs),
+        () => Stores.minhash(mh, s"$out/mh"))
       // one micro-batch's admission against the CURRENT stores: quality
       // -> decontamination -> exact (fp anti-join) -> near-dup probe
       def admitted(batch: DataFrame): DataFrame = {
@@ -225,8 +202,7 @@ object StreamQueries {
           clean.join(s.read.parquet(s"$out/fp"),
               TextAnalysis.fingerprint(col("text")) === col("fp"), "left_anti")
             .select(col("doc_id"), col("text")))
-        val mhStored = Dedup.MinhashIndex(
-          s.read.parquet(s"$out/mh/bands"), s.read.parquet(s"$out/mh/sets"))
+        val mhStored = Stores.readMinhash(s, s"$out/mh")
         val hits = graft.streaming.Corpus.admitProbe(fresh, mhStored,
             "doc_id", "text")
           .select(col("id_new").as("doc_id")).distinct()
@@ -267,20 +243,13 @@ object StreamQueries {
       // corpus dHash frame; the image counterpart of st_minhash. Same
       // fixture and oracle as llm_image_incr, so drift through the
       // streaming surface hash-mismatches
-      val out = "target/gate_sink/st_image_dhash"
+      val out = Stores.dir("st_image_dhash")
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 300 && length(col("text")) >= 400)
-        .select(col("doc_id"), col("text"))
-      Multimodal.dHash(Multimodal.asMedia(slice, "doc_id", "text"))
-        .write.mode("overwrite").parquet(out)
-      val edited = slice.select((col("doc_id") + 3000000).as("doc_id"),
-        concat(substring(col("text"), 1, 10), lit("QQQQ"),
-          expr("substring(text, 15)")).as("text"))
+      val media = Stores.media(docs)
+      Stores.dHash(out, media.slice)
       Multimodal.imageNearDupsBetween(
-          Multimodal.asMedia(edited, "doc_id", "text"),
+          Multimodal.asMedia(media.edited, "doc_id", "text"),
           s.read.parquet(out), maxHamming = 3, nBands = 4)
         .dropDuplicates("id_new", "id_corpus")
     }),
@@ -299,16 +268,11 @@ object StreamQueries {
       // spans ≤ 2 adjacent luma cells ⇒ ≤ 3 gradient bits ⇒ within
       // maxHamming deterministically). Final admitted set = batch 1's
       // alone; a lost append admits batch-2 rows and hash-mismatches
-      val out = "target/gate_sink/image_admission_append"
+      val out = Stores.dir("image_admission_append")
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val slice = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 300 && length(col("text")) >= 400)
-        .select(col("doc_id"), col("text"))
-      graft.operators.Multimodal.dHash(
-          Multimodal.asMedia(slice, "doc_id", "text"))
-        .write.mode("overwrite").parquet(s"$out/dh")
+      val media = Stores.media(docs)
+      Stores.dHash(s"$out/dh", media.slice)
       def admitted(batch: DataFrame): DataFrame = {
         val hits = Multimodal.imageNearDupsBetween(
             Multimodal.asMedia(batch, "doc_id", "text"),
@@ -316,9 +280,9 @@ object StreamQueries {
           .select(col("id_new").as("doc_id")).distinct()
         batch.join(hits, Seq("doc_id"), "left_anti")
       }
-      val batch1 = slice
+      val batch1 = media.slice
         .select((col("doc_id") + 3000000).as("doc_id"), col("text"))
-        .unionAll(slice.select((col("doc_id") + 4000000).as("doc_id"),
+        .unionAll(media.slice.select((col("doc_id") + 4000000).as("doc_id"),
           reverse(col("text")).as("text")))
       admitted(batch1).write.mode("overwrite").parquet(s"$out/admitted_b1")
       val adm1 = s.read.parquet(s"$out/admitted_b1")
@@ -344,15 +308,14 @@ object StreamQueries {
       // non-associative shortcut hash-mismatches. Versioned store paths
       // because a parquet store cannot be overwritten from its own
       // read.
-      val out = "target/gate_sink/st_sample_k"
+      val out = Stores.dir("st_sample_k")
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
+      val gen = Stores.split(docs, "doc_id")
       val slices = Seq(
-        docs.crossJoin(broadcast(m)).filter(col("doc_id") <= col("m") - 300),
-        docs.crossJoin(broadcast(m)).filter(
-          col("doc_id") > col("m") - 300 && col("doc_id") <= col("m") - 100),
-        docs.crossJoin(broadcast(m)).filter(col("doc_id") > col("m") - 100))
+        gen.older(300),
+        gen.where(gen.above(300) && gen.atMost(100)),
+        gen.newer(100))
         .map(_.select(col("doc_id"), col("text")))
       var prev: Option[String] = None
       slices.zipWithIndex.foreach { case (slice, i) =>
@@ -374,15 +337,14 @@ object StreamQueries {
       // merge from the stored base columns — no priority ever persists
       // stale); same merge loop, same StreamingSpec-pinned mechanics,
       // gated on the one-shot llm_sample_weighted oracle
-      val out = "target/gate_sink/st_sample_weighted"
+      val out = Stores.dir("st_sample_weighted")
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"), col("n_chars"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
+      val gen = Stores.split(docs, "doc_id")
       val slices = Seq(
-        docs.crossJoin(broadcast(m)).filter(col("doc_id") <= col("m") - 300),
-        docs.crossJoin(broadcast(m)).filter(
-          col("doc_id") > col("m") - 300 && col("doc_id") <= col("m") - 100),
-        docs.crossJoin(broadcast(m)).filter(col("doc_id") > col("m") - 100))
+        gen.older(300),
+        gen.where(gen.above(300) && gen.atMost(100)),
+        gen.newer(100))
         .map(_.select(col("doc_id"), col("text"), col("n_chars")))
       var prev: Option[String] = None
       slices.zipWithIndex.foreach { case (slice, i) =>
@@ -416,15 +378,14 @@ object StreamQueries {
       // append, or a stale-stats shortcut all hash-mismatch. Three
       // micro-batches here (vs llm_bm25_append's two generations) so
       // the sequencing itself is exercised.
-      val out = "target/gate_sink/st_bm25_append"
+      val out = Stores.dir("st_bm25_append")
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
+      val gen = Stores.split(docs, "doc_id")
       val slices = Seq(
-        docs.crossJoin(broadcast(m)).filter(col("doc_id") <= col("m") - 200),
-        docs.crossJoin(broadcast(m)).filter(
-          col("doc_id") > col("m") - 200 && col("doc_id") <= col("m") - 100),
-        docs.crossJoin(broadcast(m)).filter(col("doc_id") > col("m") - 100))
+        gen.older(200),
+        gen.where(gen.above(200) && gen.atMost(100)),
+        gen.newer(100))
       // per micro-batch, the postings delta and the doclens delta are
       // independent sinks off one checkpointed index — overlap them
       // (guide §2.6); the batch SEQUENCE itself stays strictly ordered
@@ -454,17 +415,11 @@ object StreamQueries {
       // the one-shot batch serve exactly — the llm_hybrid_join
       // algebra, whose oracle gates this. Batch split 1 / {2, 3} so
       // the sequencing itself is exercised.
-      val out = "target/gate_sink/st_hybrid_serve"
+      val out = Stores.dir("st_hybrid_serve")
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
       val emb = Tables.load(s, d, "embeddings")
-      val ix = graft.operators.Reuse.Local(
-        TextAnalysis.bm25Index(docs, "doc_id", "text"))
-      // two independent sinks off the shared checkpoint — overlap (§2.6)
-      graft.operators.Par.jobs(Seq(ix),
-        () => ix.write.mode("overwrite").parquet(s"$out/postings"),
-        () => TextAnalysis.bm25DocLens(ix, "doc_id")
-          .write.mode("overwrite").parquet(s"$out/doclens"))
+      Stores.bm25(out, Seq(Stores.bm25Index(docs)))
       val post = s.read.parquet(s"$out/postings")
       val dls = s.read.parquet(s"$out/doclens")
       import s.implicits._
@@ -501,11 +456,10 @@ object StreamQueries {
       // batch 1's alone == llm_pipeline9's output (same fixture, same
       // oracle); a lost append on EITHER store admits batch-2 rows and
       // hash-mismatches
-      val out = "target/gate_sink/st_pipeline9"
+      val out = Stores.dir("st_pipeline9")
       val docs = Tables.load(s, d, "documents").select(col("doc_id"), col("text"))
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val a = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 300 && col("doc_id") <= col("m") - 200)
+      val gen = Stores.split(docs, "doc_id")
+      val a = gen.where(gen.above(300) && gen.atMost(200))
         .select(col("doc_id"), col("text"))
       val novel = a.select(col("doc_id").as("aid"), col("text").as("atext"))
         .join(docs.select(col("doc_id").as("bid"), col("text").as("btext")),
@@ -523,17 +477,13 @@ object StreamQueries {
           reverse(col("text")).as("pay")))
         .unionAll(novel.select((col("aid") + 6000000).as("doc_id"),
           col("ntext").as("text"), reverse(col("atext")).as("pay")))
-      val ev = docs.crossJoin(broadcast(m)).filter(col("doc_id") > col("m") - 100)
-        .select(col("doc_id"), col("text"))
+      val ev = gen.newer(100).select(col("doc_id"), col("text"))
       // corpus-build time: both stores on disk
       val idx = Dedup.minhashIndex(docs, "doc_id", "text")
       // three independent store sinks — overlap (guide §2.6)
       graft.operators.Par.jobs(
-        () => graft.operators.Par.jobs(Seq(idx.sets),
-          () => idx.bands.write.mode("overwrite").parquet(s"$out/mh/bands"),
-          () => idx.sets.write.mode("overwrite").parquet(s"$out/mh/sets")),
-        () => Multimodal.dHash(Multimodal.asMedia(docs, "doc_id", "text"))
-          .write.mode("overwrite").parquet(s"$out/dh"))
+        () => Stores.minhash(idx, s"$out/mh"),
+        () => Stores.dHash(s"$out/dh", docs))
       // one micro-batch's mixed admission against the CURRENT stores
       def admitted(batch0: DataFrame): DataFrame = {
         // the micro-batch fixture feeds the TEXT path and the MEDIA
@@ -550,8 +500,7 @@ object StreamQueries {
             quality, ev, "doc_id", "text", n = 13))
         val mhHits = graft.streaming.Corpus.admitProbe(
             clean.select(col("doc_id"), col("text")),
-            Dedup.MinhashIndex(s.read.parquet(s"$out/mh/bands"),
-              s.read.parquet(s"$out/mh/sets")), "doc_id", "text")
+            Stores.readMinhash(s, s"$out/mh"), "doc_id", "text")
           .select(col("id_new").as("doc_id")).distinct()
         val textOk = clean.join(broadcast(mhHits), Seq("doc_id"), "left_anti")
         val imgHits = Multimodal.imageNearDupsBetween(
@@ -602,9 +551,8 @@ object StreamQueries {
       // projections, the probe a stateless stream-static equi-join
       val emb = Tables.load(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"))
-      val m = emb.agg(max(col("vec_id")).as("m"))
-      val incoming = emb.crossJoin(broadcast(m))
-        .filter(col("vec_id") > col("m") - 100)
+      val gen = Stores.split(emb, "vec_id")
+      val incoming = gen.newer(100)
         .select((col("vec_id") + 10000).as("vec_id"), col("embedding"))
       val cents = graft.operators.Similarity.collectCentroids(
         emb, "vec_id", "embedding", 8)
@@ -632,16 +580,11 @@ object StreamQueries {
       // against the STATIC reference corpus — the per-generation KL
       // row a crawl dashboard plots before admitting a generation
       val docs = Tables.load(s, d, "documents")
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val ref = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") <= col("m") - 100)
+      val gen = Stores.split(docs, "doc_id")
+      val ref = gen.older(100).select(col("doc_id"), col("text"))
+      val b1 = gen.where(gen.above(100) && gen.atMost(50))
         .select(col("doc_id"), col("text"))
-      val b1 = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 100 && col("doc_id") <= col("m") - 50)
-        .select(col("doc_id"), col("text"))
-      val b2 = docs.crossJoin(broadcast(m))
-        .filter(col("doc_id") > col("m") - 50)
-        .select(col("doc_id"), col("text"))
+      val b2 = gen.newer(50).select(col("doc_id"), col("text"))
       graft.operators.TextAnalysis.unigramKlReport(ref, b1, "text")
         .select(lit(1).as("batch_id"), col("*"))
         .unionByName(
@@ -666,16 +609,14 @@ object StreamQueries {
       // because every trigram of a doc arrives with its row (per-doc
       // aggregate, no cross-row state). Same artifacts recipe and
       // oracle as llm_trigram_kn_stored.
-      val out = "target/gate_sink/kn_model_stream"
+      val out = Stores.dir("kn_model_stream")
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("text"))
       val model = graft.operators.TextAnalysis.trigramKnTrain(
         docs.filter(col("doc_id") % 2 === 0), "doc_id", "text")
-      // six independent model-table sinks — overlap (guide §2.6)
-      graft.operators.Par.jobs(Seq(model("types")), model.toSeq.map { case (k, v) => () =>
-        v.write.mode("overwrite").parquet(s"$out/$k") }: _*)
+      Stores.knModel(model, out)
       graft.operators.TextAnalysis.trigramKnScoreStored(docs, "doc_id",
-        "text", model.keys.map(k => k -> s.read.parquet(s"$out/$k")).toMap)
+        "text", Stores.readKnModel(s, model, out))
     }),
     "st_quality" -> ((s, d) =>
       // streaming quality gate (batch-parity form): the Gopher panel is
@@ -694,11 +635,9 @@ object StreamQueries {
       // are dropped — stateless stream-static anti-join, the stream
       // path runs in StreamingSpec
       val docs = Tables.load(s, d, "documents")
-      val m = docs.agg(max(col("doc_id")).as("m"))
-      val ev = docs.crossJoin(broadcast(m)).filter(col("doc_id") > col("m") - 100)
-        .select(col("doc_id"), col("text"))
-      val corpus = docs.crossJoin(broadcast(m)).filter(col("doc_id") <= col("m") - 100)
-        .select(col("doc_id"), col("text"))
+      val gen = Stores.split(docs, "doc_id")
+      val ev = gen.newer(100).select(col("doc_id"), col("text"))
+      val corpus = gen.older(100).select(col("doc_id"), col("text"))
       graft.streaming.Corpus.cleanAgainst(corpus, ev, "doc_id", "text", n = 13)
         .select(col("doc_id"))
     })

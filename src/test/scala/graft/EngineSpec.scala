@@ -756,6 +756,35 @@ class EngineSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.col("source"),
         org.apache.spark.sql.functions.col("text"), 5,
         Seq(org.apache.spark.sql.functions.col("doc_id")), salt = "s:"))
+    // the store-backed twins: one pair per graft.queries.Stores fixture
+    // family, each key building its own store, compared row for row
+    // with columns in sorted-name order
+    def rows(key: String): (Seq[String], Seq[String]) = {
+      val df = SparkEntry.queries(key)(spark, TestSpark.sf)
+      val cols = df.columns.toSeq.sorted
+      (cols, df.select(cols.map(org.apache.spark.sql.functions.col): _*)
+        .collect().map(_.toString).toSeq.sorted)
+    }
+    Seq(
+      "llm_bm25_append" -> "e_sql_bm25_append",
+      "llm_ann_index_append" -> "e_sql_ann_append",
+      "llm_ann_sq_append" -> "e_sql_ann_sq_append",
+      "llm_ann_ivf_sq_stored" -> "e_sql_ann_ivf_sq_stored",
+      "llm_minhash_index_delete" -> "e_sql_minhash_delete",
+      "llm_fp_append" -> "e_sql_fp_append",
+      "llm_image_append" -> "e_sql_image_append",
+      "llm_audio_append" -> "e_sql_audio_append",
+      "llm_video_append" -> "e_sql_video_append",
+      "llm_trigram_kn_append" -> "e_sql_trigram_kn_append",
+      "llm_lr_eval" -> "e_sql_lr_eval",
+      "llm_unigram_tokenize" -> "e_sql_unigram_tokenize",
+      "llm_decontam_roundtrip" -> "e_sql_decontam_roundtrip",
+      "llm_bpe_count" -> "e_sql_bpe_count"
+    ).foreach { case (scalaKey, sqlKey) =>
+      val ((apiCols, api), (sqlCols, viaSql)) = (rows(scalaKey), rows(sqlKey))
+      assert(apiCols == sqlCols, s"$scalaKey $apiCols vs $sqlKey $sqlCols")
+      assert(api.nonEmpty && api == viaSql, s"$scalaKey vs $sqlKey")
+    }
   }
 
   test("LLM table functions compose with catalog namespaces and filters") {

@@ -3688,12 +3688,16 @@ class LlmOpsSpec extends AnyFunSuite {
     val out = "target/test_sink/lr_weights"
     wDf.write.mode("overwrite").parquet(out)
     assert(Classifier.weightsFromDf(spark.read.parquet(out)).toSeq == w.toSeq)
-    // degenerate inputs refuse loudly
+    // degenerate inputs refuse loudly, and the refusal leaves no cached
+    // design matrix behind
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val e = intercept[IllegalArgumentException] {
       Classifier.lrTrain(pos.filter(lit(false)), neg.filter(lit(false)),
         "doc_id", "text", buckets = 64)
     }
     assert(e.getMessage.contains("empty training set"))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
+    assert(leaked.isEmpty, s"lrTrain left cached RDDs $leaked")
   }
 
   test("round-8 review hardening: m-drift codes refusal, fractional ids, untrained buckets") {
