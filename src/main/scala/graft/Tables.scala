@@ -55,20 +55,32 @@ object Tables {
     registeredDirs.put(spark, dir)
   }
 
-  /** Standard session used by runnable mains. local[N] but every choice
-    * (AQE, 32 shuffle partitions, broadcast threshold) is the one you'd
-    * make on a multi-executor cluster; partition counts come from data
-    * size, not hardware assumptions. */
-  def session(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Entries in Spark's JVM-wide cache of compiled generated classes.
+    * Spark's default, 100, is smaller than graft's working set (one
+    * 18-statement `sql_interactive` cycle compiles about 160 classes), so
+    * its LRU evicted each class before its next use and repeated
+    * statements recompiled. README "Sessions" has the sizing and the
+    * heap cost. */
+  val CodegenCacheEntries = 1000
+
+  /** The one place graft builds a SparkSession. local[cpus] but every
+    * choice (AQE, shuffle partitions, broadcast threshold) is the one
+    * you'd make on a multi-executor cluster; partition counts come from
+    * data size, not hardware assumptions. The codegen cache size is a
+    * static conf that Spark reads once per JVM, when the code generator
+    * is first used, so it can only go on the builder. */
+  def session(appName: String,
+              cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+              partitions: Int = 32): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
       .withExtensions(graft.sources.CsvCoercion.extensions)
-      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.shuffle.partitions", partitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

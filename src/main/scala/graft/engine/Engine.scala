@@ -14,6 +14,12 @@ import graft.functions.Builtins
   * namespaces work exactly like exosql's cross-extractor joins — except
   * planned and executed by Catalyst/Tungsten instead of a row-at-a-time
   * interpreter.
+  *
+  * A caller who hands `Engine` a session they built themselves should set
+  * `spark.sql.codegen.cache.maxEntries` on their builder, as
+  * [[graft.Tables.session]] does: at Spark's default of 100 the
+  * compiled-class cache is smaller than graft's working set and repeated
+  * statements recompile their generated code.
   */
 class Engine(val spark: SparkSession) {
   Builtins.registerAll(spark)
@@ -35,9 +41,11 @@ class Engine(val spark: SparkSession) {
     query(sql, vars).queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString(mode))
 
-  /** exosql parse/execute split: parse once, run many times with
-    * different variables. (Plan caching beyond the rewrite is Catalyst's
-    * job — repeated spark.sql on the same text hits its plan cache.) */
+  /** exosql parse/execute split: rewrite once, run many times with
+    * different variables. Only the dialect rewrite is done once: each
+    * `run` re-parses, re-analyzes and re-optimizes the text. What runs
+    * reuse is the compiled generated classes, held in the JVM-wide cache
+    * that [[graft.Tables.session]] sizes. */
   def prepare(sql: String): Engine.Prepared = {
     val rewritten = Dialect.rewrite(sql)
     new Engine.Prepared(spark, rewritten)

@@ -366,6 +366,23 @@ class EngineSpec extends AnyFunSuite {
     assert(f > 0 && o > 0 && f != o)
   }
 
+  test("a repeated pass over literal-distinct statements compiles no class") {
+    // Spark's JVM-wide compiled-class cache holds 100 entries by default:
+    // a working set past that thrashes its LRU and every repeat
+    // recompiles. Tables.session sizes the cache for graft's working set.
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val texts = (1 to 60).map(i =>
+      s"SELECT id % ${i + 1} AS k, sum(id * $i) FROM range(64) WHERE id > $i GROUP BY 1")
+    def compiles(): Long = {
+      val before = METRIC_COMPILATION_TIME.getCount
+      texts.foreach(t => engine.query(t).collect())
+      METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = compiles()
+    assert(first > 100, s"the statements must outgrow Spark's default cache: $first")
+    assert(compiles() == 0)
+  }
+
   test("format_result renders an aligned ascii table") {
     Tables.registerAll(spark, TestSpark.sf)
     val s = engine.formatResult(

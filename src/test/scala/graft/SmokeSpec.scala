@@ -3,19 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (local[4] keeps test startup light;
-  * all plan-shaping configs match production settings in Tables.session). */
+/** Shared local session for all suites (local[4] keeps test startup light). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .withExtensions(graft.sources.CsvCoercion.extensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Tables.session("graft-test", cpus = 4, partitions = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
