@@ -160,7 +160,7 @@ object Dedup {
     * 100 TB hot-bucket guard (see [[capBuckets]]). */
   /** The per-document minhash sketch frame: (id, hset, s0..s{k-1}) —
     * hashed-shingle set + k permutation minima as ONE partial-aggregable
-    * hash aggregate, lineage-truncated per `reuse`. The band self-join
+    * hash aggregate, lineage-truncated by [[Reuse.Local]]. The band self-join
     * and the confirm joins reference this frame several times; column
     * pruning specializes each branch (sig-only vs hset-only), so
     * ReuseExchange never fires and without truncation the corpus
@@ -169,7 +169,7 @@ object Dedup {
     * compact fixed-width sketch rows; blocks are reclaimed by the
     * ContextCleaner when the plan is unreferenced. */
   private def minhashSets(df: DataFrame, idCol: String, textCol: String,
-                          k: Int, reuse: Reuse): DataFrame = {
+                          k: Int): DataFrame = {
     val p = 4294967311L
     // (id, h) rows via the relational shingle shape; duplicates are
     // collapsed by collect_set / unaffected by min, so no distinct needed
@@ -177,7 +177,7 @@ object Dedup {
       .select(col(idCol), sharedHash(col("s")).as("h"))
     val sigAggs = (0 until k).map(i =>
       min((col("h") * (2 * i + 1) + (101 * i + 17)) % p).as(s"s$i"))
-    reuse(hs.groupBy(col(idCol)).agg(
+    Reuse.Local(hs.groupBy(col(idCol)).agg(
       collect_set(col("h")).as("hset"), sigAggs: _*))
   }
 
@@ -199,9 +199,8 @@ object Dedup {
 
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
                    k: Int = 16, nBands: Int = 4, threshold: Double = 0.5,
-                   maxBucketSize: Option[Int] = None,
-                   reuse: Reuse = Reuse.Local): DataFrame = {
-    val sets = minhashSets(df, idCol, textCol, k, reuse)
+                   maxBucketSize: Option[Int] = None): DataFrame = {
+    val sets = minhashSets(df, idCol, textCol, k)
     val bands = capBuckets(bandsOf(sets, idCol, k, nBands),
       Seq("band_idx", "band_val"), maxBucketSize)
     val cand = bands.as("x").join(bands.as("y"),
@@ -226,7 +225,7 @@ object Dedup {
     * streaming shape where the corpus side is fixed while new shards
     * arrive. At production scale both frames would be WRITTEN (parquet,
     * bucketed by band_val / id) and read back per ingestion run; here
-    * the `reuse` truncation gives the same compute-once property within
+    * the [[Reuse.Local]] truncation gives the same compute-once property within
     * a session. */
   case class MinhashIndex(bands: DataFrame, sets: DataFrame)
 
@@ -238,9 +237,8 @@ object Dedup {
     * at build time, so no probe ever meets a boilerplate bucket. */
   def minhashIndex(corpus: DataFrame, idCol: String, textCol: String,
                    k: Int = 16, nBands: Int = 4,
-                   maxBucketSize: Option[Int] = None,
-                   reuse: Reuse = Reuse.Local): MinhashIndex = {
-    val sets = minhashSets(corpus, idCol, textCol, k, reuse)
+                   maxBucketSize: Option[Int] = None): MinhashIndex = {
+    val sets = minhashSets(corpus, idCol, textCol, k)
     MinhashIndex(
       capBuckets(bandsOf(sets, idCol, k, nBands),
         Seq("band_idx", "band_val"), maxBucketSize),
@@ -268,11 +266,10 @@ object Dedup {
                           idCol: String, textCol: String,
                           k: Int = 16, nBands: Int = 4,
                           threshold: Double = 0.5,
-                          maxBucketSize: Option[Int] = None,
-                          reuse: Reuse = Reuse.Local): DataFrame =
+                          maxBucketSize: Option[Int] = None): DataFrame =
     minhashProbe(newDf,
-      minhashIndex(corpus, idCol, textCol, k, nBands, maxBucketSize, reuse),
-      idCol, textCol, k, nBands, threshold, reuse)
+      minhashIndex(corpus, idCol, textCol, k, nBands, maxBucketSize),
+      idCol, textCol, k, nBands, threshold)
 
   /** Probe a precomputed [[MinhashIndex]] with a new shard — the second
     * half of [[minhashPairsBetween]], decoupled so the index can come
@@ -287,8 +284,7 @@ object Dedup {
   def minhashProbe(newDf: DataFrame, index: MinhashIndex,
                    idCol: String, textCol: String,
                    k: Int = 16, nBands: Int = 4,
-                   threshold: Double = 0.5,
-                   reuse: Reuse = Reuse.Local): DataFrame = {
+                   threshold: Double = 0.5): DataFrame = {
     // parameter drift between build and probe makes the band join match
     // NOTHING — the probe would silently report "no duplicates" and
     // ADMIT them. k is mechanically checkable from the stored schema:
@@ -307,7 +303,7 @@ object Dedup {
           size(split(col("band_val"), "_", -1)).cast("string"),
           lit(s" minima per band but probe k=$k/nBands=$nBands expects " +
             s"$rowsPerBand — probe with the index's build parameters")))))
-    val setsNew = minhashSets(newDf, idCol, textCol, k, reuse)
+    val setsNew = minhashSets(newDf, idCol, textCol, k)
     val bNew = bandsOf(setsNew, idCol, k, nBands)
     val cand = bNew.as("x").join(bandsChecked.as("y"),
         col("x.band_idx") === col("y.band_idx") &&
@@ -361,8 +357,7 @@ object Dedup {
     * duplicates its bands, like any store double-write). */
   def minhashIndexAppend(index: MinhashIndex, newDocs: DataFrame,
                          idCol: String, textCol: String,
-                         k: Int = 16, nBands: Int = 4,
-                         reuse: Reuse = Reuse.Local): MinhashIndex = {
+                         k: Int = 16, nBands: Int = 4): MinhashIndex = {
     requireIndexK(index, idCol, k, "append")
     require(k % nBands == 0, s"nBands must divide k, got k=$k nBands=$nBands")
     // k alone does not pin the band layout: an append with the store's k
@@ -382,7 +377,7 @@ object Dedup {
             s"but append k=$k/nBands=$nBands expects ${k / nBands} — " +
             "append with the index's build parameters")
       }
-    val setsNew = minhashSets(newDocs, idCol, textCol, k, reuse)
+    val setsNew = minhashSets(newDocs, idCol, textCol, k)
     MinhashIndex(
       index.bands.unionByName(bandsOf(setsNew, idCol, k, nBands)),
       index.sets.unionByName(setsNew))
@@ -608,15 +603,14 @@ object Dedup {
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    hashBits: Int = 60, nBands: Int = 4,
                    maxHamming: Int = 3,
-                   maxBucketSize: Option[Int] = None,
-                   reuse: Reuse = Reuse.Local): DataFrame = {
+                   maxBucketSize: Option[Int] = None): DataFrame = {
     require(hashBits % nBands == 0, s"hashBits $hashBits must split into $nBands bands")
     val bandBits = hashBits / nBands
     val mask = (1L << bandBits) - 1
     // the sketch frame is read by both self-join sides (and the bucket
     // cap's count): checkpoint the compact (id, 8-byte sketch) rows so
     // the corpus tokenize+simhash pass runs ONCE (see minhashPairs)
-    val sh = reuse(df.select(col(idCol),
+    val sh = Reuse.Local(df.select(col(idCol),
       org.apache.spark.sql.GraftBridge.column(graft.functions.SimHashN(
         org.apache.spark.sql.GraftBridge.expression(TextAnalysis.tokens(col(textCol))),
         hashBits)).as("sh")))
@@ -660,12 +654,11 @@ object Dedup {
   def simhashPairsWide(df: DataFrame, idCol: String, textCol: String,
                        words: Int = 2, bandsPerWord: Int = 2,
                        maxHamming: Int = 3,
-                       maxBucketSize: Option[Int] = None,
-                       reuse: Reuse = Reuse.Local): DataFrame = {
+                       maxBucketSize: Option[Int] = None): DataFrame = {
     require(60 % bandsPerWord == 0, s"bandsPerWord $bandsPerWord must divide 60")
     val bandBits = 60 / bandsPerWord
     val mask = (1L << bandBits) - 1
-    val sh = reuse(df.select(col(idCol),
+    val sh = Reuse.Local(df.select(col(idCol),
       simhashWide(TextAnalysis.tokens(col(textCol)), words).as("sh"))) // one corpus pass — see simhashPairs
     val bandStructs = array((for (w <- 0 until words; b <- 0 until bandsPerWord)
       yield struct(lit(w * bandsPerWord + b).as("band_idx"),
@@ -692,9 +685,8 @@ object Dedup {
   /** Brute-force n-gram Jaccard over all pairs of `df` (bounded input!);
     * the oracle-checkable ground truth that `minhashPairs` approximates. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                        n: Int = 3, threshold: Double = 0.5,
-                        reuse: Reuse = Reuse.Local): DataFrame = {
-    val sh = reuse(shingleRows(df.select(col(idCol), col(textCol)), idCol, textCol, n)
+                        n: Int = 3, threshold: Double = 0.5): DataFrame = {
+    val sh = Reuse.Local(shingleRows(df.select(col(idCol), col(textCol)), idCol, textCol, n)
       .groupBy(col(idCol)).agg(collect_set(col("s")).as("sh"))) // shingle sets built once for both sides
     sh.as("x").join(sh.as("y"), col(s"x.$idCol") < col(s"y.$idCol"))
       .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"),
@@ -717,12 +709,11 @@ object Dedup {
     * (the classic hot-key bound); the join/agg shape is unchanged. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        n: Int = 3, threshold: Double = 0.5,
-                       maxShingleDf: Option[Int] = None,
-                       reuse: Reuse = Reuse.Local): DataFrame = {
+                       maxShingleDf: Option[Int] = None): DataFrame = {
     // referenced by the df-cap count, both overlap sides, and sizes —
     // checkpoint the compact (id, 8-byte hash) rows so the corpus
     // shingle pass runs once (see minhashPairs)
-    val sh0 = reuse(shingleRows(df.select(col(idCol), col(textCol)), idCol, textCol, n)
+    val sh0 = Reuse.Local(shingleRows(df.select(col(idCol), col(textCol)), idCol, textCol, n)
       .select(col(idCol), sharedHash(col("s")).as("h"))
       .distinct())
     // the hot-key bound a production run needs: shingles shared by more
@@ -790,13 +781,12 @@ object Dedup {
   def decontaminateBloom(corpus: DataFrame, evalSet: DataFrame,
                          idCol: String, textCol: String, n: Int = 13,
                          expectedItems: Long = 4000000L,
-                         numBits: Long = 1L << 26,
-                         reuse: Reuse = Reuse.Local): DataFrame =
+                         numBits: Long = 1L << 26): DataFrame =
     // build + probe in one pass — the inline twin of the stored path,
     // so the two can never diverge; count validation is skipped (the
     // hash frame was built one line up, it cannot have drifted)
     decontaminateStored(corpus,
-      decontamIndex(evalSet, idCol, textCol, n, expectedItems, numBits, reuse),
+      decontamIndex(evalSet, idCol, textCol, n, expectedItems, numBits),
       idCol, textCol, validateCount = false)
 
   /** A PERSISTED decontamination index — the admission-control artifact
@@ -816,19 +806,18 @@ object Dedup {
   /** Build a [[DecontamIndex]] from an eval/benchmark set: shingle,
     * hash, distinct (the [[decontaminate]] frame), then ONE aggregate
     * pass produces both the bloom sketch and the row count recorded for
-    * the probe-side drift guard. The `reuse` checkpoint makes the
+    * the probe-side drift guard. The [[Reuse.Local]] checkpoint makes the
     * sketch action and the returned hash frame share one computation. */
   def decontamIndex(evalSet: DataFrame, idCol: String, textCol: String,
                     n: Int = 13, expectedItems: Long = 4000000L,
-                    numBits: Long = 1L << 26,
-                    reuse: Reuse = Reuse.Local): DecontamIndex = {
+                    numBits: Long = 1L << 26): DecontamIndex = {
     import org.apache.spark.sql.{GraftBridge, Row}
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.types._
     require(expectedItems > 0 && numBits > 0)
     require(n >= 1, s"shingle size must be >= 1, got $n")
-    val evalH = reuse(shingleRows(evalSet.select(col(idCol), col(textCol)),
+    val evalH = Reuse.Local(shingleRows(evalSet.select(col(idCol), col(textCol)),
         idCol, textCol, n)
       .select(sharedHash(col("s")).as("h")).distinct())
     val built = evalH.agg(

@@ -25,12 +25,13 @@ import org.apache.spark.storage.StorageLevel
   * action that measures convergence; there is no separate
   * materialization job and no separate convergence pass.
   *
-  * 100 TB posture: pass `checkpointDir` on a real cluster to cut
-  * lineage with RELIABLE (HDFS/object-store) checkpoints instead —
-  * executor-local blocks die with their executor, which aborts an
-  * iterative job mid-flight. The reliable path persists each round and
-  * lets the checkpoint-write job read the fresh cache (one extra
-  * cache-read/write pass, only when opted in). */
+  * 100 TB posture: the [[Reuse]] rule — when the application has a
+  * checkpoint dir (`spark.checkpoint.dir` or `sc.setCheckpointDir`),
+  * lineage is cut with RELIABLE (HDFS/object-store) checkpoints
+  * instead — executor-local blocks die with their executor, which
+  * aborts an iterative job mid-flight. The reliable path persists each
+  * round and lets the checkpoint-write job read the fresh cache (one
+  * extra cache-read/write pass, only when a dir is set). */
 object Graph {
 
   /** Truncate `df`'s lineage and materialize it with ONE action that
@@ -72,16 +73,12 @@ object Graph {
     * union (neighbor labels + own labeled row) feeds one groupBy whose
     * aggregation yields BOTH the new min-label and the previous label,
     * so the materializing action doubles as the convergence count.
-    *
-    * @param checkpointDir reliable checkpoint location (HDFS/S3 path on
-    *   a cluster); when set, per-round results and the edge list are
-    *   checkpointed there instead of relying on executor-local storage. */
+    * Under a checkpoint dir ([[Reuse.reliable]]) per-round results and
+    * the edge list are checkpointed there instead of relying on
+    * executor-local storage. */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-                          maxIter: Int = 25,
-                          checkpointDir: Option[String] = None): DataFrame = {
-    val spark = edges.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    val reliable = checkpointDir.isDefined
+                          maxIter: Int = 25): DataFrame = {
+    val reliable = Reuse.reliable(edges.sparkSession)
 
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val und0 = e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
@@ -164,11 +161,8 @@ object Graph {
     * hard guarantee for one extra pass. Within-set duplicates cannot
     * mask changes because each round's set is distinct. */
   def connectedComponentsStar(edges: DataFrame, srcCol: String, dstCol: String,
-                              maxIter: Int = 50,
-                              checkpointDir: Option[String] = None): DataFrame = {
-    val spark = edges.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    val reliable = checkpointDir.isDefined
+                              maxIter: Int = 50): DataFrame = {
+    val reliable = Reuse.reliable(edges.sparkSession)
     val fingerprint = Seq(
       count(lit(1)).as("n"),
       coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L)).as("h"))
@@ -267,18 +261,17 @@ object Graph {
     * pin a variant; `"auto"` runs propagation and falls back to star if
     * the graph's diameter exceeds `maxIter` rounds. */
   private def componentsBy(pairs: DataFrame, srcCol: String, dstCol: String,
-                           checkpointDir: Option[String], algo: String,
-                           maxIter: Int): DataFrame = algo match {
+                           algo: String, maxIter: Int): DataFrame = algo match {
     case "star" =>
-      connectedComponentsStar(pairs, srcCol, dstCol, checkpointDir = checkpointDir)
+      connectedComponentsStar(pairs, srcCol, dstCol)
     case "propagation" =>
-      connectedComponents(pairs, srcCol, dstCol, maxIter, checkpointDir)
+      connectedComponents(pairs, srcCol, dstCol, maxIter)
     case "auto" =>
-      try connectedComponents(pairs, srcCol, dstCol, maxIter, checkpointDir)
+      try connectedComponents(pairs, srcCol, dstCol, maxIter)
       catch {
         case e: IllegalArgumentException
             if e.getMessage != null && e.getMessage.contains("did not converge") =>
-          connectedComponentsStar(pairs, srcCol, dstCol, checkpointDir = checkpointDir)
+          connectedComponentsStar(pairs, srcCol, dstCol)
       }
     case other => throw new IllegalArgumentException(
       s"""algo must be "auto", "propagation" or "star", got "$other"""")
@@ -291,10 +284,9 @@ object Graph {
   def componentLosers(pairs: DataFrame,
                       srcCol: String = "id_a", dstCol: String = "id_b",
                       idColName: String = "id",
-                      checkpointDir: Option[String] = None,
                       algo: String = "auto",
                       maxIter: Int = 25): DataFrame =
-    componentsBy(pairs, srcCol, dstCol, checkpointDir, algo, maxIter)
+    componentsBy(pairs, srcCol, dstCol, algo, maxIter)
       .filter(col("node") =!= col("component"))
       .select(col("node").as(idColName))
 
@@ -302,11 +294,10 @@ object Graph {
                                  pairs: DataFrame,
                                  srcCol: String = "id_a",
                                  dstCol: String = "id_b",
-                                 checkpointDir: Option[String] = None,
                                  algo: String = "auto",
                                  maxIter: Int = 25): DataFrame =
     df.join(
-      componentLosers(pairs, srcCol, dstCol, idCol, checkpointDir, algo, maxIter),
+      componentLosers(pairs, srcCol, dstCol, idCol, algo, maxIter),
       Seq(idCol), "left_anti")
 
   /** Cluster dedup keeping the BEST row per component by `scoreCol`
@@ -327,10 +318,9 @@ object Graph {
                               pairs: DataFrame,
                               srcCol: String = "id_a",
                               dstCol: String = "id_b",
-                              checkpointDir: Option[String] = None,
                               algo: String = "auto",
                               maxIter: Int = 25): DataFrame = {
-    val comps = componentsBy(pairs, srcCol, dstCol, checkpointDir, algo, maxIter)
+    val comps = componentsBy(pairs, srcCol, dstCol, algo, maxIter)
     val labeled = df.join(comps, df(idCol) === comps("node"), "left")
       .select(df(idCol), col(scoreCol),
         coalesce(col("component"), df(idCol)).as("__comp"))

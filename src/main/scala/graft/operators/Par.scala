@@ -14,11 +14,11 @@ package graft.operators
   * independent — no two may write the same path, and an action reading
   * a path another is writing must be sequenced by the caller (group
   * dependent steps INSIDE one action). Shared lazy lineage (e.g. two
-  * writes off one non-eager `localCheckpoint`) is safe: Spark's block
-  * manager computes each cached partition once under a per-block lock —
-  * but that is an internal synchronization detail; callers holding the
-  * shared frame should prefer [[jobs(shared:Seq*]], which materializes
-  * it ONCE, up front, before the pool starts.
+  * writes off one non-eager [[Reuse.truncate]]) is safe and computed
+  * once: Spark's block manager computes each cached partition once
+  * under a per-block write lock, so the first sink to reach a
+  * partition stores it while the others overlap it and then read it
+  * (ParSpec pins the once-only count).
   *
   * FIFO scheduling (the default) gives exactly the back-fill behaviour
   * wanted; job descriptions are thread-local, so each action may label
@@ -76,22 +76,5 @@ object Par {
       try pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
       catch { case _: InterruptedException => Thread.currentThread().interrupt() }
     }
-  }
-
-  /** [[jobs]] for actions that fan out over SHARED lazily-checkpointed
-    * frames (the `Reuse.Local` diamonds): each shared frame is
-    * materialized ONCE, eagerly, before the pool starts — one driver
-    * action per frame touching its localCheckpoint blocks — so the
-    * concurrent actions only ever READ already-persisted blocks and
-    * never race the first materialization (removing the reliance on
-    * Spark's internal per-block locking; VERDICT r14 #3/#6). The
-    * materializing action is the same computation the first writer
-    * would have run inline, so total work is unchanged. */
-  def jobs(shared: Seq[org.apache.spark.sql.DataFrame],
-           actions: (() => Unit)*): Unit = {
-    shared.foreach { df =>
-      org.apache.spark.sql.GraftBridge.toRddCount(df): Unit
-    }
-    jobs(actions: _*)
   }
 }

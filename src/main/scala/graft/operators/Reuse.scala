@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Materialization mode for diamond-DAG reuse frames.
@@ -10,22 +10,28 @@ import org.apache.spark.storage.StorageLevel
   * downstream joins. Column pruning specializes each branch, so
   * ReuseExchange never fires and the corpus-scale upstream chain would
   * execute once per branch (measured: 4 corpus scans per minhash run).
-  * The fix is truncating lineage at the compact frame — but HOW it is
-  * truncated is a deployment decision, not an operator invariant:
+  * The fix is truncating lineage at the compact frame.
   *
-  *  - [[Reuse.Local]] (default): non-eager `localCheckpoint` —
-  *    executor-local blocks, zero extra jobs, right for bench/local
-  *    runs and static-allocation clusters. Blocks die with their
-  *    executor: under dynamic allocation or preemption a lost executor
-  *    aborts the job instead of recomputing lineage.
-  *  - [[Reuse.Reliable]]: reliable checkpoint files under a given
-  *    HDFS/object-store dir — survives executor loss; costs a cache
-  *    pass + file write. The 100 TB dynamic-allocation choice (same
-  *    contract as `Graph.connectedComponents(checkpointDir = ...)`).
+  * HOW it is truncated is one rule, applied by [[Reuse.truncate]] and
+  * decided by the deployment, not by the call: when the application
+  * has a checkpoint dir (Spark's `spark.checkpoint.dir`, read when the
+  * `SparkContext` starts, or `sc.setCheckpointDir`), the frame is
+  * written as a reliable checkpoint under it — it survives executor
+  * loss under dynamic allocation or preemption, at the cost of a cache
+  * pass and a file write. Otherwise it takes a non-eager
+  * `localCheckpoint` — executor-local blocks, zero extra jobs, right
+  * for local and static-allocation runs; blocks die with their
+  * executor. `Graph` makes the same choice with [[Reuse.reliable]].
+  *
+  * WHETHER a frame is truncated is the mode:
   *  - [[Reuse.Off]]: no truncation — branches recompute, predicate
   *    pushdown and column pruning flow through the operator boundary
   *    (pick when upstream is a cheap selective scan, or when a caller
   *    composes the operator under its own materialization).
+  *  - [[Reuse.Local]]: [[Reuse.truncate]] now, unless the plan has a
+  *    deferred leaf.
+  *  - [[Reuse.LocalDeferred]]: [[Reuse.truncate]] behind a deferred
+  *    leaf, at first execution.
   */
 sealed trait Reuse {
   /** Apply this mode's lineage truncation to a reuse frame. */
@@ -33,6 +39,24 @@ sealed trait Reuse {
 }
 
 object Reuse {
+  /** True iff the application has a checkpoint dir, so truncation
+    * writes reliable checkpoints instead of executor-local blocks. */
+  def reliable(spark: SparkSession): Boolean =
+    spark.sparkContext.getCheckpointDir.isDefined
+
+  /** The one lineage-truncation primitive: a non-eager checkpoint whose
+    * plan becomes a LogicalRDD now and whose data is stored by the
+    * frame's first action. On the reliable path the pre-checkpoint
+    * persist keeps the checkpoint's file-write job reading fresh cache
+    * instead of recomputing; the cache is reference-tracked
+    * (ContextCleaner releases it on GC — a plan builder has no
+    * post-action hook to release it deterministically the way Graph's
+    * round loop does). */
+  def truncate(df: DataFrame): DataFrame =
+    if (reliable(df.sparkSession))
+      df.persist(StorageLevel.MEMORY_AND_DISK).checkpoint(false)
+    else df.localCheckpoint(false)
+
   /** True iff the frame's plan contains a [[org.apache.spark.sql.GraftDeferredScan]]
     * leaf. Checkpointing (even non-eager) calls `queryExecution.toRdd`,
     * i.e. PHYSICAL PLANNING AT CONSTRUCTION TIME — on a deferred leaf
@@ -41,7 +65,7 @@ object Reuse {
     * during SQL analysis, and (b) can DEADLOCK: analysis holds the
     * SessionCatalog monitor while the builder's own Dataset analysis
     * (possibly on another thread via a memoized LazyRef) waits for that
-    * same monitor. Truncation modes therefore degrade to no-op on such
+    * same monitor. [[Local]] therefore degrades to no-op on such
     * plans — the deferred builder is memoized, so its expensive part
     * (the driver-side action) still runs once. */
   private def hasDeferredLeaf(df: DataFrame): Boolean =
@@ -55,47 +79,14 @@ object Reuse {
 
   case object Local extends Reuse {
     def apply(df: DataFrame): DataFrame =
-      if (hasDeferredLeaf(df)) df else df.localCheckpoint(false)
+      if (hasDeferredLeaf(df)) df else truncate(df)
   }
 
-  /** Raw dir last passed to `sc.setCheckpointDir` per context — the
-    * idempotence guard can NOT compare against `sc.getCheckpointDir`:
-    * the setter stores a fs-qualified path with a random UUID
-    * subdirectory, which never equals the raw dir (every apply would
-    * re-point the global dir and mkdir a fresh UUID directory). */
-  private val reliableDirs =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[org.apache.spark.SparkContext, String]())
-
-  /** Reliable-checkpoint mode. The pre-checkpoint persist keeps the
-    * checkpoint's file-write job reading fresh cache instead of
-    * recomputing; the cache is reference-tracked (ContextCleaner
-    * releases it on GC — a plan builder has no post-action hook to
-    * release it deterministically the way Graph's round loop does).
+  /** SQL-façade variant of [[Local]]: the same [[truncate]],
+    * constructed behind a [[org.apache.spark.sql.GraftDeferredScan]]
+    * leaf so NOTHING materializes at plan-construction/analysis time.
     *
-    * NOTE the checkpoint dir is SparkContext-GLOBAL (same contract as
-    * `Graph.connectedComponents(checkpointDir)` and `sc.setCheckpointDir`
-    * itself): one reliable location per application. The setter fires
-    * only when the RAW dir differs from the one this mode last set
-    * (tracked in [[reliableDirs]]), so repeated builds don't re-point
-    * an already-configured application; mixing different
-    * `Reliable(dir)` values concurrently is not supported. */
-  final case class Reliable(dir: String) extends Reuse {
-    def apply(df: DataFrame): DataFrame = {
-      if (hasDeferredLeaf(df)) return df
-      val sc = df.sparkSession.sparkContext
-      if (reliableDirs.put(sc, dir) != dir || sc.getCheckpointDir.isEmpty)
-        sc.setCheckpointDir(dir)
-      df.persist(StorageLevel.MEMORY_AND_DISK).checkpoint(false)
-    }
-  }
-
-  /** SQL-façade variant of [[Local]]: the same non-eager
-    * `localCheckpoint`, constructed behind a
-    * [[org.apache.spark.sql.GraftDeferredScan]] leaf so NOTHING
-    * materializes at plan-construction/analysis time.
-    *
-    * Why it exists: `localCheckpoint` grabs `queryExecution.toRdd`, and
+    * Why it exists: checkpointing grabs `queryExecution.toRdd`, and
     * under AQE that call materializes every upstream query stage — at
     * ANALYSIS time when the truncation runs inside a SQL TVF builder.
     * SQL temp views store PARSED plans (not analyzed ones), so every
@@ -124,7 +115,7 @@ object Reuse {
     * outer checkpoint first materializes, at execution. */
   case object LocalDeferred extends Reuse {
     def apply(df: DataFrame): DataFrame = {
-      lazy val cp = df.localCheckpoint(false)
+      lazy val cp = truncate(df)
       org.apache.spark.sql.GraftDeferred.frame(
         df.sparkSession, df.schema, () => cp)
     }

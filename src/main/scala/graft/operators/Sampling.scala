@@ -299,10 +299,10 @@ object Sampling {
     *    stays a broadcast 1-row comparison.
     *
     * `df` feeds BOTH the threshold aggregate and the output filter — a
-    * diamond. `reuse` truncates it like every sibling (default Off:
-    * the usual input is a cheap selective scan where recompute keeps
-    * pushdown/pruning; pass `Reuse.Local` when the input is an
-    * expensive derived frame, as the pipeline3 gate does). */
+    * diamond. `reuse` truncates it (default Off: the usual input is a
+    * cheap selective scan where recompute keeps pushdown/pruning; pass
+    * `Reuse.Local` when the input is an expensive derived frame, as the
+    * pipeline3 gate does). */
   def keepAboveQuantile(df: DataFrame, value: Column, q: Double,
                         accuracy: Option[Int] = None,
                         reuse: Reuse = Reuse.Off): DataFrame = {
@@ -375,11 +375,10 @@ object Sampling {
     * corpus-scale exchanges carry (id, bucket-int) pairs and the
     * id-keyed bigram window. Text never keys an exchange. The raw
     * feature frame feeds both the raw counts and the scoring join — a
-    * diamond, truncated via `reuse` like every sibling. */
+    * diamond, truncated via [[Reuse.Local]] like every sibling. */
   def importanceWeights(raw: DataFrame, target: DataFrame,
                         idCol: String, textCol: String,
-                        buckets: Int = 1024,
-                        reuse: Reuse = Reuse.Local): DataFrame = {
+                        buckets: Int = 1024): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
     def featsOf(df: DataFrame): DataFrame = {
       val uni = Dedup.shingleRowsPos(df.select(col(idCol), col(textCol)),
@@ -389,12 +388,12 @@ object Sampling {
       uni.unionByName(bi)
         .select(col(idCol), pmod(Dedup.sharedHash60(col("s")), lit(buckets)).as("__f"))
     }
-    val rawFeats = reuse(featsOf(raw))
+    val rawFeats = Reuse.Local(featsOf(raw))
     val cntR = rawFeats.groupBy(col("__f")).agg(count(lit(1)).as("__cr"))
     // cntT is referenced twice (its own total + the bucket join) — the
     // ≤buckets-row count frame is the compact thing to truncate, so the
     // target tokenize+window chain runs once
-    val cntT = reuse(featsOf(target).groupBy(col("__f"))
+    val cntT = Reuse.Local(featsOf(target).groupBy(col("__f"))
       .agg(count(lit(1)).as("__ct")))
     val totals = cntR.agg(sum(col("__cr")).as("__r"))
       .crossJoin(broadcast(cntT.agg(sum(col("__ct")).as("__t"))))
@@ -436,8 +435,7 @@ object Sampling {
     * null-source rows must participate. */
   def temperatureMix(df: DataFrame, source: Column, key: Column,
                      alpha: Double, targetFraction: Double,
-                     salt: String = "mix:",
-                     reuse: Reuse = Reuse.Local): DataFrame = {
+                     salt: String = "mix:"): DataFrame = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0,1], got $alpha")
     require(targetFraction > 0 && targetFraction <= 1,
       s"targetFraction must be in (0,1], got $targetFraction")
@@ -445,7 +443,7 @@ object Sampling {
     // table — truncate the tiny frame so the corpus aggregates once
     // (two corpus passes total: this count + the gate scan, the minimum
     // for a derived-rate gate)
-    val counts = reuse(df.groupBy(source.as("__src"))
+    val counts = Reuse.Local(df.groupBy(source.as("__src"))
       .agg(count(lit(1)).as("__n")))
     val tot = counts.agg(sum(col("__n")).as("__tot"),
       sum(pow(col("__n"), alpha)).as("__z"))
@@ -490,7 +488,6 @@ object Sampling {
   def tokenBudget(df: DataFrame, idCol: String, textCol: String,
                   budget: Long, salt: String = "budget:",
                   numBuckets: Int = 1024,
-                  reuse: Reuse = Reuse.Local,
                   // how a document's tokens are counted: whitespace by
                   // default; pass TextAnalysis.bpeCounter(merges) to
                   // budget in LEARNED tokens — the denomination a real
@@ -504,7 +501,7 @@ object Sampling {
     val width = math.max(1L, (1L << 32) / numBuckets)
     // read by the bucket-totals aggregate AND the offset join — one
     // tokenize+hash pass, not two (the packOffsets diamond)
-    val toks = reuse(df.select(col(idCol),
+    val toks = Reuse.Local(df.select(col(idCol),
         tokenCounter(col(textCol)).cast("long").as("n_toks"),
         saltedHash(col(textCol), salt).as("__h"))
       .filter(col("__h").isNotNull)
@@ -552,15 +549,14 @@ object Sampling {
                          textCol: String, budget: Long,
                          salt: String = "budget:",
                          numBuckets: Int = 1024,
-                         maxBroadcastRows: Long = 1L << 20,
-                         reuse: Reuse = Reuse.Local): DataFrame = {
+                         maxBroadcastRows: Long = 1L << 20): DataFrame = {
     require(budget >= 0, s"budget must be >= 0, got $budget")
     require(numBuckets >= 1 && numBuckets <= (1 << 20),
       s"numBuckets must be in [1, 2^20], got $numBuckets")
     require(maxBroadcastRows >= 1,
       s"maxBroadcastRows must be >= 1, got $maxBroadcastRows")
     val width = math.max(1L, (1L << 32) / numBuckets)
-    val toks = reuse(df.select(col(idCol), col(groupCol).as("__grp"),
+    val toks = Reuse.Local(df.select(col(idCol), col(groupCol).as("__grp"),
         TextAnalysis.tokenCount(col(textCol)).cast("long").as("n_toks"),
         saltedHash(col(textCol), salt).as("__h"))
       .filter(col("__h").isNotNull)
@@ -623,11 +619,10 @@ object Sampling {
     * [[keepAboveQuantile]] comparison-drop policy). The pct_rank
     * division is two exact integers in IEEE double — oracle-raw. */
   def percentRank(df: DataFrame, idCol: String, valueCol: String,
-                  numBuckets: Int = 64,
-                  reuse: Reuse = Reuse.Local): DataFrame = {
+                  numBuckets: Int = 64): DataFrame = {
     require(numBuckets >= 1 && numBuckets <= 4096,
       s"numBuckets must be in [1, 4096], got $numBuckets")
-    val in = reuse(df.select(col(idCol), col(valueCol).as("__v"))
+    val in = Reuse.Local(df.select(col(idCol), col(valueCol).as("__v"))
       .filter(col("__v").isNotNull))
     val bucket: Column =
       if (numBuckets == 1) lit(0)
@@ -678,11 +673,10 @@ object Sampling {
     * partitioning treats NULL as a key, unlike the quantile filter's
     * equi-join — documented asymmetry). */
   def percentRankByGroup(df: DataFrame, idCol: String, groupCol: String,
-                         valueCol: String, numBuckets: Int = 64,
-                         reuse: Reuse = Reuse.Local): DataFrame = {
+                         valueCol: String, numBuckets: Int = 64): DataFrame = {
     require(numBuckets >= 1 && numBuckets <= 4096,
       s"numBuckets must be in [1, 4096], got $numBuckets")
-    val in = reuse(df.select(col(idCol), col(groupCol).as("__grp"),
+    val in = Reuse.Local(df.select(col(idCol), col(groupCol).as("__grp"),
         col(valueCol).as("__v"))
       .filter(col("__v").isNotNull))
     val bucket: Column =

@@ -242,8 +242,7 @@ object Similarity {
   def embeddingNearDups(emb: DataFrame, idCol: String, vecCol: String,
                         simThreshold: Double, nPlanes: Int = 0,
                         dim: Int = 64, corpusSize: Long = -1L,
-                        maxBucketSize: Option[Int] = None,
-                        reuse: Reuse = Reuse.Local): DataFrame = {
+                        maxBucketSize: Option[Int] = None): DataFrame = {
     val p = if (nPlanes > 0) nPlanes
       else autoPlanes(if (corpusSize > 0) corpusSize else emb.count())
     val planes = planeSigns(p, dim)
@@ -252,7 +251,7 @@ object Similarity {
     // once per row, not once per reference. The blocks carry the
     // vectors — the same payload the join shuffles anyway.
     val b = Dedup.capBuckets(
-      reuse(emb.select(col(idCol), col(vecCol),
+      Reuse.Local(emb.select(col(idCol), col(vecCol),
         lshBucket(col(vecCol), planes).as("bucket"))),
       Seq("bucket"), maxBucketSize)
     b.as("x").join(b.as("y"),
@@ -280,10 +279,9 @@ object Similarity {
   def semanticNearDups(emb: DataFrame, idCol: String, vecCol: String,
                        centroids: Array[(Long, Seq[Double])],
                        simThreshold: Double,
-                       maxCellSize: Option[Int] = None,
-                       reuse: Reuse = Reuse.Local): DataFrame = {
+                       maxCellSize: Option[Int] = None): DataFrame = {
     val assigned = Dedup.capBuckets(
-      reuse(emb.select(col(idCol), col(vecCol),
+      Reuse.Local(emb.select(col(idCol), col(vecCol),
         cellOf(col(vecCol), centroids).as("cell"))),
       Seq("cell"), maxCellSize)
     assigned.as("x").join(assigned.as("y"),
@@ -331,7 +329,7 @@ object Similarity {
     * centroid_sim) for the kept rows. */
   def embeddingOutliers(emb: DataFrame, idCol: String, vecCol: String,
                         centroids: Array[(Long, Seq[Double])],
-                        q: Double, reuse: Reuse = Reuse.Off): DataFrame = {
+                        q: Double): DataFrame = {
     require(centroids.nonEmpty, "embeddingOutliers: need at least one centroid")
     val simToOwn = centroids.toIndexedSeq.tail.foldLeft(
       when(col("cell") === centroids.head._1,
@@ -344,7 +342,7 @@ object Similarity {
       .select(col(idCol), cellOf(col(vecCol), centroids).as("cell"), col(vecCol))
       .select(col(idCol), col("cell"), round(simToOwn, 6).as("centroid_sim"))
     Sampling.keepAboveQuantileByGroup(scored, col("cell"),
-      col("centroid_sim"), q, reuse = reuse)
+      col("centroid_sim"), q)
   }
 
   /** MMR — maximal-marginal-relevance DIVERSIFIED selection (Carbonell/
@@ -394,9 +392,8 @@ object Similarity {
     require(k >= 1, s"k must be >= 1, got $k")
     require(lam >= 0.0 && lam <= 1.0, s"lambda must be in [0,1], got $lam")
     val spark = candidates.sparkSession
-    val cand = candidates.select(col(idCol),
-        col(vecCol).cast("array<double>").as("__v"), col(relCol))
-      .localCheckpoint(false)
+    val cand = Reuse.truncate(candidates.select(col(idCol),
+        col(vecCol).cast("array<double>").as("__v"), col(relCol)))
     require(cand.limit(maxCandidates + 1).count() <= maxCandidates,
       s"mmrSelect: more than $maxCandidates candidates — MMR is a " +
         "post-serve re-ranker over a bounded top-N, not a corpus scan")
@@ -454,7 +451,7 @@ object Similarity {
     *
     * Per-query candidate lists above `maxPerQuery` refuse loudly (the
     * mmrSelect bounded-input contract, per group). Lineage truncates
-    * per round (non-eager localCheckpoint — the Graph round pattern).
+    * per round ([[Reuse.truncate]] — the Graph round pattern).
     * `(1−λ)` is the same single IEEE subtraction. A query with fewer
     * than `k` candidates just stops early (no NULL padding).
     * Output: (byCol, idCol, relCol, mmr, rank). */
@@ -463,9 +460,8 @@ object Similarity {
                   lam: Double = 0.7, maxPerQuery: Int = 10000): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(lam >= 0.0 && lam <= 1.0, s"lambda must be in [0,1], got $lam")
-    val cand = candidates.select(col(byCol), col(idCol),
-        col(vecCol).cast("array<double>").as("__v"), col(relCol))
-      .localCheckpoint(false)
+    val cand = Reuse.truncate(candidates.select(col(byCol), col(idCol),
+        col(vecCol).cast("array<double>").as("__v"), col(relCol)))
     val over = cand.groupBy(col(byCol)).agg(count(lit(1)).as("__n"))
       .filter(col("__n") > maxPerQuery).limit(1).collect()
     require(over.isEmpty,
@@ -491,14 +487,13 @@ object Similarity {
             .select(col(byCol), col(idCol), col("__v"), col(relCol),
               mmrScore(col(relCol), Some(col("__ms")), lam).as("mmr"))
         }
-      val pick = scored.withColumn("__rn", row_number().over(w))
+      val pick = Reuse.truncate(scored.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn")
-        .withColumn("rank", lit(r))
-        .localCheckpoint(false)
+        .withColumn("rank", lit(r)))
       selected = if (selected == null) pick
-        else selected.unionByName(pick).localCheckpoint(false)
-      remaining = remaining.join(pick.select(col(byCol), col(idCol)),
-        Seq(byCol, idCol), "left_anti").localCheckpoint(false)
+        else Reuse.truncate(selected.unionByName(pick))
+      remaining = Reuse.truncate(remaining.join(
+        pick.select(col(byCol), col(idCol)), Seq(byCol, idCol), "left_anti"))
       r += 1
     }
     selected.select(col(byCol), col(idCol), col(relCol), col("mmr"),

@@ -169,14 +169,14 @@ object TextAnalysis {
     * than `nMerges` distinct pairs ⇒ the table ends early (every
     * remaining word is a single symbol), never an error. */
   def bpeTrain(df: DataFrame, idCol: String, textCol: String,
-               nMerges: Int, reuse: Reuse = Reuse.Local,
+               nMerges: Int,
                preTokenize: Boolean = false): DataFrame = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     val spark = df.sparkSession
     val wf = df.select(explode(bpeWords(col(textCol), preTokenize)).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-    var words = reuse(wf.select(
+    var words = Reuse.Local(wf.select(
       concat(lit(" "), array_join(split(col("w"), ""), "  "), lit(" ")).as("s"),
       col("cnt")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String)]
@@ -197,7 +197,7 @@ object TextAnalysis {
       else {
         val l = best(0).getString(0); val rt = best(0).getString(1)
         merges += ((r, l, rt))
-        words = reuse(words.select(
+        words = Reuse.Local(words.select(
           replace(col("s"), lit(s" $l  $rt "), lit(s" $l$rt ")).as("s"),
           col("cnt")))
         r += 1
@@ -798,8 +798,7 @@ object TextAnalysis {
     * loud-failure convention of every stored-surface guard here. */
   def filterSentencesByLm(df: DataFrame, idCol: String, textCol: String,
                           q: Double = 0.2,
-                          accuracy: Option[Int] = None,
-                          reuse: Reuse = Reuse.Local): DataFrame = {
+                          accuracy: Option[Int] = None): DataFrame = {
     require(q >= 0.0 && q <= 1.0, s"quantile must be in [0,1], got $q")
     // try_cast, not cast: under ANSI semantics a malformed id would
     // throw the generic CAST_INVALID_INPUT mid-plan; the try form lets
@@ -828,10 +827,10 @@ object TextAnalysis {
         lit(" has >= 1e6 sentences — sentence ids would collide across " +
           "documents; split the document upstream"))))
       .otherwise(idL * lit(1000000L) + col("sent_no"))
-    val sents = reuse(sentenceRows(df, idCol, textCol)
+    val sents = Reuse.Local(sentenceRows(df, idCol, textCol)
       .select(col(idCol), col("sent_no"), col("sentence"), sid.as("__sid")))
     val lp = bigramLogProb(sents.select(col("__sid"), col("sentence")),
-      "__sid", "sentence", reuse)
+      "__sid", "sentence")
     val kept = Sampling.keepAboveQuantile(
       lp.select(col("__sid"), col("avg_logprob")), col("avg_logprob"), q,
       accuracy = accuracy)
@@ -866,7 +865,6 @@ object TextAnalysis {
     * non-negative numeric ids (`div` truncates toward zero). */
   def packOffsets(df: DataFrame, idCol: String, textCol: String,
                   seqLen: Int = 2048, docsPerBucket: Int = 4096,
-                  reuse: Reuse = Reuse.Local,
                   // how a document's tokens are counted: whitespace by
                   // default; pass [[bpeCounter]](merges) to pack in
                   // LEARNED tokens — the denomination a real training
@@ -877,7 +875,7 @@ object TextAnalysis {
     require(docsPerBucket >= 1, s"docsPerBucket must be >= 1, got $docsPerBucket")
     // read by the bucket-totals aggregate AND the offset join — one
     // tokenize pass, not two (see Dedup.minhashPairs)
-    val toks = reuse(df.select(col(idCol),
+    val toks = Reuse.Local(df.select(col(idCol),
       tokenCounter(col(textCol)).cast("long").as("n_toks"),
       expr(s"`$idCol` div $docsPerBucket").as("__b")))
     val totals = toks.groupBy(col("__b")).agg(sum(col("n_toks")).as("__bt"))
@@ -954,15 +952,14 @@ object TextAnalysis {
   }
 
   def topShinglesByDf(df: DataFrame, idCol: String, textCol: String,
-                      n: Int = 3, topK: Int = 20,
-                      reuse: Reuse = Reuse.Local): DataFrame = {
+                      n: Int = 3, topK: Int = 20): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     def rows = Dedup.shingleRows(df.select(col(idCol), col(textCol)),
       idCol, textCol, n)
     // (hash, df) is fixed-width 16-byte rows — the compact frame both
     // the boundary branch and the candidate filter read; checkpoint so
     // the corpus distinct+count pass runs once, not once per branch
-    val dfs = reuse(rows.select(col(idCol), Dedup.sharedHash60(col("s")).as("__h"))
+    val dfs = Reuse.Local(rows.select(col(idCol), Dedup.sharedHash60(col("s")).as("__h"))
       .distinct()
       .groupBy(col("__h")).agg(count(lit(1)).as("df")))
     val kth = dfs.orderBy(col("df").desc).limit(topK)
@@ -1003,12 +1000,12 @@ object TextAnalysis {
     * result. The corpus total is derived from the count frame — no
     * second corpus pass. The token-row frame feeds both the count pass
     * and the resolution join — the compact (hash, cnt, df) frame is the
-    * thing `reuse` truncates. */
+    * thing [[Reuse.Local]] truncates. */
   def vocabReport(df: DataFrame, idCol: String, textCol: String,
-                  topK: Int = 100, reuse: Reuse = Reuse.Local): DataFrame = {
+                  topK: Int = 100): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     def tok = df.select(col(idCol), explode(tokens(col(textCol))).as("__t"))
-    val cnts = reuse(tok
+    val cnts = Reuse.Local(tok
       .select(col(idCol), Dedup.sharedHash60(col("__t")).as("__h"))
       .groupBy(col("__h"))
       .agg(count(lit(1)).as("cnt"), countDistinct(col(idCol)).as("df")))
@@ -1251,19 +1248,17 @@ object TextAnalysis {
     require(fbDocs >= 1, s"fbDocs must be >= 1, got $fbDocs")
     require(fbTerms >= 0, s"fbTerms must be >= 0, got $fbTerms")
     val spark = queries.sparkSession
-    val qt = queries.select(col(queryIdCol),
+    val qt = Reuse.truncate(queries.select(col(queryIdCol),
         explode(array_distinct(tokens(col(queryTextCol)))).as("term"))
-      .filter(length(col("term")) > 0)
-      .localCheckpoint(false)
+      .filter(length(col("term")) > 0))
     if (fbTerms == 0)
       return bm25JoinTerms(postings, docLens, qt, idCol, queryIdCol,
         k, k1, b, maxTerms, caller = "bm25PrfJoin")
     // round 1: per-query feedback docs (bounded |Q|·fbDocs rows)
-    val fbPairs = bm25JoinTerms(postings, docLens, qt, idCol, queryIdCol,
-        k = fbDocs, k1 = k1, b = b, maxTerms = maxTerms,
+    val fbPairs = Reuse.truncate(bm25JoinTerms(postings, docLens, qt, idCol,
+        queryIdCol, k = fbDocs, k1 = k1, b = b, maxTerms = maxTerms,
         caller = "bm25PrfJoin")
-      .select(col(queryIdCol), col(idCol))
-      .localCheckpoint(false)
+      .select(col(queryIdCol), col(idCol)))
     val fbIds = fbPairs.select(col(idCol)).distinct()
       .collect().map(_.get(0)).toSeq
     if (fbIds.isEmpty)
@@ -1271,14 +1266,13 @@ object TextAnalysis {
         k, k1, b, maxTerms, caller = "bm25PrfJoin")
     // candidate terms per query from the feedback docs' POSTINGS rows:
     // pushed In on the bounded id set; each query's own terms excluded
-    val fbTf = postings.filter(col(idCol).isin(fbIds: _*))
+    val fbTf = Reuse.truncate(postings.filter(col(idCol).isin(fbIds: _*))
       .select(col(idCol), col("term"), col("tf"))
       .join(broadcast(fbPairs), Seq(idCol))
       .join(broadcast(qt.withColumn("__orig", lit(1))),
         Seq(queryIdCol, "term"), "left_anti")
       .groupBy(col(queryIdCol), col("term"))
-      .agg(sum(col("tf")).as("tf_fb"))
-      .localCheckpoint(false)
+      .agg(sum(col("tf")).as("tf_fb")))
     // bounded candidate-term union -> pushed In for the df pass
     val candTerms = fbTf.select(col("term")).distinct()
       .limit(maxTerms + 1).collect().map(_.getString(0))
@@ -1800,22 +1794,20 @@ object TextAnalysis {
   }
 
   def cmsSketch(df: DataFrame, idCol: String, textCol: String,
-                eps: Double = 0.001, confidence: Double = 0.99,
-                reuse: Reuse = Reuse.Local):
+                eps: Double = 0.001, confidence: Double = 0.99):
       Option[org.apache.spark.util.sketch.CountMinSketch] =
     cmsSketchFromHashes(
-      reuse(tokenHashFrame(df, idCol, textCol).select(col("__h"))),
+      Reuse.Local(tokenHashFrame(df, idCol, textCol).select(col("__h"))),
       eps, confidence)
 
   def heavyHittersCms(df: DataFrame, idCol: String, textCol: String,
                       topK: Int = 20, eps: Double = 0.001,
-                      confidence: Double = 0.99,
-                      reuse: Reuse = Reuse.Local): DataFrame = {
+                      confidence: Double = 0.99): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     // ONE tokenize+hash pass feeds the sketch aggregate AND the exact
-    // top-k/resolve side — reuse() truncates lineage so the explode is
+    // top-k/resolve side — Reuse.Local truncates lineage so the explode is
     // not recomputed per consumer
-    val tokH = reuse(tokenHashFrame(df, idCol, textCol))
+    val tokH = Reuse.Local(tokenHashFrame(df, idCol, textCol))
     cmsSketchFromHashes(tokH.select(col("__h")), eps, confidence) match {
       case None => emptyHeavyHitters(df)
       case Some(cms) => heavyHittersCore(df, tokH, cms, topK)
@@ -1838,15 +1830,14 @@ object TextAnalysis {
     * separately-passed eps could silently mis-attest. */
   def heavyHittersAgainstCms(df: DataFrame, idCol: String, textCol: String,
                              sketch: Option[org.apache.spark.util.sketch.CountMinSketch],
-                             topK: Int = 20,
-                             reuse: Reuse = Reuse.Local): DataFrame = {
+                             topK: Int = 20): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     sketch match {
       // a token-free corpus aggregates to a NULL sketch — return the
       // empty report instead of NPEing on the deserialize
       case None => emptyHeavyHitters(df)
       case Some(cms) =>
-        heavyHittersCore(df, reuse(tokenHashFrame(df, idCol, textCol)),
+        heavyHittersCore(df, Reuse.Local(tokenHashFrame(df, idCol, textCol)),
           cms, topK)
     }
   }
@@ -1921,8 +1912,7 @@ object TextAnalysis {
     * inside the aggregate, so span order is restored per group with no
     * per-document window pass. */
   def removeRepeatedSpans(df: DataFrame, idCol: String, textCol: String,
-                          spanTokens: Int = 16, maxDf: Int = 2,
-                          reuse: Reuse = Reuse.Local): DataFrame = {
+                          spanTokens: Int = 16, maxDf: Int = 2): DataFrame = {
     require(spanTokens >= 1, s"spanTokens must be >= 1, got $spanTokens")
     require(maxDf >= 1, s"maxDf must be >= 1, got $maxDf")
     def spans = chunk(df, idCol, textCol, spanTokens, overlap = 0)
@@ -1932,9 +1922,8 @@ object TextAnalysis {
     // topShinglesByDf policy: span text is never checkpointed, compact
     // frames only) — the hot-set branch aggregates this reuse-truncated
     // per-doc-distinct (id, 8-byte hash) frame, while the text-bearing
-    // flag/reassembly pass below runs fresh; `reuse` makes the hot
-    // branch caller-tunable like every sibling diamond operator
-    val hashes = reuse(spans.select(col(idCol), col("__h")).distinct())
+    // flag/reassembly pass below runs fresh
+    val hashes = Reuse.Local(spans.select(col(idCol), col("__h")).distinct())
     val hot = hashes
       .groupBy(col("__h")).agg(count(lit(1)).as("__df"))
       .filter(col("__df") > maxDf)
@@ -1965,10 +1954,9 @@ object TextAnalysis {
     * tf) tuples — document text never leaves the first projection. The
     * quantization argument is tfidf's: round(·, 4) after the avg makes
     * the result robust to 1-ulp libm `ln` differences across engines. */
-  def unigramLogProb(df: DataFrame, idCol: String, textCol: String,
-                     reuse: Reuse = Reuse.Local): DataFrame = {
+  def unigramLogProb(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = df.select(col(idCol), explode(tokens(col(textCol))).as("term"))
-    val tf = reuse(toks.groupBy(col(idCol), col("term"))
+    val tf = Reuse.Local(toks.groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).as("tf")))
     val counts = tf.groupBy(col("term")).agg(sum(col("tf")).as("cnt"))
     val total = counts.agg(sum(col("cnt")).as("n_total"))
@@ -2257,7 +2245,6 @@ object TextAnalysis {
     * exemption composes with the join flag without a re-count. */
   def removeRepeatedLines(df: DataFrame, idCol: String, textCol: String,
                           maxDf: Int = 1, minChars: Int = 1,
-                          reuse: Reuse = Reuse.Local,
                           inputReuse: Reuse = Reuse.Off): DataFrame = {
     require(maxDf >= 1, s"maxDf must be >= 1, got $maxDf")
     require(minChars >= 0, s"minChars must be >= 0, got $minChars")
@@ -2272,7 +2259,7 @@ object TextAnalysis {
     def lineRows = in.select(col(idCol),
         posexplode(split(col(textCol), "\n")).as(Seq("line_no", "line")))
       .withColumn("__h", Dedup.sharedHash60(col("line")))
-    val hashes = reuse(lineRows.filter(length(col("line")) >= minChars)
+    val hashes = Reuse.Local(lineRows.filter(length(col("line")) >= minChars)
       .select(col(idCol), col("__h")).distinct())
     val hot = hashes
       .groupBy(col("__h")).agg(count(lit(1)).as("__df"))
@@ -2317,13 +2304,12 @@ object TextAnalysis {
     * vocabulary-scale, NOT broadcastable, which is why the join is
     * relational); V is a broadcast single row; text leaves the first
     * projections only as hashes. round(·,4) absorbs libm-ln spread. */
-  def bigramLogProb(df: DataFrame, idCol: String, textCol: String,
-                    reuse: Reuse = Reuse.Local): DataFrame = {
-    val uh = reuse(df.select(col(idCol), explode(tokens(col(textCol))).as("w"))
+  def bigramLogProb(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val uh = Reuse.Local(df.select(col(idCol), explode(tokens(col(textCol))).as("w"))
       .select(col(idCol), Dedup.sharedHash60(col("w")).as("uh")))
     val cu = uh.groupBy(col("uh")).agg(count(lit(1)).as("cu"))
     val vocab = cu.agg(count(lit(1)).as("v"))
-    val btf = reuse(
+    val btf = Reuse.Local(
       Dedup.shingleRowsPos(df.select(col(idCol), col(textCol)),
           idCol, textCol, n = 2)
         .select(col(idCol), Dedup.sharedHash60(col("s")).as("bh"),
@@ -2377,14 +2363,13 @@ object TextAnalysis {
     * avg_logprob); documents with < 3 tokens have no trigrams and are
     * absent. */
   def trigramKnLogProb(df: DataFrame, idCol: String, textCol: String,
-                       discount: Double = 0.75,
-                       reuse: Reuse = Reuse.Local): DataFrame = {
+                       discount: Double = 0.75): DataFrame = {
     require(discount > 0.0 && discount < 1.0,
       s"discount must be in (0, 1), got $discount")
     val d = lit(discount)
     // occurrence rows: every trigram with its five hash keys
     val parts = split(col("s"), " ")
-    val r = reuse(
+    val r = Reuse.Local(
       Dedup.shingleRowsPos(df.select(col(idCol), col(textCol)),
           idCol, textCol, n = 3)
         .select(col(idCol),
@@ -2396,7 +2381,7 @@ object TextAnalysis {
           Dedup.sharedHash60(element_at(parts, 2)).as("mh"),
           Dedup.sharedHash60(element_at(parts, 3)).as("w3h")))
     // trigram TYPE table (one row per distinct trigram, keys along)
-    val types = reuse(r.select(col("th"), col("bh12"), col("bh23"),
+    val types = Reuse.Local(r.select(col("th"), col("bh12"), col("bh23"),
       col("mh"), col("w3h")).distinct())
     val c3 = r.groupBy(col("th")).agg(count(lit(1)).as("c3"))
     // context stats: occurrences and distinct continuations of (w1,w2)
@@ -2408,7 +2393,7 @@ object TextAnalysis {
     val tmid = types.groupBy(col("mh")).agg(count(lit(1)).as("mid2"),
       count_distinct(col("w3h")).as("n1p2dot"))
     // continuation-unigram support: suffix bigram types
-    val suffix = reuse(types.select(col("mh"), col("w3h")).distinct())
+    val suffix = Reuse.Local(types.select(col("mh"), col("w3h")).distinct())
     val tw3 = suffix.groupBy(col("w3h")).agg(count(lit(1)).as("n1pw3"))
     val nbt = suffix.agg(count(lit(1)).as("nbt"))
     val tf = r.groupBy(col(idCol), col("th"), col("bh12"), col("bh23"),
@@ -2460,10 +2445,10 @@ object TextAnalysis {
     *    the two corpus totals riding every row (window totals — the
     *    read-back side needs them on rows it does NOT match).
     * All vocabulary-scale hash-keyed frames; one tokenize pass. */
-  def trigramKnTrain(corpus: DataFrame, idCol: String, textCol: String,
-                     reuse: Reuse = Reuse.Local): Map[String, DataFrame] = {
-    val r = reuse(knTrigramRows(corpus, idCol, textCol))
-    val types = reuse(r.select(col("th"), col("bh12"), col("bh23"),
+  def trigramKnTrain(corpus: DataFrame, idCol: String,
+                     textCol: String): Map[String, DataFrame] = {
+    val r = Reuse.Local(knTrigramRows(corpus, idCol, textCol))
+    val types = Reuse.Local(r.select(col("th"), col("bh12"), col("bh23"),
       col("mh"), col("w3h")).distinct())
     Map(
       "c3" -> r.groupBy(col("th")).agg(count(lit(1)).as("c3")),
@@ -2515,17 +2500,16 @@ object TextAnalysis {
     * touches only the vocabulary-scale hash-keyed model tables and the
     * new batch's rows; text never crosses an exchange. */
   def trigramKnAppend(model: Map[String, DataFrame], batch: DataFrame,
-                      idCol: String, textCol: String,
-                      reuse: Reuse = Reuse.Local): Map[String, DataFrame] = {
+                      idCol: String, textCol: String): Map[String, DataFrame] = {
     val need = Set("c3", "ctx", "types")
     require(need.subsetOf(model.keySet),
       s"trigramKnAppend: model must carry ${need.toSeq.sorted.mkString(",")}" +
         s" (a pre-round-14 five-table store has no type table and must " +
         s"retrain once), got ${model.keySet.toSeq.sorted.mkString(",")}")
-    val rNew = reuse(knTrigramRows(batch, idCol, textCol))
+    val rNew = Reuse.Local(knTrigramRows(batch, idCol, textCol))
     val typesNew = rNew.select(col("th"), col("bh12"), col("bh23"),
       col("mh"), col("w3h")).distinct()
-    val types = reuse(model("types").unionByName(typesNew).distinct())
+    val types = Reuse.Local(model("types").unionByName(typesNew).distinct())
     val c3 = model("c3").select(col("th"), col("c3").as("__c3o"))
       .join(rNew.groupBy(col("th")).agg(count(lit(1)).as("__c3n")),
         Seq("th"), "full_outer")
@@ -2691,12 +2675,12 @@ object TextAnalysis {
     * leaves the first projection, and every aggregate combines
     * map-side. */
   def tfidfTopTerms(df: DataFrame, idCol: String, textCol: String,
-                    topK: Int = 3, reuse: Reuse = Reuse.Local): DataFrame = {
+                    topK: Int = 3): DataFrame = {
     val toks = df.select(col(idCol), explode(tokens(col(textCol))).as("term"))
     // tf feeds BOTH the df aggregate and the score join; pruning
     // specializes the two branches, so without a checkpoint the corpus
     // tokenize+count chain runs twice (see Dedup.minhashPairs)
-    val tf = reuse(toks.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf")))
+    val tf = Reuse.Local(toks.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = df.agg(count(lit(1)).as("n_docs"))
     val scored = tf.join(dfreq, "term").crossJoin(broadcast(n))

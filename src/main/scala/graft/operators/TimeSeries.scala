@@ -34,13 +34,12 @@ object TimeSeries {
     * and broadcast back), so `filled_value` is null only before the
     * series' first observation ever. */
   def resample(df: DataFrame, tsCol: String, valueCol: String,
-               unit: String = "minute",
-               reuse: Reuse = Reuse.Local): DataFrame = {
+               unit: String = "minute"): DataFrame = {
     require(Seq("minute", "hour", "second").contains(unit),
       s"sub-day unit required (forward fill partitions by day), got $unit")
     // read by the day-close aggregate AND the dense-grid join — one
     // events pass, not two (see Dedup.minhashPairs)
-    val buckets = reuse(df
+    val buckets = Reuse.Local(df
       .groupBy(date_trunc(unit, col(tsCol)).as("bucket"))
       .agg(count(lit(1)).as("n_events"),
         sum(col(valueCol).cast(DecimalType(18, 6))).as("__sum_dec")))

@@ -1794,8 +1794,8 @@ object LlmQueries {
       // the filtered frame feeds both the winners aggregate and the
       // semi-join left side; the per-row scoring (quality/langid/md5)
       // is the expensive part — run it once (see Dedup.minhashPairs)
-      val filtered = scored.filter($"quality" >= 0.5 && $"lang" === "en")
-        .localCheckpoint(false)
+      val filtered = graft.operators.Reuse.truncate(
+        scored.filter($"quality" >= 0.5 && $"lang" === "en"))
       // keep-lowest-id dedup as groupBy-min + semi-join: the aggregate
       // shuffles only (fp, doc_id) pairs with map-side partial min, and
       // no whole-row sort happens anywhere — unlike the row_number

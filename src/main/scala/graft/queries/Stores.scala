@@ -116,7 +116,7 @@ object Stores {
 
   private def bm25As(postings: Layout)(out: String, ixs: Seq[DataFrame],
       postingsThen: () => Unit, doclensThen: () => Unit): Unit =
-    Par.jobs(ixs,
+    Par.jobs(
       () => { putAs(postings)(s"$out/postings", ixs); postingsThen() },
       () => {
         put(s"$out/doclens", ixs.map(TextAnalysis.bm25DocLens(_, "doc_id")): _*)
@@ -188,7 +188,7 @@ object Stores {
   /** MinHash store under `out`: the index's `bands` and `sets`, two
     * sinks overlapped off the shared sketch frame. */
   def minhash(idx: Dedup.MinhashIndex, out: String): Unit =
-    Par.jobs(Seq(idx.sets),
+    Par.jobs(
       () => put(s"$out/bands", idx.bands),
       () => put(s"$out/sets", idx.sets))
 
@@ -227,8 +227,7 @@ object Stores {
   /** KN model store under `out`: one table per model frame, written
     * concurrently off the shared checkpointed `types` frame. */
   def knModel(model: Map[String, DataFrame], out: String): Unit =
-    Par.jobs(Seq(model("types")),
-      model.toSeq.map { case (k, v) => () => put(s"$out/$k", v) }: _*)
+    Par.jobs(model.toSeq.map { case (k, v) => () => put(s"$out/$k", v) }: _*)
 
   def readKnModel(s: SparkSession, model: Map[String, DataFrame],
                   out: String): Map[String, DataFrame] =

@@ -222,9 +222,8 @@ object StreamQueries {
       graft.operators.Par.jobs(
         () => adm1.select(TextAnalysis.fingerprint(col("text")).as("fp"))
           .distinct().write.mode("append").parquet(s"$out/fp"),
-        () => graft.operators.Par.jobs(Seq(delta.sets),
-          () => delta.bands.write.mode("append").parquet(s"$out/mh/bands"),
-          () => delta.sets.write.mode("append").parquet(s"$out/mh/sets")))
+        () => delta.bands.write.mode("append").parquet(s"$out/mh/bands"),
+        () => delta.sets.write.mode("append").parquet(s"$out/mh/sets"))
       // batch 2: exact clones (fp-append path) + near clones with one
       // prepended never-in-corpus token (minhash-append path — the
       // fingerprint differs but ~all shingles are shared, jaccard ≈ 1)
@@ -394,7 +393,7 @@ object StreamQueries {
         val mode = if (i == 0) "overwrite" else "append"
         val ix = graft.operators.Reuse.Local(TextAnalysis.bm25Index(
           slice.select(col("doc_id"), col("text")), "doc_id", "text"))
-        graft.operators.Par.jobs(Seq(ix),
+        graft.operators.Par.jobs(
           () => ix.write.mode(mode).parquet(s"$out/postings"),
           () => TextAnalysis.bm25DocLens(ix, "doc_id")
             .write.mode(mode).parquet(s"$out/doclens"))
@@ -517,9 +516,8 @@ object StreamQueries {
       val delta = Dedup.minhashIndex(adm1, "doc_id", "text")
       // three independent append deltas, three distinct paths — overlap
       graft.operators.Par.jobs(
-        () => graft.operators.Par.jobs(Seq(delta.sets),
-          () => delta.bands.write.mode("append").parquet(s"$out/mh/bands"),
-          () => delta.sets.write.mode("append").parquet(s"$out/mh/sets")),
+        () => delta.bands.write.mode("append").parquet(s"$out/mh/bands"),
+        () => delta.sets.write.mode("append").parquet(s"$out/mh/sets"),
         () => Multimodal.dHash(Multimodal.asMedia(
             adm1.select(col("doc_id"), col("pay")), "doc_id", "pay"))
           .write.mode("append").parquet(s"$out/dh"))

@@ -302,10 +302,9 @@ object Corpus {
     // read by the ceiling peek AND (on the fallback path) the semi-join:
     // truncate lineage so the eval shingle pass runs once (the frame is
     // benchmark-sized 8-byte rows — compact by the reuse policy)
-    val evalHDf = Dedup.shingleRows(
+    val evalHDf = graft.operators.Reuse.truncate(Dedup.shingleRows(
         evalDocs.select(col(idCol), col(textCol)), idCol, textCol, n)
-      .select(Dedup.sharedHash(col("s")).as("h")).distinct()
-      .localCheckpoint(false)
+      .select(Dedup.sharedHash(col("s")).as("h")).distinct())
     // peek one past the ceiling — never collects an unbounded set
     val evalH: Array[Long] = evalHDf.limit(maxInlineHashes + 1)
       .collect().map(_.getLong(0))

@@ -59,15 +59,6 @@ object GraftBridge {
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(org.apache.spark.deploy.SparkHadoopUtil.get.conf)
 
-  /** Count the frame's internal-row RDD — the cheapest action that
-    * fully materializes a non-eager `localCheckpoint` (every partition
-    * computed and its blocks persisted) without converting rows to the
-    * external format or letting the optimizer prune the plan the way
-    * `Dataset.count` would. Used by `Par.jobs(shared, ...)` to
-    * materialize a shared checkpoint before fanning out. */
-  def toRddCount(df: Dataset[Row]): Long =
-    df.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd.count()
-
   /** Block until the listener bus has delivered every queued event —
     * lets tests assert "this code launched no Spark job" without racing
     * the async status listeners. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Graph
+import org.apache.spark.CheckpointDirs.withCheckpointDir
 
 /** Connected-components contract: correctness, the one-action-per-round
   * cost model (VERDICT r2 "What's wrong" #1), and the reliable
@@ -58,9 +59,10 @@ class GraphSpec extends AnyFunSuite {
   test("reliable checkpointDir path produces identical components and writes files") {
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-ck").toFile
     try {
-      val comps = Graph.connectedComponents(pathGraph, "id_a", "id_b",
-        checkpointDir = Some(dir.getAbsolutePath))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val comps = withCheckpointDir(spark.sparkContext, dir.getAbsolutePath) {
+        Graph.connectedComponents(pathGraph, "id_a", "id_b")
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
       assert(comps == expected)
       def files(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
@@ -141,9 +143,10 @@ class GraphSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-star-ck").toFile
     val before = spark.sparkContext.getPersistentRDDs.keySet
     try {
-      val comps = Graph.connectedComponentsStar(pathGraph, "id_a", "id_b",
-        checkpointDir = Some(dir.getAbsolutePath))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val comps = withCheckpointDir(spark.sparkContext, dir.getAbsolutePath) {
+        Graph.connectedComponentsStar(pathGraph, "id_a", "id_b")
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
       assert(comps == expected)
       // checkpoint-file-backed frames need no cache: every persist made on
       // the reliable path must be released once its checkpoint is written

@@ -907,44 +907,56 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("reuse modes change the materialization, not the answer") {
     import spark.implicits._
-    import graft.operators.Reuse
+    import graft.operators.{Reuse, TextAnalysis}
+    import org.apache.spark.CheckpointDirs.withCheckpointDir
     val key = (r: org.apache.spark.sql.Row) => (r.getLong(0), r.getLong(1))
-    val local = Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.5)
+    def pairs() = Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.5)
       .select($"id_a", $"id_b").collect().map(key).toSet
-    // Off: no lineage truncation — branches recompute, pruning flows
-    // through; the pair set must be identical
-    val off = Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.5,
-        reuse = Reuse.Off)
-      .select($"id_a", $"id_b").collect().map(key).toSet
-    assert(off == local && local.nonEmpty)
-    // Off really removes the checkpoint: no LogicalRDD leaf in the plan
-    val offPlan = Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.5,
-      reuse = Reuse.Off).queryExecution.analyzed
-    assert(offPlan.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l
-    }.isEmpty, "Reuse.Off must not truncate lineage")
-    // Reliable: checkpoint files under a real dir, same answer
-    val dir = java.nio.file.Files.createTempDirectory("graft-reuse-ck").toString
-    val rel = Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.5,
-        reuse = Reuse.Reliable(dir))
-      .select($"id_a", $"id_b").collect().map(key).toSet
-    assert(rel == local)
-    // round-6 reuse-takers: Off == Local bit-equal on their diamonds
-    import graft.operators.TextAnalysis
-    def lines(r: Reuse) = TextAnalysis.removeRepeatedLines(
-        docs.select($"doc_id", $"text"), "doc_id", "text", maxDf = 1, reuse = r)
+    def lines() = TextAnalysis.removeRepeatedLines(
+        docs.select($"doc_id", $"text"), "doc_id", "text", maxDf = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
-    assert(lines(Reuse.Off) == lines(Reuse.Local))
+    def bigram() = TextAnalysis.bigramLogProb(
+        docs.select($"doc_id", $"text"), "doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    // no checkpoint dir: executor-local truncation
+    val local = (pairs(), lines(), bigram())
+    assert(local._1.nonEmpty)
+    // a checkpoint dir turns the same truncations into reliable
+    // checkpoint files, with the same answers
+    val dir = java.nio.file.Files.createTempDirectory("graft-reuse-ck").toFile
+    try {
+      val reliable = withCheckpointDir(spark.sparkContext, dir.getAbsolutePath) {
+        (pairs(), lines(), bigram())
+      }
+      assert(reliable == local)
+      val written = files(dir).size
+      assert(written > 0, "no reliable checkpoint files were written")
+      // a former raw localCheckpoint site follows the same rule
+      val ev = docs.select($"doc_id", $"text").limit(5)
+      withCheckpointDir(spark.sparkContext, dir.getAbsolutePath) {
+        graft.streaming.Corpus.cleanAgainst(
+          docs.select($"doc_id", $"text"), ev, "doc_id", "text").collect()
+      }
+      val afterClean = files(dir).size
+      assert(afterClean > written, "cleanAgainst wrote no checkpoint files under a dir")
+      // with the dir unset again, nothing more is written there
+      assert((pairs(), lines(), bigram()) == local)
+      assert(files(dir).size == afterClean,
+        "checkpoint files were written with no checkpoint dir set")
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
+      }
+      rm(dir)
+    }
     // the opt-in INPUT truncation must be bit-equal too
     def linesIn(r: Reuse) = TextAnalysis.removeRepeatedLines(
         docs.select($"doc_id", $"text"), "doc_id", "text", maxDf = 1,
         inputReuse = r)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
-    assert(linesIn(Reuse.Local) == lines(Reuse.Off))
-    def bigram(r: Reuse) = TextAnalysis.bigramLogProb(
-        docs.select($"doc_id", $"text"), "doc_id", "text", reuse = r)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(bigram(Reuse.Off) == bigram(Reuse.Local))
+    assert(linesIn(Reuse.Local) == linesIn(Reuse.Off))
   }
 
   test("Reuse.LocalDeferred: bit-equal to Off, deferred leaf in plan, ZERO jobs before first action") {

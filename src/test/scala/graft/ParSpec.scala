@@ -51,17 +51,18 @@ class ParSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$out/b").head().getLong(0) == 1001000L)
   }
 
-  test("jobs(shared, ...) materializes the shared frame BEFORE the pool starts") {
+  test("concurrent sinks off one shared lazy checkpoint compute it once") {
     val spark = TestSpark.spark
     import spark.implicits._
     // a checkpointed frame whose computation bumps a counter per row:
-    // after the eager pre-materialization, the fan-out actions must
-    // read blocks, never recompute — the counter stays at one pass
+    // the first sink to reach a partition stores its block under
+    // Spark's per-block write lock, the other sink waits and reads it —
+    // never recomputes — so the counter stays at one pass
     val passes = spark.sparkContext.longAccumulator("passes")
     val base = graft.operators.Reuse.Local(
       (1 to 100).toDF("v").map { r => passes.add(1L); r.getInt(0) }.toDF("v"))
     val out = "target/test_sink/par_shared_eager"
-    graft.operators.Par.jobs(Seq(base),
+    graft.operators.Par.jobs(
       () => base.write.mode("overwrite").parquet(s"$out/a"),
       () => base.selectExpr("sum(v) AS s").write.mode("overwrite")
         .parquet(s"$out/b"))

@@ -1081,4 +1081,49 @@ class PlanSpec extends AnyFunSuite {
       s"contamination must exchange only id/hash keys:\n${exchanges.mkString("\n")}")
     assert(p.contains("partial"), "the count+sum aggregate must combine map-side")
   }
+
+  test("lrTrain epochs shuffle only the bucket aggregate, never __tid") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val corpus = Tables.load(spark, TestSpark.sf, "documents")
+      .select($"doc_id", $"text")
+    // the hash-exchange keys of each per-epoch gradient plan (output
+    // (bucket, g)) executed by one 2-epoch lrTrain
+    def gradientExchangeKeys(): Seq[Seq[Set[String]]] = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+      val listener = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+          plans.add(qe)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        graft.operators.Classifier.lrTrain(corpus.filter($"doc_id" % 2 === 0),
+          corpus.filter($"doc_id" % 2 === 1), "doc_id", "text", iters = 2)
+        org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      } finally spark.listenerManager.unregister(listener)
+      val helper = new AdaptiveSparkPlanHelper {}
+      scala.jdk.CollectionConverters.IteratorHasAsScala(plans.iterator).asScala.toSeq
+        .filter(_.analyzed.output.map(_.name) == Seq("bucket", "g"))
+        .map(qe => helper.collect(qe.executedPlan) {
+          case e: ShuffleExchangeExec => e.outputPartitioning match {
+            case h: HashPartitioning =>
+              h.expressions.flatMap(_.references.map(_.name)).toSet
+            case other => Set(other.toString)
+          }
+        })
+    }
+    // the design matrix is cached hash-partitioned on __tid and the
+    // cache reports that partitioning, so the logit aggregate and the
+    // feats-p join read it in place (without the repartition both
+    // shuffle on __tid every epoch)
+    val keys = gradientExchangeKeys()
+    assert(keys.size == 2, s"expected one gradient plan per epoch, saw ${keys.size}")
+    assert(keys.forall(_ == Seq(Set("bucket"))),
+      s"an epoch shuffled more than its bucket aggregate: $keys")
+  }
 }
