@@ -1,9 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, GraftDeferred, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{Column, GraftBridge, GraftDeferred, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{StructField, StructType}
+import graft.engine.SqlFunction.{scalarFunction, tableFunction}
 import graft.operators.{Dedup, Graph, Multimodal, Sampling, Similarity, TextAnalysis, TimeSeries}
 
 /** SQL façade over the §2.10 LLM-pipeline operators — the reference's
@@ -19,13 +19,19 @@ import graft.operators.{Dedup, Graph, Multimodal, Sampling, Similarity, TextAnal
   *   SELECT * FROM graft_chunk('documents', 'doc_id', 'text', 64, 16)
   * }}}
   *
+  * A new function is declared in [[registerAll]] by one
+  * [[SqlFunction.tableFunction]] (or [[SqlFunction.scalarFunction]])
+  * call whose signature string is the only place its name and argument
+  * counts are stated; `[...]` marks an optional group, and a call with
+  * any other count fails with `expected <signature>, got N argument(s)`.
+  *
   * The builder runs at ANALYSIS time and returns the operator's logical
   * plan — execution stays fully distributed and LAZY, including the
   * iterative cluster functions: their connected-components rounds sit
   * behind a [[org.apache.spark.sql.GraftDeferredScan]] leaf, so
   * `EXPLAIN`/`prepare`/re-analysis launch no Spark job and the rounds
-  * fire (once — the builder thunk is memoized) only when the statement
-  * actually executes. Arguments must be literals
+  * fire (once — [[GraftDeferred.frame]] memoizes the builder) only when
+  * the statement actually executes. Arguments must be literals
   * (they parameterize plan construction, like every SQL TVF). Table
   * arguments resolve through the session catalog, so they compose with
   * temp views, catalog namespaces ([[Catalog.registerParquetDb]]) and
@@ -33,170 +39,57 @@ import graft.operators.{Dedup, Graph, Multimodal, Sampling, Similarity, TextAnal
   */
 object LlmSql {
 
-  private def bad(sig: String, args: Seq[Expression]): Nothing =
-    throw new IllegalArgumentException(
-      s"expected $sig, got ${args.length} argument(s)")
+  private val registered = new SqlFunction.OncePerSession
 
-  private def lit(e: Expression, fn: String): Any = {
-    require(e.foldable, s"$fn: arguments must be literals, got: ${e.sql}")
-    e.eval()
-  }
-  private def str(e: Expression, fn: String): String =
-    String.valueOf(lit(e, fn))
-  private def int(e: Expression, fn: String): Int = lit(e, fn) match {
-    case n: java.lang.Number => n.intValue
-    case other => throw new IllegalArgumentException(
-      s"$fn: expected an integer, got $other")
-  }
-  // for id-valued params: intValue would silently TRUNCATE a bigint
-  // literal above Int.MaxValue (routine for shifted doc/vec ids)
-  private def lng(e: Expression, fn: String): Long = lit(e, fn) match {
-    case n: java.lang.Number => n.longValue
-    case other => throw new IllegalArgumentException(
-      s"$fn: expected an integer, got $other")
-  }
-  // optional reuse-tail arguments: anything other than the documented
-  // 'local' (or an explicit 'off') is REJECTED — a typo like 'Local'
-  // silently disabling input truncation is the failure mode this guards
-  private def reuseOpt(e: Expression, fn: String): graft.operators.Reuse =
-    str(e, fn) match {
-      // 'local' maps to the DEFERRED local checkpoint on the SQL
-      // surface: TVF builders run at analysis, and SQL temp views
-      // re-analyze per downstream statement — an eager Reuse.Local
-      // here re-ran the upstream chain once per CREATE VIEW (see
-      // Reuse.LocalDeferred's scaladoc; BASELINE.md round-12)
-      case "local" => graft.operators.Reuse.LocalDeferred
-      case "off"   => graft.operators.Reuse.Off
-      case other => throw new IllegalArgumentException(
-        s"$fn: unrecognized reuse option '$other' (expected 'local' or 'off')")
-    }
-  // optional pre-tokenization tail for the BPE family: 'pretok'
-  // selects the Sennrich-style class split (TextAnalysis.pretokPattern),
-  // 'ws' the whitespace default; anything else refuses loudly (the
-  // reuseOpt typo-guard convention)
-  private def pretokOpt(e: Expression, fn: String): Boolean =
-    str(e, fn) match {
-      case "pretok" => true
-      case "ws"     => false
-      case other => throw new IllegalArgumentException(
-        s"$fn: unrecognized pre-tokenization option '$other' (expected 'pretok' or 'ws')")
-    }
-  private def dbl(e: Expression, fn: String): Double = lit(e, fn) match {
-    case n: java.lang.Number => n.doubleValue // covers Decimal literals
-    case d: org.apache.spark.sql.types.Decimal => d.toDouble
-    case other => throw new IllegalArgumentException(
-      s"$fn: expected a number, got $other")
-  }
-
-  /** Resolve a table-name argument through the active session catalog
-    * (temp views, `db.table` namespaces — anything spark.table sees). */
-  private def table(name: String): DataFrame = SparkSession.active.table(name)
-
-  /** Memoize a deferred builder: plan-tree copies and repeated actions
-    * on the statement share ONE run of the iterative computation. */
-  private def memo(f: () => DataFrame): () => DataFrame = {
-    lazy val v = f()
-    () => v
-  }
-
-  private def reg(spark: SparkSession, name: String)
-                 (b: Seq[Expression] => DataFrame): Unit =
-    GraftBridge.registerTableFunction(spark, name,
-      args => GraftBridge.logicalPlan(b(args)))
-
-  /** Sessions already registered — same WARN-flood guard as
-    * [[graft.functions.Builtins.registerAll]] (re-running
-    * createOrReplaceTempFunction logs a "replaced" WARN per function). */
-  private val registeredSessions =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  /** Register every LLM-pipeline table function on `spark`. Idempotent
+  /** Register every LLM-pipeline SQL function on `spark`. Idempotent
     * per session, called by the [[Engine]] constructor. */
-  def registerAll(spark: SparkSession): Unit = {
-    // mark-before-register guards re-entrancy, but a partial failure
-    // must UNmark — otherwise the session is permanently half-registered
-    // and every later call returns early instead of retrying
-    if (!registeredSessions.add(spark)) return
-    try registerAllImpl(spark)
-    catch { case t: Throwable => registeredSessions.remove(spark); throw t }
-  }
-
-  private def registerAllImpl(spark: SparkSession): Unit = {
-    reg(spark, "graft_exact_dedup") {
-      case Seq(t, id, text) =>
-        val f = "graft_exact_dedup"
-        Dedup.exactDedup(table(str(t, f)), str(id, f), str(text, f))
-      case args => bad("graft_exact_dedup(table, id_col, text_col)", args)
+  def registerAll(spark: SparkSession): Unit = registered(spark) {
+    tableFunction(spark, "graft_exact_dedup(table, id_col, text_col)") { a =>
+      Dedup.exactDedup(a.table(0), a.str(1), a.str(2))
     }
-    reg(spark, "graft_minhash_pairs") {
-      case args if args.length == 4 || args.length == 5 =>
-        val f = "graft_minhash_pairs"
-        val cap = if (args.length == 5) Some(int(args(4), f)) else None
-        Dedup.minhashPairs(table(str(args(0), f)), str(args(1), f),
-          str(args(2), f), threshold = dbl(args(3), f), maxBucketSize = cap)
-      case args => bad(
-        "graft_minhash_pairs(table, id_col, text_col, threshold[, max_bucket])", args)
+    tableFunction(spark, "graft_minhash_pairs(table, id_col, text_col, threshold[, max_bucket])") { a =>
+      val cap = Option.when(a.has(4))(a.int(4))
+      Dedup.minhashPairs(a.table(0), a.str(1),
+        a.str(2), threshold = a.dbl(3), maxBucketSize = cap)
     }
-    reg(spark, "graft_minhash_between") {
-      case args if args.length == 5 || args.length == 6 =>
-        val f = "graft_minhash_between"
-        val cap = if (args.length == 6) Some(int(args(5), f)) else None
-        Dedup.minhashPairsBetween(table(str(args(0), f)), table(str(args(1), f)),
-          str(args(2), f), str(args(3), f),
-          threshold = dbl(args(4), f), maxBucketSize = cap)
-      case args => bad(
-        "graft_minhash_between(new_table, corpus_table, id_col, text_col, threshold[, max_bucket])", args)
+    tableFunction(spark, "graft_minhash_between(new_table, corpus_table, id_col, text_col, threshold[, max_bucket])") { a =>
+      val cap = Option.when(a.has(5))(a.int(5))
+      Dedup.minhashPairsBetween(a.table(0), a.table(1),
+        a.str(2), a.str(3),
+        threshold = a.dbl(4), maxBucketSize = cap)
     }
-    reg(spark, "graft_minhash_probe") {
+    tableFunction(spark, "graft_minhash_probe(bands_table, sets_table, new_table, id_col, text_col, k, n_bands, threshold)") { a =>
       // probe a STORED index: bands/sets are any registered views —
       // typically parquet read-backs of a minhashIndex write; k and
       // n_bands must match the build (minhashProbe's contract)
-      case Seq(bands, sets, t, id, text, k, nb, thr) =>
-        val f = "graft_minhash_probe"
-        Dedup.minhashProbe(table(str(t, f)),
-          Dedup.MinhashIndex(table(str(bands, f)), table(str(sets, f))),
-          str(id, f), str(text, f),
-          k = int(k, f), nBands = int(nb, f), threshold = dbl(thr, f))
-      case args => bad(
-        "graft_minhash_probe(bands_table, sets_table, new_table, id_col, text_col, k, n_bands, threshold)", args)
+      Dedup.minhashProbe(a.table(2),
+        Dedup.MinhashIndex(a.table(0), a.table(1)),
+        a.str(3), a.str(4),
+        k = a.int(5), nBands = a.int(6), threshold = a.dbl(7))
     }
-    reg(spark, "graft_containment_pairs") {
-      case args if args.length == 5 || args.length == 6 =>
-        val f = "graft_containment_pairs"
-        val cap = if (args.length == 6) Some(int(args(5), f)) else None
-        Dedup.containmentPairs(table(str(args(0), f)), str(args(1), f),
-          str(args(2), f), n = int(args(3), f),
-          threshold = dbl(args(4), f), maxShingleDf = cap)
-      case args => bad(
-        "graft_containment_pairs(table, id_col, text_col, n, threshold[, max_df])", args)
+    tableFunction(spark, "graft_containment_pairs(table, id_col, text_col, n, threshold[, max_df])") { a =>
+      val cap = Option.when(a.has(5))(a.int(5))
+      Dedup.containmentPairs(a.table(0), a.str(1),
+        a.str(2), n = a.int(3),
+        threshold = a.dbl(4), maxShingleDf = cap)
     }
-    reg(spark, "graft_chunk") {
-      case Seq(t, id, text, ct, ov) =>
-        val f = "graft_chunk"
-        TextAnalysis.chunk(table(str(t, f)), str(id, f), str(text, f),
-          chunkTokens = int(ct, f), overlap = int(ov, f))
-      case args => bad(
-        "graft_chunk(table, id_col, text_col, chunk_tokens, overlap)", args)
+    tableFunction(spark, "graft_chunk(table, id_col, text_col, chunk_tokens, overlap)") { a =>
+      TextAnalysis.chunk(a.table(0), a.str(1), a.str(2),
+        chunkTokens = a.int(3), overlap = a.int(4))
     }
-    reg(spark, "graft_pack_offsets") {
+    tableFunction(spark, "graft_pack_offsets(table, id_col, text_col, seq_len, docs_per_bucket[, merges_table])") { a =>
       // 6-arg form packs in LEARNED tokens: the stored merge table
       // drives the counter (KB-scale collect, the graft_bpe_count
       // boundary); id order / hierarchy / straddle contract unchanged
-      case Seq(t, id, text, sl, dpb) =>
-        val f = "graft_pack_offsets"
-        TextAnalysis.packOffsets(table(str(t, f)), str(id, f), str(text, f),
-          seqLen = int(sl, f), docsPerBucket = int(dpb, f))
-      case Seq(t, id, text, sl, dpb, merges) =>
-        val f = "graft_pack_offsets"
-        TextAnalysis.packOffsets(table(str(t, f)), str(id, f), str(text, f),
-          seqLen = int(sl, f), docsPerBucket = int(dpb, f),
-          tokenCounter = TextAnalysis.bpeCounter(table(str(merges, f))))
-      case args => bad(
-        "graft_pack_offsets(table, id_col, text_col, seq_len, docs_per_bucket[, merges_table])", args)
+      if (a.has(5))
+        TextAnalysis.packOffsets(a.table(0), a.str(1), a.str(2),
+          seqLen = a.int(3), docsPerBucket = a.int(4),
+          tokenCounter = TextAnalysis.bpeCounter(a.table(5)))
+      else
+        TextAnalysis.packOffsets(a.table(0), a.str(1), a.str(2),
+          seqLen = a.int(3), docsPerBucket = a.int(4))
     }
-    reg(spark, "graft_store_compact") {
+    tableFunction(spark, "graft_store_compact(store_table, id_col, tombstone_table_or_empty, out_path, partition_cols_csv, num_files)") { a =>
       // physical store compaction (purge tombstones from the files +
       // consolidate append deltas into a new versioned path) — the
       // rewrite is an ACTION, so it is deferred like every
@@ -204,1708 +97,1230 @@ object LlmSql {
       // store's columns, partition keys last — the parquet read-back
       // layout), the rewrite fires at first execution. Empty
       // tombstone-table name = compact-only (no purge).
-      case Seq(st, id, tombT, pathE, partsE, nfE) =>
-        val f = "graft_store_compact"
-        val store = table(str(st, f))
-        val idc = str(id, f)
-        val tombName = str(tombT, f)
-        val tomb = if (tombName.isEmpty) None else Some(table(tombName))
-        val path = str(pathE, f)
-        val parts = str(partsE, f).split(",").map(_.trim)
-          .filter(_.nonEmpty).toSeq
-        parts.foreach(p => require(store.columns.contains(p),
-          s"$f: partition column `$p` not in store (${store.columns.sorted.mkString(",")})"))
-        val nf = int(nfE, f)
-        val outSchema = StructType(
-          store.schema.filterNot(fd => parts.contains(fd.name)) ++
-            parts.map(p => store.schema(p)))
-        GraftDeferred.frame(spark, outSchema, memo { () =>
-          Dedup.storeCompact(store, idc, tomb, path,
-            partitionCols = parts, numFiles = nf)
-        })
-      case args => bad(
-        "graft_store_compact(store_table, id_col, tombstone_table_or_empty, out_path, partition_cols_csv, num_files)", args)
+      val store = a.table(0)
+      val idc = a.str(1)
+      val tombName = a.str(2)
+      val tomb = if (tombName.isEmpty) None else Some(SparkSession.active.table(tombName))
+      val path = a.str(3)
+      val parts = a.csv(4)
+      parts.foreach(p => require(store.columns.contains(p),
+        s"${a.fn}: partition column `$p` not in store (${store.columns.sorted.mkString(",")})"))
+      val nf = a.int(5)
+      val outSchema = StructType(
+        store.schema.filterNot(fd => parts.contains(fd.name)) ++
+          parts.map(p => store.schema(p)))
+      GraftDeferred.frame(spark, outSchema) {
+        Dedup.storeCompact(store, idc, tomb, path,
+          partitionCols = parts, numFiles = nf)
+      }
     }
-    reg(spark, "graft_store_compact_selective") {
+    tableFunction(spark, "graft_store_compact_selective(store_table, id_col, tombstone_table, store_path, staging_path, partition_cols_csv)") { a =>
       // partition-SELECTIVE compaction IN PLACE over a partitioned
       // store directory: only tombstone-bearing partitions rewrite,
       // untouched partition files stay byte-identical. store_table must
       // be a view over store_path (it supplies the schema so analysis
       // stays job-free); the rewrite is a deferred ACTION like
       // graft_store_compact.
-      case Seq(st, id, tombT, storeP, stagingP, partsE) =>
-        val f = "graft_store_compact_selective"
-        val store = table(str(st, f))
-        val idc = str(id, f)
-        val tomb = table(str(tombT, f))
-        val sp = str(storeP, f)
-        val gp = str(stagingP, f)
-        val parts = str(partsE, f).split(",").map(_.trim)
-          .filter(_.nonEmpty).toSeq
-        require(parts.nonEmpty, s"$f: partition_cols_csv must be non-empty")
-        parts.foreach(p => require(store.columns.contains(p),
-          s"$f: partition column `$p` not in store (${store.columns.sorted.mkString(",")})"))
-        val outSchema = StructType(
-          store.schema.filterNot(fd => parts.contains(fd.name)) ++
-            parts.map(p => store.schema(p)))
-        GraftDeferred.frame(spark, outSchema, memo { () =>
-          Dedup.storeCompactSelective(spark, sp, idc, tomb, parts, gp)
-        })
-      case args => bad(
-        "graft_store_compact_selective(store_table, id_col, tombstone_table, store_path, staging_path, partition_cols_csv)", args)
+      val store = a.table(0)
+      val idc = a.str(1)
+      val tomb = a.table(2)
+      val sp = a.str(3)
+      val gp = a.str(4)
+      val parts = a.csv(5)
+      require(parts.nonEmpty, s"${a.fn}: partition_cols_csv must be non-empty")
+      parts.foreach(p => require(store.columns.contains(p),
+        s"${a.fn}: partition column `$p` not in store (${store.columns.sorted.mkString(",")})"))
+      val outSchema = StructType(
+        store.schema.filterNot(fd => parts.contains(fd.name)) ++
+          parts.map(p => store.schema(p)))
+      GraftDeferred.frame(spark, outSchema) {
+        Dedup.storeCompactSelective(spark, sp, idc, tomb, parts, gp)
+      }
     }
-    reg(spark, "graft_bm25_stored") {
+    tableFunction(spark, "graft_bm25_stored(postings_table, doclens_table, id_col, terms_csv, k)") { a =>
       // retrieval from the stored inverted index: fully LAZY (pushed
       // term filter, broadcast df/stats, top-k)
-      case Seq(pT, dT, id, terms, k) =>
-        val f = "graft_bm25_stored"
-        TextAnalysis.bm25TopKStored(table(str(pT, f)), table(str(dT, f)),
-          str(id, f),
-          queryTerms = str(terms, f).split(",").map(_.trim).filter(_.nonEmpty).toSeq,
-          k = int(k, f))
-      case args => bad(
-        "graft_bm25_stored(postings_table, doclens_table, id_col, terms_csv, k)", args)
+      TextAnalysis.bm25TopKStored(a.table(0), a.table(1),
+        a.str(2),
+        queryTerms = a.csv(3),
+        k = a.int(4))
     }
-    reg(spark, "graft_bm25_pruned") {
+    tableFunction(spark, "graft_bm25_pruned(postings_table, doclens_table, id_col, terms_csv, n_buckets, k)") { a =>
       // bucket-partitioned stored serving: the query terms' bucket
       // literals are a pure driver function (no data read) — fully
       // LAZY, and the tbucket IN (...) lands in PartitionFilters
-      case Seq(pT, dT, id, terms, nB, kE) =>
-        val f = "graft_bm25_pruned"
-        TextAnalysis.bm25TopKStoredPruned(table(str(pT, f)),
-          table(str(dT, f)), str(id, f),
-          queryTerms = str(terms, f).split(",").map(_.trim)
-            .filter(_.nonEmpty).toSeq,
-          nBuckets = int(nB, f), k = int(kE, f))
-      case args => bad(
-        "graft_bm25_pruned(postings_table, doclens_table, id_col, terms_csv, n_buckets, k)", args)
+      TextAnalysis.bm25TopKStoredPruned(a.table(0),
+        a.table(1), a.str(2),
+        queryTerms = a.csv(3),
+        nBuckets = a.int(4), k = a.int(5))
     }
-    reg(spark, "graft_bm25_join") {
+    tableFunction(spark, "graft_bm25_join(postings_table, doclens_table, queries_table, id_col, query_id_col, query_text_col, k)") { a =>
       // batch retrieval over the stored index: the query-batch term
       // union collects to a driver literal (the probe-cell-union
       // recipe) — an ACTION, so deferred; EXPLAIN launches no job
-      case Seq(pT, dT, qT, id, qid, qtext, k) =>
-        val f = "graft_bm25_join"
-        val postings = table(str(pT, f)); val dls = table(str(dT, f))
-        val qs = table(str(qT, f))
-        val idc = str(id, f); val qidc = str(qid, f)
-        val qtc = str(qtext, f); val kk = int(k, f)
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField(qidc, qs.select(col(qidc)).schema.head.dataType),
-            StructField(idc, postings.select(col(idc)).schema.head.dataType),
-            StructField("bm25", org.apache.spark.sql.types.DoubleType),
-            StructField("rank", org.apache.spark.sql.types.IntegerType))),
-          memo { () =>
-            TextAnalysis.bm25Join(postings, dls, qs, idc, qidc, qtc, k = kk)
-          })
-      case args => bad(
-        "graft_bm25_join(postings_table, doclens_table, queries_table, id_col, query_id_col, query_text_col, k)", args)
+      val postings = a.table(0); val dls = a.table(1)
+      val qs = a.table(2)
+      val idc = a.str(3); val qidc = a.str(4)
+      val qtc = a.str(5); val kk = a.int(6)
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField(qidc, qs.select(col(qidc)).schema.head.dataType),
+          StructField(idc, postings.select(col(idc)).schema.head.dataType),
+          StructField("bm25", org.apache.spark.sql.types.DoubleType),
+          StructField("rank", org.apache.spark.sql.types.IntegerType)))) {
+        TextAnalysis.bm25Join(postings, dls, qs, idc, qidc, qtc, k = kk)
+      }
     }
-    reg(spark, "graft_corpus_kl") {
+    tableFunction(spark, "graft_corpus_kl(table_a, table_b, text_col)") { a =>
       // corpus drift between two snapshot tables: smoothed unigram KL
       // both directions, one report row
-      case Seq(ta, tb, text) =>
-        val f = "graft_corpus_kl"
-        TextAnalysis.unigramKlReport(table(str(ta, f)), table(str(tb, f)),
-          str(text, f))
-      case args => bad(
-        "graft_corpus_kl(table_a, table_b, text_col)", args)
+      TextAnalysis.unigramKlReport(a.table(0), a.table(1), a.str(2))
     }
-    reg(spark, "graft_bm25") {
+    tableFunction(spark, "graft_bm25(table, id_col, text_col, terms_csv, k)") { a =>
       // keyword retrieval: query terms as a comma-separated literal
       // (split here — no per-row work), top-k by the quantized score
-      case Seq(t, id, text, terms, k) =>
-        val f = "graft_bm25"
-        TextAnalysis.bm25TopK(table(str(t, f)), str(id, f), str(text, f),
-          queryTerms = str(terms, f).split(",").map(_.trim).filter(_.nonEmpty).toSeq,
-          k = int(k, f))
-      case args => bad(
-        "graft_bm25(table, id_col, text_col, terms_csv, k)", args)
+      TextAnalysis.bm25TopK(a.table(0), a.str(1), a.str(2),
+        queryTerms = a.csv(3),
+        k = a.int(4))
     }
-    reg(spark, "graft_rrf_fuse") {
+    tableFunction(spark, "graft_rrf_fuse(ranked_tables_csv, id_col, k, k_rrf)") { a =>
       // hybrid-retrieval fusion: comma-separated ranked views (each
       // carrying id_col + rank), reciprocal-rank contributions added in
       // declared order via a full-outer chain — fully lazy
-      case Seq(tablesCsv, id, kE, kR) =>
-        val f = "graft_rrf_fuse"
-        val ts = str(tablesCsv, f).split(",").map(_.trim)
-          .filter(_.nonEmpty).toSeq
-        TextAnalysis.rrfFuse(ts.map(table), str(id, f),
-          k = int(kE, f), kRrf = int(kR, f))
-      case args => bad(
-        "graft_rrf_fuse(ranked_tables_csv, id_col, k, k_rrf)", args)
+      val ts = a.csv(0)
+      TextAnalysis.rrfFuse(ts.map(SparkSession.active.table), a.str(1),
+        k = a.int(2), kRrf = a.int(3))
     }
-    reg(spark, "graft_rrf_fuse_by") {
+    tableFunction(spark, "graft_rrf_fuse_by(ranked_tables_csv, by_col, id_col, k, k_rrf)") { a =>
       // per-query hybrid fusion: ranked views each carrying
       // (by_col, id_col, rank), fused within each by_col group, the cut
       // a by-partitioned window — fully lazy
-      case Seq(tablesCsv, by, id, kE, kR) =>
-        val f = "graft_rrf_fuse_by"
-        val ts = str(tablesCsv, f).split(",").map(_.trim)
-          .filter(_.nonEmpty).toSeq
-        TextAnalysis.rrfFuseBy(ts.map(table), str(by, f), str(id, f),
-          k = int(kE, f), kRrf = int(kR, f))
-      case args => bad(
-        "graft_rrf_fuse_by(ranked_tables_csv, by_col, id_col, k, k_rrf)", args)
+      val ts = a.csv(0)
+      TextAnalysis.rrfFuseBy(ts.map(SparkSession.active.table), a.str(1), a.str(2),
+        k = a.int(3), kRrf = a.int(4))
     }
-    reg(spark, "graft_retrieval_eval") {
+    tableFunction(spark, "graft_retrieval_eval(run_table, relevance_table, query_col, id_col, k[, gain_col])") { a =>
       // retrieval-quality report: a ranked run view + a relevance pair
       // view → per-query hits/precision/recall@k, RR, nDCG@k — fully
       // lazy
-      case args if args.length == 5 || args.length == 6 =>
-        val f = "graft_retrieval_eval"
-        // optional 6th arg: graded-gain column name in the relevance
-        // table -> the 2^rel - 1 DCG form; absent = binary relevance
-        val gain = if (args.length == 6) Some(str(args(5), f)) else None
-        TextAnalysis.retrievalEvalReport(table(str(args(0), f)),
-          table(str(args(1), f)), str(args(2), f), str(args(3), f),
-          k = int(args(4), f), gainCol = gain)
-      case args => bad(
-        "graft_retrieval_eval(run_table, relevance_table, query_col, id_col, k[, gain_col])", args)
+      // optional 6th arg: graded-gain column name in the relevance
+      // table -> the 2^rel - 1 DCG form; absent = binary relevance
+      val gain = Option.when(a.has(5))(a.str(5))
+      TextAnalysis.retrievalEvalReport(a.table(0),
+        a.table(1), a.str(2), a.str(3),
+        k = a.int(4), gainCol = gain)
     }
-    reg(spark, "graft_snippet_join") {
+    tableFunction(spark, "graft_snippet_join(run_table, docs_table, queries_table, query_col, doc_id_col, text_col, query_text_col, window)") { a =>
       // batch snippets: a ranked run view + the docs + the queries —
       // per-query terms ride as an array column; pure lazy projection
-      case Seq(runT, docsT, qT, qc, idc, tc, qtc, w) =>
-        val f = "graft_snippet_join"
-        TextAnalysis.snippetJoin(table(str(runT, f)), table(str(docsT, f)),
-          table(str(qT, f)), str(qc, f), str(idc, f), str(tc, f),
-          str(qtc, f), window = int(w, f))
-      case args => bad(
-        "graft_snippet_join(run_table, docs_table, queries_table, query_col, doc_id_col, text_col, query_text_col, window)", args)
+      TextAnalysis.snippetJoin(a.table(0), a.table(1),
+        a.table(2), a.str(3), a.str(4), a.str(5),
+        a.str(6), window = a.int(7))
     }
-    reg(spark, "graft_snippet") {
+    tableFunction(spark, "graft_snippet(table, id_col, text_col, terms_csv, window)") { a =>
       // search-result snippets: densest query-term window per matching
       // doc — a pure per-row projection, fully lazy
-      case Seq(t, id, text, terms, w) =>
-        val f = "graft_snippet"
-        TextAnalysis.snippetExtract(table(str(t, f)), str(id, f),
-          str(text, f),
-          queryTerms = str(terms, f).split(",").map(_.trim)
-            .filter(_.nonEmpty).toSeq,
-          window = int(w, f))
-      case args => bad(
-        "graft_snippet(table, id_col, text_col, terms_csv, window)", args)
+      TextAnalysis.snippetExtract(a.table(0), a.str(1),
+        a.str(2),
+        queryTerms = a.csv(3),
+        window = a.int(4))
     }
-    reg(spark, "graft_mmr") {
+    tableFunction(spark, "graft_mmr(candidates_table, id_col, vec_col, rel_col, k, lambda)") { a =>
       // diversified selection: k sequential greedy rounds, each a tiny
       // action over the bounded candidate view — DEFERRED so EXPLAIN
       // launches no job
-      case Seq(t, id, vec, rel, kE, lamE) =>
-        val f = "graft_mmr"
-        val cand = table(str(t, f))
-        val idc = str(id, f); val vc = str(vec, f); val rc = str(rel, f)
-        val kk = int(kE, f); val lam = dbl(lamE, f)
-        val outSchema = StructType(Seq(
-          cand.schema(idc), cand.schema(rc),
-          StructField("mmr", org.apache.spark.sql.types.DoubleType),
-          StructField("rank", org.apache.spark.sql.types.IntegerType,
-            nullable = false)))
-        GraftDeferred.frame(spark, outSchema, memo { () =>
-          Similarity.mmrSelect(cand, idc, vc, rc, k = kk, lam = lam)
-        })
-      case args => bad(
-        "graft_mmr(candidates_table, id_col, vec_col, rel_col, k, lambda)", args)
+      val cand = a.table(0)
+      val idc = a.str(1); val vc = a.str(2); val rc = a.str(3)
+      val kk = a.int(4); val lam = a.dbl(5)
+      val outSchema = StructType(Seq(
+        cand.schema(idc), cand.schema(rc),
+        StructField("mmr", org.apache.spark.sql.types.DoubleType),
+        StructField("rank", org.apache.spark.sql.types.IntegerType,
+          nullable = false)))
+      GraftDeferred.frame(spark, outSchema) {
+        Similarity.mmrSelect(cand, idc, vc, rc, k = kk, lam = lam)
+      }
     }
-    reg(spark, "graft_bm25_prf_join") {
+    tableFunction(spark, "graft_bm25_prf_join(postings_table, doclens_table, queries_table, id_col, query_id_col, query_text_col, k, fb_docs, fb_terms)") { a =>
       // batch PRF over stored index frames: round-1 feedback ids +
       // candidate-union + chosen expansions are driver actions —
       // DEFERRED so EXPLAIN launches no job
-      case Seq(pT, dT, qT, id, qid, qtx, kE, fbD, fbT) =>
-        val f = "graft_bm25_prf_join"
-        val post = table(str(pT, f)); val dls = table(str(dT, f))
-        val qs = table(str(qT, f))
-        val idc = str(id, f); val qidc = str(qid, f); val qtc = str(qtx, f)
-        val kk = int(kE, f); val fd = int(fbD, f); val ft = int(fbT, f)
-        val outSchema = StructType(Seq(
-          qs.schema(qidc), post.schema(idc),
-          StructField("bm25", org.apache.spark.sql.types.DoubleType),
-          StructField("rank", org.apache.spark.sql.types.IntegerType,
-            nullable = false)))
-        GraftDeferred.frame(spark, outSchema, memo { () =>
-          TextAnalysis.bm25PrfJoin(post, dls, qs, idc, qidc, qtc,
-            k = kk, fbDocs = fd, fbTerms = ft)
-        })
-      case args => bad(
-        "graft_bm25_prf_join(postings_table, doclens_table, queries_table, id_col, query_id_col, query_text_col, k, fb_docs, fb_terms)", args)
+      val post = a.table(0); val dls = a.table(1)
+      val qs = a.table(2)
+      val idc = a.str(3); val qidc = a.str(4); val qtc = a.str(5)
+      val kk = a.int(6); val fd = a.int(7); val ft = a.int(8)
+      val outSchema = StructType(Seq(
+        qs.schema(qidc), post.schema(idc),
+        StructField("bm25", org.apache.spark.sql.types.DoubleType),
+        StructField("rank", org.apache.spark.sql.types.IntegerType,
+          nullable = false)))
+      GraftDeferred.frame(spark, outSchema) {
+        TextAnalysis.bm25PrfJoin(post, dls, qs, idc, qidc, qtc,
+          k = kk, fbDocs = fd, fbTerms = ft)
+      }
     }
-    reg(spark, "graft_mmr_join") {
+    tableFunction(spark, "graft_mmr_join(candidates_table, by_col, id_col, vec_col, rel_col, k, lambda)") { a =>
       // per-query batch MMR: k shared rounds of bounded joins +
       // query-partitioned argmax windows (checkpoints + the per-group
       // bound guard are actions) — DEFERRED so EXPLAIN launches no job
-      case Seq(t, by, id, vec, rel, kE, lamE) =>
-        val f = "graft_mmr_join"
-        val cand = table(str(t, f))
-        val byc = str(by, f); val idc = str(id, f)
-        val vc = str(vec, f); val rc = str(rel, f)
-        val kk = int(kE, f); val lam = dbl(lamE, f)
-        val outSchema = StructType(Seq(
-          cand.schema(byc), cand.schema(idc), cand.schema(rc),
-          StructField("mmr", org.apache.spark.sql.types.DoubleType),
-          StructField("rank", org.apache.spark.sql.types.IntegerType,
-            nullable = false)))
-        GraftDeferred.frame(spark, outSchema, memo { () =>
-          Similarity.mmrSelectBy(cand, byc, idc, vc, rc, k = kk, lam = lam)
-        })
-      case args => bad(
-        "graft_mmr_join(candidates_table, by_col, id_col, vec_col, rel_col, k, lambda)", args)
+      val cand = a.table(0)
+      val byc = a.str(1); val idc = a.str(2)
+      val vc = a.str(3); val rc = a.str(4)
+      val kk = a.int(5); val lam = a.dbl(6)
+      val outSchema = StructType(Seq(
+        cand.schema(byc), cand.schema(idc), cand.schema(rc),
+        StructField("mmr", org.apache.spark.sql.types.DoubleType),
+        StructField("rank", org.apache.spark.sql.types.IntegerType,
+          nullable = false)))
+      GraftDeferred.frame(spark, outSchema) {
+        Similarity.mmrSelectBy(cand, byc, idc, vc, rc, k = kk, lam = lam)
+      }
     }
-    reg(spark, "graft_bm25_prf") {
+    tableFunction(spark, "graft_bm25_prf(table, id_col, text_col, terms_csv, k, fb_docs, fb_terms)") { a =>
       // query-expansion retrieval: the feedback round + term selection
       // are driver actions — DEFERRED so EXPLAIN launches no job
-      case Seq(t, id, text, terms, kE, fbD, fbT) =>
-        val f = "graft_bm25_prf"
-        val corpus = table(str(t, f))
-        val idc = str(id, f); val tc = str(text, f)
-        val qts = str(terms, f).split(",").map(_.trim)
-          .filter(_.nonEmpty).toSeq
-        val kk = int(kE, f); val fd = int(fbD, f); val ft = int(fbT, f)
-        val outSchema = StructType(Seq(
-          corpus.schema(idc),
-          StructField("bm25", org.apache.spark.sql.types.DoubleType)))
-        GraftDeferred.frame(spark, outSchema, memo { () =>
-          TextAnalysis.bm25Prf(corpus, idc, tc, qts, k = kk,
-            fbDocs = fd, fbTerms = ft)
-        })
-      case args => bad(
-        "graft_bm25_prf(table, id_col, text_col, terms_csv, k, fb_docs, fb_terms)", args)
+      val corpus = a.table(0)
+      val idc = a.str(1); val tc = a.str(2)
+      val qts = a.csv(3)
+      val kk = a.int(4); val fd = a.int(5); val ft = a.int(6)
+      val outSchema = StructType(Seq(
+        corpus.schema(idc),
+        StructField("bm25", org.apache.spark.sql.types.DoubleType)))
+      GraftDeferred.frame(spark, outSchema) {
+        TextAnalysis.bm25Prf(corpus, idc, tc, qts, k = kk,
+          fbDocs = fd, fbTerms = ft)
+      }
     }
-    reg(spark, "graft_crawl_delta") {
+    tableFunction(spark, "graft_crawl_delta(table_a, table_b, id_col, text_col)") { a =>
       // membership drift between two snapshot tables: fp-classified
       // full-outer counts, fully lazy
-      case Seq(ta, tb, id, text) =>
-        val f = "graft_crawl_delta"
-        TextAnalysis.crawlDelta(table(str(ta, f)), table(str(tb, f)),
-          str(id, f), str(text, f))
-      case args => bad(
-        "graft_crawl_delta(table_a, table_b, id_col, text_col)", args)
+      TextAnalysis.crawlDelta(a.table(0), a.table(1),
+        a.str(2), a.str(3))
     }
-    reg(spark, "graft_funnel") {
+    tableFunction(spark, "graft_funnel(events_table, user_col, ts_col, type_col, steps_csv, window_seconds)") { a =>
       // sequential-conversion funnel: bounded step list, per-step
       // user-keyed joins — fully lazy
-      case Seq(t, u, ts, ty, stepsCsv, w) =>
-        val f = "graft_funnel"
-        TimeSeries.funnel(table(str(t, f)), str(u, f), str(ts, f),
-          str(ty, f),
-          steps = str(stepsCsv, f).split(",").map(_.trim)
-            .filter(_.nonEmpty).toSeq,
-          windowSeconds = int(w, f).toLong)
-      case args => bad(
-        "graft_funnel(events_table, user_col, ts_col, type_col, steps_csv, window_seconds)", args)
+      TimeSeries.funnel(a.table(0), a.str(1), a.str(2),
+        a.str(3),
+        steps = a.csv(4),
+        windowSeconds = a.int(5).toLong)
     }
-    reg(spark, "graft_retention") {
+    tableFunction(spark, "graft_retention(events_table, user_col, ts_col, max_offset_weeks)") { a =>
       // weekly cohort retention matrix — fully lazy
-      case Seq(t, u, ts, mo) =>
-        val f = "graft_retention"
-        TimeSeries.retention(table(str(t, f)), str(u, f), str(ts, f),
-          maxOffsetWeeks = int(mo, f))
-      case args => bad(
-        "graft_retention(events_table, user_col, ts_col, max_offset_weeks)", args)
+      TimeSeries.retention(a.table(0), a.str(1), a.str(2),
+        maxOffsetWeeks = a.int(3))
     }
-    reg(spark, "graft_sessionize") {
+    tableFunction(spark, "graft_sessionize(events_table, user_col, ts_col, order_col, gap_seconds)") { a =>
       // gap-based batch sessionization — fully lazy, user-partitioned
       // windows only
-      case Seq(t, u, ts, o, g) =>
-        val f = "graft_sessionize"
-        TimeSeries.sessionize(table(str(t, f)), str(u, f), str(ts, f),
-          str(o, f), gapSeconds = int(g, f).toLong)
-      case args => bad(
-        "graft_sessionize(events_table, user_col, ts_col, order_col, gap_seconds)", args)
+      TimeSeries.sessionize(a.table(0), a.str(1), a.str(2),
+        a.str(3), gapSeconds = a.int(4).toLong)
     }
-    reg(spark, "graft_lr_calibration") {
+    tableFunction(spark, "graft_lr_calibration(pos_table, neg_table, id_col, text_col, weights_table, buckets, n_bins)") { a =>
       // reliability-diagram table over a labeled eval set and a stored
       // weight table — fully lazy (disjoint-id refusal in-plan, fires
       // at execution, never at analysis)
-      case Seq(pT, nT, id, text, wT, b, nb) =>
-        val f = "graft_lr_calibration"
-        graft.operators.Classifier.lrCalibrationReport(
-          table(str(pT, f)), table(str(nT, f)), str(id, f), str(text, f),
-          table(str(wT, f)), buckets = int(b, f), nBins = int(nb, f))
-      case args => bad(
-        "graft_lr_calibration(pos_table, neg_table, id_col, text_col, weights_table, buckets, n_bins)", args)
+      graft.operators.Classifier.lrCalibrationReport(
+        a.table(0), a.table(1), a.str(2), a.str(3),
+        a.table(4), buckets = a.int(5), nBins = a.int(6))
     }
-    reg(spark, "graft_transitions") {
+    tableFunction(spark, "graft_transitions(events_table, user_col, ts_col, order_col, type_col)") { a =>
       // first-order Markov transition table over per-user sequences —
       // fully lazy
-      case Seq(t, u, ts, o, ty) =>
-        val f = "graft_transitions"
-        TimeSeries.transitions(table(str(t, f)), str(u, f), str(ts, f),
-          str(o, f), str(ty, f))
-      case args => bad(
-        "graft_transitions(events_table, user_col, ts_col, order_col, type_col)", args)
+      TimeSeries.transitions(a.table(0), a.str(1), a.str(2),
+        a.str(3), a.str(4))
     }
-    reg(spark, "graft_chunk_bpe") {
+    tableFunction(spark, "graft_chunk_bpe(table, id_col, text_col, chunk_tokens, overlap, merges_table)") { a =>
       // chunking denominated in LEARNED tokens: training windows are
       // token-ID sequences under the stored merge table
-      case Seq(t, id, text, ct, ov, merges) =>
-        val f = "graft_chunk_bpe"
-        TextAnalysis.chunkBpe(table(str(t, f)), str(id, f), str(text, f),
-          table(str(merges, f)), chunkTokens = int(ct, f), overlap = int(ov, f))
-      case args => bad(
-        "graft_chunk_bpe(table, id_col, text_col, chunk_tokens, overlap, merges_table)", args)
+      TextAnalysis.chunkBpe(a.table(0), a.str(1), a.str(2),
+        a.table(5), chunkTokens = a.int(3), overlap = a.int(4))
     }
-    reg(spark, "graft_sample_k") {
-      case Seq(t, key, tie, k, salt) =>
-        val f = "graft_sample_k"
-        Sampling.exactK(table(str(t, f)), col(str(key, f)), int(k, f),
-          tieBreak = Seq(col(str(tie, f))), salt = str(salt, f))
-      case args => bad(
-        "graft_sample_k(table, key_col, tiebreak_col, k, salt)", args)
+    tableFunction(spark, "graft_sample_k(table, key_col, tiebreak_col, k, salt)") { a =>
+      Sampling.exactK(a.table(0), col(a.str(1)), a.int(3),
+        tieBreak = Seq(col(a.str(2))), salt = a.str(4))
     }
-    reg(spark, "graft_sample_weighted") {
-      case Seq(t, key, w, tie, k, salt) =>
-        val f = "graft_sample_weighted"
-        Sampling.weightedK(table(str(t, f)), col(str(key, f)),
-          col(str(w, f)), int(k, f),
-          tieBreak = Seq(col(str(tie, f))), salt = str(salt, f))
-      case args => bad(
-        "graft_sample_weighted(table, key_col, weight_col, tiebreak_col, k, salt)", args)
+    tableFunction(spark, "graft_sample_weighted(table, key_col, weight_col, tiebreak_col, k, salt)") { a =>
+      Sampling.weightedK(a.table(0), col(a.str(1)),
+        col(a.str(2)), a.int(4),
+        tieBreak = Seq(col(a.str(3))), salt = a.str(5))
     }
-    reg(spark, "graft_sample_weighted_by") {
-      case Seq(t, strat, key, w, tie, k, salt) =>
-        val f = "graft_sample_weighted_by"
-        Sampling.weightedKPerStratum(table(str(t, f)), col(str(strat, f)),
-          col(str(key, f)), col(str(w, f)), int(k, f),
-          tieBreak = Seq(col(str(tie, f))), salt = str(salt, f))
-      case args => bad(
-        "graft_sample_weighted_by(table, stratum_col, key_col, weight_col, tiebreak_col, k, salt)", args)
+    tableFunction(spark, "graft_sample_weighted_by(table, stratum_col, key_col, weight_col, tiebreak_col, k, salt)") { a =>
+      Sampling.weightedKPerStratum(a.table(0), col(a.str(1)),
+        col(a.str(2)), col(a.str(3)), a.int(5),
+        tieBreak = Seq(col(a.str(4))), salt = a.str(6))
     }
-    reg(spark, "graft_tfidf") {
-      case Seq(t, id, text, k) =>
-        val f = "graft_tfidf"
-        TextAnalysis.tfidfTopTerms(table(str(t, f)), str(id, f),
-          str(text, f), topK = int(k, f))
-      case args => bad("graft_tfidf(table, id_col, text_col, top_k)", args)
+    tableFunction(spark, "graft_tfidf(table, id_col, text_col, top_k)") { a =>
+      TextAnalysis.tfidfTopTerms(a.table(0), a.str(1),
+        a.str(2), topK = a.int(3))
     }
-    reg(spark, "graft_simhash_pairs") {
-      case Seq(t, id, text, ham) =>
-        val f = "graft_simhash_pairs"
-        Dedup.simhashPairs(table(str(t, f)), str(id, f), str(text, f),
-          maxHamming = int(ham, f))
-      case args => bad(
-        "graft_simhash_pairs(table, id_col, text_col, max_hamming)", args)
+    tableFunction(spark, "graft_simhash_pairs(table, id_col, text_col, max_hamming)") { a =>
+      Dedup.simhashPairs(a.table(0), a.str(1), a.str(2),
+        maxHamming = a.int(3))
     }
-    reg(spark, "graft_boilerplate") {
-      case Seq(t, id, text, n, k) =>
-        val f = "graft_boilerplate"
-        TextAnalysis.topShinglesByDf(table(str(t, f)), str(id, f),
-          str(text, f), n = int(n, f), topK = int(k, f))
-      case args => bad(
-        "graft_boilerplate(table, id_col, text_col, n, top_k)", args)
+    tableFunction(spark, "graft_boilerplate(table, id_col, text_col, n, top_k)") { a =>
+      TextAnalysis.topShinglesByDf(a.table(0), a.str(1),
+        a.str(2), n = a.int(3), topK = a.int(4))
     }
-    reg(spark, "graft_sentences") {
-      case Seq(t, id, text) =>
-        val f = "graft_sentences"
-        TextAnalysis.sentenceRows(table(str(t, f)), str(id, f), str(text, f))
-      case args => bad("graft_sentences(table, id_col, text_col)", args)
+    tableFunction(spark, "graft_sentences(table, id_col, text_col)") { a =>
+      TextAnalysis.sentenceRows(a.table(0), a.str(1), a.str(2))
     }
-    reg(spark, "graft_vocab") {
-      case Seq(t, id, text, k) =>
-        val f = "graft_vocab"
-        TextAnalysis.vocabReport(table(str(t, f)), str(id, f),
-          str(text, f), topK = int(k, f))
-      case args => bad("graft_vocab(table, id_col, text_col, top_k)", args)
+    tableFunction(spark, "graft_vocab(table, id_col, text_col, top_k)") { a =>
+      TextAnalysis.vocabReport(a.table(0), a.str(1),
+        a.str(2), topK = a.int(3))
     }
-    reg(spark, "graft_split") {
-      case Seq(t, key, salt, tr, va, te) =>
-        val f = "graft_split"
-        Sampling.splitByHash(table(str(t, f)), col(str(key, f)),
-          Seq("train" -> int(tr, f), "val" -> int(va, f), "test" -> int(te, f)),
-          salt = str(salt, f))
-      case args => bad(
-        "graft_split(table, key_col, salt, train_bp, val_bp, test_bp)", args)
+    tableFunction(spark, "graft_split(table, key_col, salt, train_bp, val_bp, test_bp)") { a =>
+      Sampling.splitByHash(a.table(0), col(a.str(1)),
+        Seq("train" -> a.int(3), "val" -> a.int(4), "test" -> a.int(5)),
+        salt = a.str(2))
     }
-    reg(spark, "graft_sample_strat") {
-      case Seq(t, stratum, key, tie, k, salt) =>
-        val f = "graft_sample_strat"
-        Sampling.exactKPerStratum(table(str(t, f)), col(str(stratum, f)),
-          col(str(key, f)), int(k, f),
-          tieBreak = Seq(col(str(tie, f))), salt = str(salt, f))
-      case args => bad(
-        "graft_sample_strat(table, stratum_col, key_col, tiebreak_col, k, salt)", args)
+    tableFunction(spark, "graft_sample_strat(table, stratum_col, key_col, tiebreak_col, k, salt)") { a =>
+      Sampling.exactKPerStratum(a.table(0), col(a.str(1)),
+        col(a.str(2)), a.int(4),
+        tieBreak = Seq(col(a.str(3))), salt = a.str(5))
     }
-    reg(spark, "graft_domain_cap") {
-      case args if args.length == 5 || args.length == 6 =>
-        val f = "graft_domain_cap"
-        // optional 6th arg: quality column — each domain keeps its k
-        // HIGHEST-scoring docs instead of a hash subsample
-        val by = if (args.length == 6) Some(col(str(args(5), f))) else None
-        Sampling.domainCap(table(str(args(0), f)), col(str(args(1), f)),
-          col(str(args(2), f)), int(args(3), f),
-          tieBreak = Seq(col(str(args(4), f))), by = by)
-      case args => bad(
-        "graft_domain_cap(table, domain_col, key_col, k, tiebreak_col[, by_col])", args)
+    tableFunction(spark, "graft_domain_cap(table, domain_col, key_col, k, tiebreak_col[, by_col])") { a =>
+      // optional 6th arg: quality column — each domain keeps its k
+      // HIGHEST-scoring docs instead of a hash subsample
+      val by = Option.when(a.has(5))(col(a.str(5)))
+      Sampling.domainCap(a.table(0), col(a.str(1)),
+        col(a.str(2)), a.int(3),
+        tieBreak = Seq(col(a.str(4))), by = by)
     }
-    reg(spark, "graft_cluster_keep") {
-      case args if args.length == 4 || args.length == 5 =>
-        val f = "graft_cluster_keep"
-        val tbl = table(str(args(0), f))
-        val id = str(args(1), f); val text = str(args(2), f)
-        val thr = dbl(args(3), f)
-        val algo = if (args.length == 5) str(args(4), f) else "auto"
-        val ids = tbl.select(col(id))
-        // connected components is ITERATIVE (one Spark action per
-        // round) — it cannot be a lazy plan, so it is DEFERRED: the
-        // statement stays a lazy anti-join of the corpus ids against a
-        // deferred-scan leaf whose builder (memoized — analyze/copy/
-        // re-run share one computation) runs the minhash+CC rounds the
-        // first time the statement executes. EXPLAIN launches no job.
-        val losers = GraftDeferred.frame(spark,
-          StructType(Seq(StructField(id, ids.schema.head.dataType))),
-          memo(() => Graph.componentLosers(
-            Dedup.minhashPairs(tbl, id, text, threshold = thr),
-            idColName = id, algo = algo)))
-        ids.join(losers, Seq(id), "left_anti")
-      case args => bad(
-        "graft_cluster_keep(table, id_col, text_col, threshold[, algo])", args)
+    tableFunction(spark, "graft_cluster_keep(table, id_col, text_col, threshold[, algo])") { a =>
+      val tbl = a.table(0)
+      val id = a.str(1); val text = a.str(2)
+      val thr = a.dbl(3)
+      val algo = if (a.has(4)) a.str(4) else "auto"
+      val ids = tbl.select(col(id))
+      // connected components is ITERATIVE (one Spark action per
+      // round) — it cannot be a lazy plan, so it is DEFERRED: the
+      // statement stays a lazy anti-join of the corpus ids against a
+      // deferred-scan leaf whose builder (memoized — analyze/copy/
+      // re-run share one computation) runs the minhash+CC rounds the
+      // first time the statement executes. EXPLAIN launches no job.
+      val losers = GraftDeferred.frame(spark,
+          StructType(Seq(StructField(id, ids.schema.head.dataType)))) {
+        Graph.componentLosers(
+          Dedup.minhashPairs(tbl, id, text, threshold = thr),
+          idColName = id, algo = algo)
+      }
+      ids.join(losers, Seq(id), "left_anti")
     }
-    reg(spark, "graft_cluster_best") {
-      case args if args.length == 5 || args.length == 6 =>
-        val f = "graft_cluster_best"
-        val tbl = table(str(args(0), f))
-        val id = str(args(1), f); val text = str(args(2), f)
-        val thr = dbl(args(3), f); val score = str(args(4), f)
-        val algo = if (args.length == 6) str(args(5), f) else "auto"
-        // same deferred contract as graft_cluster_keep; the winner
-        // aggregation (partial-aggregable max_by, no corpus window)
-        // lives inside the deferred builder with the CC rounds
-        GraftDeferred.frame(spark,
-          StructType(Seq(StructField(id,
-            tbl.select(col(id)).schema.head.dataType))),
-          memo(() => Graph.keepBestRepresentatives(
-            tbl.select(col(id), col(score)), id, score,
-            Dedup.minhashPairs(tbl, id, text, threshold = thr),
-            algo = algo)))
-      case args => bad(
-        "graft_cluster_best(table, id_col, text_col, threshold, score_col[, algo])", args)
+    tableFunction(spark, "graft_cluster_best(table, id_col, text_col, threshold, score_col[, algo])") { a =>
+      val tbl = a.table(0)
+      val id = a.str(1); val text = a.str(2)
+      val thr = a.dbl(3); val score = a.str(4)
+      val algo = if (a.has(5)) a.str(5) else "auto"
+      // same deferred contract as graft_cluster_keep; the winner
+      // aggregation (partial-aggregable max_by, no corpus window)
+      // lives inside the deferred builder with the CC rounds
+      GraftDeferred.frame(spark, StructType(Seq(StructField(id,
+          tbl.select(col(id)).schema.head.dataType)))) {
+        Graph.keepBestRepresentatives(
+          tbl.select(col(id), col(score)), id, score,
+          Dedup.minhashPairs(tbl, id, text, threshold = thr),
+          algo = algo)
+      }
     }
-    reg(spark, "graft_decontaminate") {
-      case Seq(c, ev, id, text, n) =>
-        val f = "graft_decontaminate"
-        Dedup.decontaminate(table(str(c, f)), table(str(ev, f)),
-          str(id, f), str(text, f), n = int(n, f))
-      case args => bad(
-        "graft_decontaminate(corpus_table, eval_table, id_col, text_col, n)", args)
+    tableFunction(spark, "graft_decontaminate(corpus_table, eval_table, id_col, text_col, n)") { a =>
+      Dedup.decontaminate(a.table(0), a.table(1),
+        a.str(2), a.str(3), n = a.int(4))
     }
-    reg(spark, "graft_decontaminate_bloom") {
-      case Seq(c, ev, id, text, n, items, bits) =>
-        val f = "graft_decontaminate_bloom"
-        val corpus = table(str(c, f)); val evalSet = table(str(ev, f))
-        val idc = str(id, f); val textc = str(text, f)
-        // lng, not int: a production filter's item count / bit width
-        // routinely exceeds Int.MaxValue (4 Gbit = 4.3e9 bits)
-        val ng = int(n, f); val ei = lng(items, f)
-        val nb = lng(bits, f)
-        // the bloom build is an ACTION (the sketch bytes inline into the
-        // probe filter) — defer it like the cluster/semdedup TVFs so
-        // EXPLAIN/prepare launch no job and the build runs once
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField(idc, corpus.select(col(idc)).schema.head.dataType),
-            StructField("eval_shingles", org.apache.spark.sql.types.LongType,
-              nullable = false),
-            StructField("contaminated", org.apache.spark.sql.types.BooleanType,
-              nullable = false))),
-          memo { () =>
-            Dedup.decontaminateBloom(corpus, evalSet, idc, textc, n = ng,
-              expectedItems = ei, numBits = nb)
-          })
-      case args => bad(
-        "graft_decontaminate_bloom(corpus_table, eval_table, id_col, text_col, n, expected_items, num_bits)", args)
+    tableFunction(spark, "graft_decontaminate_bloom(corpus_table, eval_table, id_col, text_col, n, expected_items, num_bits)") { a =>
+      val corpus = a.table(0); val evalSet = a.table(1)
+      val idc = a.str(2); val textc = a.str(3)
+      // lng, not int: a production filter's item count / bit width
+      // routinely exceeds Int.MaxValue (4 Gbit = 4.3e9 bits)
+      val ng = a.int(4); val ei = a.lng(5)
+      val nb = a.lng(6)
+      // the bloom build is an ACTION (the sketch bytes inline into the
+      // probe filter) — defer it like the cluster/semdedup TVFs so
+      // EXPLAIN/prepare launch no job and the build runs once
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField(idc, corpus.select(col(idc)).schema.head.dataType),
+          StructField("eval_shingles", org.apache.spark.sql.types.LongType,
+            nullable = false),
+          StructField("contaminated", org.apache.spark.sql.types.BooleanType,
+            nullable = false)))) {
+        Dedup.decontaminateBloom(corpus, evalSet, idc, textc, n = ng,
+          expectedItems = ei, numBits = nb)
+      }
     }
-    reg(spark, "graft_decontaminate_stored") {
-      case Seq(c, sk, hs, id, text) =>
-        val f = "graft_decontaminate_stored"
-        val corpus = table(str(c, f))
-        val sketch = table(str(sk, f)); val hashes = table(str(hs, f))
-        val idc = str(id, f); val textc = str(text, f)
-        // reading the 1-row sketch is an ACTION (and the probe inlines
-        // its bytes) — defer like graft_decontaminate_bloom so EXPLAIN
-        // launches no job and the read happens once
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField(idc, corpus.select(col(idc)).schema.head.dataType),
-            StructField("eval_shingles", org.apache.spark.sql.types.LongType,
-              nullable = false),
-            StructField("contaminated", org.apache.spark.sql.types.BooleanType,
-              nullable = false))),
-          memo { () =>
-            Dedup.decontaminateStored(corpus,
-              Dedup.DecontamIndex(sketch, hashes), idc, textc)
-          })
-      case args => bad(
-        "graft_decontaminate_stored(corpus_table, sketch_table, hashes_table, id_col, text_col)", args)
+    tableFunction(spark, "graft_decontaminate_stored(corpus_table, sketch_table, hashes_table, id_col, text_col)") { a =>
+      val corpus = a.table(0)
+      val sketch = a.table(1); val hashes = a.table(2)
+      val idc = a.str(3); val textc = a.str(4)
+      // reading the 1-row sketch is an ACTION (and the probe inlines
+      // its bytes) — defer like graft_decontaminate_bloom so EXPLAIN
+      // launches no job and the read happens once
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField(idc, corpus.select(col(idc)).schema.head.dataType),
+          StructField("eval_shingles", org.apache.spark.sql.types.LongType,
+            nullable = false),
+          StructField("contaminated", org.apache.spark.sql.types.BooleanType,
+            nullable = false)))) {
+        Dedup.decontaminateStored(corpus,
+          Dedup.DecontamIndex(sketch, hashes), idc, textc)
+      }
     }
-    reg(spark, "graft_contamination") {
-      case Seq(c, ev, id, text, n, mf) =>
-        val f = "graft_contamination"
-        Dedup.contaminationFraction(table(str(c, f)), table(str(ev, f)),
-          str(id, f), str(text, f), n = int(n, f), minFrac = dbl(mf, f))
-      case args => bad(
-        "graft_contamination(corpus_table, eval_table, id_col, text_col, n, min_frac)", args)
+    tableFunction(spark, "graft_contamination(corpus_table, eval_table, id_col, text_col, n, min_frac)") { a =>
+      Dedup.contaminationFraction(a.table(0), a.table(1),
+        a.str(2), a.str(3), n = a.int(4), minFrac = a.dbl(5))
     }
-    reg(spark, "graft_token_budget") {
+    tableFunction(spark, "graft_token_budget(table, id_col, text_col, budget[, salt])") { a =>
       // lng, not int: real token budgets (1e9–1e12) exceed Int.MaxValue
-      case Seq(t, id, text, b) =>
-        val f = "graft_token_budget"
-        Sampling.tokenBudget(table(str(t, f)), str(id, f), str(text, f),
-          budget = lng(b, f))
-      case Seq(t, id, text, b, salt) =>
-        val f = "graft_token_budget"
-        Sampling.tokenBudget(table(str(t, f)), str(id, f), str(text, f),
-          budget = lng(b, f), salt = str(salt, f))
-      case args => bad(
-        "graft_token_budget(table, id_col, text_col, budget[, salt])", args)
+      if (a.has(4))
+        Sampling.tokenBudget(a.table(0), a.str(1), a.str(2),
+          budget = a.lng(3), salt = a.str(4))
+      else
+        Sampling.tokenBudget(a.table(0), a.str(1), a.str(2),
+          budget = a.lng(3))
     }
-    reg(spark, "graft_token_budget_bpe") {
+    tableFunction(spark, "graft_token_budget_bpe(table, id_col, text_col, budget, merges_table)") { a =>
       // the budget fill denominated in LEARNED tokens: the stored
       // merge table drives the counter (KB-scale collect, the
       // graft_bpe_count boundary); order/hierarchy contract unchanged
-      case Seq(t, id, text, b, merges) =>
-        val f = "graft_token_budget_bpe"
-        Sampling.tokenBudget(table(str(t, f)), str(id, f), str(text, f),
-          budget = lng(b, f),
-          tokenCounter = TextAnalysis.bpeCounter(table(str(merges, f))))
-      case args => bad(
-        "graft_token_budget_bpe(table, id_col, text_col, budget, merges_table)", args)
+      Sampling.tokenBudget(a.table(0), a.str(1), a.str(2),
+        budget = a.lng(3),
+        tokenCounter = TextAnalysis.bpeCounter(a.table(4)))
     }
-    reg(spark, "graft_token_budget_by") {
-      case Seq(t, id, grp, text, b) =>
-        val f = "graft_token_budget_by"
-        Sampling.tokenBudgetByGroup(table(str(t, f)), str(id, f),
-          str(grp, f), str(text, f), budget = lng(b, f))
-      case args => bad(
-        "graft_token_budget_by(table, id_col, group_col, text_col, budget)", args)
+    tableFunction(spark, "graft_token_budget_by(table, id_col, group_col, text_col, budget)") { a =>
+      Sampling.tokenBudgetByGroup(a.table(0), a.str(1),
+        a.str(2), a.str(3), budget = a.lng(4))
     }
-    reg(spark, "graft_rep_ratio") {
-      case Seq(t, id, text, n) =>
-        val f = "graft_rep_ratio"
-        TextAnalysis.repetitionRatio(table(str(t, f)), str(id, f),
-          str(text, f), n = int(n, f))
-      case args => bad("graft_rep_ratio(table, id_col, text_col, n)", args)
+    tableFunction(spark, "graft_rep_ratio(table, id_col, text_col, n)") { a =>
+      TextAnalysis.repetitionRatio(a.table(0), a.str(1),
+        a.str(2), n = a.int(3))
     }
-    reg(spark, "graft_resample") {
-      case Seq(t, ts, value, unit) =>
-        val f = "graft_resample"
-        TimeSeries.resample(table(str(t, f)), str(ts, f), str(value, f),
-          unit = str(unit, f))
-      case args => bad("graft_resample(table, ts_col, value_col, unit)", args)
+    tableFunction(spark, "graft_resample(table, ts_col, value_col, unit)") { a =>
+      TimeSeries.resample(a.table(0), a.str(1), a.str(2),
+        unit = a.str(3))
     }
-    reg(spark, "graft_embedding_dups") {
-      case Seq(t, id, vec, thr, planes, dim) =>
-        val f = "graft_embedding_dups"
-        Similarity.embeddingNearDups(table(str(t, f)), str(id, f),
-          str(vec, f), simThreshold = dbl(thr, f),
-          nPlanes = int(planes, f), dim = int(dim, f))
-      case args => bad(
-        "graft_embedding_dups(table, id_col, vec_col, threshold, n_planes, dim)", args)
+    tableFunction(spark, "graft_embedding_dups(table, id_col, vec_col, threshold, n_planes, dim)") { a =>
+      Similarity.embeddingNearDups(a.table(0), a.str(1),
+        a.str(2), simThreshold = a.dbl(3),
+        nPlanes = a.int(4), dim = a.int(5))
     }
 
-    reg(spark, "graft_temperature_mix") {
-      case Seq(t, src, key, a, tf) =>
-        val f = "graft_temperature_mix"
-        Sampling.temperatureMix(table(str(t, f)), col(str(src, f)),
-          col(str(key, f)), alpha = dbl(a, f), targetFraction = dbl(tf, f))
-      case args => bad(
-        "graft_temperature_mix(table, source_col, key_col, alpha, target_fraction)", args)
+    tableFunction(spark, "graft_temperature_mix(table, source_col, key_col, alpha, target_fraction)") { a =>
+      Sampling.temperatureMix(a.table(0), col(a.str(1)),
+        col(a.str(2)), alpha = a.dbl(3), targetFraction = a.dbl(4))
     }
-    reg(spark, "graft_corpus_report") {
-      case Seq(t, src, lang, text) =>
-        val f = "graft_corpus_report"
-        TextAnalysis.corpusReport(table(str(t, f)), str(src, f),
-          str(lang, f), str(text, f))
-      case args => bad(
-        "graft_corpus_report(table, source_col, lang_col, text_col)", args)
+    tableFunction(spark, "graft_corpus_report(table, source_col, lang_col, text_col)") { a =>
+      TextAnalysis.corpusReport(a.table(0), a.str(1),
+        a.str(2), a.str(3))
     }
-    reg(spark, "graft_c4_filters") {
-      case Seq(t, id, text, minW, minK) =>
-        val f = "graft_c4_filters"
-        TextAnalysis.c4LineFilters(table(str(t, f)), str(id, f), str(text, f),
-          minWordsPerLine = int(minW, f), minKeptLines = int(minK, f))
-      case args => bad(
-        "graft_c4_filters(table, id_col, text_col, min_words_per_line, min_kept_lines)", args)
+    tableFunction(spark, "graft_c4_filters(table, id_col, text_col, min_words_per_line, min_kept_lines)") { a =>
+      TextAnalysis.c4LineFilters(a.table(0), a.str(1), a.str(2),
+        minWordsPerLine = a.int(3), minKeptLines = a.int(4))
     }
-    reg(spark, "graft_line_dedup") {
+    tableFunction(spark, "graft_line_dedup(table, id_col, text_col, max_df[, 'local'])") { a =>
       // optional 5th arg 'local' truncates the INPUT chain (both the
       // hash and reassembly branches read it — when the table arg is a
       // view over an expensive TVF pipeline stage, recompute doubles it)
-      case args @ Seq(t, id, text, mdf, _*) if args.length <= 5 =>
-        val f = "graft_line_dedup"
-        val inputReuse = if (args.length == 5) reuseOpt(args(4), f)
-          else graft.operators.Reuse.Off
-        TextAnalysis.removeRepeatedLines(table(str(t, f)), str(id, f),
-          str(text, f), maxDf = int(mdf, f), inputReuse = inputReuse)
-      case args => bad(
-        "graft_line_dedup(table, id_col, text_col, max_df[, 'local'])", args)
+      val inputReuse = if (a.has(4)) a.reuse(4)
+        else graft.operators.Reuse.Off
+      TextAnalysis.removeRepeatedLines(a.table(0), a.str(1),
+        a.str(2), maxDf = a.int(3), inputReuse = inputReuse)
     }
-    reg(spark, "graft_span_dedup") {
-      case Seq(t, id, text, st, mdf) =>
-        val f = "graft_span_dedup"
-        TextAnalysis.removeRepeatedSpans(table(str(t, f)), str(id, f),
-          str(text, f), spanTokens = int(st, f), maxDf = int(mdf, f))
-      case args => bad(
-        "graft_span_dedup(table, id_col, text_col, span_tokens, max_df)", args)
+    tableFunction(spark, "graft_span_dedup(table, id_col, text_col, span_tokens, max_df)") { a =>
+      TextAnalysis.removeRepeatedSpans(a.table(0), a.str(1),
+        a.str(2), spanTokens = a.int(3), maxDf = a.int(4))
     }
-    reg(spark, "graft_semdedup") {
-      case Seq(t, id, vec, cells, iters, thr) =>
-        val f = "graft_semdedup"
-        val tbl = table(str(t, f))
-        val idc = str(id, f); val vecc = str(vec, f)
-        val nCells = int(cells, f); val nIters = int(iters, f)
-        val threshold = dbl(thr, f)
-        // k-means training iterates driver-side (one action per Lloyd
-        // round, centroids collected as plan literals) — same deferred
-        // contract as graft_cluster_keep so EXPLAIN/re-analysis launch
-        // no job and the training runs once, at first execution
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField(idc, tbl.select(col(idc)).schema.head.dataType),
-            StructField("cell", org.apache.spark.sql.types.LongType, nullable = false))),
-          memo { () =>
-            val cents = Similarity.centroidsOf(
-              Similarity.kmeansTrain(tbl, idc, vecc, nCells, nIters))
-            Similarity.semanticDedup(tbl, idc, vecc, cents, threshold)
-          })
-      case args => bad(
-        "graft_semdedup(table, id_col, vec_col, n_cells, iters, threshold)", args)
+    tableFunction(spark, "graft_semdedup(table, id_col, vec_col, n_cells, iters, threshold)") { a =>
+      val tbl = a.table(0)
+      val idc = a.str(1); val vecc = a.str(2)
+      val nCells = a.int(3); val nIters = a.int(4)
+      val threshold = a.dbl(5)
+      // k-means training iterates driver-side (one action per Lloyd
+      // round, centroids collected as plan literals) — same deferred
+      // contract as graft_cluster_keep so EXPLAIN/re-analysis launch
+      // no job and the training runs once, at first execution
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField(idc, tbl.select(col(idc)).schema.head.dataType),
+          StructField("cell", org.apache.spark.sql.types.LongType, nullable = false)))) {
+        val cents = Similarity.centroidsOf(
+          Similarity.kmeansTrain(tbl, idc, vecc, nCells, nIters))
+        Similarity.semanticDedup(tbl, idc, vecc, cents, threshold)
+      }
     }
-    reg(spark, "graft_embed_outliers") {
-      case Seq(t, id, vec, cells, iters, q) =>
-        val f = "graft_embed_outliers"
-        val tbl = table(str(t, f))
-        val idc = str(id, f); val vecc = str(vec, f)
-        val nCells = int(cells, f); val nIters = int(iters, f)
-        val quant = dbl(q, f)
-        // centroid collection (and optional Lloyd training) is an
-        // ACTION — same deferred contract as graft_semdedup
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField(idc, tbl.select(col(idc)).schema.head.dataType),
-            StructField("cell", org.apache.spark.sql.types.LongType,
-              nullable = false),
-            StructField("centroid_sim", org.apache.spark.sql.types.DoubleType))),
-          memo { () =>
-            val cents =
-              if (nIters == 0) Similarity.collectCentroids(tbl, idc, vecc, nCells)
-              else Similarity.centroidsOf(
-                Similarity.kmeansTrain(tbl, idc, vecc, nCells, nIters))
-            Similarity.embeddingOutliers(tbl, idc, vecc, cents, quant)
-          })
-      case args => bad(
-        "graft_embed_outliers(table, id_col, vec_col, n_cells, iters, q)", args)
+    tableFunction(spark, "graft_embed_outliers(table, id_col, vec_col, n_cells, iters, q)") { a =>
+      val tbl = a.table(0)
+      val idc = a.str(1); val vecc = a.str(2)
+      val nCells = a.int(3); val nIters = a.int(4)
+      val quant = a.dbl(5)
+      // centroid collection (and optional Lloyd training) is an
+      // ACTION — same deferred contract as graft_semdedup
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField(idc, tbl.select(col(idc)).schema.head.dataType),
+          StructField("cell", org.apache.spark.sql.types.LongType,
+            nullable = false),
+          StructField("centroid_sim", org.apache.spark.sql.types.DoubleType)))) {
+        val cents =
+          if (nIters == 0) Similarity.collectCentroids(tbl, idc, vecc, nCells)
+          else Similarity.centroidsOf(
+            Similarity.kmeansTrain(tbl, idc, vecc, nCells, nIters))
+        Similarity.embeddingOutliers(tbl, idc, vecc, cents, quant)
+      }
     }
-    reg(spark, "graft_ann_topk") {
+    tableFunction(spark, "graft_ann_topk(table, id_col, vec_col, query_id, k)") { a =>
       // exact brute-force cosine top-k: fully LAZY (the query row is a
       // broadcast inside the plan, no driver action)
-      case Seq(t, id, vec, q, k) =>
-        val f = "graft_ann_topk"
-        Similarity.bruteForceTopK(table(str(t, f)), str(id, f), str(vec, f),
-          queryId = lng(q, f), k = int(k, f))
-      case args => bad(
-        "graft_ann_topk(table, id_col, vec_col, query_id, k)", args)
+      Similarity.bruteForceTopK(a.table(0), a.str(1), a.str(2),
+        queryId = a.lng(3), k = a.int(4))
     }
-    reg(spark, "graft_ann_lsh") {
+    tableFunction(spark, "graft_ann_lsh(table, id_col, vec_col, query_id, k, n_planes, dim)") { a =>
       // multi-probe hyperplane LSH top-k: planes are pure Scala
       // constants, the bucket filter a broadcast join — fully LAZY
-      case Seq(t, id, vec, q, k, planes, dim) =>
-        val f = "graft_ann_lsh"
-        Similarity.lshTopK(table(str(t, f)), str(id, f), str(vec, f),
-          queryId = lng(q, f), k = int(k, f),
-          nPlanes = int(planes, f), dim = int(dim, f))
-      case args => bad(
-        "graft_ann_lsh(table, id_col, vec_col, query_id, k, n_planes, dim)", args)
+      Similarity.lshTopK(a.table(0), a.str(1), a.str(2),
+        queryId = a.lng(3), k = a.int(4),
+        nPlanes = a.int(5), dim = a.int(6))
     }
-    reg(spark, "graft_ann_ivf") {
+    tableFunction(spark, "graft_ann_ivf(table, id_col, vec_col, query_id, k, n_cells, probes)") { a =>
       // seed-centroid IVF: collectCentroids is an ACTION — deferred
       // like every training TVF
-      case Seq(t, id, vec, q, k, cells, probes) =>
-        val f = "graft_ann_ivf"
-        val tbl = table(str(t, f))
-        val idc = str(id, f); val vecc = str(vec, f)
-        val qid = lng(q, f); val kk = int(k, f)
-        val nCells = int(cells, f); val np = int(probes, f)
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField(idc, tbl.select(col(idc)).schema.head.dataType),
-            StructField("cos_sim", org.apache.spark.sql.types.DoubleType))),
-          memo { () =>
-            Similarity.ivfTopKWith(tbl, idc, vecc,
-              Similarity.collectCentroids(tbl, idc, vecc, nCells),
-              qid, kk, np)
-          })
-      case args => bad(
-        "graft_ann_ivf(table, id_col, vec_col, query_id, k, n_cells, probes)", args)
+      val tbl = a.table(0)
+      val idc = a.str(1); val vecc = a.str(2)
+      val qid = a.lng(3); val kk = a.int(4)
+      val nCells = a.int(5); val np = a.int(6)
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField(idc, tbl.select(col(idc)).schema.head.dataType),
+          StructField("cos_sim", org.apache.spark.sql.types.DoubleType)))) {
+        Similarity.ivfTopKWith(tbl, idc, vecc,
+          Similarity.collectCentroids(tbl, idc, vecc, nCells),
+          qid, kk, np)
+      }
     }
-    reg(spark, "graft_bpe_count") {
+    tableFunction(spark, "graft_bpe_count(table, id_col, text_col, merges_table[, 'pretok'])") { a =>
       // trained-tokenizer counts under a stored merge table; the
       // merge-table collect is driver-side but vocabulary-sized (KB) —
       // registered directly like the other pure per-row counters
-      case args if args.length == 4 || args.length == 5 =>
-        val f = "graft_bpe_count"
-        val pt = if (args.length == 5) pretokOpt(args(4), f) else false
-        TextAnalysis.bpeCount(table(str(args(0), f)), str(args(1), f),
-          str(args(2), f), table(str(args(3), f)), preTokenize = pt)
-      case args => bad(
-        "graft_bpe_count(table, id_col, text_col, merges_table[, 'pretok'])", args)
+      val pt = a.has(4) && a.pretok(4)
+      TextAnalysis.bpeCount(a.table(0), a.str(1),
+        a.str(2), a.table(3), preTokenize = pt)
     }
-    reg(spark, "graft_bpe_vocab") {
+    tableFunction(spark, "graft_bpe_vocab(table, id_col, text_col, merges_table, top_k)") { a =>
       // learned-token vocabulary report under a stored merge table;
       // same KB-scale merge-table collect as the other BPE serving TVFs
-      case Seq(t, id, text, merges, k) =>
-        val f = "graft_bpe_vocab"
-        TextAnalysis.bpeVocabReport(table(str(t, f)), str(id, f),
-          str(text, f), table(str(merges, f)), topK = int(k, f))
-      case args => bad(
-        "graft_bpe_vocab(table, id_col, text_col, merges_table, top_k)", args)
+      TextAnalysis.bpeVocabReport(a.table(0), a.str(1),
+        a.str(2), a.table(3), topK = a.int(4))
     }
-    reg(spark, "graft_bpe_tokenize") {
+    tableFunction(spark, "graft_bpe_tokenize(table, id_col, text_col, merges_table[, 'pretok'])") { a =>
       // tokenize-to-ids under a stored merge table — the sequence the
       // count TVF only measures; same KB-scale merge-table collect
-      case args if args.length == 4 || args.length == 5 =>
-        val f = "graft_bpe_tokenize"
-        val pt = if (args.length == 5) pretokOpt(args(4), f) else false
-        TextAnalysis.bpeTokenize(table(str(args(0), f)), str(args(1), f),
-          str(args(2), f), table(str(args(3), f)), preTokenize = pt)
-      case args => bad(
-        "graft_bpe_tokenize(table, id_col, text_col, merges_table[, 'pretok'])", args)
+      val pt = a.has(4) && a.pretok(4)
+      TextAnalysis.bpeTokenize(a.table(0), a.str(1),
+        a.str(2), a.table(3), preTokenize = pt)
     }
-    reg(spark, "graft_ann_sq") {
+    tableFunction(spark, "graft_ann_sq(table, id_col, vec_col, query_id, k)") { a =>
       // int8 scalar-quantized serving: the query-vector lookup is an
       // ACTION — deferred like graft_ann_stored
-      case Seq(t, id, vec, q, k) =>
-        val f = "graft_ann_sq"
-        val tbl = table(str(t, f))
-        val idc = str(id, f); val vecc = str(vec, f)
-        val qid = lng(q, f); val kk = int(k, f)
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField(idc, tbl.select(col(idc)).schema.head.dataType),
-            StructField("sq_score", org.apache.spark.sql.types.DoubleType))),
-          memo { () => Similarity.sqTopK(tbl, idc, vecc, qid, kk) })
-      case args => bad(
-        "graft_ann_sq(table, id_col, vec_col, query_id, k)", args)
+      val tbl = a.table(0)
+      val idc = a.str(1); val vecc = a.str(2)
+      val qid = a.lng(3); val kk = a.int(4)
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField(idc, tbl.select(col(idc)).schema.head.dataType),
+          StructField("sq_score", org.apache.spark.sql.types.DoubleType)))) {
+        Similarity.sqTopK(tbl, idc, vecc, qid, kk)
+      }
     }
-    reg(spark, "graft_ann_ivf_sq") {
+    tableFunction(spark, "graft_ann_ivf_sq(table, id_col, vec_col, query_id, k, n_cells, probes)") { a =>
       // IVF×SQ: centroid collection + query-vector lookup are ACTIONS —
       // deferred like graft_ann_ivf
-      case Seq(t, id, vec, q, k, cells, probes) =>
-        val f = "graft_ann_ivf_sq"
-        val tbl = table(str(t, f))
-        val idc = str(id, f); val vecc = str(vec, f)
-        val qid = lng(q, f); val kk = int(k, f)
-        val nCells = int(cells, f); val np = int(probes, f)
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField(idc, tbl.select(col(idc)).schema.head.dataType),
-            StructField("sq_score", org.apache.spark.sql.types.DoubleType))),
-          memo { () =>
-            Similarity.ivfSqTopK(tbl, idc, vecc,
-              Similarity.collectCentroids(tbl, idc, vecc, nCells),
-              qid, kk, np)
-          })
-      case args => bad(
-        "graft_ann_ivf_sq(table, id_col, vec_col, query_id, k, n_cells, probes)", args)
+      val tbl = a.table(0)
+      val idc = a.str(1); val vecc = a.str(2)
+      val qid = a.lng(3); val kk = a.int(4)
+      val nCells = a.int(5); val np = a.int(6)
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField(idc, tbl.select(col(idc)).schema.head.dataType),
+          StructField("sq_score", org.apache.spark.sql.types.DoubleType)))) {
+        Similarity.ivfSqTopK(tbl, idc, vecc,
+          Similarity.collectCentroids(tbl, idc, vecc, nCells),
+          qid, kk, np)
+      }
     }
-    reg(spark, "graft_ann_sq_stored") {
+    tableFunction(spark, "graft_ann_sq_stored(codes_table, emb_table, id_col, vec_col, query_id, k)") { a =>
       // SQ serving from the STORED (id, scale, q) codes table; the
       // query-vector lookup is an ACTION — deferred like graft_ann_stored
-      case Seq(codesT, embT, id, vec, q, k) =>
-        val f = "graft_ann_sq_stored"
-        val codes = table(str(codesT, f)); val emb = table(str(embT, f))
-        val idc = str(id, f); val vecc = str(vec, f)
-        val qid = lng(q, f); val kk = int(k, f)
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField(idc, codes.select(col(idc)).schema.head.dataType),
-            StructField("sq_score", org.apache.spark.sql.types.DoubleType))),
-          memo { () =>
-            Similarity.sqTopKStored(codes, idc,
-              Similarity.queryVecOf(emb, idc, vecc, qid),
-              k = kk, excludeId = Some(qid))
-          })
-      case args => bad(
-        "graft_ann_sq_stored(codes_table, emb_table, id_col, vec_col, query_id, k)", args)
+      val codes = a.table(0); val emb = a.table(1)
+      val idc = a.str(2); val vecc = a.str(3)
+      val qid = a.lng(4); val kk = a.int(5)
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField(idc, codes.select(col(idc)).schema.head.dataType),
+          StructField("sq_score", org.apache.spark.sql.types.DoubleType)))) {
+        Similarity.sqTopKStored(codes, idc,
+          Similarity.queryVecOf(emb, idc, vecc, qid),
+          k = kk, excludeId = Some(qid))
+      }
     }
-    reg(spark, "graft_ann_ivf_sq_stored") {
+    tableFunction(spark, "graft_ann_ivf_sq_stored(codes_table, cells_table, emb_table, id_col, vec_col, query_id, k, probes)") { a =>
       // IVF×SQ serving from stored artifacts (cell-partitioned codes +
       // the cells table): centroid reconstruction and the query-vector
       // lookup are ACTIONS — deferred; the driver-literal probe-cell
       // filter keeps static partition pruning
-      case Seq(codesT, cellsT, embT, id, vec, q, k, probes) =>
-        val f = "graft_ann_ivf_sq_stored"
-        val codes = table(str(codesT, f)); val cells = table(str(cellsT, f))
-        val emb = table(str(embT, f))
-        val idc = str(id, f); val vecc = str(vec, f)
-        val qid = lng(q, f); val kk = int(k, f); val np = int(probes, f)
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField(idc, codes.select(col(idc)).schema.head.dataType),
-            StructField("sq_score", org.apache.spark.sql.types.DoubleType))),
-          memo { () =>
-            Similarity.ivfSqTopKStored(codes, idc,
-              Similarity.centroidsFromDf(cells),
-              Similarity.queryVecOf(emb, idc, vecc, qid),
-              k = kk, probes = np, excludeId = Some(qid))
-          })
-      case args => bad(
-        "graft_ann_ivf_sq_stored(codes_table, cells_table, emb_table, id_col, vec_col, query_id, k, probes)", args)
+      val codes = a.table(0); val cells = a.table(1)
+      val emb = a.table(2)
+      val idc = a.str(3); val vecc = a.str(4)
+      val qid = a.lng(5); val kk = a.int(6); val np = a.int(7)
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField(idc, codes.select(col(idc)).schema.head.dataType),
+          StructField("sq_score", org.apache.spark.sql.types.DoubleType)))) {
+        Similarity.ivfSqTopKStored(codes, idc,
+          Similarity.centroidsFromDf(cells),
+          Similarity.queryVecOf(emb, idc, vecc, qid),
+          k = kk, probes = np, excludeId = Some(qid))
+      }
     }
-    reg(spark, "graft_ann_recall") {
+    tableFunction(spark, "graft_ann_recall(queries_table, corpus_table, q_id_col, c_id_col, q_vec_col, c_vec_col, k, n_cells, probes)") { a =>
       // recall attestation: centroid collection is an ACTION — deferred
       // like the other index TVFs
-      case Seq(qt, ct, qid, cid, qvec, cvec, k, cells, probes) =>
-        val f = "graft_ann_recall"
-        val queries = table(str(qt, f)); val corpus = table(str(ct, f))
-        val qidc = str(qid, f); val cidc = str(cid, f)
-        val qvecc = str(qvec, f); val cvecc = str(cvec, f)
-        val kk = int(k, f); val nCells = int(cells, f); val np = int(probes, f)
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField("query_id",
-              queries.select(col(qidc)).schema.head.dataType),
-            StructField("n_exact", org.apache.spark.sql.types.LongType),
-            StructField("n_hit", org.apache.spark.sql.types.LongType),
-            StructField("recall_at_k", org.apache.spark.sql.types.DoubleType))),
-          memo { () =>
-            Similarity.annRecallReport(queries, corpus, qidc, cidc,
-              qvecc, cvecc,
-              Similarity.collectCentroids(corpus, cidc, cvecc, nCells),
-              k = kk, probes = np)
-          })
-      case args => bad(
-        "graft_ann_recall(queries_table, corpus_table, q_id_col, c_id_col, q_vec_col, c_vec_col, k, n_cells, probes)", args)
+      val queries = a.table(0); val corpus = a.table(1)
+      val qidc = a.str(2); val cidc = a.str(3)
+      val qvecc = a.str(4); val cvecc = a.str(5)
+      val kk = a.int(6); val nCells = a.int(7); val np = a.int(8)
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField("query_id",
+            queries.select(col(qidc)).schema.head.dataType),
+          StructField("n_exact", org.apache.spark.sql.types.LongType),
+          StructField("n_hit", org.apache.spark.sql.types.LongType),
+          StructField("recall_at_k", org.apache.spark.sql.types.DoubleType)))) {
+        Similarity.annRecallReport(queries, corpus, qidc, cidc,
+          qvecc, cvecc,
+          Similarity.collectCentroids(corpus, cidc, cvecc, nCells),
+          k = kk, probes = np)
+      }
     }
-    reg(spark, "graft_bpe_train") {
+    tableFunction(spark, "graft_bpe_train(table, id_col, text_col, n_merges[, 'pretok'])") { a =>
       // BPE merge-table training is an ACTION (one distributed corpus
       // pass, then the driver-side merge rounds — bpeTrainLocal, the
       // production-vocab engine, bit-equal to the distributed oracle
       // form) — deferred like the cluster/training TVFs; EXPLAIN
       // launches no job, the rounds run once on execute
-      case args if args.length == 4 || args.length == 5 =>
-        val f = "graft_bpe_train"
-        val tbl = table(str(args(0), f))
-        val idc = str(args(1), f); val textc = str(args(2), f)
-        val nm = int(args(3), f)
-        val pt = if (args.length == 5) pretokOpt(args(4), f) else false
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField("rank", org.apache.spark.sql.types.IntegerType,
-              nullable = false),
-            StructField("left", org.apache.spark.sql.types.StringType),
-            StructField("right", org.apache.spark.sql.types.StringType))),
-          memo { () => TextAnalysis.bpeTrainLocal(tbl, idc, textc, nm,
-            preTokenize = pt) })
-      case args => bad(
-        "graft_bpe_train(table, id_col, text_col, n_merges[, 'pretok'])", args)
+      val tbl = a.table(0)
+      val idc = a.str(1); val textc = a.str(2)
+      val nm = a.int(3)
+      val pt = a.has(4) && a.pretok(4)
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField("rank", org.apache.spark.sql.types.IntegerType,
+            nullable = false),
+          StructField("left", org.apache.spark.sql.types.StringType),
+          StructField("right", org.apache.spark.sql.types.StringType)))) {
+        TextAnalysis.bpeTrainLocal(tbl, idc, textc, nm, preTokenize = pt)
+      }
     }
-    reg(spark, "graft_unigram_train") {
+    tableFunction(spark, "graft_unigram_train(table, id_col, text_col, vocab_size, n_rounds, max_piece_len, seed_size)") { a =>
       // unigram-LM (SentencePiece-style) tokenizer training is an
       // ACTION (one distributed word-frequency pass, then driver-side
       // hard-EM + prune rounds) — deferred like graft_bpe_train
-      case Seq(t, id, text, vs, nr, mpl, ss) =>
-        val f = "graft_unigram_train"
-        val tbl = table(str(t, f))
-        val idc = str(id, f); val textc = str(text, f)
-        val (v, n, m, sd) = (int(vs, f), int(nr, f), int(mpl, f), int(ss, f))
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField("token_id", org.apache.spark.sql.types.IntegerType),
-            StructField("piece", org.apache.spark.sql.types.StringType),
-            StructField("cnt", org.apache.spark.sql.types.LongType),
-            StructField("logp", org.apache.spark.sql.types.DoubleType))),
-          memo { () => TextAnalysis.unigramTokTrain(tbl, idc, textc,
-            vocabSize = v, nRounds = n, maxPieceLen = m, seedSize = sd) })
-      case args => bad(
-        "graft_unigram_train(table, id_col, text_col, vocab_size, n_rounds, max_piece_len, seed_size)", args)
+      val tbl = a.table(0)
+      val idc = a.str(1); val textc = a.str(2)
+      val (v, n, m, sd) = (a.int(3), a.int(4), a.int(5), a.int(6))
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField("token_id", org.apache.spark.sql.types.IntegerType),
+          StructField("piece", org.apache.spark.sql.types.StringType),
+          StructField("cnt", org.apache.spark.sql.types.LongType),
+          StructField("logp", org.apache.spark.sql.types.DoubleType)))) {
+        TextAnalysis.unigramTokTrain(tbl, idc, textc,
+          vocabSize = v, nRounds = n, maxPieceLen = m, seedSize = sd)
+      }
     }
-    reg(spark, "graft_unigram_tokenize") {
+    tableFunction(spark, "graft_unigram_tokenize(table, id_col, text_col, pieces_table)") { a =>
       // Viterbi tokenize under a stored piece table: the vocab-scale
       // table collect is an ACTION, so the build is deferred — EXPLAIN
       // / CREATE VIEW launch no job (the Reuse.LocalDeferred lesson)
-      case Seq(t, id, text, pT) =>
-        val f = "graft_unigram_tokenize"
-        val tbl = table(str(t, f))
-        val idc = str(id, f); val textc = str(text, f)
-        val pieces = table(str(pT, f))
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            tbl.schema(idc),
-            StructField("pos", org.apache.spark.sql.types.IntegerType),
-            StructField("token", org.apache.spark.sql.types.StringType),
-            StructField("token_id", org.apache.spark.sql.types.IntegerType))),
-          memo { () =>
-            TextAnalysis.unigramTokenize(tbl, idc, textc, pieces) })
-      case args => bad(
-        "graft_unigram_tokenize(table, id_col, text_col, pieces_table)", args)
+      val tbl = a.table(0)
+      val idc = a.str(1); val textc = a.str(2)
+      val pieces = a.table(3)
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          tbl.schema(idc),
+          StructField("pos", org.apache.spark.sql.types.IntegerType),
+          StructField("token", org.apache.spark.sql.types.StringType),
+          StructField("token_id", org.apache.spark.sql.types.IntegerType)))) {
+        TextAnalysis.unigramTokenize(tbl, idc, textc, pieces)
+      }
     }
-    reg(spark, "graft_image_dups") {
+    tableFunction(spark, "graft_image_dups(table, id_col, payload_col, max_hamming, n_bands[, max_bucket_size])") { a =>
       // perceptual dHash near-dup over a media table — pure lazy
       // transformation (no training action), registered directly;
       // optional 6th arg = the hot-bucket cap (max_bucket_size)
-      case args if args.length == 5 || args.length == 6 =>
-        val f = "graft_image_dups"
-        val cap = if (args.length == 6) Some(int(args(5), f)) else None
-        Multimodal.imageNearDups(table(str(args(0), f)), str(args(1), f),
-          str(args(2), f), int(args(3), f), int(args(4), f), cap)
-      case args => bad(
-        "graft_image_dups(table, id_col, payload_col, max_hamming, n_bands[, max_bucket_size])", args)
+      val cap = Option.when(a.has(5))(a.int(5))
+      Multimodal.imageNearDups(a.table(0), a.str(1),
+        a.str(2), a.int(3), a.int(4), cap)
     }
-    reg(spark, "graft_image_probe") {
+    tableFunction(spark, "graft_image_probe(media_table, hashes_table, id_col, payload_col, max_hamming, n_bands[, max_bucket_size])") { a =>
       // incremental perceptual admission: new media vs a STORED dhash
       // frame — pure lazy transformation, stream-safe probe; optional
       // 7th arg = the corpus-side hot-bucket cap (max_bucket_size)
-      case args if args.length == 6 || args.length == 7 =>
-        val f = "graft_image_probe"
-        val cap = if (args.length == 7) Some(int(args(6), f)) else None
-        Multimodal.imageNearDupsBetween(table(str(args(0), f)),
-          table(str(args(1), f)), str(args(2), f), str(args(3), f),
-          int(args(4), f), int(args(5), f), cap)
-      case args => bad(
-        "graft_image_probe(media_table, hashes_table, id_col, payload_col, max_hamming, n_bands[, max_bucket_size])", args)
+      val cap = Option.when(a.has(6))(a.int(6))
+      Multimodal.imageNearDupsBetween(a.table(0),
+        a.table(1), a.str(2), a.str(3),
+        a.int(4), a.int(5), cap)
     }
-    reg(spark, "graft_latency_trend") {
+    tableFunction(spark, "graft_latency_trend(report_table, store_path)") { a =>
       // the SLO trend-store maintenance verb from SQL: append the
       // report view to the run_seq-stamped store, return the per-
       // surface delta frame — an ACTION (store append), deferred like
       // graft_store_compact. NOT idempotent under re-execution
-      // (ADVICE r13): the memo is per builder invocation (one
+      // (ADVICE r13): frame's memo is per builder invocation (one
       // statement's plan tree), so each EXECUTED statement over a
       // downstream view re-invokes the builder and appends ONE more
       // run_seq round — by design (a trend store records every run);
       // callers wanting exactly-one append per report must execute the
       // TVF statement once and read the result back from the store
-      case Seq(rT, pathE) =>
-        val f = "graft_latency_trend"
-        val rep = table(str(rT, f))
-        val path = str(pathE, f)
-        GraftDeferred.frame(spark, StructType(Seq(
-          StructField("surface", org.apache.spark.sql.types.StringType),
-          StructField("run_seq", org.apache.spark.sql.types.LongType),
-          StructField("p50_ms", org.apache.spark.sql.types.DoubleType),
-          StructField("p95_ms", org.apache.spark.sql.types.DoubleType),
-          StructField("prev_p50_ms", org.apache.spark.sql.types.DoubleType),
-          StructField("prev_p95_ms", org.apache.spark.sql.types.DoubleType),
-          StructField("delta_p50_pct", org.apache.spark.sql.types.DoubleType),
-          StructField("delta_p95_pct", org.apache.spark.sql.types.DoubleType))),
-          memo { () =>
-            graft.operators.ServingLatency.latencyTrend(rep, path) })
-      case args => bad(
-        "graft_latency_trend(report_table, store_path)", args)
+      val rep = a.table(0)
+      val path = a.str(1)
+      GraftDeferred.frame(spark, StructType(Seq(
+        StructField("surface", org.apache.spark.sql.types.StringType),
+        StructField("run_seq", org.apache.spark.sql.types.LongType),
+        StructField("p50_ms", org.apache.spark.sql.types.DoubleType),
+        StructField("p95_ms", org.apache.spark.sql.types.DoubleType),
+        StructField("prev_p50_ms", org.apache.spark.sql.types.DoubleType),
+        StructField("prev_p95_ms", org.apache.spark.sql.types.DoubleType),
+        StructField("delta_p50_pct", org.apache.spark.sql.types.DoubleType),
+        StructField("delta_p95_pct", org.apache.spark.sql.types.DoubleType)))) {
+        graft.operators.ServingLatency.latencyTrend(rep, path)
+      }
     }
-    reg(spark, "graft_audio_fp") {
+    tableFunction(spark, "graft_audio_fp(table, id_col, payload_col)") { a =>
       // the audio modality's fingerprint frame (Haitsma-Kalker
       // energy-difference bits over the stub energy grid) — pure lazy
       // zero-shuffle projection
-      case Seq(t, id, pay) =>
-        val f = "graft_audio_fp"
-        Multimodal.audioFp(table(str(t, f)), str(id, f), str(pay, f))
-      case args => bad(
-        "graft_audio_fp(table, id_col, payload_col)", args)
+      Multimodal.audioFp(a.table(0), a.str(1), a.str(2))
     }
-    reg(spark, "graft_audio_dups") {
+    tableFunction(spark, "graft_audio_dups(table, id_col, payload_col, max_hamming, n_bands[, max_bucket_size])") { a =>
       // audio near-dup pairs over a media table — graft_image_dups'
       // shape on the audio fingerprint; optional cap arg
-      case args if args.length == 5 || args.length == 6 =>
-        val f = "graft_audio_dups"
-        val cap = if (args.length == 6) Some(int(args(5), f)) else None
-        Multimodal.audioNearDups(table(str(args(0), f)), str(args(1), f),
-          str(args(2), f), int(args(3), f), int(args(4), f), cap)
-      case args => bad(
-        "graft_audio_dups(table, id_col, payload_col, max_hamming, n_bands[, max_bucket_size])", args)
+      val cap = Option.when(a.has(5))(a.int(5))
+      Multimodal.audioNearDups(a.table(0), a.str(1),
+        a.str(2), a.int(3), a.int(4), cap)
     }
-    reg(spark, "graft_audio_probe") {
+    tableFunction(spark, "graft_audio_probe(media_table, fps_table, id_col, payload_col, max_hamming, n_bands[, max_bucket_size])") { a =>
       // incremental audio admission vs a STORED afp frame — pure lazy,
       // stream-safe probe; optional corpus-side cap
-      case args if args.length == 6 || args.length == 7 =>
-        val f = "graft_audio_probe"
-        val cap = if (args.length == 7) Some(int(args(6), f)) else None
-        Multimodal.audioNearDupsBetween(table(str(args(0), f)),
-          table(str(args(1), f)), str(args(2), f), str(args(3), f),
-          int(args(4), f), int(args(5), f), cap)
-      case args => bad(
-        "graft_audio_probe(media_table, fps_table, id_col, payload_col, max_hamming, n_bands[, max_bucket_size])", args)
+      val cap = Option.when(a.has(6))(a.int(6))
+      Multimodal.audioNearDupsBetween(a.table(0),
+        a.table(1), a.str(2), a.str(3),
+        a.int(4), a.int(5), cap)
     }
-    reg(spark, "graft_video_frames") {
+    tableFunction(spark, "graft_video_frames(table, id_col, payload_col, n_frames)") { a =>
       // the video modality's frame table: stub frame-sample + fused
       // per-frame dHash — pure lazy zero-shuffle projection
-      case Seq(t, id, pay, nf) =>
-        val f = "graft_video_frames"
-        Multimodal.videoFrames(table(str(t, f)), str(id, f), str(pay, f),
-          int(nf, f))
-      case args => bad(
-        "graft_video_frames(table, id_col, payload_col, n_frames)", args)
+      Multimodal.videoFrames(a.table(0), a.str(1), a.str(2),
+        a.int(3))
     }
-    reg(spark, "graft_video_dups") {
+    tableFunction(spark, "graft_video_dups(table, id_col, payload_col, n_frames, max_hamming, n_bands, min_frames[, max_bucket_size])") { a =>
       // video near-dup pairs: frame-aligned banded candidates, exact
       // hamming, matched-frame count >= min_frames; optional cap
-      case args if args.length == 7 || args.length == 8 =>
-        val f = "graft_video_dups"
-        val cap = if (args.length == 8) Some(int(args(7), f)) else None
-        Multimodal.videoNearDups(table(str(args(0), f)), str(args(1), f),
-          str(args(2), f), int(args(3), f), int(args(4), f),
-          int(args(5), f), int(args(6), f), cap)
-      case args => bad(
-        "graft_video_dups(table, id_col, payload_col, n_frames, max_hamming, n_bands, min_frames[, max_bucket_size])", args)
+      val cap = Option.when(a.has(7))(a.int(7))
+      Multimodal.videoNearDups(a.table(0), a.str(1),
+        a.str(2), a.int(3), a.int(4),
+        a.int(5), a.int(6), cap)
     }
-    reg(spark, "graft_video_probe") {
+    tableFunction(spark, "graft_video_probe(media_table, frames_table, id_col, payload_col, n_frames, max_hamming, n_bands, min_frames[, max_bucket_size])") { a =>
       // incremental video admission vs a STORED frame table — the
       // matched-frame count gates admission; optional corpus-side cap
-      case args if args.length == 8 || args.length == 9 =>
-        val f = "graft_video_probe"
-        val cap = if (args.length == 9) Some(int(args(8), f)) else None
-        Multimodal.videoNearDupsBetween(table(str(args(0), f)),
-          table(str(args(1), f)), str(args(2), f), str(args(3), f),
-          int(args(4), f), int(args(5), f), int(args(6), f),
-          int(args(7), f), cap)
-      case args => bad(
-        "graft_video_probe(media_table, frames_table, id_col, payload_col, n_frames, max_hamming, n_bands, min_frames[, max_bucket_size])", args)
+      val cap = Option.when(a.has(8))(a.int(8))
+      Multimodal.videoNearDupsBetween(a.table(0),
+        a.table(1), a.str(2), a.str(3),
+        a.int(4), a.int(5), a.int(6),
+        a.int(7), cap)
     }
-    reg(spark, "graft_image_clusters") {
+    tableFunction(spark, "graft_image_clusters(table, id_col, payload_col, max_hamming, n_bands)") { a =>
       // perceptual near-dup CLUSTERS: the banded dHash pair set closed
       // into connected components. Large-Star/Small-Star CC is
       // ITERATIVE (one Spark action per round) — deferred like
       // graft_cluster_keep so EXPLAIN/prepare launch no job and the
       // rounds run once per statement
-      case Seq(t, id, payload, maxHam, bands) =>
-        val f = "graft_image_clusters"
-        val tbl = table(str(t, f))
-        val idc = str(id, f); val pc = str(payload, f)
-        val mh = int(maxHam, f); val nb = int(bands, f)
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField("node", org.apache.spark.sql.types.LongType),
-            StructField("component", org.apache.spark.sql.types.LongType))),
-          memo { () =>
-            Graph.connectedComponentsStar(
-              Multimodal.imageNearDups(tbl, idc, pc, mh, nb),
-              "id_a", "id_b")
-          })
-      case args => bad(
-        "graft_image_clusters(table, id_col, payload_col, max_hamming, n_bands)", args)
+      val tbl = a.table(0)
+      val idc = a.str(1); val pc = a.str(2)
+      val mh = a.int(3); val nb = a.int(4)
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField("node", org.apache.spark.sql.types.LongType),
+          StructField("component", org.apache.spark.sql.types.LongType)))) {
+        Graph.connectedComponentsStar(
+          Multimodal.imageNearDups(tbl, idc, pc, mh, nb),
+          "id_a", "id_b")
+      }
     }
-    reg(spark, "graft_distinct_ngrams") {
-      case Seq(t, id, text) =>
-        val f = "graft_distinct_ngrams"
-        TextAnalysis.distinctNgramReport(table(str(t, f)), str(id, f),
-          str(text, f))
-      case args => bad(
-        "graft_distinct_ngrams(table, id_col, text_col)", args)
+    tableFunction(spark, "graft_distinct_ngrams(table, id_col, text_col)") { a =>
+      TextAnalysis.distinctNgramReport(a.table(0), a.str(1),
+        a.str(2))
     }
-    reg(spark, "graft_cms_heavy_hitters") {
+    tableFunction(spark, "graft_cms_heavy_hitters(table, id_col, text_col, top_k, eps, confidence)") { a =>
       // the sketch build + probe are ACTIONS — deferred like the bloom
       // and training TVFs
-      case Seq(t, id, text, k, eps, conf) =>
-        val f = "graft_cms_heavy_hitters"
-        val tbl = table(str(t, f))
-        val idc = str(id, f); val textc = str(text, f)
-        val kk = int(k, f); val e = dbl(eps, f); val c = dbl(conf, f)
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField("token", org.apache.spark.sql.types.StringType),
-            StructField("n_occurrences", org.apache.spark.sql.types.LongType,
-              nullable = false),
-            StructField("within_contract",
-              org.apache.spark.sql.types.BooleanType, nullable = false))),
-          memo { () =>
-            TextAnalysis.heavyHittersCms(tbl, idc, textc, kk, e, c)
-          })
-      case args => bad(
-        "graft_cms_heavy_hitters(table, id_col, text_col, top_k, eps, confidence)", args)
+      val tbl = a.table(0)
+      val idc = a.str(1); val textc = a.str(2)
+      val kk = a.int(3); val e = a.dbl(4); val c = a.dbl(5)
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField("token", org.apache.spark.sql.types.StringType),
+          StructField("n_occurrences", org.apache.spark.sql.types.LongType,
+            nullable = false),
+          StructField("within_contract",
+            org.apache.spark.sql.types.BooleanType, nullable = false)))) {
+        TextAnalysis.heavyHittersCms(tbl, idc, textc, kk, e, c)
+      }
     }
-    reg(spark, "graft_sentence_filter") {
+    tableFunction(spark, "graft_sentence_filter(table, id_col, text_col, q[, accuracy_or_0])") { a =>
       // fully lazy: the 1-row quantile threshold is an in-plan aggregate
-      case args @ Seq(t, id, text, q, _*) if args.length <= 5 =>
-        val f = "graft_sentence_filter"
-        val acc = if (args.length == 5) Some(int(args(4), f)).filter(_ > 0) else None
-        TextAnalysis.filterSentencesByLm(table(str(t, f)), str(id, f),
-          str(text, f), q = dbl(q, f), accuracy = acc)
-      case args => bad(
-        "graft_sentence_filter(table, id_col, text_col, q[, accuracy_or_0])", args)
+      val acc = Option.when(a.has(4))(a.int(4)).filter(_ > 0)
+      TextAnalysis.filterSentencesByLm(a.table(0), a.str(1),
+        a.str(2), q = a.dbl(3), accuracy = acc)
     }
-    reg(spark, "graft_ann_stored") {
+    tableFunction(spark, "graft_ann_stored(codes_table, cells_table, codebooks_table, emb_table, id_col, vec_col, query_id, k, probes)") { a =>
       // IVF-PQ serving from stored artifacts: the centroid/codebook
       // reconstruction collects KB-scale tables — deferred like the
       // other index TVFs; the query vector is read from `emb_table` by
       // id (the serving coordinator's lookup)
-      case Seq(codesT, cellsT, cbT, embT, id, vec, q, k, probes) =>
-        val f = "graft_ann_stored"
-        val codes = table(str(codesT, f)); val cells = table(str(cellsT, f))
-        val cb = table(str(cbT, f)); val emb = table(str(embT, f))
-        val idc = str(id, f); val vecc = str(vec, f)
-        val qid = lng(q, f); val kk = int(k, f); val np = int(probes, f)
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField(idc, codes.select(col(idc)).schema.head.dataType),
-            StructField("adc_score", org.apache.spark.sql.types.DoubleType))),
-          memo { () =>
-            val books = Similarity.codebooksFromDf(cb)
-            require(books.nonEmpty && books.head.nonEmpty,
-              s"$f: empty codebook table")
-            // subDim is carried by the stored artifact itself — each
-            // codebook entry's element count — so it cannot drift
-            Similarity.ivfPqTopKStored(codes, idc,
-              Similarity.centroidsFromDf(cells), books,
-              subDim = books.head.head._2.length,
-              Similarity.queryVecOf(emb, idc, vecc, qid),
-              k = kk, probes = np, excludeId = Some(qid))
-          })
-      case args => bad(
-        "graft_ann_stored(codes_table, cells_table, codebooks_table, emb_table, id_col, vec_col, query_id, k, probes)", args)
+      val codes = a.table(0); val cells = a.table(1)
+      val cb = a.table(2); val emb = a.table(3)
+      val idc = a.str(4); val vecc = a.str(5)
+      val qid = a.lng(6); val kk = a.int(7); val np = a.int(8)
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField(idc, codes.select(col(idc)).schema.head.dataType),
+          StructField("adc_score", org.apache.spark.sql.types.DoubleType)))) {
+        val books = Similarity.codebooksFromDf(cb)
+        require(books.nonEmpty && books.head.nonEmpty,
+          s"${a.fn}: empty codebook table")
+        // subDim is carried by the stored artifact itself — each
+        // codebook entry's element count — so it cannot drift
+        Similarity.ivfPqTopKStored(codes, idc,
+          Similarity.centroidsFromDf(cells), books,
+          subDim = books.head.head._2.length,
+          Similarity.queryVecOf(emb, idc, vecc, qid),
+          k = kk, probes = np, excludeId = Some(qid))
+      }
     }
-    reg(spark, "graft_knn_join") {
+    tableFunction(spark, "graft_knn_join(queries_table, corpus_table, q_id_col, c_id_col, q_vec_col, c_vec_col, k, exclude_self)") { a =>
       // exact kNN join: fully LAZY (queries broadcast inside the plan,
       // no driver action)
-      case Seq(qt, ct, qid, cid, qvec, cvec, k, excl) =>
-        val f = "graft_knn_join"
-        Similarity.knnJoin(table(str(qt, f)), table(str(ct, f)),
-          str(qid, f), str(cid, f), str(qvec, f), str(cvec, f),
-          k = int(k, f), excludeSelf = int(excl, f) != 0)
-      case args => bad(
-        "graft_knn_join(queries_table, corpus_table, q_id_col, c_id_col, q_vec_col, c_vec_col, k, exclude_self)", args)
+      Similarity.knnJoin(a.table(0), a.table(1),
+        a.str(2), a.str(3), a.str(4), a.str(5),
+        k = a.int(6), excludeSelf = a.int(7) != 0)
     }
-    reg(spark, "graft_knn_join_ivf") {
+    tableFunction(spark, "graft_knn_join_ivf(queries_table, corpus_table, q_id_col, c_id_col, q_vec_col, c_vec_col, n_cells, probes, k, exclude_self)") { a =>
       // seed-centroid IVF-pruned kNN join: collectCentroids is an
       // ACTION — deferred like every training TVF
-      case Seq(qt, ct, qid, cid, qvec, cvec, cells, probes, k, excl) =>
-        val f = "graft_knn_join_ivf"
-        val queries = table(str(qt, f)); val corpus = table(str(ct, f))
-        val qidc = str(qid, f); val cidc = str(cid, f)
-        val qvecc = str(qvec, f); val cvecc = str(cvec, f)
-        val nCells = int(cells, f); val np = int(probes, f)
-        val kk = int(k, f); val ex = int(excl, f) != 0
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField("query_id",
-              queries.select(col(qidc)).schema.head.dataType),
-            StructField("neighbor_id",
-              corpus.select(col(cidc)).schema.head.dataType),
-            StructField("cos_sim", org.apache.spark.sql.types.DoubleType))),
-          memo { () =>
-            Similarity.ivfKnnJoin(queries, corpus, qidc, cidc, qvecc, cvecc,
-              Similarity.collectCentroids(corpus, cidc, cvecc, nCells),
-              k = kk, probes = np, excludeSelf = ex)
-          })
-      case args => bad(
-        "graft_knn_join_ivf(queries_table, corpus_table, q_id_col, c_id_col, q_vec_col, c_vec_col, n_cells, probes, k, exclude_self)", args)
+      val queries = a.table(0); val corpus = a.table(1)
+      val qidc = a.str(2); val cidc = a.str(3)
+      val qvecc = a.str(4); val cvecc = a.str(5)
+      val nCells = a.int(6); val np = a.int(7)
+      val kk = a.int(8); val ex = a.int(9) != 0
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField("query_id",
+            queries.select(col(qidc)).schema.head.dataType),
+          StructField("neighbor_id",
+            corpus.select(col(cidc)).schema.head.dataType),
+          StructField("cos_sim", org.apache.spark.sql.types.DoubleType)))) {
+        Similarity.ivfKnnJoin(queries, corpus, qidc, cidc, qvecc, cvecc,
+          Similarity.collectCentroids(corpus, cidc, cvecc, nCells),
+          k = kk, probes = np, excludeSelf = ex)
+      }
     }
-    reg(spark, "graft_knn_join_stored") {
+    tableFunction(spark, "graft_knn_join_stored(codes_table, cells_table, codebooks_table, queries_table, q_id_col, c_id_col, q_vec_col, k, probes, exclude_self)") { a =>
       // batch serving from the stored index: centroid/codebook
       // reconstruction collects KB-scale tables — deferred like
       // graft_ann_stored; subDim comes from the stored codebook itself
-      case Seq(codesT, cellsT, cbT, qt, qid, cid, qvec, k, probes, excl) =>
-        val f = "graft_knn_join_stored"
-        val codes = table(str(codesT, f)); val cells = table(str(cellsT, f))
-        val cb = table(str(cbT, f)); val queries = table(str(qt, f))
-        val qidc = str(qid, f); val cidc = str(cid, f)
-        val qvecc = str(qvec, f); val kk = int(k, f)
-        val np = int(probes, f); val ex = int(excl, f) != 0
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField("query_id",
-              queries.select(col(qidc)).schema.head.dataType),
-            StructField("neighbor_id",
-              codes.select(col(cidc)).schema.head.dataType),
-            StructField("adc_score", org.apache.spark.sql.types.DoubleType))),
-          memo { () =>
-            val books = Similarity.codebooksFromDf(cb)
-            require(books.nonEmpty && books.head.nonEmpty,
-              s"$f: empty codebook table")
-            Similarity.ivfPqKnnJoinStored(queries, codes, qidc, cidc, qvecc,
-              Similarity.centroidsFromDf(cells), books,
-              subDim = books.head.head._2.length,
-              k = kk, probes = np, excludeSelf = ex)
-          })
-      case args => bad(
-        "graft_knn_join_stored(codes_table, cells_table, codebooks_table, queries_table, q_id_col, c_id_col, q_vec_col, k, probes, exclude_self)", args)
+      val codes = a.table(0); val cells = a.table(1)
+      val cb = a.table(2); val queries = a.table(3)
+      val qidc = a.str(4); val cidc = a.str(5)
+      val qvecc = a.str(6); val kk = a.int(7)
+      val np = a.int(8); val ex = a.int(9) != 0
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField("query_id",
+            queries.select(col(qidc)).schema.head.dataType),
+          StructField("neighbor_id",
+            codes.select(col(cidc)).schema.head.dataType),
+          StructField("adc_score", org.apache.spark.sql.types.DoubleType)))) {
+        val books = Similarity.codebooksFromDf(cb)
+        require(books.nonEmpty && books.head.nonEmpty,
+          s"${a.fn}: empty codebook table")
+        Similarity.ivfPqKnnJoinStored(queries, codes, qidc, cidc, qvecc,
+          Similarity.centroidsFromDf(cells), books,
+          subDim = books.head.head._2.length,
+          k = kk, probes = np, excludeSelf = ex)
+      }
     }
-    reg(spark, "graft_knn_join_pruned") {
+    tableFunction(spark, "graft_knn_join_pruned(codes_table, cells_table, codebooks_table, queries_table, q_id_col, c_id_col, q_vec_col, k, probes, exclude_self)") { a =>
       // batch serving with STATIC probe-cell pruning: the query batch's
       // distinct probe-cell union (≤ nCells values at any |Q|) pushes
       // into the codes read as a literal filter — on a partitionBy(cell)
       // store the whole batch becomes static partition pruning. The
       // cell-union collect is an ACTION — deferred like graft_ann_stored
-      case Seq(codesT, cellsT, cbT, qt, qid, cid, qvec, k, probes, excl) =>
-        val f = "graft_knn_join_pruned"
-        val codes = table(str(codesT, f)); val cells = table(str(cellsT, f))
-        val cb = table(str(cbT, f)); val queries = table(str(qt, f))
-        val qidc = str(qid, f); val cidc = str(cid, f)
-        val qvecc = str(qvec, f); val kk = int(k, f)
-        val np = int(probes, f); val ex = int(excl, f) != 0
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField("query_id",
-              queries.select(col(qidc)).schema.head.dataType),
-            StructField("neighbor_id",
-              codes.select(col(cidc)).schema.head.dataType),
-            StructField("adc_score", org.apache.spark.sql.types.DoubleType))),
-          memo { () =>
-            val books = Similarity.codebooksFromDf(cb)
-            require(books.nonEmpty && books.head.nonEmpty,
-              s"$f: empty codebook table")
-            Similarity.ivfPqKnnJoinStoredPruned(queries, codes, qidc, cidc,
-              qvecc, Similarity.centroidsFromDf(cells), books,
-              subDim = books.head.head._2.length,
-              k = kk, probes = np, excludeSelf = ex)
-          })
-      case args => bad(
-        "graft_knn_join_pruned(codes_table, cells_table, codebooks_table, queries_table, q_id_col, c_id_col, q_vec_col, k, probes, exclude_self)", args)
+      val codes = a.table(0); val cells = a.table(1)
+      val cb = a.table(2); val queries = a.table(3)
+      val qidc = a.str(4); val cidc = a.str(5)
+      val qvecc = a.str(6); val kk = a.int(7)
+      val np = a.int(8); val ex = a.int(9) != 0
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField("query_id",
+            queries.select(col(qidc)).schema.head.dataType),
+          StructField("neighbor_id",
+            codes.select(col(cidc)).schema.head.dataType),
+          StructField("adc_score", org.apache.spark.sql.types.DoubleType)))) {
+        val books = Similarity.codebooksFromDf(cb)
+        require(books.nonEmpty && books.head.nonEmpty,
+          s"${a.fn}: empty codebook table")
+        Similarity.ivfPqKnnJoinStoredPruned(queries, codes, qidc, cidc,
+          qvecc, Similarity.centroidsFromDf(cells), books,
+          subDim = books.head.head._2.length,
+          k = kk, probes = np, excludeSelf = ex)
+      }
     }
-    reg(spark, "graft_ann_residual_stored") {
+    tableFunction(spark, "graft_ann_residual_stored(codes_table, cells_table, codebooks_table, emb_table, id_col, vec_col, query_id, k, probes)") { a =>
       // RESIDUAL IVF-PQ serving from stored artifacts — graft_ann_stored
       // over residual-trained codebooks (the per-probed-cell q·centroid
       // constant plus the residual LUT sum). Same deferred contract;
       // subDim comes from the stored codebook itself
-      case Seq(codesT, cellsT, cbT, embT, id, vec, q, k, probes) =>
-        val f = "graft_ann_residual_stored"
-        val codes = table(str(codesT, f)); val cells = table(str(cellsT, f))
-        val cb = table(str(cbT, f)); val emb = table(str(embT, f))
-        val idc = str(id, f); val vecc = str(vec, f)
-        val qid = lng(q, f); val kk = int(k, f); val np = int(probes, f)
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField(idc, codes.select(col(idc)).schema.head.dataType),
-            StructField("adc_score", org.apache.spark.sql.types.DoubleType))),
-          memo { () =>
-            val books = Similarity.codebooksFromDf(cb)
-            require(books.nonEmpty && books.head.nonEmpty,
-              s"$f: empty codebook table")
-            Similarity.ivfPqTopKResidualStored(codes, idc,
-              Similarity.centroidsFromDf(cells), books,
-              subDim = books.head.head._2.length,
-              Similarity.queryVecOf(emb, idc, vecc, qid),
-              k = kk, probes = np, excludeId = Some(qid))
-          })
-      case args => bad(
-        "graft_ann_residual_stored(codes_table, cells_table, codebooks_table, emb_table, id_col, vec_col, query_id, k, probes)", args)
+      val codes = a.table(0); val cells = a.table(1)
+      val cb = a.table(2); val emb = a.table(3)
+      val idc = a.str(4); val vecc = a.str(5)
+      val qid = a.lng(6); val kk = a.int(7); val np = a.int(8)
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField(idc, codes.select(col(idc)).schema.head.dataType),
+          StructField("adc_score", org.apache.spark.sql.types.DoubleType)))) {
+        val books = Similarity.codebooksFromDf(cb)
+        require(books.nonEmpty && books.head.nonEmpty,
+          s"${a.fn}: empty codebook table")
+        Similarity.ivfPqTopKResidualStored(codes, idc,
+          Similarity.centroidsFromDf(cells), books,
+          subDim = books.head.head._2.length,
+          Similarity.queryVecOf(emb, idc, vecc, qid),
+          k = kk, probes = np, excludeId = Some(qid))
+      }
     }
-    reg(spark, "graft_ann_rerank") {
+    tableFunction(spark, "graft_ann_rerank(table, id_col, vec_col, query_id, k, n_cells, probes, m, sub_dim, n_codes, cand_c)") { a =>
       // two-stage retrieval: ADC proposes cand_c, exact cosine re-ranks
       // only those — codebook collection + query LUT are ACTIONS, deferred
-      case Seq(t, id, vec, q, k, cells, probes, m, subDim, nCodes, candC) =>
-        val f = "graft_ann_rerank"
-        val tbl = table(str(t, f))
-        val idc = str(id, f); val vecc = str(vec, f)
-        val qid = lng(q, f); val kk = int(k, f)
-        val nCells = int(cells, f); val np = int(probes, f)
-        val mm = int(m, f); val sd = int(subDim, f); val nc = int(nCodes, f)
-        val cc = int(candC, f)
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField(idc, tbl.select(col(idc)).schema.head.dataType),
-            StructField("cos_sim", org.apache.spark.sql.types.DoubleType))),
-          memo { () =>
-            Similarity.ivfPqTopKRerank(tbl, idc, vecc,
-              Similarity.collectCentroids(tbl, idc, vecc, nCells),
-              Similarity.pqCodebooks(tbl, idc, vecc, mm, sd, nc),
-              sd, qid, kk, np, cc)
-          })
-      case args => bad(
-        "graft_ann_rerank(table, id_col, vec_col, query_id, k, n_cells, probes, m, sub_dim, n_codes, cand_c)", args)
+      val tbl = a.table(0)
+      val idc = a.str(1); val vecc = a.str(2)
+      val qid = a.lng(3); val kk = a.int(4)
+      val nCells = a.int(5); val np = a.int(6)
+      val mm = a.int(7); val sd = a.int(8); val nc = a.int(9)
+      val cc = a.int(10)
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField(idc, tbl.select(col(idc)).schema.head.dataType),
+          StructField("cos_sim", org.apache.spark.sql.types.DoubleType)))) {
+        Similarity.ivfPqTopKRerank(tbl, idc, vecc,
+          Similarity.collectCentroids(tbl, idc, vecc, nCells),
+          Similarity.pqCodebooks(tbl, idc, vecc, mm, sd, nc),
+          sd, qid, kk, np, cc)
+      }
     }
-    reg(spark, "graft_knn_join_rerank") {
+    tableFunction(spark, "graft_knn_join_rerank(codes_table, cells_table, codebooks_table, queries_table, corpus_table, q_id_col, c_id_col, q_vec_col, c_vec_col, k, probes, cand_c, exclude_self)") { a =>
       // batch two-stage retrieval from the stored codes: ADC proposes
       // cand_c per query, exact cosine re-ranks — deferred like
       // graft_knn_join_stored
-      case Seq(codesT, cellsT, cbT, qt, ct, qid, cid, qvec, cvec, k,
-               probes, candC, excl) =>
-        val f = "graft_knn_join_rerank"
-        val codes = table(str(codesT, f)); val cells = table(str(cellsT, f))
-        val cb = table(str(cbT, f)); val queries = table(str(qt, f))
-        val corpusVec = table(str(ct, f))
-        val qidc = str(qid, f); val cidc = str(cid, f)
-        val qvecc = str(qvec, f); val cvecc = str(cvec, f)
-        val kk = int(k, f); val np = int(probes, f)
-        val cc = int(candC, f); val ex = int(excl, f) != 0
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField("query_id",
-              queries.select(col(qidc)).schema.head.dataType),
-            StructField("neighbor_id",
-              corpusVec.select(col(cidc)).schema.head.dataType),
-            StructField("cos_sim", org.apache.spark.sql.types.DoubleType))),
-          memo { () =>
-            val books = Similarity.codebooksFromDf(cb)
-            require(books.nonEmpty && books.head.nonEmpty,
-              s"$f: empty codebook table")
-            Similarity.ivfPqKnnJoinStoredRerank(queries, codes, corpusVec,
-              qidc, cidc, qvecc, cvecc,
-              Similarity.centroidsFromDf(cells), books,
-              subDim = books.head.head._2.length,
-              k = kk, probes = np, candC = cc, excludeSelf = ex)
-          })
-      case args => bad(
-        "graft_knn_join_rerank(codes_table, cells_table, codebooks_table, queries_table, corpus_table, q_id_col, c_id_col, q_vec_col, c_vec_col, k, probes, cand_c, exclude_self)", args)
+      val codes = a.table(0); val cells = a.table(1)
+      val cb = a.table(2); val queries = a.table(3)
+      val corpusVec = a.table(4)
+      val qidc = a.str(5); val cidc = a.str(6)
+      val qvecc = a.str(7); val cvecc = a.str(8)
+      val kk = a.int(9); val np = a.int(10)
+      val cc = a.int(11); val ex = a.int(12) != 0
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField("query_id",
+            queries.select(col(qidc)).schema.head.dataType),
+          StructField("neighbor_id",
+            corpusVec.select(col(cidc)).schema.head.dataType),
+          StructField("cos_sim", org.apache.spark.sql.types.DoubleType)))) {
+        val books = Similarity.codebooksFromDf(cb)
+        require(books.nonEmpty && books.head.nonEmpty,
+          s"${a.fn}: empty codebook table")
+        Similarity.ivfPqKnnJoinStoredRerank(queries, codes, corpusVec,
+          qidc, cidc, qvecc, cvecc,
+          Similarity.centroidsFromDf(cells), books,
+          subDim = books.head.head._2.length,
+          k = kk, probes = np, candC = cc, excludeSelf = ex)
+      }
     }
-    reg(spark, "graft_quality_classifier") {
+    tableFunction(spark, "graft_quality_classifier(pos_table, neg_table, score_table, id_col, text_col, buckets, iters)") { a =>
       // LR quality filter: training collects per-iteration gradients —
       // deferred like every training TVF
-      case Seq(posT, negT, scoreT, id, text, buckets, iters) =>
-        val f = "graft_quality_classifier"
-        val pos = table(str(posT, f)); val neg = table(str(negT, f))
-        val score = table(str(scoreT, f))
-        val idc = str(id, f); val textc = str(text, f)
-        val nb = int(buckets, f); val ni = int(iters, f)
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField(idc, score.select(col(idc)).schema.head.dataType),
-            StructField("z", org.apache.spark.sql.types.DoubleType),
-            StructField("quality_score", org.apache.spark.sql.types.DoubleType))),
-          memo { () =>
-            val w = graft.operators.Classifier.lrTrain(pos, neg, idc, textc,
-              buckets = nb, iters = ni)
-            graft.operators.Classifier.lrScore(score, idc, textc,
-              graft.operators.Classifier.weightsToDf(spark, w), buckets = nb)
-          })
-      case args => bad(
-        "graft_quality_classifier(pos_table, neg_table, score_table, id_col, text_col, buckets, iters)", args)
+      val pos = a.table(0); val neg = a.table(1)
+      val score = a.table(2)
+      val idc = a.str(3); val textc = a.str(4)
+      val nb = a.int(5); val ni = a.int(6)
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField(idc, score.select(col(idc)).schema.head.dataType),
+          StructField("z", org.apache.spark.sql.types.DoubleType),
+          StructField("quality_score", org.apache.spark.sql.types.DoubleType)))) {
+        val w = graft.operators.Classifier.lrTrain(pos, neg, idc, textc,
+          buckets = nb, iters = ni)
+        graft.operators.Classifier.lrScore(score, idc, textc,
+          graft.operators.Classifier.weightsToDf(spark, w), buckets = nb)
+      }
     }
-    reg(spark, "graft_lr_score") {
+    tableFunction(spark, "graft_lr_score(weights_table, table, id_col, text_col, buckets)") { a =>
       // serve a STORED weight table (train once with
       // graft_quality_classifier / Classifier.lrTrain, score every
       // ingestion run from the read-back frame): fully LAZY — the
       // weight frame broadcasts inside the plan, no driver action
-      case Seq(wT, t, id, text, buckets) =>
-        val f = "graft_lr_score"
-        graft.operators.Classifier.lrScore(table(str(t, f)), str(id, f),
-          str(text, f), table(str(wT, f)), int(buckets, f))
-      case args => bad(
-        "graft_lr_score(weights_table, table, id_col, text_col, buckets)", args)
+      graft.operators.Classifier.lrScore(a.table(1), a.str(2),
+        a.str(3), a.table(0), a.int(4))
     }
-    reg(spark, "graft_lr_eval") {
+    tableFunction(spark, "graft_lr_eval(weights_table, pos_table, neg_table, id_col, text_col, buckets)") { a =>
       // the eval panel over a STORED weight table: fully LAZY like
       // graft_lr_score (broadcast weights, threshold explode, counts);
       // the disjoint-id refusal is IN-PLAN (raise_error at execution),
       // so CREATE VIEW / EXPLAIN / prepare launch no job
-      case Seq(wT, posT, negT, id, text, buckets) =>
-        val f = "graft_lr_eval"
-        graft.operators.Classifier.lrEvalReport(table(str(posT, f)),
-          table(str(negT, f)), str(id, f), str(text, f),
-          table(str(wT, f)), buckets = int(buckets, f))
-      case args => bad(
-        "graft_lr_eval(weights_table, pos_table, neg_table, id_col, text_col, buckets)", args)
+      graft.operators.Classifier.lrEvalReport(a.table(1),
+        a.table(2), a.str(3), a.str(4),
+        a.table(0), buckets = a.int(5))
     }
-    reg(spark, "graft_domain_report") {
+    tableFunction(spark, "graft_domain_report(table, url_col, top_k)") { a =>
       // fully LAZY: the corpus total is a broadcast 1-row aggregate
-      case Seq(t, url, k) =>
-        val f = "graft_domain_report"
-        TextAnalysis.domainReport(table(str(t, f)), str(url, f),
-          topK = int(k, f))
-      case args => bad(
-        "graft_domain_report(table, url_col, top_k)", args)
+      TextAnalysis.domainReport(a.table(0), a.str(1),
+        topK = a.int(2))
     }
-    reg(spark, "graft_url_filter") {
+    tableFunction(spark, "graft_url_filter(table, id_col, url_col, blocklist_table)") { a =>
       // URL/domain admission: fully LAZY (the blocklist broadcasts
       // inside the plan, no driver action)
-      case Seq(t, id, url, bl) =>
-        val f = "graft_url_filter"
-        TextAnalysis.urlFilter(table(str(t, f)), str(id, f), str(url, f),
-          table(str(bl, f)))
-      case args => bad(
-        "graft_url_filter(table, id_col, url_col, blocklist_table)", args)
+      TextAnalysis.urlFilter(a.table(0), a.str(1), a.str(2),
+        a.table(3))
     }
-    reg(spark, "graft_ann_pq") {
+    tableFunction(spark, "graft_ann_pq(table, id_col, vec_col, query_id, k, m, sub_dim, n_codes)") { a =>
       // PQ/ADC: codebook collection + the query LUT build are ACTIONS —
       // deferred
-      case Seq(t, id, vec, q, k, m, subDim, nCodes) =>
-        val f = "graft_ann_pq"
-        val tbl = table(str(t, f))
-        val idc = str(id, f); val vecc = str(vec, f)
-        val qid = lng(q, f); val kk = int(k, f)
-        val mm = int(m, f); val sd = int(subDim, f); val nc = int(nCodes, f)
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField(idc, tbl.select(col(idc)).schema.head.dataType),
-            StructField("adc_score", org.apache.spark.sql.types.DoubleType))),
-          memo { () =>
-            Similarity.pqTopK(tbl, idc, vecc,
-              Similarity.pqCodebooks(tbl, idc, vecc, mm, sd, nc),
-              sd, qid, kk)
-          })
-      case args => bad(
-        "graft_ann_pq(table, id_col, vec_col, query_id, k, m, sub_dim, n_codes)", args)
+      val tbl = a.table(0)
+      val idc = a.str(1); val vecc = a.str(2)
+      val qid = a.lng(3); val kk = a.int(4)
+      val mm = a.int(5); val sd = a.int(6); val nc = a.int(7)
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField(idc, tbl.select(col(idc)).schema.head.dataType),
+          StructField("adc_score", org.apache.spark.sql.types.DoubleType)))) {
+        Similarity.pqTopK(tbl, idc, vecc,
+          Similarity.pqCodebooks(tbl, idc, vecc, mm, sd, nc),
+          sd, qid, kk)
+      }
     }
-    reg(spark, "graft_ann_ivf_pq_residual") {
+    tableFunction(spark, "graft_ann_ivf_pq_residual(table, id_col, vec_col, query_id, k, n_cells, probes, m, sub_dim, n_codes)") { a =>
       // residual IVF-PQ (the full published recipe): centroid
       // collection + residual codebook training + the probe-cell /
       // cell-constant builds are ACTIONS — deferred
-      case Seq(t, id, vec, q, k, cells, probes, m, subDim, nCodes) =>
-        val f = "graft_ann_ivf_pq_residual"
-        val tbl = table(str(t, f))
-        val idc = str(id, f); val vecc = str(vec, f)
-        val qid = lng(q, f); val kk = int(k, f)
-        val nCells = int(cells, f); val np = int(probes, f)
-        val mm = int(m, f); val sd = int(subDim, f); val nc = int(nCodes, f)
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField(idc, tbl.select(col(idc)).schema.head.dataType),
-            StructField("adc_score", org.apache.spark.sql.types.DoubleType))),
-          memo { () =>
-            val cents = Similarity.collectCentroids(tbl, idc, vecc, nCells)
-            Similarity.ivfPqTopKResidual(tbl, idc, vecc, cents,
-              Similarity.pqCodebooksResidual(tbl, idc, vecc, cents,
-                mm, sd, nc),
-              sd, qid, kk, np)
-          })
-      case args => bad(
-        "graft_ann_ivf_pq_residual(table, id_col, vec_col, query_id, k, " +
-          "n_cells, probes, m, sub_dim, n_codes)", args)
+      val tbl = a.table(0)
+      val idc = a.str(1); val vecc = a.str(2)
+      val qid = a.lng(3); val kk = a.int(4)
+      val nCells = a.int(5); val np = a.int(6)
+      val mm = a.int(7); val sd = a.int(8); val nc = a.int(9)
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField(idc, tbl.select(col(idc)).schema.head.dataType),
+          StructField("adc_score", org.apache.spark.sql.types.DoubleType)))) {
+        val cents = Similarity.collectCentroids(tbl, idc, vecc, nCells)
+        Similarity.ivfPqTopKResidual(tbl, idc, vecc, cents,
+          Similarity.pqCodebooksResidual(tbl, idc, vecc, cents,
+            mm, sd, nc),
+          sd, qid, kk, np)
+      }
     }
-    reg(spark, "graft_cluster_sample") {
-      case Seq(t, id, vec, cells, iters, k, salt) =>
-        val f = "graft_cluster_sample"
-        val tbl = table(str(t, f))
-        val idc = str(id, f); val vecc = str(vec, f)
-        val nCells = int(cells, f); val nIters = int(iters, f)
-        val kk = int(k, f); val sl = str(salt, f)
-        // same deferred contract as graft_semdedup: the Lloyd rounds
-        // are driver actions and must not run at analysis time
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField(idc, tbl.select(col(idc)).schema.head.dataType),
-            StructField("cell", org.apache.spark.sql.types.LongType, nullable = false))),
-          memo { () =>
-            val cents = Similarity.centroidsOf(
-              Similarity.kmeansTrain(tbl, idc, vecc, nCells, nIters))
-            val assigned = tbl.select(col(idc), col(vecc),
-              Similarity.cellOf(col(vecc), cents).as("cell"))
-            Sampling.exactKPerStratum(assigned, col("cell"),
-                col(idc).cast("string"), kk, Seq(col(idc)), sl)
-              .select(col(idc), col("cell"))
-          })
-      case args => bad(
-        "graft_cluster_sample(table, id_col, vec_col, n_cells, iters, k, salt)", args)
+    tableFunction(spark, "graft_cluster_sample(table, id_col, vec_col, n_cells, iters, k, salt)") { a =>
+      val tbl = a.table(0)
+      val idc = a.str(1); val vecc = a.str(2)
+      val nCells = a.int(3); val nIters = a.int(4)
+      val kk = a.int(5); val sl = a.str(6)
+      // same deferred contract as graft_semdedup: the Lloyd rounds
+      // are driver actions and must not run at analysis time
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField(idc, tbl.select(col(idc)).schema.head.dataType),
+          StructField("cell", org.apache.spark.sql.types.LongType, nullable = false)))) {
+        val cents = Similarity.centroidsOf(
+          Similarity.kmeansTrain(tbl, idc, vecc, nCells, nIters))
+        val assigned = tbl.select(col(idc), col(vecc),
+          Similarity.cellOf(col(vecc), cents).as("cell"))
+        Sampling.exactKPerStratum(assigned, col("cell"),
+            col(idc).cast("string"), kk, Seq(col(idc)), sl)
+          .select(col(idc), col("cell"))
+      }
     }
-    reg(spark, "graft_rank_norm") {
-      case Seq(t, id, value, buckets) =>
-        val f = "graft_rank_norm"
-        val tbl = table(str(t, f))
-        val idc = str(id, f); val vc = str(value, f)
-        val nb = int(buckets, f)
-        // the boundary sketch is an ACTION (approx_percentile collected
-        // as CASE-chain literals) — defer it like semdedup/the cluster
-        // TVFs so EXPLAIN/prepare launch no job
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField(idc, tbl.select(col(idc)).schema.head.dataType),
-            StructField(vc, tbl.select(col(vc)).schema.head.dataType),
-            StructField("rnk", org.apache.spark.sql.types.LongType),
-            StructField("pct_rank", org.apache.spark.sql.types.DoubleType))),
-          memo { () =>
-            Sampling.percentRank(tbl, idc, vc, numBuckets = nb)
-              .select(col(idc), col(vc).cast(
-                  tbl.select(col(vc)).schema.head.dataType),
-                col("rnk").cast("long"), col("pct_rank").cast("double"))
-          })
-      case args => bad(
-        "graft_rank_norm(table, id_col, value_col, n_buckets)", args)
+    tableFunction(spark, "graft_rank_norm(table, id_col, value_col, n_buckets)") { a =>
+      val tbl = a.table(0)
+      val idc = a.str(1); val vc = a.str(2)
+      val nb = a.int(3)
+      // the boundary sketch is an ACTION (approx_percentile collected
+      // as CASE-chain literals) — defer it like semdedup/the cluster
+      // TVFs so EXPLAIN/prepare launch no job
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField(idc, tbl.select(col(idc)).schema.head.dataType),
+          StructField(vc, tbl.select(col(vc)).schema.head.dataType),
+          StructField("rnk", org.apache.spark.sql.types.LongType),
+          StructField("pct_rank", org.apache.spark.sql.types.DoubleType)))) {
+        Sampling.percentRank(tbl, idc, vc, numBuckets = nb)
+          .select(col(idc), col(vc).cast(
+              tbl.select(col(vc)).schema.head.dataType),
+            col("rnk").cast("long"), col("pct_rank").cast("double"))
+      }
     }
-    reg(spark, "graft_rank_norm_by") {
-      case Seq(t, id, grp, value, buckets) =>
-        val f = "graft_rank_norm_by"
-        val tbl = table(str(t, f))
-        val idc = str(id, f); val gc = str(grp, f); val vc = str(value, f)
-        val nb = int(buckets, f)
-        // same deferred contract as graft_rank_norm (the boundary
-        // sketch is an action)
-        GraftDeferred.frame(spark,
-          StructType(Seq(
-            StructField(idc, tbl.select(col(idc)).schema.head.dataType),
-            StructField(gc, tbl.select(col(gc)).schema.head.dataType),
-            StructField(vc, tbl.select(col(vc)).schema.head.dataType),
-            StructField("rnk", org.apache.spark.sql.types.LongType),
-            StructField("pct_rank", org.apache.spark.sql.types.DoubleType))),
-          memo { () =>
-            Sampling.percentRankByGroup(tbl, idc, gc, vc, numBuckets = nb)
-              .select(col(idc),
-                col(gc).cast(tbl.select(col(gc)).schema.head.dataType),
-                col(vc).cast(tbl.select(col(vc)).schema.head.dataType),
-                col("rnk").cast("long"), col("pct_rank").cast("double"))
-          })
-      case args => bad(
-        "graft_rank_norm_by(table, id_col, group_col, value_col, n_buckets)", args)
+    tableFunction(spark, "graft_rank_norm_by(table, id_col, group_col, value_col, n_buckets)") { a =>
+      val tbl = a.table(0)
+      val idc = a.str(1); val gc = a.str(2); val vc = a.str(3)
+      val nb = a.int(4)
+      // same deferred contract as graft_rank_norm (the boundary
+      // sketch is an action)
+      GraftDeferred.frame(spark,
+        StructType(Seq(
+          StructField(idc, tbl.select(col(idc)).schema.head.dataType),
+          StructField(gc, tbl.select(col(gc)).schema.head.dataType),
+          StructField(vc, tbl.select(col(vc)).schema.head.dataType),
+          StructField("rnk", org.apache.spark.sql.types.LongType),
+          StructField("pct_rank", org.apache.spark.sql.types.DoubleType)))) {
+        Sampling.percentRankByGroup(tbl, idc, gc, vc, numBuckets = nb)
+          .select(col(idc),
+            col(gc).cast(tbl.select(col(gc)).schema.head.dataType),
+            col(vc).cast(tbl.select(col(vc)).schema.head.dataType),
+            col("rnk").cast("long"), col("pct_rank").cast("double"))
+      }
     }
-    reg(spark, "graft_shards") {
-      case Seq(t, key, n, salt) =>
-        val f = "graft_shards"
-        Sampling.assignShards(table(str(t, f)), col(str(key, f)),
-          numShards = int(n, f), salt = str(salt, f))
-      case args => bad("graft_shards(table, key_col, num_shards, salt)", args)
+    tableFunction(spark, "graft_shards(table, key_col, num_shards, salt)") { a =>
+      Sampling.assignShards(a.table(0), col(a.str(1)),
+        numShards = a.int(2), salt = a.str(3))
     }
-    reg(spark, "graft_span_dedup_doc") {
-      case Seq(t, id, text, st) =>
-        val f = "graft_span_dedup_doc"
-        TextAnalysis.dedupSpansWithinDoc(table(str(t, f)), str(id, f),
-          str(text, f), spanTokens = int(st, f))
-      case args => bad(
-        "graft_span_dedup_doc(table, id_col, text_col, span_tokens)", args)
+    tableFunction(spark, "graft_span_dedup_doc(table, id_col, text_col, span_tokens)") { a =>
+      TextAnalysis.dedupSpansWithinDoc(a.table(0), a.str(1),
+        a.str(2), spanTokens = a.int(3))
     }
-    reg(spark, "graft_gopher") {
-      case Seq(t, id, text, minT, maxT, minW, maxW, maxSym, minStops) =>
-        val f = "graft_gopher"
-        TextAnalysis.gopherRules(table(str(t, f)), str(id, f), str(text, f),
-          minTokens = int(minT, f), maxTokens = int(maxT, f),
-          minMeanWordLen = dbl(minW, f), maxMeanWordLen = dbl(maxW, f),
-          maxSymbolRatio = dbl(maxSym, f), minStopwordHits = int(minStops, f))
-      case args => bad(
-        "graft_gopher(table, id_col, text_col, min_tokens, max_tokens, min_word_len, max_word_len, max_symbol_ratio, min_stop_hits)", args)
+    tableFunction(spark, "graft_gopher(table, id_col, text_col, min_tokens, max_tokens, min_word_len, max_word_len, max_symbol_ratio, min_stop_hits)") { a =>
+      TextAnalysis.gopherRules(a.table(0), a.str(1), a.str(2),
+        minTokens = a.int(3), maxTokens = a.int(4),
+        minMeanWordLen = a.dbl(5), maxMeanWordLen = a.dbl(6),
+        maxSymbolRatio = a.dbl(7), minStopwordHits = a.int(8))
     }
-    reg(spark, "graft_gopher_rep") {
-      case Seq(t, id, text) =>
-        val f = "graft_gopher_rep"
-        TextAnalysis.gopherRepetition(table(str(t, f)), str(id, f), str(text, f))
-      case Seq(t, id, text, topN, dupN) =>
-        val f = "graft_gopher_rep"
-        TextAnalysis.gopherRepetition(table(str(t, f)), str(id, f), str(text, f),
-          topN = int(topN, f), dupN = int(dupN, f))
-      case args => bad(
-        "graft_gopher_rep(table, id_col, text_col[, top_n, dup_n])", args)
+    tableFunction(spark, "graft_gopher_rep(table, id_col, text_col[, top_n, dup_n])") { a =>
+      if (a.has(3))
+        TextAnalysis.gopherRepetition(a.table(0), a.str(1), a.str(2),
+          topN = a.int(3), dupN = a.int(4))
+      else
+        TextAnalysis.gopherRepetition(a.table(0), a.str(1), a.str(2))
     }
-    reg(spark, "graft_quantile_filter") {
-      case args if args.length >= 3 && args.length <= 5 =>
-        val f = "graft_quantile_filter"
-        // optional 4th arg selects the bounded-memory GK estimator
-        // (accuracy a → boundary rank within N/a; 0 = the exact
-        // oracle-gated percentile); optional 5th arg 'local' truncates
-        // the input diamond (threshold agg + filter) when the table is
-        // an expensive view chain rather than a cheap scan
-        val acc = if (args.length >= 4) Some(int(args(3), f)).filter(_ > 0) else None
-        val reuse = if (args.length == 5) reuseOpt(args(4), f)
-          else graft.operators.Reuse.Off
-        Sampling.keepAboveQuantile(table(str(args(0), f)),
-          col(str(args(1), f)), dbl(args(2), f), accuracy = acc, reuse = reuse)
-      case args => bad(
-        "graft_quantile_filter(table, value_col, q[, accuracy_or_0[, 'local']])", args)
+    tableFunction(spark, "graft_quantile_filter(table, value_col, q[, accuracy_or_0[, 'local']])") { a =>
+      // optional 4th arg selects the bounded-memory GK estimator
+      // (accuracy a → boundary rank within N/a; 0 = the exact
+      // oracle-gated percentile); optional 5th arg 'local' truncates
+      // the input diamond (threshold agg + filter) when the table is
+      // an expensive view chain rather than a cheap scan
+      val acc = Option.when(a.has(3))(a.int(3)).filter(_ > 0)
+      val reuse = if (a.has(4)) a.reuse(4)
+        else graft.operators.Reuse.Off
+      Sampling.keepAboveQuantile(a.table(0),
+        col(a.str(1)), a.dbl(2), accuracy = acc, reuse = reuse)
     }
-    reg(spark, "graft_quantile_filter_by") {
+    tableFunction(spark, "graft_quantile_filter_by(table, group_col, value_col, q[, accuracy_or_0[, 'local']])") { a =>
       // per-GROUP thresholds — same optional estimator/reuse tail as
       // graft_quantile_filter
-      case args if args.length >= 4 && args.length <= 6 =>
-        val f = "graft_quantile_filter_by"
-        val acc = if (args.length >= 5) Some(int(args(4), f)).filter(_ > 0) else None
-        val reuse = if (args.length == 6) reuseOpt(args(5), f)
-          else graft.operators.Reuse.Off
-        Sampling.keepAboveQuantileByGroup(table(str(args(0), f)),
-          col(str(args(1), f)), col(str(args(2), f)), dbl(args(3), f),
-          accuracy = acc, reuse = reuse)
-      case args => bad(
-        "graft_quantile_filter_by(table, group_col, value_col, q[, accuracy_or_0[, 'local']])", args)
+      val acc = Option.when(a.has(4))(a.int(4)).filter(_ > 0)
+      val reuse = if (a.has(5)) a.reuse(5)
+        else graft.operators.Reuse.Off
+      Sampling.keepAboveQuantileByGroup(a.table(0),
+        col(a.str(1)), col(a.str(2)), a.dbl(3),
+        accuracy = acc, reuse = reuse)
     }
-    reg(spark, "graft_winnow") {
-      case Seq(t, id, text, k, w) =>
-        val f = "graft_winnow"
-        TextAnalysis.winnowFingerprints(table(str(t, f)), str(id, f),
-          str(text, f), k = int(k, f), w = int(w, f))
-      case args => bad("graft_winnow(table, id_col, text_col, k, w)", args)
+    tableFunction(spark, "graft_winnow(table, id_col, text_col, k, w)") { a =>
+      TextAnalysis.winnowFingerprints(a.table(0), a.str(1),
+        a.str(2), k = a.int(3), w = a.int(4))
     }
-    reg(spark, "graft_overlap_extents") {
-      case args if args.length == 5 || args.length == 6 =>
-        val f = "graft_overlap_extents"
-        // optional 6th arg: minimum run length in tokens (default w+k-1,
-        // the winnow completeness threshold)
-        val minT = if (args.length == 6) int(args(5), f) else 0
-        TextAnalysis.sharedSpanExtents(table(str(args(0), f)),
-          str(args(1), f), str(args(2), f),
-          k = int(args(3), f), w = int(args(4), f), minTokens = minT)
-      case args => bad(
-        "graft_overlap_extents(table, id_col, text_col, k, w[, min_tokens])", args)
+    tableFunction(spark, "graft_overlap_extents(table, id_col, text_col, k, w[, min_tokens])") { a =>
+      // optional 6th arg: minimum run length in tokens (default w+k-1,
+      // the winnow completeness threshold)
+      val minT = if (a.has(5)) a.int(5) else 0
+      TextAnalysis.sharedSpanExtents(a.table(0),
+        a.str(1), a.str(2),
+        k = a.int(3), w = a.int(4), minTokens = minT)
     }
-    reg(spark, "graft_dedup_substrings") {
-      case args if args.length == 5 || args.length == 6 =>
-        val f = "graft_dedup_substrings"
-        val minT = if (args.length == 6) int(args(5), f) else 0
-        TextAnalysis.dedupExactSubstrings(table(str(args(0), f)),
-          str(args(1), f), str(args(2), f),
-          k = int(args(3), f), w = int(args(4), f), minTokens = minT)
-      case args => bad(
-        "graft_dedup_substrings(table, id_col, text_col, k, w[, min_tokens])", args)
+    tableFunction(spark, "graft_dedup_substrings(table, id_col, text_col, k, w[, min_tokens])") { a =>
+      val minT = if (a.has(5)) a.int(5) else 0
+      TextAnalysis.dedupExactSubstrings(a.table(0),
+        a.str(1), a.str(2),
+        k = a.int(3), w = a.int(4), minTokens = minT)
     }
-    reg(spark, "graft_unigram_lp") {
-      case Seq(t, id, text) =>
-        val f = "graft_unigram_lp"
-        TextAnalysis.unigramLogProb(table(str(t, f)), str(id, f), str(text, f))
-      case args => bad("graft_unigram_lp(table, id_col, text_col)", args)
+    tableFunction(spark, "graft_unigram_lp(table, id_col, text_col)") { a =>
+      TextAnalysis.unigramLogProb(a.table(0), a.str(1), a.str(2))
     }
-    reg(spark, "graft_bigram_lp") {
-      case Seq(t, id, text) =>
-        val f = "graft_bigram_lp"
-        TextAnalysis.bigramLogProb(table(str(t, f)), str(id, f), str(text, f))
-      case args => bad("graft_bigram_lp(table, id_col, text_col)", args)
+    tableFunction(spark, "graft_bigram_lp(table, id_col, text_col)") { a =>
+      TextAnalysis.bigramLogProb(a.table(0), a.str(1), a.str(2))
     }
-    reg(spark, "graft_trigram_kn_stored") {
+    tableFunction(spark, "graft_trigram_kn_stored(c3_table, ctx_table, sfx_table, mid_table, uni_table, table, id_col, text_col, discount)") { a =>
       // score under a STORED KN model (five count-table views) — fully
       // LAZY: left joins on hashes, broadcast 1-row totals, back-off
       // branches in-plan
-      case Seq(c3T, ctxT, sfxT, midT, uniT, t, id, text, disc) =>
-        val f = "graft_trigram_kn_stored"
-        TextAnalysis.trigramKnScoreStored(table(str(t, f)), str(id, f),
-          str(text, f),
-          Map("c3" -> table(str(c3T, f)), "ctx" -> table(str(ctxT, f)),
-            "sfx" -> table(str(sfxT, f)), "mid" -> table(str(midT, f)),
-            "uni" -> table(str(uniT, f))),
-          discount = dbl(disc, f))
-      case args => bad(
-        "graft_trigram_kn_stored(c3_table, ctx_table, sfx_table, mid_table, uni_table, table, id_col, text_col, discount)", args)
+      TextAnalysis.trigramKnScoreStored(a.table(5), a.str(6),
+        a.str(7),
+        Map("c3" -> a.table(0), "ctx" -> a.table(1),
+          "sfx" -> a.table(2), "mid" -> a.table(3),
+          "uni" -> a.table(4)),
+        discount = a.dbl(8))
     }
-    reg(spark, "graft_trigram_kn") {
+    tableFunction(spark, "graft_trigram_kn(table, id_col, text_col, discount)") { a =>
       // interpolated Kneser-Ney trigram LM score — fully lazy (hash
       // count tables join relationally, 1-row broadcast total)
-      case Seq(t, id, text, disc) =>
-        val f = "graft_trigram_kn"
-        TextAnalysis.trigramKnLogProb(table(str(t, f)), str(id, f),
-          str(text, f), discount = dbl(disc, f))
-      case args => bad(
-        "graft_trigram_kn(table, id_col, text_col, discount)", args)
+      TextAnalysis.trigramKnLogProb(a.table(0), a.str(1),
+        a.str(2), discount = a.dbl(3))
     }
-    reg(spark, "graft_dsir") {
-      case Seq(t, tgt, id, text, b) =>
-        val f = "graft_dsir"
-        Sampling.importanceWeights(table(str(t, f)), table(str(tgt, f)),
-          str(id, f), str(text, f), buckets = int(b, f))
-      case args => bad(
-        "graft_dsir(table, target_table, id_col, text_col, buckets)", args)
+    tableFunction(spark, "graft_dsir(table, target_table, id_col, text_col, buckets)") { a =>
+      Sampling.importanceWeights(a.table(0), a.table(1),
+        a.str(2), a.str(3), buckets = a.int(4))
     }
 
     // per-row text-analysis SCALAR functions (pure codegen'd column
     // expressions — usable anywhere an expression is, including as the
     // score feeding graft_cluster_best)
-    val freg = spark.sessionState.functionRegistry
-    def scalar(name: String)(b: org.apache.spark.sql.Column => org.apache.spark.sql.Column): Unit =
-      freg.createOrReplaceTempFunction(name, {
-        case Seq(e) => GraftBridge.resolvedExpression(spark,
-          b(GraftBridge.column(e)))
-        case args => bad(s"$name(text)", args)
-      }, "scala_udf")
-    scalar("graft_normalize")(t => TextAnalysis.normalizeText(t))
-    scalar("graft_strip_html")(TextAnalysis.stripMarkup)
-    scalar("graft_script")(TextAnalysis.scriptOf)
-    scalar("graft_quality")(TextAnalysis.qualityScore)
-    scalar("graft_pii_redact")(TextAnalysis.piiRedact)
-    scalar("graft_langid")(TextAnalysis.langId)
-    scalar("graft_fingerprint")(TextAnalysis.fingerprint)
+    def scalar(sig: String)(b: Column => Column): Unit =
+      scalarFunction(spark, sig)(a =>
+        GraftBridge.resolvedExpression(spark, b(GraftBridge.column(a(0)))))
+    scalar("graft_normalize(text)")(t => TextAnalysis.normalizeText(t))
+    scalar("graft_strip_html(text)")(TextAnalysis.stripMarkup)
+    scalar("graft_script(text)")(TextAnalysis.scriptOf)
+    scalar("graft_quality(text)")(TextAnalysis.qualityScore)
+    scalar("graft_pii_redact(text)")(TextAnalysis.piiRedact)
+    scalar("graft_langid(text)")(TextAnalysis.langId)
+    scalar("graft_fingerprint(text)")(TextAnalysis.fingerprint)
     // perceptual 64-bit dHash of a binary payload (the fused
     // DHash64 expression — one digest loop, not 72 md5 subtrees)
-    scalar("graft_dhash64")(p => GraftBridge.column(
+    scalar("graft_dhash64(text)")(p => GraftBridge.column(
       graft.functions.DHash64(GraftBridge.expression(
         p.cast(org.apache.spark.sql.types.BinaryType)))))
-    scalar("graft_token_count")(TextAnalysis.tokenCount)
-    scalar("graft_bpeish_count")(TextAnalysis.bpeishTokenCount)
-    scalar("graft_punct_ratio")(TextAnalysis.punctRatio)
-    scalar("graft_stopword_ratio")(TextAnalysis.stopwordRatio)
+    scalar("graft_token_count(text)")(TextAnalysis.tokenCount)
+    scalar("graft_bpeish_count(text)")(TextAnalysis.bpeishTokenCount)
+    scalar("graft_punct_ratio(text)")(TextAnalysis.punctRatio)
+    scalar("graft_stopword_ratio(text)")(TextAnalysis.stopwordRatio)
     // two-arg: elementwise cosine over embedding columns (the codegen'd
     // CosineSim kernel — SQL-side vector math)
-    freg.createOrReplaceTempFunction("graft_cosine", {
-      case Seq(a, b) => GraftBridge.resolvedExpression(spark,
-        Similarity.cosine(GraftBridge.column(a), GraftBridge.column(b)))
-      case args => bad("graft_cosine(vec_a, vec_b)", args)
-    }, "scala_udf")
+    scalarFunction(spark, "graft_cosine(vec_a, vec_b)") { a =>
+      GraftBridge.resolvedExpression(spark,
+        Similarity.cosine(GraftBridge.column(a(0)), GraftBridge.column(a(1))))
+    }
     // deterministic sampling gate: keep iff hash(salt||key) lands under
     // rate_bp basis points — the SQL form of Sampling.bernoulli/mix
-    freg.createOrReplaceTempFunction("graft_sample_gate", {
-      case Seq(key, rate, salt) => GraftBridge.resolvedExpression(spark,
-        Sampling.hashGate(GraftBridge.column(key), GraftBridge.column(rate),
-          str(salt, "graft_sample_gate")))
-      case args => bad("graft_sample_gate(key, rate_bp, salt)", args)
-    }, "scala_udf")
+    scalarFunction(spark, "graft_sample_gate(key, rate_bp, salt)") { a =>
+      GraftBridge.resolvedExpression(spark,
+        Sampling.hashGate(GraftBridge.column(a(0)), GraftBridge.column(a(1)),
+          a.str(2)))
+    }
   }
 }

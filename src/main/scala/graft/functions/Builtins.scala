@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.{Cast, Concat, DateFormatClass, DayOfWeek, EvalMode, Expression, GetJsonObject, Literal, ParseUrl, Subtract, UnixTimestamp}
 import org.apache.spark.sql.types._
+import graft.engine.SqlFunction
+import graft.engine.SqlFunction.scalarFunction
 
 /** The exosql scalar-function surface (SURVEY.md §2.7; reference
   * `lib/builtins.ex` [U]) re-expressed Spark-first.
@@ -170,76 +172,54 @@ object Builtins {
   private def col(e: Expression): Column =
     org.apache.spark.sql.GraftBridge.column(e)
 
-  /** Sessions already registered — registerAll is called from every
-    * SQL-surface query builder (safe to call per query), but re-running
-    * `createOrReplaceTempFunction` emits a SimpleFunctionRegistry
-    * "replaced a previously registered function" WARN per function per
-    * call, flooding the bench/verify logs. Weak keys so dropped sessions
-    * can be collected. */
-  private val registeredSessions =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
+  private val registered = new SqlFunction.OncePerSession
 
   /** Expose exosql names to SQL. Spark-colliding names (`to_timestamp`)
     * get an `exo_` prefix rather than shadowing the standard function.
     * Idempotent per session: repeat calls are no-ops. */
-  def registerAll(spark: SparkSession): Unit = {
-    if (!registeredSessions.add(spark)) return
-    val reg = spark.sessionState.functionRegistry
+  def registerAll(spark: SparkSession): Unit = registered(spark) {
     def lit2str(e: Expression): String = e match {
       case Literal(v, _: StringType) if v != null => v.toString
       case other => throw new IllegalArgumentException(
         s"expected foldable string literal, got $other")
     }
-    reg.createOrReplaceTempFunction("strftime", es =>
-      strftimeExpr(es(0), lit2str(es(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("to_datetime", {
-      case Seq(e) => ToDatetime(e)
-      case Seq(e, fmt) => // exosql 2-arg form: strftime-style format
+    scalarFunction(spark, "strftime(ts, fmt)")(a =>
+      strftimeExpr(a(0), lit2str(a(1))))
+    scalarFunction(spark, "to_datetime(x[, fmt])") { a =>
+      if (a.has(1)) // exosql 2-arg form: strftime-style format
         new org.apache.spark.sql.catalyst.expressions.ParseToTimestamp(
-          e, Literal(strftimeToJavaPattern(lit2str(fmt))))
-      case es => throw new IllegalArgumentException(s"to_datetime arity ${es.size}")
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("json", es =>
-      org.apache.spark.sql.catalyst.expressions.variant.ParseJson(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("exo_to_timestamp", es =>
-      UnixTimestamp(es.head, Literal("yyyy-MM-dd HH:mm:ss")), "scala_udf")
-    reg.createOrReplaceTempFunction("exo_substr", {
-      case Seq(s, st) => ExoSubstr(s, st, Literal(Int.MaxValue))
-      case Seq(s, st, ln) => ExoSubstr(s, st, ln)
-      case es => throw new IllegalArgumentException(s"exo_substr arity ${es.size}")
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("jp", { es =>
-      val p = lit2str(es(1))
-      GetJsonObject(es(0), Literal(if (p.startsWith("$")) p else "$." + p))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("regex_named", es =>
-      RegexNamed(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("urlparse", {
-      case Seq(u) => UrlParseMap(u)
-      case Seq(u, p) => lit2str(p) match {
+          a(0), Literal(strftimeToJavaPattern(lit2str(a(1)))))
+      else ToDatetime(a(0))
+    }
+    scalarFunction(spark, "json(text)")(a =>
+      org.apache.spark.sql.catalyst.expressions.variant.ParseJson(a(0)))
+    scalarFunction(spark, "exo_to_timestamp(ts)")(a =>
+      UnixTimestamp(a(0), Literal("yyyy-MM-dd HH:mm:ss")))
+    scalarFunction(spark, "exo_substr(s, start[, len])")(a =>
+      ExoSubstr(a(0), a(1), if (a.has(2)) a(2) else Literal(Int.MaxValue)))
+    scalarFunction(spark, "jp(json, path)") { a =>
+      val p = lit2str(a(1))
+      GetJsonObject(a(0), Literal(if (p.startsWith("$")) p else "$." + p))
+    }
+    scalarFunction(spark, "regex_named(s, re)")(a => RegexNamed(a(0), a(1)))
+    scalarFunction(spark, "urlparse(url[, part])") { a =>
+      val u = a(0)
+      if (!a.has(1)) UrlParseMap(u)
+      else lit2str(a(1)) match {
         case q if q.startsWith("query.") =>
           ParseUrl(Seq(u, Literal("QUERY"), Literal(q.drop(6))))
         case "scheme" => ParseUrl(Seq(u, Literal("PROTOCOL")))
         case "user" => ParseUrl(Seq(u, Literal("USERINFO")))
         case other => ParseUrl(Seq(u, Literal(other.toUpperCase)))
       }
-      case es => throw new IllegalArgumentException(s"urlparse arity ${es.size}")
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("to_number", es =>
-      Cast(es.head, DoubleType, None, EvalMode.TRY), "scala_udf")
-    reg.createOrReplaceTempFunction("to_string", es =>
-      Cast(es.head, StringType), "scala_udf")
-    reg.createOrReplaceTempFunction("generate_series", {
-      case Seq(a, b) =>
-        org.apache.spark.sql.catalyst.expressions.Sequence(a, b, None, None)
-      case Seq(a, b, st) =>
-        org.apache.spark.sql.catalyst.expressions.Sequence(a, b, Some(st), None)
-      case es => throw new IllegalArgumentException(s"generate_series arity ${es.size}")
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("exo_trunc", es =>
-      Cast(es.head, LongType), "scala_udf")
+    }
+    scalarFunction(spark, "to_number(x)")(a =>
+      Cast(a(0), DoubleType, None, EvalMode.TRY))
+    scalarFunction(spark, "to_string(x)")(a => Cast(a(0), StringType))
+    scalarFunction(spark, "generate_series(start, stop[, step])")(a =>
+      org.apache.spark.sql.catalyst.expressions.Sequence(
+        a(0), a(1), Option.when(a.has(2))(a(2)), None))
+    scalarFunction(spark, "exo_trunc(x)")(a => Cast(a(0), LongType))
     // registry-injected expressions built from the Column API must be
     // FULLY converted (session converter) — the lazy ColumnNodeExpression
     // wrapper [[GraftBridge.expression]] returns survives to codegen when
@@ -247,18 +227,15 @@ object Builtins {
     // DataFrame API (see GraftBridge.resolvedExpression)
     def resolved(c: Column): Expression =
       org.apache.spark.sql.GraftBridge.resolvedExpression(spark, c)
-    reg.createOrReplaceTempFunction("randint", es =>
-      resolved(randint(col(es(0)), col(es(1)))), "scala_udf")
-    reg.createOrReplaceTempFunction("regex", {
-      case Seq(s0, re) => resolved(regexp_extract(col(s0), lit2str(re), 0))
-      case Seq(s0, re, g) => resolved(regexp_extract(col(s0), lit2str(re),
-        g.eval().asInstanceOf[Number].intValue()))
-      case es => throw new IllegalArgumentException(s"regex arity ${es.size}")
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("regex_all", {
-      case Seq(s0, re) => resolved(regexp_extract_all(col(s0), col(re), lit(0)))
-      case Seq(s0, re, g) => resolved(regexp_extract_all(col(s0), col(re), col(g)))
-      case es => throw new IllegalArgumentException(s"regex_all arity ${es.size}")
-    }, "scala_udf")
+    scalarFunction(spark, "randint(a, b)")(a =>
+      resolved(randint(col(a(0)), col(a(1)))))
+    scalarFunction(spark, "regex(s, re[, group])") { a =>
+      val re = lit2str(a(1))
+      resolved(regexp_extract(col(a(0)), re,
+        if (a.has(2)) a(2).eval().asInstanceOf[Number].intValue() else 0))
+    }
+    scalarFunction(spark, "regex_all(s, re[, group])")(a =>
+      resolved(regexp_extract_all(col(a(0)), col(a(1)),
+        if (a.has(2)) col(a(2)) else lit(0))))
   }
 }

@@ -96,9 +96,13 @@ object Classifier {
     // re-shuffle anyway; planning it with AQE off preserves the
     // clustering but runs the whole featurize chain non-coalesced
     // (~0.8 s/key at sf0.1 — measured, r15). A cached InMemoryRelation
-    // gives both: the cache fill runs under AQE, and (with the default
-    // canChangeCachedPlanOutputPartitioning=false) its outputPartitioning
-    // stays HashPartitioning(__tid) for every consumer. feats is fully
+    // gives both: the cache fill runs under AQE, and the epochs read it
+    // without a __tid exchange. The PlanSpec pin "lrTrain epochs shuffle
+    // only the bucket aggregate, never __tid" is what holds that
+    // invariant: on Spark 4.1 it passes with
+    // canChangeCachedPlanOutputPartitioning set either way, so that conf
+    // is not the cause, and the cause has not yet been re-derived from
+    // the CacheManager. feats is fully
     // consumed inside this call, so it is unpersisted on every exit path
     // (a failed guard or epoch included) — no cache entry outlives the
     // train. Read once per iteration — never re-tokenize.

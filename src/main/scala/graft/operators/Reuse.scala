@@ -99,7 +99,7 @@ object Reuse {
     * shared across plan-tree copies via the memoized thunk, so CREATE
     * VIEW / EXPLAIN / prepare launch no job at all.
     *
-    * SHARING BOUNDARY: the memoized `cp` is per BUILDER INVOCATION —
+    * SHARING BOUNDARY: the memoized checkpoint is per BUILDER INVOCATION —
     * one statement's plan tree. SQL temp views store PARSED plans, so
     * each EXECUTED downstream statement re-invokes the TVF builder and
     * gets a fresh thunk: the upstream chain still recomputes (and
@@ -114,10 +114,8 @@ object Reuse {
     * cannot occur — the nested leaf simply builds (memoized) when the
     * outer checkpoint first materializes, at execution. */
   case object LocalDeferred extends Reuse {
-    def apply(df: DataFrame): DataFrame = {
-      lazy val cp = truncate(df)
-      org.apache.spark.sql.GraftDeferred.frame(
-        df.sparkSession, df.schema, () => cp)
-    }
+    def apply(df: DataFrame): DataFrame =
+      org.apache.spark.sql.GraftDeferred.frame(df.sparkSession, df.schema)(
+        truncate(df))
   }
 }

@@ -22,9 +22,8 @@ import org.apache.spark.sql.types.StructType
   *
   * The schema is declared up front (it must be derivable without
   * running anything — e.g. "one column, the id's type"); the builder
-  * must produce exactly that column layout. Memoization is the
-  * CALLER's contract: pass a thunk that caches its result (see
-  * `LlmSql.memo`) so plan-tree copies (canonicalization, AQE
+  * must produce exactly that column layout. [[GraftDeferred.frame]]
+  * memoizes the builder, so plan-tree copies (canonicalization, AQE
   * re-optimization) and repeated actions share one computation. */
 case class GraftDeferredScan(output: Seq[Attribute], build: () => DataFrame)
     extends LeafNode
@@ -66,10 +65,12 @@ object GraftDeferredStrategy extends SparkStrategy {
 }
 
 object GraftDeferred {
-  /** A DataFrame over a [[GraftDeferredScan]], with the planning
-    * strategy installed on the session (idempotent). */
-  def frame(spark: SparkSession, schema: StructType,
-            build: () => DataFrame): DataFrame = {
+  /** A DataFrame over a [[GraftDeferredScan]] whose builder runs at most
+    * once, with the planning strategy installed on the session
+    * (idempotent). */
+  def frame(spark: SparkSession, schema: StructType)
+           (build: => DataFrame): DataFrame = {
+    lazy val built = build
     val cs = spark.asInstanceOf[classic.SparkSession]
     cs.experimental.synchronized {
       if (!cs.experimental.extraStrategies.contains(GraftDeferredStrategy))
@@ -77,6 +78,6 @@ object GraftDeferred {
           cs.experimental.extraStrategies :+ GraftDeferredStrategy
     }
     classic.Dataset.ofRows(cs, GraftDeferredScan(
-      DataTypeUtils.toAttributes(schema), build))
+      DataTypeUtils.toAttributes(schema), () => built))
   }
 }

@@ -61,6 +61,20 @@ class BuiltinsSpec extends AnyFunSuite {
     assert(d >= 5 && d < 10)
   }
 
+  test("builtins refuse a wrong argument count by quoting their signature") {
+    Builtins.registerAll(spark)
+    for ((sql, sig) <- Seq(
+      "SELECT strftime(timestamp '2020-01-01 00:00:00') AS s" -> "strftime(ts, fmt)",
+      """SELECT json('{}', 1) AS j""" -> "json(text)")) {
+      val e = intercept[Exception](spark.sql(sql).collect())
+      val causes = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists {
+        case i: IllegalArgumentException => i.getMessage.contains(s"expected $sig, got")
+        case _ => false
+      }, s"$sql -> ${causes.map(_.toString).mkString(" | ")}")
+    }
+  }
+
   test("strftime unknown verbs pass through literally; %% escapes") {
     Builtins.registerAll(spark)
     val r = spark.sql(

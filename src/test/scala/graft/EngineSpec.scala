@@ -825,4 +825,48 @@ class EngineSpec extends AnyFunSuite {
       .collect())
     assert(e2.getMessage.contains("literal"))
   }
+
+  test("every graft SQL function is named and sized by its signature alone") {
+    engine // registers the functions on the session
+    def chain(t: Throwable): String = Iterator.iterate(t)(_.getCause)
+      .takeWhile(_ != null).map(x => Option(x.getMessage).getOrElse("")).mkString(" | ")
+    def graftNames(fns: Seq[org.apache.spark.sql.catalyst.FunctionIdentifier]) =
+      fns.map(_.funcName).filter(_.startsWith("graft_")).distinct.sorted
+    val tvfs = graftNames(spark.sessionState.tableFunctionRegistry.listFunction())
+    val scalars = graftNames(spark.sessionState.functionRegistry.listFunction())
+    assert(tvfs.nonEmpty && scalars.nonEmpty)
+    for ((names, call) <- Seq[(Seq[String], (String, String) => String)](
+           (tvfs, (n, as) => s"SELECT * FROM $n($as)"),
+           (scalars, (n, as) => s"SELECT $n($as)"));
+         name <- names) {
+      def refusal(n: Int): String = chain(intercept[Exception](
+        spark.sql(call(name, Seq.fill(n)("'x'").mkString(", "))).collect()))
+      val sig = """expected (.+?), got 0 argument\(s\)""".r
+        .findFirstMatchIn(refusal(0)).map(_.group(1))
+        .getOrElse(fail(s"$name(): no signature in ${refusal(0)}"))
+      assert(sig.takeWhile(_ != '(') == name, sig)
+      val max = sig.substring(sig.indexOf('(') + 1, sig.length - 1)
+        .replaceAll("""[\[\]]""", "").split(",").count(_.trim.nonEmpty)
+      assert(refusal(max + 1).contains(s"expected $sig, got ${max + 1} argument(s)"), sig)
+    }
+  }
+
+  test("signature parsing: each [ opens an optional group; registration runs once per session") {
+    import graft.engine.SqlFunction.{OncePerSession, Signature}
+    val rep = Signature("graft_gopher_rep(table, id_col, text_col[, top_n, dup_n])")
+    assert(rep.name == "graft_gopher_rep" && rep.arities == Set(3, 5))
+    assert(Signature("graft_quantile_filter(table, value_col, q[, accuracy_or_0[, 'local']])")
+      .arities == Set(3, 4, 5))
+    assert(Signature("graft_sentences(table, id_col, text_col)").arities == Set(3))
+    val e = intercept[IllegalArgumentException](rep.args(Seq.empty))
+    assert(e.getMessage == s"expected ${rep.text}, got 0 argument(s)")
+    // a registration that throws partway leaves the session unmarked, so
+    // the next call retries instead of leaving functions silently missing
+    val once = new OncePerSession
+    intercept[IllegalStateException](once(spark)(throw new IllegalStateException("partial")))
+    var runs = 0
+    once(spark)(runs += 1)
+    once(spark)(runs += 1)
+    assert(runs == 1)
+  }
 }

@@ -3,9 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source guards for the one lineage-truncation rule in
-  * [[graft.operators.Reuse]]: only Reuse.scala and Graph.scala
+  * [[graft.operators.Reuse]] (only Reuse.scala and Graph.scala
   * checkpoint or set the checkpoint dir, and the per-call options the
-  * rule replaced do not come back. Whole-line comments are skipped. */
+  * rule replaced do not come back) and for the one SQL-function
+  * declaration in [[graft.engine.SqlFunction]]. Whole-line comments are
+  * skipped. */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = new java.io.File("src/main/scala")
 
@@ -42,5 +44,15 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(found.isEmpty,
       "reliable checkpoints come from the application's checkpoint dir:\n" +
         found.mkString("\n"))
+  }
+
+  test("SQL functions register only through SqlFunction, named by their signature") {
+    val found = hits("""createOrReplaceTempFunction|registerTableFunction\(""",
+      allowed = Set("SqlFunction.scala", "GraftBridge.scala"))
+    assert(found.isEmpty,
+      "declare SQL functions with graft.engine.SqlFunction:\n" + found.mkString("\n"))
+    val restated = hits("""val f = """")
+    assert(restated.isEmpty,
+      "a function's name belongs in its signature only:\n" + restated.mkString("\n"))
   }
 }
