@@ -2,6 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Cast, Concat, DateFormatClass, DayOfWeek, EvalMode, Expression, GetJsonObject, Literal, ParseUrl, Subtract, UnixTimestamp}
 import org.apache.spark.sql.types._
 import graft.engine.SqlFunction
@@ -213,8 +215,12 @@ object Builtins {
         case other => ParseUrl(Seq(u, Literal(other.toUpperCase)))
       }
     }
-    scalarFunction(spark, "to_number(x)")(a =>
-      Cast(a(0), DoubleType, None, EvalMode.TRY))
+    // the exosql one-argument form; Spark's own builtin owns the
+    // two-argument `to_number(expr, fmt)`, so that form is handed back to it
+    scalarFunction(spark, "to_number(x[, fmt])")(a =>
+      if (a.has(1)) FunctionRegistry.builtin.lookupFunction(
+        FunctionIdentifier("to_number"), Seq(a(0), a(1)))
+      else Cast(a(0), DoubleType, None, EvalMode.TRY))
     scalarFunction(spark, "to_string(x)")(a => Cast(a(0), StringType))
     scalarFunction(spark, "generate_series(start, stop[, step])")(a =>
       org.apache.spark.sql.catalyst.expressions.Sequence(

@@ -277,6 +277,18 @@ object Sampling {
       .withColumn("order_key", saltedHash(key, "ord:" + salt))
   }
 
+  /** The quantile filters' threshold estimator: the exact interpolated
+    * `percentile` (`accuracy = None`) or the GK sketch at `accuracy`. */
+  private def quantileEstimator(value: Column, q: Double,
+                                accuracy: Option[Int]): Column = {
+    require(q >= 0.0 && q <= 1.0, s"quantile must be in [0,1], got $q")
+    accuracy.foreach(a => require(a >= 1, s"accuracy must be >= 1, got $a"))
+    accuracy match {
+      case Some(a) => percentile_approx(value, lit(q), lit(a)).cast("double")
+      case None => percentile(value, lit(q))
+    }
+  }
+
   /** Corpus-quantile filter — "drop the bottom quartile by length /
     * quality score", the relative-threshold pruning step that adapts to
     * the corpus instead of hard-coding a cutoff. Keeps rows where
@@ -306,12 +318,7 @@ object Sampling {
   def keepAboveQuantile(df: DataFrame, value: Column, q: Double,
                         accuracy: Option[Int] = None,
                         reuse: Reuse = Reuse.Off): DataFrame = {
-    require(q >= 0.0 && q <= 1.0, s"quantile must be in [0,1], got $q")
-    accuracy.foreach(a => require(a >= 1, s"accuracy must be >= 1, got $a"))
-    val est = accuracy match {
-      case Some(a) => percentile_approx(value, lit(q), lit(a)).cast("double")
-      case None => percentile(value, lit(q))
-    }
+    val est = quantileEstimator(value, q, accuracy)
     val in = reuse(df)
     val thr = in.agg(est.as("__thr"))
     in.crossJoin(broadcast(thr)).filter(value >= col("__thr")).drop("__thr")
@@ -335,12 +342,7 @@ object Sampling {
   def keepAboveQuantileByGroup(df: DataFrame, group: Column, value: Column,
                                q: Double, accuracy: Option[Int] = None,
                                reuse: Reuse = Reuse.Off): DataFrame = {
-    require(q >= 0.0 && q <= 1.0, s"quantile must be in [0,1], got $q")
-    accuracy.foreach(a => require(a >= 1, s"accuracy must be >= 1, got $a"))
-    val est = accuracy match {
-      case Some(a) => percentile_approx(value, lit(q), lit(a)).cast("double")
-      case None => percentile(value, lit(q))
-    }
+    val est = quantileEstimator(value, q, accuracy)
     val in = reuse(df)
     val thr = in.groupBy(group.as("__g")).agg(est.as("__thr"))
     in.join(broadcast(thr), group === col("__g"))
@@ -594,6 +596,24 @@ object Sampling {
       .filter(col("token_offset") < budget)
   }
 
+  /** The percent-rank value bucket of `in`'s `__v` column: a GK sketch
+    * (one action) proposes up to `numBuckets - 1` boundaries, and the
+    * bucket is an inlined CASE chain over them (0 when there are none). */
+  private def valueBucket(in: DataFrame, numBuckets: Int): Column =
+    if (numBuckets == 1) lit(0)
+    else {
+      val ps = (1 until numBuckets).map(_.toDouble / numBuckets)
+      val row = in.agg(percentile_approx(col("__v"),
+        array(ps.map(lit): _*), lit(10000)).as("bs")).head()
+      val bs: Seq[Any] =
+        if (row.isNullAt(0)) Nil else row.getSeq[Any](0).distinct
+      if (bs.isEmpty) lit(0)
+      else bs.tail.zipWithIndex.foldLeft(
+        when(col("__v") < lit(bs.head), lit(0))) {
+          case (acc, (b, i)) => acc.when(col("__v") < lit(b), lit(i + 1))
+        }.otherwise(lit(bs.length))
+    }
+
   /** EXACT corpus percent-rank of a score column — the normalization
     * step behind percentile-phrased quality rules (CCNet buckets by
     * perplexity percentile; "keep the top 30%" thresholds are
@@ -624,21 +644,7 @@ object Sampling {
       s"numBuckets must be in [1, 4096], got $numBuckets")
     val in = Reuse.Local(df.select(col(idCol), col(valueCol).as("__v"))
       .filter(col("__v").isNotNull))
-    val bucket: Column =
-      if (numBuckets == 1) lit(0)
-      else {
-        val ps = (1 until numBuckets).map(_.toDouble / numBuckets)
-        val row = in.agg(percentile_approx(col("__v"),
-          array(ps.map(lit): _*), lit(10000)).as("bs")).head()
-        val bs: Seq[Any] =
-          if (row.isNullAt(0)) Nil else row.getSeq[Any](0).distinct
-        if (bs.isEmpty) lit(0)
-        else bs.tail.zipWithIndex.foldLeft(
-          when(col("__v") < lit(bs.head), lit(0))) {
-            case (acc, (b, i)) => acc.when(col("__v") < lit(b), lit(i + 1))
-          }.otherwise(lit(bs.length))
-      }
-    val marked = in.withColumn("__bk", bucket)
+    val marked = in.withColumn("__bk", valueBucket(in, numBuckets))
     val counts = marked.groupBy(col("__bk")).agg(count(lit(1)).as("__c"))
     val wOff = Window.orderBy(col("__bk"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -679,21 +685,7 @@ object Sampling {
     val in = Reuse.Local(df.select(col(idCol), col(groupCol).as("__grp"),
         col(valueCol).as("__v"))
       .filter(col("__v").isNotNull))
-    val bucket: Column =
-      if (numBuckets == 1) lit(0)
-      else {
-        val ps = (1 until numBuckets).map(_.toDouble / numBuckets)
-        val row = in.agg(percentile_approx(col("__v"),
-          array(ps.map(lit): _*), lit(10000)).as("bs")).head()
-        val bs: Seq[Any] =
-          if (row.isNullAt(0)) Nil else row.getSeq[Any](0).distinct
-        if (bs.isEmpty) lit(0)
-        else bs.tail.zipWithIndex.foldLeft(
-          when(col("__v") < lit(bs.head), lit(0))) {
-            case (acc, (b, i)) => acc.when(col("__v") < lit(b), lit(i + 1))
-          }.otherwise(lit(bs.length))
-      }
-    val marked = in.withColumn("__bk", bucket)
+    val marked = in.withColumn("__bk", valueBucket(in, numBuckets))
     val counts = marked.groupBy(col("__grp"), col("__bk"))
       .agg(count(lit(1)).as("__c"))
     val wOff = Window.partitionBy(col("__grp")).orderBy(col("__bk"))

@@ -75,6 +75,19 @@ class BuiltinsSpec extends AnyFunSuite {
     }
   }
 
+  test("to_number: exosql's permissive one-argument parse, Spark's two-argument format") {
+    Builtins.registerAll(spark)
+    val r = spark.sql(
+      """SELECT to_number('3.5') AS a, to_number('nope') AS b,
+                to_number('78.12', '99.99') AS c""")
+    assert(r.schema("a").dataType == org.apache.spark.sql.types.DoubleType)
+    assert(r.schema("c").dataType == org.apache.spark.sql.types.DecimalType(4, 2))
+    val row = r.head()
+    assert(row.getDouble(0) == 3.5)
+    assert(row.isNullAt(1))
+    assert(row.getDecimal(2) == new java.math.BigDecimal("78.12"))
+  }
+
   test("strftime unknown verbs pass through literally; %% escapes") {
     Builtins.registerAll(spark)
     val r = spark.sql(

@@ -358,6 +358,50 @@ class EngineSpec extends AnyFunSuite {
     assert(out2.contains("PARTITION BY k"))
   }
 
+  test("a literal that grows when upper-cased does not hide DISTINCT ON's FROM") {
+    // 'ß' upper-cases to "SS": keyword offsets taken from an upper-cased
+    // copy of the statement drift past the real FROM
+    Tables.registerAll(spark, TestSpark.sf)
+    val sql = """SELECT DISTINCT ON (c_nationkey) c_nationkey, 'straße' AS x
+                 FROM customer ORDER BY c_nationkey"""
+    val out = Dialect.rewrite(sql)
+    assert(out.contains("PARTITION BY c_nationkey ORDER BY c_nationkey"), out)
+    val rows = engine.query(sql).collect()
+    assert(rows.length == 25 && rows.forall(_.getString(1) == "straße"))
+  }
+
+  test("a literal that grows when upper-cased does not hide QUALIFY") {
+    Tables.registerAll(spark, TestSpark.sf)
+    val sql = """SELECT c_nationkey, 'straße' AS x,
+                   row_number() OVER (PARTITION BY c_nationkey ORDER BY c_custkey) AS rn
+                 FROM customer QUALIFY rn = 1"""
+    assert(Dialect.rewrite(sql).contains("(rn = 1) AS __graft_q"))
+    assert(engine.query(sql).count() == 25)
+  }
+
+  test("lower-case keywords are matched under any default locale") {
+    // tr-TR upper-cases 'i' to 'İ', so "distinct" never equalled DISTINCT
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+    try {
+      val d = Dialect.rewrite("select distinct on (k) k, v from t order by k limit 3")
+      assert(d.contains("PARTITION BY k ORDER BY k") && d.endsWith("ORDER BY k limit 3"), d)
+      val q = Dialect.rewrite(
+        "select k, row_number() over (order by v) as rn from t qualify rn = 1 order by k")
+      assert(q.contains("(rn = 1) AS __graft_q") && q.endsWith("WHERE __graft_q order by k"), q)
+    } finally java.util.Locale.setDefault(saved)
+  }
+
+  test("a comment may sit between DISTINCT and ON") {
+    for (sql <- Seq(
+      "SELECT DISTINCT /* c */ ON (k) k, v FROM t ORDER BY k",
+      "SELECT DISTINCT -- c\nON (k) k, v FROM t ORDER BY k")) {
+      val out = Dialect.rewriteDistinctOn(sql)
+      assert(out.startsWith("SELECT k, v FROM (") &&
+        out.contains("PARTITION BY k ORDER BY k"), out)
+    }
+  }
+
   test("prepare once, run with different vars") {
     Tables.registerAll(spark, TestSpark.sf)
     val p = engine.prepare("SELECT count(*) AS n FROM orders WHERE o_orderstatus = $st")

@@ -40,10 +40,37 @@ class PropertySpec extends AnyFunSuite {
       Gen.const("/* block (( */"),
       Gen.const("(nested(parens))"),
       Gen.const("distinct_on_col"),
-      Gen.const("qualify_rate"))
+      Gen.const("qualify_rate"),
+      // literals whose upper-case form is longer ('ß' -> "SS") or
+      // locale-sensitive, and mixed-case keywords
+      Gen.const("'straße'"),
+      Gen.const("'İ'"),
+      Gen.oneOf("fRoM", "Order bY", "LiMiT", "wHeRe", "Union", "Select"))
     val gen = Gen.listOfN(6, frag).map(fs => "SELECT " + fs.mkString(" "))
     check(Prop.forAll(gen) { (sql: String) =>
       graft.engine.Dialect.rewrite(sql) == sql
+    })
+  }
+
+  test("dialect rewrite gives the same output under every default locale") {
+    // tr-TR upper-cases 'i' to 'İ': keyword matching must not notice
+    def outcome(sql: String, locale: java.util.Locale): String = {
+      val saved = java.util.Locale.getDefault
+      java.util.Locale.setDefault(locale)
+      try graft.engine.Dialect.rewrite(sql)
+      catch { case e: IllegalArgumentException => "refused: " + e.getMessage }
+      finally java.util.Locale.setDefault(saved)
+    }
+    val gen = for {
+      head <- Gen.oneOf("select distinct on (k) k, v", "Select Distinct On (k) k",
+        "select k, row_number() over (order by v) as rn", "select k, $lim")
+      mid <- Gen.listOfN(2, Gen.oneOf("'straße'", "'İ'", "/* qualify */", "_i", "$min_i"))
+      tail <- Gen.oneOf("from t", "from t qualify rn = 1", "from t order by k limit 3",
+        "from t where x = 'ı' qualify rn = 1 order by k", "from t union all select k from u")
+    } yield s"$head, ${mid.mkString(", ")} $tail"
+    val tr = java.util.Locale.forLanguageTag("tr-TR")
+    check(Prop.forAll(gen) { (sql: String) =>
+      outcome(sql, tr) == outcome(sql, java.util.Locale.ROOT)
     })
   }
 

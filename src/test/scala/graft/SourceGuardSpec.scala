@@ -5,9 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source guards for the one lineage-truncation rule in
   * [[graft.operators.Reuse]] (only Reuse.scala and Graph.scala
   * checkpoint or set the checkpoint dir, and the per-call options the
-  * rule replaced do not come back) and for the one SQL-function
-  * declaration in [[graft.engine.SqlFunction]]. Whole-line comments are
-  * skipped. */
+  * rule replaced do not come back), for the one SQL-function
+  * declaration in [[graft.engine.SqlFunction]], and for locale-free case
+  * mapping in the SQL front end. Whole-line comments are skipped. */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = new java.io.File("src/main/scala")
 
@@ -54,5 +54,14 @@ class SourceGuardSpec extends AnyFunSuite {
     val restated = hits("""val f = """")
     assert(restated.isEmpty,
       "a function's name belongs in its signature only:\n" + restated.mkString("\n"))
+  }
+
+  test("the SQL front end maps case only with an explicit Locale") {
+    // under a tr-TR default locale "distinct".toUpperCase is "DİSTİNCT"
+    val found = hits("""\.to(Upper|Lower)Case\b(?!\s*\(\s*(java\.util\.)?Locale\.)""")
+      .filter(_.contains("/graft/engine/"))
+    assert(found.isEmpty,
+      "name a Locale (Locale.ROOT) or compare with equalsIgnoreCase:\n" +
+        found.mkString("\n"))
   }
 }
