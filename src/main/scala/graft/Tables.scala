@@ -17,22 +17,24 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
-      // The driver has generated events.ts two ways across rounds:
-      // TIMESTAMP(NANOS) (which Spark's reader rejects — read nanos as
-      // long, floor to micros) and plain µs TIMESTAMP (read as NTZ under
-      // inferTimestampNTZ). Branch on the read type and normalize both to
-      // a session-UTC TimestampType column, so downstream queries and the
-      // DuckDB oracle see identical µs wall-clock values either way.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
-      import org.apache.spark.sql.functions.{col, expr}
-      raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-        case _ =>
-          raw.withColumn("ts", col("ts").cast("timestamp"))
-      }
+      val (raw, ts) = eventsRaw(spark, dir)
+      raw.withColumn("ts", org.apache.spark.sql.functions.expr(ts))
     } else spark.read.parquet(s"$dir/$name.parquet")
+
+  /** `events.parquet` as read, with the SQL expression that turns its
+    * `ts` into a session-UTC TimestampType column. The test data has
+    * carried events.ts two ways across generations: TIMESTAMP(NANOS) (which
+    * Spark's reader rejects — read nanos as long, floor to micros) and
+    * plain µs TIMESTAMP (read as NTZ under inferTimestampNTZ). The read
+    * type picks the conversion, so [[load]] and
+    * [[graft.engine.Catalog.registerParquetDb]]'s view, and the DuckDB
+    * oracle, see identical µs wall-clock values either way. */
+  def eventsRaw(spark: SparkSession, dir: String): (DataFrame, String) = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val raw = spark.read.parquet(s"$dir/events.parquet")
+    (raw, if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+      "timestamp_micros(ts div 1000)" else "CAST(ts AS TIMESTAMP)")
+  }
 
   /** Last dir registered per session — registerAll is called from every
     * SQL-surface query builder, and each call re-reads ten parquet

@@ -95,22 +95,16 @@ object Engine {
   * spans "databases" exactly like exosql's cross-extractor queries. */
 object Catalog {
   /** Register every parquet table in `dir` under namespace `db`.
-    * `events` gets a conversion view (its parquet carries nano
-    * timestamps, which Spark reads as long only — see Tables.load). */
+    * `events` gets a conversion view whose `ts` conversion comes from
+    * [[graft.Tables.eventsRaw]]. */
   def registerParquetDb(spark: SparkSession, db: String, dir: String,
                         tables: Seq[String] = graft.Tables.all): Unit = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
     tables.foreach {
       case "events" =>
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        val (_, tsExpr) = graft.Tables.eventsRaw(spark, dir)
         spark.sql(s"""CREATE TABLE IF NOT EXISTS $db._events_raw
                       USING parquet LOCATION '$dir/events.parquet'""")
-        // ts is nanos-as-long in some testdata generations and plain µs
-        // TIMESTAMP in others (see Tables.load) — branch on the read type
-        val tsExpr =
-          if (spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType ==
-              org.apache.spark.sql.types.LongType) "timestamp_micros(ts div 1000)"
-          else "CAST(ts AS TIMESTAMP)"
         spark.sql(s"""CREATE VIEW IF NOT EXISTS $db.events AS
                       SELECT event_id, $tsExpr AS ts,
                              user_id, event_type, value, props

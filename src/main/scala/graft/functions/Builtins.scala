@@ -145,11 +145,19 @@ object Builtins {
   def urlparse(url: Column): Column = col(UrlParseMap(expression(url)))
   /** exosql `urlparse(url, part)` — single component (scheme/host/port/
     * path/query/fragment/user, or `query.<param>`). */
-  def urlparse(url: Column, part: String): Column = part match {
-    case p if p.startsWith("query.") => parse_url(url, lit("QUERY"), lit(p.drop(6)))
-    case "scheme" => parse_url(url, lit("PROTOCOL"))
-    case "user" => parse_url(url, lit("USERINFO"))
-    case other => parse_url(url, lit(other.toUpperCase))
+  def urlparse(url: Column, part: String): Column = urlPartArgs(part) match {
+    case Seq(p, key) => parse_url(url, lit(p), lit(key))
+    case Seq(p) => parse_url(url, lit(p))
+  }
+
+  /** `urlparse`'s part name as Spark `parse_url` arguments: the part,
+    * plus the key of a `query.<param>` part. Names are upper-cased under
+    * `Locale.ROOT`, so `'file'` means FILE under every default locale. */
+  private def urlPartArgs(part: String): Seq[String] = part match {
+    case q if q.startsWith("query.") => Seq("QUERY", q.drop(6))
+    case "scheme" => Seq("PROTOCOL")
+    case "user" => Seq("USERINFO")
+    case other => Seq(other.toUpperCase(java.util.Locale.ROOT))
   }
 
   // ── numbers / misc ────────────────────────────────────────────────────
@@ -207,13 +215,7 @@ object Builtins {
     scalarFunction(spark, "urlparse(url[, part])") { a =>
       val u = a(0)
       if (!a.has(1)) UrlParseMap(u)
-      else lit2str(a(1)) match {
-        case q if q.startsWith("query.") =>
-          ParseUrl(Seq(u, Literal("QUERY"), Literal(q.drop(6))))
-        case "scheme" => ParseUrl(Seq(u, Literal("PROTOCOL")))
-        case "user" => ParseUrl(Seq(u, Literal("USERINFO")))
-        case other => ParseUrl(Seq(u, Literal(other.toUpperCase)))
-      }
+      else ParseUrl(u +: urlPartArgs(lit2str(a(1))).map(Literal(_)))
     }
     // the exosql one-argument form; Spark's own builtin owns the
     // two-argument `to_number(expr, fmt)`, so that form is handed back to it

@@ -179,7 +179,7 @@ case class UrlParseMap(child: Expression)
   * in a scan/join/agg hot path. */
 case class UnicodeNormalize(child: Expression, form: String)
     extends UnaryExpression with CodegenFallback {
-  @transient private lazy val f = java.text.Normalizer.Form.valueOf(form.toUpperCase)
+  @transient private lazy val f = java.text.Normalizer.Form.valueOf(form.toUpperCase(java.util.Locale.ROOT))
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
 

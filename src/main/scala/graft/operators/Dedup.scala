@@ -44,7 +44,7 @@ object Dedup {
     * interpreted HOF evaluation would otherwise re-run the regex split
     * per reference. */
   def shingles(text: Column, n: Int = 3): Column =
-    shinglesOfTokens(split(text, "[\\t\\n\\x0B\\f\\r ]+"), n)
+    shinglesOfTokens(TextAnalysis.tokens(text), n)
 
   /** Shingles from an already-materialized token-array column. */
   def shinglesOfTokens(toks: Column, n: Int = 3): Column =
@@ -70,7 +70,7 @@ object Dedup {
                      n: Int = 3): DataFrame = {
     require(n >= 1, s"shingle size must be >= 1, got $n")
     val exploded = df.select(col(idCol),
-      posexplode(split(col(textCol), "[\\t\\n\\x0B\\f\\r ]+")).as(Seq("__pos", "__tok")))
+      posexplode(TextAnalysis.tokens(col(textCol))).as(Seq("__pos", "__tok")))
     if (n == 1)
       exploded.select(col(idCol), col("__pos").as("pos"), col("__tok").as("s"))
     else {
@@ -98,17 +98,6 @@ object Dedup {
         (h * (i * 2 + 1) + i * 101 + 17) % p)))
   }
 
-  /** doc_id → exploded (band_idx, band_val) rows for LSH banding. */
-  def bands(df: DataFrame, idCol: String, sigCol: String,
-            nBands: Int = 4, rowsPerBand: Int = 4): DataFrame = {
-    val bandStructs = transform(sequence(lit(0), lit(nBands - 1)), b =>
-      struct(b.as("band_idx"),
-        concat_ws("_", (1 to rowsPerBand).map(r =>
-          element_at(col(sigCol), b * rowsPerBand + r)): _*).as("band_val")))
-    df.select(col(idCol), explode(bandStructs).as("band"))
-      .select(col(idCol), col("band.band_idx"), col("band.band_val"))
-  }
-
   /** Hot-bucket guard for banded self-joins: count rows per bucket key
     * and drop buckets larger than `cap` BEFORE the join. This is the
     * standard production-LSH bound on within-bucket pair fanout — a
@@ -131,6 +120,36 @@ object Dedup {
         .select(keys.map(col): _*)
       banded.join(keep, keys)
     case None => banded
+  }
+
+  /** The (band_idx, band_val) bucket key of every banded join. */
+  private[graft] val BandKey: Seq[String] = Seq("band_idx", "band_val")
+
+  /** The banded candidate rows: one row per (`keep` columns, band_idx,
+    * band_val), where band `b`'s value is `bandVals(b)`. The caller
+    * computes the band values from its own sketch (simhash and dHash
+    * bit ranges, `_`-joined minhash minima); this only explodes them. */
+  private[graft] def bandRows(df: DataFrame, keep: Seq[String],
+                              bandVals: Seq[Column]): DataFrame = {
+    val bandStructs = array(bandVals.zipWithIndex.map { case (v, b) =>
+      struct(lit(b).as("band_idx"), v.as("band_val")) }: _*)
+    df.select(keep.map(col) :+ explode(bandStructs).as("band"): _*)
+      .select(keep.map(col) ++ Seq(col("band.band_idx"), col("band.band_val")): _*)
+  }
+
+  /** The banded candidate self-join every near-duplicate operator runs:
+    * cap hot buckets ([[capBuckets]]), then equi-join `banded` with
+    * itself on `keys` with `x.idCol < y.idCol`, so each unordered pair
+    * meets once per shared bucket. Returns the join with its sides
+    * aliased `x` and `y`; the caller selects, confirms and collapses
+    * multi-bucket hits. The exchange carries only the columns the
+    * caller kept in `banded`. */
+  private[graft] def bucketPairs(banded: DataFrame, idCol: String,
+                                 keys: Seq[String], cap: Option[Int]): DataFrame = {
+    val b = capBuckets(banded, keys, cap)
+    b.as("x").join(b.as("y"),
+      keys.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _) &&
+        col(s"x.$idCol") < col(s"y.$idCol"))
   }
 
   /** Exact dedup: keep the lowest id per fingerprint. Shuffles only
@@ -181,16 +200,13 @@ object Dedup {
       collect_set(col("h")).as("hset"), sigAggs: _*))
   }
 
-  /** Exploded (id, band_idx, band_val) rows of a [[minhashSets]] frame. */
+  /** (id, band_idx, band_val) rows of a [[minhashSets]] frame: band b's
+    * value is its k/nBands minima joined with `_`. */
   private def bandsOf(sets: DataFrame, idCol: String,
                       k: Int, nBands: Int): DataFrame = {
     val rowsPerBand = k / nBands
-    val bandStructs = array((0 until nBands).map(b =>
-      struct(lit(b).as("band_idx"),
-        concat_ws("_", (0 until rowsPerBand).map(r => col(s"s${b * rowsPerBand + r}")): _*)
-          .as("band_val"))): _*)
-    sets.select(col(idCol), explode(bandStructs).as("band"))
-      .select(col(idCol), col("band.band_idx"), col("band.band_val"))
+    bandRows(sets, Seq(idCol), (0 until nBands).map(b =>
+      concat_ws("_", (0 until rowsPerBand).map(r => col(s"s${b * rowsPerBand + r}")): _*)))
   }
 
   /** Jaccard of two hashed-shingle-set columns. */
@@ -201,12 +217,8 @@ object Dedup {
                    k: Int = 16, nBands: Int = 4, threshold: Double = 0.5,
                    maxBucketSize: Option[Int] = None): DataFrame = {
     val sets = minhashSets(df, idCol, textCol, k)
-    val bands = capBuckets(bandsOf(sets, idCol, k, nBands),
-      Seq("band_idx", "band_val"), maxBucketSize)
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-          col("x.band_val") === col("y.band_val") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
+    val cand = bucketPairs(bandsOf(sets, idCol, k, nBands), idCol, BandKey,
+        maxBucketSize)
       .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
       .distinct()
     val keyed = sets.select(col(idCol), col("hset"))
@@ -240,8 +252,7 @@ object Dedup {
                    maxBucketSize: Option[Int] = None): MinhashIndex = {
     val sets = minhashSets(corpus, idCol, textCol, k)
     MinhashIndex(
-      capBuckets(bandsOf(sets, idCol, k, nBands),
-        Seq("band_idx", "band_val"), maxBucketSize),
+      capBuckets(bandsOf(sets, idCol, k, nBands), BandKey, maxBucketSize),
       sets)
   }
 
@@ -614,17 +625,9 @@ object Dedup {
       org.apache.spark.sql.GraftBridge.column(graft.functions.SimHashN(
         org.apache.spark.sql.GraftBridge.expression(TextAnalysis.tokens(col(textCol))),
         hashBits)).as("sh")))
-    val bandStructs = array((0 until nBands).map(b =>
-      struct(lit(b).as("band_idx"),
-        shiftright(col("sh"), b * bandBits).bitwiseAND(lit(mask)).as("band_val"))): _*)
-    val banded = capBuckets(
-      sh.select(col(idCol), col("sh"), explode(bandStructs).as("band"))
-        .select(col(idCol), col("sh"), col("band.band_idx"), col("band.band_val")),
-      Seq("band_idx", "band_val"), maxBucketSize)
-    banded.as("x").join(banded.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-          col("x.band_val") === col("y.band_val") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
+    val banded = bandRows(sh, Seq(idCol, "sh"), (0 until nBands).map(b =>
+      shiftright(col("sh"), b * bandBits).bitwiseAND(lit(mask))))
+    bucketPairs(banded, idCol, BandKey, maxBucketSize)
       .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"),
         bit_count(col("x.sh").bitwiseXOR(col("y.sh"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
@@ -660,22 +663,14 @@ object Dedup {
     val mask = (1L << bandBits) - 1
     val sh = Reuse.Local(df.select(col(idCol),
       simhashWide(TextAnalysis.tokens(col(textCol)), words).as("sh"))) // one corpus pass — see simhashPairs
-    val bandStructs = array((for (w <- 0 until words; b <- 0 until bandsPerWord)
-      yield struct(lit(w * bandsPerWord + b).as("band_idx"),
-        shiftright(element_at(col("sh"), w + 1), b * bandBits)
-          .bitwiseAND(lit(mask)).as("band_val"))): _*)
-    val banded = capBuckets(
-      sh.select(col(idCol), col("sh"), explode(bandStructs).as("band"))
-        .select(col(idCol), col("sh"), col("band.band_idx"), col("band.band_val")),
-      Seq("band_idx", "band_val"), maxBucketSize)
+    val banded = bandRows(sh, Seq(idCol, "sh"),
+      for (w <- 0 until words; b <- 0 until bandsPerWord)
+        yield shiftright(element_at(col("sh"), w + 1), b * bandBits).bitwiseAND(lit(mask)))
     val hamming = (0 until words).map(w =>
       bit_count(element_at(col("x.sh"), w + 1)
         .bitwiseXOR(element_at(col("y.sh"), w + 1))))
       .reduce(_ + _)
-    banded.as("x").join(banded.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-          col("x.band_val") === col("y.band_val") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
+    bucketPairs(banded, idCol, BandKey, maxBucketSize)
       .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"),
         hamming.as("hamming"))
       .filter(col("hamming") <= maxHamming)

@@ -184,52 +184,55 @@ object Multimodal {
                     payloadCol: String = "payload",
                     maxHamming: Int = 3, nBands: Int = 4,
                     maxBucketSize: Option[Int] = None): DataFrame = {
+    requireBands(maxHamming, nBands)
+    bandedSelfPairs(dHash(media, idCol, payloadCol), idCol, maxHamming,
+      nBands, maxBucketSize)
+  }
+
+  /** The band-parameter check of every banded media operator. */
+  private def requireBands(maxHamming: Int, nBands: Int): Unit = {
     require(nBands >= 1 && 64 % nBands == 0,
       s"nBands must divide 64, got $nBands")
     require(maxHamming >= 0 && maxHamming < nBands,
       s"banded recall is exact only for maxHamming < nBands " +
         s"(got maxHamming=$maxHamming, nBands=$nBands) — raise nBands")
-    val dh = dHash(media, idCol, payloadCol)
-    bandedSelfPairs(dh, idCol, maxHamming, nBands, maxBucketSize)
   }
 
-  /** The banded hash self-join shared by [[imageNearDups]] and
-    * [[audioNearDups]] — input is any (idCol, dhash: long) frame. */
-  private def bandedSelfPairs(dh: DataFrame, idCol: String,
+  /** The banded hash self-join of the media family through
+    * [[Dedup.bucketPairs]], over a frame of (idCol, `keys`, `hash`:
+    * long) — (idCol, dhash) for images and audio, (idCol, frame_idx,
+    * fhash) for [[videoFrames]] tables, whose candidates must also share
+    * the frame index. Output: (id_a, id_b, `keys`, hamming), one row per
+    * pair and key within `maxHamming`. */
+  private def bandedSelfPairs(df: DataFrame, idCol: String,
                               maxHamming: Int, nBands: Int,
-                              maxBucketSize: Option[Int]): DataFrame = {
-    val banded = Dedup.capBuckets(bandRowsOf(dh, idCol, nBands),
-      Seq("band_idx", "band_val"), maxBucketSize)
-    banded.as("x").join(banded.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-          col("x.band_val") === col("y.band_val") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"),
-        bit_count(col("x.dhash").bitwiseXOR(col("y.dhash"))).as("hamming"))
-      .distinct()
+                              maxBucketSize: Option[Int],
+                              hash: String = "dhash",
+                              keys: Seq[String] = Nil): DataFrame =
+    Dedup.bucketPairs(bandRowsOf(df, idCol, nBands, hash, keys), idCol,
+        keys ++ Dedup.BandKey, maxBucketSize)
+      .select(Seq(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b")) ++
+        keys.map(k => col(s"x.$k").as(k)) :+
+        bit_count(col(s"x.$hash").bitwiseXOR(col(s"y.$hash"))).as("hamming"): _*)
+      .distinct() // one row per pair (and key) — multi-band hits collapse
       .filter(col("hamming") <= maxHamming)
-  }
 
-  /** One row per (id, band) over a (idCol, dhash) frame — the banded
-    * join side shared by [[imageNearDups]] and [[imageNearDupsBetween]]
-    * (pure projection: band values are bit ranges of the hash). */
-  private[graft] def bandRowsOf(dh: DataFrame, idCol: String,
-                                nBands: Int): DataFrame = {
+  /** One row per (id, `keys`, `hash`, band) over an (idCol, `keys`,
+    * `hash`) frame — the banded join side of every media operator (pure
+    * projection: band values are bit ranges of the hash). */
+  private[graft] def bandRowsOf(dh: DataFrame, idCol: String, nBands: Int,
+                                hash: String = "dhash",
+                                keys: Seq[String] = Nil): DataFrame = {
     val w = 64 / nBands
-    dh.select(col(idCol), col("dhash"),
-      explode(array((0 until nBands).map { b =>
-        struct(lit(b).as("band_idx"),
-          // mask, never `%`: a sign-following mod on the unshifted band 0
-          // (dhash with bit 63 set is negative) would emit a band value
-          // no other hash sharing the low bits can match, silently
-          // breaking the pigeonhole exact-recall contract
-          (if (w == 64) col("dhash")
-           else shiftrightunsigned(col("dhash"), w * b)
-             .bitwiseAND(lit((1L << w) - 1)))
-            .as("band_val"))
-      }: _*)).as("band"))
-      .select(col(idCol), col("dhash"),
-        col("band.band_idx").as("band_idx"), col("band.band_val").as("band_val"))
+    Dedup.bandRows(dh, (idCol +: keys) :+ hash,
+      (0 until nBands).map { b =>
+        // mask, never `%`: a sign-following mod on the unshifted band 0
+        // (a hash with bit 63 set is negative) would emit a band value
+        // no other hash sharing the low bits can match, silently
+        // breaking the pigeonhole exact-recall contract
+        if (w == 64) col(hash)
+        else shiftrightunsigned(col(hash), w * b).bitwiseAND(lit((1L << w) - 1))
+      })
   }
 
   /** Incremental perceptual admission — [[imageNearDups]]'s
@@ -254,39 +257,41 @@ object Multimodal {
                            payloadCol: String = "payload",
                            maxHamming: Int = 3, nBands: Int = 4,
                            maxBucketSize: Option[Int] = None): DataFrame = {
-    require(nBands >= 1 && 64 % nBands == 0,
-      s"nBands must divide 64, got $nBands")
-    require(maxHamming >= 0 && maxHamming < nBands,
-      s"banded recall is exact only for maxHamming < nBands " +
-        s"(got maxHamming=$maxHamming, nBands=$nBands) — raise nBands")
+    requireBands(maxHamming, nBands)
     require(corpusHashes.columns.contains("dhash") &&
         corpusHashes.columns.contains(idCol),
       s"stored hash frame must carry ($idCol, dhash) — store dHash's output")
     bandedProbePairs(dHash(newMedia, idCol, payloadCol), corpusHashes,
-      idCol, maxHamming, nBands, maxBucketSize)
+        idCol, nBands, maxBucketSize)
+      .filter(col("hamming") <= maxHamming)
   }
 
-  /** The stored-frame probe join shared by [[imageNearDupsBetween]] and
-    * [[audioNearDupsBetween]] — both sides (idCol, dhash: long). */
+  /** The stored-frame probe join of the media family: new rows band
+    * through [[bandRowsOf]] and equi-join the capped corpus bands on
+    * (`keys`, band) — both sides (idCol, `keys`, `hash`), laid out as in
+    * [[bandedSelfPairs]]. Output: (id_new, id_corpus, `keys`, hamming)
+    * for every shared bucket, unconfirmed. */
   private def bandedProbePairs(newDh: DataFrame, corpusHashes: DataFrame,
-                               idCol: String, maxHamming: Int, nBands: Int,
-                               maxBucketSize: Option[Int]): DataFrame = {
-    val newB = bandRowsOf(newDh, idCol, nBands)
-      .select(col(idCol).as("id_new"), col("dhash").as("__hn"),
-        col("band_idx"), col("band_val"))
+                               idCol: String, nBands: Int,
+                               maxBucketSize: Option[Int],
+                               hash: String = "dhash",
+                               keys: Seq[String] = Nil): DataFrame = {
+    val newB = bandRowsOf(newDh, idCol, nBands, hash, keys)
+      .select(Seq(col(idCol).as("id_new")) ++ keys.map(col) ++
+        Seq(col(hash).as("__hn"), col("band_idx"), col("band_val")): _*)
     // cap the CORPUS side's hot buckets (the minhashPairsBetween
     // contract: a boilerplate bucket in the old corpus is exactly what
     // a degenerate new shard collides with; the new side is shard-sized)
     val corB = Dedup.capBuckets(
-        bandRowsOf(corpusHashes.select(col(idCol),
-          col("dhash").cast("long").as("dhash")), idCol, nBands),
-        Seq("band_idx", "band_val"), maxBucketSize)
-      .select(col(idCol).as("id_corpus"), col("dhash").as("__hc"),
-        col("band_idx"), col("band_val"))
-    newB.join(corB, Seq("band_idx", "band_val"))
-      .select(col("id_new"), col("id_corpus"),
-        bit_count(col("__hn").bitwiseXOR(col("__hc"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+        bandRowsOf(corpusHashes.select(Seq(col(idCol)) ++
+          keys.map(k => col(k).cast("int").as(k)) :+
+          col(hash).cast("long").as(hash): _*), idCol, nBands, hash, keys),
+        keys ++ Dedup.BandKey, maxBucketSize)
+      .select(Seq(col(idCol).as("id_corpus")) ++ keys.map(col) ++
+        Seq(col(hash).as("__hc"), col("band_idx"), col("band_val")): _*)
+    newB.join(corB, keys ++ Dedup.BandKey)
+      .select(Seq(col("id_new"), col("id_corpus")) ++ keys.map(col) :+
+        bit_count(col("__hn").bitwiseXOR(col("__hc"))).as("hamming"): _*)
   }
 
   /** 64-bit AUDIO fingerprint over the media column — the remaining
@@ -312,11 +317,7 @@ object Multimodal {
                     payloadCol: String = "payload",
                     maxHamming: Int = 3, nBands: Int = 4,
                     maxBucketSize: Option[Int] = None): DataFrame = {
-    require(nBands >= 1 && 64 % nBands == 0,
-      s"nBands must divide 64, got $nBands")
-    require(maxHamming >= 0 && maxHamming < nBands,
-      s"banded recall is exact only for maxHamming < nBands " +
-        s"(got maxHamming=$maxHamming, nBands=$nBands) — raise nBands")
+    requireBands(maxHamming, nBands)
     bandedSelfPairs(
       audioFp(media, idCol, payloadCol).withColumnRenamed("afp", "dhash"),
       idCol, maxHamming, nBands, maxBucketSize)
@@ -334,19 +335,16 @@ object Multimodal {
                            payloadCol: String = "payload",
                            maxHamming: Int = 3, nBands: Int = 4,
                            maxBucketSize: Option[Int] = None): DataFrame = {
-    require(nBands >= 1 && 64 % nBands == 0,
-      s"nBands must divide 64, got $nBands")
-    require(maxHamming >= 0 && maxHamming < nBands,
-      s"banded recall is exact only for maxHamming < nBands " +
-        s"(got maxHamming=$maxHamming, nBands=$nBands) — raise nBands")
+    requireBands(maxHamming, nBands)
     require(corpusFps.columns.contains("afp") &&
         corpusFps.columns.contains(idCol),
       s"stored fingerprint frame must carry ($idCol, afp) — store " +
         "audioFp's output")
     bandedProbePairs(
-      audioFp(newMedia, idCol, payloadCol).withColumnRenamed("afp", "dhash"),
-      corpusFps.withColumnRenamed("afp", "dhash"), idCol,
-      maxHamming, nBands, maxBucketSize)
+        audioFp(newMedia, idCol, payloadCol).withColumnRenamed("afp", "dhash"),
+        corpusFps.withColumnRenamed("afp", "dhash"), idCol, nBands,
+        maxBucketSize)
+      .filter(col("hamming") <= maxHamming)
   }
 
   /** Frame-sampled per-frame perceptual hashes — the VIDEO modality
@@ -391,28 +389,6 @@ object Multimodal {
         col("fr.fhash").as("fhash"))
   }
 
-  /** One row per (id, frame, band) over a (idCol, frame_idx, fhash)
-    * frame table — [[bandRowsOf]] with the TEMPORAL key carried: video
-    * candidates must match band values AT THE SAME frame index, so the
-    * join key is (frame_idx, band_idx, band_val) and a boilerplate
-    * band value in frame 0 never pairs against frame 3. */
-  private def frameBandRows(vf: DataFrame, idCol: String,
-                            nBands: Int): DataFrame = {
-    val w = 64 / nBands
-    vf.select(col(idCol), col("frame_idx"), col("fhash"),
-      explode(array((0 until nBands).map { b =>
-        struct(lit(b).as("band_idx"),
-          // mask, never `%` — the bandRowsOf sign contract
-          (if (w == 64) col("fhash")
-           else shiftrightunsigned(col("fhash"), w * b)
-             .bitwiseAND(lit((1L << w) - 1)))
-            .as("band_val"))
-      }: _*)).as("band"))
-      .select(col(idCol), col("frame_idx"), col("fhash"),
-        col("band.band_idx").as("band_idx"),
-        col("band.band_val").as("band_val"))
-  }
-
   /** Video near-duplicate pairs — the image/audio banding discipline
     * with a TEMPORAL match count: two videos pair when at least
     * `minFrames` of their sampled frames agree frame-for-frame within
@@ -433,27 +409,11 @@ object Multimodal {
                     maxHamming: Int = 3, nBands: Int = 4,
                     minFrames: Int = 3,
                     maxBucketSize: Option[Int] = None): DataFrame = {
-    require(nBands >= 1 && 64 % nBands == 0,
-      s"nBands must divide 64, got $nBands")
-    require(maxHamming >= 0 && maxHamming < nBands,
-      s"banded recall is exact only for maxHamming < nBands " +
-        s"(got maxHamming=$maxHamming, nBands=$nBands) — raise nBands")
+    requireBands(maxHamming, nBands)
     require(minFrames >= 1 && minFrames <= nFrames,
       s"minFrames must be in [1, $nFrames], got $minFrames")
-    val banded = Dedup.capBuckets(
-      frameBandRows(videoFrames(media, idCol, payloadCol, nFrames),
-        idCol, nBands),
-      Seq("frame_idx", "band_idx", "band_val"), maxBucketSize)
-    banded.as("x").join(banded.as("y"),
-        col("x.frame_idx") === col("y.frame_idx") &&
-          col("x.band_idx") === col("y.band_idx") &&
-          col("x.band_val") === col("y.band_val") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"),
-        col("x.frame_idx").as("frame_idx"),
-        bit_count(col("x.fhash").bitwiseXOR(col("y.fhash"))).as("hamming"))
-      .distinct() // one row per (pair, frame) — multi-band hits collapse
-      .filter(col("hamming") <= maxHamming)
+    bandedSelfPairs(videoFrames(media, idCol, payloadCol, nFrames), idCol,
+        maxHamming, nBands, maxBucketSize, "fhash", Seq("frame_idx"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_frames_matched"))
       .filter(col("n_frames_matched") >= minFrames)
@@ -475,31 +435,15 @@ object Multimodal {
                            maxHamming: Int = 3, nBands: Int = 4,
                            minFrames: Int = 3,
                            maxBucketSize: Option[Int] = None): DataFrame = {
-    require(nBands >= 1 && 64 % nBands == 0,
-      s"nBands must divide 64, got $nBands")
-    require(maxHamming >= 0 && maxHamming < nBands,
-      s"banded recall is exact only for maxHamming < nBands " +
-        s"(got maxHamming=$maxHamming, nBands=$nBands) — raise nBands")
+    requireBands(maxHamming, nBands)
     require(minFrames >= 1 && minFrames <= nFrames,
       s"minFrames must be in [1, $nFrames], got $minFrames")
     require(Seq("frame_idx", "fhash", idCol)
         .forall(corpusFrames.columns.contains),
       s"stored frame table must carry ($idCol, frame_idx, fhash) — " +
         "store videoFrames' output")
-    val newB = frameBandRows(
-        videoFrames(newMedia, idCol, payloadCol, nFrames), idCol, nBands)
-      .select(col(idCol).as("id_new"), col("frame_idx"),
-        col("fhash").as("__hn"), col("band_idx"), col("band_val"))
-    val corB = Dedup.capBuckets(
-        frameBandRows(corpusFrames.select(col(idCol),
-          col("frame_idx").cast("int").as("frame_idx"),
-          col("fhash").cast("long").as("fhash")), idCol, nBands),
-        Seq("frame_idx", "band_idx", "band_val"), maxBucketSize)
-      .select(col(idCol).as("id_corpus"), col("frame_idx"),
-        col("fhash").as("__hc"), col("band_idx"), col("band_val"))
-    newB.join(corB, Seq("frame_idx", "band_idx", "band_val"))
-      .select(col("id_new"), col("id_corpus"), col("frame_idx"),
-        bit_count(col("__hn").bitwiseXOR(col("__hc"))).as("hamming"))
+    bandedProbePairs(videoFrames(newMedia, idCol, payloadCol, nFrames),
+        corpusFrames, idCol, nBands, maxBucketSize, "fhash", Seq("frame_idx"))
       .distinct() // one row per (pair, frame)
       .filter(col("hamming") <= maxHamming)
       .groupBy(col("id_new"), col("id_corpus"))

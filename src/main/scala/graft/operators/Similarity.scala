@@ -250,13 +250,9 @@ object Similarity {
     // frame: checkpoint it so the P-dot-product bucket assignment runs
     // once per row, not once per reference. The blocks carry the
     // vectors — the same payload the join shuffles anyway.
-    val b = Dedup.capBuckets(
-      Reuse.Local(emb.select(col(idCol), col(vecCol),
-        lshBucket(col(vecCol), planes).as("bucket"))),
-      Seq("bucket"), maxBucketSize)
-    b.as("x").join(b.as("y"),
-        col("x.bucket") === col("y.bucket") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
+    val bucketed = Reuse.Local(emb.select(col(idCol), col(vecCol),
+      lshBucket(col(vecCol), planes).as("bucket")))
+    Dedup.bucketPairs(bucketed, idCol, Seq("bucket"), maxBucketSize)
       .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"),
         round(cosine(col(s"x.$vecCol"), col(s"y.$vecCol")), 6).as("cos_sim"))
       .filter(col("cos_sim") >= simThreshold)
@@ -280,13 +276,9 @@ object Similarity {
                        centroids: Array[(Long, Seq[Double])],
                        simThreshold: Double,
                        maxCellSize: Option[Int] = None): DataFrame = {
-    val assigned = Dedup.capBuckets(
-      Reuse.Local(emb.select(col(idCol), col(vecCol),
-        cellOf(col(vecCol), centroids).as("cell"))),
-      Seq("cell"), maxCellSize)
-    assigned.as("x").join(assigned.as("y"),
-        col("x.cell") === col("y.cell") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
+    val assigned = Reuse.Local(emb.select(col(idCol), col(vecCol),
+      cellOf(col(vecCol), centroids).as("cell")))
+    Dedup.bucketPairs(assigned, idCol, Seq("cell"), maxCellSize)
       .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"),
         round(cosine(col(s"x.$vecCol"), col(s"y.$vecCol")), 6).as("cos_sim"))
       .filter(col("cos_sim") >= simThreshold)

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
-  /** Whitespace tokens. The class is spelled out explicitly rather
+  /** A whitespace run. The class is spelled out explicitly rather
     * than `\s` for the same reason as [[pretokPattern]]: Java's `\s`
     * includes `\x0B` (vertical tab), RE2's — and therefore the DuckDB
     * oracle's — does not; the explicit class is exactly Java's `\s`,
@@ -24,7 +24,10 @@ object TextAnalysis {
     * every input while the two engines now agree on `\x0B`. Every
     * oracle `string_split_regex`/`regexp_replace` whitespace split
     * carries the same explicit class (round-14 sweep). */
-  def tokens(text: Column): Column = split(text, "[\\t\\n\\x0B\\f\\r ]+")
+  private val whitespace = "[\\t\\n\\x0B\\f\\r ]+"
+
+  /** Whitespace tokens: `text` split on [[whitespace]] runs. */
+  def tokens(text: Column): Column = split(text, whitespace)
 
   /** BPE PRE-TOKENIZATION pattern — the Sennrich-style class split
     * every real tokenizer runs before the merge loop (GPT-2's regex is
@@ -502,7 +505,7 @@ object TextAnalysis {
     * text. Stable across engines (md5 is md5 everywhere), usable as an
     * exact-dedup key at any scale. */
   def fingerprint(text: Column): Column =
-    md5(regexp_replace(lower(text), "[\\t\\n\\x0B\\f\\r ]+", " "))
+    md5(regexp_replace(lower(text), whitespace, " "))
 
   /** Winnowing fingerprints (the MOSS selection scheme, Schleimer/
     * Wilkerson/Aiken SIGMOD'03): hash every `k`-token shingle, slide a
@@ -575,11 +578,9 @@ object TextAnalysis {
                         maxDocsPerFp: Option[Int] = Some(64)): DataFrame = {
     val minT = if (minTokens > 0) minTokens else k + w - 1
     require(minT >= k, s"minTokens must be >= k, got $minT < $k")
-    val fps = Dedup.capBuckets(winnowFingerprints(df, idCol, textCol, k, w),
-      Seq("fp"), maxDocsPerFp)
-    val cand = fps.as("a").join(fps.as("b"),
-        col("a.fp") === col("b.fp") && col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
+    val cand = Dedup.bucketPairs(winnowFingerprints(df, idCol, textCol, k, w),
+        idCol, Seq("fp"), maxDocsPerFp)
+      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
       .distinct()
     val hs = Dedup.shingleRowsPos(df.select(col(idCol), col(textCol)),
         idCol, textCol, k)
@@ -1053,6 +1054,37 @@ object TextAnalysis {
   def bm25DocLens(index: DataFrame, idCol: String): DataFrame =
     index.groupBy(col(idCol)).agg(first(col("dl")).as("dl"))
 
+  /** Lucene's default BM25 parameters, the ones every graft scorer uses. */
+  private val K1 = 1.2
+  private val B = 0.75
+
+  /** The one-row corpus stats every BM25 scorer cross-joins: `n_docs`
+    * and `total_toks` (Σ `dl` over `docs`). */
+  private def bm25Stats(docs: DataFrame, dl: Column): DataFrame =
+    docs.agg(count(lit(1)).as("n_docs"), sum(dl).as("total_toks"))
+
+  /** A (doc, term) row's BM25 contribution from its `tf`, the term's
+    * `df`, the [[bm25Stats]] columns and the doc length `dl`:
+    * `idf·tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))` with
+    * `idf = ln(1 + (N − df + 0.5)/(df + 0.5))`. The oracle mirrors this
+    * exact parenthesization — every operand pairing is the same IEEE op
+    * on both engines, ln the only libm call. */
+  private def bm25Contrib(dl: Column): Column = {
+    val avgdl = col("total_toks").cast("double") / col("n_docs")
+    log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
+      (col("tf").cast("double") * lit(K1 + 1)) /
+      (col("tf").cast("double") +
+        lit(K1) * (lit(1.0) - lit(B) + lit(B) * dl.cast("double") / avgdl))
+  }
+
+  /** A pseudo-relevance-feedback candidate term's expansion score from
+    * its feedback-set `tf_fb`, its `df` and `n_docs`:
+    * `round(tf_fb · ln((N+1)/(df+1)), 4)`, the [[tfidfTopTerms]] idf
+    * pairing. */
+  private def prfScore: Column =
+    round(col("tf_fb") *
+      log((col("n_docs") + 1).cast("double") / (col("df") + 1)), 4)
+
   /** Driver-side replica of [[Dedup.sharedHash60]] for LITERAL terms —
     * the same first-15-hex-chars-of-md5 value, computable with no data
     * read (the [[Similarity]] `probeCellsOf` discipline: the serve-time
@@ -1098,15 +1130,14 @@ object TextAnalysis {
     * pinned). Same oracle as the unpartitioned serve by construction. */
   def bm25TopKStoredPruned(postings: DataFrame, docLens: DataFrame,
                            idCol: String, queryTerms: Seq[String],
-                           nBuckets: Int, k: Int = 25,
-                           k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+                           nBuckets: Int, k: Int = 25): DataFrame = {
     require(postings.columns.contains("tbucket"),
       "bm25TopKStoredPruned: store lacks `tbucket` — serve the table " +
         "bm25IndexPartitioned wrote (partitionBy(\"tbucket\"))")
     val buckets = bm25BucketsOf(queryTerms, nBuckets)
     bm25TopKStored(
       postings.filter(col("tbucket").isin(buckets.map(Integer.valueOf): _*)),
-      docLens, idCol, queryTerms, k = k, k1 = k1, b = b)
+      docLens, idCol, queryTerms, k = k)
   }
 
   /** [[bm25TopK]] served from the STORED index — same score algebra,
@@ -1120,22 +1151,15 @@ object TextAnalysis {
     * tokenizes to ≥1 token (the whitespace tokenizer's behavior on
     * non-empty text). */
   def bm25TopKStored(postings: DataFrame, docLens: DataFrame,
-                     idCol: String, queryTerms: Seq[String], k: Int = 25,
-                     k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+                     idCol: String, queryTerms: Seq[String],
+                     k: Int = 25): DataFrame = {
     require(queryTerms.nonEmpty, "bm25TopKStored: empty query")
     require(k >= 1, s"k must be >= 1, got $k")
-    val stats = docLens.agg(count(lit(1)).as("n_docs"),
-      sum(col("dl")).as("total_toks"))
     val tf = postings.filter(col("term").isin(queryTerms: _*))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val avgdl = col("total_toks").cast("double") / col("n_docs")
-    val contrib =
-      log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
-        (col("tf").cast("double") * lit(k1 + 1)) /
-        (col("tf").cast("double") +
-          lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl").cast("double") / avgdl))
-    tf.join(broadcast(dfreq), "term").crossJoin(broadcast(stats))
-      .select(col(idCol), contrib.as("__c"))
+    tf.join(broadcast(dfreq), "term")
+      .crossJoin(broadcast(bm25Stats(docLens, col("dl"))))
+      .select(col(idCol), bm25Contrib(col("dl")).as("__c"))
       .groupBy(col(idCol)).agg(round(sum(col("__c")), 4).as("bm25"))
       .orderBy(col("bm25").desc, col(idCol).asc)
       .limit(k)
@@ -1159,13 +1183,12 @@ object TextAnalysis {
     * sort). A query with no indexed terms emits no rows. */
   def bm25Join(postings: DataFrame, docLens: DataFrame, queries: DataFrame,
                idCol: String, queryIdCol: String, queryTextCol: String,
-               k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
-               maxTerms: Int = 10000): DataFrame = {
+               k: Int = 10, maxTerms: Int = 10000): DataFrame = {
     val qt = queries.select(col(queryIdCol),
         explode(array_distinct(tokens(col(queryTextCol)))).as("term"))
       .filter(length(col("term")) > 0)
-    bm25JoinTerms(postings, docLens, qt, idCol, queryIdCol, k, k1, b,
-      maxTerms, caller = "bm25Join")
+    bm25JoinTerms(postings, docLens, qt, idCol, queryIdCol, k, maxTerms,
+      caller = "bm25Join")
   }
 
   /** [[bm25Join]] from an explicit per-query TERM frame
@@ -1175,8 +1198,7 @@ object TextAnalysis {
     * per-query window cut. */
   def bm25JoinTerms(postings: DataFrame, docLens: DataFrame, qt0: DataFrame,
                     idCol: String, queryIdCol: String,
-                    k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
-                    maxTerms: Int = 10000,
+                    k: Int = 10, maxTerms: Int = 10000,
                     caller: String = "bm25JoinTerms"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val qt = qt0.select(col(queryIdCol), col("term"))
@@ -1198,20 +1220,12 @@ object TextAnalysis {
           lit(null).cast("double").as("bm25"), lit(null).cast("int").as("rank"))
         .limit(0)
     }
-    val stats = docLens.agg(count(lit(1)).as("n_docs"),
-      sum(col("dl")).as("total_toks"))
     val tf = postings.filter(col("term").isin(termSet.toIndexedSeq: _*))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val avgdl = col("total_toks").cast("double") / col("n_docs")
-    val contrib =
-      log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
-        (col("tf").cast("double") * lit(k1 + 1)) /
-        (col("tf").cast("double") +
-          lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl").cast("double") / avgdl))
     val scored = tf.join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(stats))
+      .crossJoin(broadcast(bm25Stats(docLens, col("dl"))))
       .join(broadcast(qt), Seq("term"))
-      .select(col(queryIdCol), col(idCol), contrib.as("__c"))
+      .select(col(queryIdCol), col(idCol), bm25Contrib(col("dl")).as("__c"))
       .groupBy(col(queryIdCol), col(idCol))
       .agg(round(sum(col("__c")), 4).as("bm25"))
     val w = Window.partitionBy(col(queryIdCol))
@@ -1243,7 +1257,6 @@ object TextAnalysis {
   def bm25PrfJoin(postings: DataFrame, docLens: DataFrame, queries: DataFrame,
                   idCol: String, queryIdCol: String, queryTextCol: String,
                   k: Int = 10, fbDocs: Int = 10, fbTerms: Int = 5,
-                  k1: Double = 1.2, b: Double = 0.75,
                   maxTerms: Int = 10000): DataFrame = {
     require(fbDocs >= 1, s"fbDocs must be >= 1, got $fbDocs")
     require(fbTerms >= 0, s"fbTerms must be >= 0, got $fbTerms")
@@ -1253,17 +1266,17 @@ object TextAnalysis {
       .filter(length(col("term")) > 0))
     if (fbTerms == 0)
       return bm25JoinTerms(postings, docLens, qt, idCol, queryIdCol,
-        k, k1, b, maxTerms, caller = "bm25PrfJoin")
+        k, maxTerms, caller = "bm25PrfJoin")
     // round 1: per-query feedback docs (bounded |Q|·fbDocs rows)
     val fbPairs = Reuse.truncate(bm25JoinTerms(postings, docLens, qt, idCol,
-        queryIdCol, k = fbDocs, k1 = k1, b = b, maxTerms = maxTerms,
+        queryIdCol, k = fbDocs, maxTerms = maxTerms,
         caller = "bm25PrfJoin")
       .select(col(queryIdCol), col(idCol)))
     val fbIds = fbPairs.select(col(idCol)).distinct()
       .collect().map(_.get(0)).toSeq
     if (fbIds.isEmpty)
       return bm25JoinTerms(postings, docLens, qt, idCol, queryIdCol,
-        k, k1, b, maxTerms, caller = "bm25PrfJoin")
+        k, maxTerms, caller = "bm25PrfJoin")
     // candidate terms per query from the feedback docs' POSTINGS rows:
     // pushed In on the bounded id set; each query's own terms excluded
     val fbTf = Reuse.truncate(postings.filter(col(idCol).isin(fbIds: _*))
@@ -1281,7 +1294,7 @@ object TextAnalysis {
         "shrink fbDocs (the literal-pushdown boundary is by design)")
     if (candTerms.isEmpty)
       return bm25JoinTerms(postings, docLens, qt, idCol, queryIdCol,
-        k, k1, b, maxTerms, caller = "bm25PrfJoin")
+        k, maxTerms, caller = "bm25PrfJoin")
     val dfreq = postings
       .filter(col("term").isin(candTerms.toIndexedSeq: _*))
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -1292,10 +1305,7 @@ object TextAnalysis {
       .orderBy(col("__score").desc, col("term").asc)
     val expansion = fbTf.join(broadcast(dfreq), "term")
       .crossJoin(broadcast(n))
-      .select(col(queryIdCol), col("term"),
-        round(col("tf_fb") *
-          log((col("n_docs") + 1).cast("double") / (col("df") + 1)), 4)
-          .as("__score"))
+      .select(col(queryIdCol), col("term"), prfScore.as("__score"))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= fbTerms)
       .select(col(queryIdCol), col("term"))
@@ -1311,7 +1321,7 @@ object TextAnalysis {
     val qtExpanded = qt.select(col(queryIdCol), col("term"))
       .unionByName(expLocal).distinct()
     bm25JoinTerms(postings, docLens, qtExpanded, idCol, queryIdCol,
-      k, k1, b, maxTerms, caller = "bm25PrfJoin")
+      k, maxTerms, caller = "bm25PrfJoin")
   }
 
   /** Reciprocal-rank FUSION (Cormack/Clarke/Büttcher '09) — the hybrid
@@ -2055,7 +2065,7 @@ object TextAnalysis {
   private def gopherMetrics(text: Column): (Column, Column, Column, Column) = {
     val nToks = size(tokens(text))
     val meanLen = round(
-      length(regexp_replace(text, "[\\t\\n\\x0B\\f\\r ]+", "")).cast("double") /
+      length(regexp_replace(text, whitespace, "")).cast("double") /
         greatest(nToks, lit(1)), 6)
     val symRatio = round(punctRatio(text), 6)
     val stops = org.apache.spark.sql.GraftBridge.column(
@@ -2204,13 +2214,13 @@ object TextAnalysis {
     require(minKeptLines >= 0, s"minKeptLines must be >= 0, got $minKeptLines")
     // the checks run against lowercased text — lower the needles too so
     // a caller passing "JavaScript" doesn't silently never match
-    val banLine = banLineSubstring.toLowerCase
-    val banPage = banPageSubstrings.map(_.toLowerCase)
+    val banLine = banLineSubstring.toLowerCase(java.util.Locale.ROOT)
+    val banPage = banPageSubstrings.map(_.toLowerCase(java.util.Locale.ROOT))
     val lines = split(col(textCol), "\n")
     def lineOk(l: Column): Column = {
       val t = trim(l)
       val terminal = substring(t, -1, 1).isin(".", "!", "?", "\"")
-      val words = when(t === "", lit(0)).otherwise(size(split(t, "[\\t\\n\\x0B\\f\\r ]+")))
+      val words = when(t === "", lit(0)).otherwise(size(tokens(t)))
       terminal && words >= minWordsPerLine &&
         instr(lower(t), banLine) === 0
     }
@@ -2641,7 +2651,7 @@ object TextAnalysis {
     val unesc = Seq("&lt;" -> "<", "&gt;" -> ">", "&quot;" -> "\"",
       "&#39;" -> "'", "&apos;" -> "'", "&nbsp;" -> " ")
       .foldLeft(noTags) { case (c, (e, r)) => replace(c, lit(e), lit(r)) }
-    trim(regexp_replace(replace(unesc, lit("&amp;"), lit("&")), "[\\t\\n\\x0B\\f\\r ]+", " "))
+    trim(regexp_replace(replace(unesc, lit("&amp;"), lit("&")), whitespace, " "))
   }
 
   /** PII pattern scan (redaction pre-step every training-data pipeline
@@ -2698,7 +2708,8 @@ object TextAnalysis {
   /** BM25 ranked retrieval — the standard keyword-search primitive
     * (Robertson/Spärck Jones probabilistic relevance; the Lucene-default
     * scoring shape): per query term,
-    * `idf·tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))` with
+    * `idf·tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))` at Lucene's
+    * k1 = 1.2, b = 0.75, with
     * `idf = ln(1 + (N − df + 0.5)/(df + 0.5))` (the +1 form — always
     * nonnegative, so a term in most docs cannot subtract). A training-
     * data pipeline runs this to pull topical slices out of a crawl
@@ -2718,14 +2729,9 @@ object TextAnalysis {
     * a global sort. dl rides the explode instead of joining back on id
     * — a long per token beats a corpus-scale join. */
   def bm25TopK(df: DataFrame, idCol: String, textCol: String,
-               queryTerms: Seq[String], k: Int = 25,
-               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+               queryTerms: Seq[String], k: Int = 25): DataFrame = {
     require(queryTerms.nonEmpty, "bm25TopK: empty query")
     require(k >= 1, s"k must be >= 1, got $k")
-    require(k1 >= 0 && b >= 0 && b <= 1,
-      s"BM25 params out of range: k1=$k1 (>=0), b=$b ([0,1])")
-    val stats = df.agg(count(lit(1)).as("n_docs"),
-      sum(tokenCount(col(textCol)).cast("long")).as("total_toks"))
     val tf = df.select(col(idCol),
         tokenCount(col(textCol)).cast("long").as("__dl"),
         explode(tokens(col(textCol))).as("term"))
@@ -2733,16 +2739,9 @@ object TextAnalysis {
       .groupBy(col(idCol), col("__dl"), col("term"))
       .agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    // the oracle mirrors this exact parenthesization — every operand
-    // pairing is the same IEEE op on both engines, ln the only libm call
-    val avgdl = col("total_toks").cast("double") / col("n_docs")
-    val contrib =
-      log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
-        (col("tf").cast("double") * lit(k1 + 1)) /
-        (col("tf").cast("double") +
-          lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("__dl").cast("double") / avgdl))
-    tf.join(broadcast(dfreq), "term").crossJoin(broadcast(stats))
-      .select(col(idCol), contrib.as("__c"))
+    tf.join(broadcast(dfreq), "term")
+      .crossJoin(broadcast(bm25Stats(df, tokenCount(col(textCol)).cast("long"))))
+      .select(col(idCol), bm25Contrib(col("__dl")).as("__c"))
       .groupBy(col(idCol)).agg(round(sum(col("__c")), 4).as("bm25"))
       .orderBy(col("bm25").desc, col(idCol).asc)
       .limit(k)
@@ -2767,17 +2766,15 @@ object TextAnalysis {
   def bm25Prf(df: DataFrame, idCol: String, textCol: String,
               queryTerms: Seq[String], k: Int = 25,
               fbDocs: Int = 10, fbTerms: Int = 5,
-              k1: Double = 1.2, b: Double = 0.75,
               maxCandidates: Int = 10000): DataFrame = {
     require(queryTerms.nonEmpty, "bm25Prf: empty query")
     require(fbDocs >= 1, s"fbDocs must be >= 1, got $fbDocs")
     require(fbTerms >= 0, s"fbTerms must be >= 0, got $fbTerms")
     val corpus = df.select(col(idCol), col(textCol))
-    val fbIds = bm25TopK(corpus, idCol, textCol, queryTerms,
-        k = fbDocs, k1 = k1, b = b)
+    val fbIds = bm25TopK(corpus, idCol, textCol, queryTerms, k = fbDocs)
       .select(col(idCol)).collect().map(_.get(0)).toSeq
     if (fbIds.isEmpty || fbTerms == 0)
-      return bm25TopK(corpus, idCol, textCol, queryTerms, k, k1, b)
+      return bm25TopK(corpus, idCol, textCol, queryTerms, k)
     // candidate terms + their feedback-set tf: tokenizes ONLY the
     // fbDocs-row feedback slice
     val fb = corpus.filter(col(idCol).isin(fbIds: _*))
@@ -2805,15 +2802,12 @@ object TextAnalysis {
     val n = corpus.agg(count(lit(1)).as("n_docs"))
     val expansion = dfreq.join(broadcast(fbLocal), "term")
       .crossJoin(broadcast(n))
-      .select(col("term"),
-        round(col("tf_fb") *
-          log((col("n_docs") + 1).cast("double") / (col("df") + 1)), 4)
-          .as("__score"))
+      .select(col("term"), prfScore.as("__score"))
       .orderBy(col("__score").desc, col("term").asc)
       .limit(fbTerms)
       .select(col("term")).collect().map(_.getString(0)).toSeq
     bm25TopK(corpus, idCol, textCol,
-      (queryTerms ++ expansion).distinct, k, k1, b)
+      (queryTerms ++ expansion).distinct, k)
   }
 
   /** The second-level labels under which a 2-letter ccTLD hosts its own

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.operators.Dedup
+import graft.operators.{Dedup, TextAnalysis}
 
 /** Streaming corpus preparation (SURVEY §2.8 × §2.10): incremental
   * document ingestion with benchmark decontamination against a STATIC
@@ -113,22 +113,16 @@ object Corpus {
       .select(col(idCol).as("id_new"),
         org.apache.spark.sql.GraftBridge.column(graft.functions.MinhashSketch(
           org.apache.spark.sql.GraftBridge.expression(
-            split(col(textCol), "[\\t\\n\\x0B\\f\\r ]+")), 3, k)).as("__mh"))
+            TextAnalysis.tokens(col(textCol))), 3, k)).as("__mh"))
       .filter(col("__mh").isNotNull)
       .select(col("id_new"), col("__mh.hset").as("__hset"),
         col("__mh.sig").as("__sig"))
-    val bandStructs = array((0 until nBands).map(b =>
-      struct(lit(b).as("band_idx"),
-        concat_ws("_", (0 until rowsPerBand).map(r =>
-          element_at(col("__sig"), b * rowsPerBand + r + 1)): _*)
-          .as("band_val"))): _*)
-    val probe = sk
-      .select(col("id_new"), col("__hset"), explode(bandStructs).as("band"))
-      .select(col("id_new"), col("__hset"),
-        col("band.band_idx").as("band_idx"), col("band.band_val").as("band_val"))
+    val probe = Dedup.bandRows(sk, Seq("id_new", "__hset"), (0 until nBands).map(b =>
+      concat_ws("_", (0 until rowsPerBand).map(r =>
+        element_at(col("__sig"), b * rowsPerBand + r + 1)): _*)))
     probe
       .join(index.bands.select(col(idCol).as("id_corpus"),
-        col("band_idx"), col("band_val")), Seq("band_idx", "band_val"))
+        col("band_idx"), col("band_val")), Dedup.BandKey)
       .join(index.sets.select(col(idCol).as("id_corpus"),
         col("hset").as("__hb")), Seq("id_corpus"))
       .select(col("id_new"), col("id_corpus"),
@@ -252,7 +246,7 @@ object Corpus {
         "or re-copy the index")
     val contaminated = org.apache.spark.sql.GraftBridge.column(
       graft.functions.ShingleContaminated(
-        org.apache.spark.sql.GraftBridge.expression(split(col(textCol), "[\\t\\n\\x0B\\f\\r ]+")),
+        org.apache.spark.sql.GraftBridge.expression(TextAnalysis.tokens(col(textCol))),
         n, evalH.toIndexedSeq))
     docs.filter(!coalesce(contaminated, lit(false)))
   }
@@ -286,7 +280,7 @@ object Corpus {
     val z = org.apache.spark.sql.GraftBridge.column(
       graft.functions.LrLogit(
         org.apache.spark.sql.GraftBridge.expression(
-          split(col(textCol), "[\\t\\n\\x0B\\f\\r ]+")),
+          TextAnalysis.tokens(col(textCol))),
         buckets,
         weights.map(_._1).toIndexedSeq,
         weights.map(_._2).toIndexedSeq))
@@ -311,7 +305,7 @@ object Corpus {
     if (evalH.length <= maxInlineHashes) {
       val contaminated = org.apache.spark.sql.GraftBridge.column(
         graft.functions.ShingleContaminated(
-          org.apache.spark.sql.GraftBridge.expression(split(col(textCol), "[\\t\\n\\x0B\\f\\r ]+")),
+          org.apache.spark.sql.GraftBridge.expression(TextAnalysis.tokens(col(textCol))),
           n, evalH.toIndexedSeq))
       // FILTER semantics: every input column passes through, so the
       // clean frame composes directly into the next pipeline stage

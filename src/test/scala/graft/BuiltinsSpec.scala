@@ -10,6 +10,24 @@ import graft.functions.Builtins
 class BuiltinsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  test("urlparse part names mean the same under a tr-TR default locale") {
+    Builtins.registerAll(spark)
+    val url = "http://u@h.example:81/a/b.txt?x=1"
+    val saved = java.util.Locale.getDefault
+    try {
+      // tr-TR upper-cases 'i' to dotted 'İ': "file" -> "FİLE"
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+      val row = spark.sql(
+        s"SELECT urlparse('$url', 'file'), urlparse('$url', 'authority')").head()
+      assert(row.getString(0) == "/a/b.txt?x=1")
+      assert(row.getString(1) == "u@h.example:81")
+      val api = spark.range(1).select(Builtins.urlparse(lit(url), "file"),
+        Builtins.urlparse(lit(url), "authority")).head()
+      assert(api.getString(0) == "/a/b.txt?x=1")
+      assert(api.getString(1) == "u@h.example:81")
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("SQL registry exposes exosql names") {
     Builtins.registerAll(spark)
     val row = spark.sql(

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Dedup, Multimodal, Similarity}
@@ -512,6 +513,55 @@ class LlmOpsSpec extends AnyFunSuite {
         words = 2, bandsPerWord = 2, maxHamming = 3)
       .filter($"id_b" === $"id_a" + 70000 && $"hamming" === 0)
     assert(exact.count() == d.count())
+  }
+
+  /** Checks a banded simhash operator against an all-pairs hamming scan
+    * at maxHamming 3, on base documents plus edited copies whose sketch
+    * sits 1–3 bits from their base's (one to three appended marker
+    * tokens). `sketch` maps a token column to the operator's sketch,
+    * `hamming` two sketches to their distance. */
+  private def assertBandedEqualsBruteForce(sketch: Column => Column,
+                                           hamming: (Column, Column) => Column)(
+                                           banded: DataFrame => DataFrame): Unit = {
+    import spark.implicits._
+    val toks = graft.operators.TextAnalysis.tokens _
+    val base = docs.select($"doc_id", $"text")
+      .filter(size(toks($"text")) >= 20).orderBy($"doc_id").limit(80)
+    val edits = base.select($"doc_id".as("base_id"), $"text".as("base_text"),
+        explode(sequence(lit(1), lit(24))).as("v"))
+      .select(($"base_id" * 100 + $"v" + 1000000L).as("doc_id"), $"base_text",
+        concat_ws(" ", $"base_text", concat(lit("zq"), ($"v" % 8).cast("string")),
+          when($"v" > 8, lit("zr")), when($"v" > 16, lit("zs"))).as("text"))
+    val corpus = base.unionByName(edits
+      .filter(hamming(sketch(toks($"base_text")), sketch(toks($"text"))).between(1, 3))
+      .select($"doc_id", $"text"))
+    val sk = corpus.select($"doc_id", sketch(toks($"text")).as("sh"))
+    val truth = sk.as("p").crossJoin(sk.as("q")).filter($"p.doc_id" < $"q.doc_id")
+      .select($"p.doc_id", $"q.doc_id", hamming($"p.sh", $"q.sh").cast("int"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+      .filter(_._3 <= 3).toSet
+    assert(Set(1, 2, 3).subsetOf(truth.map(_._3)),
+      s"the fixture must hold pairs at hamming 1, 2 and 3: ${truth.groupBy(_._3).view.mapValues(_.size).toMap}")
+    val got = banded(corpus)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(got == truth, s"missing ${truth -- got}, extra ${got -- truth}")
+  }
+
+  test("banded simhash pairs equal the brute-force hamming scan (planted 1-3 bit flips)") {
+    import org.apache.spark.sql.GraftBridge
+    assertBandedEqualsBruteForce(
+      t => GraftBridge.column(graft.functions.SimHashN(GraftBridge.expression(t), 60)),
+      (a, b) => bit_count(a.bitwiseXOR(b)))(
+      Dedup.simhashPairs(_, "doc_id", "text", hashBits = 60, nBands = 4, maxHamming = 3))
+  }
+
+  test("banded wide simhash pairs equal the brute-force hamming scan (planted 1-3 bit flips)") {
+    assertBandedEqualsBruteForce(Dedup.simhashWide(_, words = 2),
+      (a, b) => (1 to 2).map(w =>
+        bit_count(element_at(a, w).bitwiseXOR(element_at(b, w)))).reduce(_ + _))(
+      // 2 words x 2 bands per word = 4 bands, so maxHamming 3 < nBands
+      Dedup.simhashPairsWide(_, "doc_id", "text", words = 2, bandsPerWord = 2,
+        maxHamming = 3))
   }
 
   test("kmeans iteration partitions the corpus and averages per cell") {

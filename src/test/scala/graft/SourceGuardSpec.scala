@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[graft.operators.Reuse]] (only Reuse.scala and Graph.scala
   * checkpoint or set the checkpoint dir, and the per-call options the
   * rule replaced do not come back), for the one SQL-function
-  * declaration in [[graft.engine.SqlFunction]], and for locale-free case
-  * mapping in the SQL front end. Whole-line comments are skipped. */
+  * declaration in [[graft.engine.SqlFunction]], for locale-free case
+  * mapping, and for the one banded candidate join in
+  * [[graft.operators.Dedup]]. Whole-line comments are skipped. */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = new java.io.File("src/main/scala")
 
@@ -62,6 +63,24 @@ class SourceGuardSpec extends AnyFunSuite {
       .filter(_.contains("/graft/engine/"))
     assert(found.isEmpty,
       "name a Locale (Locale.ROOT) or compare with equalsIgnoreCase:\n" +
+        found.mkString("\n"))
+  }
+
+  test("all of src/main maps case only with an explicit Locale") {
+    // under tr-TR "file".toUpperCase is "FİLE", which parse_url rejects
+    val found = hits("""\.to(Upper|Lower)Case\b(?!\s*\(\s*(java\.util\.)?Locale\.)""")
+    assert(found.isEmpty,
+      "name a Locale (Locale.ROOT) or compare with equalsIgnoreCase:\n" +
+        found.mkString("\n"))
+  }
+
+  test("near-duplicate operators band and pair candidates only through Dedup") {
+    // a bucket self-join aliases its sides x/y (or a/b); a band-row
+    // explode builds (band_idx, band_val) structs
+    val found = hits("""\.as\("[ax]"\)\.join\(|struct\(.*\.as\("band_idx"\)""",
+      allowed = Set("Dedup.scala"))
+    assert(found.isEmpty,
+      "band with Dedup.bandRows and self-join with Dedup.bucketPairs:\n" +
         found.mkString("\n"))
   }
 }
