@@ -40,10 +40,24 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    CoreQueries.defs ++ FunctionQueries.defs ++ LlmQueries.defs ++ EngineQueries.defs ++ SourceQueries.defs ++ StreamQueries.defs ++ ExtraQueries.defs
+    disjoint(CoreQueries.defs, FunctionQueries.defs, LlmQueries.defs,
+      EngineQueries.defs, StoreTwins.defs, SourceQueries.defs,
+      StreamQueries.defs, ExtraQueries.defs)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    CoreQueries.oracle ++ FunctionQueries.oracle ++ LlmQueries.oracle ++ EngineQueries.oracle ++ SourceQueries.oracle ++ StreamQueries.oracle ++ ExtraQueries.oracle
+    disjoint(CoreQueries.oracle, FunctionQueries.oracle, LlmQueries.oracle,
+      EngineQueries.oracle, StoreTwins.oracle, SourceQueries.oracle,
+      StreamQueries.oracle, ExtraQueries.oracle)
+
+  /** The union of the registries `parts`; a key stated in more than one
+    * of them is refused, not shadowed. */
+  private[graft] def disjoint[V](parts: Iterable[(String, V)]*): Map[String, V] = {
+    val twice = parts.flatMap(_.map(_._1)).groupBy(identity)
+      .collect { case (k, ks) if ks.size > 1 => k }
+    require(twice.isEmpty,
+      s"query keys stated twice: ${twice.toSeq.sorted.mkString(", ")}")
+    parts.flatten.toMap
+  }
 }

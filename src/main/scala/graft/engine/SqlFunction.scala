@@ -128,19 +128,27 @@ object SqlFunction {
   /** Runs a registration once per session: re-running
     * `createOrReplaceTempFunction` logs a "replaced a previously
     * registered function" WARN per function, and the registrars are
-    * called per [[Engine]] and per SQL-surface query builder. The
-    * session is marked before registering (re-entrancy) and unmarked if
-    * registration fails, so a half-registered session retries instead
-    * of silently missing functions. Weak keys let dropped sessions be
+    * called per [[Engine]] and per SQL-surface query builder. A session
+    * is marked done only after its registration finishes, so a thread
+    * that finds it unmarked waits on the lock for a registration running
+    * elsewhere instead of returning before the functions exist. The
+    * registering thread itself may re-enter (the lock is reentrant and
+    * the session is marked running); a registration that throws leaves
+    * the session unmarked, so the next call retries instead of leaving
+    * functions silently missing. Weak keys let dropped sessions be
     * collected. */
   final class OncePerSession {
-    private val done = java.util.Collections.synchronizedSet(
+    private def weakSet() = java.util.Collections.synchronizedSet(
       java.util.Collections.newSetFromMap(
         new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
+    private val done = weakSet()
+    private val running = weakSet()
 
     def apply(spark: SparkSession)(register: => Unit): Unit =
-      if (done.add(spark))
-        try register
-        catch { case t: Throwable => done.remove(spark); throw t }
+      if (!done.contains(spark)) synchronized {
+        if (!done.contains(spark) && running.add(spark))
+          try { register; done.add(spark) }
+          finally running.remove(spark)
+      }
   }
 }

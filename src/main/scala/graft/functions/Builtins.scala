@@ -110,8 +110,10 @@ object Builtins {
   def exo_substr(s: Column, start: Int, len: Int): Column =
     exo_substr(s, lit(start), lit(len))
 
-  /** exosql `join(list, sep)` (list → string). */
-  def exo_join(list: Column, sep: String): Column = array_join(list, sep)
+  /** exosql `join(list, sep)` (list → string). Like exosql, which
+    * joins each element's string form, a null element joins as "" rather
+    * than being skipped. */
+  def exo_join(list: Column, sep: String): Column = array_join(list, sep, "")
 
   /** exosql `to_string(x)` — permissive term → string. */
   def to_string(c: Column): Column = c.cast(StringType)

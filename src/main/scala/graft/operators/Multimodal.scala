@@ -17,14 +17,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("payload", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("n_bytes", IntegerType, nullable = false),
-      StructField("content_hash", StringType, nullable = false),
-      StructField("media_type", StringType, nullable = false))), nullable = false)))
-
   /** Wrap a text corpus as a media table: payload = utf-8 bytes (stand-in
     * for image/audio bytes), meta = size + content hash + fake type. */
   def asMedia(docs: DataFrame, idCol: String, textCol: String): DataFrame =

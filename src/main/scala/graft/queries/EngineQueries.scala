@@ -8,11 +8,16 @@ import graft.engine.Engine
   * dialect shim itself sits in the correctness gate. */
 object EngineQueries {
 
-  private def via(s: SparkSession, d: String)(sql: String,
-      vars: Map[String, Any] = Map.empty): DataFrame = {
+  /** An [[Engine]] on `s` with every testdata table of `d` registered
+    * as a temp view. */
+  private[queries] def engine(s: SparkSession, d: String): Engine = {
     Tables.registerAll(s, d)
-    new Engine(s).query(sql, vars)
+    new Engine(s)
   }
+
+  private def via(s: SparkSession, d: String)(sql: String,
+      vars: Map[String, Any] = Map.empty): DataFrame =
+    engine(s, d).query(sql, vars)
 
   /** Share a SQL-defined temp view ACROSS its consumers: re-register the
     * view under the same name as a [[graft.operators.Reuse.LocalDeferred]]
@@ -28,7 +33,7 @@ object EngineQueries {
     * specializes each consumer so ReuseExchange never fires). Nothing
     * materializes at CREATE/EXPLAIN/analysis time — the
     * [[graft.operators.Reuse.LocalDeferred]] contract. */
-  private def shareViews(s: SparkSession, names: String*): Unit =
+  private[queries] def shareViews(s: SparkSession, names: String*): Unit =
     names.foreach { n =>
       graft.operators.Reuse.LocalDeferred(s.table(n))
         .createOrReplaceTempView(n)
@@ -115,8 +120,7 @@ object EngineQueries {
     "e_sql_pack" -> ((s, d) => via(s, d)(
       "SELECT * FROM graft_pack_offsets('documents', 'doc_id', 'text', 512, 64)")),
     "e_sql_pipeline10" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // the tokenizer-era chain composed from TVFs and views alone:
       // exact dedup (semi-join on the winners) → learned-token budget
       // (semi-join on the fill) → id-sequence chunks
@@ -144,8 +148,7 @@ object EngineQueries {
                                       64, 16, 'p10_merges')""")
     }),
     "e_sql_chunk_bpe" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // learned-token chunking from SQL: merge view -> id-sequence
       // windows (joined to a comma string for the portable compare)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW bpe_merges_chunk AS
@@ -160,8 +163,7 @@ object EngineQueries {
                                       64, 16, 'bpe_merges_chunk')""")
     }),
     "e_sql_pack_bpe" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // learned-token packing from SQL: the 6-arg graft_pack_offsets
       e.query("""CREATE OR REPLACE TEMPORARY VIEW bpe_merges_pack AS
                  SELECT * FROM (VALUES (0,'t','h'),(1,'th','e'),(2,'i','n'),
@@ -189,8 +191,7 @@ object EngineQueries {
     "e_sql_snippet" -> ((s, d) => via(s, d)(
       "SELECT * FROM graft_snippet('documents', 'doc_id', 'text', 'hash,join,vector', 12)")),
     "e_sql_pipeline12" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // the serving chain from TVFs and views alone: ranked legs →
       // fusion TVF → deferred MMR TVF → snippet TVF left-joined
       e.query("""CREATE OR REPLACE TEMPORARY VIEW p12_bm AS
@@ -230,8 +231,7 @@ object EngineQueries {
                  ORDER BY s.rank""")
     }),
     "e_sql_crawl_delta" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // membership drift from SQL: the two generations are plain views
       // (scalar-subquery split bounds), the report TVF on top
       e.query("""CREATE OR REPLACE TEMPORARY VIEW cdelta_a AS
@@ -256,8 +256,7 @@ object EngineQueries {
       """SELECT * FROM graft_bm25_prf('documents', 'doc_id', 'text',
                                       'hash,join,vector', 25, 10, 5)""")),
     "e_sql_mmr" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // diversified selection from SQL: the candidate view joins the
       // serve TVF back to its vectors; the deferred MMR TVF re-ranks
       e.query("""CREATE OR REPLACE TEMPORARY VIEW mmr_cand AS
@@ -269,92 +268,8 @@ object EngineQueries {
                  FROM graft_mmr('mmr_cand', 'vec_id', 'embedding',
                                 'cos_sim', 5, 0.7)""")
     }),
-    "e_sql_bm25_stored" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // the stored-index serve from SQL: index built + persisted in
-      // Scala (the write side), postings/doclens views, the lazy TVF
-      val out = Stores.dir("bm25_index_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents").select(col("doc_id"), col("text"))
-      Stores.bm25(out, Seq(Stores.bm25Index(docs)))
-      s.read.parquet(s"$out/postings").createOrReplaceTempView("bm25_postings")
-      s.read.parquet(s"$out/doclens").createOrReplaceTempView("bm25_doclens")
-      e.query("""SELECT doc_id, bm25
-                 FROM graft_bm25_stored('bm25_postings', 'bm25_doclens',
-                                        'doc_id', 'hash,join,vector', 25)""")
-    }),
-    "e_sql_bm25_join" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // batch retrieval from SQL: index persisted in Scala, queries a
-      // VALUES view, the deferred join TVF
-      val out = Stores.dir("bm25_index_join_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents").select(col("doc_id"), col("text"))
-      Stores.bm25(out, Seq(Stores.bm25Index(docs)))
-      s.read.parquet(s"$out/postings").createOrReplaceTempView("bm25j_postings")
-      s.read.parquet(s"$out/doclens").createOrReplaceTempView("bm25j_doclens")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW bm25j_queries AS
-                 SELECT * FROM (VALUES (1, 'hash join'),
-                                       (2, 'vector scan slow'),
-                                       (3, 'zzzunknown'))
-                   AS q(query_id, qtext)""")
-      e.query("""SELECT query_id, doc_id, bm25, rank
-                 FROM graft_bm25_join('bm25j_postings', 'bm25j_doclens',
-                                      'bm25j_queries', 'doc_id',
-                                      'query_id', 'qtext', 10)""")
-    }),
-    "e_sql_bm25_append" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // index maintenance from SQL: generation A written, generation
-      // B's postings + doclens parquet-appended (the write side stays
-      // Scala — SQL serves), the union served through the stored TVF;
-      // same oracle as llm_bm25, so a lost append hash-mismatches
-      val out = Stores.dir("bm25_index_append_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents")
-        .select(col("doc_id"), col("text"))
-      val gen = Stores.split(docs, "doc_id")
-      val a = gen.older(100).select(col("doc_id"), col("text"))
-      val b = gen.newer(100).select(col("doc_id"), col("text"))
-      Stores.bm25(out, Seq(a, b).map(Stores.bm25Index))
-      s.read.parquet(s"$out/postings")
-        .createOrReplaceTempView("bm25a_postings")
-      s.read.parquet(s"$out/doclens")
-        .createOrReplaceTempView("bm25a_doclens")
-      e.query("""SELECT doc_id, bm25
-                 FROM graft_bm25_stored('bm25a_postings', 'bm25a_doclens',
-                                        'doc_id', 'hash,join,vector', 25)""")
-    }),
-    "e_sql_bm25_delete" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // takedown from SQL: index persisted in Scala (the write side),
-      // the tombstone an anti-predicate view over BOTH store tables
-      // (the e_sql_ann_delete pattern), the stored-serve TVF unchanged
-      // — df/N/avgdl recompute from the purged views
-      val out = Stores.dir("bm25_index_delete_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents")
-        .select(col("doc_id"), col("text"))
-      Stores.bm25(out, Seq(Stores.bm25Index(docs)))
-      s.read.parquet(s"$out/postings")
-        .createOrReplaceTempView("bm25d_postings_raw")
-      s.read.parquet(s"$out/doclens")
-        .createOrReplaceTempView("bm25d_doclens_raw")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW bm25d_postings AS
-                 SELECT * FROM bm25d_postings_raw WHERE doc_id % 7 <> 0""")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW bm25d_doclens AS
-                 SELECT * FROM bm25d_doclens_raw WHERE doc_id % 7 <> 0""")
-      e.query("""SELECT doc_id, bm25
-                 FROM graft_bm25_stored('bm25d_postings', 'bm25d_doclens',
-                                        'doc_id', 'hash,join,vector', 25)""")
-    }),
     "e_sql_hybrid_rrf" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // hybrid retrieval from SQL: both ranked lists are views over the
       // serving TVFs (each window ranks an already-cut 50-row frame),
       // the fusion TVF full-outer-joins them in declared order
@@ -373,8 +288,7 @@ object EngineQueries {
                                      20, 60)""")
     }),
     "e_sql_hybrid_join" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // batch hybrid from SQL: index persisted in Scala (the write
       // side), the lexical leg ranked by the join TVF itself (it emits
       // rank), the semantic leg a window over the knn TVF, the fusion
@@ -412,78 +326,8 @@ object EngineQueries {
                  FROM graft_rrf_fuse_by('hybridj_bm,hybridj_ann',
                                         'query_id', 'doc_id', 10, 60)""")
     }),
-    "e_sql_pipeline11" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // the retrieval-era chain composed from TVFs and views alone:
-      // gopher keep (semi-join on the keep flag) → exact dedup
-      // (semi-join on the winners) → index built + STORED in Scala over
-      // the surviving view (the write side stays Scala — SQL serves) →
-      // lexical leg via the stored join TVF, semantic leg a window over
-      // the knn TVF on the surviving embeddings, fused per query
-      val out = Stores.dir("pipeline11_sql")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW p11_crawl AS
-                 SELECT doc_id, text FROM documents
-                 UNION ALL
-                 SELECT doc_id + 500000 AS doc_id, text FROM documents""")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW p11_kept AS
-                 SELECT c.doc_id, c.text FROM p11_crawl c
-                 LEFT SEMI JOIN graft_gopher('p11_crawl', 'doc_id', 'text',
-                                             10, 100000, 2.0, 10.0,
-                                             0.1, 1) g
-                   ON c.doc_id = g.doc_id AND g.keep""")
-      // p11_kept feeds the dedup stage twice (rows + the exact-dedup
-      // TVF); p11_dedup feeds the index build AND the embeddings
-      // semi-join — share each so its chain executes once (guide §3.3)
-      shareViews(s, "p11_kept")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW p11_dedup AS
-                 SELECT c.doc_id, c.text FROM p11_kept c
-                 LEFT SEMI JOIN graft_exact_dedup('p11_kept', 'doc_id',
-                                                  'text') w
-                   ON c.doc_id = w.doc_id""")
-      shareViews(s, "p11_dedup")
-      val ded = s.table("p11_dedup")
-      // LocalDeferred, not Local: the index frame now contains the
-      // p11_dedup deferred leaf, on which Local deliberately degrades
-      // to a no-op (its construction-time toRdd hazard) — the deferred
-      // variant truncates the same diamond at first execution instead
-      val ix = graft.operators.Reuse.LocalDeferred(
-        graft.operators.TextAnalysis.bm25Index(ded, "doc_id", "text"))
-      Stores.bm25(out, Seq(ix))
-      s.read.parquet(s"$out/postings")
-        .createOrReplaceTempView("p11_postings")
-      s.read.parquet(s"$out/doclens")
-        .createOrReplaceTempView("p11_doclens")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW p11_queries AS
-                 SELECT * FROM (VALUES (CAST(1 AS BIGINT), 'hash join'),
-                                       (CAST(2 AS BIGINT), 'vector scan slow'),
-                                       (CAST(3 AS BIGINT), 'zzzunknown'))
-                   AS q(query_id, qtext)""")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW p11_bm AS
-                 SELECT query_id, doc_id, rank
-                 FROM graft_bm25_join('p11_postings', 'p11_doclens',
-                                      'p11_queries', 'doc_id',
-                                      'query_id', 'qtext', 20)""")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW p11_ce AS
-                 SELECT e.vec_id, e.embedding FROM embeddings e
-                 LEFT SEMI JOIN p11_dedup d ON e.vec_id = d.doc_id""")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW p11_qvecs AS
-                 SELECT vec_id AS query_id, embedding FROM embeddings
-                 WHERE vec_id IN (1, 2, 3)""")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW p11_ann AS
-                 SELECT query_id, neighbor_id AS doc_id,
-                        row_number() OVER (PARTITION BY query_id
-                          ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-                 FROM graft_knn_join('p11_qvecs', 'p11_ce', 'query_id',
-                                     'vec_id', 'embedding', 'embedding',
-                                     20, 1)""")
-      e.query("""SELECT query_id, doc_id, rrf, rank
-                 FROM graft_rrf_fuse_by('p11_bm,p11_ann', 'query_id',
-                                        'doc_id', 10, 60)""")
-    }),
     "e_sql_retrieval_eval" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // the eval verb from SQL: the run a window over the knn TVF, the
       // relevance a plain label self-join view, the report TVF on top
       e.query("""CREATE OR REPLACE TEMPORARY VIEW reval_qvecs AS
@@ -509,8 +353,7 @@ object EngineQueries {
     }),
     "e_sql_hybrid_eval" -> ((s, d) => {
       import s.implicits._
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // eval of the fused production ranking from SQL: both legs via
       // TVFs, rrf_fuse_by, label relevance view, the report TVF on top
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
@@ -553,8 +396,7 @@ object EngineQueries {
                                            'query_id', 'doc_id', 10)""")
     }),
     "e_sql_retrieval_eval_graded" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // graded eval from SQL: the gain column rides the relevance view
       // (equi-join via the exploded adjacent-label key list — no range
       // BNLJ), the TVF takes the optional gain_col tail
@@ -584,8 +426,7 @@ object EngineQueries {
                                            'query_id', 'doc_id', 10, 'rel')""")
     }),
     "e_sql_mmr_join" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // batch MMR from SQL: per-query candidates from the knn TVF,
       // vectors joined back, the deferred batch-MMR TVF on top
       e.query("""CREATE OR REPLACE TEMPORARY VIEW mmrj_q AS
@@ -603,8 +444,7 @@ object EngineQueries {
                                      'embedding', 'cos_sim', 3, 0.7)""")
     }),
     "e_sql_corpus_kl" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // drift between two snapshot VIEWS defined in SQL (the
       // contamination split), measured by the TVF
       e.query("""CREATE OR REPLACE TEMPORARY VIEW kl_ref AS
@@ -619,8 +459,7 @@ object EngineQueries {
     // DEFINED IN SQL feeds the pipeline — the whole near-dup-tail
     // containment flow without a line of Scala
     "e_sql_containment" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_doc_tail AS
                  SELECT doc_id, text FROM documents
                  WHERE doc_id > (SELECT max(doc_id) - 300 FROM documents)""")
@@ -637,16 +476,14 @@ object EngineQueries {
     // QUALITY cluster member, score computed by the graft_quality
     // scalar inside a SQL-defined view
     "e_sql_cluster_best" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_scored_docs AS
                  SELECT doc_id, text, graft_quality(text) AS q FROM documents""")
       e.query(
         "SELECT * FROM graft_cluster_best('graft_scored_docs', 'doc_id', 'text', 0.5, 'q')")
     }),
     "e_sql_exact_dedup" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_dup_corpus AS
                  SELECT doc_id, text FROM documents
                  UNION ALL
@@ -654,8 +491,7 @@ object EngineQueries {
       e.query("SELECT * FROM graft_exact_dedup('graft_dup_corpus', 'doc_id', 'text')")
     }),
     "e_sql_simhash" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_sim_corpus AS
                  SELECT doc_id, text FROM documents
                  UNION ALL
@@ -669,8 +505,7 @@ object EngineQueries {
       "SELECT * FROM graft_vocab('documents', 'doc_id', 'text', 100)")),
     // sentence segmentation from SQL over the same planted fixture
     "e_sql_sentences" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_sent_docs AS
                  SELECT doc_id,
                         text || ' Ellipsis... mixed?! A tail without terminator'
@@ -681,35 +516,12 @@ object EngineQueries {
     // incremental-ingestion dedup from SQL: a re-ingested shard (view)
     // deduplicated AGAINST the corpus
     "e_sql_minhash_incr" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_incoming AS
                  SELECT doc_id + 3000000 AS doc_id, text FROM documents
                  WHERE doc_id > (SELECT max(doc_id) - 300 FROM documents)""")
       e.query(
         "SELECT * FROM graft_minhash_between('graft_incoming', 'documents', 'doc_id', 'text', 0.5)")
-    }),
-    // probe a PERSISTED index from SQL: the band/sketch parquet of a
-    // minhashIndex write registered as plain views — the per-ingestion
-    // run never touches corpus text (same oracle as the recompute path)
-    "e_sql_minhash_probe" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      val out = Stores.dir("minhash_index_sql")
-      val docs = Tables.load(s, d, "documents")
-        .select(org.apache.spark.sql.functions.col("doc_id"),
-          org.apache.spark.sql.functions.col("text"))
-      val idx = graft.operators.Dedup.minhashIndex(docs, "doc_id", "text",
-        k = 16, nBands = 4)
-      Stores.minhash(idx, out)
-      s.read.parquet(s"$out/bands").createOrReplaceTempView("graft_idx_bands")
-      s.read.parquet(s"$out/sets").createOrReplaceTempView("graft_idx_sets")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_probe_new AS
-                 SELECT doc_id + 3000000 AS doc_id, text FROM documents
-                 WHERE doc_id > (SELECT max(doc_id) - 300 FROM documents)""")
-      e.query("""SELECT * FROM graft_minhash_probe(
-                   'graft_idx_bands', 'graft_idx_sets', 'graft_probe_new',
-                   'doc_id', 'text', 16, 4, 0.5)""")
     }),
     "e_sql_sample_strat" -> ((s, d) => via(s, d)(
       "SELECT doc_id, source FROM graft_sample_strat('documents', 'source', 'text', 'doc_id', 10, 'strat:')")),
@@ -764,8 +576,7 @@ object EngineQueries {
       """SELECT * FROM graft_transitions('events', 'user_id', 'ts',
                                          'event_id', 'event_type')""")),
     "e_sql_embedding_dups" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_embdup_corpus AS
                  SELECT vec_id, embedding FROM embeddings
                  UNION ALL
@@ -774,8 +585,7 @@ object EngineQueries {
         "SELECT * FROM graft_embedding_dups('graft_embdup_corpus', 'vec_id', 'embedding', 0.99, 6, 64)")
     }),
     "e_sql_decontaminate" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_eval_v AS
                  SELECT doc_id, text FROM documents
                  WHERE doc_id > (SELECT max(doc_id) - 100 FROM documents)""")
@@ -788,8 +598,7 @@ object EngineQueries {
     // the bloom scale path from SQL — deferred sketch build (EXPLAIN
     // launches no job), same oracle as the broadcast path
     "e_sql_decontaminate_bloom" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_eval_v AS
                  SELECT doc_id, text FROM documents
                  WHERE doc_id > (SELECT max(doc_id) - 100 FROM documents)""")
@@ -800,33 +609,9 @@ object EngineQueries {
         """SELECT * FROM graft_decontaminate_bloom(
              'graft_corpus_v', 'graft_eval_v', 'doc_id', 'text', 13, 65536, 1048576)""")
     }),
-    // the stored admission index probed from SQL: build+persist in
-    // Scala (the write side), reconstruct as plain views over the
-    // parquet, probe via the deferred TVF — same oracle as the inline
-    // bloom path, so storage drift hash-mismatches
-    "e_sql_decontam_roundtrip" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      val out = Stores.dir("decontam_index_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents")
-      val gen = Stores.split(docs, "doc_id")
-      val ev = gen.newer(100).select(col("doc_id"), col("text"))
-      val idx = Stores.decontamIndex(ev)
-      Stores.decontam(idx, out)
-      s.read.parquet(s"$out/sketch").createOrReplaceTempView("graft_dc_sketch")
-      s.read.parquet(s"$out/hashes").createOrReplaceTempView("graft_dc_hashes")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_corpus_v AS
-                 SELECT doc_id, text FROM documents
-                 WHERE doc_id <= (SELECT max(doc_id) - 100 FROM documents)""")
-      e.query("""SELECT * FROM graft_decontaminate_stored(
-                   'graft_corpus_v', 'graft_dc_sketch', 'graft_dc_hashes',
-                   'doc_id', 'text')""")
-    }),
     // graded contamination fraction from SQL — same eval/corpus views
     "e_sql_contamination" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_eval_v AS
                  SELECT doc_id, text FROM documents
                  WHERE doc_id > (SELECT max(doc_id) - 100 FROM documents)""")
@@ -843,8 +628,7 @@ object EngineQueries {
     "e_sql_token_budget_group" -> ((s, d) => via(s, d)(
       "SELECT * FROM graft_token_budget_by('documents', 'doc_id', 'lang', 'text', 4000)")),
     "e_sql_token_budget_bpe" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // budget in learned tokens from SQL: merge view -> counter TVF
       e.query("""CREATE OR REPLACE TEMPORARY VIEW bpe_merges_budget AS
                  SELECT * FROM (VALUES (0,'t','h'),(1,'th','e'),(2,'i','n'),
@@ -864,8 +648,7 @@ object EngineQueries {
     // the Gopher repetition panel from SQL, over the same planted
     // fixture as llm_gopher_rep (doubled text / repeated footer lines)
     "e_sql_gopher_rep" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_rep_fixture AS
                  SELECT doc_id,
                    (CASE WHEN doc_id % 7 = 0 THEN text || ' ' || text ELSE text END) ||
@@ -889,8 +672,7 @@ object EngineQueries {
     // the DataFrame API (Spark SQL chr() is ASCII-only, so the
     // codepoints can't be spliced in SQL text), then the scalar applies
     "e_sql_normalize" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       Tables.load(s, d, "documents")
         .select(org.apache.spark.sql.functions.col("doc_id"),
           org.apache.spark.sql.functions.concat(
@@ -915,72 +697,13 @@ object EngineQueries {
       "SELECT * FROM graft_bigram_lp('documents', 'doc_id', 'text')")),
     "e_sql_trigram_kn" -> ((s, d) => via(s, d)(
       "SELECT * FROM graft_trigram_kn('documents', 'doc_id', 'text', 0.75)")),
-    "e_sql_trigram_kn_stored" -> ((s, d) => {
-      import s.implicits._
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // stored-model KN scoring from SQL: the five count tables trained
-      // and written in Scala (the write side), read back as views, the
-      // whole corpus scored through the lazy TVF
-      val out = Stores.dir("kn_model_sql")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val model = graft.operators.TextAnalysis.trigramKnTrain(
-        docs.filter($"doc_id" % 2 === 0), "doc_id", "text")
-      Stores.knModel(model, out)
-      model.keys.foreach { k =>
-        s.read.parquet(s"$out/$k").createOrReplaceTempView(s"knm_$k")
-      }
-      e.query("""SELECT * FROM graft_trigram_kn_stored('knm_c3', 'knm_ctx',
-                   'knm_sfx', 'knm_mid', 'knm_uni', 'documents',
-                   'doc_id', 'text', 0.75)""")
-    }),
-    "e_sql_trigram_kn_append" -> ((s, d) => {
-      import s.implicits._
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // KN model append twin: gen A trained+stored and gen B merged in
-      // Scala (the write side — the merge law is trigramKnAppend's),
-      // the merged store read back as views and the whole corpus
-      // scored through the unchanged lazy TVF
-      val out = Stores.dir("kn_model_append_sql")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val mA = graft.operators.TextAnalysis.trigramKnTrain(
-        docs.filter($"doc_id" % 4 === 0), "doc_id", "text")
-      // v2 is merged from v1's read-back, so the two stores are written
-      // one after the other
-      Stores.knModel(mA, s"$out/v1")
-      val stored = Stores.readKnModel(s, mA, s"$out/v1")
-      val merged = graft.operators.TextAnalysis.trigramKnAppend(stored,
-        docs.filter($"doc_id" % 4 === 2), "doc_id", "text")
-      Stores.knModel(merged, s"$out/v2")
-      merged.keys.foreach { k =>
-        s.read.parquet(s"$out/v2/$k").createOrReplaceTempView(s"knma_$k")
-      }
-      e.query("""SELECT * FROM graft_trigram_kn_stored('knma_c3', 'knma_ctx',
-                   'knma_sfx', 'knma_mid', 'knma_uni', 'documents',
-                   'doc_id', 'text', 0.75)""")
-    }),
     "e_sql_unigram_train" -> ((s, d) => via(s, d)(
       "SELECT * FROM graft_unigram_train('documents', 'doc_id', 'text', 48, 2, 4, 64)")),
-    "e_sql_unigram_tokenize" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // train in Scala (the write side), store, serve from the view
-      // through the deferred TVF — the stored-artifact twin convention
-      val out = Stores.dir("unigram_pieces_sql")
-      Stores.unigramPieces(
-        Tables.load(s, d, "documents").select(col("doc_id"), col("text")), out)
-      s.read.parquet(out).createOrReplaceTempView("unig_pieces")
-      e.query("""SELECT * FROM graft_unigram_tokenize('documents',
-                   'doc_id', 'text', 'unig_pieces')""")
-    }),
     // script detection from SQL over the same multilingual fixture
     // (DataFrame-built: Spark SQL chr() is ASCII-only)
     "e_sql_script" -> ((s, d) => {
       import org.apache.spark.sql.functions.{col, concat, lit, when}
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       Tables.load(s, d, "documents").select(col("doc_id"),
           when(col("doc_id") % 9 === 0, "ДДДДД")
             .when(col("doc_id") % 9 === 1, "中中中中")
@@ -997,8 +720,7 @@ object EngineQueries {
     // C4 line panel from SQL: the planted multi-line fixture is itself
     // a SQL view (same construction as the llm_c4_filters oracle)
     "e_sql_c4_filters" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_c4_docs AS
                  SELECT doc_id,
                    text || chr(10) || 'no terminal punctuation line' || chr(10) ||
@@ -1014,8 +736,7 @@ object EngineQueries {
     }),
     // corpus line dedup from SQL over the same planted fixture
     "e_sql_line_dedup" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_line_docs AS
                  SELECT doc_id,
                    text || chr(10) || 'Subscribe to our newsletter today.' ||
@@ -1054,29 +775,8 @@ object EngineQueries {
       "SELECT * FROM graft_cms_heavy_hitters('documents', 'doc_id', 'text', 20, 0.001, 0.99)")),
     "e_sql_distinct_n" -> ((s, d) => via(s, d)(
       "SELECT * FROM graft_distinct_ngrams('documents', 'doc_id', 'text')")),
-    // the full stored ANN index served from SQL: artifacts written in
-    // Scala (the write side), read back as plain views, probed via the
-    // deferred TVF — same oracle as the in-memory IVF-PQ path
-    "e_sql_ann_stored" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      val out = Stores.dir("ann_index_sql")
-      val emb = Tables.load(s, d, "embeddings")
-      val cents = Stores.seedCells(emb)
-      val cbs = Stores.codebooks(emb)
-      Stores.ivfPq(s, cents, cbs, out,
-        Stores.ivfPqCodes(emb, cents, cbs))
-      s.read.parquet(s"$out/cells").createOrReplaceTempView("graft_ann_cells")
-      s.read.parquet(s"$out/codebooks").createOrReplaceTempView("graft_ann_cbs")
-      s.read.parquet(s"$out/codes").createOrReplaceTempView("graft_ann_codes")
-      e.query("""SELECT vec_id, adc_score
-                 FROM graft_ann_stored('graft_ann_codes', 'graft_ann_cells',
-                                       'graft_ann_cbs', 'embeddings',
-                                       'vec_id', 'embedding', 0, 10, 2)""")
-    }),
     "e_sql_bpe_count" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // the merge table as a catalog view (VALUES — the SQL-side twin
       // of the parquet store), applied via the TVF
       e.query("""CREATE OR REPLACE TEMPORARY VIEW bpe_merges AS
@@ -1088,8 +788,7 @@ object EngineQueries {
                  FROM graft_bpe_count('documents', 'doc_id', 'text', 'bpe_merges')""")
     }),
     "e_sql_bpe_vocab" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // the learned-token coverage curve from SQL: VALUES merge view →
       // vocab-report TVF
       e.query("""CREATE OR REPLACE TEMPORARY VIEW bpe_merges_vocab AS
@@ -1102,8 +801,7 @@ object EngineQueries {
                                       'bpe_merges_vocab', 50)""")
     }),
     "e_sql_bpe_tokenize" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // tokenize-to-ids from SQL: the same VALUES merge view, the
       // sequence-emitting twin of graft_bpe_count
       e.query("""CREATE OR REPLACE TEMPORARY VIEW bpe_merges_tok AS
@@ -1116,21 +814,18 @@ object EngineQueries {
                                          'bpe_merges_tok')""")
     }),
     "e_sql_ann_sq" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""SELECT vec_id, sq_score
                  FROM graft_ann_sq('embeddings', 'vec_id', 'embedding', 0, 10)""")
     }),
     "e_sql_ann_ivf_sq" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""SELECT vec_id, sq_score
                  FROM graft_ann_ivf_sq('embeddings', 'vec_id', 'embedding',
                                        0, 10, 8, 2)""")
     }),
     "e_sql_ann_recall" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // serving quality as one line of SQL: recall@5 of the IVF-pruned
       // batch serving vs its brute-force twin, per query
       e.query("""CREATE OR REPLACE TEMPORARY VIEW recall_queries AS
@@ -1140,100 +835,22 @@ object EngineQueries {
                         'vec_id', 'vec_id', 'embedding', 'embedding',
                         5, 8, 2)""")
     }),
-    "e_sql_ann_sq_stored" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // the SQ store served from SQL: codes written Scala-side (the
-      // write side), read back into a view, probed via the TVF
-      val out = Stores.dir("sq_codes_sql")
-      val emb = Tables.load(s, d, "embeddings")
-      Stores.sq(out, emb)
-      s.read.parquet(out).createOrReplaceTempView("graft_sq_codes")
-      e.query("""SELECT vec_id, sq_score
-                 FROM graft_ann_sq_stored('graft_sq_codes', 'embeddings',
-                                          'vec_id', 'embedding', 0, 10)""")
-    }),
-    "e_sql_ann_sq_append" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // SQ index maintenance from SQL: per-row encode means the delta
-      // IS the append — gen A written, gen B parquet-appended (Scala,
-      // the write side), the read-back union served via the TVF
-      val out = Stores.dir("sq_codes_append_sql")
-      import org.apache.spark.sql.functions.col
-      val emb = Tables.load(s, d, "embeddings")
-      val gen = Stores.split(emb, "vec_id")
-      val a = gen.older(100).select(col("vec_id"), col("embedding"))
-      val b = gen.newer(100).select(col("vec_id"), col("embedding"))
-      Stores.sq(out, a, b)
-      s.read.parquet(out).createOrReplaceTempView("graft_sq_codes_apnd")
-      e.query("""SELECT vec_id, sq_score
-                 FROM graft_ann_sq_stored('graft_sq_codes_apnd', 'embeddings',
-                                          'vec_id', 'embedding', 0, 10)""")
-    }),
-    "e_sql_ann_ivf_sq_stored" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // the IVF×SQ store from SQL: cell-partitioned codes + the cells
-      // table written Scala-side, served via the TVF with the
-      // driver-literal probe-cell filter (static partition pruning)
-      val out = Stores.dir("ivf_sq_codes_sql")
-      val emb = Tables.load(s, d, "embeddings")
-      val cents = Stores.seedCells(emb)
-      Stores.ivfSq(s, cents, out, emb)
-      s.read.parquet(s"$out/cells").createOrReplaceTempView("graft_ivfsq_cells")
-      s.read.parquet(s"$out/codes").createOrReplaceTempView("graft_ivfsq_codes")
-      e.query("""SELECT vec_id, sq_score
-                 FROM graft_ann_ivf_sq_stored('graft_ivfsq_codes',
-                        'graft_ivfsq_cells', 'embeddings',
-                        'vec_id', 'embedding', 0, 10, 2)""")
-    }),
-    "e_sql_image_delete" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // image takedown from SQL: the dHash store is a plain table, so
-      // the purge is a plain anti-predicate VIEW over the read-back
-      // (the e_sql_ann_delete pattern) — clones of purged images admit
-      // again, survivors' clones still bounce, via the unchanged TVF
-      val out = Stores.dir("image_dhash_delete_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents")
-        .select(col("doc_id"), col("text"))
-      Stores.dHash(out, Stores.media(docs).slice)
-      s.read.parquet(out).createOrReplaceTempView("image_hashes_del")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW image_hashes_purged AS
-                 SELECT * FROM image_hashes_del WHERE doc_id % 5 <> 1""")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW image_probe_del AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 sl AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND length(text) >= 400)
-                 SELECT doc_id + 3000000 AS doc_id,
-                        CAST(concat(substring(text, 1, 10), 'QQQQ',
-                                    substring(text, 15)) AS BINARY) AS payload
-                 FROM sl""")
-      e.query("""SELECT DISTINCT id_new, id_corpus, hamming
-                 FROM graft_image_probe('image_probe_del', 'image_hashes_purged',
-                                        'doc_id', 'payload', 3, 4)""")
-    }),
     "e_sql_bpe_train" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // tokenizer training from SQL: the deferred TVF runs the merge
       // rounds once on execute (EXPLAIN launches no job)
       e.query("""SELECT rank, left, right
                  FROM graft_bpe_train('documents', 'doc_id', 'text', 8)""")
     }),
     "e_sql_bpe_pretok" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // pre-tokenized training from SQL: the optional 'pretok' tail
       // selects the class split before the merge loop
       e.query("""SELECT rank, left, right
                  FROM graft_bpe_train('documents', 'doc_id', 'text', 8, 'pretok')""")
     }),
     "e_sql_bpe_roundtrip" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // the tokenizer lifecycle from SQL: train via the TVF INTO a
       // view, count every document under the learned table via the
       // apply TVF — one statement pair, no Scala between them
@@ -1245,8 +862,7 @@ object EngineQueries {
                                       'bpe_merges_learned')""")
     }),
     "e_sql_pipeline8" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // the multimodal front door composed PURELY in SQL: media fixture
       // view → graft_image_dups TVF → keep-first anti-predicate →
       // decode/resize geometry as plain SQL over the payload (the stub
@@ -1283,45 +899,8 @@ object EngineQueries {
                         CAST(floor(height * s / 2) * 2 AS INT) AS out_h
                  FROM sc""")
     }),
-    "e_sql_admission_selfdedup_media" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // the image intra-batch window composed purely in SQL:
-      // graft_image_dups WITHIN the batch view (higher id of every
-      // pair drops), survivors probe the read-back dHash store via
-      // graft_image_probe — admitBatchMedia's semantics, statement form
-      val out = Stores.dir("selfdedup_media_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents")
-        .select(col("doc_id"), col("text"))
-      Stores.dHash(out, docs)
-      s.read.parquet(out).createOrReplaceTempView("sddm_hashes")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW sddm_batch AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 aa AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND doc_id <= mx - 200)
-                 SELECT doc_id + 3000000 AS doc_id,
-                        CAST(text AS BINARY) AS payload FROM aa
-                 UNION ALL
-                 SELECT doc_id + 4000000, CAST(reverse(text) AS BINARY) FROM aa
-                 UNION ALL
-                 SELECT doc_id + 5000000, CAST(reverse(text) AS BINARY) FROM aa""")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW sddm_reps AS
-                 SELECT i.doc_id, i.payload FROM sddm_batch i
-                 LEFT ANTI JOIN (
-                     SELECT DISTINCT id_b FROM graft_image_dups(
-                       'sddm_batch', 'doc_id', 'payload', 3, 4)) l
-                   ON i.doc_id = l.id_b""")
-      e.query("""SELECT r.doc_id FROM sddm_reps r
-                 LEFT ANTI JOIN (
-                     SELECT DISTINCT id_new FROM graft_image_probe(
-                       'sddm_reps', 'sddm_hashes', 'doc_id', 'payload',
-                       3, 4)) h
-                   ON r.doc_id = h.id_new""")
-    }),
     "e_sql_admission_selfdedup" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // intra-batch keep-first + stored-index probe composed purely in
       // SQL: graft_minhash_pairs WITHIN the batch view (higher id of
       // every pair drops), survivors probe the read-back index via
@@ -1369,84 +948,8 @@ object EngineQueries {
                        'doc_id', 'text', 16, 4, 0.5)) h
                    ON r.doc_id = h.id_new""")
     }),
-    "e_sql_pipeline9" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // the mixed-modality front door composed from SQL: stores written
-      // in Scala (the write side — minhash index frames + dHash frame),
-      // then the four-group incoming fixture, gopher keep,
-      // decontamination, minhash probe, and dHash probe ALL composed as
-      // engine SQL over the graft_* TVFs
-      val out = Stores.dir("pipeline9_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents")
-        .select(col("doc_id"), col("text"))
-      val idx = graft.operators.Dedup.minhashIndex(docs, "doc_id", "text")
-      // three independent store sinks — overlap (guide §2.6)
-      graft.operators.Par.jobs(
-        () => Stores.minhash(idx, s"$out/mh"),
-        () => Stores.dHash(s"$out/dh", docs))
-      s.read.parquet(s"$out/mh/bands").createOrReplaceTempView("p9_mh_bands")
-      s.read.parquet(s"$out/mh/sets").createOrReplaceTempView("p9_mh_sets")
-      s.read.parquet(s"$out/dh").createOrReplaceTempView("p9_dh")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW p9_inc AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 aa AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND doc_id <= mx - 200),
-                 nov AS (SELECT a.doc_id, a.text AS atext,
-                                concat_ws(' ', a.text, b.text, c.text) AS ntext
-                         FROM aa a
-                         JOIN documents b ON b.doc_id = a.doc_id - 120
-                         JOIN documents c ON c.doc_id = a.doc_id - 240)
-                 SELECT doc_id + 3000000 AS doc_id, text, text AS pay FROM aa
-                 UNION ALL SELECT doc_id + 4000000, ntext, atext FROM nov
-                 UNION ALL SELECT doc_id + 5000000, text, reverse(text) FROM aa
-                 UNION ALL SELECT doc_id + 6000000, ntext, reverse(atext) FROM nov""")
-      // p9_inc feeds the quality gate (twice: rows + the gopher TVF) AND
-      // the media view; p9_quality feeds p9_clean twice (rows + the
-      // decontaminate TVF); p9_clean appears twice in the final statement
-      // (rows + the minhash probe). Shared, each stage runs once.
-      shareViews(s, "p9_inc")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW p9_quality AS
-                 SELECT i.doc_id, i.text, i.pay
-                 FROM p9_inc i
-                 JOIN graft_gopher('p9_inc', 'doc_id', 'text',
-                                   10, 100000, 2.0, 10.0, 0.1, 1) g
-                   ON i.doc_id = g.doc_id AND g.keep""")
-      shareViews(s, "p9_quality")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW p9_eval AS
-                 SELECT doc_id, text FROM documents
-                 WHERE doc_id > (SELECT max(doc_id) - 100 FROM documents)""")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW p9_clean AS
-                 SELECT q.doc_id, q.text, q.pay
-                 FROM p9_quality q
-                 JOIN graft_decontaminate('p9_quality', 'p9_eval',
-                                          'doc_id', 'text', 13) d
-                   ON q.doc_id = d.doc_id AND NOT d.contaminated""")
-      shareViews(s, "p9_clean")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW p9_media AS
-                 SELECT doc_id, CAST(pay AS BINARY) AS payload FROM p9_inc""")
-      // LEFT ANTI joins, not NOT IN (the null-aware form plans a BNLJ)
-      // BROADCAST hints: the shared deferred leaves report conservative
-      // (huge) stats by design, which would push these anti-joins to
-      // sort-merge — but a probe-hit set is bounded by the incoming
-      // micro-batch, the textbook broadcast side (guide §3.1: hint when
-      // the estimate is wrong)
-      e.query("""SELECT /*+ BROADCAST(mh), BROADCAST(im) */ c.doc_id
-                 FROM p9_clean c
-                 LEFT ANTI JOIN (
-                     SELECT DISTINCT id_new FROM graft_minhash_probe(
-                       'p9_mh_bands', 'p9_mh_sets', 'p9_clean',
-                       'doc_id', 'text', 16, 4, 0.5)) mh
-                   ON c.doc_id = mh.id_new
-                 LEFT ANTI JOIN (
-                     SELECT DISTINCT id_new FROM graft_image_probe(
-                       'p9_media', 'p9_dh', 'doc_id', 'payload', 3, 4)) im
-                   ON c.doc_id = im.id_new""")
-    }),
     "e_sql_image_dups" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // the media fixture built in engine SQL (same slice + same-length
       // local edit as llm_image_dups), probed via the TVF
       e.query("""CREATE OR REPLACE TEMPORARY VIEW image_media AS
@@ -1463,8 +966,7 @@ object EngineQueries {
                  FROM graft_image_dups('image_media', 'doc_id', 'payload', 3, 4)""")
     }),
     "e_sql_audio_fp" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // the audio fingerprint surface from SQL: the media view + the
       // pure-projection TVF (llm_audio_fp's oracle gates it)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW audio_media_fp AS
@@ -1476,8 +978,7 @@ object EngineQueries {
                  FROM graft_audio_fp('audio_media_fp', 'doc_id', 'payload')""")
     }),
     "e_sql_audio_dups" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // audio near-dup pairs from SQL — the e_sql_image_dups fixture
       // through the audio-fingerprint TVF
       e.query("""CREATE OR REPLACE TEMPORARY VIEW audio_media AS
@@ -1493,113 +994,8 @@ object EngineQueries {
       e.query("""SELECT id_a, id_b, hamming
                  FROM graft_audio_dups('audio_media', 'doc_id', 'payload', 3, 4)""")
     }),
-    "e_sql_audio_probe" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // incremental audio admission from SQL: fingerprint store written
-      // in Scala (the write side), edited-clone probe via the TVF
-      val out = Stores.dir("audio_fp_store_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents")
-        .select(col("doc_id"), col("text"))
-      Stores.audioFp(out, Stores.media(docs).slice)
-      s.read.parquet(out).createOrReplaceTempView("audio_fps")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW audio_probe AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 sl AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND length(text) >= 400)
-                 SELECT doc_id + 3000000 AS doc_id,
-                        CAST(concat(substring(text, 1, 10), 'QQQQ',
-                                    substring(text, 15)) AS BINARY) AS payload
-                 FROM sl""")
-      e.query("""SELECT DISTINCT id_new, id_corpus, hamming
-                 FROM graft_audio_probe('audio_probe', 'audio_fps',
-                                        'doc_id', 'payload', 3, 4)""")
-    }),
-    "e_sql_audio_append" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // audio-store append from SQL: two generations written in Scala
-      // (the llm_audio_append fixture — the append IS the 8-byte
-      // delta), the read-back union probed via the unchanged TVF
-      val out = Stores.dir("audio_fp_append_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents")
-        .select(col("doc_id"), col("text"))
-      Stores.audioFp(out, Stores.media(docs).gens: _*)
-      s.read.parquet(out).createOrReplaceTempView("audio_fps_app")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW audio_probe_app AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 sl AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND length(text) >= 400)
-                 SELECT doc_id + 3000000 AS doc_id,
-                        CAST(concat(substring(text, 1, 10), 'QQQQ',
-                                    substring(text, 15)) AS BINARY) AS payload
-                 FROM sl""")
-      e.query("""SELECT DISTINCT id_new, id_corpus, hamming
-                 FROM graft_audio_probe('audio_probe_app', 'audio_fps_app',
-                                        'doc_id', 'payload', 3, 4)""")
-    }),
-    "e_sql_audio_delete" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // audio takedown from SQL: the fingerprint store is a plain
-      // table, so the purge is a plain anti-predicate VIEW over the
-      // read-back (the e_sql_image_delete pattern) — clones of purged
-      // tracks admit again, survivors' clones still bounce
-      val out = Stores.dir("audio_fp_delete_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents")
-        .select(col("doc_id"), col("text"))
-      Stores.audioFp(out, Stores.media(docs).slice)
-      s.read.parquet(out).createOrReplaceTempView("audio_fps_del")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW audio_fps_purged AS
-                 SELECT * FROM audio_fps_del WHERE doc_id % 5 <> 1""")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW audio_probe_del AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 sl AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND length(text) >= 400)
-                 SELECT doc_id + 3000000 AS doc_id,
-                        CAST(concat(substring(text, 1, 10), 'QQQQ',
-                                    substring(text, 15)) AS BINARY) AS payload
-                 FROM sl""")
-      e.query("""SELECT DISTINCT id_new, id_corpus, hamming
-                 FROM graft_audio_probe('audio_probe_del', 'audio_fps_purged',
-                                        'doc_id', 'payload', 3, 4)""")
-    }),
-    "e_sql_audio_compact" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // audio-store compaction from SQL — the family's twin matrix
-      // closed: two generations written in Scala (the llm_audio_compact
-      // fixture), doc-id tombstones purged via graft_store_compact, the
-      // edited-clone shard probed against the compacted view
-      val out = Stores.dir("audio_fp_compact_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents")
-        .select(col("doc_id"), col("text"))
-      Stores.audioFp(s"$out/store", Stores.media(docs).gens: _*)
-      s.read.parquet(s"$out/store").createOrReplaceTempView("audcmp_store")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW audcmp_tomb AS
-                 SELECT doc_id FROM audcmp_store WHERE doc_id % 5 = 1""")
-      e.query(s"""CREATE OR REPLACE TEMPORARY VIEW audcmp_v2 AS
-                 SELECT * FROM graft_store_compact('audcmp_store', 'doc_id',
-                   'audcmp_tomb', '$out/store_v2', '', 1)""")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW audcmp_probe AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 sl AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND length(text) >= 400)
-                 SELECT doc_id + 3000000 AS doc_id,
-                        CAST(concat(substring(text, 1, 10), 'QQQQ',
-                                    substring(text, 15)) AS BINARY) AS payload
-                 FROM sl""")
-      e.query("""SELECT DISTINCT id_new, id_corpus, hamming
-                 FROM graft_audio_probe('audcmp_probe', 'audcmp_v2',
-                                        'doc_id', 'payload', 3, 4)""")
-    }),
     "e_sql_video_frames" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // the video frame table from SQL: the media view + the pure
       // per-frame-hash TVF (llm_video_frames' oracle gates it)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW video_media_fr AS
@@ -1611,8 +1007,7 @@ object EngineQueries {
                  FROM graft_video_frames('video_media_fr', 'doc_id', 'payload', 4)""")
     }),
     "e_sql_video_dups" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // video near-dup pairs from SQL — the audio/image fixture through
       // the frame-aligned matched-count TVF
       e.query("""CREATE OR REPLACE TEMPORARY VIEW video_media AS
@@ -1629,165 +1024,8 @@ object EngineQueries {
                  FROM graft_video_dups('video_media', 'doc_id', 'payload',
                                        4, 3, 4, 3)""")
     }),
-    "e_sql_video_probe" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // incremental video admission from SQL: frame store written in
-      // Scala (the write side), edited-clone probe via the TVF
-      val out = Stores.dir("video_frames_store_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents")
-        .select(col("doc_id"), col("text"))
-      Stores.videoFrames(out, Stores.media(docs).slice)
-      s.read.parquet(out).createOrReplaceTempView("video_frames_v")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW video_probe AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 sl AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND length(text) >= 400)
-                 SELECT doc_id + 3000000 AS doc_id,
-                        CAST(concat(substring(text, 1, 10), 'QQQQ',
-                                    substring(text, 15)) AS BINARY) AS payload
-                 FROM sl""")
-      e.query("""SELECT id_new, id_corpus, n_frames_matched
-                 FROM graft_video_probe('video_probe', 'video_frames_v',
-                                        'doc_id', 'payload', 4, 3, 4, 3)""")
-    }),
-    "e_sql_video_append" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // video-store append from SQL: two generations written in Scala
-      // (the frame delta IS videoFrames over the new media), the
-      // read-back union probed via the unchanged TVF
-      val out = Stores.dir("video_frames_append_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents")
-        .select(col("doc_id"), col("text"))
-      Stores.videoFrames(out, Stores.media(docs).gens: _*)
-      s.read.parquet(out).createOrReplaceTempView("video_frames_app")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW video_probe_app AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 sl AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND length(text) >= 400)
-                 SELECT doc_id + 3000000 AS doc_id,
-                        CAST(concat(substring(text, 1, 10), 'QQQQ',
-                                    substring(text, 15)) AS BINARY) AS payload
-                 FROM sl""")
-      e.query("""SELECT id_new, id_corpus, n_frames_matched
-                 FROM graft_video_probe('video_probe_app', 'video_frames_app',
-                                        'doc_id', 'payload', 4, 3, 4, 3)""")
-    }),
-    "e_sql_video_delete" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // video takedown from SQL: the frame store is a plain table, so
-      // the purge is an anti-predicate VIEW over the read-back — all of
-      // a tombstoned video's frame rows drop together on doc_id
-      val out = Stores.dir("video_frames_delete_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents")
-        .select(col("doc_id"), col("text"))
-      Stores.videoFrames(out, Stores.media(docs).slice)
-      s.read.parquet(out).createOrReplaceTempView("video_frames_del")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW video_frames_purged AS
-                 SELECT * FROM video_frames_del WHERE doc_id % 5 <> 1""")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW video_probe_del AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 sl AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND length(text) >= 400)
-                 SELECT doc_id + 3000000 AS doc_id,
-                        CAST(concat(substring(text, 1, 10), 'QQQQ',
-                                    substring(text, 15)) AS BINARY) AS payload
-                 FROM sl""")
-      e.query("""SELECT id_new, id_corpus, n_frames_matched
-                 FROM graft_video_probe('video_probe_del', 'video_frames_purged',
-                                        'doc_id', 'payload', 4, 3, 4, 3)""")
-    }),
-    "e_sql_video_compact" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // video-store compaction from SQL — tombstones purged via
-      // graft_store_compact, the clone shard probed against the
-      // compacted view through the unchanged TVF
-      val out = Stores.dir("video_frames_compact_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents")
-        .select(col("doc_id"), col("text"))
-      Stores.videoFrames(s"$out/store", Stores.media(docs).gens: _*)
-      s.read.parquet(s"$out/store").createOrReplaceTempView("vidcmp_store")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW vidcmp_tomb AS
-                 SELECT DISTINCT doc_id FROM vidcmp_store WHERE doc_id % 5 = 1""")
-      e.query(s"""CREATE OR REPLACE TEMPORARY VIEW vidcmp_v2 AS
-                 SELECT * FROM graft_store_compact('vidcmp_store', 'doc_id',
-                   'vidcmp_tomb', '$out/store_v2', '', 1)""")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW vidcmp_probe AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 sl AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND length(text) >= 400)
-                 SELECT doc_id + 3000000 AS doc_id,
-                        CAST(concat(substring(text, 1, 10), 'QQQQ',
-                                    substring(text, 15)) AS BINARY) AS payload
-                 FROM sl""")
-      e.query("""SELECT id_new, id_corpus, n_frames_matched
-                 FROM graft_video_probe('vidcmp_probe', 'vidcmp_v2',
-                                        'doc_id', 'payload', 4, 3, 4, 3)""")
-    }),
-    "e_sql_image_incr" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // store side written in Scala (the write side), read back as a
-      // view; probe media fixture + TVF probe from SQL
-      val out = Stores.dir("image_dhash_store_sql")
-      val docs = Tables.load(s, d, "documents")
-        .select(org.apache.spark.sql.functions.col("doc_id"),
-          org.apache.spark.sql.functions.col("text"))
-      val mx = docs.agg(org.apache.spark.sql.functions.max(
-        org.apache.spark.sql.functions.col("doc_id"))).head().getLong(0)
-      val slice = docs.filter(
-        org.apache.spark.sql.functions.col("doc_id") > mx - 300 &&
-          org.apache.spark.sql.functions.length(
-            org.apache.spark.sql.functions.col("text")) >= 400)
-      Stores.dHash(out, slice)
-      s.read.parquet(out).createOrReplaceTempView("image_hashes")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW image_probe AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 sl AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND length(text) >= 400)
-                 SELECT doc_id + 3000000 AS doc_id,
-                        CAST(concat(substring(text, 1, 10), 'QQQQ',
-                                    substring(text, 15)) AS BINARY) AS payload
-                 FROM sl""")
-      e.query("""SELECT DISTINCT id_new, id_corpus, hamming
-                 FROM graft_image_probe('image_probe', 'image_hashes',
-                                        'doc_id', 'payload', 3, 4)""")
-    }),
-    "e_sql_image_append" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // the appended dHash store served from SQL — same artifacts
-      // recipe as llm_image_append (generation A written, generation
-      // B's 8-byte delta parquet-appended in Scala, the write side),
-      // the read-back union probed via the TVF from SQL
-      val out = Stores.dir("image_dhash_append_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents")
-        .select(col("doc_id"), col("text"))
-      Stores.dHash(out, Stores.media(docs).gens: _*)
-      s.read.parquet(out).createOrReplaceTempView("image_hashes_apnd")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW image_probe_apnd AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 sl AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND length(text) >= 400)
-                 SELECT doc_id + 3000000 AS doc_id,
-                        CAST(concat(substring(text, 1, 10), 'QQQQ',
-                                    substring(text, 15)) AS BINARY) AS payload
-                 FROM sl""")
-      e.query("""SELECT DISTINCT id_new, id_corpus, hamming
-                 FROM graft_image_probe('image_probe_apnd', 'image_hashes_apnd',
-                                        'doc_id', 'payload', 3, 4)""")
-    }),
     "e_sql_image_clusters" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // near-dup clusters from SQL: the llm_image_clusters fixture
       // (two independent same-length edits per original) built as a
       // view, closed into components by the deferred TVF — EXPLAIN
@@ -1811,118 +1049,9 @@ object EngineQueries {
                  FROM graft_image_clusters('imgc_media', 'doc_id',
                                            'payload', 3, 4)""")
     }),
-    "e_sql_fp_append" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // the appended fingerprint store probed from SQL: generations
-      // written/appended in Scala (the write side), the probe a plain
-      // SQL anti-predicate over the graft_fingerprint scalar — clones
-      // of EITHER generation bounce, novel suffixes pass
-      val out = Stores.dir("fingerprint_store_append_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents")
-        .select(col("doc_id"), col("text"))
-      val gen = Stores.split(docs, "doc_id")
-      Stores.fingerprints(out, gen.older(150), gen.newer(150))
-      s.read.parquet(out).createOrReplaceTempView("graft_fp_store_sql")
-      // LEFT ANTI, not NOT IN: the null-aware NOT IN form plans a
-      // BroadcastNestedLoopJoin (fingerprints are never null here, so
-      // the anti equi-join is semantics-equal and hash-joinable)
-      e.query("""WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 tail AS (SELECT doc_id, text FROM documents, m
-                          WHERE doc_id > mx - 300),
-                 inc AS (SELECT doc_id + 3000000 AS doc_id, text FROM tail
-                         UNION ALL
-                         SELECT doc_id + 4000000, concat(text, ' novel suffix')
-                         FROM tail)
-                 SELECT i.doc_id
-                 FROM inc i LEFT ANTI JOIN graft_fp_store_sql f
-                   ON graft_fingerprint(i.text) = f.fp""")
-    }),
-    "e_sql_minhash_delete" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // takedown on the dedup index from SQL: the stored frames purge
-      // via plain anti-predicate views, the unchanged probe TVF serves
-      // them — clones of purged docs admit, survivors' clones bounce
-      val out = Stores.dir("minhash_index_delete_sql")
-      val docs = Tables.load(s, d, "documents")
-        .select(org.apache.spark.sql.functions.col("doc_id"),
-          org.apache.spark.sql.functions.col("text"))
-      val idx = graft.operators.Dedup.minhashIndex(docs, "doc_id", "text",
-        k = 16, nBands = 4)
-      Stores.minhash(idx, out)
-      s.read.parquet(s"$out/bands").createOrReplaceTempView("del_mh_bands")
-      s.read.parquet(s"$out/sets").createOrReplaceTempView("del_mh_sets")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW del_mh_bands_p AS
-                 SELECT * FROM del_mh_bands WHERE doc_id % 7 <> 2""")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW del_mh_sets_p AS
-                 SELECT * FROM del_mh_sets WHERE doc_id % 7 <> 2""")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW del_mh_incoming AS
-                 SELECT doc_id + 3000000 AS doc_id, text FROM documents
-                 WHERE doc_id > (SELECT max(doc_id) - 300 FROM documents)""")
-      e.query("""SELECT id_new, id_corpus, jaccard
-                 FROM graft_minhash_probe('del_mh_bands_p', 'del_mh_sets_p',
-                                          'del_mh_incoming', 'doc_id', 'text',
-                                          16, 4, 0.5)""")
-    }),
-    "e_sql_ann_delete" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // takedown from SQL: the stores are plain tables, so the purge is
-      // a plain anti-predicate VIEW over the codes read-back — no new
-      // machinery, the TVF serves the purged view unchanged
-      val out = Stores.dir("ann_index_delete_sql")
-      val emb = Tables.load(s, d, "embeddings")
-      val cents = Stores.seedCells(emb)
-      val cbs = Stores.codebooks(emb)
-      Stores.ivfPq(s, cents, cbs, out,
-        Stores.ivfPqCodes(emb, cents, cbs))
-      s.read.parquet(s"$out/cells").createOrReplaceTempView("del_ann_cells")
-      s.read.parquet(s"$out/codebooks").createOrReplaceTempView("del_ann_cbs")
-      s.read.parquet(s"$out/codes").createOrReplaceTempView("del_ann_codes")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW del_ann_codes_purged AS
-                 SELECT * FROM del_ann_codes WHERE vec_id % 10 <> 3""")
-      e.query("""SELECT vec_id, adc_score
-                 FROM graft_ann_stored('del_ann_codes_purged', 'del_ann_cells',
-                                       'del_ann_cbs', 'embeddings',
-                                       'vec_id', 'embedding', 0, 10, 2)""")
-    }),
-    "e_sql_ann_compact" -> ((s, d) => {
-      import s.implicits._
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // physical compaction from SQL: store prep in Scala (the
-      // e_sql_ann_delete convention), then tombstone view →
-      // graft_store_compact (deferred rewrite) → unchanged stored
-      // serving over the compacted view. Same fixture as
-      // llm_ann_index_compact ⇒ the delete oracle gates it
-      val out = Stores.dir("ann_index_compact_sql")
-      val emb = Tables.load(s, d, "embeddings")
-      val cents = Stores.seedCells(emb)
-      val cbs = Stores.codebooks(emb)
-      val gen = Stores.split(emb, "vec_id")
-      val a = gen.older(100).select($"vec_id", $"embedding")
-      val b = gen.newer(100).select($"vec_id", $"embedding")
-      Stores.ivfPqByCell(s, cents, cbs, out,
-        Stores.ivfPqCodes(a, cents, cbs), Stores.ivfPqCodes(b, cents, cbs))
-      s.read.parquet(s"$out/cells").createOrReplaceTempView("cmp_ann_cells")
-      s.read.parquet(s"$out/codebooks").createOrReplaceTempView("cmp_ann_cbs")
-      s.read.parquet(s"$out/codes").createOrReplaceTempView("cmp_ann_codes")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW cmp_ann_tomb AS
-                 SELECT vec_id FROM cmp_ann_codes WHERE vec_id % 10 = 3""")
-      e.query(s"""CREATE OR REPLACE TEMPORARY VIEW cmp_ann_codes_v2 AS
-                 SELECT * FROM graft_store_compact('cmp_ann_codes', 'vec_id',
-                   'cmp_ann_tomb', '$out/codes_v2', 'cell', 1)""")
-      e.query("""SELECT vec_id, adc_score
-                 FROM graft_ann_stored('cmp_ann_codes_v2', 'cmp_ann_cells',
-                                       'cmp_ann_cbs', 'embeddings',
-                                       'vec_id', 'embedding', 0, 10, 2)""")
-    }),
     "e_sql_bm25_prf_join" -> ((s, d) => {
       import s.implicits._
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // batch PRF from SQL: stored-index views + the queries view into
       // the deferred batch-PRF TVF
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
@@ -1942,8 +1071,7 @@ object EngineQueries {
     }),
     "e_sql_snippet_join" -> ((s, d) => {
       import s.implicits._
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // batch snippets from SQL: bm25_join run view -> the batch
       // snippet TVF with per-query terms
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
@@ -1965,25 +1093,9 @@ object EngineQueries {
                                          'snj_queries', 'query_id',
                                          'doc_id', 'text', 'qtext', 12)""")
     }),
-    "e_sql_bm25_pruned" -> ((s, d) => {
-      import s.implicits._
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // bucket-partitioned stored serving from SQL: store prep in
-      // Scala (the e_sql_ann convention), the pruned TVF on top
-      val out = Stores.dir("bm25_index_pruned_sql")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      Stores.bm25ByBucket(out, Seq(Stores.bm25BucketIndex(docs)))
-      s.read.parquet(s"$out/postings").createOrReplaceTempView("bm25p_post")
-      s.read.parquet(s"$out/doclens").createOrReplaceTempView("bm25p_dl")
-      e.query("""SELECT doc_id, bm25
-                 FROM graft_bm25_pruned('bm25p_post', 'bm25p_dl', 'doc_id',
-                                        'hash,join,vector', 8, 25)""")
-    }),
     "e_sql_pipeline13" -> ((s, d) => {
       import s.implicits._
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       // the batch serving chain as pure TVF/view composition: the
       // bm25_join + knn_join legs ranked per query -> rrf_fuse_by ->
       // the batch-MMR TVF with rel = rrf
@@ -2023,162 +1135,8 @@ object EngineQueries {
                  FROM graft_mmr_join('p13_cand', 'query_id', 'doc_id',
                                      'embedding', 'rrf', 3, 0.7)""")
     }),
-    "e_sql_bm25_compact" -> ((s, d) => {
-      import s.implicits._
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // BM25 store compaction from SQL — the e_sql_ann_compact
-      // convention: store prep in Scala (same two-generation fixture
-      // as llm_bm25_compact), then tombstone view → TWO
-      // graft_store_compact rewrites (postings + doclens — the generic
-      // TVF serves any id-keyed store) → unchanged stored serving over
-      // the compacted views. Same fixture ⇒ the delete oracle gates it
-      val out = Stores.dir("bm25_index_compact_sql")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val gen = Stores.split(docs, "doc_id")
-      val a = gen.older(100).select($"doc_id", $"text")
-      val b = gen.newer(100).select($"doc_id", $"text")
-      Stores.bm25(out, Seq(a, b).map(Stores.bm25Index))
-      s.read.parquet(s"$out/postings").createOrReplaceTempView("bm25c_post")
-      s.read.parquet(s"$out/doclens").createOrReplaceTempView("bm25c_dl")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW bm25c_tomb AS
-                 SELECT doc_id FROM documents WHERE doc_id % 7 = 0""")
-      e.query(s"""CREATE OR REPLACE TEMPORARY VIEW bm25c_post_v2 AS
-                 SELECT * FROM graft_store_compact('bm25c_post', 'doc_id',
-                   'bm25c_tomb', '$out/postings_v2', '', 1)""")
-      e.query(s"""CREATE OR REPLACE TEMPORARY VIEW bm25c_dl_v2 AS
-                 SELECT * FROM graft_store_compact('bm25c_dl', 'doc_id',
-                   'bm25c_tomb', '$out/doclens_v2', '', 1)""")
-      e.query("""SELECT doc_id, bm25
-                 FROM graft_bm25_stored('bm25c_post_v2', 'bm25c_dl_v2',
-                                        'doc_id', 'hash,join,vector', 25)""")
-    }),
-    "e_sql_bm25_selective_compact" -> ((s, d) => {
-      import s.implicits._
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // partition-SELECTIVE compaction from SQL: the bucket-partitioned
-      // postings (two generations, the llm_bm25_selective_compact
-      // fixture) rewritten IN PLACE by the selective TVF — only
-      // tombstone-bearing tbucket partitions rewrite — then the pruned
-      // serve over the compacted store; the delete oracle gates it
-      val out = Stores.dir("bm25_selective_compact_sql")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val gen = Stores.split(docs, "doc_id")
-      val a = gen.older(100).select($"doc_id", $"text")
-      val b = gen.newer(100).select($"doc_id", $"text")
-      Stores.bm25ByBucket(out, Seq(a, b).map(Stores.bm25BucketIndex))
-      s.read.parquet(s"$out/postings").createOrReplaceTempView("bm25sc_post")
-      s.read.parquet(s"$out/doclens").createOrReplaceTempView("bm25sc_dl")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW bm25sc_tomb AS
-                 SELECT doc_id FROM documents WHERE doc_id % 7 = 0""")
-      e.query(s"""CREATE OR REPLACE TEMPORARY VIEW bm25sc_post_v2 AS
-                 SELECT * FROM graft_store_compact_selective('bm25sc_post',
-                   'doc_id', 'bm25sc_tomb', '$out/postings',
-                   '$out/postings_staging', 'tbucket')""")
-      e.query(s"""CREATE OR REPLACE TEMPORARY VIEW bm25sc_dl_v2 AS
-                 SELECT * FROM graft_store_compact('bm25sc_dl', 'doc_id',
-                   'bm25sc_tomb', '$out/doclens_v2', '', 1)""")
-      e.query("""SELECT doc_id, bm25
-                 FROM graft_bm25_pruned('bm25sc_post_v2', 'bm25sc_dl_v2',
-                                        'doc_id', 'hash,join,vector', 8, 25)""")
-    }),
-    "e_sql_ann_selective_compact" -> ((s, d) => {
-      import s.implicits._
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // selective compaction on the cell-partitioned codes store from
-      // SQL (the e_sql_ann_compact fixture, in-place selective rewrite)
-      val out = Stores.dir("ann_selective_compact_sql")
-      val emb = Tables.load(s, d, "embeddings")
-      val cents = Stores.seedCells(emb)
-      val cbs = Stores.codebooks(emb)
-      val gen = Stores.split(emb, "vec_id")
-      val a = gen.older(100).select($"vec_id", $"embedding")
-      val b = gen.newer(100).select($"vec_id", $"embedding")
-      Stores.ivfPqByCell(s, cents, cbs, out,
-        Stores.ivfPqCodes(a, cents, cbs), Stores.ivfPqCodes(b, cents, cbs))
-      s.read.parquet(s"$out/cells").createOrReplaceTempView("selann_cells")
-      s.read.parquet(s"$out/codebooks").createOrReplaceTempView("selann_cbs")
-      s.read.parquet(s"$out/codes").createOrReplaceTempView("selann_codes")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW selann_tomb AS
-                 SELECT vec_id FROM selann_codes WHERE vec_id % 10 = 3""")
-      e.query(s"""CREATE OR REPLACE TEMPORARY VIEW selann_codes_v2 AS
-                 SELECT * FROM graft_store_compact_selective('selann_codes',
-                   'vec_id', 'selann_tomb', '$out/codes',
-                   '$out/codes_staging', 'cell')""")
-      e.query("""SELECT vec_id, adc_score
-                 FROM graft_ann_stored('selann_codes_v2', 'selann_cells',
-                                       'selann_cbs', 'embeddings',
-                                       'vec_id', 'embedding', 0, 10, 2)""")
-    }),
-    "e_sql_fp_compact" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // fingerprint-store compaction from SQL — closes the twin matrix
-      // for this store (every verb Scala AND SQL): two generations
-      // written in Scala (the e_sql_fp_append write side), tombstone
-      // fps as a graft_fingerprint view, graft_store_compact rewrite,
-      // then the admission probe over the compacted view — clones of
-      // PURGED docs admit again, survivors' clones still bounce
-      val out = Stores.dir("fingerprint_store_compact_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents")
-        .select(col("doc_id"), col("text"))
-      val gen = Stores.split(docs, "doc_id")
-      Stores.fingerprints(s"$out/store", gen.older(150), gen.newer(150))
-      s.read.parquet(s"$out/store").createOrReplaceTempView("fpcmp_store")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW fpcmp_tomb AS
-                 SELECT DISTINCT graft_fingerprint(text) AS fp
-                 FROM documents WHERE doc_id % 7 = 0""")
-      e.query(s"""CREATE OR REPLACE TEMPORARY VIEW fpcmp_v2 AS
-                 SELECT * FROM graft_store_compact('fpcmp_store', 'fp',
-                   'fpcmp_tomb', '$out/store_v2', '', 1)""")
-      e.query("""WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 tail AS (SELECT doc_id, text FROM documents, m
-                          WHERE doc_id > mx - 300),
-                 inc AS (SELECT doc_id + 3000000 AS doc_id, text FROM tail
-                         UNION ALL
-                         SELECT doc_id + 4000000, concat(text, ' novel suffix')
-                         FROM tail)
-                 SELECT i.doc_id
-                 FROM inc i LEFT ANTI JOIN fpcmp_v2 f
-                   ON graft_fingerprint(i.text) = f.fp""")
-    }),
-    "e_sql_image_compact" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // dHash-store compaction from SQL — the image index's last
-      // twin-matrix hole closed: two generations written in Scala (the
-      // llm_image_compact fixture), doc-id tombstones purged via
-      // graft_store_compact, the edited-clone shard probed against the
-      // compacted view through the unchanged TVF
-      val out = Stores.dir("image_dhash_compact_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents")
-        .select(col("doc_id"), col("text"))
-      Stores.dHash(s"$out/store", Stores.media(docs).gens: _*)
-      s.read.parquet(s"$out/store").createOrReplaceTempView("imgcmp_store")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW imgcmp_tomb AS
-                 SELECT doc_id FROM imgcmp_store WHERE doc_id % 5 = 1""")
-      e.query(s"""CREATE OR REPLACE TEMPORARY VIEW imgcmp_v2 AS
-                 SELECT * FROM graft_store_compact('imgcmp_store', 'doc_id',
-                   'imgcmp_tomb', '$out/store_v2', '', 1)""")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW imgcmp_probe AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 sl AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND length(text) >= 400)
-                 SELECT doc_id + 3000000 AS doc_id,
-                        CAST(concat(substring(text, 1, 10), 'QQQQ',
-                                    substring(text, 15)) AS BINARY) AS payload
-                 FROM sl""")
-      e.query("""SELECT DISTINCT id_new, id_corpus, hamming
-                 FROM graft_image_probe('imgcmp_probe', 'imgcmp_v2',
-                                        'doc_id', 'payload', 3, 4)""")
-    }),
     "e_sql_knn_join" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW knn_queries AS
                  SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10""")
       e.query("""SELECT query_id, neighbor_id, cos_sim
@@ -2186,8 +1144,7 @@ object EngineQueries {
                                      'vec_id', 'embedding', 'embedding', 5, 1)""")
     }),
     "e_sql_knn_join_ivf" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW knn_queries AS
                  SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10""")
       e.query("""SELECT query_id, neighbor_id, cos_sim
@@ -2195,188 +1152,15 @@ object EngineQueries {
                                          'vec_id', 'embedding', 'embedding',
                                          8, 2, 5, 1)""")
     }),
-    // batch serving against the stored index from SQL: artifacts
-    // written in Scala (the write side), read back as plain views,
-    // served via the deferred TVF — same oracle as llm_knn_join_stored
-    "e_sql_knn_join_stored" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      val out = Stores.dir("knn_stored_sql")
-      val emb = Tables.load(s, d, "embeddings")
-      val cents = Stores.seedCells(emb)
-      val cbs = Stores.codebooks(emb)
-      Stores.ivfPq(s, cents, cbs, out,
-        Stores.ivfPqCodes(emb, cents, cbs))
-      s.read.parquet(s"$out/cells").createOrReplaceTempView("graft_knn_cells")
-      s.read.parquet(s"$out/codebooks").createOrReplaceTempView("graft_knn_cbs")
-      s.read.parquet(s"$out/codes").createOrReplaceTempView("graft_knn_codes")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW knn_queries AS
-                 SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10""")
-      e.query("""SELECT query_id, neighbor_id, adc_score
-                 FROM graft_knn_join_stored('graft_knn_codes', 'graft_knn_cells',
-                                            'graft_knn_cbs', 'knn_queries',
-                                            'vec_id', 'vec_id', 'embedding',
-                                            5, 2, 1)""")
-    }),
     // two-stage retrieval from one line of SQL (deferred TVF)
     "e_sql_ann_rerank" -> ((s, d) => via(s, d)(
       """SELECT * FROM graft_ann_rerank('embeddings', 'vec_id', 'embedding',
                                         0, 10, 8, 2, 4, 16, 8, 20)""")),
-    // the appended minhash index probed from SQL: generation A written
-    // in Scala, the admitted shard's delta frames parquet-APPENDED, the
-    // union read back as plain views and probed via the existing
-    // deferred probe TVF — same oracle as the full-corpus incremental
-    // probe, so a lost append hash-mismatches
-    "e_sql_minhash_append" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      val out = Stores.dir("minhash_index_append_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents")
-        .select(col("doc_id"), col("text"))
-      val gen = Stores.split(docs, "doc_id")
-      val a = gen.older(150).select(col("doc_id"), col("text"))
-      val b = gen.newer(150).select(col("doc_id"), col("text"))
-      val idxA = graft.operators.Dedup.minhashIndex(a, "doc_id", "text",
-        k = 16, nBands = 4)
-      Stores.minhash(idxA, out)
-      val delta = graft.operators.Dedup.minhashIndex(b, "doc_id", "text",
-        k = 16, nBands = 4)
-      delta.bands.write.mode("append").parquet(s"$out/bands")
-      delta.sets.write.mode("append").parquet(s"$out/sets")
-      s.read.parquet(s"$out/bands").createOrReplaceTempView("graft_mh_bands")
-      s.read.parquet(s"$out/sets").createOrReplaceTempView("graft_mh_sets")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_incoming_v AS
-                 SELECT doc_id + 3000000 AS doc_id, text FROM documents
-                 WHERE doc_id > (SELECT max(doc_id) - 300 FROM documents)""")
-      e.query("""SELECT * FROM graft_minhash_probe(
-                   'graft_mh_bands', 'graft_mh_sets', 'graft_incoming_v',
-                   'doc_id', 'text', 16, 4, 0.5)""")
-    }),
-    // batch two-stage retrieval from SQL: artifacts written in Scala,
-    // read back as views, served via the deferred rerank TVF
-    "e_sql_knn_join_rerank" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      val out = Stores.dir("knn_rerank_sql")
-      val emb = Tables.load(s, d, "embeddings")
-      val cents = Stores.seedCells(emb)
-      val cbs = Stores.codebooks(emb)
-      Stores.ivfPq(s, cents, cbs, out,
-        Stores.ivfPqCodes(emb, cents, cbs))
-      s.read.parquet(s"$out/cells").createOrReplaceTempView("graft_rr_cells")
-      s.read.parquet(s"$out/codebooks").createOrReplaceTempView("graft_rr_cbs")
-      s.read.parquet(s"$out/codes").createOrReplaceTempView("graft_rr_codes")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW knn_queries AS
-                 SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10""")
-      e.query("""SELECT query_id, neighbor_id, cos_sim
-                 FROM graft_knn_join_rerank('graft_rr_codes', 'graft_rr_cells',
-                                            'graft_rr_cbs', 'knn_queries',
-                                            'embeddings', 'vec_id', 'vec_id',
-                                            'embedding', 'embedding',
-                                            5, 2, 15, 1)""")
-    }),
-    // the appended ANN codes table served from SQL — same artifacts
-    // recipe as llm_ann_index_append (generation A's index + read-back
-    // encode of B + parquet append), probed via graft_ann_stored
-    "e_sql_ann_append" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      val out = Stores.dir("ann_index_append_sql")
-      import org.apache.spark.sql.functions.col
-      val emb = Tables.load(s, d, "embeddings")
-      val gen = Stores.split(emb, "vec_id")
-      val a = gen.older(100).select(col("vec_id"), col("embedding"))
-      val b = gen.newer(100).select(col("vec_id"), col("embedding"))
-      val cents = Stores.seedCells(a)
-      val cbs = Stores.codebooks(a)
-      Stores.ivfPq(s, cents, cbs, out,
-        Stores.ivfPqCodes(a, cents, cbs))
-      val (cents2, cbs2) = Stores.readIvfPq(s, out)
-      Stores.ivfPqCodes(b, cents2, cbs2)
-        .write.mode("append").parquet(s"$out/codes")
-      s.read.parquet(s"$out/cells").createOrReplaceTempView("graft_apnd_cells")
-      s.read.parquet(s"$out/codebooks").createOrReplaceTempView("graft_apnd_cbs")
-      s.read.parquet(s"$out/codes").createOrReplaceTempView("graft_apnd_codes")
-      e.query("""SELECT vec_id, adc_score
-                 FROM graft_ann_stored('graft_apnd_codes', 'graft_apnd_cells',
-                                       'graft_apnd_cbs', 'embeddings',
-                                       'vec_id', 'embedding', 0, 10, 2)""")
-    }),
-    // the cell-PARTITIONED store served from SQL: artifacts written
-    // partitionBy(cell) in Scala (the write side), graft_ann_stored
-    // probes it with the driver-literal cell filter — the scan opens
-    // only the probed cells' files; same llm_ann_ivf_pq oracle
-    "e_sql_ann_partition_prune" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      val out = Stores.dir("ann_index_part_sql")
-      val emb = Tables.load(s, d, "embeddings")
-      val cents = Stores.seedCells(emb)
-      val cbs = Stores.codebooks(emb)
-      Stores.ivfPqByCell(s, cents, cbs, out,
-        Stores.ivfPqCodes(emb, cents, cbs))
-      s.read.parquet(s"$out/cells").createOrReplaceTempView("graft_part_cells")
-      s.read.parquet(s"$out/codebooks").createOrReplaceTempView("graft_part_cbs")
-      s.read.parquet(s"$out/codes").createOrReplaceTempView("graft_part_codes")
-      e.query("""SELECT vec_id, adc_score
-                 FROM graft_ann_stored('graft_part_codes', 'graft_part_cells',
-                                       'graft_part_cbs', 'embeddings',
-                                       'vec_id', 'embedding', 0, 10, 2)""")
-    }),
-    // the batch serve with static probe-cell pruning from SQL — the
-    // graft_knn_join_pruned TVF over the partitioned store; output
-    // identical to the unpruned batch serve (same oracle)
-    "e_sql_knn_join_pruned" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      val out = Stores.dir("knn_stored_part_sql")
-      import org.apache.spark.sql.functions.col
-      val emb = Tables.load(s, d, "embeddings")
-      val cents = Stores.seedCells(emb)
-      val cbs = Stores.codebooks(emb)
-      Stores.ivfPqByCell(s, cents, cbs, out,
-        Stores.ivfPqCodes(emb, cents, cbs))
-      emb.filter(col("vec_id") < 10).select(col("vec_id"), col("embedding"))
-        .createOrReplaceTempView("graft_knnp_queries")
-      s.read.parquet(s"$out/cells").createOrReplaceTempView("graft_knnp_cells")
-      s.read.parquet(s"$out/codebooks").createOrReplaceTempView("graft_knnp_cbs")
-      s.read.parquet(s"$out/codes").createOrReplaceTempView("graft_knnp_codes")
-      e.query("""SELECT query_id, neighbor_id, adc_score
-                 FROM graft_knn_join_pruned('graft_knnp_codes',
-                        'graft_knnp_cells', 'graft_knnp_cbs',
-                        'graft_knnp_queries', 'vec_id', 'vec_id',
-                        'embedding', 5, 2, 1)""")
-    }),
-    // residual serving from SQL: residual-trained artifacts written in
-    // Scala (cells + residual codebooks + cell-partitioned residual
-    // codes), served by the graft_ann_residual_stored TVF; same oracle
-    // as the in-memory residual path
-    "e_sql_ann_residual_stored" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      val out = Stores.dir("ann_residual_store_sql")
-      val emb = Tables.load(s, d, "embeddings")
-      val sim = graft.operators.Similarity
-      val cents = Stores.seedCells(emb)
-      val cbs = sim.pqCodebooksResidual(emb, "vec_id", "embedding", cents,
-        m = 4, subDim = 16, nCodes = 8)
-      Stores.ivfPqByCell(s, cents, cbs, out,
-        sim.ivfPqEncodeResidual(emb, "vec_id", "embedding", cents, cbs, 16))
-      s.read.parquet(s"$out/cells").createOrReplaceTempView("graft_res_cells")
-      s.read.parquet(s"$out/codebooks").createOrReplaceTempView("graft_res_cbs")
-      s.read.parquet(s"$out/codes").createOrReplaceTempView("graft_res_codes")
-      e.query("""SELECT vec_id, adc_score
-                 FROM graft_ann_residual_stored('graft_res_codes',
-                        'graft_res_cells', 'graft_res_cbs', 'embeddings',
-                        'vec_id', 'embedding', 0, 10, 2)""")
-    }),
     // the crawl front door composed PURELY from TVFs through views:
     // url filter → domain cap → gopher gate → token budget → shards —
     // same oracle as llm_pipeline7
     "e_sql_pipeline7" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_url_docs AS
                  SELECT doc_id,
                    CASE CAST(doc_id % 6 AS INT)
@@ -2415,8 +1199,7 @@ object EngineQueries {
     // the LR quality filter from SQL: labeled fixture as views, train +
     // score via the deferred TVF — same oracle as llm_quality_classifier
     "e_sql_quality_classifier" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_lr_pos AS
                  SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0""")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_lr_neg AS
@@ -2426,65 +1209,10 @@ object EngineQueries {
                    'graft_lr_pos', 'graft_lr_neg', 'documents',
                    'doc_id', 'text', 64, 2)""")
     }),
-    // the SERVING side decoupled: weights trained + persisted in Scala
-    // (the write side), the corpus scored from the read-back weight
-    // view via the LAZY scoring TVF — same oracle again, so any drift
-    // through the weight store hash-mismatches
-    "e_sql_lr_score_stored" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      val out = Stores.dir("quality_lr_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents").select(col("doc_id"), col("text"))
-      Stores.lrWeights(s, docs, out)
-      s.read.parquet(out).createOrReplaceTempView("graft_lr_weights")
-      e.query("""SELECT * FROM graft_lr_score('graft_lr_weights', 'documents',
-                                              'doc_id', 'text', 64)""")
-    }),
-    // the EVAL panel from SQL: weights trained + persisted in Scala,
-    // the labeled views defined in SQL, the threshold report via the
-    // lazy eval TVF — the llm_lr_eval oracle gates it
-    "e_sql_lr_eval" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      val out = Stores.dir("quality_lr_eval_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents").select(col("doc_id"), col("text"))
-      Stores.lrWeights(s, docs, out)
-      s.read.parquet(out).createOrReplaceTempView("graft_lr_eval_w")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_lre_pos AS
-                 SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0""")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_lre_neg AS
-                 SELECT doc_id, upper(text) AS text FROM documents
-                 WHERE doc_id % 2 = 1""")
-      e.query("""SELECT * FROM graft_lr_eval('graft_lr_eval_w',
-                   'graft_lre_pos', 'graft_lre_neg', 'doc_id', 'text', 64)""")
-    }),
-    "e_sql_lr_calibration" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // the reliability table from SQL: weights trained + stored in
-      // Scala (the write side), labeled views, the calibration TVF
-      val out = Stores.dir("quality_lr_calibration_sql")
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.load(s, d, "documents")
-        .select(col("doc_id"), col("text"))
-      Stores.lrWeights(s, docs, out)
-      s.read.parquet(out).createOrReplaceTempView("graft_lrc_w")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_lrc_pos AS
-                 SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0""")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_lrc_neg AS
-                 SELECT doc_id, upper(text) AS text FROM documents
-                 WHERE doc_id % 2 = 1""")
-      e.query("""SELECT * FROM graft_lr_calibration('graft_lrc_pos',
-                   'graft_lrc_neg', 'doc_id', 'text', 'graft_lrc_w',
-                   64, 10)""")
-    }),
     // the crawl-domain dashboard from one line of SQL over the same
     // URL fixture view as e_sql_url_filter
     "e_sql_domain_report" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_url_docs AS
                  SELECT doc_id,
                    CASE CAST(doc_id % 6 AS INT)
@@ -2500,8 +1228,7 @@ object EngineQueries {
     }),
     // URL/domain admission from SQL over the same deterministic fixture
     "e_sql_url_filter" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_url_docs AS
                  SELECT doc_id,
                    CASE CAST(doc_id % 6 AS INT)
@@ -2519,8 +1246,7 @@ object EngineQueries {
                                                 'url', 'graft_url_blocklist')""")
     }),
     "e_sql_semdedup" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_semdup_corpus AS
                  SELECT vec_id, embedding FROM embeddings
                  UNION ALL
@@ -2551,8 +1277,7 @@ object EngineQueries {
       "SELECT * FROM graft_winnow('documents', 'doc_id', 'text', 3, 4)")),
     // exact shared-span extents from SQL over the planted-overlap view
     "e_sql_overlap_extents" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_ov_docs AS
                  SELECT doc_id, text FROM documents
                  UNION ALL
@@ -2563,8 +1288,7 @@ object EngineQueries {
     }),
     // exact-substring removal from SQL over the same planted view
     "e_sql_substr_dedup" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_ov_docs AS
                  SELECT doc_id, text FROM documents
                  UNION ALL
@@ -2577,8 +1301,7 @@ object EngineQueries {
     // views — C4 rules, normalize scalar, line dedup, quantile filter,
     // domain cap, shards — zero Scala between stages
     "e_sql_pipeline3" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW p3_fix AS
                  SELECT doc_id, source,
                    text || ' end.' || chr(10) || 'no terminal punctuation line' || chr(10) ||
@@ -2615,8 +1338,7 @@ object EngineQueries {
     // llm_pipeline4 Scala twin always had this shape; 7.5s -> Scala-twin
     // parity on the driver bench)
     "e_sql_pipeline4" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW p4_scored AS
                  SELECT d.doc_id, d.text, graft_quality(d.text) AS quality
                  FROM documents d
@@ -2639,8 +1361,7 @@ object EngineQueries {
     // TVF keep -> quality scalar as the sampling weight -> per-language
     // weighted-priority TVF -> shard TVF
     "e_sql_pipeline6" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW p6_scored AS
                  SELECT d.doc_id, d.lang, d.text, graft_quality(d.text) AS quality
                  FROM documents d
@@ -2659,8 +1380,7 @@ object EngineQueries {
     // normalize scalars -> gopher TVF keep -> keep-first dedup on the
     // fingerprint scalar -> shard TVF
     "e_sql_pipeline5" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query(s"""CREATE OR REPLACE TEMPORARY VIEW p5_clean AS
                  SELECT doc_id,
                         graft_normalize(graft_strip_html(
@@ -2684,61 +1404,11 @@ object EngineQueries {
       e.query("""SELECT doc_id, shard, order_key
                  FROM graft_shards('p5_dedup', 'text', 8, 'p5:')""")
     }),
-    "e_sql_pipeline14" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
-      // crawl-to-corpus from SQL: the gzip-member WARC fixture written
-      // and the extractor read-back registered in Scala (the source
-      // side — the stored-artifact twin convention), the whole prep
-      // chain — strip, normalize, gopher, dedup, PACK — in pure TVF
-      // composition
-      val out = Stores.dir("pipeline14_warc_sql")
-      import org.apache.spark.sql.functions.{col, concat, lit}
-      val docs = Tables.load(s, d, "documents")
-        .select(col("doc_id"), col("text"))
-      val base = docs.unionAll(
-        docs.select((col("doc_id") + 700000).as("doc_id"), col("text")))
-      val wrapped = base.select(col("doc_id"),
-        concat(lit("http://graft.local/doc/"), col("doc_id")).as("uri"),
-        concat(lit(LlmQueries.htmlPre), col("text"),
-          lit(LlmQueries.htmlPost)).as("html"))
-      graft.sources.Warc.write(wrapped, "doc_id", "uri", "html", out,
-        nFiles = 4, gzip = true)
-      s.read.format("graft-extractor").option("extractor", "warc")
-        // split size derived from the ACTUAL part-file size (≈4 split
-        // boundaries per file, 256 KiB cap — same task count as the
-        // fixed 256 KiB at bench scale, but resync coverage holds at
-        // any corpus scale; ADVICE r14)
-        .option("path", out).option("splitBytes",
-          graft.sources.Warc.resyncSplitBytes(s, out).toString).load()
-        .createOrReplaceTempView("p14_records")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW p14_clean AS
-                 SELECT CAST(regexp_extract(record_id, '[0-9]+', 0) AS BIGINT)
-                          AS doc_id,
-                        graft_normalize(graft_strip_html(payload)) AS text
-                 FROM p14_records""")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW p14_kept AS
-                 SELECT c.doc_id, c.text
-                 FROM p14_clean c
-                 JOIN graft_gopher('p14_clean', 'doc_id', 'text',
-                        10, 100000, 2.0, 10.0, 0.2, 1) g
-                   ON g.doc_id = c.doc_id
-                 WHERE g.keep""")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW p14_dedup AS
-                 SELECT doc_id, text FROM (
-                   SELECT doc_id, text, row_number() OVER (
-                     PARTITION BY graft_fingerprint(text)
-                     ORDER BY doc_id) AS rn
-                   FROM p14_kept) WHERE rn = 1""")
-      e.query("""SELECT doc_id, n_toks, token_offset, first_seq, last_seq
-                 FROM graft_pack_offsets('p14_dedup', 'doc_id', 'text', 512, 64)""")
-    }),
     // DSIR importance weights from SQL: the target corpus is just
     // another SQL view — any predicate can define "what good data looks
     // like" without a line of Scala
     "e_sql_dsir" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_dsir_target AS
                  SELECT doc_id, text FROM documents WHERE lang = 'en'""")
       e.query(
@@ -2752,8 +1422,7 @@ object EngineQueries {
     // span dedup feed each other through SQL views; the shard TVF reads
     // the cleaned view — three operators chained without a line of Scala
     "e_sql_pipeline2" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      val e = new Engine(s)
+      val e = engine(s, d)
       e.query("""CREATE OR REPLACE TEMPORARY VIEW graft_p2_kept AS
                  SELECT d.doc_id, d.text FROM documents d
                  JOIN (SELECT doc_id
@@ -2831,14 +1500,9 @@ object EngineQueries {
     "e_sql_sample_weighted_strat" -> LlmQueries.oracle("llm_sample_weighted_strat"),
     "e_sql_tfidf" -> LlmQueries.oracle("llm_tfidf"),
     "e_sql_bm25" -> LlmQueries.oracle("llm_bm25"),
-    "e_sql_bm25_stored" -> LlmQueries.oracle("llm_bm25"),
-    "e_sql_bm25_join" -> LlmQueries.oracle("llm_bm25_join"),
-    "e_sql_bm25_append" -> LlmQueries.oracle("llm_bm25"),
-    "e_sql_bm25_delete" -> LlmQueries.oracle("llm_bm25_delete"),
     "e_sql_hybrid_rrf" -> LlmQueries.oracle("llm_hybrid_rrf"),
     "e_sql_hybrid_join" -> LlmQueries.oracle("llm_hybrid_join"),
     "e_sql_retrieval_eval" -> LlmQueries.oracle("llm_retrieval_eval"),
-    "e_sql_pipeline11" -> LlmQueries.oracle("llm_pipeline11"),
     "e_sql_snippet" -> LlmQueries.oracle("llm_snippet"),
     "e_sql_mmr" -> LlmQueries.oracle("llm_mmr"),
     "e_sql_bm25_prf" -> LlmQueries.oracle("llm_bm25_prf"),
@@ -2881,27 +1545,20 @@ object EngineQueries {
     "e_sql_span_dedup" -> LlmQueries.oracle("llm_span_dedup"),
     "e_sql_c4_filters" -> LlmQueries.oracle("llm_c4_filters"),
     "e_sql_decontaminate_bloom" -> LlmQueries.oracle("llm_decontaminate"),
-    "e_sql_decontam_roundtrip" -> LlmQueries.oracle("llm_decontaminate"),
     "e_sql_normalize" -> LlmQueries.oracle("llm_normalize"),
     "e_sql_html_strip" -> LlmQueries.oracle("llm_html_strip"),
     "e_sql_pipeline5" -> LlmQueries.oracle("llm_pipeline5"),
-    "e_sql_pipeline14" -> LlmQueries.oracle("llm_pipeline14"),
     "e_sql_pipeline6" -> LlmQueries.oracle("llm_pipeline6"),
-    "e_sql_minhash_probe" -> LlmQueries.oracle("llm_minhash_incr"),
     "e_sql_script" -> LlmQueries.oracle("llm_script"),
     "e_sql_bigram_lp" -> LlmQueries.oracle("llm_bigram_lp"),
     "e_sql_trigram_kn" -> LlmQueries.oracle("llm_trigram_kn"),
-    "e_sql_trigram_kn_stored" -> LlmQueries.oracle("llm_trigram_kn_stored"),
-    "e_sql_trigram_kn_append" -> LlmQueries.oracle("llm_trigram_kn_stored"),
     "e_sql_unigram_train" -> LlmQueries.oracle("llm_unigram_tok_train"),
-    "e_sql_unigram_tokenize" -> LlmQueries.oracle("llm_unigram_tokenize"),
     "e_sql_temperature_mix" -> LlmQueries.oracle("llm_temperature_mix"),
     "e_sql_corpus_report" -> LlmQueries.oracle("llm_corpus_report"),
     "e_sql_line_dedup" -> LlmQueries.oracle("llm_line_dedup"),
     "e_sql_semdedup" -> LlmQueries.oracle("llm_semdedup"),
     "e_sql_embed_outliers" -> LlmQueries.oracle("llm_embed_outliers"),
     "e_sql_knn_join" -> LlmQueries.oracle("llm_knn_join"),
-    "e_sql_ann_stored" -> LlmQueries.oracle("llm_ann_ivf_pq"),
     "e_sql_sentence_filter" -> LlmQueries.oracle("llm_sentence_filter"),
     "e_sql_cms_heavy_hitters" -> LlmQueries.oracle("llm_cms_heavy_hitters"),
     "e_sql_distinct_n" -> LlmQueries.oracle("llm_distinct_n"),
@@ -2916,44 +1573,19 @@ object EngineQueries {
     "e_sql_bpe_count" -> LlmQueries.oracle("llm_bpe_count"),
     "e_sql_bpe_tokenize" -> LlmQueries.oracle("llm_bpe_tokenize"),
     "e_sql_bpe_vocab" -> LlmQueries.oracle("llm_bpe_vocab"),
-    "e_sql_image_incr" -> LlmQueries.oracle("llm_image_incr"),
-    "e_sql_image_append" -> LlmQueries.oracle("llm_image_incr"),
     "e_sql_image_clusters" -> LlmQueries.oracle("llm_image_clusters"),
-    "e_sql_fp_append" -> LlmQueries.oracle("llm_exact_incr"),
-    "e_sql_ann_delete" -> LlmQueries.oracle("llm_ann_index_delete"),
-    "e_sql_ann_compact" -> LlmQueries.oracle("llm_ann_index_compact"),
-    "e_sql_bm25_compact" -> LlmQueries.oracle("llm_bm25_compact"),
-    "e_sql_ann_selective_compact" ->
-      LlmQueries.oracle("llm_ann_selective_compact"),
-    "e_sql_bm25_selective_compact" ->
-      LlmQueries.oracle("llm_bm25_selective_compact"),
-    "e_sql_fp_compact" -> LlmQueries.oracle("llm_fp_compact"),
-    "e_sql_image_compact" -> LlmQueries.oracle("llm_image_compact"),
-    "e_sql_bm25_pruned" -> LlmQueries.oracle("llm_bm25_pruned"),
     "e_sql_snippet_join" -> LlmQueries.oracle("llm_snippet_join"),
     "e_sql_bm25_prf_join" -> LlmQueries.oracle("llm_bm25_prf_join"),
     "e_sql_pipeline13" -> LlmQueries.oracle("llm_pipeline13"),
     "e_sql_ann_recall" -> LlmQueries.oracle("llm_ann_recall"),
-    "e_sql_ann_sq_stored" -> LlmQueries.oracle("llm_ann_sq_stored"),
-    "e_sql_ann_sq_append" -> LlmQueries.oracle("llm_ann_sq_append"),
-    "e_sql_ann_ivf_sq_stored" -> LlmQueries.oracle("llm_ann_ivf_sq_stored"),
-    "e_sql_image_delete" -> LlmQueries.oracle("llm_image_delete"),
     "e_sql_audio_fp" -> LlmQueries.oracle("llm_audio_fp"),
     "e_sql_audio_dups" -> LlmQueries.oracle("llm_audio_dups"),
-    "e_sql_audio_probe" -> LlmQueries.oracle("llm_audio_probe"),
     // the SQL-gated audio lifecycle twins share the Scala verbs'
     // oracles: append serves like the full-slice store, delete/compact
     // like the purge view
-    "e_sql_audio_append" -> LlmQueries.oracle("llm_audio_probe"),
-    "e_sql_audio_delete" -> LlmQueries.oracle("llm_audio_delete"),
-    "e_sql_audio_compact" -> LlmQueries.oracle("llm_audio_delete"),
     // the video family's SQL twins share the Scala verbs' oracles
     "e_sql_video_frames" -> LlmQueries.oracle("llm_video_frames"),
     "e_sql_video_dups" -> LlmQueries.oracle("llm_video_dups"),
-    "e_sql_video_probe" -> LlmQueries.oracle("llm_video_probe"),
-    "e_sql_video_append" -> LlmQueries.oracle("llm_video_probe"),
-    "e_sql_video_delete" -> LlmQueries.oracle("llm_video_delete"),
-    "e_sql_video_compact" -> LlmQueries.oracle("llm_video_delete"),
     "e_sql_ann_sq" -> LlmQueries.oracle("llm_ann_sq"),
     "e_sql_ann_ivf_sq" -> LlmQueries.oracle("llm_ann_ivf_sq"),
     "e_sql_bpe_train" -> LlmQueries.oracle("llm_bpe_train"),
@@ -2963,11 +1595,7 @@ object EngineQueries {
     "e_sql_hybrid_eval" -> LlmQueries.oracle("llm_hybrid_eval"),
     "e_sql_bpe_roundtrip" -> LlmQueries.oracle("llm_bpe_roundtrip"),
     "e_sql_pipeline8" -> LlmQueries.oracle("llm_pipeline8"),
-    "e_sql_pipeline9" -> LlmQueries.oracle("llm_pipeline9"),
     "e_sql_admission_selfdedup" -> LlmQueries.oracle("llm_admission_selfdedup"),
-    "e_sql_admission_selfdedup_media" ->
-      LlmQueries.oracle("llm_admission_selfdedup_media"),
-    "e_sql_minhash_delete" -> LlmQueries.oracle("llm_minhash_index_delete"),
     "e_sql_shards" -> LlmQueries.oracle("llm_shards"),
     "e_sql_span_dedup_doc" -> LlmQueries.oracle("llm_span_dedup_doc"),
     "e_sql_gopher" -> LlmQueries.oracle("llm_gopher"),
@@ -2981,20 +1609,10 @@ object EngineQueries {
     "e_sql_substr_dedup" -> LlmQueries.oracle("llm_substr_dedup"),
     "e_sql_pipeline2" -> LlmQueries.oracle("llm_pipeline2"),
     "e_sql_pipeline3" -> LlmQueries.oracle("llm_pipeline3"),
-    "e_sql_knn_join_stored" -> LlmQueries.oracle("llm_knn_join_stored"),
     "e_sql_ann_rerank" -> LlmQueries.oracle("llm_ann_rerank"),
-    "e_sql_minhash_append" -> LlmQueries.oracle("llm_minhash_incr"),
     "e_sql_url_filter" -> LlmQueries.oracle("llm_url_filter"),
-    "e_sql_knn_join_rerank" -> LlmQueries.oracle("llm_knn_join_rerank"),
-    "e_sql_ann_append" -> LlmQueries.oracle("llm_ann_ivf_pq"),
-    "e_sql_ann_partition_prune" -> LlmQueries.oracle("llm_ann_ivf_pq"),
-    "e_sql_knn_join_pruned" -> LlmQueries.oracle("llm_knn_join_stored"),
-    "e_sql_ann_residual_stored" -> LlmQueries.oracle("llm_ann_ivf_pq_residual"),
     "e_sql_domain_report" -> LlmQueries.oracle("llm_domain_report"),
     "e_sql_quality_classifier" -> LlmQueries.oracle("llm_quality_classifier"),
-    "e_sql_lr_eval" -> LlmQueries.oracle("llm_lr_eval"),
-    "e_sql_lr_calibration" -> LlmQueries.oracle("llm_lr_calibration"),
     "e_sql_pipeline7" -> LlmQueries.oracle("llm_pipeline7"),
-    "e_sql_lr_score_stored" -> LlmQueries.oracle("llm_quality_classifier")
   )
 }

@@ -701,23 +701,6 @@ object LlmQueries {
       Dedup.decontaminateBloom(corpus, ev, "doc_id", "text", n = 13,
         expectedItems = 1L << 16, numBits = 1L << 20)
     }),
-    "llm_decontam_roundtrip" -> ((s, d) => {
-      import s.implicits._
-      // the PRODUCTION admission-control composition: build the eval
-      // decontamination index once, persist sketch + hash frame to
-      // parquet, reconstruct from the files, probe the corpus — same
-      // fixture and oracle as llm_decontaminate_bloom, so any drift
-      // through the storage round-trip hash-mismatches
-      val out = Stores.dir("decontam_index")
-      val docs = Tables.load(s, d, "documents")
-      val gen = Stores.split(docs, "doc_id")
-      val ev = gen.newer(100).select($"doc_id", $"text")
-      val corpus = gen.older(100).select($"doc_id", $"text")
-      val idx = Stores.decontamIndex(ev)
-      Stores.decontam(idx, out)
-      val stored = Stores.readDecontam(s, out)
-      Dedup.decontaminateStored(corpus, stored, "doc_id", "text")
-    }),
     "llm_contamination" -> ((s, d) => {
       import s.implicits._
       // graded eval-overlap: the llm_decontaminate fixture (eval =
@@ -900,63 +883,6 @@ object LlmQueries {
           m = 4, subDim = 16, nCodes = 8),
         subDim = 16, queryId = 0, k = 10, probes = 2)
     }),
-    "llm_ann_residual_stored" -> ((s, d) => {
-      // the residual index SERVED FROM STORAGE, cell-partitioned: same
-      // layout as the no-residual store (partition pruning, appends,
-      // takedown all apply unchanged); identical output to the
-      // in-memory residual path — same oracle, so artifact drift
-      // hash-mismatches
-      val out = Stores.dir("ann_residual_store")
-      val emb = Tables.load(s, d, "embeddings")
-      val cents = Stores.seedCells(emb)
-      val cbs = Similarity.pqCodebooksResidual(emb, "vec_id", "embedding",
-        cents, m = 4, subDim = 16, nCodes = 8)
-      Stores.putByCell(s"$out/codes",
-        Similarity.ivfPqEncodeResidual(emb, "vec_id", "embedding", cents, cbs, 16))
-      Similarity.ivfPqTopKResidualStored(s.read.parquet(s"$out/codes"),
-        "vec_id", cents, cbs, subDim = 16,
-        Similarity.queryVecOf(emb, "vec_id", "embedding", 0),
-        k = 10, probes = 2, excludeId = Some(0L))
-    }),
-    "llm_ann_index_roundtrip" -> ((s, d) => {
-      // the COMPLETE ANN serving index through storage: cells,
-      // codebooks, and cell-tagged codes written as three plain parquet
-      // tables, reconstructed from the files, served via stored IVF-PQ
-      // — identical output to the in-memory llm_ann_ivf_pq (same
-      // oracle), so any artifact drift hash-mismatches. After the one
-      // encode pass the vectors are never read again; the query vector
-      // arrives explicitly (the serving coordinator holds it)
-      val out = Stores.dir("ann_index")
-      val emb = Tables.load(s, d, "embeddings")
-      val cents = Stores.seedCells(emb)
-      val cbs = Stores.codebooks(emb)
-      Stores.ivfPq(s, cents, cbs, out,
-        Stores.ivfPqCodes(emb, cents, cbs))
-      val (cents2, cbs2) = Stores.readIvfPq(s, out)
-      Similarity.ivfPqTopKStored(s.read.parquet(s"$out/codes"), "vec_id",
-        cents2, cbs2, subDim = 16,
-        Similarity.queryVecOf(emb, "vec_id", "embedding", 0),
-        k = 10, probes = 2, excludeId = Some(0L))
-    }),
-    "llm_ann_partition_prune" -> ((s, d) => {
-      // the 100 TB serving claim made checkable: the codes table is
-      // WRITTEN partitionBy("cell") — the on-disk layout a production
-      // index uses — and stored serving probes it with a literal
-      // `cell IN (...)` filter, so the scan opens ONLY the probed
-      // cells' files (PlanSpec pins PartitionFilters on the cell key).
-      // Same artifacts and parameters as llm_ann_index_roundtrip ⇒ the
-      // same llm_ann_ivf_pq oracle — a pruning bug that drops or adds
-      // cells hash-mismatches
-      val out = Stores.dir("ann_index_part")
-      val emb = Tables.load(s, d, "embeddings")
-      val cents = Stores.seedCells(emb)
-      val cbs = Stores.codebooks(emb)
-      Stores.putByCell(s"$out/codes", Stores.ivfPqCodes(emb, cents, cbs))
-      Similarity.ivfPqTopKStored(s.read.parquet(s"$out/codes"), "vec_id",
-        cents, cbs, subDim = 16,
-        Similarity.queryVecOf(emb, "vec_id", "embedding", 0),
-        k = 10, probes = 2, excludeId = Some(0L))
-    }),
     "llm_ann_sq" -> ((s, d) =>
       // int8 scalar-quantized serving (the SQ rung of the quantization
       // family): per-vector max-abs scale + signed-byte codes, scored
@@ -965,17 +891,6 @@ object LlmQueries {
       // bit-for-bit (floor-based round-half-up is engine-portable)
       Similarity.sqTopK(Tables.load(s, d, "embeddings"),
         "vec_id", "embedding", queryId = 0, k = 10)),
-    "llm_ann_sq_stored" -> ((s, d) => {
-      // the SQ path THROUGH STORAGE: int8-valued codes + one double
-      // scale per vector written to parquet, read back, served — same
-      // oracle as the in-memory form, so storage drift hash-mismatches
-      val out = Stores.dir("sq_codes")
-      val emb = Tables.load(s, d, "embeddings")
-      Stores.sq(out, emb)
-      Similarity.sqTopKStored(s.read.parquet(out), "vec_id",
-        Similarity.queryVecOf(emb, "vec_id", "embedding", 0),
-        k = 10, excludeId = Some(0L))
-    }),
     "llm_ann_ivf_sq" -> ((s, d) => {
       // the IVF×SQ composition: coarse cells prune, int8 dequant cosine
       // scores the probed cells — in-memory form composes THROUGH the
@@ -984,35 +899,6 @@ object LlmQueries {
       Similarity.ivfSqTopK(emb, "vec_id", "embedding",
         Stores.seedCells(emb),
         queryId = 0, k = 10, probes = 2)
-    }),
-    "llm_ann_ivf_sq_stored" -> ((s, d) => {
-      // the IVF×SQ store at its 100 TB layout: codes partitionBy(cell),
-      // serving probes with the driver-literal cell filter — static
-      // partition pruning (PlanSpec pins PartitionFilters); same oracle
-      // as the in-memory form
-      val out = Stores.dir("ivf_sq_codes")
-      val emb = Tables.load(s, d, "embeddings")
-      val cents = Stores.seedCells(emb)
-      Stores.ivfSqCodes(out, emb, cents)
-      Similarity.ivfSqTopKStored(s.read.parquet(out), "vec_id", cents,
-        Similarity.queryVecOf(emb, "vec_id", "embedding", 0),
-        k = 10, probes = 2, excludeId = Some(0L))
-    }),
-    "llm_ann_sq_append" -> ((s, d) => {
-      import s.implicits._
-      // SQ index MAINTENANCE: per-row encode means the delta IS the
-      // append (the fp/dHash symmetry, no artifacts to drift) — gen A
-      // written, gen B's codes parquet-appended, the union served; same
-      // oracle as llm_ann_sq, so a lost append hash-mismatches
-      val out = Stores.dir("sq_codes_append")
-      val emb = Tables.load(s, d, "embeddings")
-      val gen = Stores.split(emb, "vec_id")
-      val a = gen.older(100).select($"vec_id", $"embedding")
-      val b = gen.newer(100).select($"vec_id", $"embedding")
-      Stores.sq(out, a, b)
-      Similarity.sqTopKStored(s.read.parquet(out), "vec_id",
-        Similarity.queryVecOf(emb, "vec_id", "embedding", 0),
-        k = 10, excludeId = Some(0L))
     }),
     "llm_ann_pq_stored" -> ((s, d) => {
       // the PQ SERVING path: encode once, write the m-int code table to
@@ -1087,53 +973,6 @@ object LlmQueries {
     "llm_tfidf" -> ((s, d) =>
       TextAnalysis.tfidfTopTerms(
         Tables.load(s, d, "documents"), "doc_id", "text", topK = 3)),
-    "llm_bm25_stored" -> ((s, d) => {
-      import s.implicits._
-      // retrieval THROUGH the inverted index: postings + doc-length
-      // sidecar written once (index once, query forever — serving
-      // never re-tokenizes the corpus), read back, served. Same oracle
-      // as llm_bm25, so storage drift hash-mismatches
-      val out = Stores.dir("bm25_index")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      Stores.bm25(out, Seq(Stores.bm25Index(docs)))
-      TextAnalysis.bm25TopKStored(s.read.parquet(s"$out/postings"),
-        s.read.parquet(s"$out/doclens"), "doc_id",
-        queryTerms = Seq("hash", "join", "vector"), k = 25)
-    }),
-    "llm_bm25_join" -> ((s, d) => {
-      import s.implicits._
-      // BATCH retrieval over the stored index — the serving-fleet
-      // shape (the knn_join symmetry): three queries, one of which
-      // matches nothing (absent from the output, not zero-scored);
-      // the batch's distinct terms become a driver-literal pushed In
-      // on the postings scan (the probe-cell-union recipe)
-      val out = Stores.dir("bm25_index_join")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      Stores.bm25(out, Seq(Stores.bm25Index(docs)))
-      val queries = Seq((1, "hash join"), (2, "vector scan slow"),
-        (3, "zzzunknown")).toDF("query_id", "qtext")
-      TextAnalysis.bm25Join(s.read.parquet(s"$out/postings"),
-        s.read.parquet(s"$out/doclens"), queries,
-        "doc_id", "query_id", "qtext", k = 10)
-    }),
-    "llm_bm25_append" -> ((s, d) => {
-      import s.implicits._
-      // inverted-index MAINTENANCE: postings are per-doc rows, so the
-      // delta IS the append (the fp/dHash/SQ symmetry — df and corpus
-      // stats are RECOMPUTED from the store at query time, so no
-      // global statistic goes stale): generation A written, generation
-      // B's postings + doc lengths parquet-appended, the union served;
-      // same oracle as llm_bm25 — a lost append hash-mismatches
-      val out = Stores.dir("bm25_index_append")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val gen = Stores.split(docs, "doc_id")
-      val a = gen.older(100).select($"doc_id", $"text")
-      val b = gen.newer(100).select($"doc_id", $"text")
-      Stores.bm25(out, Seq(a, b).map(Stores.bm25Index))
-      TextAnalysis.bm25TopKStored(s.read.parquet(s"$out/postings"),
-        s.read.parquet(s"$out/doclens"), "doc_id",
-        queryTerms = Seq("hash", "join", "vector"), k = 25)
-    }),
     "llm_corpus_kl" -> ((s, d) => {
       import s.implicits._
       // corpus drift between two crawl generations (reference = all but
@@ -1153,70 +992,6 @@ object LlmQueries {
       // ln the only libm call, hardened by the round-4 rank grid)
       TextAnalysis.bm25TopK(Tables.load(s, d, "documents"), "doc_id",
         "text", queryTerms = Seq("hash", "join", "vector"), k = 25)),
-    "llm_bm25_delete" -> ((s, d) => {
-      import s.implicits._
-      // inverted-index TAKEDOWN (the minhash/fp/dHash store symmetry):
-      // postings and the doc-length sidecar are per-doc rows, so the
-      // tombstone anti-join IS the delete — and because df and corpus
-      // stats are recomputed from the store at query time, the removed
-      // docs stop influencing every score component (df, N, avgdl), not
-      // just the result list. Oracle: the llm_bm25 algebra over the
-      // remaining corpus.
-      val out = Stores.dir("bm25_index_delete")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      Stores.bm25(out, Seq(Stores.bm25Index(docs)))
-      val tomb = docs.select($"doc_id").filter($"doc_id" % 7 === 0)
-      TextAnalysis.bm25TopKStored(
-        Dedup.storePurge(s.read.parquet(s"$out/postings"), "doc_id", tomb),
-        Dedup.storePurge(s.read.parquet(s"$out/doclens"), "doc_id", tomb),
-        "doc_id", queryTerms = Seq("hash", "join", "vector"), k = 25)
-    }),
-    "llm_bm25_compact" -> ((s, d) => {
-      import s.implicits._
-      // the retrieval store's maintenance lifecycle CLOSED (append ✓
-      // delete ✓ → compact): a postings store holding two appended
-      // generations plus a tombstone set is physically rewritten to
-      // versioned paths — purged docs gone from the FILES, the two
-      // generations' deltas consolidated — and serving the compacted
-      // store must equal the llm_bm25_delete answer (same tombstones
-      // over the full corpus). A compact that loses a posting,
-      // resurrects a tombstoned doc, or drops a doc-length row
-      // hash-mismatches.
-      val out = Stores.dir("bm25_index_compact")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val gen = Stores.split(docs, "doc_id")
-      val a = gen.older(100).select($"doc_id", $"text")
-      val b = gen.newer(100).select($"doc_id", $"text")
-      val tomb = docs.select($"doc_id").filter($"doc_id" % 7 === 0)
-      // each path compacts right after its own appends land
-      val compacted = new Array[org.apache.spark.sql.DataFrame](2)
-      Stores.bm25(out, Seq(a, b).map(Stores.bm25Index),
-        postingsThen = () =>
-          compacted(0) = Dedup.storeCompact(s.read.parquet(s"$out/postings"),
-            "doc_id", Some(tomb), s"$out/postings_v2"),
-        doclensThen = () =>
-          compacted(1) = Dedup.storeCompact(s.read.parquet(s"$out/doclens"),
-            "doc_id", Some(tomb), s"$out/doclens_v2"))
-      TextAnalysis.bm25TopKStored(compacted(0), compacted(1), "doc_id",
-        queryTerms = Seq("hash", "join", "vector"), k = 25)
-    }),
-    "llm_bm25_pruned" -> ((s, d) => {
-      import s.implicits._
-      // the lexical index under the cell-partitioned ANN discipline:
-      // postings written partitionBy(tbucket) (tbucket = hash60(term)
-      // mod 8 — derivable from the term, so maintenance recomputes it
-      // free), serving computes the query's bucket literals ON THE
-      // DRIVER (pure function, zero data read) => STATIC partition
-      // pruning on the postings scan. Identical answer to the
-      // unpartitioned serve by construction — same oracle.
-      val out = Stores.dir("bm25_index_pruned")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      Stores.bm25ByBucket(out, Seq(Stores.bm25BucketIndex(docs)))
-      TextAnalysis.bm25TopKStoredPruned(
-        s.read.parquet(s"$out/postings"), s.read.parquet(s"$out/doclens"),
-        "doc_id", queryTerms = Seq("hash", "join", "vector"),
-        nBuckets = 8, k = 25)
-    }),
     "llm_bm25_pruned_compact" -> ((s, d) => {
       import s.implicits._
       // partitioned-store MAINTENANCE: the bucket-partitioned postings
@@ -1238,35 +1013,6 @@ object LlmQueries {
           compacted(0) = Dedup.storeCompact(s.read.parquet(s"$out/postings"),
             "doc_id", Some(tomb), s"$out/postings_v2",
             partitionCols = Seq("tbucket")),
-        doclensThen = () =>
-          compacted(1) = Dedup.storeCompact(s.read.parquet(s"$out/doclens"),
-            "doc_id", Some(tomb), s"$out/doclens_v2"))
-      TextAnalysis.bm25TopKStoredPruned(compacted(0), compacted(1), "doc_id",
-        queryTerms = Seq("hash", "join", "vector"), nBuckets = 8, k = 25)
-    }),
-    "llm_bm25_selective_compact" -> ((s, d) => {
-      import s.implicits._
-      // partition-SELECTIVE maintenance on the bucket-partitioned
-      // postings: the same two-generation + tombstone fixture as
-      // llm_bm25_pruned_compact, but only tombstone-bearing tbucket
-      // partitions are rewritten, IN PLACE — untouched buckets' files
-      // stay byte-identical (LlmOpsSpec pins the file statuses) — and
-      // the pruned serve over the compacted store still equals the
-      // llm_bm25_delete answer (same oracle). Doc-lengths stay a flat
-      // store: full storeCompact is correct there (every doc row is a
-      // candidate, there is no partition to spare).
-      val out = Stores.dir("bm25_selective_compact")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val gen = Stores.split(docs, "doc_id")
-      val a = gen.older(100).select($"doc_id", $"text")
-      val b = gen.newer(100).select($"doc_id", $"text")
-      val tomb = docs.select($"doc_id").filter($"doc_id" % 7 === 0)
-      // each path compacts right after its own appends land
-      val compacted = new Array[org.apache.spark.sql.DataFrame](2)
-      Stores.bm25ByBucket(out, Seq(a, b).map(Stores.bm25BucketIndex),
-        postingsThen = () =>
-          compacted(0) = Dedup.storeCompactSelective(s, s"$out/postings",
-            "doc_id", tomb, Seq("tbucket"), s"$out/postings_staging"),
         doclensThen = () =>
           compacted(1) = Dedup.storeCompact(s.read.parquet(s"$out/doclens"),
             "doc_id", Some(tomb), s"$out/doclens_v2"))
@@ -1497,56 +1243,6 @@ object LlmQueries {
       TextAnalysis.snippetExtract(Tables.load(s, d, "documents"),
         "doc_id", "text", queryTerms = Seq("hash", "join", "vector"),
         window = 12)),
-    "llm_pipeline11" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      // the RETRIEVAL-ERA chain end to end: Gopher keep → exact dedup
-      // over a planted-duplicate crawl (keep lowest id) → BM25 index of
-      // the surviving corpus built and STORED → batch hybrid serve (the
-      // lexical leg from the stored index, the semantic leg over the
-      // embeddings of SURVIVING docs only, RRF-fused per query). Every
-      // stage is individually gated (llm_gopher / llm_exact_dedup /
-      // llm_bm25_join / llm_hybrid_join); the composition pins their
-      // interplay — a rejected or duplicate doc must be invisible to
-      // retrieval, and the index's df/N/avgdl must reflect the
-      // rejections.
-      val out = Stores.dir("pipeline11")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val crawl = docs.unionAll(
-        docs.select(($"doc_id" + 500000).as("doc_id"), $"text"))
-      val kept = crawl.filter(TextAnalysis.gopherKeep($"text",
-        minTokens = 10, maxTokens = 100000, minMeanWordLen = 2.0,
-        maxMeanWordLen = 10.0, maxSymbolRatio = 0.1, minStopwordHits = 1))
-      val fp = kept.select($"doc_id", $"text",
-        TextAnalysis.fingerprint($"text").as("fp"))
-      val winners = fp.groupBy($"fp").agg(min($"doc_id").as("doc_id"))
-      // the surviving corpus feeds BOTH the index build and the
-      // semantic leg's semi-join — one gopher+dedup pass, not two
-      val deduped = graft.operators.Reuse.Local(
-        fp.join(winners, Seq("fp", "doc_id"), "left_semi")
-          .select($"doc_id", $"text"))
-      Stores.bm25(out, Seq(Stores.bm25Index(deduped)))
-      val queries = Seq((1L, "hash join"), (2L, "vector scan slow"),
-        (3L, "zzzunknown")).toDF("query_id", "qtext")
-      val bmRanked = TextAnalysis.bm25Join(
-          s.read.parquet(s"$out/postings"),
-          s.read.parquet(s"$out/doclens"), queries,
-          "doc_id", "query_id", "qtext", k = 20)
-        .select($"query_id", $"doc_id", $"rank")
-      val emb = Tables.load(s, d, "embeddings")
-      val corpusEmb = emb.join(
-        deduped.select($"doc_id".as("vec_id")), Seq("vec_id"), "left_semi")
-      val qvecs = emb.filter($"vec_id".isin(1L, 2L, 3L))
-        .select($"vec_id".as("query_id"), $"embedding")
-      val annRanked = Similarity.knnJoin(qvecs, corpusEmb,
-          "query_id", "vec_id", "embedding", "embedding",
-          k = 20, excludeSelf = true)
-        .withColumn("rank", row_number().over(Window.partitionBy($"query_id")
-          .orderBy($"cos_sim".desc, $"neighbor_id".asc)))
-        .select($"query_id", $"neighbor_id".as("doc_id"), $"rank")
-      TextAnalysis.rrfFuseBy(Seq(bmRanked, annRanked),
-        "query_id", "doc_id", k = 10)
-    }),
     "llm_retrieval_eval" -> ((s, d) => {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
@@ -1912,17 +1608,6 @@ object LlmQueries {
           org.apache.spark.sql.functions.col("text")),
         "doc_id", "text", vocabSize = 48, nRounds = 2,
         maxPieceLen = 4, seedSize = 64)),
-    "llm_unigram_tokenize" -> ((s, d) => {
-      import s.implicits._
-      // the serving half: train -> STORE -> tokenize the corpus under
-      // the read-back piece table (Viterbi segmentation per word via
-      // the compiled per-row expression, vocabulary inlined)
-      val out = Stores.dir("unigram_pieces")
-      Stores.unigramPieces(Tables.load(s, d, "documents").select($"doc_id", $"text"), out)
-      TextAnalysis.unigramTokenize(
-        Tables.load(s, d, "documents").select($"doc_id", $"text"),
-        "doc_id", "text", s.read.parquet(out))
-    }),
     "llm_bpe_train_local" -> ((s, d) =>
       // the PRODUCTION-vocab training engine: the corpus pass stays
       // distributed, the vocabulary-scale word table collects ONCE and
@@ -2002,80 +1687,6 @@ object LlmQueries {
         Multimodal.asMedia(media.slice.unionAll(media.edited), "doc_id", "text"),
         maxHamming = 3, nBands = 4)
     }),
-    "llm_audio_probe" -> ((s, d) => {
-      import s.implicits._
-      // incremental audio admission: the corpus slice's fingerprints
-      // STORED (8 bytes a row, payloads never touched again), the
-      // edited-clone shard probed against the read-back frame — the
-      // llm_image_incr discipline on the audio modality
-      val out = Stores.dir("audio_fp_store")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val media = Stores.media(docs)
-      Stores.audioFp(out, media.slice)
-      Multimodal.audioNearDupsBetween(
-          Multimodal.asMedia(media.edited, "doc_id", "text"),
-          s.read.parquet(out), maxHamming = 3, nBands = 4)
-        .dropDuplicates("id_new", "id_corpus")
-    }),
-    "llm_audio_append" -> ((s, d) => {
-      import s.implicits._
-      // audio-store MAINTENANCE (the llm_image_append symmetry, closing
-      // the audio family's lifecycle gap): the fingerprint store built
-      // in two generations — gen A written, gen B's 8-byte delta
-      // parquet-APPENDED (audioFp over just the new media IS the
-      // delta) — and clones of EITHER generation must hit the read-back
-      // union. Same oracle as llm_audio_probe (the full-slice store),
-      // so a lost append under-reports pairs and hash-mismatches
-      val out = Stores.dir("audio_fp_append")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val media = Stores.media(docs)
-      Stores.audioFp(out, media.gens: _*)
-      Multimodal.audioNearDupsBetween(
-          Multimodal.asMedia(media.edited, "doc_id", "text"),
-          s.read.parquet(out), maxHamming = 3, nBands = 4)
-        .dropDuplicates("id_new", "id_corpus")
-    }),
-    "llm_audio_delete" -> ((s, d) => {
-      import s.implicits._
-      // takedown on the audio fingerprint store (the storePurge law on
-      // the audio index): the full-slice frame written once, tombstoned
-      // ids (doc_id % 5 == 1) purged AT READ — an anti-join, no
-      // rebuild, payloads never re-read — and the edited-clone shard
-      // probed against the purged store: clones of purged tracks ADMIT
-      // again, survivors' clones still bounce
-      val out = Stores.dir("audio_fp_delete")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val media = Stores.media(docs)
-      Stores.audioFp(out, media.slice)
-      val tomb = media.slice.filter($"doc_id" % 5 === 1).select($"doc_id")
-      val purged = graft.operators.Dedup.storePurge(
-        s.read.parquet(out), "doc_id", tomb)
-      Multimodal.audioNearDupsBetween(
-          Multimodal.asMedia(media.edited, "doc_id", "text"),
-          purged, maxHamming = 3, nBands = 4)
-        .dropDuplicates("id_new", "id_corpus")
-    }),
-    "llm_audio_compact" -> ((s, d) => {
-      import s.implicits._
-      // audio-store compaction — the family's lifecycle closed (append
-      // + delete gates above): two generations, the llm_audio_delete
-      // tombstones purged from the FILES via storeCompact, deltas
-      // consolidated, the edited-clone shard probed against the
-      // compacted store. Same fixture algebra as llm_audio_delete =>
-      // its oracle gates this: a compact that loses an 8-byte row or
-      // resurrects a purged track hash-mismatches.
-      val out = Stores.dir("audio_fp_compact")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val media = Stores.media(docs)
-      Stores.audioFp(s"$out/store", media.gens: _*)
-      val tomb = media.slice.filter($"doc_id" % 5 === 1).select($"doc_id")
-      val compacted = graft.operators.Dedup.storeCompact(
-        s.read.parquet(s"$out/store"), "doc_id", Some(tomb), s"$out/store_v2")
-      Multimodal.audioNearDupsBetween(
-          Multimodal.asMedia(media.edited, "doc_id", "text"),
-          compacted, maxHamming = 3, nBands = 4)
-        .dropDuplicates("id_new", "id_corpus")
-    }),
     "llm_video_frames" -> ((s, d) => {
       import s.implicits._
       // the VIDEO modality's frame table: stub frame-sample (4
@@ -2100,69 +1711,6 @@ object LlmQueries {
         Multimodal.asMedia(media.slice.unionAll(media.edited), "doc_id", "text"),
         maxHamming = 3, nBands = 4, minFrames = 3)
     }),
-    "llm_video_probe" -> ((s, d) => {
-      import s.implicits._
-      // incremental video admission: the slice's FRAME TABLE stored (8
-      // bytes x 4 frames a row, payloads never re-read), the
-      // edited-clone shard probed against the read-back store — the
-      // llm_audio_probe discipline with the temporal matched-frame
-      // count as the admission criterion
-      val out = Stores.dir("video_frames_store")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val media = Stores.media(docs)
-      Stores.videoFrames(out, media.slice)
-      Multimodal.videoNearDupsBetween(
-        Multimodal.asMedia(media.edited, "doc_id", "text"),
-        s.read.parquet(out), maxHamming = 3, nBands = 4, minFrames = 3)
-    }),
-    "llm_video_append" -> ((s, d) => {
-      import s.implicits._
-      // video-store MAINTENANCE: the frame table built in two
-      // generations (videoFrames over the new media IS the delta) —
-      // clones of EITHER generation must hit the read-back union; the
-      // llm_video_probe oracle (full-slice store) gates a lost append
-      val out = Stores.dir("video_frames_append")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val media = Stores.media(docs)
-      Stores.videoFrames(out, media.gens: _*)
-      Multimodal.videoNearDupsBetween(
-        Multimodal.asMedia(media.edited, "doc_id", "text"),
-        s.read.parquet(out), maxHamming = 3, nBands = 4, minFrames = 3)
-    }),
-    "llm_video_delete" -> ((s, d) => {
-      import s.implicits._
-      // takedown on the video frame store: tombstoned ids purged AT
-      // READ (anti-join on doc_id — ALL of a video's frame rows go
-      // together), clones of purged videos ADMIT again, survivors'
-      // clones still bounce
-      val out = Stores.dir("video_frames_delete")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val media = Stores.media(docs)
-      Stores.videoFrames(out, media.slice)
-      val tomb = media.slice.filter($"doc_id" % 5 === 1).select($"doc_id")
-      val purged = graft.operators.Dedup.storePurge(
-        s.read.parquet(out), "doc_id", tomb)
-      Multimodal.videoNearDupsBetween(
-        Multimodal.asMedia(media.edited, "doc_id", "text"),
-        purged, maxHamming = 3, nBands = 4, minFrames = 3)
-    }),
-    "llm_video_compact" -> ((s, d) => {
-      import s.implicits._
-      // video-store compaction — the family's lifecycle closed: two
-      // generations, the tombstones purged from the FILES via
-      // storeCompact, deltas consolidated, the clone shard probed
-      // against the compacted store (the llm_video_delete oracle)
-      val out = Stores.dir("video_frames_compact")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val media = Stores.media(docs)
-      Stores.videoFrames(s"$out/store", media.gens: _*)
-      val tomb = media.slice.filter($"doc_id" % 5 === 1).select($"doc_id")
-      val compacted = graft.operators.Dedup.storeCompact(
-        s.read.parquet(s"$out/store"), "doc_id", Some(tomb), s"$out/store_v2")
-      Multimodal.videoNearDupsBetween(
-        Multimodal.asMedia(media.edited, "doc_id", "text"),
-        compacted, maxHamming = 3, nBands = 4, minFrames = 3)
-    }),
     "llm_image_dups_capped" -> ((s, d) => {
       import s.implicits._
       // the hot-bucket guard GATED: the llm_image_dups fixture plus a
@@ -2182,82 +1730,6 @@ object LlmQueries {
         Multimodal.asMedia(media.slice.unionAll(media.edited).unionAll(flood),
           "doc_id", "text"),
         maxHamming = 3, nBands = 4, maxBucketSize = Some(8))
-    }),
-    "llm_image_incr" -> ((s, d) => {
-      import s.implicits._
-      // incremental perceptual admission: the corpus slice's dHash
-      // frame written ONCE (8 bytes/row — payloads never re-read), the
-      // edited-clone shard probed per row against the read-back store;
-      // every clone must hit its original (the llm_image_dups fixture
-      // split into its store/probe halves)
-      val out = Stores.dir("image_dhash_store")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val media = Stores.media(docs)
-      Stores.dHash(out, media.slice)
-      Multimodal.imageNearDupsBetween(
-          Multimodal.asMedia(media.edited, "doc_id", "text"),
-          s.read.parquet(out), maxHamming = 3, nBands = 4)
-        .dropDuplicates("id_new", "id_corpus")
-    }),
-    "llm_image_append" -> ((s, d) => {
-      import s.implicits._
-      // image-index MAINTENANCE (the fp_append symmetry): the dHash
-      // store is built in two generations — gen A written, gen B's
-      // 8-byte delta parquet-APPENDED (dHash over just the new media IS
-      // the delta) — and clones of EITHER generation must hit the
-      // read-back union. Same oracle as llm_image_incr (the full-slice
-      // store), so a lost append under-reports pairs and hash-mismatches
-      val out = Stores.dir("image_dhash_append")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val media = Stores.media(docs)
-      Stores.dHash(out, media.gens: _*)
-      Multimodal.imageNearDupsBetween(
-          Multimodal.asMedia(media.edited, "doc_id", "text"),
-          s.read.parquet(out), maxHamming = 3, nBands = 4)
-        .dropDuplicates("id_new", "id_corpus")
-    }),
-    "llm_image_delete" -> ((s, d) => {
-      import s.implicits._
-      // takedown on the dHash store (the storePurge law extended to the
-      // image index): the full-slice frame written once, the tombstoned
-      // ids (doc_id % 5 == 1) purged AT READ — an anti-join, no rebuild,
-      // the payloads never re-read — and the edited-clone shard probed
-      // against the purged store: clones of purged images ADMIT again
-      // (their originals are forgotten), survivors' clones still bounce.
-      // Oracle = the incremental probe over the remaining corpus only
-      val out = Stores.dir("image_dhash_delete")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val media = Stores.media(docs)
-      Stores.dHash(out, media.slice)
-      val tomb = media.slice.filter($"doc_id" % 5 === 1).select($"doc_id")
-      val purged = graft.operators.Dedup.storePurge(
-        s.read.parquet(out), "doc_id", tomb)
-      Multimodal.imageNearDupsBetween(
-          Multimodal.asMedia(media.edited, "doc_id", "text"),
-          purged, maxHamming = 3, nBands = 4)
-        .dropDuplicates("id_new", "id_corpus")
-    }),
-    "llm_image_compact" -> ((s, d) => {
-      import s.implicits._
-      // dHash store compaction — the image index's lifecycle closed
-      // (append + delete gates above): the slice written in TWO
-      // generations, the llm_image_delete tombstones (doc_id % 5 == 1)
-      // purged from the FILES via storeCompact, deltas consolidated,
-      // and the edited-clone shard probed against the compacted store.
-      // Same fixture algebra as llm_image_delete => its oracle gates
-      // this: a compact that loses an 8-byte row or resurrects a
-      // purged original hash-mismatches.
-      val out = Stores.dir("image_dhash_compact")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val media = Stores.media(docs)
-      Stores.dHash(s"$out/store", media.gens: _*)
-      val tomb = media.slice.filter($"doc_id" % 5 === 1).select($"doc_id")
-      val compacted = graft.operators.Dedup.storeCompact(
-        s.read.parquet(s"$out/store"), "doc_id", Some(tomb), s"$out/store_v2")
-      Multimodal.imageNearDupsBetween(
-          Multimodal.asMedia(media.edited, "doc_id", "text"),
-          compacted, maxHamming = 3, nBands = 4)
-        .dropDuplicates("id_new", "id_corpus")
     }),
     "llm_image_clusters" -> ((s, d) => {
       import s.implicits._
@@ -2328,94 +1800,6 @@ object LlmQueries {
           Dedup.minhashIndex(docs, "doc_id", "text"), "doc_id", "text")
         .select($"doc_id")
     }),
-    "llm_admission_selfdedup_media" -> ((s, d) => {
-      import s.implicits._
-      // the IMAGE side of the intra-batch window: a micro-batch
-      // carrying the same payload twice admits every copy under the
-      // per-row store probe (the dHash store has seen none of them).
-      // admitBatchMedia keep-firsts within the batch (banded dHash
-      // pairs, higher id drops), THEN probes the stored frame: corpus
-      // payload clones bounce at the store, each novel payload admits
-      // exactly once (its in-batch twin dropped at the keep-first)
-      val out = Stores.dir("selfdedup_media")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val gen = Stores.split(docs, "doc_id")
-      val a = gen.where(gen.above(300) && gen.atMost(200)).select($"doc_id", $"text")
-      Stores.dHash(out, docs)
-      val batch = a.select(($"doc_id" + 3000000).as("doc_id"),
-          $"text".as("pay"))
-        .unionAll(a.select(($"doc_id" + 4000000).as("doc_id"),
-          reverse($"text").as("pay")))
-        .unionAll(a.select(($"doc_id" + 5000000).as("doc_id"),
-          reverse($"text").as("pay")))
-      graft.streaming.Corpus.admitBatchMedia(batch, s.read.parquet(out),
-          "doc_id", "pay")
-        .select($"doc_id")
-    }),
-    "llm_pipeline9" -> ((s, d) => {
-      import s.implicits._
-      // pipeline9 — the MIXED-MODALITY ingestion front door: each
-      // incoming row carries BOTH a text and a media payload (the
-      // actual multimodal training-data shape); a row is admitted only
-      // if the TEXT path (gopher keep → 13-gram decontamination vs the
-      // eval slice → minhash probe vs the stored corpus index) AND the
-      // MEDIA path (per-row dHash probe vs the stored corpus frame)
-      // both pass. Four incoming groups isolate every rejection
-      // combination: text-clone+media-clone (both bounce),
-      // text-novel+media-clone (media bounces), text-clone+media-novel
-      // (text bounces), both-novel (ADMITTED)
-      val out = Stores.dir("pipeline9")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val gen = Stores.split(docs, "doc_id")
-      val a = gen.where(gen.above(300) && gen.atMost(200)).select($"doc_id", $"text")
-      val novel = a.select($"doc_id".as("aid"), $"text".as("atext"))
-        .join(docs.select($"doc_id".as("bid"), $"text".as("btext")),
-          $"aid" - 120 === $"bid")
-        .join(docs.select($"doc_id".as("cid"), $"text".as("ctext")),
-          $"aid" - 240 === $"cid")
-        .select($"aid", $"atext",
-          concat_ws(" ", $"atext", $"btext", $"ctext").as("ntext"))
-      // the fixture feeds the TEXT path and the MEDIA probe, and `clean`
-      // below feeds both the minhash probe and the text-OK anti-join —
-      // truncate lineage at each fan-out so the fixture-join chain runs
-      // once, not three times (guide §3.3)
-      val incoming = graft.operators.Reuse.Local(a
-        .select(($"doc_id" + 3000000).as("doc_id"), $"text", $"text".as("pay"))
-        .unionAll(novel.select(($"aid" + 4000000).as("doc_id"),
-          $"ntext".as("text"), $"atext".as("pay")))
-        .unionAll(a.select(($"doc_id" + 5000000).as("doc_id"), $"text",
-          reverse($"text").as("pay")))
-        .unionAll(novel.select(($"aid" + 6000000).as("doc_id"),
-          $"ntext".as("text"), reverse($"atext").as("pay"))))
-      // the stores, written once at corpus-build time: the text minhash
-      // index frames and the 8-byte-per-row media dHash frame
-      val idx = Dedup.minhashIndex(docs, "doc_id", "text")
-      // three independent store sinks — overlap (guide §2.6)
-      graft.operators.Par.jobs(
-        () => Stores.minhash(idx, s"$out/mh"),
-        () => Stores.dHash(s"$out/dh", docs))
-      val ev = gen.newer(100).select($"doc_id", $"text")
-      // TEXT path (quality filter and decontamination anti-join both
-      // preserve the payload column — the row stays whole)
-      val quality = incoming.filter(TextAnalysis.gopherKeep($"text",
-        minTokens = 10, maxTokens = 100000, minMeanWordLen = 2.0,
-        maxMeanWordLen = 10.0, maxSymbolRatio = 0.1, minStopwordHits = 1))
-      val clean = graft.operators.Reuse.Local(
-        graft.streaming.Corpus.cleanAgainst(
-          quality, ev, "doc_id", "text", n = 13))
-      val mhHits = graft.streaming.Corpus.admitProbe(
-          clean.select($"doc_id", $"text"),
-          Stores.readMinhash(s, s"$out/mh"), "doc_id", "text")
-        .select($"id_new".as("doc_id")).distinct()
-      val textOk = clean.join(broadcast(mhHits), Seq("doc_id"), "left_anti")
-      // MEDIA path: per-row dHash probe of the payload column
-      val imgHits = Multimodal.imageNearDupsBetween(
-          Multimodal.asMedia(incoming.select($"doc_id", $"pay"),
-            "doc_id", "pay"),
-          s.read.parquet(s"$out/dh"), maxHamming = 3, nBands = 4)
-        .select($"id_new".as("doc_id")).distinct()
-      textOk.join(broadcast(imgHits), Seq("doc_id"), "left_anti").select($"doc_id")
-    }),
     "llm_multimodal_resize" -> ((s, d) => {
       import s.implicits._
       Multimodal.resizePlan(
@@ -2470,188 +1854,6 @@ object LlmQueries {
         .unionAll(tail.select(($"doc_id" + 4000000).as("doc_id"),
           concat($"text", lit(" novel suffix")).as("text")))
       incoming.join(s.read.parquet(out),
-          TextAnalysis.fingerprint($"text") === $"fp", "left_anti")
-        .select($"doc_id")
-    }),
-    "llm_minhash_index_roundtrip" -> ((s, d) => {
-      import s.implicits._
-      // the PRODUCTION incremental-dedup composition, end to end: build
-      // the corpus band/sketch index once, persist both frames to
-      // parquet, reconstruct the index from the files, probe the
-      // incoming shard against it — same oracle as llm_minhash_incr, so
-      // any drift through the storage round-trip hash-mismatches
-      val out = Stores.dir("minhash_index")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val gen = Stores.split(docs, "doc_id")
-      val incoming = gen.newer(300).select(($"doc_id" + 3000000).as("doc_id"), $"text")
-      val idx = Dedup.minhashIndex(docs, "doc_id", "text", k = 16, nBands = 4)
-      Stores.minhash(idx, out)
-      val stored = Stores.readMinhash(s, out)
-      Dedup.minhashProbe(incoming, stored, "doc_id", "text",
-        k = 16, nBands = 4, threshold = 0.5)
-    }),
-    "llm_minhash_index_append" -> ((s, d) => {
-      import s.implicits._
-      // the ingestion loop CLOSED: the corpus index is built in two
-      // generations — build(A) written to parquet, the admitted shard B
-      // appended via the union API over the READ-BACK frames — and the
-      // re-ingested tail-300 slice probes the appended index. Oracle =
-      // the full-corpus probe (llm_minhash_incr), so a lost or drifted
-      // append under-reports pairs and hash-mismatches
-      val out = Stores.dir("minhash_index_append")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val gen = Stores.split(docs, "doc_id")
-      val a = gen.older(150).select($"doc_id", $"text")
-      val b = gen.newer(150).select($"doc_id", $"text")
-      val incoming = gen.newer(300).select(($"doc_id" + 3000000).as("doc_id"), $"text")
-      val idxA = Dedup.minhashIndex(a, "doc_id", "text", k = 16, nBands = 4)
-      Stores.minhash(idxA, out)
-      val appended = Dedup.minhashIndexAppend(
-        Stores.readMinhash(s, out),
-        b, "doc_id", "text", k = 16, nBands = 4)
-      Dedup.minhashProbe(incoming, appended, "doc_id", "text",
-        k = 16, nBands = 4, threshold = 0.5)
-    }),
-    "llm_minhash_index_delete" -> ((s, d) => {
-      import s.implicits._
-      // takedown on the dedup index: the full-corpus store written
-      // once, the tombstoned ids (doc_id % 7 == 2) PURGED from the
-      // read-back frames — an anti-join at read, no rebuild, no corpus
-      // re-read — and the re-ingested tail probed: clones of purged
-      // docs now ADMIT (their originals are forgotten), clones of
-      // remaining docs still bounce. Oracle = the incremental probe
-      // over the remaining corpus only
-      val out = Stores.dir("minhash_index_delete")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val gen = Stores.split(docs, "doc_id")
-      val incoming = gen.newer(300).select(($"doc_id" + 3000000).as("doc_id"), $"text")
-      val idx = Dedup.minhashIndex(docs, "doc_id", "text", k = 16, nBands = 4)
-      Stores.minhash(idx, out)
-      val tomb = docs.filter($"doc_id" % 7 === 2).select($"doc_id")
-      val purged = Dedup.MinhashIndex(
-        Dedup.storePurge(s.read.parquet(s"$out/bands"), "doc_id", tomb),
-        Dedup.storePurge(s.read.parquet(s"$out/sets"), "doc_id", tomb))
-      Dedup.minhashProbe(incoming, purged, "doc_id", "text",
-        k = 16, nBands = 4, threshold = 0.5)
-    }),
-    "llm_ann_index_delete" -> ((s, d) => {
-      import s.implicits._
-      // takedown on the SERVING index: tombstoned vectors (vec_id % 10
-      // == 3 — including seed id 3, whose deletion must NOT perturb the
-      // stored cells/codebooks: they are corpus statistics, not member
-      // data) vanish from results with no retraining; serving the
-      // purged codes equals serving a fresh encode of the remaining
-      // corpus bit-for-bit (per-row encode — spec-pinned)
-      val out = Stores.dir("ann_index_delete")
-      val emb = Tables.load(s, d, "embeddings")
-      val cents = Stores.seedCells(emb)
-      val cbs = Stores.codebooks(emb)
-      Stores.put(s"$out/codes", Stores.ivfPqCodes(emb, cents, cbs))
-      val tomb = emb.filter($"vec_id" % 10 === 3).select($"vec_id")
-      Similarity.ivfPqTopKStored(
-        Dedup.storePurge(s.read.parquet(s"$out/codes"), "vec_id", tomb),
-        "vec_id", cents, cbs, subDim = 16,
-        Similarity.queryVecOf(emb, "vec_id", "embedding", 0),
-        k = 10, probes = 2, excludeId = Some(0L))
-    }),
-    "llm_ann_index_compact" -> ((s, d) => {
-      import s.implicits._
-      // the maintenance lifecycle's LAST verb (append ✓ delete ✓ →
-      // compact): a cell-partitioned codes store that has accumulated
-      // an appended generation AND a tombstone set is physically
-      // rewritten to a new versioned path — purged rows gone from the
-      // files, one consolidated file set per cell — and serving the
-      // compacted store must equal serving the logical
-      // purge(append(...)) view: same fixture and artifacts as
-      // llm_ann_index_delete, so the SAME oracle gates both (a compact
-      // that loses a row, resurrects a tombstone, or breaks the cell
-      // layout hash-mismatches)
-      val out = Stores.dir("ann_index_compact")
-      val emb = Tables.load(s, d, "embeddings")
-      val gen = Stores.split(emb, "vec_id")
-      val a = gen.older(100).select($"vec_id", $"embedding")
-      val b = gen.newer(100).select($"vec_id", $"embedding")
-      val cents = Stores.seedCells(emb)
-      val cbs = Stores.codebooks(emb)
-      // generation A written, generation B appended (one more file set
-      // per cell — the state a production index is in before compaction)
-      Stores.putByCell(s"$out/codes",
-        Stores.ivfPqCodes(a, cents, cbs), Stores.ivfPqCodes(b, cents, cbs))
-      val tomb = emb.filter($"vec_id" % 10 === 3).select($"vec_id")
-      val compacted = Dedup.storeCompact(s.read.parquet(s"$out/codes"),
-        "vec_id", Some(tomb), s"$out/codes_v2", partitionCols = Seq("cell"))
-      Similarity.ivfPqTopKStored(compacted, "vec_id", cents, cbs,
-        subDim = 16, Similarity.queryVecOf(emb, "vec_id", "embedding", 0),
-        k = 10, probes = 2, excludeId = Some(0L))
-    }),
-    "llm_ann_selective_compact" -> ((s, d) => {
-      import s.implicits._
-      // the 100 TB maintenance verb on the cell-partitioned codes
-      // store: same two-generation + tombstone fixture as
-      // llm_ann_index_compact, but the rewrite touches ONLY
-      // tombstone-bearing cells IN PLACE (dynamic partition overwrite
-      // via a staging path) — untouched cells' files stay
-      // byte-identical (LlmOpsSpec pins the file statuses) — and
-      // serving the selectively-compacted store must equal the
-      // llm_ann_index_delete answer (same oracle)
-      val out = Stores.dir("ann_selective_compact")
-      val emb = Tables.load(s, d, "embeddings")
-      val gen = Stores.split(emb, "vec_id")
-      val a = gen.older(100).select($"vec_id", $"embedding")
-      val b = gen.newer(100).select($"vec_id", $"embedding")
-      val cents = Stores.seedCells(emb)
-      val cbs = Stores.codebooks(emb)
-      Stores.putByCell(s"$out/codes",
-        Stores.ivfPqCodes(a, cents, cbs), Stores.ivfPqCodes(b, cents, cbs))
-      val tomb = emb.filter($"vec_id" % 10 === 3).select($"vec_id")
-      val compacted = Dedup.storeCompactSelective(s, s"$out/codes",
-        "vec_id", tomb, Seq("cell"), s"$out/codes_staging")
-      Similarity.ivfPqTopKStored(compacted, "vec_id", cents, cbs,
-        subDim = 16, Similarity.queryVecOf(emb, "vec_id", "embedding", 0),
-        k = 10, probes = 2, excludeId = Some(0L))
-    }),
-    "llm_fp_append" -> ((s, d) => {
-      import s.implicits._
-      // the fingerprint store's append path (the llm_exact_incr store,
-      // maintained instead of rebuilt): generation A written, the
-      // admitted shard's fingerprints landed as a parquet APPEND, and
-      // the mixed clone/novel incoming shard probed against the
-      // read-back union — clones of EITHER generation must bounce
-      val out = Stores.dir("fingerprint_store_append")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val gen = Stores.split(docs, "doc_id")
-      Stores.fingerprints(out, gen.older(150), gen.newer(150))
-      val tail = gen.newer(300)
-      val incoming = tail.select(($"doc_id" + 3000000).as("doc_id"), $"text")
-        .unionAll(tail.select(($"doc_id" + 4000000).as("doc_id"),
-          concat($"text", lit(" novel suffix")).as("text")))
-      incoming.join(s.read.parquet(out),
-          TextAnalysis.fingerprint($"text") === $"fp", "left_anti")
-        .select($"doc_id")
-    }),
-    "llm_fp_compact" -> ((s, d) => {
-      import s.implicits._
-      // the fingerprint store's maintenance lifecycle closed (append
-      // gate above; delete is the storePurge law): the two-generation
-      // store plus a tombstone fp set is PHYSICALLY rewritten — purged
-      // fingerprints gone from the FILES, the append deltas
-      // consolidated — and the mixed clone/novel shard probed against
-      // the compacted store: clones of forgotten docs ADMIT again,
-      // clones of surviving docs still bounce. A compact that loses an
-      // fp row or resurrects a tombstone hash-mismatches.
-      val out = Stores.dir("fingerprint_store_compact")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val gen = Stores.split(docs, "doc_id")
-      Stores.fingerprints(s"$out/store", gen.older(150), gen.newer(150))
-      val tomb = docs.filter($"doc_id" % 7 === 0)
-        .select(TextAnalysis.fingerprint($"text").as("fp")).distinct()
-      val compacted = graft.operators.Dedup.storeCompact(
-        s.read.parquet(s"$out/store"), "fp", Some(tomb), s"$out/store_v2")
-      val tail = gen.newer(300)
-      val incoming = tail.select(($"doc_id" + 3000000).as("doc_id"), $"text")
-        .unionAll(tail.select(($"doc_id" + 4000000).as("doc_id"),
-          concat($"text", lit(" novel suffix")).as("text")))
-      incoming.join(compacted,
           TextAnalysis.fingerprint($"text") === $"fp", "left_anti")
         .select($"doc_id")
     }),
@@ -2757,48 +1959,6 @@ object LlmQueries {
       // counts demote fixed-phrase-only words where add-k cannot
       TextAnalysis.trigramKnLogProb(
         Tables.load(s, d, "documents"), "doc_id", "text")),
-    "llm_trigram_kn_stored" -> ((s, d) => {
-      import s.implicits._
-      // the CCNet deployment shape: the KN model trained on the
-      // REFERENCE half (even doc_ids), its five count tables STORED,
-      // and the WHOLE corpus scored from the read-back tables — odd
-      // docs hit unseen trigrams/contexts, exercising every back-off
-      // branch; n_unseen is the drift signal. The oracle replays
-      // train-on-half + branchy scoring from the parquet inputs.
-      val out = Stores.dir("kn_model")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val model = TextAnalysis.trigramKnTrain(
-        docs.filter($"doc_id" % 2 === 0), "doc_id", "text")
-      Stores.knModel(model, out)
-      TextAnalysis.trigramKnScoreStored(docs, "doc_id", "text",
-        Stores.readKnModel(s, model, out))
-    }),
-    "llm_trigram_kn_append" -> ((s, d) => {
-      import s.implicits._
-      // KN model MAINTENANCE (VERDICT r13 "Missing" #3): the reference
-      // half arrives in TWO generations — gen A (doc_id % 4 == 0)
-      // trained and STORED, gen B (doc_id % 4 == 2) merged in via
-      // trigramKnAppend from the READ-BACK store (occurrence counts
-      // add, continuation stats recomputed from the merged type
-      // table; gen A's text never re-read). A∪B is exactly the stored
-      // gate's reference half (even ids), so that gate's oracle
-      // (train-on-evens + score-all replay) gates the merge law
-      // append(train(A), B) == train(A ∪ B) end-to-end: any drifted
-      // count shifts a back-off branch and hash-mismatches.
-      val out = Stores.dir("kn_model_append")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val mA = TextAnalysis.trigramKnTrain(
-        docs.filter($"doc_id" % 4 === 0), "doc_id", "text")
-      // v2 is merged from v1's read-back, so the two stores are written
-      // one after the other
-      Stores.knModel(mA, s"$out/v1")
-      val stored = Stores.readKnModel(s, mA, s"$out/v1")
-      val merged = TextAnalysis.trigramKnAppend(stored,
-        docs.filter($"doc_id" % 4 === 2), "doc_id", "text")
-      Stores.knModel(merged, s"$out/v2")
-      TextAnalysis.trigramKnScoreStored(docs, "doc_id", "text",
-        Stores.readKnModel(s, merged, s"$out/v2"))
-    }),
     "llm_script" -> ((s, d) => {
       import s.implicits._
       // script detection over a planted multilingual fixture: one
@@ -2847,54 +2007,6 @@ object LlmQueries {
             .as("clean_text"))
         .select($"doc_id", $"clean_text",
           length($"clean_text").cast("int").as("n_chars"))
-    }),
-    "llm_pipeline14" -> ((s, d) => {
-      import s.implicits._
-      // crawl-to-corpus FROM THE RECORD FORMAT (VERDICT r13 "Missing"
-      // #4 — the exosql "SQL to whatever" identity applied to the
-      // crawl layout): the DOUBLED corpus html-wrapped and framed as
-      // per-record-GZIP WARC members (the S9 sink, Common-Crawl
-      // layout), read back through the byte-range-split extractor
-      // (16 KiB splits — gzip member resync exercised), doc ids
-      // recovered from the record header, then llm_pipeline5's prep
-      // chain (markup strip → normalize → Gopher panel → exact dedup,
-      // clones provably removed) ending in token-offset PACK. The
-      // oracle replays the chain from the documents table — the WARC
-      // leg must be an exact round-trip, so one mis-framed, dropped,
-      // or duplicated record shifts text → dedup → pack offsets and
-      // hash-mismatches.
-      val out = Stores.dir("pipeline14_warc")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val base = docs.unionAll(
-        docs.select(($"doc_id" + 700000).as("doc_id"), $"text"))
-      val wrapped = base.select($"doc_id",
-        concat(lit("http://graft.local/doc/"), $"doc_id").as("uri"),
-        concat(lit(htmlPre), $"text", lit(htmlPost)).as("html"))
-      graft.sources.Warc.write(wrapped, "doc_id", "uri", "html", out,
-        nFiles = 4, gzip = true)
-      val records = s.read.format("graft-extractor")
-        .option("extractor", "warc").option("path", out)
-        // split size derived from the ACTUAL part-file size: ~4 split
-        // boundaries per gzip member file (resync exercised —
-        // ExtractorSpec pins split-size invariance) at ANY corpus
-        // scale, capped at 256 KiB so bench scale keeps the ~30×
-        // fewer scan tasks vs the original 16 KiB (guide §6; the
-        // RESULT is split-invariant) — ADVICE r14
-        .option("splitBytes",
-          graft.sources.Warc.resyncSplitBytes(s, out).toString).load()
-      val stripped = records.select(
-        regexp_extract($"record_id", "[0-9]+", 0).cast("long").as("doc_id"),
-        TextAnalysis.stripMarkup($"payload").as("text"))
-      val normed = stripped.select($"doc_id",
-        TextAnalysis.normalizeText($"text").as("text"))
-      val keepIds = TextAnalysis.gopherRules(normed, "doc_id", "text",
-          minTokens = 10, maxTokens = 100000, minMeanWordLen = 2.0,
-          maxMeanWordLen = 10.0, maxSymbolRatio = 0.2, minStopwordHits = 1)
-        .filter($"keep").select($"doc_id")
-      val deduped = Dedup.exactDedupRows(normed.join(keepIds, "doc_id"),
-        "doc_id", "text")
-      TextAnalysis.packOffsets(deduped, "doc_id", "text",
-        seqLen = 512, docsPerBucket = 64)
     }),
     "llm_pipeline5" -> ((s, d) => {
       import s.implicits._
@@ -2999,90 +2111,6 @@ object LlmQueries {
         Stores.seedCells(emb),
         k = 5, probes = 2)
     }),
-    "llm_knn_join_stored" -> ((s, d) => {
-      import s.implicits._
-      // the production serving fleet's shape: a BATCH of query vectors
-      // against the STORED index — cells/codebooks/codes written once
-      // as plain parquet, read back, and the ten-query batch served via
-      // probe-cell equi-join + per-query in-plan ADC LUTs; the corpus
-      // vectors are never read after the encode
-      val out = Stores.dir("knn_stored")
-      val emb = Tables.load(s, d, "embeddings")
-      val cents = Stores.seedCells(emb)
-      val cbs = Stores.codebooks(emb)
-      Stores.ivfPq(s, cents, cbs, out,
-        Stores.ivfPqCodes(emb, cents, cbs))
-      val (cents2, cbs2) = Stores.readIvfPq(s, out)
-      Similarity.ivfPqKnnJoinStored(
-        emb.filter($"vec_id" < 10).select($"vec_id", $"embedding"),
-        s.read.parquet(s"$out/codes"), "vec_id", "vec_id", "embedding",
-        cents2, cbs2, subDim = 16, k = 5, probes = 2, excludeSelf = true)
-    }),
-    "llm_knn_join_pruned" -> ((s, d) => {
-      import s.implicits._
-      // the batch serving path over a cell-PARTITIONED store: the ten
-      // queries' distinct probe-cell union (≤ nCells ids at any |Q|)
-      // pushes into the scan as a literal filter — static partition
-      // pruning for the whole batch; output identical to
-      // llm_knn_join_stored (same oracle), PlanSpec pins the
-      // PartitionFilters
-      val out = Stores.dir("knn_stored_part")
-      val emb = Tables.load(s, d, "embeddings")
-      val cents = Stores.seedCells(emb)
-      val cbs = Stores.codebooks(emb)
-      Stores.putByCell(s"$out/codes", Stores.ivfPqCodes(emb, cents, cbs))
-      Similarity.ivfPqKnnJoinStoredPruned(
-        emb.filter($"vec_id" < 10).select($"vec_id", $"embedding"),
-        s.read.parquet(s"$out/codes"), "vec_id", "vec_id", "embedding",
-        cents, cbs, subDim = 16, k = 5, probes = 2, excludeSelf = true)
-    }),
-    "llm_knn_join_rerank" -> ((s, d) => {
-      import s.implicits._
-      // the COMPLETE production serving flow: stored-index ADC proposes
-      // each query's top-15, exact cosine re-ranks only those — the
-      // vector table is consulted solely through the broadcast
-      // candidate-pair join
-      val out = Stores.dir("knn_rerank")
-      val emb = Tables.load(s, d, "embeddings")
-      val cents = Stores.seedCells(emb)
-      val cbs = Stores.codebooks(emb)
-      Stores.put(s"$out/codes", Stores.ivfPqCodes(emb, cents, cbs))
-      Similarity.ivfPqKnnJoinStoredRerank(
-        emb.filter($"vec_id" < 10).select($"vec_id", $"embedding"),
-        s.read.parquet(s"$out/codes"), emb,
-        "vec_id", "vec_id", "embedding", "embedding",
-        cents, cbs, subDim = 16, k = 5, probes = 2, candC = 15,
-        excludeSelf = true)
-    }),
-    "llm_ann_index_append" -> ((s, d) => {
-      import s.implicits._
-      // ANN index MAINTENANCE (the minhash-append symmetry): the index
-      // was built when only generation A existed; new vectors arrive,
-      // are encoded with the READ-BACK cells/codebooks (never
-      // retrained), and their codes parquet-APPEND into the stored
-      // codes table. Serving over the appended store must equal the
-      // fresh full-corpus build — encode is per-row, so the oracle is
-      // the llm_ann_ivf_pq family (A holds the lowest ids, hence the
-      // same seed cells/codebooks as the full corpus)
-      val out = Stores.dir("ann_index_append")
-      val emb = Tables.load(s, d, "embeddings")
-      val gen = Stores.split(emb, "vec_id")
-      val a = gen.older(100).select($"vec_id", $"embedding")
-      val b = gen.newer(100).select($"vec_id", $"embedding")
-      val cents = Stores.seedCells(a)
-      val cbs = Stores.codebooks(a)
-      Stores.ivfPq(s, cents, cbs, out,
-        Stores.ivfPqCodes(a, cents, cbs))
-      // the maintenance run: read back the artifacts, encode ONLY the
-      // new generation, append
-      val (cents2, cbs2) = Stores.readIvfPq(s, out)
-      Stores.ivfPqCodes(b, cents2, cbs2)
-        .write.mode("append").parquet(s"$out/codes")
-      Similarity.ivfPqTopKStored(s.read.parquet(s"$out/codes"), "vec_id",
-        cents2, cbs2, subDim = 16,
-        Similarity.queryVecOf(emb, "vec_id", "embedding", 0),
-        k = 10, probes = 2, excludeId = Some(0L))
-    }),
     "llm_pipeline7" -> ((s, d) => {
       import s.implicits._
       // the crawl FRONT DOOR composed end to end from the round-8
@@ -3119,47 +2147,6 @@ object LlmQueries {
           budgeted.join(docs, "doc_id"), $"text", numShards = 8,
           salt = "shard:")
         .select($"doc_id", $"n_toks", $"token_offset", $"shard", $"order_key")
-    }),
-    "llm_quality_classifier" -> ((s, d) => {
-      import s.implicits._
-      // the GPT-3-style LR quality filter end-to-end: train on a
-      // deterministic labeled fixture (pos = even-id docs as-is, neg =
-      // odd-id docs uppercased — any reproducible corruption gives the
-      // hashed features a learnable signal), persist the weight frame,
-      // score the corpus from the READ-BACK weights — train once,
-      // store, serve every ingestion run
-      val out = Stores.dir("quality_lr")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      Stores.lrWeights(s, docs, out)
-      graft.operators.Classifier.lrScore(docs, "doc_id", "text",
-        s.read.parquet(out), buckets = 64)
-    }),
-    "llm_lr_eval" -> ((s, d) => {
-      import s.implicits._
-      // the classifier's EVAL report — the verb that decides whether
-      // the trained filter is usable: per candidate threshold, the
-      // confusion counts and precision/recall/F1 over the labeled
-      // fixture (resubstitution — the fixture trains on all labels;
-      // the report's algebra is what the gate pins). Oracle extends
-      // the llm_quality_classifier replay with the threshold panel
-      val out = Stores.dir("quality_lr_eval")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val (pos, neg) = Stores.lrWeights(s, docs, out)
-      graft.operators.Classifier.lrEvalReport(pos, neg, "doc_id", "text",
-        s.read.parquet(out), buckets = 64)
-    }),
-    "llm_lr_calibration" -> ((s, d) => {
-      import s.implicits._
-      // the classifier's CALIBRATION report (the reliability-diagram
-      // table): same trained fixture as llm_lr_eval, scores bucketed
-      // into 10 equal-width bins, mean_score vs frac_pos per bin —
-      // what decides whether the score is usable as a sampling WEIGHT,
-      // not just a threshold
-      val out = Stores.dir("quality_lr_calibration")
-      val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
-      val (pos, neg) = Stores.lrWeights(s, docs, out)
-      graft.operators.Classifier.lrCalibrationReport(pos, neg, "doc_id",
-        "text", s.read.parquet(out), buckets = 64, nBins = 10)
     }),
     "llm_domain_report" -> ((s, d) => {
       import s.implicits._

@@ -7,7 +7,8 @@ import graft.operators.{Classifier, Dedup, Multimodal, Par, Reuse, Similarity, T
 /** The store fixtures of the store-backed gates, built in one place.
   *
   * A store-backed key writes a store, reads it back and serves from it;
-  * its `e_sql_*` twin serves the same store from SQL. Each builder here
+  * its `e_sql_*` twin serves the same store from SQL (the pair is one
+  * declaration in [[StoreTwins]]). Each builder here
   * writes one store family's artifacts under a directory the caller
   * passes in, so the layout (which files, in which order, which writes
   * overlap, how a shared index frame feeds its sinks) is stated once.

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
 
 /** Streaming operators over the events schema (SURVEY.md §2.8 — absent
   * in the reference, a beyond-parity addition the driver mandates).
@@ -21,33 +20,18 @@ import org.apache.spark.sql.types._
   */
 object Events {
 
-  val schema: StructType = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", TimestampType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType), StructField("props", StringType)))
-
-  /** File-based streaming read of the events table (ts normalization,
-    * same contract as Tables.load: the driver has generated ts both as
-    * nanos-as-long TIMESTAMP(NANOS) and as plain µs TIMESTAMP across
-    * rounds — peek the batch footer once and branch). */
+  /** File-based streaming read of the events table, with the read type
+    * and the ts conversion of [[graft.Tables.eventsRaw]] — the same rule
+    * as the batch `Tables.load`. */
   def readStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsIsLong = spark.read.parquet(s"$dir/events.parquet")
-      .schema("ts").dataType == LongType
-    val readSchema =
-      if (tsIsLong) StructType(schema.map {
-        case StructField("ts", _, n, m) => StructField("ts", LongType, n, m)
-        case f => f
-      })
-      else schema
-    val raw = spark.readStream
-      .schema(readSchema)
+    val (raw, ts) = graft.Tables.eventsRaw(spark, dir)
+    spark.readStream
+      .schema(raw.schema)
       // the file-stream source wants a directory; events.parquet is a
       // single file inside the sf dir, so glob-filter to it
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir)
-    if (tsIsLong) raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    else raw.withColumn("ts", col("ts").cast("timestamp"))
+      .withColumn("ts", expr(ts))
   }
 
   /** Tumbling-window counts/sums per event type. */
@@ -71,15 +55,6 @@ object Events {
       .agg(count(lit(1)).as("n_events"), min(col("ts")).as("first_ts"))
       .select(col("user_id"), col("session_window.start").as("s_start"),
         col("n_events"))
-
-  /** Watermarked tumbling agg — bounds state, drops data later than
-    * `late`. The streaming-correctness shape for unbounded input. */
-  def tumblingWithWatermark(events: DataFrame, width: String = "1 hour",
-                            late: String = "2 hours"): DataFrame =
-    events.withWatermark("ts", late)
-      .groupBy(window(col("ts"), width), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("w_start"), col("event_type"), col("n"))
 
   /** Streaming dedup by event_id within the watermark horizon. */
   def dedup(events: DataFrame, late: String = "2 hours"): DataFrame =

@@ -10,6 +10,18 @@ import graft.functions.Builtins
 class BuiltinsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  test("exo_join joins like exosql's join: a null element as \"\", an empty list as \"\"") {
+    val row = spark.sql("""SELECT array('a', NULL, 'b') AS xs,
+                                  CAST(array() AS ARRAY<STRING>) AS empty,
+                                  CAST(NULL AS ARRAY<STRING>) AS none""")
+      .select(Builtins.exo_join(col("xs"), ","), Builtins.exo_join(col("empty"), ","),
+        Builtins.exo_join(col("none"), ","))
+      .head()
+    assert(row.getString(0) == "a,,b")
+    assert(row.getString(1) == "")
+    assert(row.isNullAt(2))
+  }
+
   test("urlparse part names mean the same under a tr-TR default locale") {
     Builtins.registerAll(spark)
     val url = "http://u@h.example:81/a/b.txt?x=1"

@@ -817,31 +817,22 @@ class EngineSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.col("source"),
         org.apache.spark.sql.functions.col("text"), 5,
         Seq(org.apache.spark.sql.functions.col("doc_id")), salt = "s:"))
-    // the store-backed twins: one pair per graft.queries.Stores fixture
-    // family, each key building its own store, compared row for row
-    // with columns in sorted-name order
+  }
+
+  test("every store-backed twin pair returns the same rows from both keys") {
+    // each graft.queries.StoreTwins declaration (its keys building their
+    // own stores) plus the non-store learned-token pair, compared row
+    // for row with columns in sorted-name order
     def rows(key: String): (Seq[String], Seq[String]) = {
       val df = SparkEntry.queries(key)(spark, TestSpark.sf)
       val cols = df.columns.toSeq.sorted
       (cols, df.select(cols.map(org.apache.spark.sql.functions.col): _*)
         .collect().map(_.toString).toSeq.sorted)
     }
-    Seq(
-      "llm_bm25_append" -> "e_sql_bm25_append",
-      "llm_ann_index_append" -> "e_sql_ann_append",
-      "llm_ann_sq_append" -> "e_sql_ann_sq_append",
-      "llm_ann_ivf_sq_stored" -> "e_sql_ann_ivf_sq_stored",
-      "llm_minhash_index_delete" -> "e_sql_minhash_delete",
-      "llm_fp_append" -> "e_sql_fp_append",
-      "llm_image_append" -> "e_sql_image_append",
-      "llm_audio_append" -> "e_sql_audio_append",
-      "llm_video_append" -> "e_sql_video_append",
-      "llm_trigram_kn_append" -> "e_sql_trigram_kn_append",
-      "llm_lr_eval" -> "e_sql_lr_eval",
-      "llm_unigram_tokenize" -> "e_sql_unigram_tokenize",
-      "llm_decontam_roundtrip" -> "e_sql_decontam_roundtrip",
-      "llm_bpe_count" -> "e_sql_bpe_count"
-    ).foreach { case (scalaKey, sqlKey) =>
+    val pairs = graft.queries.StoreTwins.all.map(t => t.scalaKey -> t.sqlKey) :+
+      ("llm_bpe_count" -> "e_sql_bpe_count")
+    assert(pairs.size == 49)
+    pairs.foreach { case (scalaKey, sqlKey) =>
       val ((apiCols, api), (sqlCols, viaSql)) = (rows(scalaKey), rows(sqlKey))
       assert(apiCols == sqlCols, s"$scalaKey $apiCols vs $sqlKey $sqlCols")
       assert(api.nonEmpty && api == viaSql, s"$scalaKey vs $sqlKey")
@@ -912,5 +903,28 @@ class EngineSpec extends AnyFunSuite {
     once(spark)(runs += 1)
     once(spark)(runs += 1)
     assert(runs == 1)
+  }
+
+  test("engines built concurrently on a fresh session all resolve the graft functions") {
+    // a thread that finds registration running elsewhere must wait for
+    // it, not return before the functions exist
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try (1 to 20).foreach { trial =>
+      val fresh = spark.newSession()
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val done = (1 to 8).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[String] {
+          def call(): String = {
+            start.await()
+            new Engine(fresh).query(
+              """SELECT graft_sample_gate('x', 10000, 's:') AS g,
+                        strftime(TIMESTAMP '2024-05-06 07:08:09', '%Y') AS y""")
+              .head().mkString(",")
+          }
+        })
+      }
+      start.countDown()
+      done.foreach(f => assert(f.get() == "true,2024", s"trial $trial"))
+    } finally pool.shutdown()
   }
 }

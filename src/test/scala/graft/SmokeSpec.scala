@@ -35,6 +35,13 @@ class SmokeSpec extends AnyFunSuite {
     assert(missing == allowedOracleFree, s"queries without oracle: $missing")
   }
 
+  test("a query key stated in two registries is refused, not shadowed") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.disjoint(Map("k" -> 1, "a" -> 2), Seq("b" -> 3), Map("k" -> 4)))
+    assert(e.getMessage.contains("stated twice: k"))
+    assert(SparkEntry.disjoint(Map("a" -> 1), Seq("b" -> 2)) == Map("a" -> 1, "b" -> 2))
+  }
+
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"query $name executes on sf0.001") {
       val df = fn(spark, TestSpark.sf)

@@ -7,8 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * checkpoint or set the checkpoint dir, and the per-call options the
   * rule replaced do not come back), for the one SQL-function
   * declaration in [[graft.engine.SqlFunction]], for locale-free case
-  * mapping, and for the one banded candidate join in
-  * [[graft.operators.Dedup]]. Whole-line comments are skipped. */
+  * mapping, for the one banded candidate join in
+  * [[graft.operators.Dedup]], and for the one declaration per
+  * store-backed twin pair in [[graft.queries.StoreTwins]]. Whole-line
+  * comments are skipped. */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = new java.io.File("src/main/scala")
 
@@ -81,6 +83,19 @@ class SourceGuardSpec extends AnyFunSuite {
       allowed = Set("Dedup.scala"))
     assert(found.isEmpty,
       "band with Dedup.bandRows and self-join with Dedup.bucketPairs:\n" +
+        found.mkString("\n"))
+  }
+
+  test("the _sql store-dir suffix is spelled only in the twin declaration") {
+    // a store-backed e_sql_* key gets its store dir from its
+    // StoreTwins declaration; the two SQL keys below have no Scala-side
+    // store, so no twin
+    val noTwin = Seq("\"hybrid_join_sql\"", "\"selfdedup_sql\"")
+    val found = hits("""_sql["}]""", allowed = Set("StoreTwins.scala"))
+      .filter(_.contains("Stores.dir"))
+      .filterNot(l => noTwin.exists(l.contains))
+    assert(found.isEmpty,
+      "declare a store-backed pair in graft.queries.StoreTwins:\n" +
         found.mkString("\n"))
   }
 }
