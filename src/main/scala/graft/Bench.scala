@@ -143,34 +143,33 @@ object Bench {
     val bySlowest = results
       .sortBy { case (_, v, _) => if (v < 0) Double.NegativeInfinity else -v }
       .map { case (k, v, _) => "\"" + k + "\":" + fmt(v) }
-    // strict prefix of the slowest-first list (a filter would skip an
-    // oversized entry but keep appending faster ones after it, breaking
-    // the "slowest first" contract)
-    val included = new StringBuilder
-    var n = 0
-    var stop = false
-    for (e <- bySlowest if !stop) {
-      if (included.length + e.length + 1 > budget) stop = true
-      else {
-        if (n > 0) included += ','
-        included ++= e; n += 1
-      }
-    }
+    val (included, n) = budgetPrefix(bySlowest, budget)
     val omitted = results.length - n
     val sfShort = sfDir.split('/').last
     // the warm column (slowest-first, own small budget so it can never
     // crowd the probe map out of the driver's capture window)
-    val warmIncluded = {
-      val sb = new StringBuilder
-      var stop2 = false
-      for (e <- warms.sortBy(-_._2)
-             .map { case (k, w) => "\"" + k + "\":" + fmt(w) } if !stop2) {
-        if (sb.length + e.length + 1 > 350) stop2 = true
-        else { if (sb.nonEmpty) sb += ','; sb ++= e }
-      }
-      sb.toString
-    }
+    val (warmIncluded, _) = budgetPrefix(
+      warms.sortBy(-_._2).map { case (k, w) => "\"" + k + "\":" + fmt(w) }, 350)
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.length},"queries_omitted":$omitted,"queries":{$included},"warm":{$warmIncluded},"sf":"$sfShort","full":"target/bench_full.json"}""")
     spark.stop()
+  }
+
+  /** The comma-joined strict prefix of `entries` that fits `budget`
+    * chars (each entry counted with one separator), and how many entries
+    * it keeps. The cut stops at the first entry that does not fit, even
+    * when a later, shorter one would: a filter would keep appending
+    * faster entries after an oversized one and break the slowest-first
+    * order of the printed maps. */
+  private[graft] def budgetPrefix(entries: Seq[String], budget: Int): (String, Int) = {
+    val sb = new StringBuilder
+    var n = 0
+    val it = entries.iterator
+    var fits = true
+    while (fits && it.hasNext) {
+      val e = it.next()
+      if (sb.length + e.length + 1 > budget) fits = false
+      else { if (n > 0) sb += ','; sb ++= e; n += 1 }
+    }
+    (sb.toString, n)
   }
 }

@@ -42,6 +42,12 @@ private[graft] object BpeApply {
     out
   }
 
+  /** Spark's binary-UTF8 string order (`UTF8String.compareTo`, which
+    * DuckDB's collation shares — not Java's UTF-16 order): the tie-break
+    * of both tokenizer trainers and of the unigram Viterbi decode. */
+  private[graft] def utf8Lt(a: String, b: String): Boolean =
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
+
   /** Apply ONE merge to all its left-to-right non-overlapping
     * occurrences in `syms`, in place — string `replace`'s application
     * order, the semantics the training rounds and the serve loop share

@@ -37,9 +37,6 @@ private[graft] object UnigramApply {
   /** log-prob of an unknown codepoint in micro units (ln p = −20). */
   val UnkMicros: Long = -20000000L
 
-  private def utf8Lt(a: String, b: String): Boolean =
-    UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
-
   /** micro-quantized log-probability: round(ln(cnt/total), 6) carried
     * as an exact integer count of 1e-6 units (HALF_UP — DuckDB's
     * round-half-away agrees on the negative values ln produces). */
@@ -77,7 +74,7 @@ private[graft] object UnigramApply {
           val cn = 1 + bn(i + l)
           val cj = if (bj(i + l).isEmpty) p else p + " " + bj(i + l)
           if (wj == null || cs > ws ||
-              (cs == ws && (cn < wn || (cn == wn && utf8Lt(cj, wj))))) {
+              (cs == ws && (cn < wn || (cn == wn && BpeApply.utf8Lt(cj, wj))))) {
             ws = cs; wn = cn; wj = cj; wp = p :: bp(i + l)
           }
         }

@@ -241,9 +241,7 @@ object TextAnalysis {
         .collect()
         .map(r => (graft.functions.BpeApply.codepoints(r.getString(0)),
           r.getLong(1)))
-    import org.apache.spark.unsafe.types.UTF8String
-    def utf8Lt(a: String, b: String): Boolean =
-      UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
+    import graft.functions.BpeApply.utf8Lt
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String)]
     var r = 0
     var exhausted = false
@@ -323,9 +321,7 @@ object TextAnalysis {
         .groupBy(col("w")).agg(count(lit(1)).as("f"))
         .collect().map(r => (r.getString(0), r.getLong(1)))
     require(wfreq.nonEmpty, "unigramTokTrain: empty corpus")
-    import org.apache.spark.unsafe.types.UTF8String
-    def utf8Lt(a: String, b: String): Boolean =
-      UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
+    import graft.functions.BpeApply.utf8Lt
     def byCntDesc(a: (String, Long), b: (String, Long)): Boolean =
       a._2 > b._2 || (a._2 == b._2 && utf8Lt(a._1, b._1))
     def isChar(p: String): Boolean = p.codePointCount(0, p.length) == 1

@@ -7,6 +7,7 @@ import graft.engine.Engine
 /** Queries routed through the Engine façade (SURVEY.md §3) so the
   * dialect shim itself sits in the correctness gate. */
 object EngineQueries {
+  import SqlRecipes._
 
   /** An [[Engine]] on `s` with every testdata table of `d` registered
     * as a temp view. */
@@ -39,13 +40,16 @@ object EngineQueries {
         .createOrReplaceTempView(n)
     }
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "e_distinct_on" -> ((s, d) => via(s, d)(
+  /** The dialect gates' statements: the façade rewrites DISTINCT ON /
+    * QUALIFY for Spark, and DuckDB runs the identical text natively as
+    * the oracle. */
+  private val dialectSql: Map[String, String] = Map(
+    "e_distinct_on" ->
       """SELECT DISTINCT ON (c_nationkey) c_nationkey, c_custkey, c_acctbal
-         FROM customer ORDER BY c_nationkey, c_acctbal DESC, c_custkey""")),
+         FROM customer ORDER BY c_nationkey, c_acctbal DESC, c_custkey""",
     // nested DISTINCT ON (CTE body + FROM-subquery) — the recursive
-    // region rewrite; DuckDB runs the identical SQL natively
-    "e_distinct_on_nested" -> ((s, d) => via(s, d)(
+    // region rewrite
+    "e_distinct_on_nested" ->
       """WITH top_cust AS (
            SELECT DISTINCT ON (c_nationkey) c_nationkey, c_custkey, c_acctbal
            FROM customer ORDER BY c_nationkey, c_acctbal DESC, c_custkey)
@@ -53,30 +57,28 @@ object EngineQueries {
          FROM top_cust t
          LEFT JOIN (SELECT DISTINCT ON (o_custkey) o_custkey, o_totalprice AS max_order
                     FROM orders ORDER BY o_custkey, o_totalprice DESC, o_orderkey) o
-           ON o.o_custkey = t.c_custkey""")),
-    // QUALIFY (window filter clause) — dialect rewrite to a subquery;
-    // DuckDB runs the identical SQL natively
-    "e_qualify" -> ((s, d) => via(s, d)(
+           ON o.o_custkey = t.c_custkey""",
+    // QUALIFY (window filter clause) — dialect rewrite to a subquery
+    "e_qualify" ->
       """SELECT c_nationkey, c_custkey, c_acctbal,
                 row_number() OVER (PARTITION BY c_nationkey
                                    ORDER BY c_acctbal DESC, c_custkey) AS rn
          FROM customer
-         QUALIFY rn <= 2""")),
+         QUALIFY rn <= 2""",
     // DISTINCT ON in set-operation arms (round 4): unparenthesized
     // first arm (window order = keys; c_custkey is unique so the pick
     // is deterministic) + parenthesized second arm with its own
-    // arm-level ORDER BY; the statement-level ORDER BY stays outside.
-    // DuckDB runs the identical SQL natively
-    "e_distinct_on_setop" -> ((s, d) => via(s, d)(
+    // arm-level ORDER BY; the statement-level ORDER BY stays outside
+    "e_distinct_on_setop" ->
       """SELECT DISTINCT ON (c_custkey) c_custkey AS id, c_acctbal AS val
          FROM customer WHERE c_nationkey < 5
          UNION ALL
          (SELECT DISTINCT ON (o_custkey) o_custkey AS id, o_totalprice AS val
           FROM orders ORDER BY o_custkey, o_totalprice DESC, o_orderkey)
-         ORDER BY id, val""")),
+         ORDER BY id, val""",
     // QUALIFY in an unparenthesized first arm: the predicate must bind
     // to the arm, not swallow the UNION that follows it
-    "e_qualify_setop" -> ((s, d) => via(s, d)(
+    "e_qualify_setop" ->
       """SELECT c_nationkey AS k, c_custkey AS id,
                 row_number() OVER (PARTITION BY c_nationkey
                                    ORDER BY c_acctbal DESC, c_custkey) AS rn
@@ -85,7 +87,11 @@ object EngineQueries {
          UNION ALL
          SELECT 999 AS k, o_orderkey AS id, 1 AS rn FROM orders
          WHERE o_orderkey < 50
-         ORDER BY k, id""")),
+         ORDER BY k, id""")
+
+  def defs: Map[String, (SparkSession, String) => DataFrame] = dialectSql.map {
+    case (k, q) => k -> ((s: SparkSession, d: String) => via(s, d)(q))
+  } ++ Map(
     // the reference's core identity: one statement spanning two
     // "databases" (SELECT ... FROM A.x JOIN B.y — SURVEY §1.1); here two
     // catalog namespaces over the same parquet dir
@@ -124,11 +130,7 @@ object EngineQueries {
       // the tokenizer-era chain composed from TVFs and views alone:
       // exact dedup (semi-join on the winners) → learned-token budget
       // (semi-join on the fill) → id-sequence chunks
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW p10_merges AS
-                 SELECT * FROM (VALUES (0,'t','h'),(1,'th','e'),(2,'i','n'),
-                                       (3,'a','n'),(4,'an','d'),(5,'e','r'),
-                                       (6,'o','n'),(7,'r','e'))
-                   AS m(rank, left, right)""")
+      e.query(bpeMergesView("p10_merges"))
       e.query("""CREATE OR REPLACE TEMPORARY VIEW p10_corpus AS
                  SELECT doc_id, text FROM documents
                  UNION ALL SELECT doc_id + 500000 AS doc_id, text FROM documents""")
@@ -151,11 +153,7 @@ object EngineQueries {
       val e = engine(s, d)
       // learned-token chunking from SQL: merge view -> id-sequence
       // windows (joined to a comma string for the portable compare)
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW bpe_merges_chunk AS
-                 SELECT * FROM (VALUES (0,'t','h'),(1,'th','e'),(2,'i','n'),
-                                       (3,'a','n'),(4,'an','d'),(5,'e','r'),
-                                       (6,'o','n'),(7,'r','e'))
-                   AS m(rank, left, right)""")
+      e.query(bpeMergesView("bpe_merges_chunk"))
       e.query("""SELECT doc_id, start_tok, n_tokens,
                         array_join(CAST(token_ids AS ARRAY<STRING>), ',')
                           AS token_ids
@@ -165,11 +163,7 @@ object EngineQueries {
     "e_sql_pack_bpe" -> ((s, d) => {
       val e = engine(s, d)
       // learned-token packing from SQL: the 6-arg graft_pack_offsets
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW bpe_merges_pack AS
-                 SELECT * FROM (VALUES (0,'t','h'),(1,'th','e'),(2,'i','n'),
-                                       (3,'a','n'),(4,'an','d'),(5,'e','r'),
-                                       (6,'o','n'),(7,'r','e'))
-                   AS m(rank, left, right)""")
+      e.query(bpeMergesView("bpe_merges_pack"))
       e.query("""SELECT doc_id, n_toks, token_offset, first_seq, last_seq
                  FROM graft_pack_offsets('documents', 'doc_id', 'text',
                                          512, 64, 'bpe_merges_pack')""")
@@ -630,11 +624,7 @@ object EngineQueries {
     "e_sql_token_budget_bpe" -> ((s, d) => {
       val e = engine(s, d)
       // budget in learned tokens from SQL: merge view -> counter TVF
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW bpe_merges_budget AS
-                 SELECT * FROM (VALUES (0,'t','h'),(1,'th','e'),(2,'i','n'),
-                                       (3,'a','n'),(4,'an','d'),(5,'e','r'),
-                                       (6,'o','n'),(7,'r','e'))
-                   AS m(rank, left, right)""")
+      e.query(bpeMergesView("bpe_merges_budget"))
       e.query("""SELECT doc_id, n_toks, token_offset
                  FROM graft_token_budget_bpe('documents', 'doc_id', 'text',
                                              10000, 'bpe_merges_budget')""")
@@ -779,11 +769,7 @@ object EngineQueries {
       val e = engine(s, d)
       // the merge table as a catalog view (VALUES — the SQL-side twin
       // of the parquet store), applied via the TVF
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW bpe_merges AS
-                 SELECT * FROM (VALUES (0,'t','h'),(1,'th','e'),(2,'i','n'),
-                                       (3,'a','n'),(4,'an','d'),(5,'e','r'),
-                                       (6,'o','n'),(7,'r','e'))
-                   AS m(rank, left, right)""")
+      e.query(bpeMergesView("bpe_merges"))
       e.query("""SELECT doc_id, bpe_cnt
                  FROM graft_bpe_count('documents', 'doc_id', 'text', 'bpe_merges')""")
     }),
@@ -791,11 +777,7 @@ object EngineQueries {
       val e = engine(s, d)
       // the learned-token coverage curve from SQL: VALUES merge view →
       // vocab-report TVF
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW bpe_merges_vocab AS
-                 SELECT * FROM (VALUES (0,'t','h'),(1,'th','e'),(2,'i','n'),
-                                       (3,'a','n'),(4,'an','d'),(5,'e','r'),
-                                       (6,'o','n'),(7,'r','e'))
-                   AS m(rank, left, right)""")
+      e.query(bpeMergesView("bpe_merges_vocab"))
       e.query("""SELECT token_id, token, cnt, df, rank, coverage
                  FROM graft_bpe_vocab('documents', 'doc_id', 'text',
                                       'bpe_merges_vocab', 50)""")
@@ -804,11 +786,7 @@ object EngineQueries {
       val e = engine(s, d)
       // tokenize-to-ids from SQL: the same VALUES merge view, the
       // sequence-emitting twin of graft_bpe_count
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW bpe_merges_tok AS
-                 SELECT * FROM (VALUES (0,'t','h'),(1,'th','e'),(2,'i','n'),
-                                       (3,'a','n'),(4,'an','d'),(5,'e','r'),
-                                       (6,'o','n'),(7,'r','e'))
-                   AS m(rank, left, right)""")
+      e.query(bpeMergesView("bpe_merges_tok"))
       e.query("""SELECT doc_id, pos, token, token_id
                  FROM graft_bpe_tokenize('documents', 'doc_id', 'text',
                                          'bpe_merges_tok')""")
@@ -867,16 +845,7 @@ object EngineQueries {
       // view → graft_image_dups TVF → keep-first anti-predicate →
       // decode/resize geometry as plain SQL over the payload (the stub
       // decode is u32(md5(payload)) arithmetic — expressible in any SQL)
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW p8_media AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 sl AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND length(text) >= 400)
-                 SELECT doc_id, CAST(text AS BINARY) AS payload FROM sl
-                 UNION ALL
-                 SELECT doc_id + 3000000,
-                        CAST(concat(substring(text, 1, 10), 'QQQQ',
-                                    substring(text, 15)) AS BINARY)
-                 FROM sl""")
+      e.query(s"CREATE OR REPLACE TEMPORARY VIEW p8_media AS $mediaPairPayloadsSql")
       e.query("""CREATE OR REPLACE TEMPORARY VIEW p8_dups AS
                  SELECT DISTINCT id_b
                  FROM graft_image_dups('p8_media', 'doc_id', 'payload', 3, 4)""")
@@ -913,10 +882,8 @@ object EngineQueries {
       Stores.minhash(idx, out)
       s.read.parquet(s"$out/bands").createOrReplaceTempView("sdd_bands")
       s.read.parquet(s"$out/sets").createOrReplaceTempView("sdd_sets")
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW sdd_batch AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 aa AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND doc_id <= mx - 200),
+      e.query(s"""CREATE OR REPLACE TEMPORARY VIEW sdd_batch AS
+                 WITH $admissionBatchCtes,
                  nov AS (SELECT a.doc_id,
                                 concat_ws(' ', a.text, b.text, c.text) AS ntext
                          FROM aa a
@@ -952,16 +919,7 @@ object EngineQueries {
       val e = engine(s, d)
       // the media fixture built in engine SQL (same slice + same-length
       // local edit as llm_image_dups), probed via the TVF
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW image_media AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 sl AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND length(text) >= 400)
-                 SELECT doc_id, CAST(text AS BINARY) AS payload FROM sl
-                 UNION ALL
-                 SELECT doc_id + 3000000,
-                        CAST(concat(substring(text, 1, 10), 'QQQQ',
-                                    substring(text, 15)) AS BINARY)
-                 FROM sl""")
+      e.query(s"CREATE OR REPLACE TEMPORARY VIEW image_media AS $mediaPairPayloadsSql")
       e.query("""SELECT id_a, id_b, hamming
                  FROM graft_image_dups('image_media', 'doc_id', 'payload', 3, 4)""")
     }),
@@ -969,11 +927,7 @@ object EngineQueries {
       val e = engine(s, d)
       // the audio fingerprint surface from SQL: the media view + the
       // pure-projection TVF (llm_audio_fp's oracle gates it)
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW audio_media_fp AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 sl AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND length(text) >= 400)
-                 SELECT doc_id, CAST(text AS BINARY) AS payload FROM sl""")
+      e.query(s"CREATE OR REPLACE TEMPORARY VIEW audio_media_fp AS $mediaPayloadsSql")
       e.query("""SELECT doc_id, afp
                  FROM graft_audio_fp('audio_media_fp', 'doc_id', 'payload')""")
     }),
@@ -981,16 +935,7 @@ object EngineQueries {
       val e = engine(s, d)
       // audio near-dup pairs from SQL — the e_sql_image_dups fixture
       // through the audio-fingerprint TVF
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW audio_media AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 sl AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND length(text) >= 400)
-                 SELECT doc_id, CAST(text AS BINARY) AS payload FROM sl
-                 UNION ALL
-                 SELECT doc_id + 3000000,
-                        CAST(concat(substring(text, 1, 10), 'QQQQ',
-                                    substring(text, 15)) AS BINARY)
-                 FROM sl""")
+      e.query(s"CREATE OR REPLACE TEMPORARY VIEW audio_media AS $mediaPairPayloadsSql")
       e.query("""SELECT id_a, id_b, hamming
                  FROM graft_audio_dups('audio_media', 'doc_id', 'payload', 3, 4)""")
     }),
@@ -998,11 +943,7 @@ object EngineQueries {
       val e = engine(s, d)
       // the video frame table from SQL: the media view + the pure
       // per-frame-hash TVF (llm_video_frames' oracle gates it)
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW video_media_fr AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 sl AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND length(text) >= 400)
-                 SELECT doc_id, CAST(text AS BINARY) AS payload FROM sl""")
+      e.query(s"CREATE OR REPLACE TEMPORARY VIEW video_media_fr AS $mediaPayloadsSql")
       e.query("""SELECT doc_id, frame_idx, fhash
                  FROM graft_video_frames('video_media_fr', 'doc_id', 'payload', 4)""")
     }),
@@ -1010,16 +951,7 @@ object EngineQueries {
       val e = engine(s, d)
       // video near-dup pairs from SQL — the audio/image fixture through
       // the frame-aligned matched-count TVF
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW video_media AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 sl AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND length(text) >= 400)
-                 SELECT doc_id, CAST(text AS BINARY) AS payload FROM sl
-                 UNION ALL
-                 SELECT doc_id + 3000000,
-                        CAST(concat(substring(text, 1, 10), 'QQQQ',
-                                    substring(text, 15)) AS BINARY)
-                 FROM sl""")
+      e.query(s"CREATE OR REPLACE TEMPORARY VIEW video_media AS $mediaPairPayloadsSql")
       e.query("""SELECT id_a, id_b, n_frames_matched
                  FROM graft_video_dups('video_media', 'doc_id', 'payload',
                                        4, 3, 4, 3)""")
@@ -1030,16 +962,8 @@ object EngineQueries {
       // (two independent same-length edits per original) built as a
       // view, closed into components by the deferred TVF — EXPLAIN
       // launches no job, the CC rounds run on execute
-      e.query("""CREATE OR REPLACE TEMPORARY VIEW imgc_media AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 sl AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND length(text) >= 400)
-                 SELECT doc_id, CAST(text AS BINARY) AS payload FROM sl
-                 UNION ALL
-                 SELECT doc_id + 3000000,
-                        CAST(concat(substring(text, 1, 10), 'QQQQ',
-                                    substring(text, 15)) AS BINARY)
-                 FROM sl
+      e.query(s"""CREATE OR REPLACE TEMPORARY VIEW imgc_media AS
+                 $mediaPairPayloadsSql
                  UNION ALL
                  SELECT doc_id + 6000000,
                         CAST(concat(substring(text, 1, 29), 'ZZZZ',
@@ -1384,7 +1308,7 @@ object EngineQueries {
       e.query(s"""CREATE OR REPLACE TEMPORARY VIEW p5_clean AS
                  SELECT doc_id,
                         graft_normalize(graft_strip_html(
-                          '${LlmQueries.htmlPre}' || text || '${LlmQueries.htmlPost}'))
+                          '$htmlPre' || text || '$htmlPost'))
                           AS text
                  FROM (SELECT doc_id, text FROM documents
                        UNION ALL SELECT doc_id + 700000, text FROM documents)""")
@@ -1438,42 +1362,7 @@ object EngineQueries {
     })
   )
 
-  def oracle: Map[String, String] = Map(
-    "e_distinct_on" ->
-      """SELECT DISTINCT ON (c_nationkey) c_nationkey, c_custkey, c_acctbal
-         FROM customer ORDER BY c_nationkey, c_acctbal DESC, c_custkey""",
-    "e_distinct_on_nested" ->
-      """WITH top_cust AS (
-           SELECT DISTINCT ON (c_nationkey) c_nationkey, c_custkey, c_acctbal
-           FROM customer ORDER BY c_nationkey, c_acctbal DESC, c_custkey)
-         SELECT t.c_nationkey, t.c_custkey, t.c_acctbal, o.max_order
-         FROM top_cust t
-         LEFT JOIN (SELECT DISTINCT ON (o_custkey) o_custkey, o_totalprice AS max_order
-                    FROM orders ORDER BY o_custkey, o_totalprice DESC, o_orderkey) o
-           ON o.o_custkey = t.c_custkey""",
-    "e_qualify" ->
-      """SELECT c_nationkey, c_custkey, c_acctbal,
-                row_number() OVER (PARTITION BY c_nationkey
-                                   ORDER BY c_acctbal DESC, c_custkey) AS rn
-         FROM customer
-         QUALIFY rn <= 2""",
-    "e_distinct_on_setop" ->
-      """SELECT DISTINCT ON (c_custkey) c_custkey AS id, c_acctbal AS val
-         FROM customer WHERE c_nationkey < 5
-         UNION ALL
-         (SELECT DISTINCT ON (o_custkey) o_custkey AS id, o_totalprice AS val
-          FROM orders ORDER BY o_custkey, o_totalprice DESC, o_orderkey)
-         ORDER BY id, val""",
-    "e_qualify_setop" ->
-      """SELECT c_nationkey AS k, c_custkey AS id,
-                row_number() OVER (PARTITION BY c_nationkey
-                                   ORDER BY c_acctbal DESC, c_custkey) AS rn
-         FROM customer
-         QUALIFY rn <= 2
-         UNION ALL
-         SELECT 999 AS k, o_orderkey AS id, 1 AS rn FROM orders
-         WHERE o_orderkey < 50
-         ORDER BY k, id""",
+  def oracle: Map[String, String] = dialectSql ++ Map(
     "e_federation" ->
       """SELECT n_name, count(*) AS n_orders,
                 CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total

@@ -17,35 +17,7 @@ import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
   * bit-for-bit, not just row counts.
   */
 object LlmQueries {
-
-  private val hashSql = "CAST(('0x'||substr(md5(s),1,8)) AS BIGINT)"
-
-  /** The BM25 scoring CTE chain over `documents` (optionally filtered —
-    * the takedown oracle scores the REMAINING corpus), shared by every
-    * bm25-family oracle so the algebra (the exact parenthesization the
-    * operator uses — integer (N-df) before +0.5, (b·dl)/avgdl
-    * left-assoc, tf cast to double before the k1 products) cannot
-    * diverge between them. Ends at `sc` = (doc_id, c). */
-  private def bm25CteSql(where: String): String =
-    s"""d AS (SELECT doc_id, string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+') AS toks
-              FROM documents$where),
-        stats AS (SELECT count(*) AS n_docs,
-                         sum(len(toks)) AS total_toks FROM d),
-        tok AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM d),
-        tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM tok
-               WHERE term IN ('hash', 'join', 'vector')
-               GROUP BY doc_id, dl, term),
-        dfr AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-        sc AS (SELECT tf.doc_id,
-                 ln(1.0 + (s.n_docs - dfr.df + 0.5) / (dfr.df + 0.5)) *
-                   (CAST(tf.tf AS DOUBLE) * (1.2 + 1)) /
-                   (CAST(tf.tf AS DOUBLE) +
-                    1.2 * (1.0 - 0.75 + 0.75 * CAST(tf.dl AS DOUBLE) /
-                           (CAST(s.total_toks AS DOUBLE) / s.n_docs))) AS c
-               FROM tf JOIN dfr ON tf.term = dfr.term CROSS JOIN stats s)"""
-  /** 13-token gram over a `toks` list at index `i` — shared by every
-    * decontamination-family oracle so the shingle format can't diverge. */
-  private val gram13Sql = (0 until 13).map(j => s"toks[i+$j]").mkString(" || ' ' || ")
+  import SqlRecipes._
 
   /** The `st_admission` oracle (lives here for the shared CTE helpers;
     * referenced from [[StreamQueries.oracle]]): the full admission path
@@ -53,9 +25,7 @@ object LlmQueries {
     * band-candidate + exact-jaccard near-dup rejection vs the corpus —
     * each stage the same algebra as its standalone oracle. */
   private[queries] lazy val admissionOracleSql =
-    s"""WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-        aa AS (SELECT doc_id, text FROM documents, m
-               WHERE doc_id > mx - 300 AND doc_id <= mx - 200),
+    s"""WITH $admissionBatchCtes,
         inc AS (SELECT doc_id + 3000000 AS doc_id, text FROM aa
                 UNION ALL
                 SELECT a.doc_id + 4000000 AS doc_id,
@@ -63,272 +33,16 @@ object LlmQueries {
                 FROM aa a
                 JOIN documents b ON b.doc_id = a.doc_id - 120
                 JOIN documents c ON c.doc_id = a.doc_id - 240),
-        q AS (SELECT doc_id, text FROM (
-                SELECT doc_id, text,
-                  CAST(len(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')) AS INTEGER) AS n_tokens,
-                  round(length(regexp_replace(text, '[\\t\\n\\x0B\\f\\r ]+', '', 'g')) * 1.0
-                        / greatest(len(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')), 1), 6) AS mwl,
-                  round((length(text) - length(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'))) * 1.0
-                        / greatest(length(text), 1), 6) AS sym,
-                  CAST(len(list_filter(string_split_regex(lower(text), '[\\t\\n\\x0B\\f\\r ]+'),
-                       t -> t IN ($stopsEn))) AS INTEGER) AS stops
-                FROM inc)
-              WHERE n_tokens >= 10 AND n_tokens <= 100000
-                AND mwl >= 2.0 AND mwl <= 10.0 AND sym <= 0.1 AND stops >= 1),
-        qt AS (SELECT doc_id, string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+') AS toks FROM q),
-        qg AS (SELECT doc_id, list_distinct(list_transform(
-                 generate_series(1, len(toks) - 12), i -> $gram13Sql)) AS gs
-               FROM qt WHERE len(toks) >= 13),
-        qh AS (SELECT doc_id, list_distinct(list_transform(gs, s -> $hashSql)) AS hs
-               FROM qg),
-        evt AS (SELECT doc_id, string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+') AS toks
-                FROM documents, m WHERE doc_id > mx - 100),
-        evg AS (SELECT doc_id, list_distinct(list_transform(
-                  generate_series(1, len(toks) - 12), i -> $gram13Sql)) AS gs
-                FROM evt WHERE len(toks) >= 13),
-        evh AS (SELECT DISTINCT unnest(list_distinct(list_transform(gs, s -> $hashSql))) AS eh
-                FROM evg),
-        contaminated AS (SELECT DISTINCT x.doc_id
-                         FROM (SELECT doc_id, unnest(hs) AS eh FROM qh) x
-                         JOIN evh USING (eh)),
-        clean AS (SELECT doc_id, text FROM q
-                  WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)),
-        ${minhashSketchCtes("clean", None, "n")},
-        ${minhashSketchCtes("documents", None, "c")},
-        cand AS (SELECT DISTINCT x.doc_id AS id_new, y.doc_id AS id_corpus
-                 FROM bandsn x JOIN bandsc y
-                   ON x.band_idx = y.band_idx AND x.band_val = y.band_val),
-        rejected AS (SELECT DISTINCT c.id_new AS doc_id
-                     FROM cand c JOIN hsn a ON a.doc_id = c.id_new
-                     JOIN hsc b ON b.doc_id = c.id_corpus
-                     WHERE len(list_intersect(a.hs, b.hs)) * 1.0
-                           / len(list_distinct(list_concat(a.hs, b.hs))) >= 0.5)
+        $admissionTextCtes
         SELECT doc_id FROM clean
         WHERE doc_id NOT IN (SELECT doc_id FROM rejected)"""
-
-  /** The BPE-train oracle as DuckDB CTEs: `nMerges` UNROLLED rounds
-    * over the delimiter-wrapped symbol strings (w0 → w1 → …), each
-    * round counting every adjacent symbol position weighted by word
-    * frequency, picking the (count desc, l asc, r asc) winner, and
-    * applying it via `replace` (left-to-right non-overlapping — the
-    * bpe_count oracle's established equivalence). Ends in
-    * `mAll(rank, l, r)` — the learned merge table. */
-  /** The RE2-safe pre-tokenization split as a DuckDB word-extraction
-    * expression — replays [[graft.operators.TextAnalysis.pretokPattern]]
-    * verbatim (letter runs / digit runs / non-space-other runs; no
-    * lookaround, and the whitespace class spelled explicitly because
-    * Java's `\s` includes `\x0B` while RE2's does not — see the
-    * pattern's scaladoc). */
-  private val pretokWordsSql =
-    "regexp_extract_all(text, '\\p{L}+|\\p{N}+|[^\\p{L}\\p{N}\\t\\n\\x0B\\f\\r ]+')"
-
-  private def bpeTrainCtes(nMerges: Int,
-      wordsSql: String = "string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')"): String = {
-    val stages = (0 until nMerges).map { i =>
-      s"""p$i AS (SELECT p.l AS l, p.r AS r, sum(cnt) AS c FROM (
-              SELECT unnest(list_transform(generate_series(1, len(syms) - 1),
-                       j -> {'l': syms[j], 'r': syms[j+1]})) AS p, cnt
-              FROM (SELECT string_split(trim(s), '  ') AS syms, cnt
-                    FROM w$i)) q
-            GROUP BY 1, 2),
-          b$i AS (SELECT l, r FROM p$i ORDER BY c DESC, l, r LIMIT 1),
-          w${i + 1} AS (SELECT replace(w.s, ' '||b.l||'  '||b.r||' ',
-                                       ' '||b.l||b.r||' ') AS s, w.cnt
-                        FROM w$i w, b$i b)"""
-    }.mkString(",\n          ")
-    val union = (0 until nMerges)
-      .map(i => s"SELECT CAST($i AS INTEGER) AS rank, l, r FROM b$i")
-      .mkString("\n                    UNION ALL ")
-    s"""wf AS (SELECT word, count(*) AS cnt FROM (
-            SELECT unnest($wordsSql) AS word
-            FROM documents) q
-          WHERE length(word) > 0 GROUP BY word),
-        w0 AS (SELECT ' ' || array_to_string(string_split(word, ''), '  ')
-                 || ' ' AS s, cnt
-               FROM wf),
-        $stages,
-        mAll AS ($union)"""
-  }
-
-  /** Unigram-LM tokenizer training replayed as DuckDB CTEs, ending in
-    * `uvrank(token_id, piece, cnt, mu)` — the final piece table with
-    * micro-quantized log-prob scores. Replays
-    * [[graft.operators.TextAnalysis.unigramTokTrain]] exactly: substring
-    * seed counts, then per round (a) micro scores from the current
-    * vocabulary, (b) per-word max-likelihood segmentation — here by
-    * EXHAUSTIVE path enumeration through a recursive CTE with the
-    * identical (score desc, n pieces asc, space-joined path asc) argmax
-    * the Viterbi DP provably computes, (c) recount from winning paths,
-    * (d) char floor + prune to the target vocabulary. Path scores are
-    * exact BIGINT micro sums, so both engines compare identical
-    * operands; the single libm-ln per piece is absorbed by the micro
-    * rounding (round-half-away == HALF_UP on ln's negative values). */
-  private def unigramTrainCtes(vocabSize: Int, nRounds: Int,
-                               maxPieceLen: Int, seedSize: Int): String = {
-    val rounds = (1 to nRounds).map { r =>
-      val prev = if (r == 1) "uv0" else s"uv${r - 1}"
-      s"""us$r AS (SELECT piece,
-                   CAST(round(ln(cnt / (SELECT sum(cnt) FROM $prev)) * 1000000) AS BIGINT) AS mu
-                 FROM $prev),
-          up$r AS (SELECT w, f, 1 AS i, CAST(0 AS BIGINT) AS sc, 0 AS n, '' AS path
-                 FROM uwf
-                 UNION ALL
-                 SELECT p.w, p.f, p.i + length(s.piece), p.sc + s.mu, p.n + 1,
-                        CASE WHEN p.path = '' THEN s.piece
-                             ELSE p.path || ' ' || s.piece END
-                 FROM up$r p JOIN us$r s
-                   ON s.piece = substr(p.w, p.i, length(s.piece))
-                 WHERE p.i <= length(p.w)),
-          ub$r AS (SELECT w, f, path FROM (
-                   SELECT w, f, path, row_number() OVER (PARTITION BY w
-                     ORDER BY sc DESC, n ASC, path ASC) AS rn
-                   FROM up$r WHERE i = length(w) + 1)
-                 WHERE rn = 1),
-          uc$r AS (SELECT piece, sum(f) AS cnt FROM (
-                   SELECT unnest(string_split(path, ' ')) AS piece, f
-                   FROM ub$r)
-                 GROUP BY piece),
-          uv$r AS (SELECT v.piece, greatest(coalesce(c.cnt, 0), 1) AS cnt
-                 FROM $prev v LEFT JOIN uc$r c USING (piece)
-                 WHERE length(v.piece) = 1
-                 UNION ALL
-                 SELECT piece, cnt FROM (
-                   SELECT piece, cnt, row_number() OVER
-                     (ORDER BY cnt DESC, piece) AS rn
-                   FROM uc$r WHERE length(piece) > 1), unch
-                 WHERE rn <= $vocabSize - nc)"""
-    }.mkString(",\n          ")
-    s"""uwf AS (SELECT w, count(*) AS f FROM (
-               SELECT unnest(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')) AS w
-               FROM documents) q
-             WHERE length(w) > 0 GROUP BY w),
-        useed AS (SELECT piece, sum(f) AS cnt FROM (
-                  SELECT substr(w, i, l) AS piece, f
-                  FROM (SELECT w, f,
-                          unnest(generate_series(1, length(w))) AS i
-                        FROM uwf) a
-                  CROSS JOIN (SELECT unnest(generate_series(1, $maxPieceLen)) AS l) b
-                  WHERE i + l - 1 <= length(w)) q
-                GROUP BY piece),
-        unch AS (SELECT count(*) AS nc FROM useed WHERE length(piece) = 1),
-        uv0 AS (SELECT piece, cnt FROM useed WHERE length(piece) = 1
-                UNION ALL
-                SELECT piece, cnt FROM (
-                  SELECT piece, cnt, row_number() OVER
-                    (ORDER BY cnt DESC, piece) AS rn
-                  FROM useed WHERE length(piece) > 1) q
-                WHERE rn <= $seedSize),
-        $rounds,
-        uvfin AS (SELECT piece, cnt,
-                  CAST(round(ln(cnt / (SELECT sum(cnt) FROM uv$nRounds)) * 1000000) AS BIGINT) AS mu
-                FROM uv$nRounds),
-        uvrank AS (SELECT CAST(row_number() OVER (ORDER BY cnt DESC, piece) AS INTEGER) AS token_id,
-                          piece, CAST(cnt AS BIGINT) AS cnt, mu
-                 FROM uvfin)"""
-  }
-
-  /** The audio-fingerprint chain as DuckDB CTEs over relation `src`
-    * (must expose doc_id, text and any carried flag columns via
-    * `carry`), ending in `afp$sfx(doc_id[, carry], afp)` — the
-    * [[graft.functions.AudioFp64]] Haitsma-Kalker chain replayed: 99
-    * slice energies (3 frames x 33 band edges, u32(md5(slice)) mod
-    * 256), bit i set when the time x band double difference is
-    * positive. */
-  private def audioFpCtes(src: String, sfx: String,
-                          carry: String = ""): String = {
-    val c = if (carry.isEmpty) "" else s", $carry"
-    s"""ahx$sfx AS (SELECT doc_id$c, lower(hex(text)) AS h FROM $src),
-        aen$sfx AS (SELECT doc_id$c,
-                  list_transform(generate_series(0, 98), k ->
-                    CAST(('0x' || substr(md5(substr(h,
-                        CAST(floor(length(h)*k/99) AS INT) + 1,
-                        greatest(CAST(floor(length(h)*(k+1)/99) AS INT)
-                          - CAST(floor(length(h)*k/99) AS INT), 0))), 1, 8))
-                      AS BIGINT) % 256) AS en
-                FROM ahx$sfx),
-        afp$sfx AS (SELECT doc_id$c,
-                 CAST(list_sum(list_transform(generate_series(0, 63), i ->
-                   CASE WHEN (en[(CAST(floor(i/32) AS INT)+1)*33 + (i%32) + 1]
-                              - en[(CAST(floor(i/32) AS INT)+1)*33 + (i%32) + 2])
-                           > (en[CAST(floor(i/32) AS INT)*33 + (i%32) + 1]
-                              - en[CAST(floor(i/32) AS INT)*33 + (i%32) + 2])
-                        THEN CASE WHEN i = 63
-                                  THEN -9223372036854775808
-                                  ELSE (CAST(1 AS BIGINT) << CAST(i AS INT)) END
-                        ELSE 0 END)) AS BIGINT) AS afp
-               FROM aen$sfx)"""
-  }
-
-  /** The per-frame video hash chain as DuckDB CTEs over relation `src`
-    * (doc_id, text[, carry]), ending in `vfp$sfx(doc_id[, carry],
-    * frame_idx, fhash)`: frame f of 4 = the byte range
-    * [(L·f)//4, (L·(f+1))//4) of the payload, taken as the ALIGNED
-    * hex slice (byte k ↔ hex chars 2k+1..2k+2), then the image dHash
-    * recipe (72 slice-md5 lumas, 64 gradient bits) over the frame's
-    * hex — exactly what the fused DHash64 computes over the frame's
-    * bytes on the Spark side. */
-  private def videoFpCtes(src: String, sfx: String,
-                          carry: String = ""): String = {
-    val c = if (carry.isEmpty) "" else s", $carry"
-    s"""vhx$sfx AS (SELECT doc_id$c, lower(hex(text)) AS h FROM $src),
-        vfr$sfx AS (SELECT doc_id$c, unnest(generate_series(0, 3)) AS frame_idx, h
-                 FROM vhx$sfx),
-        vsl$sfx AS (SELECT doc_id$c, frame_idx,
-                  substr(h, 2*(((length(h)//2)*frame_idx)//4) + 1,
-                         2*((((length(h)//2)*(frame_idx+1))//4)
-                            - (((length(h)//2)*frame_idx)//4))) AS fh
-                FROM vfr$sfx),
-        vlu$sfx AS (SELECT doc_id$c, frame_idx,
-                  list_transform(generate_series(0, 71), k ->
-                    CAST(('0x' || substr(md5(substr(fh,
-                        CAST(floor(length(fh)*k/72) AS INT) + 1,
-                        greatest(CAST(floor(length(fh)*(k+1)/72) AS INT)
-                          - CAST(floor(length(fh)*k/72) AS INT), 0))), 1, 8))
-                      AS BIGINT) % 256) AS lu
-                FROM vsl$sfx),
-        vfp$sfx AS (SELECT doc_id$c, frame_idx,
-                 CAST(list_sum(list_transform(generate_series(0, 63), i ->
-                   CASE WHEN lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 2]
-                             > lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 1]
-                        THEN CASE WHEN i = 63
-                                  THEN -9223372036854775808
-                                  ELSE (CAST(1 AS BIGINT) << CAST(i AS INT)) END
-                        ELSE 0 END)) AS BIGINT) AS fhash
-               FROM vlu$sfx)"""
-  }
-
-  /** The dHash chain as DuckDB CTEs over relation `src` (doc_id, text),
-    * ending in `dh$sfx(doc_id, dhash)` — the llm_image_dups chain with
-    * suffixed names so the mixed-modality oracle can hash two relations
-    * (store + incoming payloads) in one statement. */
-  private def dhashCtes(src: String, sfx: String): String =
-    s"""hx$sfx AS (SELECT doc_id, lower(hex(text)) AS h FROM $src),
-        lum$sfx AS (SELECT doc_id,
-                  list_transform(generate_series(0, 71), k ->
-                    CAST(('0x' || substr(md5(substr(h,
-                        CAST(floor(length(h)*k/72) AS INT) + 1,
-                        greatest(CAST(floor(length(h)*(k+1)/72) AS INT)
-                          - CAST(floor(length(h)*k/72) AS INT), 0))), 1, 8))
-                      AS BIGINT) % 256) AS lu
-                FROM hx$sfx),
-        dh$sfx AS (SELECT doc_id,
-                 CAST(list_sum(list_transform(generate_series(0, 63), i ->
-                   CASE WHEN lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 2]
-                             > lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 1]
-                        THEN CASE WHEN i = 63
-                                  THEN -9223372036854775808
-                                  ELSE (CAST(1 AS BIGINT) << CAST(i AS INT)) END
-                        ELSE 0 END)) AS BIGINT) AS dhash
-               FROM lum$sfx)"""
 
   /** The `llm_pipeline9` oracle: the mixed-modality admission — the
     * st_admission TEXT path (Gopher → decontamination → minhash probe)
     * over the incoming rows' text, AND a dHash probe of each row's
     * MEDIA payload vs the corpus frame; admitted = survives both. */
   private[queries] lazy val pipeline9OracleSql =
-    s"""WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-        aa AS (SELECT doc_id, text FROM documents, m
-               WHERE doc_id > mx - 300 AND doc_id <= mx - 200),
+    s"""WITH $admissionBatchCtes,
         nov AS (SELECT a.doc_id, a.text AS atext,
                        a.text || ' ' || b.text || ' ' || c.text AS ntext
                 FROM aa a
@@ -341,46 +55,7 @@ object LlmQueries {
                 SELECT doc_id + 5000000, text, reverse(text) FROM aa
                 UNION ALL
                 SELECT doc_id + 6000000, ntext, reverse(atext) FROM nov),
-        q AS (SELECT doc_id, text FROM (
-                SELECT doc_id, text,
-                  CAST(len(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')) AS INTEGER) AS n_tokens,
-                  round(length(regexp_replace(text, '[\\t\\n\\x0B\\f\\r ]+', '', 'g')) * 1.0
-                        / greatest(len(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')), 1), 6) AS mwl,
-                  round((length(text) - length(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'))) * 1.0
-                        / greatest(length(text), 1), 6) AS sym,
-                  CAST(len(list_filter(string_split_regex(lower(text), '[\\t\\n\\x0B\\f\\r ]+'),
-                       t -> t IN ($stopsEn))) AS INTEGER) AS stops
-                FROM inc)
-              WHERE n_tokens >= 10 AND n_tokens <= 100000
-                AND mwl >= 2.0 AND mwl <= 10.0 AND sym <= 0.1 AND stops >= 1),
-        qt AS (SELECT doc_id, string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+') AS toks FROM q),
-        qg AS (SELECT doc_id, list_distinct(list_transform(
-                 generate_series(1, len(toks) - 12), i -> $gram13Sql)) AS gs
-               FROM qt WHERE len(toks) >= 13),
-        qh AS (SELECT doc_id, list_distinct(list_transform(gs, s -> $hashSql)) AS hs
-               FROM qg),
-        evt AS (SELECT doc_id, string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+') AS toks
-                FROM documents, m WHERE doc_id > mx - 100),
-        evg AS (SELECT doc_id, list_distinct(list_transform(
-                  generate_series(1, len(toks) - 12), i -> $gram13Sql)) AS gs
-                FROM evt WHERE len(toks) >= 13),
-        evh AS (SELECT DISTINCT unnest(list_distinct(list_transform(gs, s -> $hashSql))) AS eh
-                FROM evg),
-        contaminated AS (SELECT DISTINCT x.doc_id
-                         FROM (SELECT doc_id, unnest(hs) AS eh FROM qh) x
-                         JOIN evh USING (eh)),
-        clean AS (SELECT doc_id, text FROM q
-                  WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)),
-        ${minhashSketchCtes("clean", None, "n")},
-        ${minhashSketchCtes("documents", None, "c")},
-        cand AS (SELECT DISTINCT x.doc_id AS id_new, y.doc_id AS id_corpus
-                 FROM bandsn x JOIN bandsc y
-                   ON x.band_idx = y.band_idx AND x.band_val = y.band_val),
-        rejected AS (SELECT DISTINCT c.id_new AS doc_id
-                     FROM cand c JOIN hsn a ON a.doc_id = c.id_new
-                     JOIN hsc b ON b.doc_id = c.id_corpus
-                     WHERE len(list_intersect(a.hs, b.hs)) * 1.0
-                           / len(list_distinct(list_concat(a.hs, b.hs))) >= 0.5),
+        $admissionTextCtes,
         pays AS (SELECT doc_id, pay AS text FROM inc),
         ${dhashCtes("pays", "p")},
         store AS (SELECT doc_id, text FROM documents),
@@ -395,83 +70,13 @@ object LlmQueries {
   /** Shared by `llm_decontaminate` and `llm_decontaminate_bloom` — the
     * bloom path is a bandwidth optimization with identical output. */
   private lazy val decontaminateOracleSql =
-    s"""WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-        t AS (SELECT doc_id, string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+') AS toks
-              FROM documents),
-        g AS (SELECT doc_id,
-                list_distinct(list_transform(generate_series(1, len(toks) - 12),
-                  i -> $gram13Sql)) AS gs
-              FROM t WHERE len(toks) >= 13),
-        h AS (SELECT doc_id,
-                list_distinct(list_transform(gs, s -> $hashSql)) AS hs
-              FROM g),
-        ev AS (SELECT DISTINCT unnest(hs) AS eh FROM h, m WHERE doc_id > mx - 100),
-        co AS (SELECT doc_id, unnest(hs) AS eh FROM h, m WHERE doc_id <= mx - 100),
+    s"""WITH $decontamCtes,
         hits AS (SELECT doc_id, count(*) AS c
                  FROM co JOIN ev USING (eh) GROUP BY doc_id)
         SELECT d.doc_id, coalesce(hits.c, 0) AS eval_shingles,
                coalesce(hits.c, 0) > 0 AS contaminated
         FROM (SELECT doc_id FROM documents, m WHERE doc_id <= mx - 100) d
         LEFT JOIN hits USING (doc_id)"""
-
-  /** The Gopher repetition panel as DuckDB CTEs over a relation `src`
-    * (doc_id, text), ending in `fr(doc_id, dup_line_frac,
-    * dup_line_char_frac, top_ngram_char_frac, dup_ngram_char_frac)` —
-    * shared by the llm_gopher_rep oracle (planted fixture src) and the
-    * pipeline4 oracle (raw documents src), single-sourced to prevent
-    * drift. Same 60-bit hash recipe as the Spark twin; the top-gram tie
-    * breaks by (count, len, hash) on both sides. */
-  private val gopherRepCtes: String =
-    """l AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM src),
-       lh AS (SELECT doc_id,
-                CAST(('0x'||substr(md5(line),1,15)) AS BIGINT) AS h,
-                count(*) AS c, max(length(line)) AS len
-              FROM l GROUP BY 1, 2),
-       la AS (SELECT doc_id, sum(c) AS nl, sum(c-1) AS dl,
-                sum(c*len) AS lc, sum((c-1)*len) AS dlc
-              FROM lh GROUP BY doc_id),
-       t AS (SELECT doc_id, string_split_regex(text, '[\t\n\x0B\f\r ]+') AS toks,
-               length(text) AS nch FROM src),
-       g2 AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 1),
-                i -> toks[i] || ' ' || toks[i+1])) AS s
-              FROM t WHERE len(toks) >= 2),
-       g2h AS (SELECT doc_id, CAST(('0x'||substr(md5(s),1,15)) AS BIGINT) AS h,
-                count(*) AS c, max(length(s)) AS len FROM g2 GROUP BY 1, 2),
-       top2 AS (SELECT doc_id, c * len AS topchars FROM (
-                  SELECT doc_id, c, len,
-                    row_number() OVER (PARTITION BY doc_id
-                      ORDER BY c DESC, len DESC, h DESC) AS rn
-                  FROM g2h) WHERE rn = 1),
-       g5 AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 4),
-                i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' ||
-                     toks[i+3] || ' ' || toks[i+4])) AS s
-              FROM t WHERE len(toks) >= 5),
-       g5h AS (SELECT doc_id, CAST(('0x'||substr(md5(s),1,15)) AS BIGINT) AS h,
-                count(*) AS c, max(length(s)) AS len FROM g5 GROUP BY 1, 2),
-       dup5 AS (SELECT doc_id, sum(c*len) AS dupchars FROM g5h WHERE c > 1
-                GROUP BY doc_id),
-       fr AS (SELECT b.doc_id,
-                coalesce(round(CAST(la.dl AS DOUBLE) / la.nl, 6), 0.0)
-                  AS dup_line_frac,
-                coalesce(CASE WHEN la.lc = 0 THEN 0.0
-                  ELSE round(CAST(la.dlc AS DOUBLE) / la.lc, 6) END, 0.0)
-                  AS dup_line_char_frac,
-                CASE WHEN b.nch = 0 THEN 0.0
-                  ELSE least(1.0, round(CAST(coalesce(t2.topchars, 0) AS DOUBLE)
-                                        / b.nch, 6)) END AS top_ngram_char_frac,
-                CASE WHEN b.nch = 0 THEN 0.0
-                  ELSE least(1.0, round(CAST(coalesce(d5.dupchars, 0) AS DOUBLE)
-                                        / b.nch, 6)) END AS dup_ngram_char_frac
-              FROM (SELECT doc_id, length(text) AS nch FROM src) b
-              LEFT JOIN la USING (doc_id)
-              LEFT JOIN top2 t2 USING (doc_id)
-              LEFT JOIN dup5 d5 USING (doc_id))"""
-
-  /** The keep conjunction over `fr`'s fraction columns (published
-    * Gopher thresholds) — shared by the panel oracle and pipeline4. */
-  private val gopherRepKeep: String =
-    """(dup_line_frac <= 0.30 AND dup_line_char_frac <= 0.20
-        AND top_ngram_char_frac <= 0.20 AND dup_ngram_char_frac <= 0.15)"""
 
   /** The last `n` documents by id — the slice where the driver plants
     * near-duplicates — selected via a broadcast 1-row max bound.
@@ -483,75 +88,6 @@ object LlmQueries {
     val gen = Stores.split(docs, "doc_id")
     gen.newer(n).select($"doc_id", $"text")
   }
-
-  /** DuckDB CTEs `t` (tail-slice tokens) and `g` (distinct trigrams) —
-    * the shared prefix of both containment oracles. */
-  private lazy val tailTrigramCtes =
-    """t AS (SELECT doc_id, string_split_regex(text, '[\t\n\x0B\f\r ]+') AS toks
-            FROM documents
-            WHERE doc_id > (SELECT max(doc_id) - 300 FROM documents)),
-       g AS (SELECT doc_id,
-               list_distinct(list_transform(generate_series(1, len(toks) - 2),
-                 i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS gs
-             FROM t WHERE len(toks) >= 3)"""
-
-  /** The MinHash-LSH pipeline as DuckDB CTEs ending in
-    * `pairs(id_a, id_b, jaccard)`, over source relation `src`; `cap`
-    * inserts the hot-bucket guard (buckets with more than `cap` members
-    * dropped before the candidate join — mirroring
-    * Dedup.minhashPairs(maxBucketSize)). */
-  /** The minhash SKETCH side of the pipeline as CTEs ending in
-    * `bands$sfx` (and exposing `hs$sfx`), over source relation `src`;
-    * `sfx` disambiguates the CTE names so two sides (incremental-dedup
-    * oracle) can coexist in one statement. */
-  private def minhashSketchCtes(src: String, cap: Option[Int],
-                                sfx: String): String = {
-    val bandsOut = if (cap.isDefined) s"bands0$sfx" else s"bands$sfx"
-    val capCtes = cap.map(k => s""",
-        keep$sfx AS (SELECT band_idx, band_val FROM bands0$sfx
-                 GROUP BY 1, 2 HAVING count(*) <= $k),
-        bands$sfx AS (SELECT b.doc_id, b.band_idx, b.band_val
-                  FROM bands0$sfx b JOIN keep$sfx USING (band_idx, band_val))""")
-      .getOrElse("")
-    s"""t$sfx AS (SELECT doc_id, string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+') toks FROM $src),
-        sh$sfx AS (SELECT doc_id,
-                 list_distinct(list_transform(generate_series(1, len(toks) - 2),
-                   i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) sh
-               FROM t$sfx WHERE len(toks) >= 3),
-        hs$sfx AS (SELECT doc_id, list_distinct(list_transform(sh, s -> $hashSql)) hs FROM sh$sfx),
-        sig$sfx AS (SELECT doc_id,
-                  list_transform(generate_series(0, 15), i ->
-                    list_min(list_transform(hs, h -> (h * (2*i + 1) + 101*i + 17) % 4294967311))) sig
-                FROM hs$sfx),
-        $bandsOut AS (SELECT doc_id, b.i AS band_idx,
-                    CAST(sig[4*b.i+1] AS VARCHAR) || '_' || CAST(sig[4*b.i+2] AS VARCHAR) || '_' ||
-                    CAST(sig[4*b.i+3] AS VARCHAR) || '_' || CAST(sig[4*b.i+4] AS VARCHAR) AS band_val
-                  FROM sig$sfx CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS i) b)$capCtes"""
-  }
-
-  private def minhashCtesFrom(src: String, cap: Option[Int] = None): String =
-    s"""${minhashSketchCtes(src, cap, "")},
-        cand AS (SELECT DISTINCT x.doc_id id_a, y.doc_id id_b
-                 FROM bands x JOIN bands y
-                   ON x.band_idx = y.band_idx AND x.band_val = y.band_val
-                      AND x.doc_id < y.doc_id),
-        pairs AS (SELECT c.id_a, c.id_b,
-                         len(list_intersect(a.hs, b.hs)) * 1.0
-                           / len(list_distinct(list_concat(a.hs, b.hs))) AS jaccard
-                  FROM cand c JOIN hs a ON a.doc_id = c.id_a JOIN hs b ON b.doc_id = c.id_b
-                  WHERE len(list_intersect(a.hs, b.hs)) * 1.0
-                          / len(list_distinct(list_concat(a.hs, b.hs))) >= 0.5)"""
-
-  private lazy val minhashCtes = minhashCtesFrom("documents")
-
-
-  /** DuckDB expression for the LSH bucket of a DOUBLE[] column `v`,
-    * using the same deterministic hyperplanes as Similarity.planeSigns. */
-  private def bucketSql(planes: Array[Array[Double]]): String =
-    planes.zipWithIndex.map { case (plane, p) =>
-      val arr = plane.map(x => if (x > 0) "1.0" else "-1.0").mkString("[", ",", "]")
-      s"(CASE WHEN list_inner_product(v, $arr) > 0 THEN CAST(${1L << p} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-    }.mkString(" + ")
 
   def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "llm_text_stats" -> ((s, d) => {
@@ -2440,199 +1976,6 @@ object LlmQueries {
     })
   )
 
-  private val stopsEn = "'the','a','of','and','to','in','is','it','for','on'"
-
-  /** The full LR train-then-score replay (2 GD rounds, round-6 grids,
-    * exact-decimal accumulations) over the even/odd labeled fixture,
-    * ending at `ep` = (tid, p, y) — shared by the eval and calibration
-    * oracles so the scoring replay cannot diverge between them. */
-  private lazy val lrEvalScoreCtes: String =
-    """pos AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
-          neg AS (SELECT doc_id, upper(text) AS text FROM documents
-                  WHERE doc_id % 2 = 1),
-          feats AS (
-            SELECT 'p:' || CAST(doc_id AS VARCHAR) AS tid, bucket,
-                   count(*) AS tf, 1.0 AS y
-            FROM (SELECT doc_id,
-                    CAST(CAST(('0x'||substr(md5(t),1,15)) AS BIGINT) % 64 AS INTEGER) AS bucket
-                  FROM (SELECT doc_id, unnest(string_split_regex(text, '[\t\n\x0B\f\r ]+')) AS t
-                        FROM pos))
-            GROUP BY 1, bucket
-            UNION ALL
-            SELECT 'n:' || CAST(doc_id AS VARCHAR), bucket, count(*), 0.0
-            FROM (SELECT doc_id,
-                    CAST(CAST(('0x'||substr(md5(t),1,15)) AS BIGINT) % 64 AS INTEGER) AS bucket
-                  FROM (SELECT doc_id, unnest(string_split_regex(text, '[\t\n\x0B\f\r ]+')) AS t
-                        FROM neg))
-            GROUP BY 1, bucket),
-          nn AS (SELECT count(DISTINCT tid) AS n FROM feats),
-          g1 AS (SELECT bucket,
-                        CAST(sum(CAST(tf * (y - 0.5) AS DECIMAL(20,10))) AS DOUBLE)
-                          / nn.n AS g
-                 FROM feats, nn GROUP BY bucket, nn.n),
-          w1 AS (SELECT bucket, round(0.5 * g, 6) AS w FROM g1),
-          z2 AS (SELECT f.tid,
-                        round(CAST(sum(CAST(f.tf * coalesce(w1.w, 0.0)
-                          AS DECIMAL(20,10))) AS DOUBLE), 6) AS z
-                 FROM feats f LEFT JOIN w1 USING (bucket) GROUP BY f.tid),
-          p2 AS (SELECT tid, round(1.0 / (1.0 + exp(-z)), 6) AS p FROM z2),
-          g2 AS (SELECT f.bucket,
-                        CAST(sum(CAST(f.tf *
-                          ((CASE WHEN f.tid LIKE 'p:%' THEN 1.0 ELSE 0.0 END)
-                            - p2.p) AS DECIMAL(20,10))) AS DOUBLE) / nn.n AS g
-                 FROM feats f JOIN p2 USING (tid), nn GROUP BY f.bucket, nn.n),
-          w2 AS (SELECT coalesce(w1.bucket, g2.bucket) AS bucket,
-                        round(coalesce(w1.w, 0) + 0.5 * coalesce(g2.g, 0), 6) AS w
-                 FROM w1 FULL JOIN g2 ON w1.bucket = g2.bucket),
-          ez AS (SELECT f.tid,
-                        round(CAST(sum(CAST(f.tf * coalesce(w2.w, 0.0)
-                          AS DECIMAL(20,10))) AS DOUBLE), 6) AS z
-                 FROM feats f LEFT JOIN w2 USING (bucket) GROUP BY f.tid),
-          ep AS (SELECT tid, round(1.0 / (1.0 + exp(-z)), 6) AS p,
-                        CASE WHEN tid LIKE 'p:%' THEN 1 ELSE 0 END AS y
-                 FROM ez)"""
-
-  /** The batch-hybrid fusion algebra (both legs ranked at 20, RRF-fused
-    * per query, cut at 10): expects CTEs `hdocs` (doc_id, text — the
-    * lexical corpus) and `hce` (vec_id, v DOUBLE[] — the semantic
-    * corpus side) upstream; ends with the final SELECT. Shared by
-    * llm_hybrid_join and llm_pipeline11 so the fusion algebra cannot
-    * diverge between the standalone and composed forms. */
-  /** The batch-hybrid CTE chain up through `hrk` (per-query fused
-    * ranking) — shared by the hybrid-join oracles and pipeline13's
-    * (which appends the per-query MMR unroll on top). */
-  private lazy val hybridJoinCtesSql: String =
-    s"""hq(query_id, qtext) AS (
-          SELECT * FROM (VALUES (1, 'hash join'), (2, 'vector scan slow'),
-                                (3, 'zzzunknown'))),
-        hqt AS (SELECT DISTINCT query_id, t AS term FROM (
-                 SELECT query_id,
-                        unnest(string_split_regex(qtext, '[\\t\\n\\x0B\\f\\r ]+')) AS t
-                 FROM hq) WHERE length(t) > 0),
-        hd AS (SELECT doc_id, string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+') AS toks
-               FROM hdocs),
-        hstats AS (SELECT count(*) AS n_docs,
-                          sum(len(toks)) AS total_toks FROM hd),
-        htok AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term
-                 FROM hd),
-        htf AS (SELECT doc_id, dl, term, count(*) AS tf FROM htok
-                WHERE term IN (SELECT DISTINCT term FROM hqt)
-                GROUP BY doc_id, dl, term),
-        hdfr AS (SELECT term, count(*) AS df FROM htf GROUP BY term),
-        hsc AS (SELECT hqt.query_id, htf.doc_id,
-                  ln(1.0 + (s.n_docs - hdfr.df + 0.5) / (hdfr.df + 0.5)) *
-                    (CAST(htf.tf AS DOUBLE) * (1.2 + 1)) /
-                    (CAST(htf.tf AS DOUBLE) +
-                     1.2 * (1.0 - 0.75 + 0.75 * CAST(htf.dl AS DOUBLE) /
-                            (CAST(s.total_toks AS DOUBLE) / s.n_docs))) AS c
-                FROM htf JOIN hdfr ON htf.term = hdfr.term
-                JOIN hqt ON htf.term = hqt.term CROSS JOIN hstats s),
-        hagg AS (SELECT query_id, doc_id, round(sum(c), 4) AS bm25
-                 FROM hsc GROUP BY query_id, doc_id),
-        hbmr AS (SELECT query_id, doc_id,
-                   row_number() OVER (PARTITION BY query_id
-                     ORDER BY bm25 DESC, doc_id ASC) AS r
-                 FROM hagg),
-        hbmk AS (SELECT query_id, doc_id, r FROM hbmr WHERE r <= 20),
-        hqv AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS v
-                FROM embeddings WHERE vec_id IN (1, 2, 3)),
-        hann AS (SELECT hqv.query_id, e.vec_id AS doc_id,
-                   round(list_cosine_similarity(e.v, hqv.v), 6) AS cos_sim
-                 FROM hce e JOIN hqv ON e.vec_id <> hqv.query_id),
-        hannr AS (SELECT query_id, doc_id,
-                    row_number() OVER (PARTITION BY query_id
-                      ORDER BY cos_sim DESC, doc_id ASC) AS r
-                  FROM hann),
-        hannk AS (SELECT query_id, doc_id, r FROM hannr WHERE r <= 20),
-        hf AS (SELECT coalesce(b.query_id, a.query_id) AS query_id,
-                 coalesce(b.doc_id, a.doc_id) AS doc_id,
-                 round(coalesce(CAST(1.0 AS DOUBLE) / (60 + b.r), 0.0) +
-                       coalesce(CAST(1.0 AS DOUBLE) / (60 + a.r), 0.0),
-                       6) AS rrf
-               FROM hbmk b FULL OUTER JOIN hannk a
-                 ON b.query_id = a.query_id AND b.doc_id = a.doc_id),
-        hrk AS (SELECT query_id, doc_id, rrf,
-                  CAST(row_number() OVER (PARTITION BY query_id
-                    ORDER BY rrf DESC, doc_id ASC) AS INT) AS rank
-                FROM hf)"""
-
-  private lazy val hybridJoinTailSql: String =
-    s"""$hybridJoinCtesSql
-        SELECT query_id, doc_id, rrf, rank FROM hrk WHERE rank <= 10"""
-
-  /** Raw-crawl fixture around every doc (shared by the html-strip gate
-    * and pipeline5, Scala AND SQL sides): style + script blocks (the
-    * script contains `1 < 2 && x > 0` — eaten as a tag if block removal
-    * were skipped), a comment, attributed tags, the handled entities,
-    * and the UNhandled &copy; that must pass through. No single quotes,
-    * so it splices into a SQL literal verbatim. */
-  private[queries] val htmlPre = "<!DOCTYPE html><html><head><style type=\"text/css\">" +
-    "p{color:red}</style><script>if (1 < 2 && x > 0) { y = \"a&b\"; }" +
-    "</script></head><body><h1>Title</h1><p class=\"a\">"
-  private[queries] val htmlPost = "</p><!-- hidden note --> 3 &lt; 4 &amp;&amp; y &gt; 1&nbsp;" +
-    "&quot;it&#39;s&quot; &copy; fine</body></html>"
-
-  /** The markup-strip chain as DuckDB CTEs: expects `d(doc_id, h)`,
-    * yields `f(doc_id, clean_text)` — the exact algebra of
-    * [[graft.operators.TextAnalysis.stripMarkup]]. */
-  private val stripChainSql =
-    """s1 AS (SELECT doc_id, regexp_replace(h, '(?is)<script[^>]*>.*?</script>', ' ', 'g') AS t FROM d),
-       s2 AS (SELECT doc_id, regexp_replace(t, '(?is)<style[^>]*>.*?</style>', ' ', 'g') AS t FROM s1),
-       s3 AS (SELECT doc_id, regexp_replace(t, '(?s)<!--.*?-->', ' ', 'g') AS t FROM s2),
-       s4 AS (SELECT doc_id, regexp_replace(t, '(?s)</?[a-zA-Z!][^>]*>', ' ', 'g') AS t FROM s3),
-       u AS (SELECT doc_id,
-               replace(replace(replace(replace(replace(replace(replace(t,
-                 '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-                 '&apos;', ''''), '&nbsp;', ' '), '&amp;', '&') AS t
-             FROM s4),
-       f AS (SELECT doc_id, trim(regexp_replace(t, '[\t\n\x0B\f\r ]+', ' ', 'g')) AS clean_text FROM u)"""
-
-  /** Shared WITH-clause prefix for the overlap-extents family: planted
-    * tail-100 clones → positional 8-gram 60-bit hashes → winnow
-    * fingerprints (w=4, df-cap 64) → candidate pairs → diagonal
-    * gaps-and-islands (`isl`) — the same algebra as
-    * [[graft.operators.TextAnalysis.sharedSpanExtents]], so extents
-    * match bit-for-bit. Both the extents report and the removal oracle
-    * build on this prefix; keeping it single-sourced prevents drift. */
-  private val overlapCtes: String = {
-    val gram8 = (0 until 8).map(j => s"toks[i+$j]").mkString(" || ' ' || ")
-    s"""m AS (SELECT max(doc_id) AS mx FROM documents),
-          alldocs AS (SELECT doc_id, text FROM documents
-                      UNION ALL
-                      SELECT doc_id + 3000000, text FROM documents, m
-                      WHERE doc_id > mx - 100),
-          t AS (SELECT doc_id, string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+') AS toks
-                FROM alldocs),
-          i AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 7)) AS i
-                FROM t WHERE len(toks) >= 8),
-          h AS (SELECT doc_id, CAST(i - 1 AS INTEGER) AS pos,
-                       CAST(('0x'||substr(md5($gram8),1,15)) AS BIGINT) AS h
-                FROM i),
-          wv AS (SELECT doc_id,
-                        min(h) OVER (PARTITION BY doc_id ORDER BY pos
-                                     ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
-                        count(*) OVER (PARTITION BY doc_id ORDER BY pos
-                                       ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS n
-                 FROM h),
-          fps AS (SELECT DISTINCT doc_id, fp FROM wv WHERE n = 4),
-          fcap AS (SELECT doc_id, fp FROM (
-                     SELECT doc_id, fp, count(*) OVER (PARTITION BY fp) AS c
-                     FROM fps)
-                   WHERE c <= 64),
-          cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-                   FROM fcap a JOIN fcap b
-                     ON a.fp = b.fp AND a.doc_id < b.doc_id),
-          mt AS (SELECT c.id_a, c.id_b, x.pos AS pos_a, y.pos AS pos_b
-                 FROM cand c
-                 JOIN h x ON x.doc_id = c.id_a
-                 JOIN h y ON y.doc_id = c.id_b AND y.h = x.h),
-          isl AS (SELECT id_a, id_b, pos_a - pos_b AS diag, pos_a, pos_b,
-                         pos_a - row_number() OVER (
-                           PARTITION BY id_a, id_b, pos_a - pos_b
-                           ORDER BY pos_a) AS g
-                  FROM mt)"""
-  }
-
   def oracle: Map[String, String] = oracleBase ++ Map(
     "llm_bpe_train_local" -> oracleBase("llm_bpe_train"),
     "llm_bm25_pruned" -> oracleBase("llm_bm25"),
@@ -2699,18 +2042,8 @@ object LlmQueries {
 
   private lazy val oracleBase: Map[String, String] = Map(
     "llm_ann_ivf" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-          c AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 8),
-          assigned AS (
-            SELECT vec_id, v, cid AS cell FROM (
-              SELECT e.vec_id, e.v, c.cid,
-                     row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) rk
-              FROM e CROSS JOIN c) WHERE rk = 1),
-          qc AS (SELECT a.v AS qv, c.cid AS cell,
-                        row_number() OVER (
-                          ORDER BY list_cosine_similarity(a.v, c.cv) DESC, c.cid) rk
-                 FROM assigned a CROSS JOIN c WHERE a.vec_id = 0)
+      s"""WITH $ivfAssignedCtes,
+          $ivfAssignedQueryCte
           SELECT a.vec_id, round(list_cosine_similarity(a.v, q.qv), 6) AS cos_sim
           FROM assigned a JOIN (SELECT qv, cell FROM qc WHERE rk <= 2) q
             ON a.cell = q.cell
@@ -2719,41 +2052,8 @@ object LlmQueries {
     // train-then-search: round-2 centroids (identical CTE chain to
     // llm_kmeans2) become the index cells; assignment + probe + top-k
     "llm_ann_ivf_trained" ->
-      """WITH cent0 AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv
-                        FROM embeddings ORDER BY vec_id LIMIT 8),
-          e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-          s1 AS (SELECT e.vec_id, e.v, c.cid,
-                        row_number() OVER (PARTITION BY e.vec_id
-                          ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rk
-                 FROM e CROSS JOIN cent0 c),
-          a1 AS (SELECT vec_id, v, cid AS cell FROM s1 WHERE rk = 1),
-          ex1 AS (SELECT cell,
-                         CAST(unnest(generate_series(1, len(v))) - 1 AS INTEGER) AS pos,
-                         unnest(v) AS elem
-                  FROM a1),
-          up1 AS (SELECT cell, pos,
-                         round(CAST(sum(CAST(elem AS DECIMAL(20,10))) AS DOUBLE) / count(*), 6) AS c_val
-                  FROM ex1 GROUP BY cell, pos),
-          cent1 AS (SELECT cell AS cid, list(c_val ORDER BY pos) AS cv
-                    FROM up1 GROUP BY cell),
-          s2 AS (SELECT e.vec_id, e.v, c.cid,
-                        row_number() OVER (PARTITION BY e.vec_id
-                          ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rk
-                 FROM e CROSS JOIN cent1 c),
-          a2 AS (SELECT vec_id, v, cid AS cell FROM s2 WHERE rk = 1),
-          ex2 AS (SELECT cell,
-                         CAST(unnest(generate_series(1, len(v))) - 1 AS INTEGER) AS pos,
-                         unnest(v) AS elem
-                  FROM a2),
-          up2 AS (SELECT cell, pos,
-                         round(CAST(sum(CAST(elem AS DECIMAL(20,10))) AS DOUBLE) / count(*), 6) AS c_val
-                  FROM ex2 GROUP BY cell, pos),
-          cent2 AS (SELECT cell AS cid, list(c_val ORDER BY pos) AS cv
-                    FROM up2 GROUP BY cell),
-          s3 AS (SELECT e.vec_id, e.v, c.cid,
-                        row_number() OVER (PARTITION BY e.vec_id
-                          ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rk
-                 FROM e CROSS JOIN cent2 c),
+      s"""WITH ${kmeansCtes(2)},
+          ${lloydScoreCte(3)},
           a3 AS (SELECT vec_id, v, cid AS cell FROM s3 WHERE rk = 1),
           qc AS (SELECT a.v AS qv, c.cid AS cell,
                         row_number() OVER (
@@ -2768,41 +2068,8 @@ object LlmQueries {
     // rounds, cent0 -> cent2) assigns cells; then exactly 20 per cell by
     // the salted-hash total order (llm_sample_strat's idiom, cast key)
     "llm_cluster_sample" ->
-      """WITH cent0 AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv
-                        FROM embeddings ORDER BY vec_id LIMIT 8),
-          e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-          s1 AS (SELECT e.vec_id, e.v, c.cid,
-                        row_number() OVER (PARTITION BY e.vec_id
-                          ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rk
-                 FROM e CROSS JOIN cent0 c),
-          a1 AS (SELECT vec_id, v, cid AS cell FROM s1 WHERE rk = 1),
-          ex1 AS (SELECT cell,
-                         CAST(unnest(generate_series(1, len(v))) - 1 AS INTEGER) AS pos,
-                         unnest(v) AS elem
-                  FROM a1),
-          up1 AS (SELECT cell, pos,
-                         round(CAST(sum(CAST(elem AS DECIMAL(20,10))) AS DOUBLE) / count(*), 6) AS c_val
-                  FROM ex1 GROUP BY cell, pos),
-          cent1 AS (SELECT cell AS cid, list(c_val ORDER BY pos) AS cv
-                    FROM up1 GROUP BY cell),
-          s2 AS (SELECT e.vec_id, e.v, c.cid,
-                        row_number() OVER (PARTITION BY e.vec_id
-                          ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rk
-                 FROM e CROSS JOIN cent1 c),
-          a2 AS (SELECT vec_id, v, cid AS cell FROM s2 WHERE rk = 1),
-          ex2 AS (SELECT cell,
-                         CAST(unnest(generate_series(1, len(v))) - 1 AS INTEGER) AS pos,
-                         unnest(v) AS elem
-                  FROM a2),
-          up2 AS (SELECT cell, pos,
-                         round(CAST(sum(CAST(elem AS DECIMAL(20,10))) AS DOUBLE) / count(*), 6) AS c_val
-                  FROM ex2 GROUP BY cell, pos),
-          cent2 AS (SELECT cell AS cid, list(c_val ORDER BY pos) AS cv
-                    FROM up2 GROUP BY cell),
-          s3 AS (SELECT e.vec_id, e.v, c.cid,
-                        row_number() OVER (PARTITION BY e.vec_id
-                          ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rk
-                 FROM e CROSS JOIN cent2 c),
+      s"""WITH ${kmeansCtes(2)},
+          ${lloydScoreCte(3)},
           a3 AS (SELECT vec_id, cid AS cell FROM s3 WHERE rk = 1)
           SELECT vec_id, cell FROM (
             SELECT vec_id, cell,
@@ -2817,23 +2084,9 @@ object LlmQueries {
     // to the lowest code id (the Spark array_min-over-struct order);
     // score = sum over subspaces of the query LUT entries
     "llm_ann_pq" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-          seed AS (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8),
-          sub AS (SELECT unnest(generate_series(0, 3)) AS s),
-          cb AS (SELECT sub.s, seed.vec_id AS cid,
-                        seed.v[sub.s*16+1 : sub.s*16+16] AS cv
-                 FROM sub CROSS JOIN seed),
-          enc AS (SELECT vec_id, s, cid AS code FROM (
-                    SELECT e.vec_id, b.s, b.cid,
-                           row_number() OVER (PARTITION BY e.vec_id, b.s
-                             ORDER BY round(list_inner_product(b.cv, b.cv)
-                               - 2 * list_inner_product(e.v[b.s*16+1 : b.s*16+16], b.cv), 6) ASC,
-                             b.cid ASC) AS rk
-                    FROM e CROSS JOIN cb b) WHERE rk = 1),
-          q AS (SELECT v FROM e WHERE vec_id = 0),
-          lut AS (SELECT b.s, b.cid,
-                         list_inner_product(q.v[b.s*16+1 : b.s*16+16], b.cv) AS d
-                  FROM cb b CROSS JOIN q)
+      s"""WITH $embeddingsCte,
+          ${pqCodesCtes("e")},
+          $pqLutCtes
           SELECT enc.vec_id, round(sum(lut.d), 6) AS adc_score
           FROM enc JOIN lut ON enc.s = lut.s AND enc.code = lut.cid
           WHERE enc.vec_id <> 0
@@ -2843,36 +2096,7 @@ object LlmQueries {
     // cells; llm_ann_pq's codebook/encode/LUT chain scores the pruned
     // set only
     "llm_ann_ivf_pq" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-          cent AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 8),
-          a AS (SELECT vec_id, v, cid AS cell FROM (
-                  SELECT e.vec_id, e.v, c.cid,
-                         row_number() OVER (PARTITION BY e.vec_id
-                           ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rk
-                  FROM e CROSS JOIN cent c) WHERE rk = 1),
-          qc AS (SELECT c.cid AS cell,
-                        row_number() OVER (
-                          ORDER BY list_cosine_similarity(q.v, c.cv) DESC, c.cid) AS rk
-                 FROM cent c CROSS JOIN (SELECT v FROM e WHERE vec_id = 0) q),
-          pr AS (SELECT a.vec_id, a.v FROM a
-                 JOIN (SELECT cell FROM qc WHERE rk <= 2) p ON a.cell = p.cell
-                 WHERE a.vec_id <> 0),
-          seed AS (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8),
-          sub AS (SELECT unnest(generate_series(0, 3)) AS s),
-          cb AS (SELECT sub.s, seed.vec_id AS cid,
-                        seed.v[sub.s*16+1 : sub.s*16+16] AS cv
-                 FROM sub CROSS JOIN seed),
-          enc AS (SELECT vec_id, s, cid AS code FROM (
-                    SELECT pr.vec_id, b.s, b.cid,
-                           row_number() OVER (PARTITION BY pr.vec_id, b.s
-                             ORDER BY round(list_inner_product(b.cv, b.cv)
-                               - 2 * list_inner_product(pr.v[b.s*16+1 : b.s*16+16], b.cv), 6) ASC,
-                             b.cid ASC) AS rk
-                    FROM pr CROSS JOIN cb b) WHERE rk = 1),
-          q AS (SELECT v FROM e WHERE vec_id = 0),
-          lut AS (SELECT b.s, b.cid,
-                         list_inner_product(q.v[b.s*16+1 : b.s*16+16], b.cv) AS d
-                  FROM cb b CROSS JOIN q)
+      s"""WITH ${ivfPqCtes()}
           SELECT enc.vec_id, round(sum(lut.d), 6) AS adc_score
           FROM enc JOIN lut ON enc.s = lut.s AND enc.code = lut.cid
           GROUP BY enc.vec_id
@@ -2883,21 +2107,13 @@ object LlmQueries {
     // residual distances, serving score = q·centroid_cell (per-cell
     // constant) + Σ_s LUT over residual codebooks
     "llm_ann_ivf_pq_residual" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-          cent AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 8),
-          a AS (SELECT vec_id, v, cid AS cell FROM (
-                  SELECT e.vec_id, e.v, c.cid,
-                         row_number() OVER (PARTITION BY e.vec_id
-                           ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rk
-                  FROM e CROSS JOIN cent c) WHERE rk = 1),
+      s"""WITH $embeddingsCte,
+          $ivfCellCtes,
           r AS (SELECT a.vec_id, a.cell,
                        list_transform(generate_series(1, len(a.v)),
                                       i -> a.v[i] - c.cv[i]) AS rv
                 FROM a JOIN cent c ON a.cell = c.cid),
-          qc AS (SELECT c.cid AS cell,
-                        row_number() OVER (
-                          ORDER BY list_cosine_similarity(q.v, c.cv) DESC, c.cid) AS rk
-                 FROM cent c CROSS JOIN (SELECT v FROM e WHERE vec_id = 0) q),
+          $ivfQueryCellsCte,
           pr AS (SELECT r.vec_id, r.cell, r.rv FROM r
                  JOIN (SELECT cell FROM qc WHERE rk <= 2) p ON r.cell = p.cell
                  WHERE r.vec_id <> 0),
@@ -2913,10 +2129,7 @@ object LlmQueries {
                                - 2 * list_inner_product(pr.rv[b.s*16+1 : b.s*16+16], b.cv), 6) ASC,
                              b.cid ASC) AS rk
                     FROM pr CROSS JOIN cb b) WHERE rk = 1),
-          q AS (SELECT v FROM e WHERE vec_id = 0),
-          lut AS (SELECT b.s, b.cid,
-                         list_inner_product(q.v[b.s*16+1 : b.s*16+16], b.cv) AS d
-                  FROM cb b CROSS JOIN q),
+          $pqLutCtes,
           cc AS (SELECT c.cid AS cell, list_inner_product(q.v, c.cv) AS cd
                  FROM cent c CROSS JOIN q)
           SELECT enc.vec_id, round(cc.cd + sum(lut.d), 6) AS adc_score
@@ -2924,44 +2137,13 @@ object LlmQueries {
                JOIN cc ON enc.cell = cc.cell
           GROUP BY enc.vec_id, cc.cd
           ORDER BY adc_score DESC, enc.vec_id LIMIT 10""",
-    // BPE apply replayed as a recursive CTE: each word is a
-    // delimiter-wrapped symbol string (' a  n  d '), one recursion step
-    // applies the LOWEST-rank merge present via string replace —
-    // replace IS left-to-right non-overlapping application, and the
-    // double-space wrapping makes mid-symbol false matches impossible —
-    // terminal states are those no merge touches; symbols = spaces/2
+    // BPE apply replayed as a recursive CTE (SqlRecipes.bpeApplyCtes);
+    // each terminal word's symbols = spaces/2
     "llm_bpe_count" ->
-      """WITH RECURSIVE
-          m(rank, l, r) AS (
-            SELECT * FROM (VALUES (0,'t','h'),(1,'th','e'),(2,'i','n'),
-                                  (3,'a','n'),(4,'an','d'),(5,'e','r'),
-                                  (6,'o','n'),(7,'r','e'))),
-          t AS (SELECT doc_id, string_split_regex(text, '[\t\n\x0B\f\r ]+') AS ws
-                FROM documents),
-          w AS (SELECT doc_id, unnest(generate_series(1, len(ws))) AS wi, ws
-                FROM t),
-          w2 AS (SELECT doc_id, wi, ws[wi] AS word FROM w
-                 WHERE length(ws[wi]) > 0),
-          init AS (SELECT doc_id, wi,
-                     ' ' || array_to_string(string_split(word, ''), '  ') || ' ' AS s
-                   FROM w2),
-          bpe AS (
-            SELECT doc_id, wi, s FROM init
-            UNION ALL
-            SELECT doc_id, wi,
-                   replace(s, ' '||l||'  '||r||' ', ' '||l||r||' ') AS s
-            FROM (SELECT b.doc_id, b.wi, b.s, m.l, m.r,
-                         row_number() OVER (PARTITION BY b.doc_id, b.wi
-                                            ORDER BY m.rank) AS rn
-                  FROM bpe b JOIN m
-                    ON position(' '||m.l||'  '||m.r||' ' IN b.s) > 0)
-            WHERE rn = 1),
-          term AS (SELECT doc_id, wi, s FROM bpe b
-                   WHERE NOT EXISTS (SELECT 1 FROM m
-                     WHERE position(' '||m.l||'  '||m.r||' ' IN b.s) > 0)),
-          cnt AS (SELECT doc_id,
-                    (length(s) - length(replace(s, ' ', ''))) // 2 AS c
-                  FROM term)
+      s"""WITH RECURSIVE
+          $bpeMergesCte,
+          ${bpeApplyCtes(t = "t")},
+          $bpeCountCte
           SELECT d.doc_id, CAST(coalesce(sum(cnt.c), 0) AS INTEGER) AS bpe_cnt
           FROM documents d LEFT JOIN cnt ON d.doc_id = cnt.doc_id
           GROUP BY d.doc_id""",
@@ -2971,87 +2153,25 @@ object LlmQueries {
     // CASE replays the stable scheme (single-codepoint -> unicode(),
     // merged -> 1114112 + the lowest rank whose l||r equals the symbol)
     "llm_bpe_tokenize" ->
-      """WITH RECURSIVE
-          m(rank, l, r) AS (
-            SELECT * FROM (VALUES (0,'t','h'),(1,'th','e'),(2,'i','n'),
-                                  (3,'a','n'),(4,'an','d'),(5,'e','r'),
-                                  (6,'o','n'),(7,'r','e'))),
-          t AS (SELECT doc_id, string_split_regex(text, '[\t\n\x0B\f\r ]+') AS ws
-                FROM documents),
-          w AS (SELECT doc_id, unnest(generate_series(1, len(ws))) AS wi, ws
-                FROM t),
-          w2 AS (SELECT doc_id, wi, ws[wi] AS word FROM w
-                 WHERE length(ws[wi]) > 0),
-          init AS (SELECT doc_id, wi,
-                     ' ' || array_to_string(string_split(word, ''), '  ') || ' ' AS s
-                   FROM w2),
-          bpe AS (
-            SELECT doc_id, wi, s FROM init
-            UNION ALL
-            SELECT doc_id, wi,
-                   replace(s, ' '||l||'  '||r||' ', ' '||l||r||' ') AS s
-            FROM (SELECT b.doc_id, b.wi, b.s, m.l, m.r,
-                         row_number() OVER (PARTITION BY b.doc_id, b.wi
-                                            ORDER BY m.rank) AS rn
-                  FROM bpe b JOIN m
-                    ON position(' '||m.l||'  '||m.r||' ' IN b.s) > 0)
-            WHERE rn = 1),
-          term AS (SELECT doc_id, wi, s FROM bpe b
-                   WHERE NOT EXISTS (SELECT 1 FROM m
-                     WHERE position(' '||m.l||'  '||m.r||' ' IN b.s) > 0)),
-          sy AS (SELECT doc_id, wi, string_split(trim(s), '  ') AS a FROM term),
-          ix AS (SELECT doc_id, wi, unnest(generate_series(1, len(a))) AS si, a
-                 FROM sy),
+      s"""WITH RECURSIVE
+          $bpeMergesCte,
+          ${bpeApplyCtes(t = "t")},
+          $bpeSymbolCtes,
           tk AS (SELECT doc_id, wi, si, a[si] AS token FROM ix)
           SELECT doc_id,
                  CAST(row_number() OVER (PARTITION BY doc_id
                                          ORDER BY wi, si) AS INT) AS pos,
                  token,
-                 CAST(CASE WHEN length(token) = 1 THEN unicode(token)
-                      ELSE 1114112 + (SELECT min(m2.rank) FROM m m2
-                                      WHERE m2.l || m2.r = token)
-                      END AS INT) AS token_id
+                 ${bpeTokenIdSql("token")} AS token_id
           FROM tk""",
     // learned-token vocab report: the tokenize CTEs feed the
     // llm_vocab-shaped (cnt, df, rank, coverage) report
     "llm_bpe_vocab" ->
-      """WITH RECURSIVE
-          m(rank, l, r) AS (
-            SELECT * FROM (VALUES (0,'t','h'),(1,'th','e'),(2,'i','n'),
-                                  (3,'a','n'),(4,'an','d'),(5,'e','r'),
-                                  (6,'o','n'),(7,'r','e'))),
-          t0 AS (SELECT doc_id, string_split_regex(text, '[\t\n\x0B\f\r ]+') AS ws
-                 FROM documents),
-          w AS (SELECT doc_id, unnest(generate_series(1, len(ws))) AS wi, ws
-                FROM t0),
-          w2 AS (SELECT doc_id, wi, ws[wi] AS word FROM w
-                 WHERE length(ws[wi]) > 0),
-          init AS (SELECT doc_id, wi,
-                     ' ' || array_to_string(string_split(word, ''), '  ') || ' ' AS s
-                   FROM w2),
-          bpe AS (
-            SELECT doc_id, wi, s FROM init
-            UNION ALL
-            SELECT doc_id, wi,
-                   replace(s, ' '||l||'  '||r||' ', ' '||l||r||' ') AS s
-            FROM (SELECT b.doc_id, b.wi, b.s, m.l, m.r,
-                         row_number() OVER (PARTITION BY b.doc_id, b.wi
-                                            ORDER BY m.rank) AS rn
-                  FROM bpe b JOIN m
-                    ON position(' '||m.l||'  '||m.r||' ' IN b.s) > 0)
-            WHERE rn = 1),
-          term AS (SELECT doc_id, wi, s FROM bpe b
-                   WHERE NOT EXISTS (SELECT 1 FROM m
-                     WHERE position(' '||m.l||'  '||m.r||' ' IN b.s) > 0)),
-          sy AS (SELECT doc_id, wi, string_split(trim(s), '  ') AS a FROM term),
-          ix AS (SELECT doc_id, wi, unnest(generate_series(1, len(a))) AS si, a
-                 FROM sy),
-          tkk AS (SELECT doc_id, a[si] AS token,
-                    CAST(CASE WHEN length(a[si]) = 1 THEN unicode(a[si])
-                         ELSE 1114112 + (SELECT min(m2.rank) FROM m m2
-                                         WHERE m2.l || m2.r = a[si])
-                         END AS INT) AS token_id
-                  FROM ix),
+      s"""WITH RECURSIVE
+          $bpeMergesCte,
+          ${bpeApplyCtes()},
+          $bpeSymbolCtes,
+          tkk AS (SELECT doc_id, a[si] AS token, ${bpeTokenIdSql("a[si]")} AS token_id FROM ix),
           c AS (SELECT token_id, token, count(*) AS cnt,
                        count(DISTINCT doc_id) AS df
                 FROM tkk GROUP BY token_id, token),
@@ -3144,87 +2264,29 @@ object LlmQueries {
       s"""WITH RECURSIVE
           ${bpeTrainCtes(8)},
           m(rank, l, r) AS (SELECT rank, l, r FROM mAll),
-          dt AS (SELECT doc_id, string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+') AS ws
-                 FROM documents),
-          dwi AS (SELECT doc_id, unnest(generate_series(1, len(ws))) AS wi, ws
-                  FROM dt),
-          dw2 AS (SELECT doc_id, wi, ws[wi] AS word FROM dwi
-                  WHERE length(ws[wi]) > 0),
-          init AS (SELECT doc_id, wi,
-                     ' ' || array_to_string(string_split(word, ''), '  ') || ' ' AS s
-                   FROM dw2),
-          bpe AS (
-            SELECT doc_id, wi, s FROM init
-            UNION ALL
-            SELECT doc_id, wi,
-                   replace(s, ' '||l||'  '||r||' ', ' '||l||r||' ') AS s
-            FROM (SELECT b.doc_id, b.wi, b.s, m.l, m.r,
-                         row_number() OVER (PARTITION BY b.doc_id, b.wi
-                                            ORDER BY m.rank) AS rn
-                  FROM bpe b JOIN m
-                    ON position(' '||m.l||'  '||m.r||' ' IN b.s) > 0)
-            WHERE rn = 1),
-          term AS (SELECT doc_id, wi, s FROM bpe b
-                   WHERE NOT EXISTS (SELECT 1 FROM m
-                     WHERE position(' '||m.l||'  '||m.r||' ' IN b.s) > 0)),
-          cnt AS (SELECT doc_id,
-                    (length(s) - length(replace(s, ' ', ''))) // 2 AS c
-                  FROM term)
+          ${bpeApplyCtes(t = "dt", w = "dwi", w2 = "dw2")},
+          $bpeCountCte
           SELECT d.doc_id, CAST(coalesce(sum(cnt.c), 0) AS INTEGER) AS bpe_cnt
           FROM documents d LEFT JOIN cnt ON d.doc_id = cnt.doc_id
           GROUP BY d.doc_id""",
     // incremental form: clones (the probe side) against the corpus
     // slice (the stored side) — same dHash chain, cross-set pairs only
     "llm_image_incr" ->
-      """WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-          sl AS (SELECT doc_id, text FROM documents, m
-                 WHERE doc_id > mx - 300 AND length(text) >= 400),
-          base AS (SELECT doc_id, text, 0 AS is_new FROM sl
-                   UNION ALL
-                   SELECT doc_id + 3000000,
-                          substr(text, 1, 10) || 'QQQQ' || substr(text, 15),
-                          1
-                   FROM sl),
-          hx AS (SELECT doc_id, is_new, lower(hex(text)) AS h FROM base),
-          lum AS (SELECT doc_id, is_new,
-                    list_transform(generate_series(0, 71), k ->
-                      CAST(('0x' || substr(md5(substr(h,
-                          CAST(floor(length(h)*k/72) AS INT) + 1,
-                          greatest(CAST(floor(length(h)*(k+1)/72) AS INT)
-                            - CAST(floor(length(h)*k/72) AS INT), 0))), 1, 8))
-                        AS BIGINT) % 256) AS lu
-                  FROM hx),
-          dh AS (SELECT doc_id, is_new,
-                   CAST(list_sum(list_transform(generate_series(0, 63), i ->
-                     CASE WHEN lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 2]
-                               > lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 1]
-                          THEN CASE WHEN i = 63
-                                    THEN -9223372036854775808
-                                    ELSE (CAST(1 AS BIGINT) << CAST(i AS INT)) END
-                          ELSE 0 END)) AS BIGINT) AS dhash
-                 FROM lum)
+      s"""WITH ${mediaProbeCtes()},
+          ${dhashCtes("base", cols = "doc_id, is_new")}
           SELECT n.doc_id AS id_new, c.doc_id AS id_corpus,
                  CAST(bit_count(xor(n.dhash, c.dhash)) AS INT) AS hamming
           FROM dh n JOIN dh c ON n.is_new = 1 AND c.is_new = 0
           WHERE bit_count(xor(n.dhash, c.dhash)) <= 3""",
     // the audio fingerprint surface: full chain replay per row
     "llm_audio_fp" ->
-      s"""WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-          sl AS (SELECT doc_id, text FROM documents, m
-                 WHERE doc_id > mx - 300 AND length(text) >= 400),
+      s"""WITH $mediaSlice,
           ${audioFpCtes("sl", "1")}
           SELECT doc_id, afp FROM afp1""",
     // audio near-dup pairs: brute-force ALL pairs at the banded
     // operator's threshold (recall exact below nBands)
     "llm_audio_dups" ->
-      s"""WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-          sl AS (SELECT doc_id, text FROM documents, m
-                 WHERE doc_id > mx - 300 AND length(text) >= 400),
-          base AS (SELECT doc_id, text FROM sl
-                   UNION ALL
-                   SELECT doc_id + 3000000,
-                          substr(text, 1, 10) || 'QQQQ' || substr(text, 15)
-                   FROM sl),
+      s"""WITH ${mediaPairsCtes()},
           ${audioFpCtes("base", "2")}
           SELECT x.doc_id AS id_a, y.doc_id AS id_b,
                  CAST(bit_count(xor(x.afp, y.afp)) AS INT) AS hamming
@@ -3232,15 +2294,7 @@ object LlmQueries {
           WHERE bit_count(xor(x.afp, y.afp)) <= 3""",
     // incremental audio admission: cross-set pairs only (probe vs store)
     "llm_audio_probe" ->
-      s"""WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-          sl AS (SELECT doc_id, text FROM documents, m
-                 WHERE doc_id > mx - 300 AND length(text) >= 400),
-          base AS (SELECT doc_id, text, 0 AS is_new FROM sl
-                   UNION ALL
-                   SELECT doc_id + 3000000,
-                          substr(text, 1, 10) || 'QQQQ' || substr(text, 15),
-                          1
-                   FROM sl),
+      s"""WITH ${mediaProbeCtes()},
           ${audioFpCtes("base", "3", carry = "is_new")}
           SELECT n.doc_id AS id_new, c.doc_id AS id_corpus,
                  CAST(bit_count(xor(n.afp, c.afp)) AS INT) AS hamming
@@ -3250,16 +2304,7 @@ object LlmQueries {
     // un-tombstoned corpus (doc_id % 5 <> 1) — purged tracks' clones
     // vanish from the pair set, survivors' clones remain
     "llm_audio_delete" ->
-      s"""WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-          sl AS (SELECT doc_id, text FROM documents, m
-                 WHERE doc_id > mx - 300 AND length(text) >= 400),
-          base AS (SELECT doc_id, text, 0 AS is_new FROM sl
-                   WHERE doc_id % 5 <> 1
-                   UNION ALL
-                   SELECT doc_id + 3000000,
-                          substr(text, 1, 10) || 'QQQQ' || substr(text, 15),
-                          1
-                   FROM sl),
+      s"""WITH ${mediaProbeCtes(" WHERE doc_id % 5 <> 1")},
           ${audioFpCtes("base", "4", carry = "is_new")}
           SELECT n.doc_id AS id_new, c.doc_id AS id_corpus,
                  CAST(bit_count(xor(n.afp, c.afp)) AS INT) AS hamming
@@ -3267,9 +2312,7 @@ object LlmQueries {
           WHERE bit_count(xor(n.afp, c.afp)) <= 3""",
     // the video frame table: per-frame dHash over aligned hex slices
     "llm_video_frames" ->
-      s"""WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-          sl AS (SELECT doc_id, text FROM documents, m
-                 WHERE doc_id > mx - 300 AND length(text) >= 400),
+      s"""WITH $mediaSlice,
           ${videoFpCtes("sl", "1")}
           SELECT doc_id, CAST(frame_idx AS INTEGER) AS frame_idx, fhash
           FROM vfp1""",
@@ -3277,14 +2320,7 @@ object LlmQueries {
     // hamming, count matched frames, keep pairs at >= 3 of 4 (recall
     // exact below nBands per frame, so the banded operator equals this)
     "llm_video_dups" ->
-      s"""WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-          sl AS (SELECT doc_id, text FROM documents, m
-                 WHERE doc_id > mx - 300 AND length(text) >= 400),
-          base AS (SELECT doc_id, text FROM sl
-                   UNION ALL
-                   SELECT doc_id + 3000000,
-                          substr(text, 1, 10) || 'QQQQ' || substr(text, 15)
-                   FROM sl),
+      s"""WITH ${mediaPairsCtes()},
           ${videoFpCtes("base", "2")}
           SELECT id_a, id_b, n_frames_matched FROM (
             SELECT x.doc_id AS id_a, y.doc_id AS id_b,
@@ -3296,15 +2332,7 @@ object LlmQueries {
           WHERE n_frames_matched >= 3""",
     // incremental video admission: cross-set frame-aligned pairs only
     "llm_video_probe" ->
-      s"""WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-          sl AS (SELECT doc_id, text FROM documents, m
-                 WHERE doc_id > mx - 300 AND length(text) >= 400),
-          base AS (SELECT doc_id, text, 0 AS is_new FROM sl
-                   UNION ALL
-                   SELECT doc_id + 3000000,
-                          substr(text, 1, 10) || 'QQQQ' || substr(text, 15),
-                          1
-                   FROM sl),
+      s"""WITH ${mediaProbeCtes()},
           ${videoFpCtes("base", "3", carry = "is_new")}
           SELECT id_new, id_corpus, n_frames_matched FROM (
             SELECT n.doc_id AS id_new, c.doc_id AS id_corpus,
@@ -3319,16 +2347,7 @@ object LlmQueries {
     // un-tombstoned corpus — purged videos' clones vanish, survivors'
     // clones remain
     "llm_video_delete" ->
-      s"""WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-          sl AS (SELECT doc_id, text FROM documents, m
-                 WHERE doc_id > mx - 300 AND length(text) >= 400),
-          base AS (SELECT doc_id, text, 0 AS is_new FROM sl
-                   WHERE doc_id % 5 <> 1
-                   UNION ALL
-                   SELECT doc_id + 3000000,
-                          substr(text, 1, 10) || 'QQQQ' || substr(text, 15),
-                          1
-                   FROM sl),
+      s"""WITH ${mediaProbeCtes(" WHERE doc_id % 5 <> 1")},
           ${videoFpCtes("base", "4", carry = "is_new")}
           SELECT id_new, id_corpus, n_frames_matched FROM (
             SELECT n.doc_id AS id_new, c.doc_id AS id_corpus,
@@ -3343,34 +2362,8 @@ object LlmQueries {
     // to the un-tombstoned corpus (doc_id % 5 <> 1) — purged originals'
     // clones vanish from the pair set, survivors' clones remain
     "llm_image_delete" ->
-      """WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-          sl AS (SELECT doc_id, text FROM documents, m
-                 WHERE doc_id > mx - 300 AND length(text) >= 400),
-          base AS (SELECT doc_id, text, 0 AS is_new FROM sl
-                   WHERE doc_id % 5 <> 1
-                   UNION ALL
-                   SELECT doc_id + 3000000,
-                          substr(text, 1, 10) || 'QQQQ' || substr(text, 15),
-                          1
-                   FROM sl),
-          hx AS (SELECT doc_id, is_new, lower(hex(text)) AS h FROM base),
-          lum AS (SELECT doc_id, is_new,
-                    list_transform(generate_series(0, 71), k ->
-                      CAST(('0x' || substr(md5(substr(h,
-                          CAST(floor(length(h)*k/72) AS INT) + 1,
-                          greatest(CAST(floor(length(h)*(k+1)/72) AS INT)
-                            - CAST(floor(length(h)*k/72) AS INT), 0))), 1, 8))
-                        AS BIGINT) % 256) AS lu
-                  FROM hx),
-          dh AS (SELECT doc_id, is_new,
-                   CAST(list_sum(list_transform(generate_series(0, 63), i ->
-                     CASE WHEN lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 2]
-                               > lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 1]
-                          THEN CASE WHEN i = 63
-                                    THEN -9223372036854775808
-                                    ELSE (CAST(1 AS BIGINT) << CAST(i AS INT)) END
-                          ELSE 0 END)) AS BIGINT) AS dhash
-                 FROM lum)
+      s"""WITH ${mediaProbeCtes(" WHERE doc_id % 5 <> 1")},
+          ${dhashCtes("base", cols = "doc_id, is_new")}
           SELECT n.doc_id AS id_new, c.doc_id AS id_corpus,
                  CAST(bit_count(xor(n.dhash, c.dhash)) AS INT) AS hamming
           FROM dh n JOIN dh c ON n.is_new = 1 AND c.is_new = 0
@@ -3378,76 +2371,19 @@ object LlmQueries {
     // image clusters: the dHash pair set over (original, edit1, edit2)
     // closed by recursive reachability — min reachable id per node
     "llm_image_clusters" ->
-      """WITH RECURSIVE
-          m AS (SELECT max(doc_id) AS mx FROM documents),
-          sl AS (SELECT doc_id, text FROM documents, m
-                 WHERE doc_id > mx - 300 AND length(text) >= 400),
-          base AS (SELECT doc_id, text FROM sl
-                   UNION ALL
-                   SELECT doc_id + 3000000,
-                          substr(text, 1, 10) || 'QQQQ' || substr(text, 15)
-                   FROM sl
-                   UNION ALL
-                   SELECT doc_id + 6000000,
-                          substr(text, 1, 29) || 'ZZZZ' || substr(text, 34)
-                   FROM sl),
-          hx AS (SELECT doc_id, lower(hex(text)) AS h FROM base),
-          lum AS (SELECT doc_id,
-                    list_transform(generate_series(0, 71), k ->
-                      CAST(('0x' || substr(md5(substr(h,
-                          CAST(floor(length(h)*k/72) AS INT) + 1,
-                          greatest(CAST(floor(length(h)*(k+1)/72) AS INT)
-                            - CAST(floor(length(h)*k/72) AS INT), 0))), 1, 8))
-                        AS BIGINT) % 256) AS lu
-                  FROM hx),
-          dh AS (SELECT doc_id,
-                   CAST(list_sum(list_transform(generate_series(0, 63), i ->
-                     CASE WHEN lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 2]
-                               > lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 1]
-                          THEN CASE WHEN i = 63
-                                    THEN -9223372036854775808
-                                    ELSE (CAST(1 AS BIGINT) << CAST(i AS INT)) END
-                          ELSE 0 END)) AS BIGINT) AS dhash
-                 FROM lum),
+      s"""WITH RECURSIVE
+          ${mediaPairsCtes(s" UNION ALL SELECT doc_id + 6000000, $mediaClone2Sql FROM sl")},
+          ${dhashCtes("base")},
           pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
                     FROM dh a JOIN dh b ON a.doc_id < b.doc_id
                     WHERE bit_count(xor(a.dhash, b.dhash)) <= 3),
-          edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                    UNION ALL SELECT id_b, id_a FROM pairs),
-          reach(id, r) AS (
-            SELECT src, src FROM edges
-            UNION
-            SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id)
+          $componentsCtes
           SELECT id AS doc_id, min(r) AS cluster FROM reach GROUP BY id""",
     // pipeline8 = the image-dups chain → drop every pair's higher id →
     // the decode/resize replay over the survivors
     "llm_pipeline8" ->
-      """WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-          sl AS (SELECT doc_id, text FROM documents, m
-                 WHERE doc_id > mx - 300 AND length(text) >= 400),
-          base AS (SELECT doc_id, text FROM sl
-                   UNION ALL
-                   SELECT doc_id + 3000000,
-                          substr(text, 1, 10) || 'QQQQ' || substr(text, 15)
-                   FROM sl),
-          hx AS (SELECT doc_id, lower(hex(text)) AS h FROM base),
-          lum AS (SELECT doc_id,
-                    list_transform(generate_series(0, 71), k ->
-                      CAST(('0x' || substr(md5(substr(h,
-                          CAST(floor(length(h)*k/72) AS INT) + 1,
-                          greatest(CAST(floor(length(h)*(k+1)/72) AS INT)
-                            - CAST(floor(length(h)*k/72) AS INT), 0))), 1, 8))
-                        AS BIGINT) % 256) AS lu
-                  FROM hx),
-          dh AS (SELECT doc_id,
-                   CAST(list_sum(list_transform(generate_series(0, 63), i ->
-                     CASE WHEN lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 2]
-                               > lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 1]
-                          THEN CASE WHEN i = 63
-                                    THEN -9223372036854775808
-                                    ELSE (CAST(1 AS BIGINT) << CAST(i AS INT)) END
-                          ELSE 0 END)) AS BIGINT) AS dhash
-                 FROM lum),
+      s"""WITH ${mediaPairsCtes()},
+          ${dhashCtes("base")},
           dropped AS (SELECT DISTINCT b.doc_id
                       FROM dh a JOIN dh b ON a.doc_id < b.doc_id
                       WHERE bit_count(xor(a.dhash, b.dhash)) <= 3),
@@ -3471,9 +2407,7 @@ object LlmQueries {
     // intra-batch keep-first (pairs within the batch, higher id drops)
     // then the stored-index probe over the survivors
     "llm_admission_selfdedup" ->
-      s"""WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-          aa AS (SELECT doc_id, text FROM documents, m
-                 WHERE doc_id > mx - 300 AND doc_id <= mx - 200),
+      s"""WITH $admissionBatchCtes,
           nov AS (SELECT a.doc_id,
                          a.text || ' ' || b.text || ' ' || c.text AS ntext
                   FROM aa a
@@ -3511,90 +2445,32 @@ object LlmQueries {
     // under nBands) with higher-id drop, survivors against the corpus
     // store at hamming <= 3
     "llm_admission_selfdedup_media" ->
-      """WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-          aa AS (SELECT doc_id, text FROM documents, m
-                 WHERE doc_id > mx - 300 AND doc_id <= mx - 200),
+      s"""WITH $admissionBatchCtes,
           b AS (SELECT doc_id + 3000000 AS doc_id, text AS pay FROM aa
                 UNION ALL SELECT doc_id + 4000000, reverse(text) FROM aa
                 UNION ALL SELECT doc_id + 5000000, reverse(text) FROM aa),
           hx AS (SELECT doc_id, lower(hex(pay)) AS h FROM b),
-          lum AS (SELECT doc_id,
-                    list_transform(generate_series(0, 71), k ->
-                      CAST(('0x' || substr(md5(substr(h,
-                          CAST(floor(length(h)*k/72) AS INT) + 1,
-                          greatest(CAST(floor(length(h)*(k+1)/72) AS INT)
-                            - CAST(floor(length(h)*k/72) AS INT), 0))), 1, 8))
-                        AS BIGINT) % 256) AS lu
-                  FROM hx),
-          dhb AS (SELECT doc_id,
-                    CAST(list_sum(list_transform(generate_series(0, 63), i ->
-                      CASE WHEN lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 2]
-                                > lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 1]
-                           THEN CASE WHEN i = 63
-                                     THEN -9223372036854775808
-                                     ELSE (CAST(1 AS BIGINT) << CAST(i AS INT)) END
-                           ELSE 0 END)) AS BIGINT) AS dhash
-                  FROM lum),
+          lum AS (SELECT doc_id, $lumaSql AS lu FROM hx),
+          dhb AS (SELECT doc_id, $dhashBitsSql AS dhash FROM lum),
           losers AS (SELECT DISTINCT y.doc_id
                      FROM dhb x JOIN dhb y ON x.doc_id < y.doc_id
                      WHERE bit_count(xor(x.dhash, y.dhash)) <= 3),
           reps AS (SELECT doc_id, dhash FROM dhb
                    WHERE doc_id NOT IN (SELECT doc_id FROM losers)),
           shx AS (SELECT doc_id, lower(hex(text)) AS h FROM documents),
-          slum AS (SELECT doc_id,
-                     list_transform(generate_series(0, 71), k ->
-                       CAST(('0x' || substr(md5(substr(h,
-                           CAST(floor(length(h)*k/72) AS INT) + 1,
-                           greatest(CAST(floor(length(h)*(k+1)/72) AS INT)
-                             - CAST(floor(length(h)*k/72) AS INT), 0))), 1, 8))
-                         AS BIGINT) % 256) AS lu
-                   FROM shx),
-          dhs AS (SELECT doc_id,
-                    CAST(list_sum(list_transform(generate_series(0, 63), i ->
-                      CASE WHEN lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 2]
-                                > lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 1]
-                           THEN CASE WHEN i = 63
-                                     THEN -9223372036854775808
-                                     ELSE (CAST(1 AS BIGINT) << CAST(i AS INT)) END
-                           ELSE 0 END)) AS BIGINT) AS dhash
-                  FROM slum),
+          slum AS (SELECT doc_id, $lumaSql AS lu FROM shx),
+          dhs AS (SELECT doc_id, $dhashBitsSql AS dhash FROM slum),
           rejected AS (SELECT DISTINCT r.doc_id
                        FROM reps r JOIN dhs c
                          ON bit_count(xor(r.dhash, c.dhash)) <= 3)
           SELECT doc_id FROM reps
           WHERE doc_id NOT IN (SELECT doc_id FROM rejected)""",
-    // perceptual dHash near-dup: the full chain replayed — lower-hex
-    // payload, 72 slice-md5 lumas, 64 gradient bits (bit 63 is the
-    // BIGINT sign bit: DuckDB's checked << overflows at 63, so it lands
-    // as the min-long literal — two's complement, matching Spark's
-    // shiftleft), brute-force pairs (banded recall is exact < nBands)
+    // perceptual dHash near-dup: the full chain replayed
+    // (SqlRecipes.dhashCtes), brute-force pairs (banded recall is exact
+    // below nBands)
     "llm_image_dups" ->
-      """WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-          sl AS (SELECT doc_id, text FROM documents, m
-                 WHERE doc_id > mx - 300 AND length(text) >= 400),
-          base AS (SELECT doc_id, text FROM sl
-                   UNION ALL
-                   SELECT doc_id + 3000000,
-                          substr(text, 1, 10) || 'QQQQ' || substr(text, 15)
-                   FROM sl),
-          hx AS (SELECT doc_id, lower(hex(text)) AS h FROM base),
-          lum AS (SELECT doc_id,
-                    list_transform(generate_series(0, 71), k ->
-                      CAST(('0x' || substr(md5(substr(h,
-                          CAST(floor(length(h)*k/72) AS INT) + 1,
-                          greatest(CAST(floor(length(h)*(k+1)/72) AS INT)
-                            - CAST(floor(length(h)*k/72) AS INT), 0))), 1, 8))
-                        AS BIGINT) % 256) AS lu
-                  FROM hx),
-          dh AS (SELECT doc_id,
-                   CAST(list_sum(list_transform(generate_series(0, 63), i ->
-                     CASE WHEN lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 2]
-                               > lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 1]
-                          THEN CASE WHEN i = 63
-                                    THEN -9223372036854775808
-                                    ELSE (CAST(1 AS BIGINT) << CAST(i AS INT)) END
-                          ELSE 0 END)) AS BIGINT) AS dhash
-                 FROM lum)
+      s"""WITH ${mediaPairsCtes()},
+          ${dhashCtes("base")}
           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                  CAST(bit_count(xor(a.dhash, b.dhash)) AS INT) AS hamming
           FROM dh a JOIN dh b ON a.doc_id < b.doc_id
@@ -3605,35 +2481,9 @@ object LlmQueries {
     // & 65535) with buckets > 8 dropped whole; a pair survives iff it
     // shares at least one uncapped band and hamming <= 3
     "llm_image_dups_capped" ->
-      """WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-          sl AS (SELECT doc_id, text FROM documents, m
-                 WHERE doc_id > mx - 300 AND length(text) >= 400),
-          base AS (SELECT doc_id, text FROM sl
-                   UNION ALL
-                   SELECT doc_id + 3000000,
-                          substr(text, 1, 10) || 'QQQQ' || substr(text, 15)
-                   FROM sl
-                   UNION ALL
-                   SELECT 9000000 + g.k, repeat('~', 450)
-                   FROM generate_series(0, 39) g(k)),
-          hx AS (SELECT doc_id, lower(hex(text)) AS h FROM base),
-          lum AS (SELECT doc_id,
-                    list_transform(generate_series(0, 71), k ->
-                      CAST(('0x' || substr(md5(substr(h,
-                          CAST(floor(length(h)*k/72) AS INT) + 1,
-                          greatest(CAST(floor(length(h)*(k+1)/72) AS INT)
-                            - CAST(floor(length(h)*k/72) AS INT), 0))), 1, 8))
-                        AS BIGINT) % 256) AS lu
-                  FROM hx),
-          dh AS (SELECT doc_id,
-                   CAST(list_sum(list_transform(generate_series(0, 63), i ->
-                     CASE WHEN lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 2]
-                               > lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 1]
-                          THEN CASE WHEN i = 63
-                                    THEN -9223372036854775808
-                                    ELSE (CAST(1 AS BIGINT) << CAST(i AS INT)) END
-                          ELSE 0 END)) AS BIGINT) AS dhash
-                 FROM lum),
+      s"""WITH ${mediaPairsCtes(" UNION ALL SELECT 9000000 + g.k, repeat('~', 450)" +
+                           " FROM generate_series(0, 39) g(k)")},
+          ${dhashCtes("base")},
           bands AS (SELECT doc_id, dhash, b.band_idx,
                            (dhash >> (16 * b.band_idx)) & 65535 AS band_val
                     FROM dh, (VALUES (0),(1),(2),(3)) b(band_idx)),
@@ -3653,21 +2503,12 @@ object LlmQueries {
                           UNION ALL SELECT doc_id + 500000, text FROM documents),
           scored AS (
             SELECT doc_id,
-                   round(least(length(text) * 1.0 / 500.0, 1.0) * 0.3
-                         + (1.0 - (length(text) - length(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'))) * 1.0 / greatest(length(text), 1)) * 0.4
-                         + least(len(list_filter(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+'), t -> t IN ($stopsEn))) * 1.0
-                                 / greatest(len(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')), 1) * 5.0, 1.0) * 0.3, 6) AS quality,
-                   CASE WHEN es > en AND es >= fr AND es >= de THEN 'es'
-                        WHEN fr > en AND fr >= de THEN 'fr'
-                        WHEN de > en THEN 'de'
-                        ELSE 'en' END AS lang,
+                   ${qualitySql("text")} AS quality,
+                   $langGuessSql AS lang,
                    md5(regexp_replace(lower(text), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS fp,
                    CAST(len(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')) AS INTEGER) AS token_cnt
             FROM (SELECT doc_id, text,
-                    len(list_filter(toks, t -> t IN ('el','la','de','que','y','un','una','los'))) AS es,
-                    len(list_filter(toks, t -> t IN ('le','les','des','et','une','est','dans','pour'))) AS fr,
-                    len(list_filter(toks, t -> t IN ('der','die','das','und','ist','ein','nicht','mit'))) AS de,
-                    len(list_filter(toks, t -> t IN ($stopsEn))) AS en
+                    $langCountsSql
                   FROM (SELECT doc_id, text, string_split_regex(lower(text), '[\\t\\n\\x0B\\f\\r ]+') toks FROM corpus)))
           SELECT doc_id, fp, token_cnt, quality FROM (
             SELECT doc_id, fp, token_cnt, quality,
@@ -3679,50 +2520,19 @@ object LlmQueries {
     // id-sequence chunks (the llm_chunk_bpe cut) — ONE apply chain
     // feeds both the counting and the windows
     "llm_pipeline10" ->
-      """WITH RECURSIVE
-          m(rank, l, r) AS (
-            SELECT * FROM (VALUES (0,'t','h'),(1,'th','e'),(2,'i','n'),
-                                  (3,'a','n'),(4,'an','d'),(5,'e','r'),
-                                  (6,'o','n'),(7,'r','e'))),
+      s"""WITH RECURSIVE
+          $bpeMergesCte,
           corpus AS (SELECT doc_id, text FROM documents
                      UNION ALL SELECT doc_id + 500000, text FROM documents),
           dd AS (SELECT doc_id, text FROM (
                    SELECT doc_id, text,
                           row_number() OVER (
-                            PARTITION BY md5(regexp_replace(lower(text), '[\t\n\x0B\f\r ]+', ' ', 'g'))
+                            PARTITION BY md5(regexp_replace(lower(text), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g'))
                             ORDER BY doc_id) AS rn
                    FROM corpus) WHERE rn = 1),
-          t0 AS (SELECT doc_id, string_split_regex(text, '[\t\n\x0B\f\r ]+') AS ws FROM dd),
-          w AS (SELECT doc_id, unnest(generate_series(1, len(ws))) AS wi, ws
-                FROM t0),
-          w2 AS (SELECT doc_id, wi, ws[wi] AS word FROM w
-                 WHERE length(ws[wi]) > 0),
-          init AS (SELECT doc_id, wi,
-                     ' ' || array_to_string(string_split(word, ''), '  ') || ' ' AS s
-                   FROM w2),
-          bpe AS (
-            SELECT doc_id, wi, s FROM init
-            UNION ALL
-            SELECT doc_id, wi,
-                   replace(s, ' '||l||'  '||r||' ', ' '||l||r||' ') AS s
-            FROM (SELECT b.doc_id, b.wi, b.s, m.l, m.r,
-                         row_number() OVER (PARTITION BY b.doc_id, b.wi
-                                            ORDER BY m.rank) AS rn
-                  FROM bpe b JOIN m
-                    ON position(' '||m.l||'  '||m.r||' ' IN b.s) > 0)
-            WHERE rn = 1),
-          term AS (SELECT doc_id, wi, s FROM bpe b
-                   WHERE NOT EXISTS (SELECT 1 FROM m
-                     WHERE position(' '||m.l||'  '||m.r||' ' IN b.s) > 0)),
-          sy AS (SELECT doc_id, wi, string_split(trim(s), '  ') AS a FROM term),
-          ix AS (SELECT doc_id, wi, unnest(generate_series(1, len(a))) AS si, a
-                 FROM sy),
-          tk AS (SELECT doc_id, wi, si,
-                   CAST(CASE WHEN length(a[si]) = 1 THEN unicode(a[si])
-                        ELSE 1114112 + (SELECT min(m2.rank) FROM m m2
-                                        WHERE m2.l || m2.r = a[si])
-                        END AS INT) AS tid
-                 FROM ix),
+          ${bpeApplyCtes("dd")},
+          $bpeSymbolCtes,
+          tk AS (SELECT doc_id, wi, si, ${bpeTokenIdSql("a[si]")} AS tid FROM ix),
           idl AS (SELECT doc_id, list(tid ORDER BY wi, si) AS ids
                   FROM tk GROUP BY doc_id),
           al AS (SELECT d.doc_id, d.text,
@@ -3762,15 +2572,9 @@ object LlmQueries {
                 FROM documents)""",
     "llm_langid" ->
       s"""SELECT doc_id,
-                 CASE WHEN es > en AND es >= fr AND es >= de THEN 'es'
-                      WHEN fr > en AND fr >= de THEN 'fr'
-                      WHEN de > en THEN 'de'
-                      ELSE 'en' END AS lang_guess
+                 $langGuessSql AS lang_guess
           FROM (SELECT doc_id,
-                  len(list_filter(toks, t -> t IN ('el','la','de','que','y','un','una','los'))) AS es,
-                  len(list_filter(toks, t -> t IN ('le','les','des','et','une','est','dans','pour'))) AS fr,
-                  len(list_filter(toks, t -> t IN ('der','die','das','und','ist','ein','nicht','mit'))) AS de,
-                  len(list_filter(toks, t -> t IN ($stopsEn))) AS en
+                  $langCountsSql
                 FROM (SELECT doc_id, string_split_regex(lower(text), '[\\t\\n\\x0B\\f\\r ]+') toks FROM documents))""",
     // 64-token chunks, stride 48 (overlap 16); slices clamp at the tail
     "llm_chunk" ->
@@ -3786,43 +2590,11 @@ object LlmQueries {
     // learned-token chunking: the llm_bpe_tokenize apply CTEs feed a
     // per-doc ordered id list; the window cut is llm_chunk's
     "llm_chunk_bpe" ->
-      """WITH RECURSIVE
-          m(rank, l, r) AS (
-            SELECT * FROM (VALUES (0,'t','h'),(1,'th','e'),(2,'i','n'),
-                                  (3,'a','n'),(4,'an','d'),(5,'e','r'),
-                                  (6,'o','n'),(7,'r','e'))),
-          t0 AS (SELECT doc_id, string_split_regex(text, '[\t\n\x0B\f\r ]+') AS ws
-                 FROM documents),
-          w AS (SELECT doc_id, unnest(generate_series(1, len(ws))) AS wi, ws
-                FROM t0),
-          w2 AS (SELECT doc_id, wi, ws[wi] AS word FROM w
-                 WHERE length(ws[wi]) > 0),
-          init AS (SELECT doc_id, wi,
-                     ' ' || array_to_string(string_split(word, ''), '  ') || ' ' AS s
-                   FROM w2),
-          bpe AS (
-            SELECT doc_id, wi, s FROM init
-            UNION ALL
-            SELECT doc_id, wi,
-                   replace(s, ' '||l||'  '||r||' ', ' '||l||r||' ') AS s
-            FROM (SELECT b.doc_id, b.wi, b.s, m.l, m.r,
-                         row_number() OVER (PARTITION BY b.doc_id, b.wi
-                                            ORDER BY m.rank) AS rn
-                  FROM bpe b JOIN m
-                    ON position(' '||m.l||'  '||m.r||' ' IN b.s) > 0)
-            WHERE rn = 1),
-          term AS (SELECT doc_id, wi, s FROM bpe b
-                   WHERE NOT EXISTS (SELECT 1 FROM m
-                     WHERE position(' '||m.l||'  '||m.r||' ' IN b.s) > 0)),
-          sy AS (SELECT doc_id, wi, string_split(trim(s), '  ') AS a FROM term),
-          ix AS (SELECT doc_id, wi, unnest(generate_series(1, len(a))) AS si, a
-                 FROM sy),
-          tk AS (SELECT doc_id, wi, si,
-                   CAST(CASE WHEN length(a[si]) = 1 THEN unicode(a[si])
-                        ELSE 1114112 + (SELECT min(m2.rank) FROM m m2
-                                        WHERE m2.l || m2.r = a[si])
-                        END AS INT) AS tid
-                 FROM ix),
+      s"""WITH RECURSIVE
+          $bpeMergesCte,
+          ${bpeApplyCtes()},
+          $bpeSymbolCtes,
+          tk AS (SELECT doc_id, wi, si, ${bpeTokenIdSql("a[si]")} AS tid FROM ix),
           ids AS (SELECT doc_id, list(tid ORDER BY wi, si) AS ids
                   FROM tk GROUP BY doc_id),
           al AS (SELECT d.doc_id, coalesce(i.ids, CAST([] AS INT[])) AS ids
@@ -3920,12 +2692,7 @@ object LlmQueries {
     // propagation's fixpoint
     "llm_dedup_clusters" ->
       s"""WITH RECURSIVE $minhashCtes,
-          edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                    UNION ALL SELECT id_b, id_a FROM pairs),
-          reach(id, r) AS (
-            SELECT src, src FROM edges
-            UNION
-            SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id)
+          $componentsCtes
           SELECT id AS doc_id, min(r) AS cluster FROM reach GROUP BY id""",
     // containment over distinct hashed trigram shingles (shared-md5
     // hash, so both engines count identical key sets)
@@ -3972,18 +2739,7 @@ object LlmQueries {
     // graded variant: totals + hits in one aggregate, fraction = exact
     // integer division in double (IEEE-deterministic, compared raw)
     "llm_contamination" ->
-      s"""WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-          t AS (SELECT doc_id, string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+') AS toks
-                FROM documents),
-          g AS (SELECT doc_id,
-                  list_distinct(list_transform(generate_series(1, len(toks) - 12),
-                    i -> $gram13Sql)) AS gs
-                FROM t WHERE len(toks) >= 13),
-          h AS (SELECT doc_id,
-                  list_distinct(list_transform(gs, s -> $hashSql)) AS hs
-                FROM g),
-          ev AS (SELECT DISTINCT unnest(hs) AS eh FROM h, m WHERE doc_id > mx - 100),
-          co AS (SELECT doc_id, unnest(hs) AS eh FROM h, m WHERE doc_id <= mx - 100),
+      s"""WITH $decontamCtes,
           agg AS (SELECT co.doc_id, count(*) AS t, count(ev.eh) AS c
                   FROM co LEFT JOIN ev ON co.eh = ev.eh GROUP BY co.doc_id)
           SELECT d.doc_id, coalesce(agg.c, 0) AS eval_shingles,
@@ -3998,61 +2754,26 @@ object LlmQueries {
     // bucket-offset + within-bucket form (buckets are contiguous order
     // ranges); boundary doc kept (token_offset < budget)
     "llm_token_budget" ->
-      """WITH t AS (SELECT doc_id,
-               CAST(len(string_split_regex(text, '[\t\n\x0B\f\r ]+')) AS BIGINT) AS n_toks,
+      s"""WITH t AS (SELECT doc_id,
+               CAST(len(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')) AS BIGINT) AS n_toks,
                CAST(('0x'||substr(md5('budget:'||text),1,8)) AS BIGINT) AS h
              FROM documents),
-          o AS (SELECT doc_id, n_toks,
-                  CAST(coalesce(sum(n_toks) OVER (ORDER BY h, doc_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-                    AS token_offset
-                FROM t)
+          $budgetOffsetsCte
           SELECT doc_id, n_toks, token_offset FROM o WHERE token_offset < 10000""",
     // the budget window over LEARNED token counts: the recursive apply
     // CTE (llm_bpe_count's, verbatim) feeds n_toks; the hash order and
     // the exclusive-prefix cut are the llm_token_budget oracle's
     "llm_token_budget_bpe" ->
-      """WITH RECURSIVE
-          m(rank, l, r) AS (
-            SELECT * FROM (VALUES (0,'t','h'),(1,'th','e'),(2,'i','n'),
-                                  (3,'a','n'),(4,'an','d'),(5,'e','r'),
-                                  (6,'o','n'),(7,'r','e'))),
-          t0 AS (SELECT doc_id, string_split_regex(text, '[\t\n\x0B\f\r ]+') AS ws
-                 FROM documents),
-          w AS (SELECT doc_id, unnest(generate_series(1, len(ws))) AS wi, ws
-                FROM t0),
-          w2 AS (SELECT doc_id, wi, ws[wi] AS word FROM w
-                 WHERE length(ws[wi]) > 0),
-          init AS (SELECT doc_id, wi,
-                     ' ' || array_to_string(string_split(word, ''), '  ') || ' ' AS s
-                   FROM w2),
-          bpe AS (
-            SELECT doc_id, wi, s FROM init
-            UNION ALL
-            SELECT doc_id, wi,
-                   replace(s, ' '||l||'  '||r||' ', ' '||l||r||' ') AS s
-            FROM (SELECT b.doc_id, b.wi, b.s, m.l, m.r,
-                         row_number() OVER (PARTITION BY b.doc_id, b.wi
-                                            ORDER BY m.rank) AS rn
-                  FROM bpe b JOIN m
-                    ON position(' '||m.l||'  '||m.r||' ' IN b.s) > 0)
-            WHERE rn = 1),
-          term AS (SELECT doc_id, wi, s FROM bpe b
-                   WHERE NOT EXISTS (SELECT 1 FROM m
-                     WHERE position(' '||m.l||'  '||m.r||' ' IN b.s) > 0)),
-          cnt AS (SELECT doc_id,
-                    (length(s) - length(replace(s, ' ', ''))) // 2 AS c
-                  FROM term),
+      s"""WITH RECURSIVE
+          $bpeMergesCte,
+          ${bpeApplyCtes()},
+          $bpeCountCte,
           t AS (SELECT d.doc_id,
                   CAST(coalesce(sum(cnt.c), 0) AS BIGINT) AS n_toks,
                   CAST(('0x'||substr(md5('budget:'||d.text),1,8)) AS BIGINT) AS h
                 FROM documents d LEFT JOIN cnt ON d.doc_id = cnt.doc_id
                 GROUP BY d.doc_id, d.text),
-          o AS (SELECT doc_id, n_toks,
-                  CAST(coalesce(sum(n_toks) OVER (ORDER BY h, doc_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-                    AS token_offset
-                FROM t)
+          $budgetOffsetsCte
           SELECT doc_id, n_toks, token_offset FROM o WHERE token_offset < 10000""",
     // the per-group hierarchy must equal the per-group plain window
     "llm_token_budget_group" ->
@@ -4083,14 +2804,10 @@ object LlmQueries {
     // global running token offsets (the hierarchical prefix sum must
     // equal DuckDB's single global window) + integer-division seq cuts
     "llm_pack" ->
-      """WITH t AS (SELECT doc_id,
-                      CAST(len(string_split_regex(text, '[\t\n\x0B\f\r ]+')) AS BIGINT) AS n_toks
+      s"""WITH t AS (SELECT doc_id,
+                      CAST(len(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')) AS BIGINT) AS n_toks
                     FROM documents),
-          o AS (SELECT doc_id, n_toks,
-                  CAST(coalesce(sum(n_toks) OVER (ORDER BY doc_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-                    AS token_offset
-                FROM t)
+          $packOffsetsCte
           SELECT doc_id, n_toks, token_offset,
                  token_offset // 512 AS first_seq,
                  (token_offset + n_toks - 1) // 512 AS last_seq
@@ -4099,46 +2816,15 @@ object LlmQueries {
     // feeds n_toks; the id-order prefix sum and seq cuts are llm_pack's
     // (greatest mirrors the operator's zero-token straddle guard)
     "llm_pack_bpe" ->
-      """WITH RECURSIVE
-          m(rank, l, r) AS (
-            SELECT * FROM (VALUES (0,'t','h'),(1,'th','e'),(2,'i','n'),
-                                  (3,'a','n'),(4,'an','d'),(5,'e','r'),
-                                  (6,'o','n'),(7,'r','e'))),
-          t0 AS (SELECT doc_id, string_split_regex(text, '[\t\n\x0B\f\r ]+') AS ws
-                 FROM documents),
-          w AS (SELECT doc_id, unnest(generate_series(1, len(ws))) AS wi, ws
-                FROM t0),
-          w2 AS (SELECT doc_id, wi, ws[wi] AS word FROM w
-                 WHERE length(ws[wi]) > 0),
-          init AS (SELECT doc_id, wi,
-                     ' ' || array_to_string(string_split(word, ''), '  ') || ' ' AS s
-                   FROM w2),
-          bpe AS (
-            SELECT doc_id, wi, s FROM init
-            UNION ALL
-            SELECT doc_id, wi,
-                   replace(s, ' '||l||'  '||r||' ', ' '||l||r||' ') AS s
-            FROM (SELECT b.doc_id, b.wi, b.s, m.l, m.r,
-                         row_number() OVER (PARTITION BY b.doc_id, b.wi
-                                            ORDER BY m.rank) AS rn
-                  FROM bpe b JOIN m
-                    ON position(' '||m.l||'  '||m.r||' ' IN b.s) > 0)
-            WHERE rn = 1),
-          term AS (SELECT doc_id, wi, s FROM bpe b
-                   WHERE NOT EXISTS (SELECT 1 FROM m
-                     WHERE position(' '||m.l||'  '||m.r||' ' IN b.s) > 0)),
-          cnt AS (SELECT doc_id,
-                    (length(s) - length(replace(s, ' ', ''))) // 2 AS c
-                  FROM term),
+      s"""WITH RECURSIVE
+          $bpeMergesCte,
+          ${bpeApplyCtes()},
+          $bpeCountCte,
           t AS (SELECT d.doc_id,
                   CAST(coalesce(sum(cnt.c), 0) AS BIGINT) AS n_toks
                 FROM documents d LEFT JOIN cnt ON d.doc_id = cnt.doc_id
                 GROUP BY d.doc_id),
-          o AS (SELECT doc_id, n_toks,
-                  CAST(coalesce(sum(n_toks) OVER (ORDER BY doc_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-                    AS token_offset
-                FROM t)
+          $packOffsetsCte
           SELECT doc_id, n_toks, token_offset,
                  token_offset // 512 AS first_seq,
                  greatest(token_offset + n_toks - 1, token_offset) // 512
@@ -4147,23 +2833,13 @@ object LlmQueries {
     // the star algorithm must produce the identical cluster labeling
     "llm_cluster_star" ->
       s"""WITH RECURSIVE $minhashCtes,
-          edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                    UNION ALL SELECT id_b, id_a FROM pairs),
-          reach(id, r) AS (
-            SELECT src, src FROM edges
-            UNION
-            SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id)
+          $componentsCtes
           SELECT id AS doc_id, min(r) AS cluster FROM reach GROUP BY id""",
     // end-to-end cluster dedup: every document survives EXCEPT non-min
     // members of a connected component (singletons pass through)
     "llm_cluster_keep" ->
       s"""WITH RECURSIVE $minhashCtes,
-          edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                    UNION ALL SELECT id_b, id_a FROM pairs),
-          reach(id, r) AS (
-            SELECT src, src FROM edges
-            UNION
-            SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id),
+          $componentsCtes,
           losers AS (SELECT id FROM reach GROUP BY id HAVING id <> min(r))
           SELECT doc_id FROM documents
           WHERE doc_id NOT IN (SELECT id FROM losers)""",
@@ -4177,19 +2853,9 @@ object LlmQueries {
     // identical to llm_text_stats; singletons keep themselves)
     "llm_cluster_best" ->
       s"""WITH RECURSIVE $minhashCtes,
-          edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                    UNION ALL SELECT id_b, id_a FROM pairs),
-          reach(id, r) AS (
-            SELECT src, src FROM edges
-            UNION
-            SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id),
+          $componentsCtes,
           comp AS (SELECT id, min(r) AS c FROM reach GROUP BY id),
-          q AS (SELECT doc_id,
-                  round(least(length(text) * 1.0 / 500.0, 1.0) * 0.3
-                        + (1.0 - (length(text) - length(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'))) * 1.0 / greatest(length(text), 1)) * 0.4
-                        + least(len(list_filter(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+'), t -> t IN ($stopsEn))) * 1.0
-                                / greatest(len(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')), 1) * 5.0, 1.0) * 0.3, 6) AS q
-                FROM documents),
+          q AS (SELECT doc_id, ${qualitySql("text")} AS q FROM documents),
           labeled AS (SELECT q.doc_id, q.q, coalesce(comp.c, q.doc_id) AS c
                       FROM q LEFT JOIN comp ON comp.id = q.doc_id)
           SELECT doc_id FROM (
@@ -4238,7 +2904,7 @@ object LlmQueries {
     // floor(x/scale + 0.5) codes (engine-portable round-half-up), exact
     // cosine over the dequantized lists; zero vectors code to all-zero
     "llm_ann_sq" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH $embeddingsCte,
           s AS (SELECT vec_id, v,
                        list_max(list_transform(v, x -> abs(x))) / 127.0 AS sc
                 FROM e),
@@ -4258,14 +2924,7 @@ object LlmQueries {
     // SQ dequant-cosine tail — the query vector stays RAW (the serving
     // coordinator holds it; only the corpus is quantized)
     "llm_ann_ivf_sq" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-          c AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 8),
-          assigned AS (
-            SELECT vec_id, v, cid AS cell FROM (
-              SELECT e.vec_id, e.v, c.cid,
-                     row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) rk
-              FROM e CROSS JOIN c) WHERE rk = 1),
+      s"""WITH $ivfAssignedCtes,
           sq AS (SELECT vec_id, cell, v,
                         list_max(list_transform(v, x -> abs(x))) / 127.0 AS sc
                  FROM assigned),
@@ -4274,10 +2933,7 @@ object LlmQueries {
                         ELSE list_transform(v, x -> floor(x / sc + 0.5) * sc)
                    END AS xh
                  FROM sq),
-          qc AS (SELECT a.v AS qv, c.cid AS cell,
-                        row_number() OVER (
-                          ORDER BY list_cosine_similarity(a.v, c.cv) DESC, c.cid) rk
-                 FROM assigned a CROSS JOIN c WHERE a.vec_id = 0)
+          $ivfAssignedQueryCte
           SELECT x.vec_id, round(list_cosine_similarity(x.xh, q.qv), 6) AS sq_score
           FROM xh x JOIN (SELECT qv, cell FROM qc WHERE rk <= 2) q
             ON x.cell = q.cell
@@ -4367,17 +3023,7 @@ object LlmQueries {
                            WHERE doc_id > (SELECT max(doc_id) - 300 FROM documents)),
           ${minhashSketchCtes("newdocs", None, "n")},
           ${minhashSketchCtes("documents", None, "c")},
-          cand AS (SELECT DISTINCT x.doc_id id_new, y.doc_id id_corpus
-                   FROM bandsn x JOIN bandsc y
-                     ON x.band_idx = y.band_idx AND x.band_val = y.band_val)
-          SELECT c.id_new, c.id_corpus,
-                 len(list_intersect(a.hs, b.hs)) * 1.0
-                   / len(list_distinct(list_concat(a.hs, b.hs))) AS jaccard
-          FROM cand c
-          JOIN hsn a ON a.doc_id = c.id_new
-          JOIN hsc b ON b.doc_id = c.id_corpus
-          WHERE len(list_intersect(a.hs, b.hs)) * 1.0
-                  / len(list_distinct(list_concat(a.hs, b.hs))) >= 0.5""",
+          $minhashProbeSql""",
     // takedown: the incremental probe against the REMAINING corpus only
     // (tombstoned ids purged from the stored frames at read) — clones
     // of purged docs pair with nothing, clones of survivors still hit
@@ -4388,51 +3034,12 @@ object LlmQueries {
                       WHERE doc_id > (SELECT max(doc_id) - 300 FROM documents)),
           ${minhashSketchCtes("newdocs", None, "n")},
           ${minhashSketchCtes("remaining", None, "c")},
-          cand AS (SELECT DISTINCT x.doc_id id_new, y.doc_id id_corpus
-                   FROM bandsn x JOIN bandsc y
-                     ON x.band_idx = y.band_idx AND x.band_val = y.band_val)
-          SELECT c.id_new, c.id_corpus,
-                 len(list_intersect(a.hs, b.hs)) * 1.0
-                   / len(list_distinct(list_concat(a.hs, b.hs))) AS jaccard
-          FROM cand c
-          JOIN hsn a ON a.doc_id = c.id_new
-          JOIN hsc b ON b.doc_id = c.id_corpus
-          WHERE len(list_intersect(a.hs, b.hs)) * 1.0
-                  / len(list_distinct(list_concat(a.hs, b.hs))) >= 0.5""",
+          $minhashProbeSql""",
     // takedown on the serving index: cells/codebooks stay the FULL
     // corpus's (stored statistics — deletion does not retrain), only
     // the scored set excludes the tombstoned ids
     "llm_ann_index_delete" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-          cent AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 8),
-          a AS (SELECT vec_id, v, cid AS cell FROM (
-                  SELECT e.vec_id, e.v, c.cid,
-                         row_number() OVER (PARTITION BY e.vec_id
-                           ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rk
-                  FROM e CROSS JOIN cent c) WHERE rk = 1),
-          qc AS (SELECT c.cid AS cell,
-                        row_number() OVER (
-                          ORDER BY list_cosine_similarity(q.v, c.cv) DESC, c.cid) AS rk
-                 FROM cent c CROSS JOIN (SELECT v FROM e WHERE vec_id = 0) q),
-          pr AS (SELECT a.vec_id, a.v FROM a
-                 JOIN (SELECT cell FROM qc WHERE rk <= 2) p ON a.cell = p.cell
-                 WHERE a.vec_id <> 0 AND a.vec_id % 10 <> 3),
-          seed AS (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8),
-          sub AS (SELECT unnest(generate_series(0, 3)) AS s),
-          cb AS (SELECT sub.s, seed.vec_id AS cid,
-                        seed.v[sub.s*16+1 : sub.s*16+16] AS cv
-                 FROM sub CROSS JOIN seed),
-          enc AS (SELECT vec_id, s, cid AS code FROM (
-                    SELECT pr.vec_id, b.s, b.cid,
-                           row_number() OVER (PARTITION BY pr.vec_id, b.s
-                             ORDER BY round(list_inner_product(b.cv, b.cv)
-                               - 2 * list_inner_product(pr.v[b.s*16+1 : b.s*16+16], b.cv), 6) ASC,
-                             b.cid ASC) AS rk
-                    FROM pr CROSS JOIN cb b) WHERE rk = 1),
-          q AS (SELECT v FROM e WHERE vec_id = 0),
-          lut AS (SELECT b.s, b.cid,
-                         list_inner_product(q.v[b.s*16+1 : b.s*16+16], b.cv) AS d
-                  FROM cb b CROSS JOIN q)
+      s"""WITH ${ivfPqCtes(" AND a.vec_id % 10 <> 3")}
           SELECT enc.vec_id, round(sum(lut.d), 6) AS adc_score
           FROM enc JOIN lut ON enc.s = lut.s AND enc.code = lut.cid
           GROUP BY enc.vec_id
@@ -4621,23 +3228,7 @@ object LlmQueries {
     // D = 0.75 binary-exact), so only libm-ln spread is in play —
     // absorbed by round(.,4)
     "llm_trigram_kn" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(text, '[\t\n\x0B\f\r ]+') AS tk
-                    FROM documents),
-          tr AS (SELECT doc_id,
-                        tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS tg,
-                        tk[i] || ' ' || tk[i+1] AS b12,
-                        tk[i+1] || ' ' || tk[i+2] AS b23,
-                        tk[i+1] AS w2, tk[i+2] AS w3
-                 FROM (SELECT doc_id, tk,
-                              unnest(generate_series(1, len(tk) - 2)) AS i
-                       FROM t WHERE len(tk) >= 3)),
-          r AS (SELECT doc_id,
-                       CAST(('0x'||substr(md5(tg),1,15)) AS BIGINT) AS th,
-                       CAST(('0x'||substr(md5(b12),1,15)) AS BIGINT) AS bh12,
-                       CAST(('0x'||substr(md5(b23),1,15)) AS BIGINT) AS bh23,
-                       CAST(('0x'||substr(md5(w2),1,15)) AS BIGINT) AS mh,
-                       CAST(('0x'||substr(md5(w3),1,15)) AS BIGINT) AS w3h
-                FROM tr),
+      s"""WITH $trigramKnCtes,
           types AS (SELECT DISTINCT th, bh12, bh23, mh, w3h FROM r),
           c3 AS (SELECT th, count(*) AS c3 FROM r GROUP BY th),
           t12 AS (SELECT bh12, count(*) AS ctx12,
@@ -4669,23 +3260,7 @@ object LlmQueries {
     // discounted-to-zero numerator; unseen context/middle -> back off a
     // level; unseen word -> the add-1 OOV slot at the unigram floor)
     "llm_trigram_kn_stored" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(text, '[\t\n\x0B\f\r ]+') AS tk
-                    FROM documents),
-          tr AS (SELECT doc_id,
-                        tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS tg,
-                        tk[i] || ' ' || tk[i+1] AS b12,
-                        tk[i+1] || ' ' || tk[i+2] AS b23,
-                        tk[i+1] AS w2, tk[i+2] AS w3
-                 FROM (SELECT doc_id, tk,
-                              unnest(generate_series(1, len(tk) - 2)) AS i
-                       FROM t WHERE len(tk) >= 3)),
-          r AS (SELECT doc_id,
-                       CAST(('0x'||substr(md5(tg),1,15)) AS BIGINT) AS th,
-                       CAST(('0x'||substr(md5(b12),1,15)) AS BIGINT) AS bh12,
-                       CAST(('0x'||substr(md5(b23),1,15)) AS BIGINT) AS bh23,
-                       CAST(('0x'||substr(md5(w2),1,15)) AS BIGINT) AS mh,
-                       CAST(('0x'||substr(md5(w3),1,15)) AS BIGINT) AS w3h
-                FROM tr),
+      s"""WITH $trigramKnCtes,
           rt AS (SELECT * FROM r WHERE doc_id % 2 = 0),
           types AS (SELECT DISTINCT th, bh12, bh23, mh, w3h FROM rt),
           c3 AS (SELECT th, count(*) AS c3 FROM rt GROUP BY th),
@@ -4843,32 +3418,7 @@ object LlmQueries {
     "llm_pipeline5" ->
       s"""WITH base AS (SELECT doc_id, text FROM documents
                         UNION ALL SELECT doc_id + 700000, text FROM documents),
-          d AS (SELECT doc_id, '$htmlPre' || text || '$htmlPost' AS h FROM base),
-          $stripChainSql,
-          n AS (SELECT doc_id,
-                  trim(regexp_replace(
-                    regexp_replace(
-                      regexp_replace(nfc_normalize(clean_text), '\\r\\n?', chr(10), 'g'),
-                      '[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]', '', 'g'),
-                    '[ \\t\\x{00A0}]+', ' ', 'g')) AS text
-                FROM f),
-          g AS (SELECT doc_id, text,
-                  CAST(len(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')) AS INTEGER) AS n_tokens,
-                  round(length(regexp_replace(text, '[\\t\\n\\x0B\\f\\r ]+', '', 'g')) * 1.0
-                        / greatest(len(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')), 1), 6) AS mean_word_len,
-                  round((length(text) - length(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'))) * 1.0
-                        / greatest(length(text), 1), 6) AS symbol_ratio,
-                  CAST(len(list_filter(string_split_regex(lower(text), '[\\t\\n\\x0B\\f\\r ]+'),
-                       t -> t IN ($stopsEn))) AS INTEGER) AS stop_hits
-                FROM n),
-          k AS (SELECT doc_id, text FROM g
-                WHERE n_tokens >= 10 AND n_tokens <= 100000
-                  AND mean_word_len >= 2.0 AND mean_word_len <= 10.0
-                  AND symbol_ratio <= 0.2 AND stop_hits >= 1),
-          dd AS (SELECT doc_id, text FROM (
-                   SELECT doc_id, text, row_number() OVER (
-                     PARTITION BY md5(regexp_replace(lower(text), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g'))
-                     ORDER BY doc_id) AS rn FROM k) WHERE rn = 1)
+          $crawlCleanCtes
           SELECT doc_id,
                  CAST(CAST(('0x'||substr(md5('p5:'||text),1,8)) AS BIGINT) % 8 AS INTEGER) AS shard,
                  CAST(('0x'||substr(md5('ord:p5:'||text),1,8)) AS BIGINT) AS order_key
@@ -4880,40 +3430,11 @@ object LlmQueries {
     "llm_pipeline14" ->
       s"""WITH base AS (SELECT doc_id, text FROM documents
                         UNION ALL SELECT doc_id + 700000, text FROM documents),
-          d AS (SELECT doc_id, '$htmlPre' || text || '$htmlPost' AS h FROM base),
-          $stripChainSql,
-          n AS (SELECT doc_id,
-                  trim(regexp_replace(
-                    regexp_replace(
-                      regexp_replace(nfc_normalize(clean_text), '\\r\\n?', chr(10), 'g'),
-                      '[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]', '', 'g'),
-                    '[ \\t\\x{00A0}]+', ' ', 'g')) AS text
-                FROM f),
-          g AS (SELECT doc_id, text,
-                  CAST(len(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')) AS INTEGER) AS n_tokens,
-                  round(length(regexp_replace(text, '[\\t\\n\\x0B\\f\\r ]+', '', 'g')) * 1.0
-                        / greatest(len(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')), 1), 6) AS mean_word_len,
-                  round((length(text) - length(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'))) * 1.0
-                        / greatest(length(text), 1), 6) AS symbol_ratio,
-                  CAST(len(list_filter(string_split_regex(lower(text), '[\\t\\n\\x0B\\f\\r ]+'),
-                       t -> t IN ($stopsEn))) AS INTEGER) AS stop_hits
-                FROM n),
-          k AS (SELECT doc_id, text FROM g
-                WHERE n_tokens >= 10 AND n_tokens <= 100000
-                  AND mean_word_len >= 2.0 AND mean_word_len <= 10.0
-                  AND symbol_ratio <= 0.2 AND stop_hits >= 1),
-          dd AS (SELECT doc_id, text FROM (
-                   SELECT doc_id, text, row_number() OVER (
-                     PARTITION BY md5(regexp_replace(lower(text), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g'))
-                     ORDER BY doc_id) AS rn FROM k) WHERE rn = 1),
+          $crawlCleanCtes,
           t AS (SELECT doc_id,
                   CAST(len(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')) AS BIGINT) AS n_toks
                 FROM dd),
-          o AS (SELECT doc_id, n_toks,
-                  CAST(coalesce(sum(n_toks) OVER (ORDER BY doc_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-                    AS token_offset
-                FROM t)
+          $packOffsetsCte
           SELECT doc_id, n_toks, token_offset,
                  token_offset // 512 AS first_seq,
                  (token_offset + n_toks - 1) // 512 AS last_seq
@@ -4922,26 +3443,7 @@ object LlmQueries {
     // on the 60-bit shared hash (mirroring the Spark distinct-on-hash),
     // blocks in > 1 document are cut, survivors reassemble by position
     "llm_span_dedup" ->
-      """WITH toks AS (
-            SELECT doc_id, generate_subscripts(t, 1) - 1 AS pos, unnest(t) AS tok
-            FROM (SELECT doc_id, string_split_regex(text, '[\t\n\x0B\f\r ]+') AS t
-                  FROM documents)),
-          spans AS (
-            SELECT doc_id, pos // 16 AS blk,
-                   string_agg(tok, ' ' ORDER BY pos) AS span
-            FROM toks GROUP BY doc_id, blk),
-          hot AS (
-            SELECT h FROM (
-              SELECT h, count(*) AS df FROM (
-                SELECT DISTINCT doc_id,
-                       CAST(('0x'||substr(md5(span),1,15)) AS BIGINT) AS h
-                FROM spans)
-              GROUP BY h)
-            WHERE df > 1),
-          flagged AS (
-            SELECT s.doc_id, s.blk, s.span, h.h IS NOT NULL AS dropit
-            FROM spans s LEFT JOIN hot h
-              ON CAST(('0x'||substr(md5(s.span),1,15)) AS BIGINT) = h.h)
+      s"""WITH ${spanDedupCtes("documents")}
           SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans,
                  CAST(sum(CASE WHEN dropit THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
                  coalesce(string_agg(CASE WHEN NOT dropit THEN span END,
@@ -4952,23 +3454,7 @@ object LlmQueries {
     // assigned with the trained cells, within-cell cosine pairs at
     // >= 0.99, keep = ids never appearing as a pair's larger side
     "llm_semdedup" ->
-      """WITH cent0 AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv
-                        FROM embeddings ORDER BY vec_id LIMIT 8),
-          e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-          s1 AS (SELECT e.vec_id, e.v, c.cid,
-                        row_number() OVER (PARTITION BY e.vec_id
-                          ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rk
-                 FROM e CROSS JOIN cent0 c),
-          a1 AS (SELECT vec_id, v, cid AS cell FROM s1 WHERE rk = 1),
-          ex1 AS (SELECT cell,
-                         CAST(unnest(generate_series(1, len(v))) - 1 AS INTEGER) AS pos,
-                         unnest(v) AS elem
-                  FROM a1),
-          up1 AS (SELECT cell, pos,
-                         round(CAST(sum(CAST(elem AS DECIMAL(20,10))) AS DOUBLE) / count(*), 6) AS c_val
-                  FROM ex1 GROUP BY cell, pos),
-          cent1 AS (SELECT cell AS cid, list(c_val ORDER BY pos) AS cv
-                    FROM up1 GROUP BY cell),
+      s"""WITH ${kmeansCtes(1)},
           corpus AS (SELECT vec_id, v FROM e
                      UNION ALL SELECT vec_id + 10000, v FROM e),
           s2 AS (SELECT x.vec_id, x.v, c.cid,
@@ -5076,20 +3562,10 @@ object LlmQueries {
     // lowest cid — the cellOf/topCellsOf contract), candidates from the
     // cell equi-join only
     "llm_knn_join_ivf" ->
-      """WITH cent AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv
-                       FROM embeddings ORDER BY vec_id LIMIT 8),
-          e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-          ca AS (SELECT e.vec_id, c.cid,
-                        row_number() OVER (PARTITION BY e.vec_id
-                          ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rk
-                 FROM e CROSS JOIN cent c),
-          corpus AS (SELECT e.vec_id AS neighbor_id, e.v AS cv2, a.cid AS cell
-                     FROM e JOIN (SELECT vec_id, cid FROM ca WHERE rk = 1) a
-                       USING (vec_id)),
-          qry AS (SELECT e.vec_id AS query_id, e.v AS qv, a.cid AS cell
-                  FROM e JOIN (SELECT vec_id, cid FROM ca WHERE rk <= 2) a
-                    USING (vec_id)
-                  WHERE e.vec_id < 10),
+      s"""WITH ${seedCellsCte("cent")},
+          $embeddingsCte,
+          $cellRankCte,
+          ${knnCellCtes("e.v AS cv2", "e.v AS qv")},
           s AS (SELECT q.query_id, c.neighbor_id,
                        round(list_cosine_similarity(c.cv2, q.qv), 6) AS cos_sim,
                        row_number() OVER (PARTITION BY q.query_id
@@ -5101,9 +3577,8 @@ object LlmQueries {
     // the recall report: the exact and IVF knn replays composed —
     // per-query overlap of the two top-5 sets, recall = hits / n_exact
     "llm_ann_recall" ->
-      """WITH cent AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv
-                       FROM embeddings ORDER BY vec_id LIMIT 8),
-          e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH ${seedCellsCte("cent")},
+          $embeddingsCte,
           sx AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                         row_number() OVER (PARTITION BY q.vec_id
                           ORDER BY round(list_cosine_similarity(c.v, q.v), 6) DESC NULLS LAST,
@@ -5111,17 +3586,8 @@ object LlmQueries {
                  FROM e c CROSS JOIN (SELECT * FROM e WHERE vec_id < 10) q
                  WHERE c.vec_id <> q.vec_id),
           ex AS (SELECT query_id, neighbor_id FROM sx WHERE rn <= 5),
-          ca AS (SELECT e.vec_id, c.cid,
-                        row_number() OVER (PARTITION BY e.vec_id
-                          ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rk
-                 FROM e CROSS JOIN cent c),
-          corpus AS (SELECT e.vec_id AS neighbor_id, e.v AS cv2, a.cid AS cell
-                     FROM e JOIN (SELECT vec_id, cid FROM ca WHERE rk = 1) a
-                       USING (vec_id)),
-          qry AS (SELECT e.vec_id AS query_id, e.v AS qv, a.cid AS cell
-                  FROM e JOIN (SELECT vec_id, cid FROM ca WHERE rk <= 2) a
-                    USING (vec_id)
-                  WHERE e.vec_id < 10),
+          $cellRankCte,
+          ${knnCellCtes("e.v AS cv2", "e.v AS qv")},
           sa AS (SELECT q.query_id, c.neighbor_id,
                         row_number() OVER (PARTITION BY q.query_id
                           ORDER BY round(list_cosine_similarity(c.cv2, q.qv), 6) DESC NULLS LAST,
@@ -5144,45 +3610,7 @@ object LlmQueries {
     // equi-join, score = sum of the query's LUT entries at the stored
     // codes, rank on the ROUNDED score per query
     "llm_knn_join_stored" ->
-      """WITH cent AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv
-                       FROM embeddings ORDER BY vec_id LIMIT 8),
-          e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-          ca AS (SELECT e.vec_id, c.cid,
-                        row_number() OVER (PARTITION BY e.vec_id
-                          ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rk
-                 FROM e CROSS JOIN cent c),
-          corpus AS (SELECT e.vec_id AS neighbor_id, a.cid AS cell
-                     FROM e JOIN (SELECT vec_id, cid FROM ca WHERE rk = 1) a
-                       USING (vec_id)),
-          qry AS (SELECT e.vec_id AS query_id, a.cid AS cell
-                  FROM e JOIN (SELECT vec_id, cid FROM ca WHERE rk <= 2) a
-                    USING (vec_id)
-                  WHERE e.vec_id < 10),
-          seed AS (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8),
-          sub AS (SELECT unnest(generate_series(0, 3)) AS s),
-          cb AS (SELECT sub.s, seed.vec_id AS cid,
-                        seed.v[sub.s*16+1 : sub.s*16+16] AS cv
-                 FROM sub CROSS JOIN seed),
-          enc AS (SELECT vec_id, s, cid AS code FROM (
-                    SELECT e.vec_id, b.s, b.cid,
-                           row_number() OVER (PARTITION BY e.vec_id, b.s
-                             ORDER BY round(list_inner_product(b.cv, b.cv)
-                               - 2 * list_inner_product(e.v[b.s*16+1 : b.s*16+16], b.cv), 6) ASC,
-                             b.cid ASC) AS rk
-                    FROM e CROSS JOIN cb b) WHERE rk = 1),
-          qv AS (SELECT vec_id AS query_id, v FROM e WHERE vec_id < 10),
-          lut AS (SELECT qv.query_id, b.s, b.cid,
-                         list_inner_product(qv.v[b.s*16+1 : b.s*16+16], b.cv) AS d
-                  FROM cb b CROSS JOIN qv),
-          pairs AS (SELECT q.query_id, c.neighbor_id
-                    FROM corpus c JOIN qry q ON c.cell = q.cell
-                    WHERE c.neighbor_id <> q.query_id),
-          sc AS (SELECT p.query_id, p.neighbor_id, round(sum(l.d), 6) AS adc_score
-                 FROM pairs p
-                 JOIN enc ON enc.vec_id = p.neighbor_id
-                 JOIN lut l ON l.query_id = p.query_id
-                           AND l.s = enc.s AND l.cid = enc.code
-                 GROUP BY p.query_id, p.neighbor_id)
+      s"""WITH $knnStoredCtes
          SELECT query_id, neighbor_id, adc_score FROM (
            SELECT query_id, neighbor_id, adc_score,
                   row_number() OVER (PARTITION BY query_id
@@ -5194,45 +3622,7 @@ object LlmQueries {
     // each query's ADC top-15, exact cosine over only those candidates
     // ranks the final 5 per query
     "llm_knn_join_rerank" ->
-      """WITH cent AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv
-                       FROM embeddings ORDER BY vec_id LIMIT 8),
-          e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-          ca AS (SELECT e.vec_id, c.cid,
-                        row_number() OVER (PARTITION BY e.vec_id
-                          ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rk
-                 FROM e CROSS JOIN cent c),
-          corpus AS (SELECT e.vec_id AS neighbor_id, a.cid AS cell
-                     FROM e JOIN (SELECT vec_id, cid FROM ca WHERE rk = 1) a
-                       USING (vec_id)),
-          qry AS (SELECT e.vec_id AS query_id, a.cid AS cell
-                  FROM e JOIN (SELECT vec_id, cid FROM ca WHERE rk <= 2) a
-                    USING (vec_id)
-                  WHERE e.vec_id < 10),
-          seed AS (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8),
-          sub AS (SELECT unnest(generate_series(0, 3)) AS s),
-          cb AS (SELECT sub.s, seed.vec_id AS cid,
-                        seed.v[sub.s*16+1 : sub.s*16+16] AS cv
-                 FROM sub CROSS JOIN seed),
-          enc AS (SELECT vec_id, s, cid AS code FROM (
-                    SELECT e.vec_id, b.s, b.cid,
-                           row_number() OVER (PARTITION BY e.vec_id, b.s
-                             ORDER BY round(list_inner_product(b.cv, b.cv)
-                               - 2 * list_inner_product(e.v[b.s*16+1 : b.s*16+16], b.cv), 6) ASC,
-                             b.cid ASC) AS rk
-                    FROM e CROSS JOIN cb b) WHERE rk = 1),
-          qv AS (SELECT vec_id AS query_id, v FROM e WHERE vec_id < 10),
-          lut AS (SELECT qv.query_id, b.s, b.cid,
-                         list_inner_product(qv.v[b.s*16+1 : b.s*16+16], b.cv) AS d
-                  FROM cb b CROSS JOIN qv),
-          pairs AS (SELECT q.query_id, c.neighbor_id
-                    FROM corpus c JOIN qry q ON c.cell = q.cell
-                    WHERE c.neighbor_id <> q.query_id),
-          sc AS (SELECT p.query_id, p.neighbor_id, round(sum(l.d), 6) AS adc_score
-                 FROM pairs p
-                 JOIN enc ON enc.vec_id = p.neighbor_id
-                 JOIN lut l ON l.query_id = p.query_id
-                           AND l.s = enc.s AND l.cid = enc.code
-                 GROUP BY p.query_id, p.neighbor_id),
+      s"""WITH $knnStoredCtes,
           cand AS (SELECT query_id, neighbor_id FROM (
                      SELECT query_id, neighbor_id,
                             row_number() OVER (PARTITION BY query_id
@@ -5256,24 +3646,8 @@ object LlmQueries {
     // row_number algebra) → Gopher keep (the admission predicate on
     // rounded stats) → exclusive-prefix token budget → shard/order keys
     "llm_pipeline7" ->
-      s"""WITH u AS (SELECT doc_id,
-                      CASE doc_id % 6
-                        WHEN 0 THEN 'www.example.com'
-                        WHEN 1 THEN 'blog.spamsite.com'
-                        WHEN 2 THEN 'news.bbc.co.uk'
-                        WHEN 3 THEN 'example.com'
-                        WHEN 4 THEN 'ads.tracker.net'
-                        ELSE NULL END AS host
-                    FROM documents),
-          p AS (SELECT doc_id, host, string_split(host, '.') AS ls
-                FROM u WHERE host IS NOT NULL),
-          dd AS (SELECT doc_id,
-                       CASE WHEN len(ls) <= 2 THEN host
-                            WHEN list_contains(['co','com','net','org','ac','gov','edu'], ls[-2])
-                                 AND length(ls[-1]) = 2 AND len(ls) >= 3
-                            THEN ls[-3] || '.' || ls[-2] || '.' || ls[-1]
-                            ELSE ls[-2] || '.' || ls[-1] END AS domain
-                FROM p),
+      s"""WITH $urlHostCtes,
+          dd AS (SELECT doc_id, $registrableDomainSql AS domain FROM p),
           adm AS (SELECT dd.doc_id, dd.domain, doc.text
                   FROM dd JOIN documents doc USING (doc_id)
                   WHERE dd.domain NOT IN ('spamsite.com', 'tracker.net')),
@@ -5283,18 +3657,7 @@ object LlmQueries {
                                 ORDER BY CAST(('0x'||substr(md5('domcap:'||text),1,8)) AS BIGINT) NULLS LAST,
                                          text NULLS LAST, doc_id NULLS LAST) AS rn
                        FROM adm) WHERE rn <= 60),
-          q AS (SELECT doc_id, text FROM (
-                  SELECT doc_id, text,
-                    CAST(len(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')) AS INTEGER) AS n_tokens,
-                    round(length(regexp_replace(text, '[\\t\\n\\x0B\\f\\r ]+', '', 'g')) * 1.0
-                          / greatest(len(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')), 1), 6) AS mwl,
-                    round((length(text) - length(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'))) * 1.0
-                          / greatest(length(text), 1), 6) AS sym,
-                    CAST(len(list_filter(string_split_regex(lower(text), '[\\t\\n\\x0B\\f\\r ]+'),
-                         t -> t IN ($stopsEn))) AS INTEGER) AS stops
-                  FROM capped)
-                WHERE n_tokens >= 10 AND n_tokens <= 100000
-                  AND mwl >= 2.0 AND mwl <= 10.0 AND sym <= 0.1 AND stops >= 1),
+          ${gopherKeepCte("q", "capped")},
           t AS (SELECT doc_id, text,
                        CAST(len(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')) AS BIGINT) AS n_toks,
                        CAST(('0x'||substr(md5('budget:'||text),1,8)) AS BIGINT) AS h
@@ -5315,47 +3678,11 @@ object LlmQueries {
     // land on the 1e-6 grid at each boundary — bit-identical GD state
     // in any correctly-rounding engine
     "llm_quality_classifier" ->
-      """WITH pos AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
-          neg AS (SELECT doc_id, upper(text) AS text FROM documents
-                  WHERE doc_id % 2 = 1),
-          feats AS (
-            SELECT 'p:' || CAST(doc_id AS VARCHAR) AS tid, bucket,
-                   count(*) AS tf, 1.0 AS y
-            FROM (SELECT doc_id,
-                    CAST(CAST(('0x'||substr(md5(t),1,15)) AS BIGINT) % 64 AS INTEGER) AS bucket
-                  FROM (SELECT doc_id, unnest(string_split_regex(text, '[\t\n\x0B\f\r ]+')) AS t
-                        FROM pos))
-            GROUP BY 1, bucket
-            UNION ALL
-            SELECT 'n:' || CAST(doc_id AS VARCHAR), bucket, count(*), 0.0
-            FROM (SELECT doc_id,
-                    CAST(CAST(('0x'||substr(md5(t),1,15)) AS BIGINT) % 64 AS INTEGER) AS bucket
-                  FROM (SELECT doc_id, unnest(string_split_regex(text, '[\t\n\x0B\f\r ]+')) AS t
-                        FROM neg))
-            GROUP BY 1, bucket),
-          nn AS (SELECT count(DISTINCT tid) AS n FROM feats),
-          g1 AS (SELECT bucket,
-                        CAST(sum(CAST(tf * (y - 0.5) AS DECIMAL(20,10))) AS DOUBLE)
-                          / nn.n AS g
-                 FROM feats, nn GROUP BY bucket, nn.n),
-          w1 AS (SELECT bucket, round(0.5 * g, 6) AS w FROM g1),
-          z2 AS (SELECT f.tid,
-                        round(CAST(sum(CAST(f.tf * coalesce(w1.w, 0.0)
-                          AS DECIMAL(20,10))) AS DOUBLE), 6) AS z
-                 FROM feats f LEFT JOIN w1 USING (bucket) GROUP BY f.tid),
-          p2 AS (SELECT tid, round(1.0 / (1.0 + exp(-z)), 6) AS p FROM z2),
-          g2 AS (SELECT f.bucket,
-                        CAST(sum(CAST(f.tf *
-                          ((CASE WHEN f.tid LIKE 'p:%' THEN 1.0 ELSE 0.0 END)
-                            - p2.p) AS DECIMAL(20,10))) AS DOUBLE) / nn.n AS g
-                 FROM feats f JOIN p2 USING (tid), nn GROUP BY f.bucket, nn.n),
-          w2 AS (SELECT coalesce(w1.bucket, g2.bucket) AS bucket,
-                        round(coalesce(w1.w, 0) + 0.5 * coalesce(g2.g, 0), 6) AS w
-                 FROM w1 FULL JOIN g2 ON w1.bucket = g2.bucket),
+      s"""WITH $lrTrainCtes,
           sf AS (SELECT doc_id, bucket, count(*) AS tf
                  FROM (SELECT doc_id,
                          CAST(CAST(('0x'||substr(md5(t),1,15)) AS BIGINT) % 64 AS INTEGER) AS bucket
-                       FROM (SELECT doc_id, unnest(string_split_regex(text, '[\t\n\x0B\f\r ]+')) AS t
+                       FROM (SELECT doc_id, unnest(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')) AS t
                              FROM documents))
                  GROUP BY doc_id, bucket),
           zz AS (SELECT sf.doc_id,
@@ -5409,22 +3736,8 @@ object LlmQueries {
     // top domains by doc count + corpus share over the llm_url_filter
     // fixture (garbage URLs excluded from counts and total)
     "llm_domain_report" ->
-      """WITH u AS (SELECT doc_id,
-                      CASE doc_id % 6
-                        WHEN 0 THEN 'www.example.com'
-                        WHEN 1 THEN 'blog.spamsite.com'
-                        WHEN 2 THEN 'news.bbc.co.uk'
-                        WHEN 3 THEN 'example.com'
-                        WHEN 4 THEN 'ads.tracker.net'
-                        ELSE NULL END AS host
-                    FROM documents),
-          p AS (SELECT doc_id, host, string_split(host, '.') AS ls
-                FROM u WHERE host IS NOT NULL),
-          d AS (SELECT CASE WHEN len(ls) <= 2 THEN host
-                            WHEN list_contains(['co','com','net','org','ac','gov','edu'], ls[-2])
-                                 AND length(ls[-1]) = 2 AND len(ls) >= 3
-                            THEN ls[-3] || '.' || ls[-2] || '.' || ls[-1]
-                            ELSE ls[-2] || '.' || ls[-1] END AS domain
+      s"""WITH $urlHostCtes,
+          d AS (SELECT $registrableDomainSql AS domain
                 FROM p),
           c AS (SELECT domain, count(*) AS n_docs FROM d GROUP BY domain),
           t AS (SELECT sum(n_docs) AS tot FROM c)
@@ -5435,36 +3748,7 @@ object LlmQueries {
     // two-stage retrieval: the llm_ann_ivf_pq chain proposes the ADC
     // top-20, exact cosine over ONLY those candidates ranks the final 10
     "llm_ann_rerank" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-          cent AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 8),
-          a AS (SELECT vec_id, v, cid AS cell FROM (
-                  SELECT e.vec_id, e.v, c.cid,
-                         row_number() OVER (PARTITION BY e.vec_id
-                           ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rk
-                  FROM e CROSS JOIN cent c) WHERE rk = 1),
-          qc AS (SELECT c.cid AS cell,
-                        row_number() OVER (
-                          ORDER BY list_cosine_similarity(q.v, c.cv) DESC, c.cid) AS rk
-                 FROM cent c CROSS JOIN (SELECT v FROM e WHERE vec_id = 0) q),
-          pr AS (SELECT a.vec_id, a.v FROM a
-                 JOIN (SELECT cell FROM qc WHERE rk <= 2) p ON a.cell = p.cell
-                 WHERE a.vec_id <> 0),
-          seed AS (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8),
-          sub AS (SELECT unnest(generate_series(0, 3)) AS s),
-          cb AS (SELECT sub.s, seed.vec_id AS cid,
-                        seed.v[sub.s*16+1 : sub.s*16+16] AS cv
-                 FROM sub CROSS JOIN seed),
-          enc AS (SELECT vec_id, s, cid AS code FROM (
-                    SELECT pr.vec_id, b.s, b.cid,
-                           row_number() OVER (PARTITION BY pr.vec_id, b.s
-                             ORDER BY round(list_inner_product(b.cv, b.cv)
-                               - 2 * list_inner_product(pr.v[b.s*16+1 : b.s*16+16], b.cv), 6) ASC,
-                             b.cid ASC) AS rk
-                    FROM pr CROSS JOIN cb b) WHERE rk = 1),
-          q AS (SELECT v FROM e WHERE vec_id = 0),
-          lut AS (SELECT b.s, b.cid,
-                         list_inner_product(q.v[b.s*16+1 : b.s*16+16], b.cv) AS d
-                  FROM cb b CROSS JOIN q),
+      s"""WITH ${ivfPqCtes()},
           adc AS (SELECT enc.vec_id, round(sum(lut.d), 6) AS adc_score
                   FROM enc JOIN lut ON enc.s = lut.s AND enc.code = lut.cid
                   GROUP BY enc.vec_id),
@@ -5477,33 +3761,16 @@ object LlmQueries {
     // f_urlparse); the registrable-domain heuristic and blocklist
     // anti-join re-derived in DuckDB string algebra
     "llm_url_filter" ->
-      """WITH u AS (SELECT doc_id,
-                      CASE doc_id % 6
-                        WHEN 0 THEN 'www.example.com'
-                        WHEN 1 THEN 'blog.spamsite.com'
-                        WHEN 2 THEN 'news.bbc.co.uk'
-                        WHEN 3 THEN 'example.com'
-                        WHEN 4 THEN 'ads.tracker.net'
-                        ELSE NULL END AS host
-                    FROM documents),
-          p AS (SELECT doc_id, host, string_split(host, '.') AS ls
-                FROM u WHERE host IS NOT NULL),
-          d AS (SELECT doc_id, host,
-                       CASE WHEN len(ls) <= 2 THEN host
-                            WHEN list_contains(['co','com','net','org','ac','gov','edu'], ls[-2])
-                                 AND length(ls[-1]) = 2 AND len(ls) >= 3
-                            THEN ls[-3] || '.' || ls[-2] || '.' || ls[-1]
-                            ELSE ls[-2] || '.' || ls[-1] END AS domain
-                FROM p)
+      s"""WITH $urlHostCtes,
+          d AS (SELECT doc_id, host, $registrableDomainSql AS domain FROM p)
          SELECT doc_id, host, domain FROM d
          WHERE domain NOT IN ('spamsite.com', 'tracker.net')""",
     // nearest seed centroid (argmax cosine, tie lowest cid — the cellOf
     // contract), cosine to the OWN centroid rounded to 6, then the
     // per-cell exact-quantile keep (quantile_cont == Spark percentile)
     "llm_embed_outliers" ->
-      """WITH c AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv
-                    FROM embeddings ORDER BY vec_id LIMIT 8),
-          e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH ${seedCellsCte("c")},
+          $embeddingsCte,
           s AS (SELECT e.vec_id, c.cid,
                        round(list_cosine_similarity(e.v, c.cv), 6) AS centroid_sim,
                        row_number() OVER (PARTITION BY e.vec_id
@@ -5655,13 +3922,7 @@ object LlmQueries {
           $gopherRepCtes,
           rep AS (SELECT doc_id FROM fr WHERE $gopherRepKeep),
           q AS (SELECT d.doc_id, d.text,
-                  round(least(length(d.text) * 1.0 / 500.0, 1.0) * 0.3
-                    + (1.0 - (length(d.text) - length(regexp_replace(lower(d.text), '[^a-z0-9 ]', '', 'g'))) * 1.0
-                        / greatest(length(d.text), 1)) * 0.4
-                    + least(len(list_filter(string_split_regex(d.text, '[\\t\\n\\x0B\\f\\r ]+'),
-                          t -> t IN ($stopsEn))) * 1.0
-                        / greatest(len(string_split_regex(d.text, '[\\t\\n\\x0B\\f\\r ]+')), 1) * 5.0,
-                        1.0) * 0.3, 6) AS quality
+                  ${qualitySql("d.text")} AS quality
                 FROM documents d JOIN rep USING (doc_id)),
           r AS (SELECT doc_id, text,
                   percent_rank() OVER (ORDER BY quality) AS pr FROM q),
@@ -5697,15 +3958,7 @@ object LlmQueries {
             WHERE n_tokens >= 10 AND n_tokens <= 100000
               AND mean_word_len >= 2.0 AND mean_word_len <= 10.0
               AND symbol_ratio <= 0.1 AND stop_hits >= 1),
-          q AS (SELECT doc_id, lang, text,
-                  round(least(length(text) * 1.0 / 500.0, 1.0) * 0.3
-                    + (1.0 - (length(text) - length(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'))) * 1.0
-                        / greatest(length(text), 1)) * 0.4
-                    + least(len(list_filter(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+'),
-                          t -> t IN ($stopsEn))) * 1.0
-                        / greatest(len(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')), 1) * 5.0,
-                        1.0) * 0.3, 6) AS quality
-                FROM g),
+          q AS (SELECT doc_id, lang, text, ${qualitySql("text")} AS quality FROM g),
           p AS (SELECT doc_id, lang, text,
                   round(quality /
                     ((CAST(('0x'||substr(md5('p6:'||text),1,8)) AS BIGINT) + 1)
@@ -5789,25 +4042,7 @@ object LlmQueries {
               FROM documents)
             WHERE n_tokens >= 10 AND n_tokens <= 100000
               AND mwl >= 2.0 AND mwl <= 10.0 AND sym <= 0.1 AND stops >= 1),
-          toks AS (
-            SELECT doc_id, generate_subscripts(t, 1) - 1 AS pos, unnest(t) AS tok
-            FROM (SELECT doc_id, string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+') AS t FROM kept)),
-          spans AS (
-            SELECT doc_id, pos // 16 AS blk,
-                   string_agg(tok, ' ' ORDER BY pos) AS span
-            FROM toks GROUP BY doc_id, blk),
-          hot AS (
-            SELECT h FROM (
-              SELECT h, count(*) AS df FROM (
-                SELECT DISTINCT doc_id,
-                       CAST(('0x'||substr(md5(span),1,15)) AS BIGINT) AS h
-                FROM spans)
-              GROUP BY h)
-            WHERE df > 1),
-          flagged AS (
-            SELECT s.doc_id, s.blk, s.span, h.h IS NOT NULL AS dropit
-            FROM spans s LEFT JOIN hot h
-              ON CAST(('0x'||substr(md5(s.span),1,15)) AS BIGINT) = h.h),
+          ${spanDedupCtes("kept")},
           cleaned AS (
             SELECT doc_id,
                    CAST(sum(CASE WHEN dropit THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
@@ -5875,32 +4110,7 @@ object LlmQueries {
     // algebra, a query-partitioned top-k window; the no-match query
     // emits no rows
     "llm_bm25_join" ->
-      """WITH q(query_id, qtext) AS (
-            SELECT * FROM (VALUES (1, 'hash join'), (2, 'vector scan slow'),
-                                  (3, 'zzzunknown'))),
-          qt AS (SELECT DISTINCT query_id, t AS term FROM (
-                   SELECT query_id,
-                          unnest(string_split_regex(qtext, '[\t\n\x0B\f\r ]+')) AS t
-                   FROM q) WHERE length(t) > 0),
-          d AS (SELECT doc_id, string_split_regex(text, '[\t\n\x0B\f\r ]+') AS toks
-                FROM documents),
-          stats AS (SELECT count(*) AS n_docs,
-                           sum(len(toks)) AS total_toks FROM d),
-          tok AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM d),
-          tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM tok
-                 WHERE term IN (SELECT DISTINCT term FROM qt)
-                 GROUP BY doc_id, dl, term),
-          dfr AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-          sc AS (SELECT qt.query_id, tf.doc_id,
-                   ln(1.0 + (s.n_docs - dfr.df + 0.5) / (dfr.df + 0.5)) *
-                     (CAST(tf.tf AS DOUBLE) * (1.2 + 1)) /
-                     (CAST(tf.tf AS DOUBLE) +
-                      1.2 * (1.0 - 0.75 + 0.75 * CAST(tf.dl AS DOUBLE) /
-                             (CAST(s.total_toks AS DOUBLE) / s.n_docs))) AS c
-                 FROM tf JOIN dfr ON tf.term = dfr.term
-                 JOIN qt ON tf.term = qt.term CROSS JOIN stats s),
-          agg AS (SELECT query_id, doc_id, round(sum(c), 4) AS bm25
-                  FROM sc GROUP BY query_id, doc_id),
+      s"""WITH $bm25JoinCtes,
           rk AS (SELECT query_id, doc_id, bm25,
                    CAST(row_number() OVER (PARTITION BY query_id
                      ORDER BY bm25 DESC, doc_id ASC) AS INT) AS rank
@@ -5934,8 +4144,7 @@ object LlmQueries {
                  ORDER BY bm25 DESC, doc_id ASC LIMIT 20),
           bmr AS (SELECT doc_id, row_number() OVER (
                     ORDER BY bm25 DESC, doc_id ASC) AS r FROM bm),
-          e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                FROM embeddings),
+          $embeddingsCte,
           q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
           ann AS (SELECT e.vec_id AS doc_id,
                     round(list_cosine_similarity(e.v, q.qv), 6) AS cos_sim
@@ -5952,43 +4161,7 @@ object LlmQueries {
             ORDER BY rrf DESC, doc_id ASC LIMIT 10),
           cand AS (SELECT f.doc_id AS id, e.v, f.rrf AS rel
                    FROM fused f JOIN e ON e.vec_id = f.doc_id),
-          lam AS (SELECT CAST(0.700000 AS DECIMAL(7,6)) AS l,
-                         CAST(0.300000 AS DECIMAL(7,6)) AS m),
-          s1 AS (SELECT c.id, c.v, CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)), 6) AS DOUBLE) AS mmr
-                 FROM cand c CROSS JOIN lam
-                 ORDER BY mmr DESC, c.id LIMIT 1),
-          s2 AS (SELECT c.id, c.v,
-                   CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)) - lam.m * CAST(
-                     round(list_cosine_similarity(c.v, s1.v), 6) AS DECIMAL(18,6)), 6) AS DOUBLE) AS mmr
-                 FROM cand c CROSS JOIN lam CROSS JOIN s1
-                 WHERE c.id <> s1.id
-                 ORDER BY mmr DESC, c.id LIMIT 1),
-          s3 AS (SELECT c.id, c.v,
-                   CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)) - lam.m * CAST(greatest(
-                     round(list_cosine_similarity(c.v, s1.v), 6),
-                     round(list_cosine_similarity(c.v, s2.v), 6)) AS DECIMAL(18,6)), 6) AS DOUBLE) AS mmr
-                 FROM cand c CROSS JOIN lam CROSS JOIN s1 CROSS JOIN s2
-                 WHERE c.id NOT IN (s1.id, s2.id)
-                 ORDER BY mmr DESC, c.id LIMIT 1),
-          s4 AS (SELECT c.id, c.v,
-                   CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)) - lam.m * CAST(greatest(greatest(
-                     round(list_cosine_similarity(c.v, s1.v), 6),
-                     round(list_cosine_similarity(c.v, s2.v), 6)),
-                     round(list_cosine_similarity(c.v, s3.v), 6)) AS DECIMAL(18,6)), 6) AS DOUBLE) AS mmr
-                 FROM cand c CROSS JOIN lam CROSS JOIN s1 CROSS JOIN s2
-                 CROSS JOIN s3
-                 WHERE c.id NOT IN (s1.id, s2.id, s3.id)
-                 ORDER BY mmr DESC, c.id LIMIT 1),
-          s5 AS (SELECT c.id, c.v,
-                   CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)) - lam.m * CAST(greatest(greatest(greatest(
-                     round(list_cosine_similarity(c.v, s1.v), 6),
-                     round(list_cosine_similarity(c.v, s2.v), 6)),
-                     round(list_cosine_similarity(c.v, s3.v), 6)),
-                     round(list_cosine_similarity(c.v, s4.v), 6)) AS DECIMAL(18,6)), 6) AS DOUBLE) AS mmr
-                 FROM cand c CROSS JOIN lam CROSS JOIN s1 CROSS JOIN s2
-                 CROSS JOIN s3 CROSS JOIN s4
-                 WHERE c.id NOT IN (s1.id, s2.id, s3.id, s4.id)
-                 ORDER BY mmr DESC, c.id LIMIT 1),
+          ${mmrCtes(5)},
           sel AS (SELECT id, mmr, 1 AS rank FROM s1
                   UNION ALL SELECT id, mmr, 2 FROM s2
                   UNION ALL SELECT id, mmr, 3 FROM s3
@@ -6091,14 +4264,8 @@ object LlmQueries {
     // batch PRF: the per-query replay — round-1 ranking, feedback
     // postings tf, per-query tf·idf expansion window, round-2 ranking
     "llm_bm25_prf_join" ->
-      """WITH q(query_id, qtext) AS (
-            SELECT * FROM (VALUES (1, 'hash join'), (2, 'vector scan slow'),
-                                  (3, 'zzzunknown'))),
-          qt AS (SELECT DISTINCT query_id, t AS term FROM (
-                   SELECT query_id,
-                          unnest(string_split_regex(qtext, '[\t\n\x0B\f\r ]+')) AS t
-                   FROM q) WHERE length(t) > 0),
-          d AS (SELECT doc_id, string_split_regex(text, '[\t\n\x0B\f\r ]+') AS toks
+      s"""WITH $queryTermCtes,
+          d AS (SELECT doc_id, string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+') AS toks
                 FROM documents),
           stats AS (SELECT count(*) AS n_docs,
                            sum(len(toks)) AS total_toks FROM d),
@@ -6167,50 +4334,13 @@ object LlmQueries {
     // (1−λ) spelled CAST(1.0 AS DOUBLE) - 0.7 so the constant is the
     // operator's exact IEEE subtraction, not a 0.3 literal
     "llm_mmr" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                    FROM embeddings),
+      s"""WITH $embeddingsCte,
           q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
           cand AS (SELECT e.vec_id AS id, e.v,
                      round(list_cosine_similarity(e.v, q.qv), 6) AS rel
                    FROM e CROSS JOIN q WHERE e.vec_id <> 0
                    ORDER BY rel DESC, e.vec_id LIMIT 50),
-          lam AS (SELECT CAST(0.700000 AS DECIMAL(7,6)) AS l,
-                         CAST(0.300000 AS DECIMAL(7,6)) AS m),
-          s1 AS (SELECT c.id, c.v, c.rel, CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)), 6) AS DOUBLE) AS mmr
-                 FROM cand c CROSS JOIN lam
-                 ORDER BY mmr DESC, c.id LIMIT 1),
-          s2 AS (SELECT c.id, c.v, c.rel,
-                   CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)) - lam.m * CAST(
-                     round(list_cosine_similarity(c.v, s1.v), 6) AS DECIMAL(18,6)), 6) AS DOUBLE) AS mmr
-                 FROM cand c CROSS JOIN lam CROSS JOIN s1
-                 WHERE c.id <> s1.id
-                 ORDER BY mmr DESC, c.id LIMIT 1),
-          s3 AS (SELECT c.id, c.v, c.rel,
-                   CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)) - lam.m * CAST(greatest(
-                     round(list_cosine_similarity(c.v, s1.v), 6),
-                     round(list_cosine_similarity(c.v, s2.v), 6)) AS DECIMAL(18,6)), 6) AS DOUBLE) AS mmr
-                 FROM cand c CROSS JOIN lam CROSS JOIN s1 CROSS JOIN s2
-                 WHERE c.id NOT IN (s1.id, s2.id)
-                 ORDER BY mmr DESC, c.id LIMIT 1),
-          s4 AS (SELECT c.id, c.v, c.rel,
-                   CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)) - lam.m * CAST(greatest(greatest(
-                     round(list_cosine_similarity(c.v, s1.v), 6),
-                     round(list_cosine_similarity(c.v, s2.v), 6)),
-                     round(list_cosine_similarity(c.v, s3.v), 6)) AS DECIMAL(18,6)), 6) AS DOUBLE) AS mmr
-                 FROM cand c CROSS JOIN lam CROSS JOIN s1 CROSS JOIN s2
-                 CROSS JOIN s3
-                 WHERE c.id NOT IN (s1.id, s2.id, s3.id)
-                 ORDER BY mmr DESC, c.id LIMIT 1),
-          s5 AS (SELECT c.id, c.v, c.rel,
-                   CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)) - lam.m * CAST(greatest(greatest(greatest(
-                     round(list_cosine_similarity(c.v, s1.v), 6),
-                     round(list_cosine_similarity(c.v, s2.v), 6)),
-                     round(list_cosine_similarity(c.v, s3.v), 6)),
-                     round(list_cosine_similarity(c.v, s4.v), 6)) AS DECIMAL(18,6)), 6) AS DOUBLE) AS mmr
-                 FROM cand c CROSS JOIN lam CROSS JOIN s1 CROSS JOIN s2
-                 CROSS JOIN s3 CROSS JOIN s4
-                 WHERE c.id NOT IN (s1.id, s2.id, s3.id, s4.id)
-                 ORDER BY mmr DESC, c.id LIMIT 1)
+          ${mmrCtes(5, "c.id, c.v, c.rel")}
           SELECT id AS vec_id, rel AS cos_sim, mmr, 1 AS rank FROM s1
           UNION ALL SELECT id, rel, mmr, 2 FROM s2
           UNION ALL SELECT id, rel, mmr, 3 FROM s3
@@ -6219,32 +4349,7 @@ object LlmQueries {
     // batch snippets: the bm25-join top-5 run feeds the per-pair
     // snippet replay with list_contains over each query's term list
     "llm_snippet_join" ->
-      """WITH q(query_id, qtext) AS (
-            SELECT * FROM (VALUES (1, 'hash join'), (2, 'vector scan slow'),
-                                  (3, 'zzzunknown'))),
-          qt AS (SELECT DISTINCT query_id, t AS term FROM (
-                   SELECT query_id,
-                          unnest(string_split_regex(qtext, '[\t\n\x0B\f\r ]+')) AS t
-                   FROM q) WHERE length(t) > 0),
-          d AS (SELECT doc_id, string_split_regex(text, '[\t\n\x0B\f\r ]+') AS toks
-                FROM documents),
-          stats AS (SELECT count(*) AS n_docs,
-                           sum(len(toks)) AS total_toks FROM d),
-          tok AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM d),
-          tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM tok
-                 WHERE term IN (SELECT DISTINCT term FROM qt)
-                 GROUP BY doc_id, dl, term),
-          dfr AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-          sc AS (SELECT qt.query_id, tf.doc_id,
-                   ln(1.0 + (s.n_docs - dfr.df + 0.5) / (dfr.df + 0.5)) *
-                     (CAST(tf.tf AS DOUBLE) * (1.2 + 1)) /
-                     (CAST(tf.tf AS DOUBLE) +
-                      1.2 * (1.0 - 0.75 + 0.75 * CAST(tf.dl AS DOUBLE) /
-                             (CAST(s.total_toks AS DOUBLE) / s.n_docs))) AS c
-                 FROM tf JOIN dfr ON tf.term = dfr.term
-                 JOIN qt ON tf.term = qt.term CROSS JOIN stats s),
-          agg AS (SELECT query_id, doc_id, round(sum(c), 4) AS bm25
-                  FROM sc GROUP BY query_id, doc_id),
+      s"""WITH $bm25JoinCtes,
           rk AS (SELECT query_id, doc_id,
                    row_number() OVER (PARTITION BY query_id
                      ORDER BY bm25 DESC, doc_id ASC) AS rank
@@ -6275,8 +4380,7 @@ object LlmQueries {
     // argmax windows, the same quantized score (each cosine round-6
     // before the max/blend) and id tie-break as the single-query form
     "llm_mmr_join" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                    FROM embeddings),
+      s"""WITH $embeddingsCte,
           qv AS (SELECT vec_id AS query_id, v FROM e
                  WHERE vec_id IN (1, 2, 3)),
           ann AS (SELECT qv.query_id, e.vec_id AS id, e.v,
@@ -6286,42 +4390,7 @@ object LlmQueries {
                      SELECT *, row_number() OVER (PARTITION BY query_id
                        ORDER BY rel DESC, id ASC) AS rn FROM ann)
                    WHERE rn <= 20),
-          lam AS (SELECT CAST(0.700000 AS DECIMAL(7,6)) AS l,
-                         CAST(0.300000 AS DECIMAL(7,6)) AS m),
-          s1 AS (SELECT query_id, id, v, rel, mmr FROM (
-                   SELECT c.query_id, c.id, c.v, c.rel,
-                          CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)), 6) AS DOUBLE) AS mmr,
-                          row_number() OVER (PARTITION BY c.query_id
-                            ORDER BY CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)), 6) AS DOUBLE) DESC, c.id ASC)
-                            AS rn
-                   FROM cand c CROSS JOIN lam) WHERE rn = 1),
-          s2 AS (SELECT query_id, id, v, rel, mmr FROM (
-                   SELECT c.query_id, c.id, c.v, c.rel,
-                          CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)) - lam.m * CAST(
-                            round(list_cosine_similarity(c.v, s1.v), 6) AS DECIMAL(18,6)), 6) AS DOUBLE)
-                            AS mmr,
-                          row_number() OVER (PARTITION BY c.query_id
-                            ORDER BY CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)) - lam.m * CAST(
-                              round(list_cosine_similarity(c.v, s1.v), 6) AS DECIMAL(18,6)), 6) AS DOUBLE)
-                              DESC, c.id ASC) AS rn
-                   FROM cand c
-                   JOIN s1 ON s1.query_id = c.query_id AND c.id <> s1.id
-                   CROSS JOIN lam) WHERE rn = 1),
-          s3 AS (SELECT query_id, id, v, rel, mmr FROM (
-                   SELECT c.query_id, c.id, c.v, c.rel,
-                          CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)) - lam.m * CAST(greatest(
-                            round(list_cosine_similarity(c.v, s1.v), 6),
-                            round(list_cosine_similarity(c.v, s2.v), 6)) AS DECIMAL(18,6)), 6) AS DOUBLE)
-                            AS mmr,
-                          row_number() OVER (PARTITION BY c.query_id
-                            ORDER BY CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)) - lam.m * CAST(greatest(
-                              round(list_cosine_similarity(c.v, s1.v), 6),
-                              round(list_cosine_similarity(c.v, s2.v), 6)) AS DECIMAL(18,6)), 6) AS DOUBLE)
-                              DESC, c.id ASC) AS rn
-                   FROM cand c
-                   JOIN s1 ON s1.query_id = c.query_id AND c.id <> s1.id
-                   JOIN s2 ON s2.query_id = c.query_id AND c.id <> s2.id
-                   CROSS JOIN lam) WHERE rn = 1)
+          ${mmrJoinCtes(3)}
           SELECT query_id, id AS doc_id, rel AS cos_sim, mmr, 1 AS rank
           FROM s1
           UNION ALL SELECT query_id, id, rel, mmr, 2 FROM s2
@@ -6351,18 +4420,7 @@ object LlmQueries {
     // the same ascending-rank association (window cumulative sum ==
     // Spark's sequential fold), log2 under the round-4 grid
     "llm_retrieval_eval" ->
-      """WITH qv AS (SELECT vec_id AS query_id,
-                            CAST(embedding AS DOUBLE[]) AS v, label
-                     FROM embeddings WHERE vec_id IN (1, 2, 3)),
-          e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label
-                FROM embeddings),
-          ann AS (SELECT qv.query_id, e.vec_id AS doc_id,
-                    round(list_cosine_similarity(e.v, qv.v), 6) AS cos_sim
-                  FROM e JOIN qv ON e.vec_id <> qv.query_id),
-          run AS (SELECT query_id, doc_id,
-                    row_number() OVER (PARTITION BY query_id
-                      ORDER BY cos_sim DESC, doc_id ASC) AS rank
-                  FROM ann),
+      s"""WITH $denseRunCtes,
           topk AS (SELECT * FROM run WHERE rank <= 10),
           rel AS (SELECT qv.query_id, e.vec_id AS doc_id
                   FROM e JOIN qv ON e.label = qv.label
@@ -6390,40 +4448,12 @@ object LlmQueries {
           ideal AS (SELECT nr.query_id, s.cum AS idcg
                     FROM nr JOIN ser s ON s.i = least(nr.n_rel, 10)),
           q AS (SELECT DISTINCT query_id FROM run)
-          SELECT q.query_id,
-                 coalesce(nr.n_rel, 0) AS n_rel,
-                 coalesce(pq.hits, 0) AS hits,
-                 round(CAST(coalesce(pq.hits, 0) AS DOUBLE) / 10, 6)
-                   AS precision_k,
-                 CASE WHEN nr.n_rel > 0 THEN
-                   round(CAST(coalesce(pq.hits, 0) AS DOUBLE) /
-                         CAST(nr.n_rel AS DOUBLE), 6) END AS recall_k,
-                 CASE WHEN pq.first_rank IS NULL THEN 0.0
-                      ELSE round(CAST(1.0 AS DOUBLE) / pq.first_rank, 6)
-                 END AS rr,
-                 CASE WHEN nr.n_rel > 0 THEN
-                   round(coalesce(pq.dcg, 0.0) / ideal.idcg, 4)
-                 END AS ndcg
-          FROM q LEFT JOIN nr ON q.query_id = nr.query_id
-                 LEFT JOIN pq ON q.query_id = pq.query_id
-                 LEFT JOIN ideal ON q.query_id = ideal.query_id
-          ORDER BY q.query_id""",
+          ${irMetricsSql("q")}""",
     // graded-relevance eval: gain 2 label-match / 1 adjacent label;
     // DCG = ordered cumulative (2^g - 1)/log2(rank+1) (max == last);
     // ideal = gains sorted desc over positions 1..10, same ordered fold
     "llm_retrieval_eval_graded" ->
-      """WITH qv AS (SELECT vec_id AS query_id,
-                            CAST(embedding AS DOUBLE[]) AS v, label
-                     FROM embeddings WHERE vec_id IN (1, 2, 3)),
-          e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label
-                FROM embeddings),
-          ann AS (SELECT qv.query_id, e.vec_id AS doc_id,
-                    round(list_cosine_similarity(e.v, qv.v), 6) AS cos_sim
-                  FROM e JOIN qv ON e.vec_id <> qv.query_id),
-          run AS (SELECT query_id, doc_id,
-                    row_number() OVER (PARTITION BY query_id
-                      ORDER BY cos_sim DESC, doc_id ASC) AS rank
-                  FROM ann),
+      s"""WITH $denseRunCtes,
           topk AS (SELECT * FROM run WHERE rank <= 10),
           rel AS (SELECT qv.query_id, e.vec_id AS doc_id,
                     CASE WHEN e.label = qv.label THEN 2 ELSE 1 END AS g
@@ -6452,24 +4482,7 @@ object LlmQueries {
           ideal AS (SELECT query_id, max(cum) AS idcg FROM ic
                     GROUP BY query_id),
           q AS (SELECT DISTINCT query_id FROM run)
-          SELECT q.query_id,
-                 coalesce(nr.n_rel, 0) AS n_rel,
-                 coalesce(pq.hits, 0) AS hits,
-                 round(CAST(coalesce(pq.hits, 0) AS DOUBLE) / 10, 6)
-                   AS precision_k,
-                 CASE WHEN nr.n_rel > 0 THEN
-                   round(CAST(coalesce(pq.hits, 0) AS DOUBLE) /
-                         CAST(nr.n_rel AS DOUBLE), 6) END AS recall_k,
-                 CASE WHEN pq.first_rank IS NULL THEN 0.0
-                      ELSE round(CAST(1.0 AS DOUBLE) / pq.first_rank, 6)
-                 END AS rr,
-                 CASE WHEN nr.n_rel > 0 THEN
-                   round(coalesce(pq.dcg, 0.0) / ideal.idcg, 4)
-                 END AS ndcg
-          FROM q LEFT JOIN nr ON q.query_id = nr.query_id
-                 LEFT JOIN pq ON q.query_id = pq.query_id
-                 LEFT JOIN ideal ON q.query_id = ideal.query_id
-          ORDER BY q.query_id""",
+          ${irMetricsSql("q")}""",
     // batch hybrid: both legs ranked per query (the llm_bm25_join qt/tf
     // algebra; exact cosine), full-outer fusion on (query_id, doc_id),
     // a query-partitioned top-k window — never a global sort
@@ -6478,50 +4491,12 @@ object LlmQueries {
     // the decimal-grid blend)
     "llm_pipeline13" ->
       s"""WITH hdocs AS (SELECT doc_id, text FROM documents),
-          hce AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                  FROM embeddings),
+          hc$embeddingsCte,
           $hybridJoinCtesSql,
           fused AS (SELECT query_id, doc_id, rrf FROM hrk WHERE rank <= 10),
           cand AS (SELECT f.query_id, f.doc_id AS id, e.v, f.rrf AS rel
                    FROM fused f JOIN hce e ON e.vec_id = f.doc_id),
-          lam AS (SELECT CAST(0.700000 AS DECIMAL(7,6)) AS l,
-                         CAST(0.300000 AS DECIMAL(7,6)) AS m),
-          s1 AS (SELECT query_id, id, v, rel, mmr FROM (
-                   SELECT c.query_id, c.id, c.v, c.rel,
-                          CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)), 6) AS DOUBLE) AS mmr,
-                          row_number() OVER (PARTITION BY c.query_id
-                            ORDER BY CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)), 6) AS DOUBLE)
-                              DESC, c.id ASC) AS rn
-                   FROM cand c CROSS JOIN lam) WHERE rn = 1),
-          s2 AS (SELECT query_id, id, v, rel, mmr FROM (
-                   SELECT c.query_id, c.id, c.v, c.rel,
-                          CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)) - lam.m * CAST(
-                            round(list_cosine_similarity(c.v, s1.v), 6) AS DECIMAL(18,6)), 6) AS DOUBLE)
-                            AS mmr,
-                          row_number() OVER (PARTITION BY c.query_id
-                            ORDER BY CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)) - lam.m * CAST(
-                              round(list_cosine_similarity(c.v, s1.v), 6) AS DECIMAL(18,6)), 6) AS DOUBLE)
-                              DESC, c.id ASC) AS rn
-                   FROM cand c
-                   JOIN s1 ON s1.query_id = c.query_id AND c.id <> s1.id
-                   CROSS JOIN lam) WHERE rn = 1),
-          s3 AS (SELECT query_id, id, v, rel, mmr FROM (
-                   SELECT c.query_id, c.id, c.v, c.rel,
-                          CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)) - lam.m * CAST(
-                            greatest(
-                              round(list_cosine_similarity(c.v, s1.v), 6),
-                              round(list_cosine_similarity(c.v, s2.v), 6)) AS DECIMAL(18,6)), 6) AS DOUBLE)
-                            AS mmr,
-                          row_number() OVER (PARTITION BY c.query_id
-                            ORDER BY CAST(round(lam.l * CAST(c.rel AS DECIMAL(18,6)) - lam.m * CAST(
-                              greatest(
-                                round(list_cosine_similarity(c.v, s1.v), 6),
-                                round(list_cosine_similarity(c.v, s2.v), 6)) AS DECIMAL(18,6)), 6) AS DOUBLE)
-                              DESC, c.id ASC) AS rn
-                   FROM cand c
-                   JOIN s1 ON s1.query_id = c.query_id AND c.id <> s1.id
-                   JOIN s2 ON s2.query_id = c.query_id AND c.id <> s2.id
-                   CROSS JOIN lam) WHERE rn = 1)
+          ${mmrJoinCtes(3)}
           SELECT query_id, id AS doc_id, rel AS rrf, mmr, 1 AS rank
           FROM s1
           UNION ALL SELECT query_id, id, rel, mmr, 2 FROM s2
@@ -6531,8 +4506,7 @@ object LlmQueries {
     // run swapped for the hybrid-join chain
     "llm_hybrid_eval" ->
       s"""WITH hdocs AS (SELECT doc_id, text FROM documents),
-          hce AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                  FROM embeddings),
+          hc$embeddingsCte,
           $hybridJoinCtesSql,
           run AS (SELECT query_id, doc_id, rank FROM hrk WHERE rank <= 10),
           qv AS (SELECT vec_id AS query_id, label FROM embeddings
@@ -6560,28 +4534,10 @@ object LlmQueries {
           ideal AS (SELECT nr.query_id, s2.cum AS idcg
                     FROM nr JOIN ser s2 ON s2.i = least(nr.n_rel, 10)),
           q2 AS (SELECT DISTINCT query_id FROM run)
-          SELECT q2.query_id,
-                 coalesce(nr.n_rel, 0) AS n_rel,
-                 coalesce(pq.hits, 0) AS hits,
-                 round(CAST(coalesce(pq.hits, 0) AS DOUBLE) / 10, 6)
-                   AS precision_k,
-                 CASE WHEN nr.n_rel > 0 THEN
-                   round(CAST(coalesce(pq.hits, 0) AS DOUBLE) /
-                         CAST(nr.n_rel AS DOUBLE), 6) END AS recall_k,
-                 CASE WHEN pq.first_rank IS NULL THEN 0.0
-                      ELSE round(CAST(1.0 AS DOUBLE) / pq.first_rank, 6)
-                 END AS rr,
-                 CASE WHEN nr.n_rel > 0 THEN
-                   round(coalesce(pq.dcg, 0.0) / ideal.idcg, 4)
-                 END AS ndcg
-          FROM q2 LEFT JOIN nr ON q2.query_id = nr.query_id
-                 LEFT JOIN pq ON q2.query_id = pq.query_id
-                 LEFT JOIN ideal ON q2.query_id = ideal.query_id
-          ORDER BY q2.query_id""",
+          ${irMetricsSql("q2")}""",
     "llm_hybrid_join" ->
       s"""WITH hdocs AS (SELECT doc_id, text FROM documents),
-          hce AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                  FROM embeddings),
+          hc$embeddingsCte,
           $hybridJoinTailSql""",
     // pipeline11: gopher keep → exact dedup over the planted-duplicate
     // crawl → the same batch-hybrid fusion algebra, both legs over the
@@ -6591,19 +4547,7 @@ object LlmQueries {
       s"""WITH crawl AS (SELECT doc_id, text FROM documents
                          UNION ALL
                          SELECT doc_id + 500000, text FROM documents),
-          hkept AS (SELECT doc_id, text FROM (
-                   SELECT doc_id, text,
-                     CAST(len(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')) AS INTEGER) AS n_tokens,
-                     round(length(regexp_replace(text, '[\\t\\n\\x0B\\f\\r ]+', '', 'g')) * 1.0
-                           / greatest(len(string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+')), 1), 6) AS mwl,
-                     round((length(text) - length(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'))) * 1.0
-                           / greatest(length(text), 1), 6) AS sym,
-                     CAST(len(list_filter(string_split_regex(lower(text), '[\\t\\n\\x0B\\f\\r ]+'),
-                          t -> t IN ($stopsEn))) AS INTEGER) AS stops
-                   FROM crawl)
-                 WHERE n_tokens >= 10 AND n_tokens <= 100000
-                   AND mwl >= 2.0 AND mwl <= 10.0
-                   AND sym <= 0.1 AND stops >= 1),
+          ${gopherKeepCte("hkept", "crawl")},
           hded AS (SELECT min(doc_id) AS doc_id FROM (
                      SELECT doc_id,
                        md5(regexp_replace(lower(text), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS fp
@@ -6714,9 +4658,8 @@ object LlmQueries {
           WHERE bit_count(xor(x.w0, y.w0)) + bit_count(xor(x.w1, y.w1)) <= 3"""
     },
     "llm_kmeans" ->
-      """WITH cent AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv
-                       FROM embeddings ORDER BY vec_id LIMIT 8),
-          e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH ${seedCellsCte("cent")},
+          $embeddingsCte,
           scored AS (SELECT e.vec_id, e.v, c.cid,
                             row_number() OVER (PARTITION BY e.vec_id
                               ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rk
@@ -6731,27 +4674,8 @@ object LlmQueries {
                  count(*) AS n
           FROM ex GROUP BY cell, pos""",
     "llm_kmeans2" ->
-      """WITH cent0 AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv
-                        FROM embeddings ORDER BY vec_id LIMIT 8),
-          e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-          s1 AS (SELECT e.vec_id, e.v, c.cid,
-                        row_number() OVER (PARTITION BY e.vec_id
-                          ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rk
-                 FROM e CROSS JOIN cent0 c),
-          a1 AS (SELECT vec_id, v, cid AS cell FROM s1 WHERE rk = 1),
-          ex1 AS (SELECT cell,
-                         CAST(unnest(generate_series(1, len(v))) - 1 AS INTEGER) AS pos,
-                         unnest(v) AS elem
-                  FROM a1),
-          up1 AS (SELECT cell, pos,
-                         round(CAST(sum(CAST(elem AS DECIMAL(20,10))) AS DOUBLE) / count(*), 6) AS c_val
-                  FROM ex1 GROUP BY cell, pos),
-          cent1 AS (SELECT cell AS cid, list(c_val ORDER BY pos) AS cv
-                    FROM up1 GROUP BY cell),
-          s2 AS (SELECT e.vec_id, e.v, c.cid,
-                        row_number() OVER (PARTITION BY e.vec_id
-                          ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rk
-                 FROM e CROSS JOIN cent1 c),
+      s"""WITH ${kmeansCtes(1)},
+          ${lloydScoreCte(2)},
           a2 AS (SELECT vec_id, v, cid AS cell FROM s2 WHERE rk = 1),
           ex2 AS (SELECT cell,
                          CAST(unnest(generate_series(1, len(v))) - 1 AS INTEGER) AS pos,

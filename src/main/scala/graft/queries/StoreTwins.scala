@@ -27,6 +27,7 @@ import graft.operators.{Classifier, Dedup, Multimodal, Par, Reuse, Similarity, T
   * store, while the Scala side holds them in memory).
   */
 object StoreTwins {
+  import SqlRecipes._
 
   /** One side of a pair: the session, the testdata dir and that side's
     * own store directory `out`. */
@@ -209,14 +210,8 @@ object StoreTwins {
     * (doc_id, payload): the [[Stores.Media]] slice with chars 11–14
     * overwritten, ids shifted by 3,000,000. */
   private def editedView(name: String): String =
-    s"""CREATE OR REPLACE TEMPORARY VIEW $name AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 sl AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND length(text) >= 400)
-                 SELECT doc_id + 3000000 AS doc_id,
-                        CAST(concat(substring(text, 1, 10), 'QQQQ',
-                                    substring(text, 15)) AS BINARY) AS payload
-                 FROM sl"""
+    s"""CREATE OR REPLACE TEMPORARY VIEW $name AS WITH $mediaSlice
+        SELECT doc_id + 3000000 AS doc_id, $mediaClonePayload AS payload FROM sl"""
 
   /** One media modality of the store pairs: its store builder, its
     * Scala probe of the edited clones against a store frame, its SQL
@@ -1142,10 +1137,8 @@ object StoreTwins {
       },
       (c, e, _) => {
         c.views("" -> "sddm_hashes")
-        e.query("""CREATE OR REPLACE TEMPORARY VIEW sddm_batch AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 aa AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND doc_id <= mx - 200)
+        e.query(s"""CREATE OR REPLACE TEMPORARY VIEW sddm_batch AS
+                 WITH $admissionBatchCtes
                  SELECT doc_id + 3000000 AS doc_id,
                         CAST(text AS BINARY) AS payload FROM aa
                  UNION ALL
@@ -1303,10 +1296,8 @@ object StoreTwins {
       (c, e, _) => {
         c.views("mh/bands" -> "p9_mh_bands", "mh/sets" -> "p9_mh_sets",
           "dh" -> "p9_dh")
-        e.query("""CREATE OR REPLACE TEMPORARY VIEW p9_inc AS
-                 WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-                 aa AS (SELECT doc_id, text FROM documents, m
-                        WHERE doc_id > mx - 300 AND doc_id <= mx - 200),
+        e.query(s"""CREATE OR REPLACE TEMPORARY VIEW p9_inc AS
+                 WITH $admissionBatchCtes,
                  nov AS (SELECT a.doc_id, a.text AS atext,
                                 concat_ws(' ', a.text, b.text, c.text) AS ntext
                          FROM aa a
@@ -1377,8 +1368,7 @@ object StoreTwins {
         docs.select((col("doc_id") + 700000).as("doc_id"), col("text")))
       val wrapped = base.select(col("doc_id"),
         concat(lit("http://graft.local/doc/"), col("doc_id")).as("uri"),
-        concat(lit(LlmQueries.htmlPre), col("text"),
-          lit(LlmQueries.htmlPost)).as("html"))
+        concat(lit(htmlPre), col("text"), lit(htmlPost)).as("html"))
       graft.sources.Warc.write(wrapped, "doc_id", "uri", "html", c.out,
         nFiles = 4, gzip = true)
       c.s.read.format("graft-extractor")

@@ -283,8 +283,5 @@ object Stores {
   /** BPE merge table at `out`: 8 common-English merges (rank, left,
     * right), including the chained th→the and an→and ranks. */
   def bpeMerges(s: SparkSession, out: String): Unit =
-    put(out, s.createDataFrame(Seq(
-        (0, "t", "h"), (1, "th", "e"), (2, "i", "n"), (3, "a", "n"),
-        (4, "an", "d"), (5, "e", "r"), (6, "o", "n"), (7, "r", "e")))
-      .toDF("rank", "left", "right"))
+    put(out, s.createDataFrame(SqlRecipes.bpeMerges).toDF("rank", "left", "right"))
 }

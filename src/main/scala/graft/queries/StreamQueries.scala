@@ -10,6 +10,7 @@ import graft.streaming.Events
   * the DuckDB oracle gate. Money-free counts; window starts compared as
   * truncated timestamps. */
 object StreamQueries {
+  import SqlRecipes._
 
   def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "st_tumbling" -> ((s, d) =>
@@ -774,32 +775,13 @@ object StreamQueries {
     // and the batch-2 edits; admission = NOT EXISTS a store hash within
     // hamming 3; batch 2 probes the APPENDED store (gen-0 ∪ adm1)
     "st_image_admission_append" ->
-      """WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-          sl AS (SELECT doc_id, text FROM documents, m
-                 WHERE doc_id > mx - 300 AND length(text) >= 400),
+      s"""WITH $mediaSlice,
           b1 AS (SELECT doc_id + 3000000 AS doc_id, text FROM sl
                  UNION ALL
                  SELECT doc_id + 4000000, reverse(text) FROM sl),
           allt AS (SELECT 0 AS grp, doc_id, text FROM sl
                    UNION ALL SELECT 1, doc_id, text FROM b1),
-          hx AS (SELECT grp, doc_id, lower(hex(text)) AS h FROM allt),
-          lum AS (SELECT grp, doc_id,
-                    list_transform(generate_series(0, 71), k ->
-                      CAST(('0x' || substr(md5(substr(h,
-                          CAST(floor(length(h)*k/72) AS INT) + 1,
-                          greatest(CAST(floor(length(h)*(k+1)/72) AS INT)
-                            - CAST(floor(length(h)*k/72) AS INT), 0))), 1, 8))
-                        AS BIGINT) % 256) AS lu
-                  FROM hx),
-          dh AS (SELECT grp, doc_id,
-                   CAST(list_sum(list_transform(generate_series(0, 63), i ->
-                     CASE WHEN lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 2]
-                               > lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 1]
-                          THEN CASE WHEN i = 63
-                                    THEN -9223372036854775808
-                                    ELSE (CAST(1 AS BIGINT) << CAST(i AS INT)) END
-                          ELSE 0 END)) AS BIGINT) AS dhash
-                 FROM lum),
+          ${dhashCtes("allt", cols = "grp, doc_id")},
           adm1 AS (SELECT b.doc_id, b.text, n.dhash
                    FROM b1 b JOIN dh n ON n.grp = 1 AND n.doc_id = b.doc_id
                    WHERE NOT EXISTS (
@@ -807,27 +789,8 @@ object StreamQueries {
                      AND bit_count(xor(n.dhash, c.dhash)) <= 3)),
           store2 AS (SELECT dhash FROM dh WHERE grp = 0
                      UNION ALL SELECT dhash FROM adm1),
-          edits AS (SELECT doc_id + 6000000 AS doc_id,
-                           substr(text, 1, 29) || 'ZZZZ' || substr(text, 34) AS text
-                    FROM adm1),
-          hx2 AS (SELECT doc_id, lower(hex(text)) AS h FROM edits),
-          lum2 AS (SELECT doc_id,
-                     list_transform(generate_series(0, 71), k ->
-                       CAST(('0x' || substr(md5(substr(h,
-                           CAST(floor(length(h)*k/72) AS INT) + 1,
-                           greatest(CAST(floor(length(h)*(k+1)/72) AS INT)
-                             - CAST(floor(length(h)*k/72) AS INT), 0))), 1, 8))
-                         AS BIGINT) % 256) AS lu
-                   FROM hx2),
-          dh2 AS (SELECT doc_id,
-                    CAST(list_sum(list_transform(generate_series(0, 63), i ->
-                      CASE WHEN lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 2]
-                                > lu[CAST(floor(i/8) AS INT)*9 + (i%8) + 1]
-                           THEN CASE WHEN i = 63
-                                     THEN -9223372036854775808
-                                     ELSE (CAST(1 AS BIGINT) << CAST(i AS INT)) END
-                           ELSE 0 END)) AS BIGINT) AS dhash
-                  FROM lum2),
+          edits AS (SELECT doc_id + 6000000 AS doc_id, $mediaClone2Sql AS text FROM adm1),
+          ${dhashCtes("edits", "2")},
           b2h AS (SELECT doc_id + 5000000 AS doc_id, dhash FROM adm1
                   UNION ALL SELECT doc_id, dhash FROM dh2),
           adm2 AS (SELECT n.doc_id FROM b2h n
@@ -839,14 +802,10 @@ object StreamQueries {
     // seed-centroid cells (the cellOf argmax contract on both sides,
     // probes = 1), exact-cosine confirm at 0.99 on the clone slice
     "st_semdedup" ->
-      """WITH cent AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv
-                       FROM embeddings ORDER BY vec_id LIMIT 8),
-          e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH ${seedCellsCte("cent")},
+          $embeddingsCte,
           m AS (SELECT max(vec_id) AS mx FROM embeddings),
-          ca AS (SELECT e.vec_id, c.cid,
-                        row_number() OVER (PARTITION BY e.vec_id
-                          ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rk
-                 FROM e CROSS JOIN cent c),
+          $cellRankCte,
           corpus AS (SELECT e.vec_id AS id_corpus, e.v, a.cid AS cell
                      FROM e JOIN (SELECT vec_id, cid FROM ca WHERE rk = 1) a
                        USING (vec_id)),
@@ -860,25 +819,11 @@ object StreamQueries {
          WHERE round(list_cosine_similarity(n.qv, c.v), 6) >= 0.99""",
     // the KEEP side of llm_decontaminate: corpus docs sharing no
     // 13-gram with the eval slice (short docs have no shingles → clean)
-    "st_decontaminate" -> {
-      val gram13 = (0 until 13).map(j => s"toks[i+$j]").mkString(" || ' ' || ")
-      val hashSql = "CAST(('0x'||substr(md5(s),1,8)) AS BIGINT)"
-      s"""WITH m AS (SELECT max(doc_id) AS mx FROM documents),
-          t AS (SELECT doc_id, string_split_regex(text, '[\\t\\n\\x0B\\f\\r ]+') AS toks
-                FROM documents),
-          g AS (SELECT doc_id,
-                  list_distinct(list_transform(generate_series(1, len(toks) - 12),
-                    i -> $gram13)) AS gs
-                FROM t WHERE len(toks) >= 13),
-          h AS (SELECT doc_id,
-                  list_distinct(list_transform(gs, s -> $hashSql)) AS hs
-                FROM g),
-          ev AS (SELECT DISTINCT unnest(hs) AS eh FROM h, m WHERE doc_id > mx - 100),
-          co AS (SELECT doc_id, unnest(hs) AS eh FROM h, m WHERE doc_id <= mx - 100),
+    "st_decontaminate" ->
+      s"""WITH $decontamCtes,
           dirty AS (SELECT DISTINCT doc_id FROM co JOIN ev USING (eh))
           SELECT d.doc_id
           FROM (SELECT doc_id FROM documents, m WHERE doc_id <= mx - 100) d
           WHERE d.doc_id NOT IN (SELECT doc_id FROM dirty)"""
-    }
   )
 }

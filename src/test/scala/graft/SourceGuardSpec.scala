@@ -8,9 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * rule replaced do not come back), for the one SQL-function
   * declaration in [[graft.engine.SqlFunction]], for locale-free case
   * mapping, for the one banded candidate join in
-  * [[graft.operators.Dedup]], and for the one declaration per
-  * store-backed twin pair in [[graft.queries.StoreTwins]]. Whole-line
-  * comments are skipped. */
+  * [[graft.operators.Dedup]], for the one declaration per
+  * store-backed twin pair in [[graft.queries.StoreTwins]], and for the
+  * one spelling of each shared SQL recipe in
+  * [[graft.queries.SqlRecipes]]. Whole-line comments are skipped. */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = new java.io.File("src/main/scala")
 
@@ -97,5 +98,18 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(found.isEmpty,
       "declare a store-backed pair in graft.queries.StoreTwins:\n" +
         found.mkString("\n"))
+  }
+
+  test("a SQL recipe two keys share is spelled only in SqlRecipes") {
+    // one fingerprint per shared recipe: the media slice, the BPE merge
+    // table, the BPE apply step, the dHash slice kernel, the PQ
+    // codebooks and the connected-components closure
+    val fingerprints = Seq("mx - 300 AND length(text) >= 400", "(1,'th','e')",
+      "position(' '||m.l||'  '||m.r||' ' IN b.s)",
+      "CAST(floor(length(h)*k/72) AS INT)", "seed.v[sub.s*16+1", "reach(id, r) AS")
+    val found = fingerprints.flatMap(f =>
+      hits(java.util.regex.Pattern.quote(f), allowed = Set("SqlRecipes.scala")))
+    assert(found.isEmpty,
+      "compose the recipe from graft.queries.SqlRecipes:\n" + found.mkString("\n"))
   }
 }
